@@ -1,77 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle partitions default to the thread count (right for the gate
-    // SFs), but scale campaigns override them UP: at 1000× a sorted group
-    // that fits 24-way at 100× spills at fixed parallelism — more
-    // partitions is exactly what a real cluster adds (the
-    // dedup_span_stats lesson; partitions are the knob, not the algo)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Spark only deletes a finished query's shuffle files when the
-      // driver GC collects the plan that referenced them — default
-      // periodicGC is 30min, so a campaign of back-to-back heavy
-      // queries accumulates every predecessor's dead spill on disk
-      // (measured: 75 GB of defunct blockmgr files mid-sweep at the
-      // 1000× decade, an ENOSPC that no single query caused). Two
-      // minutes bounds the dead-file window; the explicit System.gc()
-      // between samples (below, untimed) makes the common case
-      // deterministic.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
-      // MASS-SCALED SHUFFLE (the r13 decade lesson): a fixed partition
-      // count is wrong at both ends — 32 partitions spill at 1000× (the
-      // pair-graph verify join moves pairs × vector-bytes; measured
-      // 2–3× super-linear residual from sort spill), while thousands of
-      // partitions waste per-exchange overhead at sf0.1. AQE right-sizes
-      // every exchange from RUNTIME map-output stats but can only
-      // coalesce DOWN from the initial count, so scale campaigns export
-      // SPARK_GRAFT_INITIAL_PARTITIONS=2048+ (the knob a 1000-executor
-      // cluster sets cluster-wide). The knob is CAMPAIGN-ONLY — no
-      // session default: the r14 per-FAMILY A/B showed even 256 taxes
-      // the two-phase sliced-scan family 1.5–2.4× per query at sf0.1
-      // (ts_lttb_bucketed 1.61→3.93 s quiet-to-quiet; the suite TOTAL
-      // hid it at "within noise") — many tiny exchanges each pay the
-      // coalesce bookkeeping while having nothing to spill. Unset or
-      // "0" means "leave the conf alone" (it is checkValue(_ > 0), so
-      // literally setting 0 would throw at session creation).
-    val spark = GraftConf.sessionDefaults(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Every remaining partition-less window in the library goes through
-    // graft.Bounded.window over a frame that is ≤k rows by construction
-    // (top-k survivors, strata, slices), audited in PlanShapeSpec /
-    // TimeSeriesOpsSpec; Catalyst's EliminateWindowPartitions folds the
-    // constant key back out, so WindowExec still logs its
-    // single-partition warning for each of them — dozens of times per
-    // sweep, burying real warnings in the bench tail. Demote exactly
-    // that one logger.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // Untimed warmup at the smallest SF: JIT + codegen + parquet reader
-    // init land here instead of inside the first timed query. Per-query
-    // try so one failure can't silently strip warmup from the rest; the
-    // dir is overridable for machines without the default layout.
+    val stamp = stampStart()
+    val spark = GraftConf.local()
     // Optional subset (comma-separated names) — scaling studies run the
     // heavy tail at 10×/100× without paying the full 197-query sweep;
     // the driver never sets it, so round benches stay full-suite.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val queries = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
-    val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    if (new java.io.File(warmupDir).exists())
-      queries.values.foreach { q =>
-        try q(spark, warmupDir).count() catch { case _: Throwable => () }
-      }
+    warmup(spark, sfDir, queries.values)
     // A swallowed exception records near-ZERO time and masquerades as a
     // fast query (caught in round 11: three 100×-run OOM casualties read
     // 0.02 s and looked like wins) — so failures are LOUD on stderr,
@@ -80,9 +22,8 @@ object Bench {
     // rep-selection median, so a fast failure can never contaminate any
     // aggregate number.
     val failed = scala.collection.mutable.Set[String]()
-    val fullFailed = scala.collection.mutable.Set[String]()
     def time(name: String,
-             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+             fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       val r = try {
         fn(spark, sfDir).count()
@@ -95,12 +36,12 @@ object Bench {
       }
       // Campaign-only (SPARK_GRAFT_GC_EACH=1): release the finished
       // query's shuffle files NOW instead of whenever the driver heap
-      // next fills — see the periodicGC.interval comment on the session
-      // builder. OPT-IN because the call is not free even though it sits
-      // outside the timed window: a measured full-suite sf0.1 sweep with
-      // it unconditional read a uniform ~+1 s on every query (the
-      // explicit GC starts a concurrent cycle that steals CPU from the
-      // NEXT query's timed window) — 158.7 → 244.3 s total. Scale
+      // next fills — see the periodicGC.interval comment in
+      // GraftConf.local. OPT-IN because the call is not free even though
+      // it sits outside the timed window: a measured full-suite sf0.1
+      // sweep with it unconditional read a uniform ~+1 s on every query
+      // (the explicit GC starts a concurrent cycle that steals CPU from
+      // the NEXT query's timed window) — 158.7 → 244.3 s total. Scale
       // campaigns set it: at 100×/1000× a single heavy query's dead
       // shuffle is tens of GB and the GC second is noise; at sf0.1 the
       // per-query shuffle is MBs and the 2-min periodic cleaner suffices.
@@ -121,7 +62,7 @@ object Bench {
     // (median ≈ the heavies themselves) and under-samples exactly the
     // queries the campaign exists to measure — r14 saw a 5.2×
     // first/steady spread on a single-sampled 1000× query
-    val envReps = sys.env.getOrElse("SPARK_GRAFT_REPS", "0").toInt
+    val envReps = GraftConf.envInt("SPARK_GRAFT_REPS").getOrElse(0)
     val reps = first.collect {
       case (name, t) if !t.isNaN &&
           (envReps > 0 || (median > 0 && t > 3 * median)) =>
@@ -133,73 +74,28 @@ object Bench {
       val good = (t +: reps.getOrElse(name, Nil)).filterNot(_.isNaN)
       name -> (t, if (good.isEmpty) Double.NaN else good.min)
     }
-    // Opt-in full-column action (SPARK_GRAFT_FULLCOL=1): count() lets
-    // Catalyst prune every column the action doesn't reference, so the
-    // narrow per-doc text queries bench their key path only (SURVEY
-    // §7f). xxhash64 over ALL output columns forces the full row to
-    // materialize through the whole plan; min of 2 samples recorded as
-    // "full" next to the key-path steady. The driver never sets the
-    // env, so round benches stay key-path and comparable.
-    val fullCol = sys.env.get("SPARK_GRAFT_FULLCOL").contains("1")
-    def timeFull(name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      import org.apache.spark.sql.functions.{col, sum, xxhash64}
-      val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, sfDir)
-        df.select(xxhash64(df.columns.map(col): _*).as("h")).agg(sum("h")).count()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        // the FULL-COLUMN set, not `failed`: a key-path-green query whose
-        // opt-in full-column sample died must stay distinguishable from a
-        // key-path failure in the per-query record and the counts —
-        // otherwise round-over-round diffs blame the wrong path
-        fullFailed += name
-        System.err.println(s"[bench] $name FULLCOL FAILED: ${e.getClass.getSimpleName}: " +
-          String.valueOf(e.getMessage).take(200))
-        Double.NaN
-      }
-    }
-    val fulls: Map[String, Double] =
-      if (!fullCol) Map.empty
-      else queries.map { case (n, f) =>
-        val good = Seq.fill(2)(timeFull(n, f)).filterNot(_.isNaN)
-        n -> (if (good.isEmpty) Double.NaN else good.min)
-      }
     val totalFirst = results.values.map(_._1).filterNot(_.isNaN).sum
     val totalSteady = results.values.map(_._2).filterNot(_.isNaN).sum
     def fmt(d: Double) = if (d.isNaN) "null" else f"$d%.3f"
     if (failed.nonEmpty)
       System.err.println(s"[bench] ${failed.size} queries FAILED " +
         s"(their samples were excluded): ${failed.toSeq.sorted.mkString(", ")}")
-    if (fullFailed.nonEmpty)
-      System.err.println(s"[bench] ${fullFailed.size} full-column samples FAILED " +
-        s"(key-path steady unaffected): ${fullFailed.toSeq.sorted.mkString(", ")}")
     // Per-query record, TRACKED (committed each round): one query per
     // line so round-over-round diffs are reviewable from git alone.
     val perQuery = results.toSeq.sortBy(_._1).map { case (name, (f, s)) =>
       val rep = reps.get(name).map(r => r.map(fmt).mkString(",\"reps\":[", ",", "]")).getOrElse("")
-      val full = fulls.get(name).map(v => s""","full": ${fmt(v)}""").getOrElse("")
       val flag = if (failed(name)) ",\"failed\":true" else ""
-      val fflag = if (fullFailed(name)) ",\"full_failed\":true" else ""
-      s"""  "$name": {"first": ${fmt(f)}, "steady": ${fmt(s)}$full$rep$flag$fflag}"""
-    }.mkString("{\n\"sf\": \"" + sfDir + "\", \"provenance\": \"" +
-      // machine-state note (quiet/loaded, concurrent jobs, shuffle
-      // override) so round-over-round diffs know what they compare —
-      // the r12 lesson: a loaded-machine refresh polluted the trend line
-      sys.env.getOrElse("SPARK_GRAFT_PROVENANCE", "unspecified") +
-      s"""\", "shuffle_partitions": $shuffle, "n": ${results.size}, """ +
+      s"""  "$name": {"first": ${fmt(f)}, "steady": ${fmt(s)}$rep$flag}"""
+    }.mkString("{\n\"sf\": \"" + sfDir + "\", \"provenance\": \"" + stamp + f"->${load1()}%.2f" +
+      s"""\", "shuffle_partitions": ${GraftConf.shufflePartitions}, "n": ${results.size}, """ +
       s""""total_first": ${fmt(totalFirst)}, "total_steady": ${fmt(totalSteady)},\n""" +
       "\"queries\": {\n", ",\n", "\n}}\n")
-    // subset and full-column runs must not clobber the tracked
-    // full-suite key-path record; SPARK_GRAFT_BENCH_OUT overrides for
-    // campaigns at other scales (e.g. the 1000x record must not clobber
-    // the tracked 100x subset record)
+    // subset runs must not clobber the tracked full-suite record;
+    // SPARK_GRAFT_BENCH_OUT overrides for campaigns at other scales (e.g.
+    // the 1000x record must not clobber the tracked 100x subset record)
     val perQueryPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (fullCol) "BENCH_queries_fullcol.json"
-      else if (only.isDefined) "BENCH_queries_subset.json"
-      else "BENCH_queries.json")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(perQueryPath), perQuery)
+      if (only.isDefined) "BENCH_queries_subset.json" else "BENCH_queries.json")
+    Files.writeString(Paths.get(perQueryPath), perQuery)
     // STEADY is the headline metric: `first` mixes in one-shot planning/
     // IO and whatever load the machine was under during the cold sweep
     // (r10: 505.8 s first vs 217.3 s steady over the same queries) —
@@ -209,15 +105,53 @@ object Bench {
       s"\"" + k + "\":" + (if (st.isNaN) "null" else st.toString)
     }.mkString("{", ",", "}")
     val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullFailedJson = fullFailed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total_steady","value":$totalSteady,"unit":"sec","first":$totalFirst,"n_failed":${failed.size},"failed":$failedJson,"n_full_failed":${fullFailed.size},"full_failed":$fullFailedJson,"queries":$qs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total_steady","value":$totalSteady,"unit":"sec","first":$totalFirst,"n_failed":${failed.size},"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}"""
     // The full per-query map only goes to the file: with 100+ queries the
     // single giant JSON line has exceeded every console tail capture to
     // date (rounds 1-6 all parsed null). Stdout gets ONE short
     // machine-parseable line, printed LAST — failure count included so a
     // contaminated total can never read clean from the summary alone.
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), json + "\n")
+    Files.writeString(Paths.get("bench_out.json"), json + "\n")
     println(s"""{"metric":"total_steady","value":$totalSteady,"unit":"sec","n":${results.size},"n_failed":${failed.size},"first":$totalFirst,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Untimed warmup at the smallest SF (the sf0.001 dir beside `sfDir`,
+    * when there is one): JIT + codegen + parquet reader init land here
+    * instead of inside the first timed query. Per-query try so one failure
+    * can't silently strip warmup from the rest.
+    */
+  private[graft] def warmup(spark: SparkSession, sfDir: String,
+      queries: Iterable[(SparkSession, String) => DataFrame]): Unit = {
+    val dir = Paths.get(sfDir).resolveSibling("sf0.001").toFile
+    if (dir.isDirectory)
+      queries.foreach { q =>
+        try q(spark, dir.getPath).count() catch { case _: Throwable => () }
+      }
+  }
+
+  private def load1(): Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
+
+  /** Start of the machine-state stamp for the per-query record, so
+    * round-over-round diffs know what they compare (the r12 lesson: a
+    * loaded-machine refresh polluted the trend line). Read before the
+    * session exists; the caller appends the end-of-run load:
+    * `git=<head>[+dirty] nproc=<n> heap=<max>m utc=<start> load1=<start>`.
+    * Dirty means uncommitted edits to tracked files (untracked build and
+    * run outputs do not change what was measured).
+    */
+  private def stampStart(): String = {
+    // stdout of a command; None when git is missing or the dir is no repo
+    def run(cmd: String*): Option[String] = scala.util.Try(
+      scala.sys.process.Process(cmd).!!(scala.sys.process.ProcessLogger(_ => ()))
+    ).toOption.map(_.trim)
+    val git = run("git", "rev-parse", "--short=12", "HEAD").fold("unknown") { h =>
+      h + (if (run("git", "status", "--porcelain", "--untracked-files=no")
+        .exists(_.nonEmpty)) "+dirty" else "")
+    }
+    val rt = Runtime.getRuntime
+    val utc = java.time.Instant.now().truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
+    f"git=$git nproc=${rt.availableProcessors} heap=${rt.maxMemory >> 20}m utc=$utc load1=${load1()}%.2f"
   }
 }

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Optimization-round measurement probe (guide §1): for each named query,
@@ -17,19 +16,7 @@ object OptProbe {
     val reps = if (args.length > 1) args(1).toInt else 2
     val names = if (args.length > 2) args.drop(2).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = GraftConf.sessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftConf.local()
     val jobs = new AtomicInteger(0); val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0); val taskMs = new AtomicLong(0L)
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -40,13 +27,7 @@ object OptProbe {
         if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
       }
     })
-    // warmup pass (JIT + codegen), mirrors Bench
-    val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    if (new java.io.File(warmupDir).exists())
-      names.foreach { n =>
-        try SparkEntry.queries(n)(spark, warmupDir).count()
-        catch { case _: Throwable => () }
-      }
+    Bench.warmup(spark, sfDir, names.map(SparkEntry.queries))
     println(f"[optprobe] ${"query"}%-28s ${"build"}%7s ${"plan"}%7s ${"exec"}%7s ${"total"}%7s ${"jobs"}%5s ${"stage"}%5s ${"tasks"}%6s ${"taskS"}%7s")
     val rows = names.map { n =>
       val fn = SparkEntry.queries(n)

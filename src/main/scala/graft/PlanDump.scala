@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev-loop plan auditor: print the FINAL adaptive physical plan of named
@@ -16,13 +15,7 @@ object PlanDump {
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
-    val spark = GraftConf.sessionDefaults(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
-      .getOrCreate()
+    val spark = GraftConf.local()
     spark.sparkContext.setLogLevel("ERROR")
     planDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
     names.foreach { n =>

@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   * independent of partial-aggregation order AND exactly re-aggregable
   * across rollup levels (graft.ts.Rollup) — then round once at scale 0.
   *
-  * Overflow bound: a LONG micro-unit sum wraps silently past 9.2e18,
+  * Overflow bound: a LONG micro-unit sum overflows past 9.2e18 (under
+  * Spark 4's ANSI mode the aggregate throws ARITHMETIC_OVERFLOW),
   * i.e. max|value| × points-per-group must stay under 9.2e12 — ample
   * for WINDOWED groups (a 2^32-µs window of ns-rate data holds ~4e3
   * points even at 1 kHz × |value|≤1e6), but NOT for unbounded groups:
@@ -54,11 +55,11 @@ object Quant {
     round(sumUs.cast("double") / n, 0) / 1e6 + lit(0d)
 
   /** Exact micro-unit SUM aggregate for an UNBOUNDED group (whole-stream
-    * or SF-scaled aggregates): DECIMAL(38,0) accumulation — a long wraps
-    * silently past 9.2e18 while the DuckDB oracle's sum(BIGINT) promotes
-    * to HUGEINT. Feed the result to mean6 (the decimal→double cast rounds
-    * nearest on both engines). Windowed groups can keep the cheaper long
-    * sum — see the bound above.
+    * or SF-scaled aggregates): DECIMAL(38,0) accumulation — a long sum
+    * throws ARITHMETIC_OVERFLOW past 9.2e18 under ANSI mode, while the
+    * DuckDB oracle's sum(BIGINT) promotes to HUGEINT. Feed the result to
+    * mean6 (the decimal→double cast rounds nearest on both engines).
+    * Windowed groups can keep the cheaper long sum — see the bound above.
     */
   def sumUs6Unbounded(c: Column): Column =
     sum(us6(c).cast("decimal(38,0)"))

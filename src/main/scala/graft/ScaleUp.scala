@@ -31,17 +31,20 @@ object ScaleUp {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val scaled: String => Boolean =
-      if (args.length > 3) args(3).split(",").map(_.trim).toSet else _ => true
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConf.local()
+    run(spark, src, out, copies, args.lift(3).fold(Seq.empty[String])(_.split(",").toSeq))
+    println(s"""{"scaled": "$out", "copies": $copies}""")
+    spark.stop()
+  }
+
+  /** Write the `copies`× scale-up of `src` into `out`. Non-empty `tables`
+    * restricts which tables are replicated; the rest are copied 1×. */
+  def run(spark: SparkSession, src: String, out: String, copies: Int,
+          tables: Seq[String] = Nil): Unit = {
+    val only = tables.map(_.trim).filter(_.nonEmpty).toSet
+    val scaled: String => Boolean = n => only.isEmpty || only(n)
+    // events.parquet stores TIMESTAMP(NANOS), readable only as longs
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def tbl(n: String) = spark.read.parquet(s"$src/$n.parquet")
     def write(df: DataFrame, n: String): Unit =
@@ -139,8 +142,5 @@ object ScaleUp {
 
     write(tbl("nation"), "nation")
     write(tbl("region"), "region")
-
-    println(s"""{"scaled": "$out", "copies": $copies}""")
-    spark.stop()
   }
 }

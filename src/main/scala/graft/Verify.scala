@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,19 +12,11 @@ object Verify {
     // extra args select a subset — local iteration only (the driver
     // always passes exactly two, dumping the full suite)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same campaign-only AQE headroom contract as Bench (see
-    // GraftConf.withInitialPartitions) so the correctness dump exercises
-    // the exact partitioning regime the bench measures — including the
-    // default regime, which sets NO initialPartitionNum
-    val spark = GraftConf.sessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // same session contract as Bench (GraftConf.local), so the
+    // correctness dump exercises the exact partitioning regime the bench
+    // measures — including the default regime, which sets NO
+    // initialPartitionNum
+    val spark = GraftConf.local()
     new java.io.File(outDir).mkdirs()
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
@@ -43,6 +34,7 @@ object Verify {
       catch { case e: Throwable =>
         failures += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        e.printStackTrace()
       }
     }
     if (failures > 0)

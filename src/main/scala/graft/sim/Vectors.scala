@@ -664,7 +664,7 @@ object Vectors {
     val e = withNorm(emb)
     // both bucket-join sides carry the SQ8 PRESCREEN payload (64 code
     // bytes + four scalars instead of the 64-float vector): the r14
-    // PairProbe decomposition measured the exact-cosine verify join-back
+    // stage decomposition measured the exact-cosine verify join-back
     // — candidate pairs × full-vector bytes, exchanged twice — as ~90%
     // of generator wall-clock at both campaign scales. The prescreen
     // evaluates INSIDE the bucket join's output, before the distinct
@@ -720,9 +720,8 @@ object Vectors {
     * at b0+1 bits, the rest at b0 (ONE LshBuckets pass at the wider
     * width; a b0-bit bucket is the (b0+1)-bit bucket with its top bit
     * masked off). `carry` names extra per-vector columns that ride along
-    * (the prescreen payload). Shared by cosinePairsLshBits, lshLoad, and
-    * PairProbe, so the probe's stage decomposition measures exactly the
-    * pipeline the generator runs.
+    * (the prescreen payload). Shared by cosinePairsLshBits and lshLoad,
+    * so the load pricing sees exactly the buckets the generator joins.
     */
   private[graft] def lshHashed(e: DataFrame, nTables: Int, b0: Int, nUp: Int,
                              dim: Int, carry: Seq[String] = Nil): DataFrame = {
@@ -738,7 +737,7 @@ object Vectors {
 
   /** The budgeted multiprobe array over a `lshHashed` row — exact bucket
     * plus the per-width 1-bit flips (flips = min(bits, max(1, 16 − bits));
-    * see the flip-budget doc on cosinePairsLsh). Shared with PairProbe.
+    * see the flip-budget doc on cosinePairsLsh).
     */
   private[graft] def lshProbeArr(nTables: Int, b0: Int, nUp: Int): Column = {
     def probeOf(bits: Int): Column = {
@@ -1064,7 +1063,7 @@ object Vectors {
     * group. Any corpus that breaks the degree bound has already broken
     * the candidate JOIN (bucket blowup), which hammingLoad/lshLoad price
     * before a run — the rank is never the binding constraint. Measured
-    * at 100× (KnnProbe): single window 25.4 s vs two-phase 37.3 s on the
+    * at 100×: single window 25.4 s vs two-phase 37.3 s on the
     * identical graph — the extra (vec_id, slice) exchange+sort costs
     * ~47% for a funnel that cannot occur here.
     */

@@ -289,7 +289,7 @@ object Dedup {
     * the g-partitioned window, no second aggregation and no join back.
     * The earlier per-(doc,gram)-counts → df-table → join-back plan paid
     * two corpus-sized aggregations plus a sort-merge join of two
-    * Σ-position-sized sides for the SAME answer — measured by SpanProbe
+    * Σ-position-sized sides for the SAME answer — measured stage by stage
     * at the 1000× decade (235.7M positions, 224.7M distinct grams: long
     * grams are nearly all globally unique, so the "aggregates" reduced
     * nothing and the join dominated at ~388 s; shuffle-partition scaling

@@ -1,10 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Measurement probe for the TEXT/MM pair-graph family's scaling — the
-  * PairProbe recipe (graft.sim.PairProbe) on the corpus axis: the r15
+/** Measurement probe for the TEXT/MM pair-graph family's scaling: the r15
   * decade campaign left exactly three superlinear-or-heavy rows, all on
   * this side — corpus_shard (548 s / 12.2× at 1000×), corpus_funnel
   * (388 s / 9.7×), mm_dedup_clusters (101 s / 12.4×) — and none of them
@@ -16,34 +15,25 @@ import org.apache.spark.sql.functions._
   * the decomposition cannot silently desync from the benchmarks.
   *
   * Stage groups (arg 2, default all):
+  *   sig    — each corpus_shard signal priced on the normalize+split base
   *   shard  — corpusShard: signals scan / fp window / budget prefix sum
   *   funnel — corpusVerdict components + the minhash pair graph stages
   *   mm     — phash signature pass, hamming grid price, pair join, CC
-  * Usage: runMain graft.text.ShardProbe <sfDir> [shard|funnel|mm|all]
-  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE, SPARK_GRAFT_INITIAL_PARTITIONS
+  * Usage: runMain graft.text.ShardProbe <sfDir> [sig|shard|funnel|mm|all]
+  * Session: GraftConf.local (SPARK_GRAFT_CPUS, _SHUFFLE, _INITIAL_PARTITIONS)
   */
 object ShardProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/sf10"
     val group = if (args.length > 1) args(1) else "all"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = graft.GraftConf.sessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.cleaner.periodicGC.interval", "2min"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftConf.local()
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[shardprobe] ${(System.nanoTime() - t0) / 1e9}%8.2f s  $label"); r
     }
     val docs = graft.Tables.load(spark, sfDir, "documents")
     val nDocs = docs.count()
-    println(s"[shardprobe] n_docs=$nDocs sf=$sfDir shuffle=$shuffle group=$group")
+    println(s"[shardprobe] n_docs=$nDocs sf=$sfDir shuffle=${graft.GraftConf.shufflePartitions} group=$group")
 
     if (group == "sig") {
       // micro-attribution INSIDE shardSignals: each signal timed on top

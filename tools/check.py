@@ -2,12 +2,26 @@
 """Local stand-in for the driver's correctness gate: runs each
 oracle_sql.json query in DuckDB over the same sf directory and compares
 with the Spark parquet dump (columns sorted by name, rows sorted, values
-hashed). Usage: check.py <sfdir> <verify_out_dir> [queryName...]"""
-import json, sys, glob, os
+hashed).
+
+Usage: check.py <sfdir> <verify_out_dir> [--shard I/N] [queryName...]
+
+--shard I/N checks only shard I (0-based) of N of the selected queries,
+sorted by name, so the sf0.1 gate (dominated by independent DuckDB
+replays) can run as N processes whose union is the unsharded result."""
+import argparse, json, sys, glob, os
 import duckdb, pandas as pd, numpy as np
 
-sfdir, outdir = sys.argv[1], sys.argv[2]
-only = set(sys.argv[3:])  # optional query names: check only these
+ap = argparse.ArgumentParser()
+ap.add_argument("sfdir")
+ap.add_argument("outdir")
+ap.add_argument("names", nargs="*", help="check only these queries")
+ap.add_argument("--shard", default="0/1", metavar="I/N")
+a = ap.parse_args()
+sfdir, outdir, only = a.sfdir, a.outdir, set(a.names)
+shard, nshards = map(int, a.shard.split("/"))
+if not 0 <= shard < nshards:
+    ap.error(f"--shard {a.shard}: need 0 <= I < N")
 con = duckdb.connect()
 if os.environ.get("CHECK_THREADS"):
     con.execute(f"PRAGMA threads={int(os.environ['CHECK_THREADS'])}")
@@ -17,10 +31,10 @@ for t in "region nation customer supplier part orders lineitem events documents 
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-if only:
-    oracle = {k: v for k, v in oracle.items() if k in only}
+names = [k for k in sorted(oracle) if not only or k in only][shard::nshards]
 fails = []
-for name, sql in sorted(oracle.items()):
+for name in names:
+    sql = oracle[name]
     files = glob.glob(f"{outdir}/{name}/*.parquet")
     if not files:
         print(f"MISSING  {name} (no spark output)"); fails.append(name); continue
@@ -62,5 +76,6 @@ for name, sql in sorted(oracle.items()):
         print(f"OK       {name} ({len(got)} rows)")
     else:
         fails.append(name)
-print(f"\n{len(oracle)-len(fails)}/{len(oracle)} passed" + (f"; FAILED: {fails}" if fails else ""))
+label = f"shard {shard}/{nshards}: " if nshards > 1 else ""
+print(f"\n{label}{len(names)-len(fails)}/{len(names)} passed" + (f"; FAILED: {fails}" if fails else ""))
 sys.exit(1 if fails else 0)
