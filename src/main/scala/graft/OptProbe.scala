@@ -14,8 +14,7 @@ object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 2
-    val names = if (args.length > 2) args.drop(2).toSeq
-                else SparkEntry.queries.keys.toSeq.sorted
+    val queries = SparkEntry.named(args.drop(2).toSeq).toSeq.sortBy(_._1)
     val spark = GraftConf.local()
     val jobs = new AtomicInteger(0); val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0); val taskMs = new AtomicLong(0L)
@@ -27,10 +26,9 @@ object OptProbe {
         if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
       }
     })
-    Bench.warmup(spark, sfDir, names.map(SparkEntry.queries))
+    Bench.warmup(spark, sfDir, queries.map(_._2))
     println(f"[optprobe] ${"query"}%-28s ${"build"}%7s ${"plan"}%7s ${"exec"}%7s ${"total"}%7s ${"jobs"}%5s ${"stage"}%5s ${"tasks"}%6s ${"taskS"}%7s")
-    val rows = names.map { n =>
-      val fn = SparkEntry.queries(n)
+    val rows = queries.map { case (n, fn) =>
       val samples = (1 to reps).map { _ =>
         Thread.sleep(120) // let the listener bus drain the previous query's events
         jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)

@@ -12,14 +12,13 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val names = if (args.length > 1) args.drop(1).toSeq
-                else SparkEntry.queries.keys.toSeq.sorted
+    val queries = SparkEntry.named(args.drop(1).toSeq).toSeq.sortBy(_._1)
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val spark = GraftConf.local()
     spark.sparkContext.setLogLevel("ERROR")
     planDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
-    names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
+    queries.foreach { case (n, fn) =>
+      val df = fn(spark, sfDir)
       planDir match {
         case Some(d) =>
           val formatted = df.queryExecution.explainString(ExplainMode.fromString("formatted"))

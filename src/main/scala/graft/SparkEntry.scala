@@ -1,45 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.ts.{Metadata, TimeSeriesOps => TS}
-import graft.text.{Dedup, TextFunctions}
-import graft.sim.Vectors
+import graft.queries.QuerySpec
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the operator
-  * inventory each entry implements, and the reference citations in the
-  * implementing objects (graft.ts.*, graft.text.*, graft.sim.*).
-  *
-  * Every `queries` entry has a deterministic total order (orderBy over
-  * enough columns) mirrored by an ORDER BY in `oracleSql`; every emitted
-  * float goes through the graft.Quant contract (exact integer micro-unit
-  * sums + scale-0 rounding, mirrored here by Q6/US6/MEAN6) so both gate
-  * engines agree bit-for-bit — plain round(x, 6) systematically diverges
-  * on half-microunit boundaries; min/max stay unrounded (order-
-  * insensitive, bit-exact).
-  * Time axis is epoch microseconds everywhere: Spark `unix_micros` and
-  * DuckDB `epoch_us` truncate the parquet ns timestamps identically.
+/** The driver's view of the query registry: `QuerySpec.all`, one file per
+  * query family under graft/queries, as the two maps Bench, Verify and
+  * the probes read.
   */
 object SparkEntry {
-
-  // Epoch-µs constants for the events table (2024-01-01 .. 2024-01-31 UTC).
-  private val T0  = 1704067200000000L // 2024-01-01
-  private val T08 = 1704672000000000L // 2024-01-08
-  private val T15 = 1705276800000000L // 2024-01-15
-  private val T20 = 1705708800000000L // 2024-01-20
-  private val T22 = 1705881600000000L // 2024-01-22
-  private val T29 = 1706486400000000L // 2024-01-29
-  private val T31 = 1706659200000000L // 2024-01-31
-  private val DAY = 86400000000L
-  private val WEEK = 7 * DAY // [T0, T29) is exactly 4 complete weeks
-  private val HOUR = 3600000000L
-  private val STREAM = Seq("user_id", "event_type")
-
-  // Single source of truth for the SQL mirror of Tables.points/streams —
-  // a private copy here would silently diverge if the loader changes.
-  private val PTS_SQL = Tables.pointsSql
-  private val STREAMS_SQL = Tables.streamsSql
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * aligned statistical windows over every stream at once — the core
@@ -48,6800 +17,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("ts_aligned_windows")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- BTrDB API surface (SURVEY §2) -------------------------------
-    // Write-path throughput probe: bulk-insert 500k synthetic points for
-    // 64 streams through the MVCC store (one all-or-nothing partitioned
-    // parquet job — the reference's headline metric is ingest rate), then
-    // read back the per-store count at the assigned version. Deterministic
-    // output (rows-only driver check); the BENCH timing of this entry IS
-    // the ingest+readback rate. Store dir keyed by (sf, pid) like the
-    // rollup query so concurrent runs don't race.
-    "ts_ingest" -> ((s, dir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_ingest_" +
-        s"${Integer.toHexString(dir.hashCode)}_${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(base)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      val st = graft.ts.Store(s, base)
-      val n = 500000L
-      st.insertBatch(s.range(n).select(
-        concat(lit("ing-"), (col("id") % 64).cast("string")).as("uuid"),
-        (lit(T0) + col("id") * 1000L).as("time"),
-        (col("id") % 1000).cast("double").as("value")))
-      // readback fingerprint per stream: count, time bounds, exact value
-      // sum, committed version — the ingest is synthetic, so the DuckDB
-      // oracle recomputes the expected visible view from generate_series
-      // (no store dir needed) and the hash gates insert + readback e2e
-      st.rawPoints.groupBy(col("uuid"))
-        .agg(count(lit(1)).as("n_points"),
-          min(col("time")).as("t_min"), max(col("time")).as("t_max"),
-          sum(col("value").cast("long")).as("v_sum"),
-          max(col("ver")).as("ver"))
-        .orderBy(col("uuid"))
-    }),
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    QuerySpec.all.map(q => q.name -> q.build).toMap
 
-    "ts_raw_values" -> ((s, dir) =>
-      TS.rawValues(
-          Tables.points(s, dir).filter(col("user_id") === 7 && col("event_type") === "click"),
-          STREAM, T08, T22)
-        .orderBy(col("t_us"))),
+  val oracleSql: Map[String, String] =
+    QuerySpec.all.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
-    "ts_aligned_windows" -> ((s, dir) =>
-      TS.alignedWindows(Tables.points(s, dir), STREAM, T0, T31, 36)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    "ts_windows" -> ((s, dir) =>
-      TS.windows(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    "ts_windows_at_version" -> ((s, dir) =>
-      TS.windows(Tables.points(s, dir), STREAM, T0, T29, DAY, version = Some(500))
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // AlignedWindows served from the materialized rollup hierarchy (the
-    // qtree read path), with bounds deliberately unaligned to the serving
-    // level so the partial boundary windows exercise the raw fallback —
-    // the oracle is the plain direct aggregation, proving the hierarchy
-    // answers identically.
-    "ts_aligned_rollup" -> ((s, dir) => {
-      val pts = Tables.points(s, dir)
-      // keyed by data dir AND process: concurrent Verify/Bench runs must
-      // not race on one build dir (build() deletes it recursively first).
-      // ONE level (30) suffices: pw36 windows re-aggregate 64 level-30
-      // rows each (exact — integer micro-unit sums), and building a
-      // second materialized level would only burn the benchmark's write
-      // budget. Multi-level hierarchies are exercised in RollupSpec.
-      val ru = graft.ts.Rollup(s,
-        s"${System.getProperty("java.io.tmpdir")}/graft_rollup_" +
-          s"${Integer.toHexString(dir.hashCode)}_${ProcessHandle.current().pid()}",
-        Seq(30))
-      ru.build(pts, STREAM)
-      ru.alignedWindows(pts, STREAM, T0 + 12345L, T31 - 98765L, 36)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))
-    }),
-
-    "ts_nearest_before" -> ((s, dir) =>
-      TS.nearest(Tables.points(s, dir), STREAM, T15, backward = true)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    "ts_nearest_after" -> ((s, dir) =>
-      TS.nearest(Tables.points(s, dir), STREAM, T15, backward = false)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    "ts_changes" -> ((s, dir) =>
-      TS.changes(Tables.points(s, dir), STREAM, 100, 700, 32)
-        .orderBy(col("user_id"), col("event_type"), col("c_start"))),
-
-    // the changed-ranges workflow end-to-end: stats at toVer for exactly
-    // the windows an insert in (fromVer, toVer] touched (the refresh
-    // feed for downstream materializations)
-    "ts_windows_delta" -> ((s, dir) =>
-      TS.windowsDelta(Tables.points(s, dir), STREAM, 100, 700, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    "ts_version_at" -> ((s, dir) =>
-      TS.rawValues(Tables.points(s, dir), STREAM, T0, T31, version = Some(500))
-        .orderBy(col("user_id"), col("event_type"), col("t_us"))),
-
-    "ts_delete_range" -> ((s, dir) =>
-      Tables.points(s, dir)
-        .filter(col("user_id") === 3 && col("event_type") === "view")
-        .filter(!(col("t_us") >= T08 && col("t_us") < T20))
-        .select(col("user_id"), col("event_type"), col("t_us"), col("value"))
-        .orderBy(col("t_us"))),
-
-    "ts_stats_global" -> ((s, dir) =>
-      TS.statsGlobal(Tables.points(s, dir), STREAM)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    "meta_stream_info" -> ((s, dir) =>
-      Metadata.streamInfo(Tables.streams(s, dir)).orderBy(col("uuid"))),
-
-    "meta_list_collections" -> ((s, dir) =>
-      Metadata.listCollections(Tables.streams(s, dir), "", "", 3)),
-
-    "meta_lookup_streams" -> ((s, dir) =>
-      Metadata.lookupStreams(Tables.streams(s, dir), "c", col("user_id") < 8)
-        .orderBy(col("uuid"))),
-
-    "meta_usage" -> ((s, dir) =>
-      Metadata.metadataUsage(Tables.streams(s, dir), "")
-        .orderBy(col("collection"))),
-
-    // the full GenerateCSV stat contract: 4 columns per stream
-    "ts_csv_export" -> ((s, dir) =>
-      TS.csvExport(
-          Tables.points(s, dir).filter(col("event_type") === "click"),
-          Seq(1, 2, 3).map(u => (s"u$u", col("user_id") === u)),
-          T0, T29, DAY)
-        .orderBy(col("w_start"))),
-
-    // GenerateCSV raw mode: one row per timestamp, one value column per stream
-    "ts_csv_export_raw" -> ((s, dir) =>
-      TS.csvExportRaw(
-          Tables.points(s, dir).filter(col("event_type") === "click"),
-          Seq(1, 2, 3).map(u => (s"u$u", col("user_id") === u, None: Option[Long])),
-          T0, T29)
-        .orderBy(col("t_us"))),
-
-    // GenerateCSV raw mode at exact row fidelity: one row per POINT —
-    // same-stream duplicate timestamps stay separate rows (csv.go's
-    // rawBuffer), paired across streams by occurrence index
-    "ts_csv_export_raw_exact" -> ((s, dir) =>
-      TS.csvExportRawExact(
-          Tables.points(s, dir).filter(col("event_type") === "click"),
-          Seq(1, 2, 3).map(u => (s"u$u", col("user_id") === u, None: Option[Long])),
-          T0, T29)
-        .orderBy(col("t_us"), col("seq"))),
-
-    // GenerateCSV with per-stream version pinning (csv.go:30-43 `ver`)
-    "ts_csv_export_ver" -> ((s, dir) =>
-      TS.csvExportStat(
-          Tables.points(s, dir).filter(col("event_type") === "click"),
-          Seq(("u1", col("user_id") === 1, None: Option[Long]),
-              ("u2", col("user_id") === 2, Some(500L): Option[Long]),
-              ("u3", col("user_id") === 3, Some(800L): Option[Long])),
-          T0, T29, DAY)
-        .orderBy(col("w_start"))),
-
-    "ts_delta" -> ((s, dir) =>
-      TS.delta(Tables.points(s, dir), STREAM)
-        .orderBy(col("user_id"), col("event_type"), col("t_us"), col("value"))),
-
-    // ingest health: inter-arrival gaps in power-of-two buckets
-    // (bit-length bucketing — no libm log), bucket 0 = equal-µs ties
-    "ts_gap_histogram" -> ((s, dir) =>
-      TS.gapHistogram(Tables.points(s, dir), STREAM)
-        .orderBy(col("user_id"), col("event_type"), col("bucket"))),
-
-    "ts_gaps" -> ((s, dir) =>
-      TS.gaps(Tables.points(s, dir)
-          .filter(!(col("t_us") >= T08 && col("t_us") < T15) || col("user_id") =!= 1),
-        STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // same synthetic outage as ts_gaps, coalesced into [start, end) runs
-    "ts_outages" -> ((s, dir) =>
-      TS.outages(Tables.points(s, dir)
-          .filter(!(col("t_us") >= T08 && col("t_us") < T15) || col("user_id") =!= 1),
-        STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("c_start"))),
-
-    // the SRE availability report over the same synthetic-outage input
-    "ts_reliability" -> ((s, dir) =>
-      TS.reliability(Tables.points(s, dir)
-          .filter(!(col("t_us") >= T08 && col("t_us") < T15) || col("user_id") =!= 1),
-        STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    "ts_cusum" -> ((s, dir) =>
-      TS.cusum(Tables.points(s, dir), STREAM)
-        .orderBy(col("user_id"), col("event_type"), col("t_us"), col("value"))),
-
-    "ts_asof_join" -> ((s, dir) => {
-      val p = Tables.points(s, dir)
-      // right side deduped to one value per (key, t): DuckDB's ASOF join
-      // semantics are undefined under duplicate right timestamps — both
-      // sides agree on last-write-wins = max(value)
-      TS.asofJoin(
-          p.filter(col("event_type") === "click"),
-          p.filter(col("event_type") === "purchase")
-            .groupBy(col("user_id"), col("t_us")).agg(max(col("value")).as("value")),
-          Seq("user_id"))
-        .orderBy(col("user_id"), col("t_us"))
-    }),
-
-    "ts_resample" -> ((s, dir) =>
-      TS.resample(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("g_t"))),
-
-    // as-of with a staleness bound: matches older than 3 days are nulled
-    "ts_asof_tolerance" -> ((s, dir) => {
-      val p = Tables.points(s, dir)
-      TS.asofJoin(
-          p.filter(col("event_type") === "click"),
-          p.filter(col("event_type") === "purchase")
-            .groupBy(col("user_id"), col("t_us")).agg(max(col("value")).as("value")),
-          Seq("user_id"), toleranceUs = Some(3 * DAY))
-        .orderBy(col("user_id"), col("t_us"))
-    }),
-
-    // WindowsParams.depth — stat windows at reduced precision (2^30 µs ≈
-    // 18-minute buckets assigned wholly to the window of their start)
-    "ts_windows_depth" -> ((s, dir) =>
-      TS.windowsApprox(Tables.points(s, dir), STREAM, T0, T29, DAY, 30)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    "ts_argminmax" -> ((s, dir) =>
-      TS.argMinMax(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // the dashboard-facing name auto-delegates to the bucketed plan when
-    // any stream's in-range history exceeds the one-task exact bound; at
-    // this SF every stream is far below it, so the oracle replays the
-    // exact sequential chain
-    "ts_lttb" -> ((s, dir) =>
-      graft.ts.Downsample.lttbAuto(Tables.points(s, dir), STREAM, T0, T29, 7)
-        .orderBy(col("user_id"), col("event_type"), col("t_us"), col("value"))),
-
-    // the scale-path swap-in: M4 candidates per bucket + sliced prefix
-    // count — no stream-wide sort anywhere in the plan
-    "ts_lttb_bucketed" -> ((s, dir) =>
-      graft.ts.Downsample.lttbBucketed(Tables.points(s, dir), STREAM, T0, T29, 7)
-        .orderBy(col("user_id"), col("event_type"), col("t_us"), col("value"))),
-
-    // SAX symbolization: each stream as one 28-letter word (daily PAA,
-    // z-normalized, 4-letter alphabet) — the motif/similarity index
-    "ts_sax" -> ((s, dir) =>
-      graft.ts.Downsample.sax(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    // subsequence motif discovery: top length-4 SAX subwords by
-    // occurrence across the fleet (whole words are nearly unique)
-    "ts_motifs" -> ((s, dir) =>
-      graft.ts.Downsample.motifs(Tables.points(s, dir), STREAM, T0, T29, DAY, 4, 25)
-        .orderBy(col("n_occ").desc, col("subword"))),
-
-    // DTW shape search: warping-tolerant top-10 by exact integer DP over
-    // the PAA profiles (the correlation-defeating phase-shift cases)
-    "ts_dtw" -> ((s, dir) =>
-      graft.ts.Downsample.dtwSimilar(Tables.points(s, dir), STREAM,
-          col("user_id") === 7 && col("event_type") === "click",
-          T0, T29, DAY, 10)
-        .orderBy(col("rank"))),
-
-    "ts_ewma" -> ((s, dir) =>
-      TS.ewma(Tables.points(s, dir), STREAM, T0, T29, DAY, 0.3)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    "ts_holt" -> ((s, dir) =>
-      TS.holt(Tables.points(s, dir), STREAM, T0, T29, DAY, 0.5, 0.3)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // Holt-Winters additive: level + trend + weekly seasonal (period 7
-    // day-windows) — the seasonal forecaster over the same bounded
-    // window-mean series as holt
-    "ts_holtwinters" -> ((s, dir) =>
-      TS.holtWinters(Tables.points(s, dir), STREAM, T0, T29, DAY, 7, 0.5, 0.3, 0.4)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // rolling-origin backtest: the model's own one-step forecasts vs the
-    // realized means — MAE / bias / RMSE per stream
-    "ts_forecast_eval" -> ((s, dir) =>
-      TS.holtWintersBacktest(Tables.points(s, dir), STREAM, T0, T29, DAY,
-          7, 0.5, 0.3, 0.4)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    // the "next week" serving query: h-step projections from the final
-    // Holt-Winters state — no extra pass over points
-    "ts_forecast" -> ((s, dir) =>
-      TS.holtWintersForecast(Tables.points(s, dir), STREAM, T0, T29, DAY,
-          7, 0.5, 0.3, 0.4, 7)
-        .orderBy(col("user_id"), col("event_type"), col("h"))),
-
-    "ts_interpolate" -> ((s, dir) =>
-      TS.interpolate(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("g_t"))),
-
-    "ts_histogram" -> ((s, dir) =>
-      TS.histogram(Tables.points(s, dir), STREAM, T0, T29, DAY, 50.0)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"), col("bin"))),
-
-    // the PromQL histogram_quantile estimator over the binned counts —
-    // the answer when only buckets survive (ts_percentile is the exact
-    // raw-rank answer; the spread between them is the binning error)
-    "ts_histogram_quantile" -> ((s, dir) =>
-      TS.histogramQuantile(Tables.points(s, dir), STREAM, T0, T29, DAY, 50.0,
-          Seq(0.5, 0.9))
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // fleet-wide (time, value-bin) density — the Grafana-heatmap query;
-    // histogram with an EMPTY stream key (same operator, fleet scope)
-    "ts_heatmap" -> ((s, dir) =>
-      TS.histogram(Tables.points(s, dir), Seq.empty, T0, T29, DAY, 50.0)
-        .orderBy(col("w_start"), col("bin"))),
-
-    // weekly-seasonality fingerprint: per-stream (day-of-week, hour-of-day)
-    // profile over exactly 4 complete weeks — one pass, pure integer phase
-    // arithmetic (T0 is a Monday, so dow 0 = Monday)
-    "ts_calendar" -> ((s, dir) =>
-      TS.calendarProfile(Tables.points(s, dir), STREAM, T0, T29)
-        .orderBy(col("user_id"), col("event_type"), col("dow"), col("hour"))),
-
-    "ts_counter_rate" -> ((s, dir) =>
-      TS.counterRate(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    "ts_sessionize" -> ((s, dir) =>
-      TS.sessionize(Tables.points(s, dir), STREAM, 2 * DAY)
-        .orderBy(col("user_id"), col("event_type"), col("s_start"))),
-
-    "ts_m4" -> ((s, dir) =>
-      TS.m4(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // interval-containment join: purchases inside the same user's click
-    // sessions — intervals explode to grid buckets + hash join, never a
-    // range nested-loop (plan-shape-spec'd)
-    "ts_interval_join" -> ((s, dir) => {
-      val p = Tables.points(s, dir)
-      val sessions = TS.sessionize(p.filter(col("event_type") === "click"),
-          Seq("user_id"), 2 * DAY)
-        .select(col("user_id"), col("s_start"), col("s_end"), col("n_events"))
-      val purchases = p.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("t_us"), col("value"))
-      TS.intervalJoin(purchases, sessions, Seq("user_id"), "s_start", "s_end", 2 * DAY)
-        .orderBy(col("user_id"), col("t_us"), col("value"), col("s_start"))
-    }),
-
-    // cross-stream aggregation: the SAME windows() plan keyed by collection
-    // instead of stream — the composite stream key generalizes BTrDB's
-    // per-uuid queries to cross-sectional rollups in one pass
-    "ts_collection_windows" -> ((s, dir) =>
-      TS.windows(Tables.points(s, dir), Seq("event_type"), T0, T29, DAY)
-        .orderBy(col("event_type"), col("w_start"))),
-
-    // top series by volume — the cardinality/volume admin query; a
-    // TakeOrdered over the per-stream root StatPoints
-    "ts_top_streams" -> ((s, dir) =>
-      TS.statsGlobal(Tables.points(s, dir), STREAM)
-        .orderBy(col("v_count").desc, col("user_id"), col("event_type"))
-        .limit(20)),
-
-    "ts_coverage" -> ((s, dir) =>
-      TS.coverage(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    "ts_rolling" -> ((s, dir) =>
-      TS.rolling(Tables.points(s, dir), STREAM, T0, T29, DAY, 7)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // per-point JSON property facets: codegen extraction + one
-    // map-side-partial groupBy (the semi-structured analytics path)
-    "ts_facets" -> ((s, dir) =>
-      TS.propsFacets(Tables.load(s, dir, "events"), Seq("event_type"))
-        .orderBy(col("event_type"), col("facet"))),
-
-    // Bollinger envelope: trailing-week mean ± 2σ from exact decimal
-    // moment sums re-aggregated over the frame
-    "ts_band" -> ((s, dir) =>
-      TS.bollingerBands(Tables.points(s, dir), STREAM, T0, T29, DAY, 7, 2.0)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // peak extraction: windows strictly above both k-window shoulders
-    // with ≥5.0 prominence (integer µ-unit comparisons end to end)
-    "ts_peaks" -> ((s, dir) =>
-      TS.peaks(Tables.points(s, dir), STREAM, T0, T29, DAY, 2, 5000000L)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // offline mean-shift change points: |next-k mean − prev-k mean| ≥ 15.0
-    // at the local apex of the score series
-    "ts_changepoint" -> ((s, dir) =>
-      TS.changePoints(Tables.points(s, dir), STREAM, T0, T29, DAY, 3, 15000000L)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // capacity forecast: one LSQ line per stream + the projected
-    // threshold-crossing time within a 1-year horizon (the "disk full
-    // in N days" SRE query)
-    "ts_capacity" -> ((s, dir) =>
-      TS.capacityForecast(Tables.points(s, dir), STREAM, T0, T29, 60.0, 365L * DAY)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    // multi-window SLO burn rate: day + week windows in one scan, bad =
-    // value > 150 (~p95 of this corpus), SLO 0.95 → budget 0.05
-    "ts_burnrate" -> ((s, dir) =>
-      TS.burnRate(Tables.points(s, dir), STREAM, T0, T29, Seq(DAY, WEEK),
-          col("value") > 150, 0.95)
-        .orderBy(col("user_id"), col("event_type"), col("width_us"), col("w_start"))),
-
-    // Savitzky–Golay quadratic 5-point smoothing of the day-mean series
-    // (preserves local extrema a moving average flattens)
-    "ts_savgol" -> ((s, dir) =>
-      TS.savgol(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // five-number boxplot + Tukey-fence outlier counts per week window
-    "ts_boxplot" -> ((s, dir) =>
-      TS.boxplotWindows(Tables.points(s, dir), STREAM, T0, T29, WEEK)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // pairwise Pearson matrix over the top-8 streams by volume — the
-    // fleet "what moves together" audit (ts_similar is 1×fleet; this is
-    // roster×roster, bounded by the TakeOrdered roster)
-    "ts_xcorr_matrix" -> ((s, dir) =>
-      TS.xcorrMatrix(Tables.points(s, dir), STREAM, T0, T29, DAY, 8)
-        .orderBy(col("user_id_a"), col("event_type_a"),
-          col("user_id_b"), col("event_type_b"))),
-
-    "ts_percentile" -> ((s, dir) =>
-      TS.percentileWindows(Tables.points(s, dir), STREAM, T0, T29, WEEK, Seq(0.5, 0.95))
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    "ts_anomaly" -> ((s, dir) =>
-      TS.anomalies(Tables.points(s, dir), STREAM, 2.0)
-        .orderBy(col("user_id"), col("event_type"), col("t_us"), col("value"))),
-
-    // min-max feature scaling per stream (the training-export step);
-    // constant streams emit NULL, never a divide-by-zero artifact
-    "ts_normalize" -> ((s, dir) =>
-      TS.normalize(Tables.points(s, dir), STREAM)
-        .orderBy(col("user_id"), col("event_type"), col("t_us"), col("value"))),
-
-    // seasonal-profile drift: week 1 vs week 4 quarter-day shapes — the
-    // "did the load shape change" regression detector
-    "ts_profile_drift" -> ((s, dir) =>
-      TS.profileDrift(Tables.points(s, dir), STREAM, T0, T08, T22, T29,
-          6 * HOUR, 4)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    // seasonal-aware anomalies: z against the stream's OWN time-of-day
-    // profile — normal-at-6pm vs incident-at-3am, which the global z
-    // above cannot distinguish. Quarter-day phases (6 h × 4): per-phase
-    // groups at the gate SFs are deep enough that z ≥ 2 is reachable
-    // (hour-of-day groups cap z at sqrt(n−1) ≈ 1.9 here)
-    "ts_anomaly_seasonal" -> ((s, dir) =>
-      TS.anomaliesSeasonal(Tables.points(s, dir), STREAM, 2.0,
-          bucketUs = 6 * HOUR, periodBuckets = 4)
-        .orderBy(col("user_id"), col("event_type"), col("t_us"), col("value"))),
-
-    // robust dispersion: median + MAD per window (outlier-proof bands)
-    "ts_mad" -> ((s, dir) =>
-      TS.madWindows(Tables.points(s, dir), STREAM, T0, T29, WEEK)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    "ts_correlation" -> ((s, dir) => {
-      val p = Tables.points(s, dir)
-      TS.correlation(p.filter(col("event_type") === "click"),
-          p.filter(col("event_type") === "view"), Seq("user_id"), T0, T29, DAY)
-        .orderBy(col("user_id"))
-    }),
-
-    // classical decomposition: day-mean = trend + weekly seasonal + residual
-    "ts_decompose" -> ((s, dir) =>
-      TS.decompose(Tables.points(s, dir), STREAM, T0, T29, DAY, 7)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // Hyndman seasonality/trend strength per stream — the fleet triage
-    // before picking period-aware models or detectors
-    "ts_seasonal_strength" -> ((s, dir) =>
-      TS.seasonalStrength(Tables.points(s, dir), STREAM, T0, T29, DAY, 7)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    // even period → classical 2xMA trend (half-weight frame edges)
-    "ts_decompose_even" -> ((s, dir) =>
-      TS.decompose(Tables.points(s, dir), STREAM, T0, T29, DAY, 4)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // lag cross-correlation: click day-means vs view day-means at lags
-    // -2d..2d — one join sweep, lag as an exploded dimension
-    "ts_lag_corr" -> ((s, dir) => {
-      val p = Tables.points(s, dir)
-      TS.lagCorrelation(p.filter(col("event_type") === "click"),
-          p.filter(col("event_type") === "view"), Seq("user_id"), T0, T29, DAY,
-          Seq(-2 * DAY, -DAY, 0L, DAY, 2 * DAY))
-        .orderBy(col("user_id"), col("lag"))
-    }),
-
-    // fractional lags: half-day shifts against day windows — the y side
-    // re-buckets on the phase-shifted grid instead of rejecting the lag
-    "ts_lag_corr_frac" -> ((s, dir) => {
-      val p = Tables.points(s, dir)
-      TS.lagCorrelation(p.filter(col("event_type") === "click"),
-          p.filter(col("event_type") === "view"), Seq("user_id"), T0, T29, DAY,
-          Seq(-DAY / 2, 0L, DAY / 2))
-        .orderBy(col("user_id"), col("lag"))
-    }),
-
-    // autocorrelation function per stream — the seasonality detector
-    // (ACF over day-mean series): lagCorrelation with the stream joined
-    // against ITSELF, so all lags share one phase and the scan fans once
-    "ts_autocorr" -> ((s, dir) => {
-      val p = Tables.points(s, dir)
-      TS.lagCorrelation(p, p, STREAM, T0, T29, DAY,
-          Seq(0L, DAY, 2 * DAY, 3 * DAY, 7 * DAY))
-        .orderBy(col("user_id"), col("event_type"), col("lag"))
-    }),
-
-    // first-order Markov journey matrix: within-day consecutive-event
-    // transition counts + row probabilities
-    "ts_transitions" -> ((s, dir) =>
-      TS.transitions(Tables.points(s, dir), Seq("user_id"), "event_type",
-          T0, T29, DAY)
-        .orderBy(col("from_type"), col("to_type"))),
-
-    // transition dwell: HOW LONG between event pairs (exact-µs gaps
-    // under the transitions pairing rules)
-    "ts_dwell" -> ((s, dir) =>
-      TS.transitionDwell(Tables.points(s, dir), Seq("user_id"), "event_type",
-          T0, T29, DAY)
-        .orderBy(col("from_type"), col("to_type"))),
-
-    // DAU + trailing-7 WAU per day: exact rolling distincts via the
-    // bounded k-fan explode (never a sum of daily distincts)
-    "ts_active_users" -> ((s, dir) =>
-      TS.activeUsers(Tables.points(s, dir), Seq("user_id"), T0, T29, DAY, 7)
-        .orderBy(col("w_start"))),
-
-    // cohort retention triangle: users by first active day, distinct
-    // actives per (cohort, k) — k=0 restates cohort sizes
-    "ts_retention" -> ((s, dir) =>
-      TS.retention(Tables.points(s, dir), Seq("user_id"), T0, T29, DAY)
-        .orderBy(col("cohort_w"), col("k"))),
-
-    // arrival burstiness: Fano factor of per-window counts over the full
-    // grid (empty windows count 0 — the sums make that free)
-    "ts_burstiness" -> ((s, dir) =>
-      TS.burstiness(Tables.points(s, dir), STREAM, T0, T29, HOUR)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    // ordinal-pattern profile (Bandt-Pompe order 3): the exact-count
-    // face of permutation entropy, position-stable tie rule
-    "ts_ordpatterns" -> ((s, dir) =>
-      TS.ordinalPatterns(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("pattern"))),
-
-    // partial autocorrelation (lags 1-3, Durbin-Levinson unrolled): the
-    // AR-order cutoff diagnostic next to the ACF
-    "ts_pacf" -> ((s, dir) =>
-      TS.pacf(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    // rolling correlation: per-week Pearson r of click-vs-view day-means
-    "ts_windowed_corr" -> ((s, dir) => {
-      val p = Tables.points(s, dir)
-      TS.windowedCorrelation(p.filter(col("event_type") === "click"),
-          p.filter(col("event_type") === "view"), Seq("user_id"), T0, T29, DAY, WEEK)
-        .orderBy(col("user_id"), col("c_start"))
-    }),
-
-    // TS similarity search: rank the fleet by correlation to one query
-    // stream's window-mean series (one scan + broadcast of the query row)
-    "ts_similar" -> ((s, dir) =>
-      TS.similarStreams(Tables.points(s, dir), STREAM,
-          col("user_id") === 7 && col("event_type") === "click",
-          T0, T29, DAY, 10)
-        .orderBy(col("rank"))),
-
-    "ts_seasonal" -> ((s, dir) =>
-      TS.seasonalProfile(Tables.points(s, dir), Seq("event_type"), HOUR, 24)
-        .orderBy(col("event_type"), col("pos"))),
-
-    // time-weighted average: the step-function integral mean — the correct
-    // aggregate for irregularly sampled gauges (plain mean over-weights
-    // bursts)
-    "ts_twa" -> ((s, dir) =>
-      TS.timeWeighted(Tables.points(s, dir), STREAM, T0, T29)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    // one raw scan serving the day AND week zoom levels at once (coarse
-    // re-aggregated from fine — the on-the-fly qtree hierarchy)
-    "ts_multires" -> ((s, dir) =>
-      TS.multiResolution(Tables.points(s, dir), STREAM, T0, T29, Seq(DAY, WEEK))
-        .orderBy(col("w_width"), col("user_id"), col("event_type"), col("w_start"))),
-
-    // distinct active streams per (collection, window) — fleet liveness
-    "ts_cardinality" -> ((s, dir) =>
-      TS.cardinality(Tables.points(s, dir), Seq("event_type"), Seq("user_id"), T0, T29, DAY)
-        .orderBy(col("event_type"), col("w_start"))),
-
-    "ts_topk_windows" -> ((s, dir) =>
-      TS.topKPerWindow(Tables.points(s, dir), STREAM, T0, T29, DAY, 3)
-        .orderBy(col("w_start"), col("rnk"))),
-
-    // fleet volume skew: one-row Gini + hottest-stream share
-    "ts_load_gini" -> ((s, dir) =>
-      TS.loadGini(Tables.points(s, dir), STREAM)),
-
-    // RLE/deadband savings audit per stream over the value-run table
-    "ts_compressibility" -> ((s, dir) =>
-      TS.compressibility(Tables.points(s, dir), STREAM)
-        .orderBy(col("user_id"), col("event_type"))),
-
-    "ts_value_runs" -> ((s, dir) =>
-      TS.valueRuns(Tables.points(s, dir), STREAM)
-        .orderBy(col("user_id"), col("event_type"), col("r_start"))),
-
-    // per-window stddev — PromQL stddev_over_time (exact integer moments)
-    "ts_stddev" -> ((s, dir) =>
-      TS.stddevWindows(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // per-window least-squares slope — PromQL deriv()
-    "ts_deriv" -> ((s, dir) =>
-      TS.deriv(Tables.points(s, dir), STREAM, T0, T29, DAY)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // week-over-week window-mean comparison — the PromQL `offset` modifier
-    // top user journeys: per (user, day) event paths capped at 6 steps,
-    // top-20 fleet-wide — ts_transitions' full-order generalization
-    "ts_paths" -> ((s, dir) =>
-      TS.topPaths(Tables.points(s, dir), Seq("user_id"), "event_type",
-          T0, T29, DAY, maxLen = 6, k = 20)
-        .orderBy(col("rank"))),
-
-    // N-step ordered funnel: click → view → purchase, each step within
-    // 3 days of the previous (first occurrence per user per step)
-    "ts_funnel_steps" -> ((s, dir) =>
-      TS.funnelSteps(Tables.points(s, dir), Seq("user_id"), "event_type",
-          Seq("click", "view", "purchase"), T0, T29, 3 * DAY)
-        .orderBy(col("step"))),
-
-    // fleet triage: top-20 week-over-week movers by exact-integer |Δmean|
-    "ts_topk_movers" -> ((s, dir) =>
-      TS.topMovers(Tables.points(s, dir), STREAM, T0, T29, DAY, WEEK, 20)
-        .orderBy(col("rank"))),
-
-    // PromQL-style series division: click value-sum over view value-sum
-    // per (user, day) on the shared grid
-    "ts_ratio" -> ((s, dir) => {
-      val p = Tables.points(s, dir)
-      TS.ratio(p.filter(col("event_type") === "click"),
-          p.filter(col("event_type") === "view"), Seq("user_id"), T0, T29, DAY)
-        .orderBy(col("user_id"), col("w_start"))
-    }),
-
-    "ts_wow" -> ((s, dir) =>
-      TS.offsetCompare(Tables.points(s, dir), STREAM, T0, T29, DAY, WEEK)
-        .orderBy(col("user_id"), col("event_type"), col("w_start"))),
-
-    // click→purchase conversion within a day — the as-of join run FORWARD
-    // (negated time axes), aggregated into a daily funnel
-    "ts_funnel" -> ((s, dir) => {
-      val p = Tables.points(s, dir)
-      TS.funnel(
-          p.filter(col("event_type") === "click"),
-          p.filter(col("event_type") === "purchase"),
-          Seq("user_id"), T0, T29, DAY, DAY)
-        .orderBy(col("user_id"), col("w_start"))
-    }),
-
-    // ---- General analytics -------------------------------------------
-    // Money sums/means go through exact integer sub-unit sums (graft.Quant
-    // doc): l_* values are 2-dp decimals, so their sums and means land
-    // exactly on rounding boundaries where engine round() implementations
-    // disagree. disc_price is a 4-dp rational, charge 6-dp — summed as
-    // exact integers at that scale, rounded once at scale 0.
-    "q1_agg" -> ((s, dir) => {
-      val discPrice = col("l_extendedprice") * (lit(1) - col("l_discount"))
-      val charge = discPrice * (lit(1) + col("l_tax"))
-      Tables.load(s, dir, "lineitem")
-        .filter(col("l_shipdate").cast("date") <= lit("2000-09-02").cast("date"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          // group sums grow with SF (unbounded groups) → DECIMAL(38,0)
-          // accumulation per the graft.Quant overflow rule; DuckDB's
-          // sum(BIGINT) is already exact HUGEINT, so the mirror holds
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          (round(sum(round(discPrice * 1e4, 0).cast("long").cast("decimal(38,0)"))
-            .cast("double") / 100, 0) / 100 + lit(0d)).as("sum_disc_price"),
-          (round(sum(round(charge * 1e6, 0).cast("long").cast("decimal(38,0)"))
-            .cast("double") / 1e4, 0) / 100 + lit(0d)).as("sum_charge"),
-          Quant.mean6(sum((round(col("l_quantity"), 0).cast("long") * 1000000L)
-            .cast("decimal(38,0)")), count(lit(1))).as("avg_qty"),
-          Quant.mean6(sum((round(col("l_extendedprice") * 100, 0).cast("long") * 10000L)
-            .cast("decimal(38,0)")), count(lit(1))).as("avg_price"),
-          Quant.mean6(sum((round(col("l_discount") * 100, 0).cast("long") * 10000L)
-            .cast("decimal(38,0)")), count(lit(1))).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    "q3_join" -> ((s, dir) => {
-      val c = Tables.load(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.load(s, dir, "orders")
-        .filter(col("o_orderdate").cast("date") < lit("1998-03-15").cast("date"))
-      val l = Tables.load(s, dir, "lineitem")
-        .filter(col("l_shipdate").cast("date") > lit("1998-03-15").cast("date"))
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .groupBy(col("l_orderkey"))
-        .agg((round(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 1e4, 0)
-            .cast("long")).cast("double") / 100, 0) / 100 + lit(0d)).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-
-    // TPC-H Q5 shape: the six-table star — region filter broadcast down
-    // the dim chain, customer-supplier nation COLOCATION condition (the
-    // classic local-supplier join), exact-integer revenue sums per the
-    // unbounded-group decimal rule
-    "q5_join" -> ((s, dir) => {
-      val r = Tables.load(s, dir, "region").filter(col("r_name") === "ASIA")
-      val n = Tables.load(s, dir, "nation")
-      val cu = Tables.load(s, dir, "customer")
-      val o = Tables.load(s, dir, "orders")
-      val l = Tables.load(s, dir, "lineitem")
-      val su = Tables.load(s, dir, "supplier")
-      val dim = n.join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(cu, o("o_custkey") === cu("c_custkey"))
-        .join(su, l("l_suppkey") === su("s_suppkey") &&
-          cu("c_nationkey") === su("s_nationkey"))
-        .join(broadcast(dim), cu("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg((round(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 1e4, 0)
-            .cast("long").cast("decimal(38,0)")).cast("double") / 100, 0) / 100 + lit(0d))
-            .as("revenue"),
-          count(lit(1)).as("n_lines"))
-        .orderBy(col("n_name"))
-    }),
-
-    // TPC-H Q12 shape: big-big equi-join + conditional aggregation (this
-    // dataset carries no commitdate/shipmode, so "late" = shipped more
-    // than 30 days after the order date)
-    "q12_agg" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-      val l = Tables.load(s, dir, "lineitem")
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(when(col("l_shipdate").cast("date") >
-              date_add(col("o_orderdate").cast("date"), 30), 1L).otherwise(0L))
-            .as("n_late"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // TPC-H Q10 shape: returned-item revenue per customer, one quarter —
-    // two fact joins narrowed by selective filters, nation broadcast,
-    // TakeOrdered top-20 under a (revenue desc, custkey) total order
-    "q10_join" -> ((s, dir) => {
-      val c = Tables.load(s, dir, "customer")
-      val o = Tables.load(s, dir, "orders")
-        .filter(col("o_orderdate").cast("date") >= lit("1997-01-01").cast("date") &&
-          col("o_orderdate").cast("date") < lit("1997-04-01").cast("date"))
-      val l = Tables.load(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-      val n = Tables.load(s, dir, "nation")
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-        .agg((round(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 1e4, 0)
-            .cast("long").cast("decimal(38,0)")).cast("double") / 100, 0) / 100 + lit(0d))
-            .as("revenue"),
-          count(lit(1)).as("n_lines"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    }),
-
-    // TPC-H Q4 shape: the EXISTS decorrelation — orders for one quarter
-    // with at least one late line (our late proxy: shipped > 30 days
-    // after the order date, the q12 rule), counted per priority. The
-    // semi-join keeps the probe side duplicate-free without a distinct:
-    // Catalyst plans LeftSemi on the orderkey equi-key with the
-    // late-ship residual, so each order tests lines once and never fans.
-    "q4_semi" -> ((s, dir) => {
-      val o = Tables.load(s, dir, "orders")
-        .filter(col("o_orderdate").cast("date") >= lit("1997-01-01").cast("date") &&
-          col("o_orderdate").cast("date") < lit("1997-04-01").cast("date"))
-      val l = Tables.load(s, dir, "lineitem")
-      o.join(l, o("o_orderkey") === l("l_orderkey") &&
-          l("l_shipdate").cast("date") > date_add(o("o_orderdate").cast("date"), 30),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // TPC-H Q22 shape: the NOT-EXISTS anti-join + scalar-aggregate
-    // threshold — "above-average-balance customers with no RECENT
-    // order" (the lapsed-customer churn audit; every customer in this
-    // dataset has SOME order, so the recency filter is what gives the
-    // anti-join a non-empty answer to gate), per nation. The
-    // positive-balance mean arrives as ONE broadcast row of exact
-    // integer moments (Σbal_us, n) and the threshold comparison stays
-    // integer (bal·n > Σ — no division, no float), so the filter is
-    // engine-portable bit-for-bit; recent orders are eliminated by a
-    // left-anti equi-join on custkey (never a NOT IN materialization),
-    // with the date filter pushed below the join.
-    "q22_anti" -> ((s, dir) => {
-      val c = Tables.load(s, dir, "customer")
-        .withColumn("bal_us", round(col("c_acctbal") * 1e4, 0).cast("long"))
-      val stats = c.filter(col("bal_us") > 0)
-        .agg(sum(col("bal_us").cast("decimal(38,0)")).as("s_us"),
-          count(lit(1)).as("n_pos"))
-      val o = Tables.load(s, dir, "orders")
-        .filter(col("o_orderdate").cast("date") >= lit("2000-01-01").cast("date"))
-      c.crossJoin(broadcast(stats))
-        .filter(col("bal_us").cast("decimal(38,0)") * col("n_pos") > col("s_us"))
-        .join(o, col("c_custkey") === o("o_custkey"), "left_anti")
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n_custs"),
-          (round(sum(col("bal_us").cast("decimal(38,0)")).cast("double") / 100, 0) / 100
-            + lit(0d)).as("acctbal_sum"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // TPC-H Q19 shape: the disjunction of brand/size/quantity conjuncts —
-    // Catalyst must push the part-only disjuncts (brand ∨ brand) below
-    // the join and keep the mixed residual on top; revenue per branch
-    // proves each disjunct matched
-    "q19_join" -> ((s, dir) => {
-      val l = Tables.load(s, dir, "lineitem")
-      val p = Tables.load(s, dir, "part")
-      val b1 = col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&
-        col("l_quantity").between(1, 21)
-      val b2 = col("p_brand") === "Brand#2" && col("p_size").between(1, 30) &&
-        col("l_quantity").between(15, 35)
-      l.join(p, l("l_partkey") === p("p_partkey"))
-        .filter(b1 || b2)
-        .groupBy(when(b1, lit("b1")).otherwise(lit("b2")).as("branch"))
-        .agg(count(lit(1)).as("n_lines"),
-          (round(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 1e4, 0)
-            .cast("long").cast("decimal(38,0)")).cast("double") / 100, 0) / 100 + lit(0d))
-            .as("revenue"))
-        .orderBy(col("branch"))
-    }),
-
-    "q6_filter" -> ((s, dir) =>
-      Tables.load(s, dir, "lineitem")
-        .filter(col("l_shipdate").cast("date") >= lit("1997-01-01").cast("date") &&
-          col("l_shipdate").cast("date") < lit("1998-01-01").cast("date") &&
-          col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        // one global group → decimal accumulation (graft.Quant overflow rule)
-        .agg((round(sum(round(col("l_extendedprice") * col("l_discount") * 1e4, 0)
-          .cast("long").cast("decimal(38,0)")).cast("double") / 100, 0) / 100
-          + lit(0d)).as("revenue"))),
-
-    // TPC-H Q18 shape: large-volume orders (HAVING over a fact aggregation)
-    // joined back to dims. The big-order filter reduces the orders side to
-    // near-nothing, which AQE then broadcasts into the customer join.
-    "q18_join" -> ((s, dir) => {
-      val big = Tables.load(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"))
-        .filter(col("sum_qty") > 250)
-      val o = Tables.load(s, dir, "orders")
-      val c = Tables.load(s, dir, "customer")
-      o.join(big, o("o_orderkey") === big("l_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .select(col("c_custkey"), col("o_orderkey"),
-          unix_micros(col("o_orderdate").cast("timestamp")).as("o_date_us"),
-          col("o_totalprice"), col("sum_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(20)
-    }),
-
-    // TPC-H Q13 shape: per-customer order counts via left outer join
-    // (customers with no orders count 0), then the count distribution —
-    // two keyed aggregations, pure integers.
-    "q13_agg" -> ((s, dir) => {
-      val c = Tables.load(s, dir, "customer")
-      val o = Tables.load(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count")).agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    // ---- LLM-pipeline: dedup (SURVEY §2) ------------------------------
-    "dedup_exact" -> ((s, dir) =>
-      Dedup.exact(Tables.load(s, dir, "documents")).orderBy(col("doc_id"))),
-
-    "dedup_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(Tables.load(s, dir, "documents"), 3, 0.5, Some(1000L))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // asymmetric containment |A∩B|/|A| — the quote/subset near-dup class
-    // symmetric Jaccard misses (short doc embedded in a long one)
-    "dedup_containment" -> ((s, dir) =>
-      Dedup.containmentPairs(Tables.load(s, dir, "documents"), 3, 0.5, Some(1000L))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    "dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashPairs(Tables.load(s, dir, "documents"), 3, 64, 2, 0.8)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(Tables.load(s, dir, "documents"), 3)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // sketch calibration: every SimHash pair re-scored with its exact
-    // trigram Jaccard (NULL when a side has no shingles)
-    "dedup_simhash_audit" -> ((s, dir) =>
-      Dedup.simhashAudit(Tables.load(s, dir, "documents"), 3, 3)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // pigeonhole bucket-load audit: per signature chunk, bucket counts,
-    // hottest bucket, and Σ C(load,2) — the candidate-pair mass a
-    // simhash pair join would feed verify, priced BEFORE paying it
-    "dedup_simhash_load" -> ((s, dir) =>
-      Dedup.simhashLoad(Tables.load(s, dir, "documents"))
-        .orderBy(col("chunk"))),
-
-    "dedup_shared_ngram" -> ((s, dir) =>
-      Dedup.sharedNgramPairs(Tables.load(s, dir, "documents"), 20)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // LSH banding sweep: candidate cost + true-pair recall at rows-per-
-    // band ∈ {1,2,4} from ONE md5-signature pass — the (b, r) config
-    // decision table; recall vs the exact inverted-index pair set.
-    // SAMPLED (doc_id < 1000, the audit's own scale doctrine): the md5
-    // oracle-replay signatures and the exact Σ df² truth set are the
-    // audit-only price, paid on a slice — the banding curve the sweep
-    // measures is a property of the Jaccard distribution, not corpus
-    // size. The oracle takes the identical cut.
-    "dedup_minhash_tune" -> ((s, dir) =>
-      Dedup.minhashTune(Tables.load(s, dir, "documents"), idLimit = Some(1000L))
-        .orderBy(col("rows_per_band"))),
-
-    "corpus_filter" -> ((s, dir) =>
-      TextFunctions.corpusFilter(Tables.load(s, dir, "documents"), 0.5)
-        .orderBy(col("doc_id"))),
-
-    // the full curation verdict — one audited drop REASON per document
-    // (exact_dup > near_dup cluster loser > pii > low_quality > kept),
-    // composing four individually-oracled operators by doc_id joins
-    "corpus_verdict" -> ((s, dir) =>
-      TextFunctions.corpusVerdict(Tables.load(s, dir, "documents"), 0.5)
-        .orderBy(col("doc_id"))),
-
-    // the curation funnel: the verdict's drop reasons rolled up with doc
-    // and token mass per pipeline stage — the one-page "where did the
-    // corpus go" report
-    "corpus_funnel" -> ((s, dir) =>
-      TextFunctions.corpusFunnel(Tables.load(s, dir, "documents"), 0.5)
-        .orderBy(col("stage"))),
-
-    // quality-threshold tuning: surviving docs + word mass at cuts
-    // {.2,.4,.6,.8} from ONE scored pass — the table read before
-    // corpus_filter ships a threshold
-    "corpus_quality_sweep" -> ((s, dir) =>
-      TextFunctions.qualitySweep(Tables.load(s, dir, "documents"))),
-
-    // decontamination: src0 plays the held-out benchmark, the rest the
-    // training corpus — training docs sharing a verbatim 8-word run with
-    // any benchmark doc are contamination hits
-    "corpus_contamination" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      Dedup.contamination(
-          docs.filter(col("source") =!= "src0"),
-          docs.filter(col("source") === "src0"), 8)
-        .orderBy(col("train_id"), col("bench_id"))
-    }),
-
-    // scored near-contamination: trigram Jaccard train×bench (catches
-    // paraphrase-level leakage the verbatim 8-gram detector understates)
-    "corpus_contamination_near" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      Dedup.crossJaccardPairs(
-          docs.filter(col("source") =!= "src0"),
-          docs.filter(col("source") === "src0"), 3, 0.3)
-        .orderBy(col("train_id"), col("bench_id"))
-    }),
-
-    // SEMANTIC contamination — the embedding-space member of the
-    // contamination triad (verbatim 8-gram, trigram Jaccard, and this):
-    // training docs whose embeddings sit cosine-close to any benchmark
-    // doc's, candidates from the broadcast LSH bucket join, exact verify
-    "corpus_contamination_emb" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val src = Tables.load(s, dir, "documents").select(col("doc_id"), col("source"))
-      val tagged = emb.join(broadcast(src), emb("vec_id") === src("doc_id")).drop("doc_id")
-      Vectors.crossCosinePairsLsh(
-          tagged.filter(col("source") =!= "src0").drop("source"),
-          tagged.filter(col("source") === "src0").drop("source"), 0.4)
-        .select(col("id_a").as("train_id"), col("id_b").as("bench_id"), col("cos_sim"))
-        .orderBy(col("train_id"), col("bench_id"))
-    }),
-
-    "dedup_clusters" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      Dedup.clusters(docs, Dedup.minhashPairs(docs, 3, 64, 2, 0.8))
-        .orderBy(col("doc_id"))
-    }),
-
-    // SEMANTIC survivor selection — keepBest over the embedding-cosine
-    // cluster graph instead of the token-level one: per semantic
-    // near-dup cluster the longest document survives; the mask an
-    // embedding-side dedup ships (reuses the shared clusters/keepBest
-    // machinery and the emb_clusters pair graph at τ = 0.4)
-    "emb_keep_best" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val docs = Tables.load(s, dir, "documents")
-      Dedup.keepBest(
-          docs.join(emb.select(col("vec_id").as("doc_id")), Seq("doc_id")),
-          Vectors.cosinePairsLshAuto(emb, 0.4).select(col("id_a"), col("id_b")))
-        .select(col("doc_id").as("vec_id"), col("cluster_id"), col("kept"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // per-doc duplicated-passage mass: fraction of 8-gram positions whose
-    // gram appears in ≥2 docs — the span-removal decision signal, pure
-    // inverted-index aggregates (never pairwise)
-    "dedup_span_stats" -> ((s, dir) =>
-      Dedup.dupSpanStats(Tables.load(s, dir, "documents"))
-        .orderBy(col("doc_id"))),
-
-    // exact-substring span REMOVAL: the dedup rewrite itself — word
-    // positions covered by an 8-gram some earlier doc contributed are
-    // excised, first copy survives; output includes the cleaned text
-    "dedup_span_removal" -> ((s, dir) =>
-      Dedup.spanRemoval(Tables.load(s, dir, "documents"))
-        .orderBy(col("doc_id"))),
-
-    // per-source span-dedup recovery: where does the duplication LIVE —
-    // one row per source with surviving/removed word mass over the
-    // span_removal rewrite
-    "dedup_span_profile" -> ((s, dir) =>
-      Dedup.spanProfile(Tables.load(s, dir, "documents"))
-        .orderBy(col("source"))),
-
-    // cross-source near-duplication matrix: verified near-dup pairs
-    // rolled up per unordered source pair — where a source's other copy
-    // CAME FROM, the table that decides whether dedup must cross source
-    // boundaries or can shard by source
-    "dedup_source_matrix" -> ((s, dir) =>
-      Dedup.sourceOverlap(Tables.load(s, dir, "documents"))
-        .orderBy(col("source_a"), col("source_b"))),
-
-    // novel-content mass under in-order admission: fraction of a doc's
-    // 8-gram positions whose gram no earlier doc_id contributed — the
-    // marginal mass a greedy incremental dedup keeps per doc
-    "dedup_ngram_novelty" -> ((s, dir) =>
-      Dedup.ngramNovelty(Tables.load(s, dir, "documents"))
-        .orderBy(col("doc_id"))),
-
-    // survivor selection: the keep/drop decision a dedup pipeline ships —
-    // longest doc per near-dup cluster survives, ties to lowest doc_id
-    "dedup_keep_best" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      Dedup.keepBest(docs, Dedup.minhashPairs(docs, 3, 64, 2, 0.8))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- LLM-pipeline: similarity search ------------------------------
-    // LSH-bucketed candidates + exact cosine verify — the corpus-scale
-    // generator (equality join on (table, bucket), never all-pairs); the
-    // oracle replays the md5-derived buckets so the pair set is hash-gated,
-    // and the exact quadratic generator survives only as the oracle/spec
-    // mirror (Vectors.cosinePairs, DedupSimSpec recall floors)
-    "emb_cosine_pairs" -> ((s, dir) =>
-      Vectors.cosinePairsLshAuto(Tables.load(s, dir, "embeddings"), 0.4)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // the embedding-side bucket-load audit: per LSH table, live buckets,
-    // hottest bucket, and Σ C(load,2) — prices the pair generator's
-    // candidate mass (and checks autoBits actually bounded occupancy)
-    // for the cost of one aggregation
-    "emb_lsh_load" -> ((s, dir) =>
-      Vectors.lshLoad(Tables.load(s, dir, "embeddings"))
-        .orderBy(col("tbl"))),
-
-    // dedup-threshold tuning: near-dup pair counts at τ ∈ {.8,.9,.95,.99}
-    // from ONE pass of the LSH pair graph (base filter raw cos ≥ 0.8;
-    // higher cuts applied to the quantized similarity, mirrored in SQL)
-    "emb_dup_sweep" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      // the SURFACED recall contract: next to each band count, the
-      // closed-form expected recall of the generator at this corpus's
-      // autoBitsFrac config (Vectors.expectedBandRecall — shared p
-      // literals + left-fold powers, replayed exactly by the oracle),
-      // so a campaign reader sees the under-count with the counts it
-      // discounts instead of hunting for a spec table
-      val n = emb.count()
-      val rc = Vectors.bandP.map { case (band, p) =>
-        graft.Quant.q6(lit(Vectors.expectedBandRecall(n, p)))
-          .as(s"exp_recall_$band")
-      }
-      Vectors.cosinePairsLshAuto(emb, 0.8)
-        .agg(count(lit(1)).as("n_80"),
-          sum(when(col("cos_sim") >= 0.9, 1L).otherwise(0L)).as("n_90"),
-          sum(when(col("cos_sim") >= 0.95, 1L).otherwise(0L)).as("n_95"),
-          sum(when(col("cos_sim") >= 0.99, 1L).otherwise(0L)).as("n_99"))
-        .select(col("*") +: rc: _*)
-    }),
-
-    // semantic dedup: connected components over the cosine≥τ pair graph —
-    // the same clustering operator driving token-level dedup, applied to
-    // embedding-space near-duplicates (pairs from the LSH path)
-    "emb_clusters" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      Dedup.clusters(
-          emb.select(col("vec_id").as("doc_id")),
-          Vectors.cosinePairsLshAuto(emb, 0.4).select(col("id_a"), col("id_b")))
-        .select(col("doc_id").as("vec_id"), col("cluster_id"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "emb_knn" -> ((s, dir) =>
-      Vectors.knnGraphLshAuto(Tables.load(s, dir, "embeddings"), 0.4, 3)
-        .orderBy(col("vec_id"), col("rank"))),
-
-    // neighbor-level label agreement over the kNN graph: the "is this
-    // embedding space any good" probe — per label, the fraction of kNN
-    // edges staying inside the label (labelCohesion's centroid view
-    // can't see a class dissolving at the kNN radius; serving can)
-    "emb_knn_purity" -> ((s, dir) =>
-      Vectors.knnPurity(Tables.load(s, dir, "embeddings"), 0.4, 3)
-        .orderBy(col("label"))),
-
-    // embedding hygiene: per-vector L2 norms (degenerate-vector audit)
-    "emb_norms" -> ((s, dir) =>
-      Vectors.norms(Tables.load(s, dir, "embeddings"))
-        .orderBy(col("vec_id"))),
-
-    // embedding hygiene: per-dimension distribution (dead-dim audit)
-    "emb_dim_stats" -> ((s, dir) =>
-      Vectors.dimStats(Tables.load(s, dir, "embeddings"))
-        .orderBy(col("dim"))),
-
-    // anisotropy audit: 5 exact-integer power-iteration steps toward the
-    // dominant centered direction + its variance share (All-but-the-top)
-    "emb_pca" -> ((s, dir) =>
-      Vectors.pcaPower(Tables.load(s, dir, "embeddings"), 64, 5)
-        .orderBy(col("dim"))),
-
-    // embedding hygiene: cosine to the exact-mean corpus centroid
-    // (distribution-outlier audit)
-    "emb_centroid_sim" -> ((s, dir) =>
-      Vectors.centroidSim(Tables.load(s, dir, "embeddings"))
-        .orderBy(col("vec_id"))),
-
-    // embedding-space outlier audit: centroid-cosine z-scores, the
-    // ts_anomaly recipe on the embedding axis — corrupt/off-domain
-    // vector candidates before dedup
-    "emb_outliers" -> ((s, dir) =>
-      Vectors.outliers(Tables.load(s, dir, "embeddings"), 2.0)
-        .orderBy(col("vec_id"))),
-
-    // class-cohesion audit: per label, mean member cosine to the OWN
-    // label centroid — the noisy-class health check
-    "emb_label_cohesion" -> ((s, dir) =>
-      Vectors.labelCohesion(Tables.load(s, dir, "embeddings"))
-        .orderBy(col("label"))),
-
-    // class-separation audit: label-centroid cosine matrix (labels²,
-    // metadata-scale)
-    "emb_label_sim" -> ((s, dir) =>
-      Vectors.labelCentroidSim(Tables.load(s, dir, "embeddings"))
-        .orderBy(col("label_a"), col("label_b"))),
-
-    // int8 scalar-quantization audit: per-vector reconstruction error on
-    // the per-dim 256-level grid
-    "emb_sq8" -> ((s, dir) =>
-      Vectors.sq8Audit(Tables.load(s, dir, "embeddings"))
-        .orderBy(col("vec_id"))),
-
-    "emb_ann_topk" -> ((s, dir) =>
-      Vectors.annTopK(Tables.load(s, dir, "embeddings"), 5, 10)
-        .orderBy(col("q_id"), col("rank"))),
-
-    "emb_ann_lsh" -> ((s, dir) =>
-      Vectors.annLsh(Tables.load(s, dir, "embeddings"), 5, 10)
-        .orderBy(col("q_id"), col("rank"))),
-
-    // recall@k acceptance gate: fraction of the exact top-k the LSH ANN's
-    // top-k contains, per cutoff — the number that justifies turning the
-    // brute-force path off; exact side costs nQueries·corpus (the probe
-    // sample), never corpus²
-    "emb_ann_recall" -> ((s, dir) =>
-      Vectors.annRecall(Tables.load(s, dir, "embeddings"), 5, 10)),
-
-    // the IVF acceptance gate: recall@{1,5,10} of the cell-pruned path
-    // (zero-training seeds, nProbe=4 of 16 cells) vs the exact top-k —
-    // the LSH gate's sibling, so BOTH serving paths carry a measured
-    // recall before brute force is turned off
-    "emb_ann_ivf_recall" -> ((s, dir) =>
-      Vectors.annRecallIvf(Tables.load(s, dir, "embeddings"), 5, 10)),
-
-    // the PQ acceptance gate: with the LSH and IVF gates, all three
-    // serving families (bucketed, cell-pruned, compressed-code) carry a
-    // measured recall before brute force is turned off
-    "emb_ann_pq_recall" -> ((s, dir) =>
-      Vectors.annRecallPq(Tables.load(s, dir, "embeddings"), 5, 10)),
-
-    // the BITQ acceptance gate: recall@{1,5,10} of the sign-bit Hamming
-    // prescreen path vs the exact top-k — closes the gate family (all
-    // FOUR serving configs measured); the 1-bit extreme is where recall
-    // damage is most likely, so this is the first gate a capacity-driven
-    // compression change reads
-    "emb_ann_bitq_recall" -> ((s, dir) =>
-      Vectors.annRecallBitq(Tables.load(s, dir, "embeddings"), 5, 10)),
-
-    // probe-depth tuning curve: recall@{1,5,10} at nProbe ∈ {1,2,4,8,16}
-    // from ONE candidate pass (shallower probes are filters over the
-    // deepest probe's materialized candidates) — the probe-budget curve
-    // read next to the single-config acceptance gates
-    "emb_ivf_probe_curve" -> ((s, dir) =>
-      Vectors.ivfProbeCurve(Tables.load(s, dir, "embeddings"), 5, 10)
-        .orderBy(col("n_probe"))),
-
-    // rerank-depth tuning curve, the probe curve's sibling on the
-    // compressed-code axis: recall@{1,5,10} at rerank ∈ {8,16,32,64}
-    // from ONE ADC pass (shallower depths filter the deepest depth's
-    // materialized, cosine-scored survivors) — the exact-fetch budget
-    // chosen from a curve, not a guess
-    "emb_pq_rerank_curve" -> ((s, dir) =>
-      Vectors.pqRerankCurve(Tables.load(s, dir, "embeddings"), 5, 10)
-        .orderBy(col("rerank"))),
-
-    // binary-quantization ANN: sign-bit codes (two 32-bit words), integer
-    // Hamming prescreen over a codes-only projection, exact re-rank of the
-    // top-50 survivors — the 1-bit/lane point of the compression family
-    "emb_ann_bitq" -> ((s, dir) =>
-      Vectors.annBitq(Tables.load(s, dir, "embeddings"), 5, 10)
-        .orderBy(col("q_id"), col("rank"))),
-
-    // Matryoshka/truncation audit: per-dim-prefix energy fraction stats —
-    // the dim-vs-recall evidence read before building a truncated index
-    "emb_mrl" -> ((s, dir) =>
-      Vectors.mrlAudit(Tables.load(s, dir, "embeddings"))
-        .orderBy(col("dim"))),
-
-    // IVF cell-balance audit: per-cell load of the inverted file — the
-    // serving-skew report (a hot cell = an unprunable partition at 100 TB)
-    "emb_ivf_balance" -> ((s, dir) =>
-      Vectors.ivfBalance(Tables.load(s, dir, "embeddings"))
-        .orderBy(col("cell"))),
-
-    // PQ code-usage balance, emb_ivf_balance's compressed-code sibling:
-    // per (sub, code) assignment count + share, dead cells included —
-    // names WHICH subspace's codebook to retrain when the recall
-    // curves sag. nQueries = 5 so the audited codebook IS the corpus-
-    // side one emb_ann_pq_recall / emb_pq_rerank_curve serve from
-    // (query vectors excluded from seeds and counts alike).
-    "emb_pq_balance" -> ((s, dir) =>
-      Vectors.pqBalance(Tables.load(s, dir, "embeddings"), 5)
-        .orderBy(col("sub"), col("code"))),
-
-    // product-quantization audit: 8×16 seed codebook (the served-IVF
-    // zero-training trick), per-vector code word + exact-µ-unit MSE —
-    // completes the compression triad (SQ8 / PQ / coarse IVF)
-    "emb_pq" -> ((s, dir) =>
-      Vectors.pqAudit(Tables.load(s, dir, "embeddings"))
-        .orderBy(col("vec_id"))),
-
-    // PQ-ADC serving on top of the codes: per-query m×k distance table
-    // (µ-unit-exact entries, broadcast), ADC = m table lookups per
-    // candidate, top-32 survivors exact-cosine re-ranked to top-10
-    "emb_ann_pq" -> ((s, dir) =>
-      Vectors.annPq(Tables.load(s, dir, "embeddings"), 5, 10)
-        .orderBy(col("q_id"), col("rank"))),
-
-    "emb_ann_ivf" -> ((s, dir) =>
-      Vectors.annIvf(Tables.load(s, dir, "embeddings"), 5, 10)
-        .orderBy(col("q_id"), col("rank"))),
-
-    // the faiss IVF-PQ composition under an exact oracle: cell pruning ×
-    // ADC code scan × exact re-rank in ONE hash-gated plan (zero-training
-    // quantizer + seed codebook, shared kernels with IvfIndex.queryPq)
-    "emb_ann_ivfpq" -> ((s, dir) =>
-      Vectors.annIvfPq(Tables.load(s, dir, "embeddings"), 5, 10)
-        .orderBy(col("q_id"), col("rank"))),
-
-    // the FUSED gate: recall of the shipped IVF-PQ composition — the
-    // per-family gates measure each approximation alone, but cell and
-    // ADC misses don't multiply independently, so the production config
-    // carries its own measured recall
-    "emb_ann_ivfpq_recall" -> ((s, dir) =>
-      Vectors.annRecallIvfPq(Tables.load(s, dir, "embeddings"), 5, 10)),
-
-    // the IVF SERVING path under an exact oracle: zero Lloyd rounds means
-    // the quantizer is the deterministic lowest-id seed vectors, so DuckDB
-    // replays assignment + nProbe probe ranking + exact re-rank
-    // bit-for-bit; Lloyd refinement (emb_ann_ivf above) stays rows-only,
-    // its training pinned by specs
-    "emb_ann_ivf_served" -> ((s, dir) =>
-      Vectors.annIvf(Tables.load(s, dir, "embeddings"), 5, 10, lloydIters = 0)
-        .orderBy(col("q_id"), col("rank"))),
-
-    // metadata-FILTERED serving: same-label top-k with the filter applied
-    // to the inverted lists (pre-filter), the production vector-search
-    // shape — candidates join on (cell, label), never post-filtered; the
-    // probe count self-scales with the filter's selectivity
-    // (adaptiveProbe: min(nCells, nProbe·|labels|) — the r12 gate read
-    // 0.30 @10 at a FIXED 4/16, exactly the thinned-inverted-list
-    // failure the adaptive rule closes)
-    "emb_ann_filtered" -> ((s, dir) =>
-      Vectors.annIvfFiltered(Tables.load(s, dir, "embeddings"), 5, 10, lloydIters = 0)
-        .orderBy(col("q_id"), col("rank"))),
-
-    // the filtered acceptance gate, now gating the ADAPTIVE config the
-    // line above actually ships (and with the honest denominator:
-    // Σ_q min(c, admissible_q) — a selective filter can leave a query
-    // fewer than c admissible vectors)
-    "emb_ann_filtered_recall" -> ((s, dir) =>
-      Vectors.annRecallIvfFiltered(Tables.load(s, dir, "embeddings"), 5, 10)),
-
-    // the COMPLETE production composition: metadata pre-filter × cell
-    // pruning × compressed-code ADC scan × exact re-rank fused in one
-    // plan (faiss IVFPQ + IDSelector) — the label keys the CODE rows
-    // (cell, label) so an inadmissible candidate never reaches the ADC
-    // sum, and the probe count rides the same adaptive selectivity rule
-    // as emb_ann_filtered
-    "emb_ann_filtered_pq" -> ((s, dir) =>
-      Vectors.annIvfPqFiltered(Tables.load(s, dir, "embeddings"), 5, 10, lloydIters = 0)
-        .orderBy(col("q_id"), col("rank"))),
-
-    // its acceptance gate: the fused config vs the exact same-label
-    // top-k, filtered denominator Σ_q min(c, admissible_q) — cell, ADC,
-    // and filter misses interact, so the shipped composition carries its
-    // own measured recall
-    "emb_ann_filtered_pq_recall" -> ((s, dir) =>
-      Vectors.annRecallIvfPqFiltered(Tables.load(s, dir, "embeddings"), 5, 10)),
-
-    // ---- LLM-pipeline: text analysis ----------------------------------
-    "text_tokens" -> ((s, dir) =>
-      TextFunctions.tokenStats(Tables.load(s, dir, "documents")).orderBy(col("doc_id"))),
-
-    "text_quality" -> ((s, dir) =>
-      TextFunctions.quality(Tables.load(s, dir, "documents")).orderBy(col("doc_id"))),
-
-    "text_langid" -> ((s, dir) =>
-      TextFunctions.langId(Tables.load(s, dir, "documents")).orderBy(col("doc_id"))),
-
-    // language-ID confusion matrix vs the declared lang column — the
-    // classifier-health audit (diagonal = agreement rate)
-    "text_langid_confusion" -> ((s, dir) =>
-      TextFunctions.langIdConfusion(Tables.load(s, dir, "documents"))
-        .orderBy(col("lang_decl"), col("lang_pred"))),
-
-    // bigram-LM quality scoring, self-trained on the corpus; the exact
-    // mean-inverse-probability score hash-gates where log-PPL could not
-    "text_lm_score" -> ((s, dir) =>
-      TextFunctions.lmScore(Tables.load(s, dir, "documents"), 1024)
-        .orderBy(col("doc_id"))),
-
-    "text_fingerprint" -> ((s, dir) =>
-      TextFunctions.fingerprint(Tables.load(s, dir, "documents")).orderBy(col("doc_id"))),
-
-    // per-doc top-5 keywords by tf·(N/df) — the linear-idf exact-replay
-    // form (log idf is libm-bound); dataset-card topic signals
-    "text_keywords" -> ((s, dir) =>
-      TextFunctions.keywords(Tables.load(s, dir, "documents"), 5)
-        .orderBy(col("doc_id"), col("rank"))),
-
-    "text_pii" -> ((s, dir) =>
-      TextFunctions.piiScan(Tables.load(s, dir, "documents")).orderBy(col("doc_id"))),
-
-    "text_repetition" -> ((s, dir) =>
-      TextFunctions.repetition(Tables.load(s, dir, "documents")).orderBy(col("doc_id"))),
-
-    // Gopher-style repetition profile: per doc and per n ∈ {2,3,4}, the
-    // top-n-gram position fraction and the duplicate-n-gram position
-    // fraction — all widths exploded from ONE tokenization pass
-    "text_rep_profile" -> ((s, dir) =>
-      TextFunctions.repProfile(Tables.load(s, dir, "documents")).orderBy(col("doc_id"))),
-
-    // C4-style blocklist policy stage: per-doc hit count/fraction and
-    // the any-hit flag, lexicon inlined into one codegen filter pass
-    "text_blocklist" -> ((s, dir) =>
-      TextFunctions.blocklist(Tables.load(s, dir, "documents"),
-          Seq("slow", "stale", "dup", "skew"))
-        .orderBy(col("doc_id"))),
-
-    // sliding-window chunker (32-word chunks, 8-word overlap): docs →
-    // fixed-context windows, tail unpadded; mm_chunks' text sibling
-    "text_chunk" -> ((s, dir) =>
-      TextFunctions.chunk(Tables.load(s, dir, "documents"), 32, 8)
-        .orderBy(col("doc_id"), col("chunk_idx"))),
-
-    "sample_stratified" -> ((s, dir) =>
-      TextFunctions.sampleStratified(Tables.load(s, dir, "documents"), "source", 0.3)
-        .orderBy(col("doc_id"))),
-
-    "sample_fixed" -> ((s, dir) =>
-      TextFunctions.sampleFixed(Tables.load(s, dir, "documents"), 100)
-        .orderBy(col("rank_key"), col("doc_id"))),
-
-    // importance sampling: keep-probability = rate × quality_score
-    // deterministic train/val/test assignment: 16-bit md5 fraction vs
-    // fixed hex cuts — 1% val, 1% test, the rest train; adding docs
-    // never moves an existing one between splits
-    "sample_split" -> ((s, dir) =>
-      TextFunctions.sampleSplit(Tables.load(s, dir, "documents"), 0.01, 0.01)
-        .orderBy(col("doc_id"))),
-
-    "sample_weighted" -> ((s, dir) =>
-      TextFunctions.sampleWeighted(Tables.load(s, dir, "documents"), 0.5)
-        .orderBy(col("doc_id"))),
-
-    // eval-integrity audit: per eval split, how many documents have a
-    // verified near-dup in train (leaked — the model has effectively
-    // seen them) — decides whether the split must re-draw on clusters
-    "split_leakage" -> ((s, dir) =>
-      TextFunctions.splitLeakage(Tables.load(s, dir, "documents"), 0.2, 0.1)
-        .orderBy(col("split"))),
-
-    // the remediation split_leakage points at: split hash computed on
-    // the near-dup CLUSTER id (shared clusters() labels), so a whole
-    // duplicate group lands on one side — cross-split near-dup leakage
-    // structurally zero at the pair threshold; singletons split exactly
-    // like sample_split with cluster_id = doc_id
-    "sample_split_clustered" -> ((s, dir) =>
-      TextFunctions.sampleSplitClustered(Tables.load(s, dir, "documents"), 0.2, 0.1)
-        .orderBy(col("doc_id"))),
-
-    // the remediation's closure audit: split_leakage re-measured over
-    // the clustered split — n_leaked is structurally zero while split
-    // and pair graph agree; registering it (vs asserting the theorem)
-    // is the re-runnable acceptance check that fires if they drift
-    "split_leakage_clustered" -> ((s, dir) =>
-      TextFunctions.splitLeakageClustered(Tables.load(s, dir, "documents"), 0.2, 0.1)
-        .orderBy(col("split"))),
-
-    // class balancing: exactly n docs per source, two-phase bounded rank
-    "sample_balanced" -> ((s, dir) =>
-      TextFunctions.sampleBalanced(Tables.load(s, dir, "documents"), "source", 10)
-        .orderBy(col("doc_id"))),
-
-    "corpus_budget" -> ((s, dir) =>
-      TextFunctions.tokenBudget(Tables.load(s, dir, "documents"), "source", 3000L)
-        .orderBy(col("doc_id"))),
-
-    // sequence packing: each doc's (pack_id, pack_offset) in the
-    // fixed-capacity training-sequence stream per source
-    "corpus_pack" -> ((s, dir) =>
-      TextFunctions.tokenPack(Tables.load(s, dir, "documents"), "source", 512L)
-        .orderBy(col("doc_id"))),
-
-    // temperature-smoothed source mixture (p_i ∝ n_i^(1/2)): the
-    // low-resource-upweighting data-mixing allocator over the same
-    // deterministic prefix-sum fill as corpus_budget
-    "corpus_mix" -> ((s, dir) =>
-      TextFunctions.tokenMixture(Tables.load(s, dir, "documents"), "source", 10000L)
-        .orderBy(col("doc_id"))),
-
-    // per-source epoch planning: the repeats-per-source table a token
-    // budget implies under the sqrt-weighted mixture — epochs > 1 is the
-    // data-constrained multi-epoch regime, < 1 is subsampling
-    "corpus_epochs" -> ((s, dir) =>
-      TextFunctions.tokenEpochs(Tables.load(s, dir, "documents"), "source", 10000L)
-        .orderBy(col("source"))),
-
-    // the temperature sweep over the same budget: shares ∝ mass^τ for
-    // τ ∈ {¼, ½, ¾, 1} (quarter powers = sqrt-composable = bit-portable
-    // weights) — what each sampling temperature does to every source's
-    // epoch factor, read before a mixture is committed
-    "corpus_temperature" -> ((s, dir) =>
-      TextFunctions.temperatureMixture(Tables.load(s, dir, "documents"), "source", 10000L)
-        .orderBy(col("source"), col("tau"))),
-
-    // the end-to-end shard build: lang+quality+PII+dedup gates, then
-    // token-budget fill per source — every stage an oracle-gated operator
-    "corpus_shard" -> ((s, dir) =>
-      TextFunctions.corpusShard(Tables.load(s, dir, "documents"), 0.5, 3000L)
-        .orderBy(col("doc_id"))),
-
-    // the shard build with NEAR-dedup: minhash-LSH cluster representatives
-    // survive (not just exact-fingerprint uniques) before the budget fill
-    "corpus_shard_near" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      TextFunctions.corpusShardNear(
-          docs, Dedup.minhashPairs(docs, 3, 64, 2, 0.8), 0.5, 3000L)
-        .orderBy(col("doc_id"))
-    }),
-
-    "corpus_stats" -> ((s, dir) =>
-      TextFunctions.corpusStats(Tables.load(s, dir, "documents"))
-        .orderBy(col("lang"), col("source"))),
-
-    // tokenizer fertility per (lang, source): BPE-ish tokens per word,
-    // chars per token — the multilingual tokenizer-health report
-    "corpus_fertility" -> ((s, dir) =>
-      TextFunctions.fertility(Tables.load(s, dir, "documents"))
-        .orderBy(col("lang"), col("source"))),
-
-    // doc-length histogram per source (64-token buckets): the packing
-    // planner's input
-    "corpus_len_hist" -> ((s, dir) =>
-      TextFunctions.lengthHistogram(Tables.load(s, dir, "documents"), 64)
-        .orderBy(col("source"), col("bucket_lo"))),
-
-    // dataset-card redundancy: per-source duplicate fraction
-    "corpus_dup_stats" -> ((s, dir) =>
-      TextFunctions.dupStats(Tables.load(s, dir, "documents"))
-        .orderBy(col("source"))),
-
-    // per-source NEAR-dup rate: fraction of each source's docs that are
-    // non-representative members of a near-dup cluster — the dataset-card
-    // redundancy number the exact-fingerprint dup_rate understates
-    "corpus_dup_stats_near" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      Dedup.clusters(docs, Dedup.minhashPairs(docs, 3, 64, 2, 0.8))
-        .join(docs.select(col("doc_id"), col("source")), "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("cluster_id") =!= col("doc_id"), 1L).otherwise(0L))
-            .as("n_near_dups"))
-        .select(col("source"), col("n_docs"), col("n_near_dups"),
-          graft.Quant.q6(col("n_near_dups").cast("double") / col("n_docs").cast("double"))
-            .as("near_dup_rate"))
-        .orderBy(col("source"))
-    }),
-
-    // Heaps-law vocabulary growth: distinct types at 10%/50%/100%
-    // hash-order corpus prefixes, one pass via per-word min doc-hash
-    "corpus_vocab_growth" -> ((s, dir) =>
-      TextFunctions.vocabGrowth(Tables.load(s, dir, "documents"), Seq(0.1, 0.5, 1.0))
-        .orderBy(col("frac"))),
-
-    "corpus_vocab" -> ((s, dir) =>
-      TextFunctions.vocab(Tables.load(s, dir, "documents"), 100)
-        .orderBy(col("doc_freq").desc, col("word"))),
-
-    // Zipf rank-frequency curve at power-of-two ranks — the corpus-health
-    // fingerprint in exact integers (successive halvings ≈ Zipfian)
-    "text_zipf_curve" -> ((s, dir) =>
-      TextFunctions.zipfCurve(Tables.load(s, dir, "documents"))
-        .orderBy(col("rank"))),
-
-    "text_ttr" -> ((s, dir) =>
-      TextFunctions.lexicalDiversity(Tables.load(s, dir, "documents"))
-        .orderBy(col("doc_id"))),
-
-    // word-length stats — the tokenizer-health / gibberish signal
-    "text_wordlen" -> ((s, dir) =>
-      TextFunctions.wordLengthStats(Tables.load(s, dir, "documents"))
-        .orderBy(col("doc_id"))),
-
-    // sentence-level readability proxies (Flesch-style, syllable-free)
-    "text_readability" -> ((s, dir) =>
-      TextFunctions.readability(Tables.load(s, dir, "documents"))
-        .orderBy(col("doc_id"))),
-
-    // char-level Shannon entropy — compressibility signal; log2 is
-    // libm-dependent, so rows-only at the driver (spec-gated locally)
-    "text_entropy" -> ((s, dir) =>
-      TextFunctions.charEntropy(Tables.load(s, dir, "documents"))
-        .orderBy(col("doc_id"))),
-
-    // the pre-log fingerprint of the same operator: sorted exact
-    // (char, count) profiles — all-integer, fully hash-gated, leaving
-    // log2 display-only on text_entropy
-    "text_entropy_freq" -> ((s, dir) =>
-      TextFunctions.charFreqProfile(Tables.load(s, dir, "documents"))
-        .orderBy(col("doc_id"))),
-
-    // shared-10-word-prefix groups — template/boilerplate detection
-    "dedup_prefix" -> ((s, dir) =>
-      Dedup.prefixGroups(Tables.load(s, dir, "documents"), 10)
-        .orderBy(col("doc_id"))),
-
-    // bigram collocations by the word2vec phrase score — which word pairs
-    // should merge into single tokens before training
-    "text_phrases" -> ((s, dir) =>
-      TextFunctions.phrases(Tables.load(s, dir, "documents"))
-        .orderBy(col("score").desc, col("w1"), col("w2"))),
-
-    // the memorization-risk report: which exact 8-word passages does the
-    // corpus repeat, and in how many documents
-    "corpus_dup_ngrams" -> ((s, dir) =>
-      TextFunctions.dupNgrams(Tables.load(s, dir, "documents"), 8, 50)
-        .orderBy(col("doc_freq").desc, col("gram"))),
-
-    // which sources share verbatim documents — the pre-mixing overlap audit
-    "corpus_overlap" -> ((s, dir) =>
-      TextFunctions.crossSourceOverlap(Tables.load(s, dir, "documents"))
-        .orderBy(col("src_a"), col("src_b"))),
-
-    // cross-source NEAR-dup matrix — the paraphrase-level face of
-    // corpus_overlap ("which datasets share REWRITTEN docs"): pairs
-    // from the LSH-bucketed minhash generator (exact-Jaccard verified),
-    // sources keyed on, per-pair mean similarity from the quantized
-    // integer scores (order-free)
-    "corpus_overlap_near" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val pairs = Dedup.minhashPairs(docs, 3, 64, 2, 0.8)
-      val src = docs.select(col("doc_id"), col("source"))
-      pairs
-        .join(src.select(col("doc_id").as("id_a"), col("source").as("sa")), "id_a")
-        .join(src.select(col("doc_id").as("id_b"), col("source").as("sb")), "id_b")
-        .filter(col("sa") =!= col("sb"))
-        .select(least(col("sa"), col("sb")).as("src_a"),
-          greatest(col("sa"), col("sb")).as("src_b"), col("jaccard"))
-        .groupBy(col("src_a"), col("src_b"))
-        .agg(count(lit(1)).as("n_pairs"),
-          graft.Quant.mean6(sum(graft.Quant.us6(col("jaccard"))), count(lit(1)))
-            .as("mean_jaccard"))
-        .orderBy(col("src_a"), col("src_b"))
-    }),
-
-    // ---- LLM-pipeline: multimodal (binary columns) --------------------
-    // the payload is an opaque BINARY column (synthesized deterministically
-    // from the corpus — this container has no codecs); both queries
-    // exercise the real binary-column path: byte lengths, typed metadata,
-    // one-to-many frame explode
-    "mm_stats" -> ((s, dir) =>
-      graft.mm.Multimodal.assetStats(
-          graft.mm.Multimodal.syntheticAssets(s, Tables.load(s, dir, "documents")))
-        .orderBy(col("kind"))),
-
-    "mm_frames" -> ((s, dir) =>
-      graft.mm.Multimodal.sampleFrames(
-          graft.mm.Multimodal.syntheticAssets(s, Tables.load(s, dir, "documents")), 4)
-        .orderBy(col("asset_id"), col("frame_idx"))),
-
-    // fixed-window chunk manifest with content fingerprints — the
-    // storage-dedup / content-addressing primitive over binary assets
-    "mm_chunks" -> ((s, dir) =>
-      graft.mm.Multimodal.chunkManifest(
-          graft.mm.Multimodal.syntheticAssets(s, Tables.load(s, dir, "documents")), 64)
-        .orderBy(col("asset_id"), col("chunk_idx"))),
-
-    // what content-addressed storage would save: chunk-level dedup
-    // bytes per kind over the manifest
-    "mm_dedup_ratio" -> ((s, dir) =>
-      graft.mm.Multimodal.chunkDedupStats(
-          graft.mm.Multimodal.syntheticAssets(s, Tables.load(s, dir, "documents")), 64)
-        .orderBy(col("kind"))),
-
-    // WebDataset-style byte-budget shard manifest: per kind, the
-    // md5-order concatenated byte stream cut at exact capacity
-    // multiples — pure arithmetic over the shared two-phase prefix sum
-    // (corpus_pack's contract, bytes for tokens)
-    "mm_shard" -> ((s, dir) =>
-      graft.mm.Multimodal.byteShard(
-          graft.mm.Multimodal.syntheticAssets(s, Tables.load(s, dir, "documents")), 4096L)
-        .orderBy(col("asset_id"))),
-
-    // binary-asset exact dedup: payload-hash verdicts, no decode
-    // perceptual near-dup over the binary assets (the recompressed-image
-    // case byte-hash dedup misses): codegen PhashSig + pigeonhole join
-    "mm_phash" -> ((s, dir) =>
-      graft.mm.Multimodal.phashPairs(
-          graft.mm.Multimodal.syntheticAssets(s,
-            Tables.rebalance(Tables.load(s, dir, "documents"))))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // perceptual-pair audit: every phash pair re-scored with the exact
-    // byte-identity verdict — splits "exact dup the fingerprint path
-    // catches" from "genuine near-dup only the perceptual hash finds"
-    "mm_phash_audit" -> ((s, dir) =>
-      graft.mm.Multimodal.phashAudit(
-          graft.mm.Multimodal.syntheticAssets(s,
-            Tables.rebalance(Tables.load(s, dir, "documents"))))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // the perceptual-side bucket-load audit — the table that prices a
-    // phash pair join's candidate mass before launching it (the 100×
-    // stub-phash saturation reads directly off cand_pairs here)
-    "mm_phash_load" -> ((s, dir) =>
-      graft.mm.Multimodal.phashLoad(
-          graft.mm.Multimodal.syntheticAssets(s,
-            Tables.rebalance(Tables.load(s, dir, "documents"))))
-        .orderBy(col("chunk"))),
-
-    // visual near-dup clusters: the SAME connected-components operator as
-    // text/embedding dedup over the perceptual-hash pair graph — every
-    // asset labeled with the min reachable asset_id
-    // asset survivor selection: largest payload per perceptual near-dup
-    // cluster survives — the shared keepBest operator's third modality
-    "mm_keep_best" -> ((s, dir) =>
-      graft.mm.Multimodal.keepBestAssets(
-          graft.mm.Multimodal.syntheticAssets(s,
-            Tables.rebalance(Tables.load(s, dir, "documents"))))
-        .orderBy(col("asset_id"))),
-
-    "mm_dedup_clusters" -> ((s, dir) => {
-      val assets = graft.mm.Multimodal.syntheticAssets(s,
-        Tables.rebalance(Tables.load(s, dir, "documents")))
-      val pairs = graft.mm.Multimodal.phashPairs(assets)
-        .select(col("id_a"), col("id_b"))
-      Dedup.clusters(assets.select(col("asset_id").as("doc_id")), pairs)
-        .select(col("doc_id").as("asset_id"), col("cluster_id"))
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_dedup" -> ((s, dir) =>
-      graft.mm.Multimodal.dedupAssets(
-          graft.mm.Multimodal.syntheticAssets(s, Tables.load(s, dir, "documents")))
-        .orderBy(col("asset_id"))),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    // Mirrors the ts_ingest query's synthetic batch — uuid 'ing-'||(id%64),
-    // time T0+id*1000, value id%1000 over 500k ids, all committed at
-    // version 1 into a fresh store — so the oracle needs no store dir:
-    // it recomputes the expected visible view from generate_series and
-    // the hash gates the insert + readback path end to end.
-    "ts_ingest" ->
-      s"""WITH g AS (SELECT unnest(generate_series(0, 499999)) AS id),
-         |s AS (SELECT concat('ing-', CAST(id % 64 AS VARCHAR)) AS uuid,
-         |             $T0 + id * 1000 AS time, id % 1000 AS v FROM g)
-         |SELECT uuid, CAST(count(*) AS BIGINT) AS n_points,
-         |       min(time) AS t_min, max(time) AS t_max,
-         |       CAST(sum(v) AS BIGINT) AS v_sum,
-         |       CAST(1 AS BIGINT) AS ver
-         |FROM s GROUP BY uuid ORDER BY uuid""".stripMargin,
-
-    "ts_raw_values" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT user_id, event_type, t_us, value FROM pts
-         |WHERE user_id = 7 AND event_type = 'click' AND t_us >= $T08 AND t_us < $T22
-         |ORDER BY t_us""".stripMargin,
-
-    "ts_aligned_windows" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT user_id, event_type, (t_us >> 36) << 36 AS w_start,
-         |       min(value) AS v_min, $V_MEAN_SQL,
-         |       max(value) AS v_max, CAST(count(*) AS BIGINT) AS v_count
-         |FROM pts WHERE t_us >= $T0 AND t_us < $T31
-         |GROUP BY 1, 2, 3 ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    "ts_windows" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT user_id, event_type,
-         |       $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |       min(value) AS v_min, $V_MEAN_SQL,
-         |       max(value) AS v_max, CAST(count(*) AS BIGINT) AS v_count
-         |FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |GROUP BY 1, 2, 3 ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    "ts_windows_at_version" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT user_id, event_type,
-         |       $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |       min(value) AS v_min, $V_MEAN_SQL,
-         |       max(value) AS v_max, CAST(count(*) AS BIGINT) AS v_count
-         |FROM pts WHERE ver <= 500 AND t_us >= $T0 AND t_us < $T29
-         |GROUP BY 1, 2, 3 ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    "ts_aligned_rollup" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT user_id, event_type, (t_us >> 36) << 36 AS w_start,
-         |       min(value) AS v_min, $V_MEAN_SQL,
-         |       max(value) AS v_max, CAST(count(*) AS BIGINT) AS v_count
-         |FROM pts WHERE t_us >= ${T0 + 12345L} AND t_us < ${T31 - 98765L}
-         |GROUP BY 1, 2, 3 ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // argmax ties (same t_us after ns→µs truncation) resolve to the max
-    // value on both sides: Spark max_by(value, (t_us, value)) ≡ this
-    // two-level max — bare arg_max would pick by encounter order.
-    "ts_nearest_before" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |m AS (SELECT user_id, event_type, max(t_us) AS t_us
-         |      FROM pts WHERE t_us < $T15 GROUP BY 1, 2)
-         |SELECT m.user_id AS user_id, m.event_type AS event_type,
-         |       m.t_us AS t_us, max(p.value) AS value
-         |FROM m JOIN pts p ON p.user_id = m.user_id
-         |  AND p.event_type = m.event_type AND p.t_us = m.t_us
-         |GROUP BY 1, 2, 3 ORDER BY user_id, event_type""".stripMargin,
-
-    "ts_nearest_after" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |m AS (SELECT user_id, event_type, min(t_us) AS t_us
-         |      FROM pts WHERE t_us >= $T15 GROUP BY 1, 2)
-         |SELECT m.user_id AS user_id, m.event_type AS event_type,
-         |       m.t_us AS t_us, min(p.value) AS value
-         |FROM m JOIN pts p ON p.user_id = m.user_id
-         |  AND p.event_type = m.event_type AND p.t_us = m.t_us
-         |GROUP BY 1, 2, 3 ORDER BY user_id, event_type""".stripMargin,
-
-    "ts_changes" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |ch AS (SELECT DISTINCT user_id, event_type, (t_us >> 32) << 32 AS r_start
-         |       FROM pts WHERE ver > 100 AND ver <= 700),
-         |ranges AS (SELECT user_id, event_type, r_start, r_start + 4294967296 AS r_end FROM ch),
-         |flagged AS (SELECT *, CASE WHEN lag(r_end) OVER w IS NULL OR r_start > lag(r_end) OVER w
-         |                           THEN 1 ELSE 0 END AS is_new
-         |            FROM ranges WINDOW w AS (PARTITION BY user_id, event_type ORDER BY r_start)),
-         |islands AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id, event_type ORDER BY r_start
-         |                                        ROWS UNBOUNDED PRECEDING) AS island FROM flagged)
-         |SELECT user_id, event_type, min(r_start) AS c_start, max(r_end) AS c_end
-         |FROM islands GROUP BY user_id, event_type, island
-         |ORDER BY user_id, event_type, c_start""".stripMargin,
-
-    "ts_version_at" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT user_id, event_type, t_us, value FROM pts
-         |WHERE ver <= 500 AND t_us >= $T0 AND t_us < $T31
-         |ORDER BY user_id, event_type, t_us""".stripMargin,
-
-    // mirrors TimeSeriesOps.windowsDelta: stats at toVer joined to the
-    // delta's distinct (stream, window) set
-    "ts_windows_delta" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |ch AS (SELECT DISTINCT user_id, event_type,
-         |         $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start
-         |       FROM pts WHERE ver > 100 AND ver <= 700
-         |         AND t_us >= $T0 AND t_us < $T29),
-         |base AS (SELECT user_id, event_type,
-         |           $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start, value
-         |         FROM pts WHERE ver <= 700 AND t_us >= $T0 AND t_us < $T29)
-         |SELECT user_id, event_type, w_start,
-         |       min(value) AS v_min, $V_MEAN_SQL,
-         |       max(value) AS v_max, CAST(count(*) AS BIGINT) AS v_count
-         |FROM base JOIN ch USING (user_id, event_type, w_start)
-         |GROUP BY 1, 2, 3
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    "ts_delete_range" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT user_id, event_type, t_us, value FROM pts
-         |WHERE user_id = 3 AND event_type = 'view'
-         |  AND NOT (t_us >= $T08 AND t_us < $T20)
-         |ORDER BY t_us""".stripMargin,
-
-    "ts_stats_global" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT user_id, event_type, min(value) AS v_min, $V_MEAN_SQL,
-         |       max(value) AS v_max, CAST(count(*) AS BIGINT) AS v_count,
-         |       min(t_us) AS t_first, max(t_us) AS t_last
-         |FROM pts GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin,
-
-    "meta_stream_info" ->
-      s"""WITH s AS ($STREAMS_SQL)
-         |SELECT uuid, collection, user_id, n_points, t_min, t_max, version
-         |FROM s ORDER BY uuid""".stripMargin,
-
-    "meta_list_collections" ->
-      s"""WITH s AS ($STREAMS_SQL)
-         |SELECT DISTINCT collection FROM s WHERE collection >= ''
-         |ORDER BY collection LIMIT 3""".stripMargin,
-
-    "meta_lookup_streams" ->
-      s"""WITH s AS ($STREAMS_SQL)
-         |SELECT uuid, collection, user_id, version FROM s
-         |WHERE collection LIKE 'c%' AND user_id < 8 ORDER BY uuid""".stripMargin,
-
-    "meta_usage" ->
-      s"""WITH s AS ($STREAMS_SQL)
-         |SELECT collection, CAST(count(*) AS BIGINT) AS tag_user_count,
-         |       CAST(count(*) AS BIGINT) AS n_streams
-         |FROM s GROUP BY collection ORDER BY collection""".stripMargin,
-
-    "ts_csv_export" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |       ${CSV_STAT_SQL("u1", "user_id = 1")},
-         |       ${CSV_STAT_SQL("u2", "user_id = 2")},
-         |       ${CSV_STAT_SQL("u3", "user_id = 3")}
-         |FROM pts
-         |WHERE event_type = 'click' AND user_id IN (1, 2, 3) AND t_us >= $T0 AND t_us < $T29
-         |GROUP BY 1 ORDER BY w_start""".stripMargin,
-
-    "ts_csv_export_raw" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT t_us,
-         |       max(CASE WHEN user_id = 1 THEN value END) AS u1,
-         |       max(CASE WHEN user_id = 2 THEN value END) AS u2,
-         |       max(CASE WHEN user_id = 3 THEN value END) AS u3
-         |FROM pts
-         |WHERE event_type = 'click' AND user_id IN (1, 2, 3) AND t_us >= $T0 AND t_us < $T29
-         |GROUP BY t_us ORDER BY t_us""".stripMargin,
-
-    // mirrors TimeSeriesOps.csvExportRawExact: per-(stream, t_us)
-    // occurrence index by ascending value, pivot on (t_us, seq)
-    "ts_csv_export_raw_exact" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |e AS (SELECT t_us, user_id, value,
-         |             row_number() OVER (PARTITION BY user_id, t_us
-         |                                ORDER BY value) AS seq
-         |      FROM pts
-         |      WHERE event_type = 'click' AND user_id IN (1, 2, 3)
-         |        AND t_us >= $T0 AND t_us < $T29)
-         |SELECT t_us, CAST(seq AS BIGINT) AS seq,
-         |       max(CASE WHEN user_id = 1 THEN value END) AS u1,
-         |       max(CASE WHEN user_id = 2 THEN value END) AS u2,
-         |       max(CASE WHEN user_id = 3 THEN value END) AS u3
-         |FROM e
-         |GROUP BY t_us, seq ORDER BY t_us, seq""".stripMargin,
-
-    "ts_csv_export_ver" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |       ${CSV_STAT_SQL("u1", "user_id = 1")},
-         |       ${CSV_STAT_SQL("u2", "user_id = 2 AND ver <= 500")},
-         |       ${CSV_STAT_SQL("u3", "user_id = 3 AND ver <= 800")}
-         |FROM pts
-         |WHERE event_type = 'click'
-         |  AND (user_id = 1 OR (user_id = 2 AND ver <= 500) OR (user_id = 3 AND ver <= 800))
-         |  AND t_us >= $T0 AND t_us < $T29
-         |GROUP BY 1 ORDER BY w_start""".stripMargin,
-
-    "ts_delta" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |l AS (SELECT user_id, event_type, t_us, value,
-         |             lag(t_us) OVER w AS prev_t, lag(value) OVER w AS prev_v
-         |      FROM pts
-         |      WINDOW w AS (PARTITION BY user_id, event_type ORDER BY t_us, value))
-         |SELECT user_id, event_type, t_us, value,
-         |       ${Q6("value - prev_v")} AS dv,
-         |       t_us - prev_t AS dt_us,
-         |       CASE WHEN t_us - prev_t > 0
-         |            THEN ${Q6("(value - prev_v) / (t_us - prev_t) * 1e6")} END AS rate_per_s
-         |FROM l WHERE prev_t IS NOT NULL
-         |ORDER BY user_id, event_type, t_us, value""".stripMargin,
-
-    // mirrors TimeSeriesOps.gapHistogram: same lag ordering as ts_delta,
-    // bit-length buckets (length of the binary string — libm-free)
-    "ts_gap_histogram" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |l AS (SELECT user_id, event_type, t_us - lag(t_us) OVER w AS dt
-         |      FROM pts
-         |      WINDOW w AS (PARTITION BY user_id, event_type ORDER BY t_us, value)),
-         |g AS (SELECT user_id, event_type,
-         |             CASE WHEN dt = 0 THEN 0 ELSE length(bin(dt)) END AS bucket, dt
-         |      FROM l WHERE dt IS NOT NULL),
-         |a AS (SELECT user_id, event_type, bucket, count(*) AS n_gaps,
-         |             min(dt) AS dt_min, max(dt) AS dt_max
-         |      FROM g GROUP BY 1, 2, 3)
-         |SELECT user_id, event_type, CAST(bucket AS BIGINT) AS bucket,
-         |       CASE WHEN bucket = 0 THEN CAST(0 AS BIGINT)
-         |            ELSE (CAST(1 AS BIGINT) << (bucket - 1)) END AS bucket_lo,
-         |       CAST(n_gaps AS BIGINT) AS n_gaps, dt_min, dt_max
-         |FROM a ORDER BY user_id, event_type, bucket""".stripMargin,
-
-    "ts_gaps" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |f AS (SELECT * FROM pts WHERE NOT (t_us >= $T08 AND t_us < $T15) OR user_id <> 1),
-         |s AS (SELECT DISTINCT user_id, event_type FROM f),
-         |g AS (SELECT user_id, event_type,
-         |             unnest(generate_series($T0, ${T29 - 1}, $DAY)) AS w_start FROM s),
-         |o AS (SELECT DISTINCT user_id, event_type,
-         |             $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start
-         |      FROM f WHERE t_us >= $T0 AND t_us < $T29)
-         |SELECT g.user_id AS user_id, g.event_type AS event_type, g.w_start AS w_start
-         |FROM g ANTI JOIN o ON g.user_id = o.user_id
-         |  AND g.event_type = o.event_type AND g.w_start = o.w_start
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    "ts_outages" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |f AS (SELECT * FROM pts WHERE NOT (t_us >= $T08 AND t_us < $T15) OR user_id <> 1),
-         |s AS (SELECT DISTINCT user_id, event_type FROM f),
-         |g AS (SELECT user_id, event_type,
-         |             unnest(generate_series($T0, ${T29 - 1}, $DAY)) AS w_start FROM s),
-         |o AS (SELECT DISTINCT user_id, event_type,
-         |             $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start
-         |      FROM f WHERE t_us >= $T0 AND t_us < $T29),
-         |miss AS (SELECT g.user_id AS user_id, g.event_type AS event_type,
-         |                g.w_start AS r_start, g.w_start + $DAY AS r_end
-         |         FROM g ANTI JOIN o ON g.user_id = o.user_id
-         |           AND g.event_type = o.event_type AND g.w_start = o.w_start),
-         |flagged AS (SELECT *, CASE WHEN lag(r_end) OVER w IS NULL OR r_start > lag(r_end) OVER w
-         |                           THEN 1 ELSE 0 END AS is_new
-         |            FROM miss WINDOW w AS (PARTITION BY user_id, event_type ORDER BY r_start)),
-         |islands AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id, event_type ORDER BY r_start
-         |                                        ROWS UNBOUNDED PRECEDING) AS island FROM flagged)
-         |SELECT user_id, event_type, min(r_start) AS c_start, max(r_end) AS c_end
-         |FROM islands GROUP BY user_id, event_type, island
-         |ORDER BY user_id, event_type, c_start""".stripMargin,
-
-    // the outages CTE chain plus one aggregate; zero-outage streams come
-    // back via the distinct-stream left join with availability 1.0
-    "ts_reliability" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |f AS (SELECT * FROM pts WHERE NOT (t_us >= $T08 AND t_us < $T15) OR user_id <> 1),
-         |s AS (SELECT DISTINCT user_id, event_type FROM f),
-         |g AS (SELECT user_id, event_type,
-         |             unnest(generate_series($T0, ${T29 - 1}, $DAY)) AS w_start FROM s),
-         |o AS (SELECT DISTINCT user_id, event_type,
-         |             $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start
-         |      FROM f WHERE t_us >= $T0 AND t_us < $T29),
-         |miss AS (SELECT g.user_id AS user_id, g.event_type AS event_type,
-         |                g.w_start AS r_start, g.w_start + $DAY AS r_end
-         |         FROM g ANTI JOIN o ON g.user_id = o.user_id
-         |           AND g.event_type = o.event_type AND g.w_start = o.w_start),
-         |flagged AS (SELECT *, CASE WHEN lag(r_end) OVER w IS NULL OR r_start > lag(r_end) OVER w
-         |                           THEN 1 ELSE 0 END AS is_new
-         |            FROM miss WINDOW w AS (PARTITION BY user_id, event_type ORDER BY r_start)),
-         |islands AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id, event_type ORDER BY r_start
-         |                                        ROWS UNBOUNDED PRECEDING) AS island FROM flagged),
-         |co AS (SELECT user_id, event_type, min(r_start) AS c_start, max(r_end) AS c_end
-         |       FROM islands GROUP BY user_id, event_type, island),
-         |agg AS (SELECT user_id, event_type, count(*) AS n_o, sum(c_end - c_start) AS d_us
-         |        FROM co GROUP BY 1, 2)
-         |SELECT s.user_id AS user_id, s.event_type AS event_type,
-         |       CAST(coalesce(agg.n_o, 0) AS BIGINT) AS n_outages,
-         |       CAST(coalesce(agg.d_us, 0) AS BIGINT) AS downtime_us,
-         |       CASE WHEN coalesce(agg.n_o, 0) > 0
-         |            THEN ${Q6("CAST(agg.d_us AS DOUBLE) / agg.n_o")}
-         |            ELSE 0.0 END AS mttr_us,
-         |       ${Q6(s"1.0 - CAST(coalesce(agg.d_us, 0) AS DOUBLE) / ${(T29 - T0).toDouble}")}
-         |         AS availability
-         |FROM s LEFT JOIN agg ON s.user_id = agg.user_id AND s.event_type = agg.event_type
-         |ORDER BY user_id, event_type""".stripMargin,
-
-    // mirrors TimeSeriesOps.cusum: rounded integer µ-unit mean per stream,
-    // then an EXACT integer prefix sum (HUGEINT ≡ DECIMAL(38,0)) quantized
-    // once on emit
-    "ts_cusum" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |u AS (SELECT user_id, event_type, t_us, value, ${US6("value")} AS us FROM pts),
-         |st AS (SELECT user_id, event_type,
-         |              CAST(round(CAST(sum(us) AS DOUBLE) / count(*), 0) AS BIGINT) AS mean_i
-         |       FROM u GROUP BY 1, 2),
-         |j AS (SELECT u.user_id AS user_id, u.event_type AS event_type,
-         |             u.t_us AS t_us, u.value AS value, u.us - st.mean_i AS dev
-         |      FROM u JOIN st ON u.user_id = st.user_id AND u.event_type = st.event_type),
-         |c AS (SELECT user_id, event_type, t_us, value,
-         |             sum(dev) OVER (PARTITION BY user_id, event_type
-         |                            ORDER BY t_us, value
-         |                            ROWS UNBOUNDED PRECEDING) AS cum
-         |      FROM j)
-         |SELECT user_id, event_type, t_us, value,
-         |       ${Q6("CAST(cum AS DOUBLE) / 1000000.0")} AS cusum
-         |FROM c ORDER BY user_id, event_type, t_us, value""".stripMargin,
-
-    "ts_asof_join" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |c AS (SELECT user_id, t_us, value FROM pts WHERE event_type = 'click'),
-         |p AS (SELECT user_id, t_us, max(value) AS value FROM pts
-         |      WHERE event_type = 'purchase' GROUP BY 1, 2)
-         |SELECT c.user_id AS user_id, c.t_us AS t_us, c.value AS l_value, p.value AS asof_value
-         |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.t_us >= p.t_us
-         |ORDER BY user_id, t_us""".stripMargin,
-
-    "ts_resample" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |s AS (SELECT DISTINCT user_id, event_type FROM pts),
-         |g AS (SELECT user_id, event_type, unnest(generate_series($T0, ${T29 - 1}, $DAY)) AS g_t FROM s),
-         |pb AS (SELECT user_id, event_type, t_us, value,
-         |              $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS g_t
-         |       FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |b0 AS (SELECT user_id, event_type, g_t, max(t_us) AS mt FROM pb GROUP BY 1, 2, 3),
-         |b AS (SELECT pb.user_id, pb.event_type, pb.g_t, max(pb.value) AS last_v
-         |      FROM pb JOIN b0 ON pb.user_id = b0.user_id AND pb.event_type = b0.event_type
-         |        AND pb.g_t = b0.g_t AND pb.t_us = b0.mt
-         |      GROUP BY 1, 2, 3)
-         |SELECT g.user_id, g.event_type, g.g_t,
-         |       last_value(b.last_v IGNORE NULLS) OVER (PARTITION BY g.user_id, g.event_type
-         |           ORDER BY g.g_t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_fill
-         |FROM g LEFT JOIN b ON g.user_id = b.user_id AND g.event_type = b.event_type AND g.g_t = b.g_t
-         |ORDER BY g.user_id, g.event_type, g.g_t""".stripMargin,
-
-    "ts_asof_tolerance" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |c AS (SELECT user_id, t_us, value FROM pts WHERE event_type = 'click'),
-         |p AS (SELECT user_id, t_us, max(value) AS value FROM pts
-         |      WHERE event_type = 'purchase' GROUP BY 1, 2)
-         |SELECT c.user_id AS user_id, c.t_us AS t_us, c.value AS l_value,
-         |       CASE WHEN c.t_us - p.t_us <= ${3 * DAY} THEN p.value END AS asof_value
-         |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.t_us >= p.t_us
-         |ORDER BY user_id, t_us""".stripMargin,
-
-    "ts_lttb" -> lttbSql(7),
-    "ts_lttb_bucketed" -> lttbSql(7, bucketed = true),
-
-    // mirrors Downsample.sax: MEAN6-integer PAA bucket means, exact
-    // DECIMAL variance numerator (only the final D casts to double),
-    // z thresholds on the shared SAX_BREAK literal, sd=0 guard first
-    "ts_sax" -> {
-      val bp = java.lang.Double.toString(graft.ts.Downsample.SAX_BREAK)
-      s"""WITH pts AS ($PTS_SQL),
-         |b AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS m_us
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |s AS (SELECT user_id, event_type, count(*) AS nb, sum(m_us) AS s1,
-         |             sum(CAST(m_us AS HUGEINT) * m_us) AS s2
-         |      FROM b GROUP BY 1, 2),
-         |z AS (SELECT b.user_id, b.event_type, b.w_start, s.nb,
-         |        sqrt(CAST(s.nb * s.s2 - CAST(s.s1 AS HUGEINT) * s.s1 AS DOUBLE)) / s.nb AS sd_us,
-         |        (CAST(b.m_us AS DOUBLE) - CAST(s.s1 AS DOUBLE) / s.nb) AS dev_us
-         |      FROM b JOIN s USING (user_id, event_type)),
-         |y AS (SELECT user_id, event_type, w_start, nb,
-         |        CASE WHEN sd_us = 0 THEN 'c'
-         |             WHEN dev_us / sd_us < -$bp THEN 'a'
-         |             WHEN dev_us / sd_us < 0 THEN 'b'
-         |             WHEN dev_us / sd_us < $bp THEN 'c'
-         |             ELSE 'd' END AS sym
-         |      FROM z)
-         |SELECT user_id, event_type, CAST(max(nb) AS BIGINT) AS n_buckets,
-         |       string_agg(sym, '' ORDER BY w_start) AS word
-         |FROM y GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin
-    },
-
-    // mirrors Downsample.motifs: the ts_sax symbol pipeline + w−1 leads
-    // (NULL-propagating concat keeps only complete windows), then one
-    // count/count-distinct per subword and a total-order top-k
-    "ts_motifs" -> {
-      val bp = java.lang.Double.toString(graft.ts.Downsample.SAX_BREAK)
-      s"""WITH pts AS ($PTS_SQL),
-         |b AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS m_us
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |s AS (SELECT user_id, event_type, count(*) AS nb, sum(m_us) AS s1,
-         |             sum(CAST(m_us AS HUGEINT) * m_us) AS s2
-         |      FROM b GROUP BY 1, 2),
-         |z AS (SELECT b.user_id, b.event_type, b.w_start,
-         |        sqrt(CAST(s.nb * s.s2 - CAST(s.s1 AS HUGEINT) * s.s1 AS DOUBLE)) / s.nb AS sd_us,
-         |        (CAST(b.m_us AS DOUBLE) - CAST(s.s1 AS DOUBLE) / s.nb) AS dev_us
-         |      FROM b JOIN s USING (user_id, event_type)),
-         |y AS (SELECT user_id, event_type, w_start,
-         |        CASE WHEN sd_us = 0 THEN 'c'
-         |             WHEN dev_us / sd_us < -$bp THEN 'a'
-         |             WHEN dev_us / sd_us < 0 THEN 'b'
-         |             WHEN dev_us / sd_us < $bp THEN 'c'
-         |             ELSE 'd' END AS sym
-         |      FROM z),
-         |sw AS (SELECT user_id, event_type,
-         |         sym || lead(sym, 1) OVER wo || lead(sym, 2) OVER wo
-         |             || lead(sym, 3) OVER wo AS subword
-         |       FROM y
-         |       WINDOW wo AS (PARTITION BY user_id, event_type ORDER BY w_start))
-         |SELECT subword, CAST(count(*) AS BIGINT) AS n_occ,
-         |       CAST(count(DISTINCT (user_id, event_type)) AS BIGINT) AS n_streams
-         |FROM sw WHERE subword IS NOT NULL
-         |GROUP BY subword ORDER BY n_occ DESC, subword LIMIT 25""".stripMargin
-    },
-
-    // mirrors Downsample.dtwSimilar: same MEAN6-integer PAA profiles;
-    // the row-sequential DP fold is replayed in its min-plus-scan form
-    // (dp[i][j] = S[j] + min_{k≤j}(min(prev[k],prev[k−1]) − S[k−1]),
-    // an exact algebraic identity) inside a recursive CTE carrying each
-    // DP row as a LIST — all integer arithmetic, so identical cells
-    "ts_dtw" -> {
-      s"""WITH RECURSIVE pts AS ($PTS_SQL),
-         |m AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS m_us
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |prof AS (SELECT user_id, event_type, list(m_us ORDER BY w_start) AS pa
-         |         FROM m GROUP BY 1, 2),
-         |q AS (SELECT pa AS qa FROM prof WHERE user_id = 7 AND event_type = 'click'),
-         |cand AS (SELECT p.user_id, p.event_type, p.pa AS ca, q.qa
-         |         FROM prof p CROSS JOIN q
-         |         WHERE NOT (p.user_id = 7 AND p.event_type = 'click')),
-         |dp AS (
-         |  SELECT user_id, event_type, ca, qa, 1 AS i,
-         |         list_transform(generate_series(1, len(ca)), j ->
-         |           list_sum(list_transform(generate_series(1, j), l -> abs(qa[1] - ca[l])))) AS dpr
-         |  FROM cand
-         |  UNION ALL
-         |  SELECT user_id, event_type, ca, qa, i + 1,
-         |         list_transform(generate_series(1, len(ca)), j ->
-         |           list_sum(list_transform(generate_series(1, j), l -> abs(qa[i+1] - ca[l])))
-         |           + list_min(list_transform(generate_series(1, j), k ->
-         |               (CASE WHEN k = 1 THEN dpr[1] ELSE least(dpr[k], dpr[k-1]) END)
-         |               - (CASE WHEN k = 1 THEN 0 ELSE list_sum(list_transform(
-         |                    generate_series(1, k-1), l -> abs(qa[i+1] - ca[l]))) END))))
-         |  FROM dp WHERE i < len(qa)
-         |)
-         |SELECT user_id, event_type,
-         |       CAST(len(ca) AS BIGINT) AS n_buckets,
-         |       CAST(CAST(dpr[len(ca)] AS BIGINT) AS DOUBLE) / 1000000.0 + 0 AS dtw,
-         |       CAST(row_number() OVER (ORDER BY dpr[len(ca)], user_id, event_type) AS BIGINT) AS rank
-         |FROM dp WHERE i = len(qa)
-         |ORDER BY dtw, user_id, event_type LIMIT 10""".stripMargin
-    },
-
-    // tie determinism mirrors the struct-argmax: a tied min takes its
-    // earliest t_us, a tied max its latest
-    "ts_argminmax" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start, t_us, value
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |x AS (SELECT *,
-         |        min(value) OVER (PARTITION BY user_id, event_type, w_start) AS vmin,
-         |        max(value) OVER (PARTITION BY user_id, event_type, w_start) AS vmax
-         |      FROM w)
-         |SELECT user_id, event_type, w_start,
-         |       min(value) AS v_min,
-         |       min(CASE WHEN value = vmin THEN t_us END) AS t_min,
-         |       max(value) AS v_max,
-         |       max(CASE WHEN value = vmax THEN t_us END) AS t_max,
-         |       CAST(count(*) AS BIGINT) AS v_count
-         |FROM x GROUP BY 1, 2, 3
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    "ts_windows_depth" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |b AS (SELECT user_id, event_type, (t_us >> 30) << 30 AS b,
-         |        min(value) AS v_min, max(value) AS v_max,
-         |        sum(${US6("value")}) AS v_sum_us, count(*) AS v_count
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3)
-         |SELECT user_id, event_type,
-         |       $T0 + (greatest(b, $T0) - $T0) - ((greatest(b, $T0) - $T0) % $DAY) AS w_start,
-         |       min(v_min) AS v_min,
-         |       ${MEAN6("sum(v_sum_us)", "sum(v_count)")} AS v_mean,
-         |       max(v_max) AS v_max,
-         |       CAST(sum(v_count) AS BIGINT) AS v_count
-         |FROM b GROUP BY 1, 2, 3
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // same fold as the engine's aggregate(): s_1 = m_1, s_t = s_{t-1}·β + m_t·α,
-    // coefficients serialized via Double.toString so both engines parse the
-    // identical doubles and replay the identical float ops
-    "ts_ewma" ->
-      s"""WITH RECURSIVE pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        $V_MEAN_SQL
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |n AS (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-         |                                   ORDER BY w_start) AS rn FROM w),
-         |rec AS (
-         |  SELECT user_id, event_type, w_start, v_mean, rn, v_mean AS ew
-         |  FROM n WHERE rn = 1
-         |  UNION ALL
-         |  SELECT n.user_id, n.event_type, n.w_start, n.v_mean, n.rn,
-         |         r.ew * $EWMA_B + n.v_mean * $EWMA_A
-         |  FROM n JOIN rec r ON n.user_id = r.user_id
-         |    AND n.event_type = r.event_type AND n.rn = r.rn + 1)
-         |SELECT user_id, event_type, w_start, v_mean, ${Q6("ew")} AS ewma
-         |FROM rec ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // same fold as the engine's aggregate(): (l_1, b_1) = (m_1, 0);
-    // l_t = α·m_t + (1−α)·(l+b); b_t = β·(l_t − l) + (1−β)·b
-    "ts_holt" ->
-      s"""WITH RECURSIVE pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        $V_MEAN_SQL
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |n AS (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-         |                                   ORDER BY w_start) AS rn FROM w),
-         |rec AS (
-         |  SELECT user_id, event_type, w_start, v_mean, rn,
-         |         v_mean AS l, CAST(0.0 AS DOUBLE) AS b
-         |  FROM n WHERE rn = 1
-         |  UNION ALL
-         |  SELECT n.user_id, n.event_type, n.w_start, n.v_mean, n.rn,
-         |         $HOLT_LNEW AS l,
-         |         $HOLT_B * (($HOLT_LNEW) - r.l) + $HOLT_IB * r.b AS b
-         |  FROM n JOIN rec r ON n.user_id = r.user_id
-         |    AND n.event_type = r.event_type AND n.rn = r.rn + 1)
-         |SELECT user_id, event_type, w_start, v_mean,
-         |       ${Q6("l")} AS level, ${Q6("b")} AS trend
-         |FROM rec ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // Holt-Winters: the holt recursion + a seasonal LIST carried through
-    // the recursive CTE (ring[rn - p] replays element_at(acc, -p).s)
-    "ts_holtwinters" ->
-      s"""WITH RECURSIVE pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        $V_MEAN_SQL
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |n AS (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-         |                                   ORDER BY w_start) AS rn FROM w),
-         |rec AS (
-         |  SELECT user_id, event_type, w_start, v_mean, rn,
-         |         v_mean AS l, CAST(0.0 AS DOUBLE) AS b, CAST(0.0 AS DOUBLE) AS s,
-         |         [CAST(0.0 AS DOUBLE)] AS ring
-         |  FROM n WHERE rn = 1
-         |  UNION ALL
-         |  SELECT n.user_id, n.event_type, n.w_start, n.v_mean, n.rn,
-         |         $HW_LNEW AS l,
-         |         $HW_B * (($HW_LNEW) - r.l) + $HW_IB * r.b AS b,
-         |         $HW_SNEW AS s,
-         |         list_append(r.ring, $HW_SNEW) AS ring
-         |  FROM n JOIN rec r ON n.user_id = r.user_id
-         |    AND n.event_type = r.event_type AND n.rn = r.rn + 1)
-         |SELECT user_id, event_type, w_start, v_mean,
-         |       ${Q6("l")} AS level, ${Q6("b")} AS trend, ${Q6("s")} AS seasonal
-         |FROM rec ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // mirrors TimeSeriesOps.holtWintersBacktest: the hw recursion's
-    // QUANTIZED emissions feed the same lag/lead forecast assembly;
-    // µ-unit errors, order-free sums, the same RMSE expression
-    "ts_forecast_eval" ->
-      s"""WITH RECURSIVE pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        $V_MEAN_SQL
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |n AS (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-         |                                   ORDER BY w_start) AS rn FROM w),
-         |rec AS (
-         |  SELECT user_id, event_type, w_start, v_mean, rn,
-         |         v_mean AS l, CAST(0.0 AS DOUBLE) AS b, CAST(0.0 AS DOUBLE) AS s,
-         |         [CAST(0.0 AS DOUBLE)] AS ring
-         |  FROM n WHERE rn = 1
-         |  UNION ALL
-         |  SELECT n.user_id, n.event_type, n.w_start, n.v_mean, n.rn,
-         |         $HW_LNEW AS l,
-         |         $HW_B * (($HW_LNEW) - r.l) + $HW_IB * r.b AS b,
-         |         $HW_SNEW AS s,
-         |         list_append(r.ring, $HW_SNEW) AS ring
-         |  FROM n JOIN rec r ON n.user_id = r.user_id
-         |    AND n.event_type = r.event_type AND n.rn = r.rn + 1),
-         |hwq AS (SELECT user_id, event_type, w_start, v_mean,
-         |               ${Q6("l")} AS level, ${Q6("b")} AS trend, ${Q6("s")} AS seasonal
-         |        FROM rec),
-         |fe AS (SELECT user_id, event_type,
-         |         ${US6(s"""lead(v_mean, 1) OVER wo -
-               |           (level + trend + coalesce(lag(seasonal, ${HW_P - 1}) OVER wo,
-               |                                     CAST(0.0 AS DOUBLE)))""".stripMargin)} AS err_us
-         |       FROM hwq
-         |       WINDOW wo AS (PARTITION BY user_id, event_type ORDER BY w_start))
-         |SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n_evals,
-         |       ${MEAN6("sum(abs(err_us))", "count(*)")} AS mae,
-         |       ${MEAN6("sum(err_us)", "count(*)")} AS bias,
-         |       ${Q6("sqrt(CAST(sum(CAST(err_us AS HUGEINT) * err_us) AS DOUBLE) / count(*)) / 1000000.0")} AS rmse
-         |FROM fe WHERE err_us IS NOT NULL
-         |GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin,
-
-    // forecast: the last rec row per stream carries (l, b, ring); the
-    // horizon explodes from generate_series with the identical seasonal
-    // index arithmetic (n − p + ((h−1) mod p), 1-based into the ring)
-    "ts_forecast" ->
-      s"""WITH RECURSIVE pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        $V_MEAN_SQL
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |n AS (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-         |                                   ORDER BY w_start) AS rn FROM w),
-         |rec AS (
-         |  SELECT user_id, event_type, w_start, v_mean, rn,
-         |         v_mean AS l, CAST(0.0 AS DOUBLE) AS b, CAST(0.0 AS DOUBLE) AS s,
-         |         [CAST(0.0 AS DOUBLE)] AS ring
-         |  FROM n WHERE rn = 1
-         |  UNION ALL
-         |  SELECT n.user_id, n.event_type, n.w_start, n.v_mean, n.rn,
-         |         $HW_LNEW AS l,
-         |         $HW_B * (($HW_LNEW) - r.l) + $HW_IB * r.b AS b,
-         |         $HW_SNEW AS s,
-         |         list_append(r.ring, $HW_SNEW) AS ring
-         |  FROM n JOIN rec r ON n.user_id = r.user_id
-         |    AND n.event_type = r.event_type AND n.rn = r.rn + 1),
-         |lastrow AS (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-         |                                         ORDER BY rn DESC) AS rr FROM rec),
-         |f AS (SELECT user_id, event_type, w_start AS last_w, l, b, ring, rn AS n
-         |      FROM lastrow WHERE rr = 1),
-         |hs AS (SELECT unnest(generate_series(1, 7)) AS h)
-         |SELECT user_id, event_type, CAST(h AS BIGINT) AS h,
-         |       last_w + CAST(h AS BIGINT) * $DAY AS w_start,
-         |       ${Q6(s"""l + CAST(h AS DOUBLE) * b +
-               |         CASE WHEN n - $HW_P + ((h - 1) % $HW_P) >= 0
-               |              THEN ring[n - $HW_P + ((h - 1) % $HW_P) + 1]
-               |              ELSE CAST(0.0 AS DOUBLE) END""".stripMargin)} AS forecast
-         |FROM f CROSS JOIN hs ORDER BY user_id, event_type, h""".stripMargin,
-
-    "ts_interpolate" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |p0 AS (SELECT user_id, event_type, t_us AS t, max(value) AS value, 0 AS is_grid
-         |       FROM pts GROUP BY 1, 2, 3),
-         |s AS (SELECT DISTINCT user_id, event_type FROM pts),
-         |g AS (SELECT user_id, event_type,
-         |             unnest(generate_series($T0, ${T29 - 1}, $DAY)) AS t,
-         |             CAST(NULL AS DOUBLE) AS value, 1 AS is_grid FROM s),
-         |u AS (SELECT * FROM p0 UNION ALL SELECT * FROM g),
-         |m AS (SELECT *,
-         |        last_value(CASE WHEN is_grid = 0 THEN t END IGNORE NULLS)
-         |          OVER wp AS pt,
-         |        last_value(CASE WHEN is_grid = 0 THEN value END IGNORE NULLS)
-         |          OVER wp AS pv,
-         |        first_value(CASE WHEN is_grid = 0 THEN t END IGNORE NULLS)
-         |          OVER wn AS nt,
-         |        first_value(CASE WHEN is_grid = 0 THEN value END IGNORE NULLS)
-         |          OVER wn AS nv
-         |      FROM u
-         |      WINDOW wp AS (PARTITION BY user_id, event_type ORDER BY t, is_grid
-         |                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |             wn AS (PARTITION BY user_id, event_type ORDER BY t, is_grid
-         |                    ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING))
-         |SELECT user_id, event_type, t AS g_t,
-         |       ${Q6("CASE WHEN pt = t THEN pv ELSE pv + (nv - pv) * " +
-                "(CAST(t - pt AS DOUBLE) / CAST(nt - pt AS DOUBLE)) END")} AS v_interp
-         |FROM m WHERE is_grid = 1
-         |ORDER BY user_id, event_type, g_t""".stripMargin,
-
-    "ts_histogram" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT user_id, event_type,
-         |       $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |       CAST(floor(value / 50.0) AS BIGINT) AS bin,
-         |       CAST(count(*) AS BIGINT) AS n
-         |FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |GROUP BY 1, 2, 3, 4 ORDER BY user_id, event_type, w_start, bin""".stripMargin,
-
-    // mirrors TimeSeriesOps.histogramQuantile: cumulative bin counts,
-    // first-bin-reaching-rank selection, uniform within-bin interpolation
-    "ts_histogram_quantile" -> {
-      def est(p: String) =
-        s"""max(CASE WHEN CAST(cum - n AS DOUBLE) < $p * CAST(total AS DOUBLE)
-           |           AND $p * CAST(total AS DOUBLE) <= CAST(cum AS DOUBLE)
-           |         THEN CAST(bin AS DOUBLE) * 50.0
-           |              + 50.0 * ($p * CAST(total AS DOUBLE) - CAST(cum - n AS DOUBLE))
-           |                / CAST(n AS DOUBLE) END)""".stripMargin
-      s"""WITH pts AS ($PTS_SQL),
-         |h AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        CAST(floor(value / 50.0) AS BIGINT) AS bin, count(*) AS n
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3, 4),
-         |c AS (SELECT *,
-         |        sum(n) OVER (PARTITION BY user_id, event_type, w_start
-         |                     ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum,
-         |        sum(n) OVER (PARTITION BY user_id, event_type, w_start) AS total
-         |      FROM h)
-         |SELECT user_id, event_type, w_start, CAST(max(total) AS BIGINT) AS n_points,
-         |       ${Q6(est("0.5"))} AS p50_est,
-         |       ${Q6(est("0.9"))} AS p90_est
-         |FROM c GROUP BY 1, 2, 3
-         |ORDER BY user_id, event_type, w_start""".stripMargin
-    },
-
-    "ts_heatmap" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |       CAST(floor(value / 50.0) AS BIGINT) AS bin,
-         |       CAST(count(*) AS BIGINT) AS n
-         |FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |GROUP BY 1, 2 ORDER BY w_start, bin""".stripMargin,
-
-    // mirrors calendarProfile's pure-integer phase arithmetic: dow/hour
-    // from epoch-µs offsets against the Monday-aligned T0, no calendar fn
-    "ts_calendar" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT user_id, event_type,
-         |       ((t_us - $T0) // $DAY) % 7 AS dow,
-         |       ((t_us - $T0) % $DAY) // $HOUR AS hour,
-         |       CAST(count(*) AS BIGINT) AS n, $V_MEAN_SQL,
-         |       min(value) AS v_min, max(value) AS v_max
-         |FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |GROUP BY 1, 2, 3, 4 ORDER BY user_id, event_type, dow, hour""".stripMargin,
-
-    "ts_counter_rate" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |l AS (SELECT user_id, event_type, t_us, value,
-         |             lag(value) OVER (PARTITION BY user_id, event_type
-         |                              ORDER BY t_us, value) AS prev_v
-         |      FROM pts),
-         |i AS (SELECT user_id, event_type, t_us,
-         |             CASE WHEN prev_v IS NULL THEN NULL
-         |                  WHEN value >= prev_v THEN value - prev_v
-         |                  ELSE value END AS inc
-         |      FROM l WHERE t_us >= $T0 AND t_us < $T29)
-         |SELECT user_id, event_type,
-         |       $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |       CAST(sum(${US6("inc")}) AS DOUBLE) / 1000000.0 + 0 AS increase,
-         |       ${Q6(s"CAST(sum(${US6("inc")}) AS DOUBLE) / 1000000.0 / 86400")} AS rate_per_s,
-         |       CAST(count(inc) AS BIGINT) AS n_samples
-         |FROM i GROUP BY 1, 2, 3 ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    "ts_sessionize" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |l AS (SELECT user_id, event_type, t_us, value, lag(t_us) OVER w AS prev_t
-         |      FROM pts WINDOW w AS (PARTITION BY user_id, event_type ORDER BY t_us, value)),
-         |f AS (SELECT *, CASE WHEN prev_t IS NULL OR t_us - prev_t > ${2 * DAY}
-         |                     THEN 1 ELSE 0 END AS is_new FROM l),
-         |i AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id, event_type
-         |                                  ORDER BY t_us, value
-         |                                  ROWS UNBOUNDED PRECEDING) AS session FROM f)
-         |SELECT user_id, event_type, min(t_us) AS s_start, max(t_us) AS s_end,
-         |       CAST(count(*) AS BIGINT) AS n_events,
-         |       ${MEAN6(s"sum(${US6("value")})", "count(*)")} AS v_mean,
-         |       max(t_us) - min(t_us) AS duration_us
-         |FROM i GROUP BY user_id, event_type, session
-         |ORDER BY user_id, event_type, s_start""".stripMargin,
-
-    // mirrors TimeSeriesOps.intervalJoin's SEMANTICS through a different
-    // plan: the oracle runs the raw range join (DuckDB handles the
-    // inequality directly), the engine the bucketed hash join — row-set
-    // equality proves the bucket cover is exact, boundaries inclusive
-    "ts_interval_join" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |l AS (SELECT user_id, t_us, value, lag(t_us) OVER w AS prev_t
-         |      FROM pts WHERE event_type = 'click'
-         |      WINDOW w AS (PARTITION BY user_id ORDER BY t_us, value)),
-         |f AS (SELECT *, CASE WHEN prev_t IS NULL OR t_us - prev_t > ${2 * DAY}
-         |                     THEN 1 ELSE 0 END AS is_new FROM l),
-         |i AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id
-         |                                  ORDER BY t_us, value
-         |                                  ROWS UNBOUNDED PRECEDING) AS session FROM f),
-         |ses AS (SELECT user_id, min(t_us) AS s_start, max(t_us) AS s_end,
-         |          CAST(count(*) AS BIGINT) AS n_events
-         |        FROM i GROUP BY user_id, session)
-         |SELECT p.user_id, p.t_us, p.value, s.s_start, s.s_end, s.n_events
-         |FROM (SELECT user_id, t_us, value FROM pts WHERE event_type = 'purchase') p
-         |JOIN ses s ON p.user_id = s.user_id
-         |          AND p.t_us BETWEEN s.s_start AND s.s_end
-         |ORDER BY p.user_id, p.t_us, p.value, s.s_start""".stripMargin,
-
-    // first/last tie rule mirrors the (t, value) struct order: first takes
-    // the smaller value at the earliest t, last the larger at the latest
-    "ts_m4" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start, t_us, value
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |x AS (SELECT *,
-         |        min(t_us) OVER (PARTITION BY user_id, event_type, w_start) AS tf,
-         |        max(t_us) OVER (PARTITION BY user_id, event_type, w_start) AS tl
-         |      FROM w)
-         |SELECT user_id, event_type, w_start,
-         |       min(CASE WHEN t_us = tf THEN value END) AS v_first,
-         |       min(value) AS v_min, max(value) AS v_max,
-         |       max(CASE WHEN t_us = tl THEN value END) AS v_last,
-         |       min(t_us) AS t_first, max(t_us) AS t_last,
-         |       CAST(count(*) AS BIGINT) AS v_count
-         |FROM x GROUP BY 1, 2, 3
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    "ts_coverage" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT user_id, event_type,
-         |       CAST(count(DISTINCT $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY)) AS BIGINT)
-         |         AS n_occupied,
-         |       CAST(28 AS BIGINT) AS n_windows,
-         |       ${Q6(s"CAST(count(DISTINCT $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY)) AS DOUBLE) / 28.0")}
-         |         AS coverage
-         |FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin,
-
-    "ts_collection_windows" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT event_type,
-         |       $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |       min(value) AS v_min, $V_MEAN_SQL,
-         |       max(value) AS v_max, CAST(count(*) AS BIGINT) AS v_count
-         |FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |GROUP BY 1, 2 ORDER BY event_type, w_start""".stripMargin,
-
-    "ts_top_streams" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |s AS (SELECT user_id, event_type, min(value) AS v_min, $V_MEAN_SQL,
-         |             max(value) AS v_max, CAST(count(*) AS BIGINT) AS v_count,
-         |             min(t_us) AS t_first, max(t_us) AS t_last
-         |      FROM pts GROUP BY 1, 2)
-         |SELECT * FROM s ORDER BY v_count DESC, user_id, event_type LIMIT 20""".stripMargin,
-
-    "ts_rolling" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |b AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        min(value) AS v_min, max(value) AS v_max,
-         |        sum(${US6("value")}) AS v_sum_us, count(*) AS v_count
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3)
-         |SELECT user_id, event_type, w_start,
-         |       ${MEAN6("v_sum_us", "v_count")} AS v_mean,
-         |       ${MEAN6("sum(v_sum_us) OVER w", "sum(v_count) OVER w")} AS roll_mean,
-         |       min(v_min) OVER w AS roll_min,
-         |       max(v_max) OVER w AS roll_max,
-         |       CAST(count(*) OVER w AS BIGINT) AS n_windows
-         |FROM b
-         |WINDOW w AS (PARTITION BY user_id, event_type ORDER BY w_start
-         |             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    "ts_facets" ->
-      s"""SELECT event_type,
-         |       CAST(json_extract_string(props, '$$.k') AS BIGINT) AS facet,
-         |       CAST(count(*) AS BIGINT) AS n
-         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // bands: the rolling frame over per-window HUGEINT moments; variance
-    // numerator exact, one float expression per band (the stddev rule)
-    "ts_band" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |b AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        sum(${US6("value")}) AS s1,
-         |        sum(CAST(${US6("value")} AS HUGEINT) * ${US6("value")}) AS s2,
-         |        count(*) AS n
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |r AS (SELECT user_id, event_type, w_start,
-         |        sum(CAST(s1 AS HUGEINT)) OVER w AS rs1,
-         |        sum(s2) OVER w AS rs2,
-         |        sum(n) OVER w AS rn
-         |      FROM b
-         |      WINDOW w AS (PARTITION BY user_id, event_type ORDER BY w_start
-         |                   ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-         |SELECT user_id, event_type, w_start,
-         |       ${MEAN6("rs1", "rn")} AS roll_mean,
-         |       ${Q6("(CAST(rs1 AS DOUBLE) / rn - 2.0 * (sqrt(CAST(rn * rs2 - rs1 * rs1 AS DOUBLE)) / rn)) / 1000000.0")} AS band_lo,
-         |       ${Q6("(CAST(rs1 AS DOUBLE) / rn + 2.0 * (sqrt(CAST(rn * rs2 - rs1 * rs1 AS DOUBLE)) / rn)) / 1000000.0")} AS band_hi,
-         |       CAST(rn AS BIGINT) AS n_pts
-         |FROM r ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // mirrors TimeSeriesOps.peaks: rounded-integer window means, full
-    // k-window shoulders on both sides, strict dominance + prominence
-    "ts_peaks" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |m AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS m_us,
-         |        count(*) AS n_points
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |x AS (SELECT *,
-         |        max(m_us) OVER wl AS l_max, max(m_us) OVER wr AS r_max,
-         |        count(*) OVER wl AS l_n, count(*) OVER wr AS r_n
-         |      FROM m
-         |      WINDOW wl AS (PARTITION BY user_id, event_type ORDER BY w_start
-         |                    ROWS BETWEEN 2 PRECEDING AND 1 PRECEDING),
-         |             wr AS (PARTITION BY user_id, event_type ORDER BY w_start
-         |                    ROWS BETWEEN 1 FOLLOWING AND 2 FOLLOWING))
-         |SELECT user_id, event_type, w_start,
-         |       CAST(m_us AS DOUBLE) / 1000000.0 + 0 AS v_mean,
-         |       CAST(m_us - greatest(l_max, r_max) AS DOUBLE) / 1000000.0 + 0 AS prominence,
-         |       CAST(n_points AS BIGINT) AS n_points
-         |FROM x
-         |WHERE l_n = 2 AND r_n = 2 AND m_us > l_max AND m_us > r_max
-         |  AND m_us - greatest(l_max, r_max) >= 5000000
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // mirrors TimeSeriesOps.changePoints: exact µ-unit side sums →
-    // rounded-integer side means, |shift| threshold + half-open apex rule
-    "ts_changepoint" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |b AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        sum(${US6("value")}) AS sum_us, count(*) AS n
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |s AS (SELECT *,
-         |        count(*) OVER wl AS l_cnt, count(*) OVER wr AS r_cnt,
-         |        CAST(round(CAST(sum(sum_us) OVER wl AS DOUBLE) / sum(n) OVER wl, 0) AS BIGINT) AS l_mean_us,
-         |        CAST(round(CAST(sum(sum_us) OVER wr AS DOUBLE) / sum(n) OVER wr, 0) AS BIGINT) AS r_mean_us
-         |      FROM b
-         |      WINDOW wl AS (PARTITION BY user_id, event_type ORDER BY w_start
-         |                    ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING),
-         |             wr AS (PARTITION BY user_id, event_type ORDER BY w_start
-         |                    ROWS BETWEEN CURRENT ROW AND 2 FOLLOWING)),
-         |sc AS (SELECT *,
-         |        CASE WHEN l_cnt = 3 AND r_cnt = 3 THEN abs(r_mean_us - l_mean_us) END AS score,
-         |        lag(CASE WHEN l_cnt = 3 AND r_cnt = 3 THEN abs(r_mean_us - l_mean_us) END)
-         |          OVER wo AS prev_score,
-         |        lead(CASE WHEN l_cnt = 3 AND r_cnt = 3 THEN abs(r_mean_us - l_mean_us) END)
-         |          OVER wo AS next_score
-         |       FROM s
-         |       WINDOW wo AS (PARTITION BY user_id, event_type ORDER BY w_start))
-         |SELECT user_id, event_type, w_start,
-         |       CAST(l_mean_us AS DOUBLE) / 1000000.0 + 0 AS mean_before,
-         |       CAST(r_mean_us AS DOUBLE) / 1000000.0 + 0 AS mean_after,
-         |       CAST(r_mean_us - l_mean_us AS DOUBLE) / 1000000.0 + 0 AS shift
-         |FROM sc
-         |WHERE score IS NOT NULL AND score >= 15000000
-         |  AND (prev_score IS NULL OR score > prev_score)
-         |  AND (next_score IS NULL OR score >= next_score)
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // mirrors TimeSeriesOps.capacityForecast: exact HUGEINT moments per
-    // stream, one shared slope/intercept float assembly, the horizon
-    // guard applied on the raw double BEFORE the BIGINT cast
-    "ts_capacity" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |m AS (SELECT user_id, event_type, count(*) AS n,
-         |        sum(CAST(t_us - $T0 AS HUGEINT)) AS st,
-         |        sum(CAST(${US6("value")} AS HUGEINT)) AS sv,
-         |        sum(CAST(t_us - $T0 AS HUGEINT) * (t_us - $T0)) AS stt,
-         |        sum(CAST(t_us - $T0 AS HUGEINT) * ${US6("value")}) AS stv
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2),
-         |x AS (SELECT *, n * stv - st * sv AS num, n * stt - st * st AS den FROM m),
-         |y AS (SELECT *,
-         |        CAST(num AS DOUBLE) / CAST(den AS DOUBLE) AS slope,
-         |        (CAST(sv AS DOUBLE)
-         |         - CAST(num AS DOUBLE) / CAST(den AS DOUBLE) * CAST(st AS DOUBLE))
-         |          / CAST(n AS DOUBLE) AS icept
-         |      FROM x)
-         |SELECT user_id, event_type, CAST(n AS BIGINT) AS n_points,
-         |       CASE WHEN den > 0 THEN ${Q6("slope")} END AS slope_per_s,
-         |       CASE WHEN den > 0 THEN ${Q6("icept / 1000000.0")} END AS intercept,
-         |       CASE WHEN den > 0 AND slope > 0 AND icept < 60000000.0
-         |             AND (60000000.0 - icept) / slope < 31536000000000.0
-         |            THEN $T0 + CAST(round((60000000.0 - icept) / slope, 0) AS BIGINT)
-         |       END AS t_cross_us
-         |FROM y ORDER BY user_id, event_type""".stripMargin,
-
-    // mirrors TimeSeriesOps.burnRate: widths unnested onto one scan,
-    // per-width complete-window cutoffs, exact counts, two float
-    // divisions replayed in the same order
-    "ts_burnrate" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |e AS (SELECT user_id, event_type, t_us, value, w.width_us AS width_us
-         |      FROM pts, (SELECT unnest([${DAY}, ${WEEK}]) AS width_us) w
-         |      WHERE t_us >= $T0 AND t_us < $T29
-         |        AND t_us < $T0 + (($T29 - $T0) // width_us) * width_us),
-         |g AS (SELECT user_id, event_type, width_us,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % width_us) AS w_start,
-         |        count(*) AS n_events,
-         |        sum(CASE WHEN value > 150 THEN 1 ELSE 0 END) AS n_bad
-         |      FROM e GROUP BY 1, 2, 3, 4)
-         |SELECT user_id, event_type, width_us, w_start,
-         |       CAST(n_events AS BIGINT) AS n_events, CAST(n_bad AS BIGINT) AS n_bad,
-         |       ${Q6("CAST(n_bad AS DOUBLE) / CAST(n_events AS DOUBLE)")} AS bad_frac,
-         |       ${Q6("CAST(n_bad AS DOUBLE) / CAST(n_events AS DOUBLE) / (1.0 - 0.95)")} AS burn
-         |FROM g ORDER BY user_id, event_type, width_us, w_start""".stripMargin,
-
-    // mirrors TimeSeriesOps.savgol: rounded-µ-unit window means, the
-    // (−3,12,17,12,−3)/35 kernel as a long dot + ONE float division,
-    // NULL at incomplete frames (lag/lead NULL propagation)
-    "ts_savgol" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |m AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS m_us,
-         |        count(*) AS n_points
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |x AS (SELECT *,
-         |        lag(m_us, 1) OVER w AS p1, lag(m_us, 2) OVER w AS p2,
-         |        lead(m_us, 1) OVER w AS f1, lead(m_us, 2) OVER w AS f2
-         |      FROM m
-         |      WINDOW w AS (PARTITION BY user_id, event_type ORDER BY w_start))
-         |SELECT user_id, event_type, w_start,
-         |       CAST(m_us AS DOUBLE) / 1000000.0 + 0 AS v_mean,
-         |       CAST(CAST(round(CAST(17 * m_us + 12 * (p1 + f1) - 3 * (p2 + f2) AS DOUBLE) / 35.0, 0) AS BIGINT) AS DOUBLE) / 1000000.0 + 0 AS sg_mean,
-         |       CAST(n_points AS BIGINT) AS n_points
-         |FROM x ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // mirrors TimeSeriesOps.boxplotWindows: raw type-7 quartiles (the
-    // ts_mad pctRaw machinery), float fences, Q6 on emit only
-    "ts_boxplot" -> {
-      def pctRaw(p: String) = {
-        val idx = s"$p * CAST(n - 1 AS DOUBLE)"
-        s"""max(CASE WHEN rn = CAST(floor($idx) AS BIGINT) + 1 THEN value END)
-           | + (max(CASE WHEN rn = CAST(ceil($idx) AS BIGINT) + 1 THEN value END)
-           |    - max(CASE WHEN rn = CAST(floor($idx) AS BIGINT) + 1 THEN value END))
-           |   * max($idx - floor($idx))""".stripMargin
-      }
-      s"""WITH pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $WEEK) AS w_start, t_us, value
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |r AS (SELECT *,
-         |        row_number() OVER (PARTITION BY user_id, event_type, w_start
-         |                           ORDER BY value, t_us) AS rn,
-         |        count(*) OVER (PARTITION BY user_id, event_type, w_start) AS n
-         |      FROM w),
-         |q AS (SELECT user_id, event_type, w_start, count(*) AS n_points,
-         |        ${pctRaw("0.25")} AS q25,
-         |        ${pctRaw("0.5")} AS q50,
-         |        ${pctRaw("0.75")} AS q75
-         |      FROM r GROUP BY 1, 2, 3),
-         |f AS (SELECT *, q25 - 1.5 * (q75 - q25) AS f_lo,
-         |               q75 + 1.5 * (q75 - q25) AS f_hi
-         |      FROM q),
-         |o AS (SELECT w.user_id, w.event_type, w.w_start,
-         |        sum(CASE WHEN value < f_lo THEN 1 ELSE 0 END) AS n_out_lo,
-         |        sum(CASE WHEN value > f_hi THEN 1 ELSE 0 END) AS n_out_hi
-         |      FROM w JOIN f ON w.user_id = f.user_id
-         |        AND w.event_type = f.event_type AND w.w_start = f.w_start
-         |      GROUP BY 1, 2, 3)
-         |SELECT f.user_id, f.event_type, f.w_start,
-         |       CAST(n_points AS BIGINT) AS n_points,
-         |       ${Q6("q25")} AS p25, ${Q6("q50")} AS p50, ${Q6("q75")} AS p75,
-         |       ${Q6("q75 - q25")} AS iqr,
-         |       CAST(n_out_lo AS BIGINT) AS n_out_lo,
-         |       CAST(n_out_hi AS BIGINT) AS n_out_hi
-         |FROM f JOIN o ON f.user_id = o.user_id
-         |  AND f.event_type = o.event_type AND f.w_start = o.w_start
-         |ORDER BY f.user_id, f.event_type, f.w_start""".stripMargin
-    },
-
-    // mirrors TimeSeriesOps.xcorrMatrix: TakeOrdered roster, window
-    // equi-join with the strict lexicographic pair order, exact-HUGEINT
-    // moments, the correlation() float assembly
-    "ts_xcorr_matrix" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |m AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS m_us,
-         |        count(*) AS n
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |tot AS (SELECT user_id, event_type FROM m
-         |        GROUP BY 1, 2 ORDER BY sum(n) DESC, user_id, event_type LIMIT 8),
-         |mm AS (SELECT m.* FROM m JOIN tot USING (user_id, event_type)),
-         |j AS (SELECT a.user_id AS user_id_a, a.event_type AS event_type_a,
-         |             b.user_id AS user_id_b, b.event_type AS event_type_b,
-         |             a.m_us AS x, b.m_us AS y
-         |      FROM mm a JOIN mm b ON a.w_start = b.w_start
-         |        AND (a.user_id < b.user_id
-         |             OR (a.user_id = b.user_id AND a.event_type < b.event_type))),
-         |mo AS (SELECT user_id_a, event_type_a, user_id_b, event_type_b,
-         |             count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         |             sum(CAST(x AS HUGEINT) * x) AS sxx,
-         |             sum(CAST(y AS HUGEINT) * y) AS syy,
-         |             sum(CAST(x AS HUGEINT) * y) AS sxy
-         |      FROM j GROUP BY 1, 2, 3, 4)
-         |SELECT user_id_a, event_type_a, user_id_b, event_type_b,
-         |       CAST(n AS BIGINT) AS n_windows,
-         |       CASE WHEN sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-         |             AND sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-         |            THEN ${Q6(
-             """(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               |                 / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-               |                    * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))""".stripMargin)}
-         |       END AS r
-         |FROM mo ORDER BY user_id_a, event_type_a, user_id_b, event_type_b""".stripMargin,
-
-    "ts_percentile" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $WEEK) AS w_start, t_us, value
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |r AS (SELECT *,
-         |        row_number() OVER (PARTITION BY user_id, event_type, w_start
-         |                           ORDER BY value, t_us) AS rn,
-         |        count(*) OVER (PARTITION BY user_id, event_type, w_start) AS n
-         |      FROM w)
-         |SELECT user_id, event_type, w_start, CAST(count(*) AS BIGINT) AS n_points,
-         |       ${PCT_SQL(0.5)} AS p50,
-         |       ${PCT_SQL(0.95)} AS p95
-         |FROM r GROUP BY 1, 2, 3
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // two rank-lookup median passes (raw doubles between them; Q6 only on
-    // emit) — mirrors TimeSeriesOps.madWindows term-for-term
-    "ts_mad" -> {
-      val idx = "0.5 * CAST(n - 1 AS DOUBLE)"
-      def pctRaw(v: String) =
-        s"""max(CASE WHEN rn = CAST(floor($idx) AS BIGINT) + 1 THEN $v END)
-           | + (max(CASE WHEN rn = CAST(ceil($idx) AS BIGINT) + 1 THEN $v END)
-           |    - max(CASE WHEN rn = CAST(floor($idx) AS BIGINT) + 1 THEN $v END))
-           |   * max($idx - floor($idx))""".stripMargin
-      s"""WITH pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $WEEK) AS w_start, t_us, value
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |r AS (SELECT *,
-         |        row_number() OVER (PARTITION BY user_id, event_type, w_start
-         |                           ORDER BY value, t_us) AS rn,
-         |        count(*) OVER (PARTITION BY user_id, event_type, w_start) AS n
-         |      FROM w),
-         |m AS (SELECT user_id, event_type, w_start, count(*) AS n_points,
-         |             ${pctRaw("value")} AS med
-         |      FROM r GROUP BY 1, 2, 3),
-         |d AS (SELECT w.user_id AS user_id, w.event_type AS event_type,
-         |             w.w_start AS w_start, w.t_us AS t_us,
-         |             abs(w.value - m.med) AS dev, m.med AS med,
-         |             m.n_points AS n_points
-         |      FROM w JOIN m ON w.user_id = m.user_id
-         |             AND w.event_type = m.event_type AND w.w_start = m.w_start),
-         |r2 AS (SELECT *,
-         |         row_number() OVER (PARTITION BY user_id, event_type, w_start
-         |                            ORDER BY dev, t_us) AS rn,
-         |         count(*) OVER (PARTITION BY user_id, event_type, w_start) AS n
-         |       FROM d)
-         |SELECT user_id, event_type, w_start,
-         |       CAST(max(n_points) AS BIGINT) AS n_points,
-         |       ${Q6("max(med)")} AS median,
-         |       ${Q6(pctRaw("dev"))} AS mad
-         |FROM r2 GROUP BY 1, 2, 3
-         |ORDER BY user_id, event_type, w_start""".stripMargin
-    },
-
-    // mirrors TimeSeriesOps.anomalies term-for-term: integer micro-unit
-    // moment sums (HUGEINT ≡ Spark's DECIMAL(38,0)), then the identical
-    // cast → mean → variance → sqrt → z float pipeline (sqrt is IEEE-
-    // correctly-rounded on both engines)
-    "ts_anomaly" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |u AS (SELECT user_id, event_type, t_us, value, ${US6("value")} AS us FROM pts),
-         |st AS (SELECT user_id, event_type, sum(us) AS s1,
-         |              sum(CAST(us AS HUGEINT) * us) AS s2, count(*) AS n
-         |       FROM u GROUP BY 1, 2),
-         |j AS (SELECT u.user_id AS user_id, u.event_type AS event_type,
-         |             u.t_us AS t_us, u.value AS value, u.us AS us,
-         |             CAST(st.s1 AS DOUBLE) / st.n AS mean,
-         |             sqrt(CAST(st.s2 AS DOUBLE) / st.n
-         |                  - (CAST(st.s1 AS DOUBLE) / st.n) * (CAST(st.s1 AS DOUBLE) / st.n)) AS std
-         |      FROM u JOIN st ON u.user_id = st.user_id AND u.event_type = st.event_type)
-         |SELECT user_id, event_type, t_us, value,
-         |       ${Q6("(CAST(us AS DOUBLE) - mean) / std")} AS z_score
-         |FROM j WHERE std > 0 AND abs((CAST(us AS DOUBLE) - mean) / std) >= 2.0
-         |ORDER BY user_id, event_type, t_us, value""".stripMargin,
-
-    // mirrors TimeSeriesOps.normalize: unrounded min/max, one division,
-    // NULL on constant streams
-    "ts_normalize" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |st AS (SELECT user_id, event_type, min(value) AS v_min, max(value) AS v_max
-         |       FROM pts GROUP BY 1, 2)
-         |SELECT p.user_id AS user_id, p.event_type AS event_type,
-         |       p.t_us AS t_us, p.value AS value,
-         |       CASE WHEN v_max > v_min
-         |            THEN ${Q6("(p.value - v_min) / (v_max - v_min)")}
-         |       END AS norm01
-         |FROM pts p JOIN st ON p.user_id = st.user_id AND p.event_type = st.event_type
-         |ORDER BY user_id, event_type, t_us, value""".stripMargin,
-
-    // mirrors TimeSeriesOps.profileDrift: two per-phase profiles, joint
-    // phases only, exact integer differences, one division + sqrt
-    "ts_profile_drift" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |a AS (SELECT user_id, event_type, (t_us // ${6 * HOUR}) % 4 AS phase,
-         |        CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS ma
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T08 GROUP BY 1, 2, 3),
-         |b AS (SELECT user_id, event_type, (t_us // ${6 * HOUR}) % 4 AS phase,
-         |        CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS mb
-         |      FROM pts WHERE t_us >= $T22 AND t_us < $T29 GROUP BY 1, 2, 3),
-         |j AS (SELECT a.user_id AS user_id, a.event_type AS event_type, ma - mb AS d
-         |      FROM a JOIN b ON a.user_id = b.user_id
-         |        AND a.event_type = b.event_type AND a.phase = b.phase)
-         |SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n_phases,
-         |       ${Q6("sqrt(CAST(sum(CAST(d AS HUGEINT) * d) AS DOUBLE) / count(*)) / 1000000.0")} AS drift_rms,
-         |       CAST(max(abs(d)) AS DOUBLE) / 1000000.0 + 0 AS max_shift
-         |FROM j GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin,
-
-    // mirrors TimeSeriesOps.anomaliesSeasonal: per-(stream, hour-phase)
-    // streamStats moments, minN guard, identical float assembly
-    "ts_anomaly_seasonal" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |u AS (SELECT user_id, event_type, t_us,
-         |             (t_us // ${6 * HOUR}) % 4 AS phase, value, ${US6("value")} AS us
-         |      FROM pts),
-         |st AS (SELECT user_id, event_type, phase, sum(us) AS s1,
-         |              sum(CAST(us AS HUGEINT) * us) AS s2, count(*) AS n
-         |       FROM u GROUP BY 1, 2, 3),
-         |j AS (SELECT u.user_id AS user_id, u.event_type AS event_type,
-         |             u.t_us AS t_us, u.phase AS phase, u.value AS value, u.us AS us,
-         |             st.n AS n, CAST(st.s1 AS DOUBLE) / st.n AS mean,
-         |             sqrt(CAST(st.s2 AS DOUBLE) / st.n
-         |                  - (CAST(st.s1 AS DOUBLE) / st.n) * (CAST(st.s1 AS DOUBLE) / st.n)) AS std
-         |      FROM u JOIN st ON u.user_id = st.user_id
-         |        AND u.event_type = st.event_type AND u.phase = st.phase)
-         |SELECT user_id, event_type, t_us, phase, value,
-         |       ${Q6("(CAST(us AS DOUBLE) - mean) / std")} AS z_score
-         |FROM j WHERE n >= 2 AND std > 0
-         |  AND abs((CAST(us AS DOUBLE) - mean) / std) >= 2.0
-         |ORDER BY user_id, event_type, t_us, value""".stripMargin,
-
-    // mirrors TimeSeriesOps.correlation: exact integer µ-unit window means,
-    // exact HUGEINT moment sums, one deterministic float assembly of r
-    "ts_correlation" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |x AS (SELECT user_id, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS x
-         |      FROM pts WHERE event_type = 'click' AND t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2),
-         |y AS (SELECT user_id, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS y
-         |      FROM pts WHERE event_type = 'view' AND t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2),
-         |j AS (SELECT x.user_id AS user_id, x.x AS x, y.y AS y
-         |      FROM x JOIN y ON x.user_id = y.user_id AND x.w_start = y.w_start),
-         |m AS (SELECT user_id, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         |             sum(CAST(x AS HUGEINT) * x) AS sxx,
-         |             sum(CAST(y AS HUGEINT) * y) AS syy,
-         |             sum(CAST(x AS HUGEINT) * y) AS sxy
-         |      FROM j GROUP BY 1)
-         |SELECT user_id, CAST(n AS BIGINT) AS n_windows,
-         |       CASE WHEN sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-         |             AND sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-         |            THEN ${Q6(
-             """(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               |                 / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-               |                    * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))""".stripMargin)}
-         |       END AS r
-         |FROM m ORDER BY user_id""".stripMargin,
-
-    // mirrors TimeSeriesOps.decompose: exact integer frame sums, the
-    // seasonal mean expanded over integer sums, Q6 on emit only
-    "ts_decompose" ->
-      s"""$DECOMP7_SQL
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // mirrors TimeSeriesOps.seasonalStrength: the decompose frame as a
-    // CTE, exact HUGEINT component moments, the two ratio divisions
-    "ts_seasonal_strength" -> {
-      def mom(x: String, s: String, ss: String) =
-        s"sum(${US6(x)}) AS $s, sum(CAST(${US6(x)} AS HUGEINT) * ${US6(x)}) AS $ss"
-      def strength(sv: String, ssv: String) =
-        s"""CASE WHEN n * $ssv - $sv * $sv > 0
-           |     THEN ${Q6(s"greatest(0.0, 1.0 - CAST(n * srr - sr * sr AS DOUBLE) / CAST(n * $ssv - $sv * $sv AS DOUBLE))")}
-           |END""".stripMargin
-      s"""WITH dc AS ($DECOMP7_SQL),
-         |m AS (SELECT user_id, event_type, count(*) AS n,
-         |        ${mom("residual", "sr", "srr")},
-         |        ${mom("residual + seasonal", "sd", "sdd")},
-         |        ${mom("residual + trend", "st", "stt")}
-         |      FROM dc GROUP BY 1, 2)
-         |SELECT user_id, event_type, CAST(n AS BIGINT) AS n_windows,
-         |       ${strength("sd", "sdd")} AS seasonal_strength,
-         |       ${strength("st", "stt")} AS trend_strength
-         |FROM m ORDER BY user_id, event_type""".stripMargin
-    },
-
-    // even period: 2xMA — frame of period+1 windows, half weights at the
-    // edges, folded into the exact integer s2 = 2*sum - first - last
-    "ts_decompose_even" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type,
-         |             $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS m_us
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |fr AS (SELECT *, sum(m_us) OVER wfr AS s_f, count(*) OVER wfr AS n_f,
-         |              first_value(m_us) OVER wfr AS m_lo, last_value(m_us) OVER wfr AS m_hi
-         |       FROM w WINDOW wfr AS (PARTITION BY user_id, event_type ORDER BY w_start
-         |                             ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)),
-         |ff AS (SELECT *, 2 * s_f - m_lo - m_hi AS s2,
-         |              ((w_start - $T0) // $DAY) % 4 AS pos FROM fr WHERE n_f = 5),
-         |se AS (SELECT user_id, event_type, pos,
-         |              CAST(sum(m_us) AS DOUBLE) / count(*)
-         |                - CAST(sum(s2) AS DOUBLE) / (count(*) * 8) AS seasonal_raw
-         |       FROM ff GROUP BY 1, 2, 3)
-         |SELECT ff.user_id AS user_id, ff.event_type AS event_type, ff.w_start AS w_start,
-         |       ${Q6("CAST(ff.m_us AS DOUBLE) / 1e6")} AS v_mean,
-         |       ${Q6("CAST(ff.s2 AS DOUBLE) / 8 / 1e6")} AS trend,
-         |       ${Q6("se.seasonal_raw / 1e6")} AS seasonal,
-         |       ${Q6("(CAST(ff.m_us AS DOUBLE) - CAST(ff.s2 AS DOUBLE) / 8 - se.seasonal_raw) / 1e6")}
-         |         AS residual
-         |FROM ff JOIN se ON ff.user_id = se.user_id AND ff.event_type = se.event_type
-         |                AND ff.pos = se.pos
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    "ts_lag_corr" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |x AS (SELECT user_id, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS x
-         |      FROM pts WHERE event_type = 'click' AND t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2),
-         |y AS (SELECT user_id, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS y
-         |      FROM pts WHERE event_type = 'view' AND t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2),
-         |l AS (SELECT unnest([${-2 * DAY}, ${-DAY}, 0, $DAY, ${2 * DAY}]) AS lag),
-         |j AS (SELECT x.user_id AS user_id, l.lag AS lag, x.x AS x, y.y AS y
-         |      FROM x CROSS JOIN l
-         |      JOIN y ON x.user_id = y.user_id AND y.w_start = x.w_start - l.lag),
-         |m AS (SELECT user_id, lag, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         |             sum(CAST(x AS HUGEINT) * x) AS sxx,
-         |             sum(CAST(y AS HUGEINT) * y) AS syy,
-         |             sum(CAST(x AS HUGEINT) * y) AS sxy
-         |      FROM j GROUP BY 1, 2)
-         |SELECT user_id, CAST(lag AS BIGINT) AS lag, CAST(n AS BIGINT) AS n_windows,
-         |       CASE WHEN sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-         |             AND sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-         |            THEN ${Q6(
-             """(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               |                 / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-               |                    * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))""".stripMargin)}
-         |       END AS r
-         |FROM m ORDER BY user_id, lag""".stripMargin,
-
-    // fractional lags: y re-bucketed per lag phase on the shifted grid
-    "ts_lag_corr_frac" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |x AS (SELECT user_id, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS x
-         |      FROM pts WHERE event_type = 'click' AND t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2),
-         |l AS (SELECT unnest([${-DAY / 2}, 0, ${DAY / 2}]) AS lag),
-         |lp AS (SELECT lag, ((lag % $DAY) + $DAY) % $DAY AS phase FROM l),
-         |y AS (SELECT user_id, p.phase AS phase,
-         |             t_us - ((t_us - ($T0 - p.phase)) % $DAY) AS y_w,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS y
-         |      FROM pts CROSS JOIN (SELECT DISTINCT phase FROM lp) p
-         |      WHERE event_type = 'view' AND t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |j AS (SELECT x.user_id AS user_id, lp.lag AS lag, x.x AS x, y.y AS y
-         |      FROM x CROSS JOIN lp
-         |      JOIN y ON x.user_id = y.user_id AND y.phase = lp.phase
-         |             AND y.y_w = x.w_start - lp.lag),
-         |m AS (SELECT user_id, lag, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         |             sum(CAST(x AS HUGEINT) * x) AS sxx,
-         |             sum(CAST(y AS HUGEINT) * y) AS syy,
-         |             sum(CAST(x AS HUGEINT) * y) AS sxy
-         |      FROM j GROUP BY 1, 2)
-         |SELECT user_id, CAST(lag AS BIGINT) AS lag, CAST(n AS BIGINT) AS n_windows,
-         |       CASE WHEN sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-         |             AND sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-         |            THEN ${Q6(
-             """(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               |                 / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-               |                    * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))""".stripMargin)}
-         |       END AS r
-         |FROM m ORDER BY user_id, lag""".stripMargin,
-
-    // ACF: the lag_corr moment pipeline with y ≡ x (per-stream self-join)
-    "ts_autocorr" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |x AS (SELECT user_id, event_type,
-         |             $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS x
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |l AS (SELECT unnest([0, $DAY, ${2 * DAY}, ${3 * DAY}, ${7 * DAY}]) AS lag),
-         |j AS (SELECT a.user_id AS user_id, a.event_type AS event_type,
-         |             l.lag AS lag, a.x AS x, b.x AS y
-         |      FROM x a CROSS JOIN l
-         |      JOIN x b ON a.user_id = b.user_id AND a.event_type = b.event_type
-         |              AND b.w_start = a.w_start - l.lag),
-         |m AS (SELECT user_id, event_type, lag, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         |             sum(CAST(x AS HUGEINT) * x) AS sxx,
-         |             sum(CAST(y AS HUGEINT) * y) AS syy,
-         |             sum(CAST(x AS HUGEINT) * y) AS sxy
-         |      FROM j GROUP BY 1, 2, 3)
-         |SELECT user_id, event_type, CAST(lag AS BIGINT) AS lag,
-         |       CAST(n AS BIGINT) AS n_windows,
-         |       CASE WHEN sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-         |             AND sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-         |            THEN ${Q6(
-             """(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               |                 / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-               |                    * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))""".stripMargin)}
-         |       END AS r
-         |FROM m ORDER BY user_id, event_type, lag""".stripMargin,
-
-    // mirrors TimeSeriesOps.transitions: (t_us, event_type)-ordered lag
-    // within (user, day) groups, MEAN6 row probabilities
-    "ts_transitions" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type, t_us,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |l AS (SELECT event_type AS to_type,
-         |        lag(event_type, 1) OVER (PARTITION BY user_id, w_start
-         |                                 ORDER BY t_us, event_type) AS from_type
-         |      FROM w),
-         |c AS (SELECT from_type, to_type, count(*) AS n
-         |      FROM l WHERE from_type IS NOT NULL GROUP BY 1, 2)
-         |SELECT from_type, to_type, CAST(n AS BIGINT) AS n,
-         |       ${MEAN6("n * 1000000", "sum(n) OVER (PARTITION BY from_type)")} AS prob
-         |FROM c ORDER BY from_type, to_type""".stripMargin,
-
-    // mirrors TimeSeriesOps.transitionDwell: the transitions pairing
-    // with the µs gap carried through, exact min/max + quantized mean
-    "ts_dwell" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |w AS (SELECT user_id, event_type, t_us,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |l AS (SELECT event_type AS to_type,
-         |        lag(event_type, 1) OVER wo AS from_type,
-         |        t_us - lag(t_us, 1) OVER wo AS dwell_us
-         |      FROM w WINDOW wo AS (PARTITION BY user_id, w_start
-         |                           ORDER BY t_us, event_type))
-         |SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n,
-         |       CAST(min(dwell_us) AS BIGINT) AS min_us,
-         |       CAST(max(dwell_us) AS BIGINT) AS max_us,
-         |       round(CAST(sum(dwell_us) AS DOUBLE) / count(*), 0) + 0 AS mean_us
-         |FROM l WHERE from_type IS NOT NULL
-         |GROUP BY 1, 2 ORDER BY from_type, to_type""".stripMargin,
-
-    // mirrors TimeSeriesOps.activeUsers: the same k-fan explode and
-    // double distinct; right join (trailing ⊇ daily), dau 0 coalesced
-    "ts_active_users" -> {
-      val lastW = T29 - DAY
-      s"""WITH pts AS ($PTS_SQL),
-         |acts AS (SELECT DISTINCT user_id,
-         |           $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start
-         |         FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |dau AS (SELECT w_start, count(*) AS active FROM acts GROUP BY 1),
-         |fan AS (SELECT DISTINCT user_id, w_to FROM acts,
-         |          unnest(generate_series(w_start, least(w_start + ${6L * DAY}, $lastW),
-         |                                 $DAY)) AS t(w_to)),
-         |wau AS (SELECT w_to AS w_start, count(*) AS active_trailing
-         |        FROM fan GROUP BY 1)
-         |SELECT wau.w_start AS w_start, coalesce(dau.active, 0) AS active,
-         |       wau.active_trailing AS active_trailing
-         |FROM wau LEFT JOIN dau ON wau.w_start = dau.w_start
-         |ORDER BY w_start""".stripMargin
-    },
-
-    // mirrors TimeSeriesOps.retention: distinct (user, window) activity,
-    // min-window cohorts, exact triangle counts
-    "ts_retention" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |acts AS (SELECT DISTINCT user_id,
-         |           $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start
-         |         FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |coh AS (SELECT user_id, min(w_start) AS cohort_w FROM acts GROUP BY 1)
-         |SELECT coh.cohort_w AS cohort_w,
-         |       (acts.w_start - coh.cohort_w) // $DAY AS k,
-         |       CAST(count(*) AS BIGINT) AS n_active
-         |FROM acts JOIN coh USING (user_id)
-         |GROUP BY 1, 2 ORDER BY cohort_w, k""".stripMargin,
-
-    // mirrors TimeSeriesOps.burstiness: W·Σn²−(Σn)² over W·Σn, exact
-    // integer assembly (empty windows contribute zero to both sums)
-    "ts_burstiness" -> {
-      val w = (T29 - T0) / HOUR
-      s"""WITH pts AS ($PTS_SQL),
-         |c AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $HOUR) AS w_start,
-         |        count(*) AS n
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |a AS (SELECT user_id, event_type, count(*) AS nw, sum(n) AS sn,
-         |             sum(CAST(n AS HUGEINT) * n) AS sn2
-         |      FROM c GROUP BY 1, 2)
-         |SELECT user_id, event_type,
-         |       CAST(nw AS BIGINT) AS n_windows_nonempty,
-         |       CAST(sn AS BIGINT) AS n_events,
-         |       ${Q6(s"CAST($w * sn2 - CAST(sn AS HUGEINT) * sn AS DOUBLE) / CAST($w * CAST(sn AS HUGEINT) AS DOUBLE)")} AS fano,
-         |       ${MEAN6(s"sn * CAST(1000000 AS HUGEINT)", s"$w")} AS mean_per_window
-         |FROM a ORDER BY user_id, event_type""".stripMargin
-    },
-
-    // mirrors TimeSeriesOps.ordinalPatterns: same rounded-integer means,
-    // two leads, the same 6-way CASE over the three ≤-comparisons
-    "ts_ordpatterns" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |m AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS a
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |t AS (SELECT user_id, event_type, a,
-         |        lead(a, 1) OVER wo AS b, lead(a, 2) OVER wo AS c
-         |      FROM m
-         |      WINDOW wo AS (PARTITION BY user_id, event_type ORDER BY w_start)),
-         |p AS (SELECT user_id, event_type,
-         |        CASE WHEN a <= b AND a <= c AND b <= c THEN '012'
-         |             WHEN a <= b AND a <= c AND NOT b <= c THEN '021'
-         |             WHEN a <= b AND NOT a <= c THEN '201'
-         |             WHEN NOT a <= b AND a <= c THEN '102'
-         |             WHEN NOT a <= b AND NOT a <= c AND b <= c THEN '120'
-         |             ELSE '210' END AS pattern
-         |      FROM t WHERE b IS NOT NULL AND c IS NOT NULL)
-         |SELECT user_id, event_type, pattern, CAST(count(*) AS BIGINT) AS n
-         |FROM p GROUP BY 1, 2, 3
-         |ORDER BY user_id, event_type, pattern""".stripMargin,
-
-    // mirrors TimeSeriesOps.pacf: the ts_autocorr moment pipeline at lags
-    // {1,2,3}·DAY, pivoted, then the SAME unrolled Durbin–Levinson DAG
-    // over the Q6'd r values — identical doubles term for term
-    "ts_pacf" -> {
-      val rSql = Q6(
-        """(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-          |                 / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-          |                    * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))""".stripMargin)
-      s"""WITH pts AS ($PTS_SQL),
-         |x AS (SELECT user_id, event_type,
-         |             $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS x
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |l AS (SELECT unnest([$DAY, ${2 * DAY}, ${3 * DAY}]) AS lag),
-         |j AS (SELECT a.user_id AS user_id, a.event_type AS event_type,
-         |             l.lag AS lag, a.x AS x, b.x AS y
-         |      FROM x a CROSS JOIN l
-         |      JOIN x b ON a.user_id = b.user_id AND a.event_type = b.event_type
-         |              AND b.w_start = a.w_start - l.lag),
-         |m AS (SELECT user_id, event_type, lag, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         |             sum(CAST(x AS HUGEINT) * x) AS sxx,
-         |             sum(CAST(y AS HUGEINT) * y) AS syy,
-         |             sum(CAST(x AS HUGEINT) * y) AS sxy
-         |      FROM j GROUP BY 1, 2, 3),
-         |acf AS (SELECT user_id, event_type, lag,
-         |       CASE WHEN sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-         |             AND sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-         |            THEN $rSql
-         |       END AS r
-         |      FROM m),
-         |p AS (SELECT user_id, event_type,
-         |        max(CASE WHEN lag = $DAY THEN r END) AS r1,
-         |        max(CASE WHEN lag = ${2 * DAY} THEN r END) AS r2,
-         |        max(CASE WHEN lag = ${3 * DAY} THEN r END) AS r3
-         |      FROM acf GROUP BY 1, 2),
-         |d AS (SELECT *,
-         |        (1 - r1 * r1) AS e1,
-         |        ((r2 - r1 * r1) / (1 - r1 * r1)) AS phi22
-         |      FROM p),
-         |e AS (SELECT *,
-         |        (r1 - phi22 * r1) AS phi21,
-         |        ((1 - r1 * r1) * (1 - phi22 * phi22)) AS e2
-         |      FROM d)
-         |SELECT user_id, event_type, r1, r2, r3,
-         |       r1 AS pacf1,
-         |       CASE WHEN e1 > 0 THEN ${Q6("phi22")} END AS pacf2,
-         |       CASE WHEN e1 > 0 AND e2 > 0
-         |            THEN ${Q6("(r3 - phi21 * r2 - phi22 * r1) / e2")} END AS pacf3
-         |FROM e ORDER BY user_id, event_type""".stripMargin
-    },
-
-    "ts_windowed_corr" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |x AS (SELECT user_id, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS x
-         |      FROM pts WHERE event_type = 'click' AND t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2),
-         |y AS (SELECT user_id, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS y
-         |      FROM pts WHERE event_type = 'view' AND t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2),
-         |j AS (SELECT x.user_id AS user_id, x.w_start AS w_start, x.x AS x, y.y AS y
-         |      FROM x JOIN y ON x.user_id = y.user_id AND x.w_start = y.w_start),
-         |m AS (SELECT user_id,
-         |             $T0 + (w_start - $T0) - ((w_start - $T0) % $WEEK) AS c_start,
-         |             count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         |             sum(CAST(x AS HUGEINT) * x) AS sxx,
-         |             sum(CAST(y AS HUGEINT) * y) AS syy,
-         |             sum(CAST(x AS HUGEINT) * y) AS sxy
-         |      FROM j GROUP BY 1, 2)
-         |SELECT user_id, c_start, CAST(n AS BIGINT) AS n_windows,
-         |       CASE WHEN sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-         |             AND sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-         |            THEN ${Q6(
-             """(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               |                 / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-               |                    * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))""".stripMargin)}
-         |       END AS r
-         |FROM m ORDER BY user_id, c_start""".stripMargin,
-
-    "ts_similar" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |m AS (SELECT user_id, event_type,
-         |             $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS v
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3),
-         |q AS (SELECT w_start, v AS q FROM m
-         |      WHERE user_id = 7 AND event_type = 'click'),
-         |j AS (SELECT m.user_id AS user_id, m.event_type AS event_type,
-         |             m.v AS x, q.q AS y
-         |      FROM m JOIN q ON m.w_start = q.w_start
-         |      WHERE NOT (m.user_id = 7 AND m.event_type = 'click')),
-         |mm AS (SELECT user_id, event_type, count(*) AS n,
-         |              sum(x) AS sx, sum(y) AS sy,
-         |              sum(CAST(x AS HUGEINT) * x) AS sxx,
-         |              sum(CAST(y AS HUGEINT) * y) AS syy,
-         |              sum(CAST(x AS HUGEINT) * y) AS sxy
-         |       FROM j GROUP BY 1, 2),
-         |s AS (SELECT user_id, event_type, CAST(n AS BIGINT) AS n_windows,
-         |       CASE WHEN sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-         |             AND sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-         |            THEN ${Q6(
-             """(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               |                 / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-               |                    * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))""".stripMargin)}
-         |       END AS r
-         |       FROM mm)
-         |SELECT user_id, event_type, n_windows, r,
-         |       CAST(row_number() OVER (ORDER BY r DESC, user_id, event_type)
-         |            AS BIGINT) AS rank
-         |FROM s WHERE r IS NOT NULL
-         |ORDER BY rank LIMIT 10""".stripMargin,
-
-    "ts_seasonal" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT event_type, (t_us // $HOUR) % 24 AS pos,
-         |       min(value) AS v_min,
-         |       ${MEAN6(s"sum(${US6("value")})", "count(*)")} AS v_mean,
-         |       max(value) AS v_max, CAST(count(*) AS BIGINT) AS v_count
-         |FROM pts GROUP BY 1, 2 ORDER BY event_type, pos""".stripMargin,
-
-    // mirrors TimeSeriesOps.timeWeighted: dedupe equal timestamps to
-    // max(value), HUGEINT ≡ DECIMAL(38,0) products of µ-unit values × µs
-    // durations, one identical float assembly at the end
-    "ts_twa" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |d AS (SELECT user_id, event_type, t_us, max(value) AS value
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29 GROUP BY 1, 2, 3),
-         |l AS (SELECT *, lead(t_us) OVER (PARTITION BY user_id, event_type
-         |                                 ORDER BY t_us) AS next_t FROM d)
-         |SELECT user_id, event_type, min(t_us) AS t_first, max(t_us) AS t_last,
-         |       CAST(count(next_t) AS BIGINT) AS n_segments,
-         |       CASE WHEN sum(CASE WHEN next_t IS NOT NULL THEN next_t - t_us END) > 0
-         |            THEN ${Q6("CAST(sum(CASE WHEN next_t IS NOT NULL THEN CAST(" +
-                US6("value") + " AS HUGEINT) * (next_t - t_us) END) AS DOUBLE)" +
-                " / CAST(sum(CASE WHEN next_t IS NOT NULL THEN next_t - t_us END) AS DOUBLE)" +
-                " / 1000000.0")}
-         |       END AS twa
-         |FROM l GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin,
-
-    // mirrors TimeSeriesOps.multiResolution: the week level re-aggregates
-    // the day level's exact integer sums — the oracle proves fine ≡ coarse
-    "ts_multires" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |b AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        min(value) AS v_min, max(value) AS v_max,
-         |        sum(${US6("value")}) AS v_sum_us, count(*) AS v_count
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2, 3)
-         |SELECT user_id, event_type, CAST($DAY AS BIGINT) AS w_width, w_start,
-         |       v_min, ${MEAN6("v_sum_us", "v_count")} AS v_mean, v_max,
-         |       CAST(v_count AS BIGINT) AS v_count
-         |FROM b
-         |UNION ALL
-         |SELECT user_id, event_type, CAST($WEEK AS BIGINT) AS w_width,
-         |       $T0 + (w_start - $T0) - ((w_start - $T0) % $WEEK) AS w_start,
-         |       min(v_min), ${MEAN6("sum(v_sum_us)", "sum(v_count)")}, max(v_max),
-         |       CAST(sum(v_count) AS BIGINT)
-         |FROM b GROUP BY 1, 2, 3, 4
-         |ORDER BY w_width, user_id, event_type, w_start""".stripMargin,
-
-    "ts_cardinality" ->
-      s"""WITH pts AS ($PTS_SQL)
-         |SELECT event_type, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_streams,
-         |       CAST(count(*) AS BIGINT) AS n_points
-         |FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |GROUP BY 1, 2 ORDER BY event_type, w_start""".stripMargin,
-
-    "ts_topk_windows" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |c AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        count(*) AS n
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29 GROUP BY 1, 2, 3),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY w_start
-         |             ORDER BY n DESC, user_id, event_type) AS rnk FROM c)
-         |SELECT user_id, event_type, w_start, CAST(n AS BIGINT) AS n_points,
-         |       CAST(rnk AS BIGINT) AS rnk
-         |FROM r WHERE rnk <= 3 ORDER BY w_start, rnk""".stripMargin,
-
-    // mirrors TimeSeriesOps.valueRuns: same max(value) timestamp collapse,
-    // same gaps-and-islands on value change
-    // mirrors TimeSeriesOps.loadGini: ascending (volume, key) ranks,
-    // exact Σ(2i−n−1)x numerator, two float ratios
-    "ts_load_gini" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |c AS (SELECT user_id, event_type, count(*) AS x FROM pts GROUP BY 1, 2),
-         |r AS (SELECT *, row_number() OVER (ORDER BY x, user_id, event_type) AS rnk,
-         |             count(*) OVER () AS n, sum(x) OVER () AS total
-         |      FROM c)
-         |SELECT CAST(max(n) AS BIGINT) AS n_streams,
-         |       CAST(max(total) AS BIGINT) AS total_points,
-         |       ${Q6("CAST(sum((2 * rnk - n - 1) * CAST(x AS HUGEINT)) AS DOUBLE) / (CAST(max(n) AS DOUBLE) * CAST(max(total) AS DOUBLE))")} AS gini,
-         |       ${Q6("CAST(max(x) AS DOUBLE) / CAST(max(total) AS DOUBLE)")} AS max_share
-         |FROM r""".stripMargin,
-
-    // mirrors TimeSeriesOps.compressibility: the value-runs CTE rolled
-    // up per stream, one float ratio
-    "ts_compressibility" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |d AS (SELECT user_id, event_type, t_us, max(value) AS value
-         |      FROM pts GROUP BY 1, 2, 3),
-         |l AS (SELECT *, lag(value) OVER (PARTITION BY user_id, event_type
-         |                                 ORDER BY t_us) AS prev_v FROM d),
-         |f AS (SELECT *, CASE WHEN prev_v IS NULL OR value <> prev_v
-         |                     THEN 1 ELSE 0 END AS is_new FROM l),
-         |i AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id, event_type
-         |                                  ORDER BY t_us
-         |                                  ROWS UNBOUNDED PRECEDING) AS run FROM f),
-         |r AS (SELECT user_id, event_type, run, count(*) AS rn
-         |      FROM i GROUP BY 1, 2, 3)
-         |SELECT user_id, event_type, CAST(sum(rn) AS BIGINT) AS n_points,
-         |       CAST(count(*) AS BIGINT) AS n_runs,
-         |       CAST(max(rn) AS BIGINT) AS longest_run,
-         |       ${Q6("CAST(count(*) AS DOUBLE) / CAST(sum(rn) AS DOUBLE)")} AS run_ratio
-         |FROM r GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin,
-
-    "ts_value_runs" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |d AS (SELECT user_id, event_type, t_us, max(value) AS value
-         |      FROM pts GROUP BY 1, 2, 3),
-         |l AS (SELECT *, lag(value) OVER (PARTITION BY user_id, event_type
-         |                                 ORDER BY t_us) AS prev_v FROM d),
-         |f AS (SELECT *, CASE WHEN prev_v IS NULL OR value <> prev_v
-         |                     THEN 1 ELSE 0 END AS is_new FROM l),
-         |i AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id, event_type
-         |                                  ORDER BY t_us
-         |                                  ROWS UNBOUNDED PRECEDING) AS run FROM f)
-         |SELECT user_id, event_type, min(t_us) AS r_start, max(t_us) AS r_end,
-         |       min(value) AS value, CAST(count(*) AS BIGINT) AS n_points
-         |FROM i GROUP BY user_id, event_type, run
-         |ORDER BY user_id, event_type, r_start""".stripMargin,
-
-    // population stddev via the EXACT integer variance numerator
-    // D = n·Σx² − (Σx)² (only the final exact integer is cast to double —
-    // see the HUGEINT→DOUBLE one-ulp note on TimeSeriesOps.stddevWindows)
-    "ts_stddev" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |u AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        ${US6("value")} AS us
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |m AS (SELECT user_id, event_type, w_start,
-         |        sum(us) AS s1, sum(CAST(us AS HUGEINT) * us) AS s2, count(*) AS n
-         |      FROM u GROUP BY 1, 2, 3)
-         |SELECT user_id, event_type, w_start,
-         |       ${MEAN6("s1", "n")} AS v_mean,
-         |       ${Q6("sqrt(CAST(n * s2 - CAST(s1 AS HUGEINT) * s1 AS DOUBLE)) / n / 1000000.0")} AS v_stddev,
-         |       CAST(n AS BIGINT) AS v_count
-         |FROM m ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // least-squares slope from exact integer moments; tr = offset within
-    // the window keeps magnitudes bounded (products still need HUGEINT)
-    "ts_deriv" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |u AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        (t_us - $T0) % $DAY AS tr, ${US6("value")} AS vu
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-         |m AS (SELECT user_id, event_type, w_start, count(*) AS n,
-         |        sum(tr) AS st, sum(vu) AS sv,
-         |        sum(CAST(tr AS HUGEINT) * tr) AS stt,
-         |        sum(CAST(tr AS HUGEINT) * vu) AS stv
-         |      FROM u GROUP BY 1, 2, 3)
-         |SELECT user_id, event_type, w_start, CAST(n AS BIGINT) AS n_points,
-         |       CASE WHEN n * stt - CAST(st AS HUGEINT) * st > 0
-         |            THEN ${Q6("CAST(n * stv - CAST(st AS HUGEINT) * sv AS DOUBLE) / CAST(n * stt - CAST(st AS HUGEINT) * st AS DOUBLE)")}
-         |       END AS slope_per_s
-         |FROM m ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // rounded-integer window means, exact integer difference, one scale-0
-    // round for the percent ratio (the graft.Quant-portable form)
-    "ts_wow" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |m AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS m_us
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29 GROUP BY 1, 2, 3)
-         |SELECT c.user_id AS user_id, c.event_type AS event_type, c.w_start AS w_start,
-         |       CAST(c.m_us AS DOUBLE) / 1000000.0 + 0 AS v_mean,
-         |       CAST(p.m_us AS DOUBLE) / 1000000.0 + 0 AS prev_mean,
-         |       CAST(c.m_us - p.m_us AS DOUBLE) / 1000000.0 + 0 AS diff,
-         |       CASE WHEN p.m_us <> 0
-         |            THEN round(CAST(c.m_us - p.m_us AS DOUBLE) * 100000000.0 / p.m_us, 0) / 1000000.0 + 0
-         |       END AS pct_change
-         |FROM m c JOIN m p ON c.user_id = p.user_id AND c.event_type = p.event_type
-         |  AND c.w_start = p.w_start + $WEEK
-         |ORDER BY user_id, event_type, w_start""".stripMargin,
-
-    // mirrors TimeSeriesOps.topPaths: (t, type)-ordered capped path per
-    // (user, day), census + deterministic top-20
-    "ts_paths" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |p AS (SELECT user_id, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        array_to_string(list_slice(
-         |          list(event_type ORDER BY t_us, event_type), 1, 6), '>') AS path
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2),
-         |c AS (SELECT path, count(*) AS n_sessions FROM p GROUP BY 1),
-         |r AS (SELECT *, row_number() OVER (ORDER BY n_sessions DESC, path) AS rank
-         |      FROM c)
-         |SELECT CAST(rank AS BIGINT) AS rank, path,
-         |       CAST(n_sessions AS BIGINT) AS n_sessions
-         |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin,
-
-    // mirrors TimeSeriesOps.funnelSteps: per-step first-occurrence joins,
-    // |steps|-row report with quantized integer rates
-    "ts_funnel_steps" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |u1 AS (SELECT user_id, min(t_us) AS t1 FROM pts
-         |       WHERE event_type = 'click' AND t_us >= $T0 AND t_us < $T29
-         |       GROUP BY 1),
-         |u2 AS (SELECT p.user_id, min(p.t_us) AS t2
-         |       FROM pts p JOIN u1 ON p.user_id = u1.user_id
-         |       WHERE p.event_type = 'view' AND p.t_us >= $T0 AND p.t_us < $T29
-         |         AND p.t_us >= u1.t1 AND p.t_us <= u1.t1 + ${3 * DAY}
-         |       GROUP BY 1),
-         |u3 AS (SELECT p.user_id, min(p.t_us) AS t3
-         |       FROM pts p JOIN u2 ON p.user_id = u2.user_id
-         |       WHERE p.event_type = 'purchase' AND p.t_us >= $T0 AND p.t_us < $T29
-         |         AND p.t_us >= u2.t2 AND p.t_us <= u2.t2 + ${3 * DAY}
-         |       GROUP BY 1),
-         |r AS (SELECT 1 AS step, 'click' AS event_type, (SELECT count(*) FROM u1) AS n_users
-         |      UNION ALL SELECT 2, 'view', (SELECT count(*) FROM u2)
-         |      UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM u3)),
-         |x AS (SELECT *, lag(n_users) OVER (ORDER BY step) AS n_prev,
-         |             first_value(n_users) OVER (ORDER BY step
-         |               ROWS UNBOUNDED PRECEDING) AS n_first
-         |      FROM r)
-         |SELECT CAST(step AS BIGINT) AS step, event_type,
-         |       CAST(n_users AS BIGINT) AS n_users,
-         |       CASE WHEN n_prev > 0
-         |            THEN ${MEAN6("CAST(n_users AS BIGINT) * 1000000", "n_prev")}
-         |       END AS cvr_step,
-         |       CASE WHEN n_first > 0
-         |            THEN ${MEAN6("CAST(n_users AS BIGINT) * 1000000", "n_first")}
-         |       END AS cvr_total
-         |FROM x ORDER BY step""".stripMargin,
-
-    // mirrors TimeSeriesOps.topMovers: the same self-join prior as ts_wow,
-    // exact-integer |diff| ranking under a total order, LIMIT top-20
-    "ts_topk_movers" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |m AS (SELECT user_id, event_type,
-         |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |        CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS m_us
-         |      FROM pts WHERE t_us >= $T0 AND t_us < $T29 GROUP BY 1, 2, 3),
-         |j AS (SELECT c.user_id AS user_id, c.event_type AS event_type,
-         |             c.w_start AS w_start, c.m_us AS m_us, p.m_us AS prev_us
-         |      FROM m c JOIN m p ON c.user_id = p.user_id AND c.event_type = p.event_type
-         |        AND c.w_start = p.w_start + $WEEK),
-         |r AS (SELECT *, row_number() OVER (ORDER BY abs(m_us - prev_us) DESC,
-         |                 user_id, event_type, w_start) AS rank
-         |      FROM j)
-         |SELECT user_id, event_type, w_start, CAST(rank AS BIGINT) AS rank,
-         |       CAST(m_us AS DOUBLE) / 1000000.0 + 0 AS v_mean,
-         |       CAST(prev_us AS DOUBLE) / 1000000.0 + 0 AS prev_mean,
-         |       CAST(m_us - prev_us AS DOUBLE) / 1000000.0 + 0 AS diff
-         |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin,
-
-    // mirrors TimeSeriesOps.ratio: exact µ-unit window SUMS both sides,
-    // inner join on the shared grid, NULL on a zero denominator
-    "ts_ratio" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |l AS (SELECT user_id, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             sum(${US6("value")}) AS l_us, count(*) AS n_l
-         |      FROM pts WHERE event_type = 'click' AND t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2),
-         |r AS (SELECT user_id, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |             sum(${US6("value")}) AS r_us, count(*) AS n_r
-         |      FROM pts WHERE event_type = 'view' AND t_us >= $T0 AND t_us < $T29
-         |      GROUP BY 1, 2)
-         |SELECT l.user_id AS user_id, l.w_start AS w_start,
-         |       CAST(n_l AS BIGINT) AS n_l, CAST(n_r AS BIGINT) AS n_r,
-         |       CAST(l_us AS DOUBLE) / 1000000.0 + 0 AS l_sum,
-         |       CAST(r_us AS DOUBLE) / 1000000.0 + 0 AS r_sum,
-         |       CASE WHEN r_us <> 0
-         |            THEN ${Q6("CAST(l_us AS DOUBLE) / CAST(r_us AS DOUBLE)")}
-         |       END AS ratio
-         |FROM l JOIN r ON l.user_id = r.user_id AND l.w_start = r.w_start
-         |ORDER BY user_id, w_start""".stripMargin,
-
-    // conversion = earliest purchase at/after the click, within the
-    // horizon; duplicate click rows keep their multiplicity (the verdict
-    // computes per distinct (user, t), then joins back onto the rows)
-    "ts_funnel" ->
-      s"""WITH pts AS ($PTS_SQL),
-         |c AS (SELECT user_id, t_us FROM pts
-         |      WHERE event_type = 'click' AND t_us >= $T0 AND t_us < $T29),
-         |p AS (SELECT user_id, t_us FROM pts WHERE event_type = 'purchase'),
-         |cd AS (SELECT DISTINCT user_id, t_us FROM c),
-         |n AS (SELECT cd.user_id AS user_id, cd.t_us AS t_us,
-         |        CASE WHEN min(p.t_us) IS NOT NULL AND min(p.t_us) - cd.t_us <= $DAY
-         |             THEN 1 ELSE 0 END AS conv
-         |      FROM cd LEFT JOIN p ON cd.user_id = p.user_id AND p.t_us >= cd.t_us
-         |      GROUP BY cd.user_id, cd.t_us),
-         |j AS (SELECT c.user_id AS user_id, c.t_us AS t_us, n.conv AS conv
-         |      FROM c JOIN n ON c.user_id = n.user_id AND c.t_us = n.t_us)
-         |SELECT user_id, $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-         |       count(*) AS n_base,
-         |       CAST(sum(conv) AS BIGINT) AS n_converted,
-         |       ${MEAN6("sum(conv) * 1000000", "count(*)")} AS cvr
-         |FROM j GROUP BY 1, 2 ORDER BY user_id, w_start""".stripMargin,
-
-    "q1_agg" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |       round(sum(l_quantity), 2) AS sum_qty,
-         |       round(sum(l_extendedprice), 2) AS sum_base_price,
-         |       round(CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000.0, 0) AS BIGINT)) AS DOUBLE) / 100, 0) / 100 + 0 AS sum_disc_price,
-         |       round(CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1000000.0, 0) AS BIGINT)) AS DOUBLE) / 10000.0, 0) / 100 + 0 AS sum_charge,
-         |       ${MEAN6("sum(CAST(round(l_quantity, 0) AS BIGINT) * 1000000)", "count(*)")} AS avg_qty,
-         |       ${MEAN6("sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT) * 10000)", "count(*)")} AS avg_price,
-         |       ${MEAN6("sum(CAST(round(l_discount * 100, 0) AS BIGINT) * 10000)", "count(*)")} AS avg_disc,
-         |       CAST(count(*) AS BIGINT) AS count_order
-         |FROM lineitem WHERE CAST(l_shipdate AS DATE) <= DATE '2000-09-02'
-         |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_join" ->
-      """SELECT l_orderkey, round(CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000.0, 0) AS BIGINT)) AS DOUBLE) / 100, 0) / 100 + 0 AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |              JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND CAST(o_orderdate AS DATE) < DATE '1998-03-15'
-        |  AND CAST(l_shipdate AS DATE) > DATE '1998-03-15'
-        |GROUP BY l_orderkey ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q5_join" ->
-      """SELECT n_name,
-        |       round(CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000.0, 0) AS BIGINT)) AS DOUBLE) / 100, 0) / 100 + 0 AS revenue,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    "q12_agg" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_lines,
-        |       CAST(sum(CASE WHEN CAST(l_shipdate AS DATE) > CAST(o_orderdate AS DATE) + 30
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_late
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q10_join" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        |       round(CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000.0, 0) AS BIGINT)) AS DOUBLE) / 100, 0) / 100 + 0 AS revenue,
-        |       CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND CAST(o_orderdate AS DATE) >= DATE '1997-01-01'
-        |  AND CAST(o_orderdate AS DATE) < DATE '1997-04-01'
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q4_semi" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
-        |FROM orders
-        |WHERE CAST(o_orderdate AS DATE) >= DATE '1997-01-01'
-        |  AND CAST(o_orderdate AS DATE) < DATE '1997-04-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND CAST(l_shipdate AS DATE) > CAST(o_orderdate AS DATE) + 30)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q22_anti" ->
-      """WITH cb AS (SELECT c_custkey, c_nationkey,
-        |                   CAST(round(c_acctbal * 10000.0, 0) AS BIGINT) AS bal_us
-        |            FROM customer),
-        |st AS (SELECT sum(bal_us) AS s_us, count(*) AS n_pos
-        |       FROM cb WHERE bal_us > 0)
-        |SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_custs,
-        |       round(CAST(sum(bal_us) AS DOUBLE) / 100, 0) / 100 + 0 AS acctbal_sum
-        |FROM cb, st
-        |WHERE bal_us * n_pos > s_us
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND CAST(o_orderdate AS DATE) >= DATE '2000-01-01')
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-
-    "q19_join" ->
-      """WITH j AS (SELECT p_brand, p_size, l_quantity, l_extendedprice, l_discount
-        |           FROM lineitem JOIN part ON l_partkey = p_partkey
-        |           WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-        |                  AND l_quantity BETWEEN 1 AND 21)
-        |              OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 30
-        |                  AND l_quantity BETWEEN 15 AND 35))
-        |SELECT CASE WHEN p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-        |                 AND l_quantity BETWEEN 1 AND 21
-        |            THEN 'b1' ELSE 'b2' END AS branch,
-        |       CAST(count(*) AS BIGINT) AS n_lines,
-        |       round(CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000.0, 0) AS BIGINT)) AS DOUBLE) / 100, 0) / 100 + 0 AS revenue
-        |FROM j GROUP BY 1 ORDER BY branch""".stripMargin,
-
-    "q6_filter" ->
-      """SELECT round(CAST(sum(CAST(round(l_extendedprice * l_discount * 10000.0, 0) AS BIGINT)) AS DOUBLE) / 100, 0) / 100 + 0 AS revenue
-        |FROM lineitem
-        |WHERE CAST(l_shipdate AS DATE) >= DATE '1997-01-01'
-        |  AND CAST(l_shipdate AS DATE) < DATE '1998-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-
-    "q18_join" ->
-      """WITH big AS (SELECT l_orderkey, round(sum(l_quantity), 2) AS sum_qty
-        |             FROM lineitem GROUP BY 1 HAVING round(sum(l_quantity), 2) > 250)
-        |SELECT c_custkey, o_orderkey, epoch_us(o_orderdate) AS o_date_us,
-        |       o_totalprice, sum_qty
-        |FROM orders JOIN big ON o_orderkey = l_orderkey
-        |            JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""".stripMargin,
-
-    "q13_agg" ->
-      """WITH cnt AS (SELECT c_custkey, count(o_orderkey) AS c_count
-        |             FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |             GROUP BY 1)
-        |SELECT CAST(c_count AS BIGINT) AS c_count, CAST(count(*) AS BIGINT) AS custdist
-        |FROM cnt GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "dedup_exact" ->
-      """WITH d AS (SELECT doc_id, md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
-        |           FROM documents)
-        |SELECT doc_id, fp, min(doc_id) OVER (PARTITION BY fp) AS keep_id,
-        |       doc_id <> min(doc_id) OVER (PARTITION BY fp) AS is_dup
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    "dedup_ngram_jaccard" -> jaccardSql(0.5, Some(1000L)),
-
-    // mirrors Dedup.containmentPairs: same 3-gram shingles as jaccardSql,
-    // both directed ratios, threshold on the larger one
-    "dedup_containment" ->
-      s"""WITH docs AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w
-         |              FROM documents WHERE doc_id < 1000),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 0)),
-         |               i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2]))) AS s
-         |       FROM docs WHERE len(w) >= 3),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             len(list_intersect(a.s, b.s)) AS inter, len(a.s) AS la, len(b.s) AS lb
-         |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-         |SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
-         |       ${Q6("CAST(inter AS DOUBLE) / la")} AS contain_a,
-         |       ${Q6("CAST(inter AS DOUBLE) / lb")} AS contain_b
-         |FROM p WHERE inter > 0
-         |  AND greatest(CAST(inter AS DOUBLE) / la, CAST(inter AS DOUBLE) / lb) >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    "dedup_minhash" -> jaccardSql(0.8, None),
-
-    // Mirrors Dedup.minhashTune: md5-derived signatures (sig[k] = min
-    // 16-hex md5 prefix of "k|gram" over the doc's distinct trigrams),
-    // per-config band buckets, distinct candidate pairs, recall vs the
-    // exact Jaccard ≥ 0.5 pair set — on the registration's identical
-    // doc_id < 1000 sample cut.
-    "dedup_minhash_tune" ->
-      s"""WITH d AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents WHERE doc_id < 1000),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 0)),
-         |               i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2]))) AS s
-         |       FROM d WHERE len(w) >= 3),
-         |sig AS (SELECT doc_id, list_transform(generate_series(0, 63), k ->
-         |          list_min(list_transform(s, g ->
-         |            substring(md5(CAST(k AS VARCHAR) || '|' || g), 1, 16)))) AS sig
-         |        FROM sh),
-         |tp AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |       WHERE len(list_intersect(a.s, b.s)) > 0
-         |         AND CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-         |             / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-         |ks AS (SELECT unnest(generate_series(0, 63)) AS k),
-         |bk1 AS (SELECT doc_id, k AS band, sig[k + 1] AS bv FROM sig, ks WHERE k < 64),
-         |bk2 AS (SELECT doc_id, k AS band, array_to_string(sig[2*k + 1 : 2*k + 2], '#') AS bv FROM sig, ks WHERE k < 32),
-         |bk4 AS (SELECT doc_id, k AS band, array_to_string(sig[4*k + 1 : 4*k + 4], '#') AS bv FROM sig, ks WHERE k < 16),
-         |c1 AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bk1 a JOIN bk1 b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id),
-         |c2 AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bk2 a JOIN bk2 b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id),
-         |c4 AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bk4 a JOIN bk4 b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id),
-         |st AS (SELECT 1 AS rows_per_band, 64 AS n_bands, count(*) AS n_cand,
-         |              sum(CASE WHEN t.id_a IS NOT NULL THEN 1 ELSE 0 END) AS n_true_cand
-         |       FROM c1 c LEFT JOIN tp t ON c.id_a = t.id_a AND c.id_b = t.id_b
-         |       UNION ALL
-         |       SELECT 2, 32, count(*),
-         |              sum(CASE WHEN t.id_a IS NOT NULL THEN 1 ELSE 0 END)
-         |       FROM c2 c LEFT JOIN tp t ON c.id_a = t.id_a AND c.id_b = t.id_b
-         |       UNION ALL
-         |       SELECT 4, 16, count(*),
-         |              sum(CASE WHEN t.id_a IS NOT NULL THEN 1 ELSE 0 END)
-         |       FROM c4 c LEFT JOIN tp t ON c.id_a = t.id_a AND c.id_b = t.id_b),
-         |tot AS (SELECT count(*) AS n_true_total FROM tp)
-         |SELECT CAST(rows_per_band AS BIGINT) AS rows_per_band,
-         |       CAST(n_bands AS BIGINT) AS n_bands,
-         |       CAST(n_cand AS BIGINT) AS n_cand,
-         |       CAST(n_true_cand AS BIGINT) AS n_true_cand,
-         |       CAST(n_true_total AS BIGINT) AS n_true_total,
-         |       CASE WHEN n_true_total = 0 THEN NULL
-         |            ELSE ${Q6("CAST(n_true_cand AS DOUBLE) / n_true_total")} END AS recall
-         |FROM st, tot ORDER BY rows_per_band""".stripMargin,
-
-    "corpus_contamination_near" ->
-      s"""WITH docs AS (SELECT doc_id, source, string_split($NORM_TEXT_SQL, ' ') AS w
-         |              FROM documents),
-         |sh AS (SELECT doc_id, source, list_distinct(list_transform(
-         |               generate_series(1, greatest(len(w) - 2, 0)),
-         |               i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2]))) AS s
-         |       FROM docs WHERE len(w) >= 3),
-         |p AS (SELECT t.doc_id AS train_id, b.doc_id AS bench_id,
-         |             len(list_intersect(t.s, b.s)) AS inter,
-         |             len(t.s) AS la, len(b.s) AS lb
-         |      FROM sh t JOIN sh b ON t.source <> 'src0' AND b.source = 'src0')
-         |SELECT train_id, bench_id,
-         |       ${Q6("CAST(inter AS DOUBLE) / (la + lb - inter)")} AS jaccard
-         |FROM p WHERE inter > 0 AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.3
-         |ORDER BY train_id, bench_id""".stripMargin,
-
-    // SimHash recomputed verbatim: per-word 64-bit hash = md5_number_lower
-    // (the same value graft.plans.TextHashes.md5Lower64 computes), ±1 vote
-    // per bit, sig bit = sum > 0; pairs brute-forced here (the quadratic is
-    // oracle-only — the engine uses the pigeonhole chunk join).
-    "dedup_simhash" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS word FROM d),
-         |h AS (SELECT doc_id, md5_number_lower(word) AS h FROM w),
-         |sig AS (SELECT doc_id, $SIMHASH_SIG_SQL AS sig FROM h GROUP BY doc_id),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-         |      FROM sig a JOIN sig b ON a.doc_id < b.doc_id)
-         |SELECT id_a, id_b, hamming FROM p WHERE hamming <= 3
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // Mirrors Dedup.simhashLoad: the simhash signature CTE, 16-bit chunk
-    // values via shift+mask (identical bit patterns to the engine's
-    // masked arithmetic shift), per-bucket loads, per-chunk rollup.
-    "dedup_simhash_load" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS word FROM d),
-         |h AS (SELECT doc_id, md5_number_lower(word) AS h FROM w),
-         |sig AS (SELECT doc_id, $SIMHASH_SIG_SQL AS sig FROM h GROUP BY doc_id),
-         |ck AS (${comboCkSql("sig", 3)}),
-         |l AS (SELECT ci, cv, count(*) AS load FROM ck GROUP BY 1, 2)
-         |SELECT CAST(ci AS BIGINT) AS chunk,
-         |       CAST(sum(load) AS BIGINT) AS n_items,
-         |       CAST(count(*) AS BIGINT) AS n_buckets,
-         |       CAST(max(load) AS BIGINT) AS max_load,
-         |       CAST(sum(load * (load - 1) // 2) AS BIGINT) AS cand_pairs
-         |FROM l GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // mirrors Dedup.simhashAudit: the simhash pair CTE joined to exact
-    // trigram Jaccard; docs with < 3 words carry NULL shingle sets and
-    // score NULL (the pair row itself is kept)
-    "dedup_simhash_audit" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS word FROM d),
-         |h AS (SELECT doc_id, md5_number_lower(word) AS h FROM w),
-         |sig AS (SELECT doc_id, $SIMHASH_SIG_SQL AS sig FROM h GROUP BY doc_id),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-         |      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         |      WHERE bit_count(xor(a.sig, b.sig)) <= 3),
-         |dw AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |sh AS (SELECT doc_id,
-         |              CASE WHEN len(w) >= 3 THEN list_distinct(list_transform(
-         |                generate_series(1, greatest(len(w) - 2, 0)),
-         |                i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2]))) END AS s
-         |       FROM dw),
-         |j AS (SELECT p.id_a, p.id_b, p.hamming,
-         |             len(list_intersect(a.s, b.s)) AS inter,
-         |             len(a.s) AS la, len(b.s) AS lb
-         |      FROM p JOIN sh a ON a.doc_id = p.id_a
-         |             JOIN sh b ON b.doc_id = p.id_b)
-         |SELECT id_a, id_b, hamming,
-         |       CASE WHEN la IS NOT NULL AND lb IS NOT NULL AND la + lb - inter > 0
-         |            THEN ${Q6("CAST(inter AS DOUBLE) / (la + lb - inter)")} END AS jaccard
-         |FROM j ORDER BY id_a, id_b""".stripMargin,
-
-    "dedup_shared_ngram" ->
-      s"""WITH docs AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(
-         |               generate_series(1, greatest(len(w) - 19, 0)),
-         |               i -> array_to_string(w[i:i+19], ' '))) AS s
-         |       FROM docs WHERE len(w) >= 20),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             len(list_intersect(a.s, b.s)) AS n_shared
-         |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-         |SELECT id_a, id_b, CAST(n_shared AS BIGINT) AS n_shared
-         |FROM p WHERE n_shared > 0 ORDER BY id_a, id_b""".stripMargin,
-
-    "corpus_filter" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, norm, string_split(norm, ' ') AS w FROM d),
-         |c AS (SELECT doc_id,
-         |        CAST(len(w) AS BIGINT) AS n_words,
-         |        CAST(length(norm) AS BIGINT) AS n_chars,
-         |        len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and', 'of', 'to', 'in'))) AS n_stop,
-         |        len(regexp_extract_all(norm, '[^a-z0-9 ]')) AS n_punct
-         |      FROM b),
-         |q AS (SELECT doc_id,
-         |        ${Q6(QSCORE_SQL)} AS quality_score
-         |      FROM c),
-         |pii AS (SELECT doc_id,
-         |          (len(regexp_extract_all(norm, '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}'))
-         |           + len(regexp_extract_all(norm, '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b'))
-         |           + len(regexp_extract_all(norm, '\\d{3}[- ]\\d{3,4}[- ]\\d{4}'))) > 0 AS has_pii
-         |        FROM d),
-         |k AS (SELECT doc_id, doc_id <> min(doc_id) OVER (PARTITION BY md5(norm)) AS is_dup
-         |      FROM d)
-         |SELECT q.doc_id AS doc_id,
-         |       q.quality_score >= 0.5 AS quality_ok,
-         |       pii.has_pii AS has_pii, k.is_dup AS is_dup,
-         |       (q.quality_score >= 0.5 AND NOT pii.has_pii AND NOT k.is_dup) AS keep
-         |FROM q JOIN pii ON q.doc_id = pii.doc_id JOIN k ON q.doc_id = k.doc_id
-         |ORDER BY doc_id""".stripMargin,
-
-    // Mirrors TextFunctions.corpusVerdict: the keep-best survivor CTEs
-    // (same reachability clusters as dedup_keep_best) composed with the
-    // corpus_filter quality/pii/exact CTEs; verdict CASE in pipeline
-    // stage order. NULL quality (empty norm) falls through to 'kept',
-    // matching Spark's NULL-is-false `when`.
-    "corpus_verdict" ->
-      s"""$DEDUP_CLUSTER_CTES,
-         |cl AS (SELECT d.doc_id, coalesce(l.cluster_id, d.doc_id) AS cluster_id, d.n_chars
-         |       FROM documents d LEFT JOIN lbl l ON d.doc_id = l.doc_id),
-         |kb AS (SELECT doc_id, (row_number() OVER (PARTITION BY cluster_id
-         |          ORDER BY n_chars DESC, doc_id) = 1) AS kept
-         |       FROM cl),
-         |vd AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |vb AS (SELECT doc_id, norm, string_split(norm, ' ') AS w FROM vd),
-         |vc AS (SELECT doc_id,
-         |         CAST(len(w) AS BIGINT) AS n_words,
-         |         CAST(length(norm) AS BIGINT) AS n_chars,
-         |         len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and', 'of', 'to', 'in'))) AS n_stop,
-         |         len(regexp_extract_all(norm, '[^a-z0-9 ]')) AS n_punct
-         |       FROM vb),
-         |vq AS (SELECT doc_id, ${Q6(QSCORE_SQL)} AS quality_score FROM vc),
-         |vp AS (SELECT doc_id,
-         |         (len(regexp_extract_all(norm, '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}'))
-         |          + len(regexp_extract_all(norm, '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b'))
-         |          + len(regexp_extract_all(norm, '\\d{3}[- ]\\d{3,4}[- ]\\d{4}'))) > 0 AS has_pii
-         |       FROM vd),
-         |vx AS (SELECT doc_id, doc_id <> min(doc_id) OVER (PARTITION BY md5(norm)) AS is_dup
-         |       FROM vd),
-         |vv AS (SELECT vq.doc_id AS doc_id,
-         |         CASE WHEN vx.is_dup THEN 'exact_dup'
-         |              WHEN NOT kb.kept THEN 'near_dup'
-         |              WHEN vp.has_pii THEN 'pii'
-         |              WHEN vq.quality_score < 0.5 THEN 'low_quality'
-         |              ELSE 'kept' END AS verdict
-         |       FROM vq JOIN vp ON vq.doc_id = vp.doc_id
-         |              JOIN vx ON vq.doc_id = vx.doc_id
-         |              JOIN kb ON vq.doc_id = kb.doc_id)
-         |SELECT doc_id, verdict, verdict = 'kept' AS keep
-         |FROM vv ORDER BY doc_id""".stripMargin,
-
-    // Mirrors TextFunctions.corpusFunnel: the corpus_verdict CTE chain
-    // joined with per-doc token counts, rolled up per reason with stage
-    // numbers in pipeline order and exact-integer mass fractions.
-    "corpus_funnel" ->
-      s"""$DEDUP_CLUSTER_CTES,
-         |cl AS (SELECT d.doc_id, coalesce(l.cluster_id, d.doc_id) AS cluster_id, d.n_chars
-         |       FROM documents d LEFT JOIN lbl l ON d.doc_id = l.doc_id),
-         |kb AS (SELECT doc_id, (row_number() OVER (PARTITION BY cluster_id
-         |          ORDER BY n_chars DESC, doc_id) = 1) AS kept
-         |       FROM cl),
-         |vd AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |vb AS (SELECT doc_id, norm, string_split(norm, ' ') AS w FROM vd),
-         |vc AS (SELECT doc_id,
-         |         CAST(len(w) AS BIGINT) AS n_words,
-         |         CAST(length(norm) AS BIGINT) AS n_chars,
-         |         len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and', 'of', 'to', 'in'))) AS n_stop,
-         |         len(regexp_extract_all(norm, '[^a-z0-9 ]')) AS n_punct
-         |       FROM vb),
-         |vq AS (SELECT doc_id, ${Q6(QSCORE_SQL)} AS quality_score FROM vc),
-         |vp AS (SELECT doc_id,
-         |         (len(regexp_extract_all(norm, '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}'))
-         |          + len(regexp_extract_all(norm, '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b'))
-         |          + len(regexp_extract_all(norm, '\\d{3}[- ]\\d{3,4}[- ]\\d{4}'))) > 0 AS has_pii
-         |       FROM vd),
-         |vx AS (SELECT doc_id, doc_id <> min(doc_id) OVER (PARTITION BY md5(norm)) AS is_dup
-         |       FROM vd),
-         |vv AS (SELECT vq.doc_id AS doc_id,
-         |         CASE WHEN vx.is_dup THEN 'exact_dup'
-         |              WHEN NOT kb.kept THEN 'near_dup'
-         |              WHEN vp.has_pii THEN 'pii'
-         |              WHEN vq.quality_score < 0.5 THEN 'low_quality'
-         |              ELSE 'kept' END AS verdict
-         |       FROM vq JOIN vp ON vq.doc_id = vp.doc_id
-         |              JOIN vx ON vq.doc_id = vx.doc_id
-         |              JOIN kb ON vq.doc_id = kb.doc_id),
-         |vt AS (SELECT vv.doc_id, vv.verdict, CAST(len(vb.w) AS BIGINT) AS n_tokens
-         |       FROM vv JOIN vb ON vv.doc_id = vb.doc_id),
-         |tt AS (SELECT count(*) AS t_docs, sum(n_tokens) AS t_tokens FROM vt),
-         |g AS (SELECT verdict, count(*) AS n_docs, sum(n_tokens) AS n_tokens
-         |      FROM vt GROUP BY verdict)
-         |SELECT CASE verdict WHEN 'exact_dup' THEN 1 WHEN 'near_dup' THEN 2
-         |            WHEN 'pii' THEN 3 WHEN 'low_quality' THEN 4 ELSE 5 END::BIGINT AS stage,
-         |       verdict, CAST(n_docs AS BIGINT) AS n_docs,
-         |       CAST(n_tokens AS BIGINT) AS n_tokens,
-         |       ${Q6("CAST(n_docs AS DOUBLE) / t_docs")} AS doc_frac,
-         |       ${Q6("CAST(n_tokens AS DOUBLE) / t_tokens")} AS token_frac
-         |FROM g CROSS JOIN tt ORDER BY stage""".stripMargin,
-
-    "corpus_contamination" ->
-      s"""WITH docs AS (SELECT doc_id, source, string_split($NORM_TEXT_SQL, ' ') AS w
-         |              FROM documents),
-         |sh AS (SELECT doc_id, source, list_distinct(list_transform(
-         |               generate_series(1, greatest(len(w) - 7, 0)),
-         |               i -> array_to_string(w[i:i+7], ' '))) AS s
-         |       FROM docs WHERE len(w) >= 8),
-         |p AS (SELECT t.doc_id AS train_id, b.doc_id AS bench_id,
-         |             len(list_intersect(t.s, b.s)) AS n_shared
-         |      FROM sh t JOIN sh b ON t.source <> 'src0' AND b.source = 'src0')
-         |SELECT train_id, bench_id, CAST(n_shared AS BIGINT) AS n_shared
-         |FROM p WHERE n_shared >= 1 ORDER BY train_id, bench_id""".stripMargin,
-
-    // Connected components in SQL: reachability closure via recursive CTE
-    // (UNION dedupes states, so the recursion terminates despite cycles),
-    // cluster_id = min reachable doc_id; singletons keep their own id.
-    "dedup_clusters" ->
-      s"""$DEDUP_CLUSTER_CTES
-         |SELECT d.doc_id AS doc_id, coalesce(l.cluster_id, d.doc_id) AS cluster_id
-         |FROM documents d LEFT JOIN lbl l ON d.doc_id = l.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // Mirrors Dedup.dupSpanStats: positional 8-grams (multiplicity kept),
-    // doc-frequency from the per-(doc, gram) table, duplicated mass =
-    // positions whose gram occurs in ≥ 2 docs. Grouping is by gram TEXT
-    // where the engine groups by xxhash64(gram) — identical arithmetic
-    // barring a 2⁻⁶⁴ collision.
-    "dedup_span_stats" ->
-      s"""WITH d AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |g AS (SELECT doc_id, unnest(list_transform(
-         |               generate_series(1, greatest(len(w) - 7, 0)),
-         |               i -> array_to_string(w[i:i+7], ' '))) AS gram
-         |      FROM d WHERE len(w) >= 8),
-         |pg AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY 1, 2),
-         |df AS (SELECT gram, count(*) AS df FROM pg GROUP BY 1)
-         |SELECT p.doc_id,
-         |       CAST(sum(p.cnt) AS BIGINT) AS n_ngrams,
-         |       CAST(sum(CASE WHEN f.df >= 2 THEN p.cnt ELSE 0 END) AS BIGINT) AS n_dup,
-         |       ${Q6("CAST(sum(CASE WHEN f.df >= 2 THEN p.cnt ELSE 0 END) AS DOUBLE) / sum(p.cnt)")} AS dup_frac
-         |FROM pg p JOIN df f USING (gram)
-         |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin,
-
-    // Mirrors Dedup.spanRemoval: positional 8-grams with start index,
-    // gram ownership = min(doc_id), covered indices = i..i+7 of every
-    // occurrence whose owner is an earlier doc; rebuild replays the
-    // engine's index-grid CASE/filter/join arithmetic verbatim. Gram
-    // identity by TEXT where the engine uses xxhash64 (2⁻⁶⁴ caveat).
-    "dedup_span_removal" ->
-      s"""WITH d AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |gp AS (SELECT doc_id, u.i AS i, u.gram AS gram
-         |       FROM (SELECT doc_id, unnest(list_transform(
-         |                generate_series(1, greatest(len(w) - 7, 0)),
-         |                i -> struct_pack(i := i, gram := array_to_string(w[i:i+7], ' ')))) AS u
-         |             FROM d WHERE len(w) >= 8)),
-         |own AS (SELECT gram, min(doc_id) AS owner FROM gp GROUP BY 1),
-         |cpos AS (SELECT DISTINCT doc_id, idx FROM
-         |           (SELECT gp.doc_id, unnest(generate_series(gp.i, gp.i + 7)) AS idx
-         |            FROM gp JOIN own USING (gram) WHERE own.owner < gp.doc_id)),
-         |cv AS (SELECT doc_id, list(idx) AS cov FROM cpos GROUP BY 1)
-         |SELECT d.doc_id,
-         |       CAST(len(d.w) AS BIGINT) AS n_words,
-         |       CAST(coalesce(len(cv.cov), 0) AS BIGINT) AS n_removed,
-         |       coalesce(array_to_string(list_filter(list_transform(generate_series(1, len(d.w)),
-         |         i -> CASE WHEN list_contains(coalesce(cv.cov, []), i) THEN NULL ELSE d.w[i] END),
-         |         x -> x IS NOT NULL), ' '), '') AS text_clean
-         |FROM d LEFT JOIN cv USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-
-    // Mirrors Dedup.spanProfile: the span_removal coverage CTEs rolled
-    // up per source (coalesce(0) for cover-free docs, count of touched
-    // docs, removed fraction of the source's word mass).
-    "dedup_span_profile" ->
-      s"""WITH d AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |gp AS (SELECT doc_id, u.i AS i, u.gram AS gram
-         |       FROM (SELECT doc_id, unnest(list_transform(
-         |                generate_series(1, greatest(len(w) - 7, 0)),
-         |                i -> struct_pack(i := i, gram := array_to_string(w[i:i+7], ' ')))) AS u
-         |             FROM d WHERE len(w) >= 8)),
-         |own AS (SELECT gram, min(doc_id) AS owner FROM gp GROUP BY 1),
-         |cpos AS (SELECT DISTINCT doc_id, idx FROM
-         |           (SELECT gp.doc_id, unnest(generate_series(gp.i, gp.i + 7)) AS idx
-         |            FROM gp JOIN own USING (gram) WHERE own.owner < gp.doc_id)),
-         |cv AS (SELECT doc_id, count(*) AS n_cov FROM cpos GROUP BY 1),
-         |per AS (SELECT d.doc_id, len(d.w) AS n_words, coalesce(cv.n_cov, 0) AS n_removed
-         |        FROM d LEFT JOIN cv USING (doc_id))
-         |SELECT doc.source AS source,
-         |       CAST(count(*) AS BIGINT) AS n_docs,
-         |       CAST(sum(per.n_words) AS BIGINT) AS n_words,
-         |       CAST(sum(per.n_removed) AS BIGINT) AS n_removed,
-         |       CAST(sum(CASE WHEN per.n_removed > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_touched,
-         |       ${Q6("CAST(sum(per.n_removed) AS DOUBLE) / sum(per.n_words)")} AS removed_frac
-         |FROM per JOIN documents doc USING (doc_id)
-         |GROUP BY doc.source ORDER BY doc.source""".stripMargin,
-
-    // Mirrors Dedup.sourceOverlap: the exact trigram-Jaccard pair set
-    // (the minhash oracle's CTEs), each pair labeled with its unordered
-    // source pair, rolled up with the HUGEINT micro-unit mean.
-    "dedup_source_matrix" ->
-      s"""WITH docs AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 0)),
-         |               i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2]))) AS s
-         |       FROM docs WHERE len(w) >= 3),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             len(list_intersect(a.s, b.s)) AS inter, len(a.s) AS la, len(b.s) AS lb
-         |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-         |pr AS (SELECT id_a, id_b, ${Q6("CAST(inter AS DOUBLE) / (la + lb - inter)")} AS jaccard
-         |       FROM p WHERE inter > 0 AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.8),
-         |j AS (SELECT least(da.source, db.source) AS source_a,
-         |             greatest(da.source, db.source) AS source_b, pr.jaccard
-         |      FROM pr JOIN documents da ON da.doc_id = pr.id_a
-         |              JOIN documents db ON db.doc_id = pr.id_b)
-         |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_pairs,
-         |       max(jaccard) AS max_jaccard,
-         |       ${MEAN6(s"sum(${US6("jaccard")})", "count(*)")} AS mean_jaccard
-         |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Mirrors Dedup.ngramNovelty: same positional-8-gram table as the
-    // span-stats oracle, gram ownership = min(doc_id), novel mass =
-    // positions whose doc owns the gram. Gram identity by TEXT where the
-    // engine uses xxhash64 (2⁻⁶⁴ collision caveat).
-    "dedup_ngram_novelty" ->
-      s"""WITH d AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |g AS (SELECT doc_id, unnest(list_transform(
-         |               generate_series(1, greatest(len(w) - 7, 0)),
-         |               i -> array_to_string(w[i:i+7], ' '))) AS gram
-         |      FROM d WHERE len(w) >= 8),
-         |pg AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY 1, 2),
-         |own AS (SELECT gram, min(doc_id) AS owner FROM pg GROUP BY 1)
-         |SELECT p.doc_id,
-         |       CAST(sum(p.cnt) AS BIGINT) AS n_ngrams,
-         |       CAST(sum(CASE WHEN o.owner = p.doc_id THEN p.cnt ELSE 0 END) AS BIGINT) AS n_novel,
-         |       ${Q6("CAST(sum(CASE WHEN o.owner = p.doc_id THEN p.cnt ELSE 0 END) AS DOUBLE) / sum(p.cnt)")} AS novel_frac
-         |FROM pg p JOIN own o USING (gram)
-         |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin,
-
-    // Mirrors Dedup.keepBest: same reachability clusters, survivor =
-    // longest text per cluster (ties → lowest doc_id).
-    "dedup_keep_best" ->
-      s"""$DEDUP_CLUSTER_CTES,
-         |cl AS (SELECT d.doc_id, coalesce(l.cluster_id, d.doc_id) AS cluster_id, d.n_chars
-         |       FROM documents d LEFT JOIN lbl l ON d.doc_id = l.doc_id)
-         |SELECT doc_id, cluster_id,
-         |       (row_number() OVER (PARTITION BY cluster_id
-         |          ORDER BY n_chars DESC, doc_id) = 1) AS kept
-         |FROM cl ORDER BY doc_id""".stripMargin,
-
-    // Mirrors Vectors.crossCosinePairsLsh: buckets for BOTH sides from
-    // the shared md5 planes, 1-bit multiprobe on the benchmark (src0)
-    // side only, exact cosine >= 0.4 verify in DOT_SQL's index order.
-    "corpus_contamination_emb" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |m AS (SELECT e.vec_id, e.embedding, d.source
-         |      FROM e JOIN documents d ON d.doc_id = e.vec_id),
-         |bk AS (SELECT m.vec_id, m.source, t.t AS tbl,
-         |         CAST(list_sum(list_transform(generate_series(0, 7), bb ->
-         |           CASE WHEN list_sum(list_transform(generate_series(1, 64), dd ->
-         |                  CAST(m.embedding[dd] AS DOUBLE) * ${PLANE_SQL("t.t", "bb", "dd - 1")})) > 0
-         |                THEN (1 << bb) ELSE 0 END)) AS BIGINT) AS bucket
-         |       FROM m, (SELECT unnest(generate_series(0, 15)) AS t) t),
-         |pp AS (SELECT b.vec_id, b.tbl, xor(b.bucket, f.f) AS bucket
-         |       FROM bk b, (SELECT unnest([0, 1, 2, 4, 8, 16, 32, 64, 128]) AS f) f
-         |       WHERE b.source = 'src0'),
-         |cand AS (SELECT DISTINCT c.vec_id AS train_id, p.vec_id AS bench_id
-         |         FROM pp p JOIN bk c ON p.tbl = c.tbl AND p.bucket = c.bucket
-         |         WHERE c.source <> 'src0'),
-         |pr AS (SELECT train_id, bench_id,
-         |              ${DOT_SQL("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos
-         |       FROM cand JOIN e a ON a.vec_id = train_id JOIN e b ON b.vec_id = bench_id)
-         |SELECT train_id, bench_id, ${Q6("cos")} AS cos_sim
-         |FROM pr WHERE cos >= 0.4 ORDER BY train_id, bench_id""".stripMargin,
-
-    // the three pair-graph queries replay the LSH-bucketed generator
-    // (LSH_PAIR_CTES), not the quadratic join — the oracle mirrors the
-    // registered scale path bucket-for-bucket
-    "emb_cosine_pairs" ->
-      s"""WITH $LSH_PAIR_CTES
-         |SELECT id_a, id_b, ${Q6("cos")} AS cos_sim
-         |FROM pr ORDER BY id_a, id_b""".stripMargin,
-
-    // mirrors the emb_dup_sweep registration: base inclusion on RAW
-    // cos ≥ 0.8 (the operator's tau filter), higher cuts on the
-    // quantized value — exactly the engine's arithmetic — plus the
-    // surfaced recall contract: expectedBandRecall replayed from the
-    // same bsel config via the same shared p literals and left-fold
-    // powers (no libm in either engine)
-    "emb_dup_sweep" ->
-      s"""WITH $LSH_PAIR_CTES,
-         |sw AS (SELECT ${Q6("cos")} AS c FROM pr WHERE cos >= 0.8),
-         |rc AS (SELECT ${graft.sim.Vectors.bandP.map { case (band, p) =>
-               s"${Q6(expRecallSql(p.toString))} AS exp_recall_$band"
-             }.mkString(",\n|          ")}
-         |       FROM bsel),
-         |cnt AS (SELECT CAST(count(*) AS BIGINT) AS n_80,
-         |          CAST(sum(CASE WHEN c >= 0.9 THEN 1 ELSE 0 END) AS BIGINT) AS n_90,
-         |          CAST(sum(CASE WHEN c >= 0.95 THEN 1 ELSE 0 END) AS BIGINT) AS n_95,
-         |          CAST(sum(CASE WHEN c >= 0.99 THEN 1 ELSE 0 END) AS BIGINT) AS n_99
-         |        FROM sw)
-         |SELECT cnt.*, rc.* FROM cnt, rc""".stripMargin,
-
-    "emb_clusters" ->
-      s"""WITH RECURSIVE
-         |$LSH_PAIR_CTES,
-         |sym AS (SELECT id_a AS src, id_b AS dst FROM pr
-         |        UNION ALL SELECT id_b, id_a FROM pr),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-         |lbl AS (SELECT src AS vec_id, least(src, min(dst)) AS cluster_id
-         |        FROM reach GROUP BY src)
-         |SELECT v.vec_id AS vec_id, coalesce(l.cluster_id, v.vec_id) AS cluster_id
-         |FROM embeddings v LEFT JOIN lbl l ON v.vec_id = l.vec_id
-         |ORDER BY v.vec_id""".stripMargin,
-
-    // Mirrors the emb_keep_best registration: the emb_clusters
-    // reachability labels + the keep-best argmax (longest document text,
-    // ties → lowest vec_id) with n_chars joined from documents.
-    "emb_keep_best" ->
-      s"""WITH RECURSIVE
-         |$LSH_PAIR_CTES,
-         |sym AS (SELECT id_a AS src, id_b AS dst FROM pr
-         |        UNION ALL SELECT id_b, id_a FROM pr),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-         |lbl AS (SELECT src AS vec_id, least(src, min(dst)) AS cluster_id
-         |        FROM reach GROUP BY src),
-         |cl AS (SELECT v.vec_id, coalesce(l.cluster_id, v.vec_id) AS cluster_id, d.n_chars
-         |       FROM embeddings v JOIN documents d ON d.doc_id = v.vec_id
-         |            LEFT JOIN lbl l ON v.vec_id = l.vec_id)
-         |SELECT vec_id, cluster_id,
-         |       (row_number() OVER (PARTITION BY cluster_id
-         |          ORDER BY n_chars DESC, vec_id) = 1) AS kept
-         |FROM cl ORDER BY vec_id""".stripMargin,
-
-    "emb_knn" ->
-      s"""WITH $LSH_PAIR_CTES,
-         |prq AS (SELECT id_a, id_b, ${Q6("cos")} AS cos_sim FROM pr),
-         |sym AS (SELECT id_a AS vec_id, id_b AS nbr_id, cos_sim FROM prq
-         |        UNION ALL SELECT id_b, id_a, cos_sim FROM prq),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-         |                                   ORDER BY cos_sim DESC, nbr_id) AS rank
-         |      FROM sym)
-         |SELECT vec_id, nbr_id, CAST(rank AS BIGINT) AS rank, cos_sim
-         |FROM r WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin,
-
-    // Mirrors Vectors.lshLoad: the shared LSH bucket CTEs (bk — the
-    // unreferenced pair CTEs in the constant are never executed), then
-    // per-bucket loads and the per-table rollup.
-    "emb_lsh_load" ->
-      s"""WITH $LSH_PAIR_CTES,
-         |l AS (SELECT tbl, bucket, count(*) AS load FROM bk GROUP BY 1, 2)
-         |SELECT CAST(tbl AS BIGINT) AS tbl,
-         |       CAST(sum(load) AS BIGINT) AS n_items,
-         |       CAST(count(*) AS BIGINT) AS n_buckets,
-         |       CAST(max(load) AS BIGINT) AS max_load,
-         |       CAST(sum(load * (load - 1) // 2) AS BIGINT) AS cand_pairs
-         |FROM l GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Mirrors Vectors.knnPurity: the emb_knn CTE chain (LSH pair graph,
-    // symmetrized, per-vector rank ≤ 3), then label joins and a
-    // per-label conditional aggregate.
-    "emb_knn_purity" ->
-      s"""WITH $LSH_PAIR_CTES,
-         |prq AS (SELECT id_a, id_b, ${Q6("cos")} AS cos_sim FROM pr),
-         |sym AS (SELECT id_a AS vec_id, id_b AS nbr_id, cos_sim FROM prq
-         |        UNION ALL SELECT id_b, id_a, cos_sim FROM prq),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-         |                                   ORDER BY cos_sim DESC, nbr_id) AS rank
-         |      FROM sym),
-         |knn AS (SELECT vec_id, nbr_id FROM r WHERE rank <= 3),
-         |lj AS (SELECT CAST(la.label AS BIGINT) AS label, k.vec_id,
-         |              CASE WHEN la.label = lb.label THEN 1 ELSE 0 END AS same
-         |       FROM knn k JOIN embeddings la ON la.vec_id = k.vec_id
-         |                  JOIN embeddings lb ON lb.vec_id = k.nbr_id)
-         |SELECT label, CAST(count(DISTINCT vec_id) AS BIGINT) AS n_vecs,
-         |       CAST(count(*) AS BIGINT) AS n_edges,
-         |       CAST(sum(same) AS BIGINT) AS n_same,
-         |       ${Q6("CAST(sum(same) AS DOUBLE) / count(*)")} AS purity
-         |FROM lj GROUP BY label ORDER BY label""".stripMargin,
-
-    "emb_norms" ->
-      s"""SELECT vec_id, CAST(len(embedding) AS BIGINT) AS n_dims,
-         |       ${Q6(NORM_SQL)} AS l2_norm
-         |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    // per-dimension stats: index-exploded coordinates; means via exact
-    // integer micro-unit sums (HUGEINT ≡ the engine's DECIMAL accumulation)
-    "emb_dim_stats" ->
-      s"""WITH x AS (SELECT i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS x
-         |           FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS i) g)
-         |SELECT dim, min(x) AS d_min,
-         |       ${MEAN6(s"sum(${US6("x")})", "count(*)")} AS d_mean,
-         |       max(x) AS d_max, CAST(count(*) AS BIGINT) AS n
-         |FROM x GROUP BY dim ORDER BY dim""".stripMargin,
-
-    // mirrors Vectors.pcaPower through the Gram matrix: Σᵢ x̃ᵢ(x̃ᵢ·v) =
-    // (Σᵢ x̃ᵢx̃ᵢᵀ)v exactly in integer arithmetic, so G is precomputed
-    // once and the 5 rescaled iterations replay as 64×64 list math in a
-    // recursive CTE — identical integers to the engine's corpus passes
-    "emb_pca" ->
-      s"""WITH RECURSIVE
-         |x AS (SELECT vec_id, i AS k,
-         |        CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000.0, 0) AS BIGINT) AS xu
-         |      FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS i) g),
-         |muk AS (SELECT k, CAST(round(CAST(sum(xu) AS DOUBLE) / count(*), 0) AS BIGINT) AS m_us
-         |        FROM x GROUP BY k),
-         |xt AS (SELECT x.vec_id, x.k, x.xu - muk.m_us AS xq FROM x JOIN muk USING (k)),
-         |g AS (SELECT a.k AS ki, b.k AS kj, sum(CAST(a.xq AS HUGEINT) * b.xq) AS gv
-         |      FROM xt a JOIN xt b USING (vec_id) GROUP BY 1, 2),
-         |gm AS (SELECT list(gl ORDER BY ki) AS gmat
-         |       FROM (SELECT ki, list(gv ORDER BY kj) AS gl FROM g GROUP BY ki)),
-         |it AS (
-         |  SELECT 0 AS t, list_transform(generate_series(1, 64),
-         |           k -> CAST(1000000 AS HUGEINT)) AS v, gmat
-         |  FROM gm
-         |  UNION ALL
-         |  SELECT t + 1,
-         |    list_transform(mv, a ->
-         |      CASE WHEN list_max(list_transform(mv, q -> abs(q))) = 0
-         |           THEN CAST(0 AS HUGEINT)
-         |           ELSE CAST(round(CAST(a AS DOUBLE) /
-         |                  CAST(list_max(list_transform(mv, q -> abs(q))) AS DOUBLE)
-         |                  * 1000000.0, 0) AS HUGEINT) END),
-         |    gmat
-         |  FROM (SELECT t, gmat,
-         |          list_transform(generate_series(1, 64), k ->
-         |            list_sum(list_transform(generate_series(1, 64),
-         |              l -> gmat[k][l] * v[l]))) AS mv
-         |        FROM it WHERE t < 5) s
-         |),
-         |fin AS (SELECT v FROM it WHERE t = 5),
-         |den AS (SELECT list_sum(list_transform(v, a -> a * a)) AS den FROM fin),
-         |dots AS (SELECT xt.vec_id, sum(CAST(xt.xq AS HUGEINT) * fv.v[xt.k]) AS dot
-         |         FROM xt, fin fv GROUP BY xt.vec_id),
-         |nt AS (SELECT (SELECT sum(dot * dot) FROM dots) AS num,
-         |              (SELECT sum(CAST(xq AS HUGEINT) * xq) FROM xt) AS trace)
-         |SELECT muk.k - 1 AS dim,
-         |       CAST(muk.m_us AS DOUBLE) / 1000000.0 + 0 AS mean,
-         |       (CASE WHEN den.den = 0 THEN 0
-         |             ELSE CAST(fin.v[muk.k] AS DOUBLE) / sqrt(CAST(den.den AS DOUBLE)) END)
-         |         + 0 AS loading,
-         |       (CASE WHEN den.den = 0 OR nt.trace = 0 THEN 0
-         |             ELSE CAST(nt.num AS DOUBLE) /
-         |                  (CAST(den.den AS DOUBLE) * CAST(nt.trace AS DOUBLE)) END)
-         |         + 0 AS lambda_share
-         |FROM muk, fin, den, nt
-         |ORDER BY dim""".stripMargin,
-
-    // the centroid replays dimStats' exact-mean arithmetic, so the two
-    // engines agree on it bitwise; the cosine then mirrors DOT_SQL
-    "emb_centroid_sim" ->
-      s"""WITH x AS (SELECT i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS x
-         |           FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS i) g),
-         |c AS (SELECT dim, ${MEAN6(s"sum(${US6("x")})", "count(*)")} AS m
-         |      FROM x GROUP BY dim),
-         |cent AS (SELECT list(m ORDER BY dim) AS cvec FROM c),
-         |e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings)
-         |SELECT vec_id,
-         |       CASE WHEN nrm > 0 AND sqrt(${DOT_SQL("cvec", "cvec")}) > 0
-         |            THEN ${Q6(s"${DOT_SQL("embedding", "cvec")} / (nrm * sqrt(${DOT_SQL("cvec", "cvec")}))")}
-         |       END AS centroid_sim
-         |FROM e CROSS JOIN cent ORDER BY vec_id""".stripMargin,
-
-    // per-label centroids: the centroid_sim arithmetic grouped by label;
-    // cohesion averages the q6 member cosines via µ-unit integer sums
-    "emb_label_cohesion" ->
-      s"""WITH x AS (SELECT label, i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS x
-         |           FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS i) g),
-         |c AS (SELECT label, dim, ${MEAN6(s"sum(${US6("x")})", "count(*)")} AS m
-         |      FROM x GROUP BY 1, 2),
-         |v AS (SELECT label, list(m ORDER BY dim) AS cvec FROM c GROUP BY 1),
-         |e AS (SELECT label, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |s AS (SELECT e.label AS label,
-         |             CASE WHEN nrm > 0 AND sqrt(${DOT_SQL("cvec", "cvec")}) > 0
-         |                  THEN ${Q6(s"${DOT_SQL("embedding", "cvec")} / (nrm * sqrt(${DOT_SQL("cvec", "cvec")}))")}
-         |             END AS cos
-         |      FROM e JOIN v ON e.label = v.label),
-         |u AS (SELECT label, ${US6("cos")} AS us FROM s WHERE cos IS NOT NULL)
-         |SELECT label, CAST(count(*) AS BIGINT) AS n,
-         |       ${MEAN6("sum(us)", "count(*)")} AS mean_cos
-         |FROM u GROUP BY label ORDER BY label""".stripMargin,
-
-    // label-centroid cosine matrix — the same centroid CTE self-joined
-    "emb_label_sim" ->
-      s"""WITH x AS (SELECT label, i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS x
-         |           FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS i) g),
-         |c AS (SELECT label, dim, ${MEAN6(s"sum(${US6("x")})", "count(*)")} AS m
-         |      FROM x GROUP BY 1, 2),
-         |v AS (SELECT label, list(m ORDER BY dim) AS cvec FROM c GROUP BY 1)
-         |SELECT a.label AS label_a, b.label AS label_b,
-         |       CASE WHEN sqrt(${DOT_SQL("a.cvec", "a.cvec")}) > 0
-         |             AND sqrt(${DOT_SQL("b.cvec", "b.cvec")}) > 0
-         |            THEN ${Q6(s"${DOT_SQL("a.cvec", "b.cvec")} / (sqrt(${DOT_SQL("a.cvec", "a.cvec")}) * sqrt(${DOT_SQL("b.cvec", "b.cvec")}))")}
-         |       END AS sim
-         |FROM v a CROSS JOIN v b ORDER BY label_a, label_b""".stripMargin,
-
-    // centroid-cosine z-scores: the ts_anomaly moment recipe on the
-    // embedding axis, over the exactly-replayed centroid_sim
-    "emb_outliers" ->
-      s"""WITH x AS (SELECT i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS x
-         |           FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS i) g),
-         |c AS (SELECT dim, ${MEAN6(s"sum(${US6("x")})", "count(*)")} AS m
-         |      FROM x GROUP BY dim),
-         |cent AS (SELECT list(m ORDER BY dim) AS cvec FROM c),
-         |e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |s AS (SELECT vec_id,
-         |             CASE WHEN nrm > 0 AND sqrt(${DOT_SQL("cvec", "cvec")}) > 0
-         |                  THEN ${Q6(s"${DOT_SQL("embedding", "cvec")} / (nrm * sqrt(${DOT_SQL("cvec", "cvec")}))")}
-         |             END AS centroid_sim
-         |      FROM e CROSS JOIN cent),
-         |u AS (SELECT vec_id, centroid_sim, ${US6("centroid_sim")} AS us
-         |      FROM s WHERE centroid_sim IS NOT NULL),
-         |st AS (SELECT sum(us) AS s1, sum(CAST(us AS HUGEINT) * us) AS s2,
-         |              count(*) AS n FROM u),
-         |j AS (SELECT u.vec_id AS vec_id, u.centroid_sim AS centroid_sim, u.us AS us,
-         |             CAST(st.s1 AS DOUBLE) / st.n AS mean,
-         |             sqrt(CAST(st.s2 AS DOUBLE) / st.n
-         |                  - (CAST(st.s1 AS DOUBLE) / st.n) * (CAST(st.s1 AS DOUBLE) / st.n)) AS std
-         |      FROM u CROSS JOIN st)
-         |SELECT vec_id, centroid_sim, ${Q6("(CAST(us AS DOUBLE) - mean) / std")} AS z_score
-         |FROM j WHERE std > 0 AND abs((CAST(us AS DOUBLE) - mean) / std) >= 2.0
-         |ORDER BY vec_id""".stripMargin,
-
-    // SQ8: same per-dim min/max grid, same index-ordered error fold
-    "emb_sq8" ->
-      s"""WITH x AS (SELECT i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS x
-         |           FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS i) g),
-         |st AS (SELECT dim, min(x) AS mn, max(x) AS mx FROM x GROUP BY dim),
-         |arr AS (SELECT list(mn ORDER BY dim) AS mn,
-         |               list((mx - mn) / 255.0 ORDER BY dim) AS s FROM st),
-         |er AS (SELECT vec_id,
-         |              list_transform(generate_series(1, 64),
-         |                i -> CASE WHEN s[i] > 0
-         |                          THEN abs((CAST(embedding[i] AS DOUBLE) - mn[i])
-         |                                   - round((CAST(embedding[i] AS DOUBLE) - mn[i]) / s[i]) * s[i])
-         |                          ELSE abs(CAST(embedding[i] AS DOUBLE) - mn[i]) END) AS errs
-         |       FROM embeddings CROSS JOIN arr)
-         |SELECT vec_id, ${Q6("list_sum(errs) / 64.0")} AS mean_abs_err,
-         |       ${Q6("list_max(errs)")} AS max_abs_err
-         |FROM er ORDER BY vec_id""".stripMargin,
-
-    // mirrors Vectors.pqAudit: seed codebook = subvectors of vec_id < 16,
-    // direct index-ordered Σ(x−c)² fold, ties to the smallest code,
-    // per-subspace SSE → µ-units before the cross-subspace sum
-    "emb_pq" ->
-      s"""WITH sv AS (SELECT vec_id, j.s AS sub,
-         |              list_transform(generate_series(1, 8),
-         |                i -> CAST(embedding[CAST(j.s AS INT) * 8 + i] AS DOUBLE)) AS svec
-         |            FROM embeddings, (SELECT unnest(generate_series(0, 7)) AS s) j),
-         |cb AS (SELECT sub, CAST(vec_id AS INT) AS code, svec AS cvec FROM sv WHERE vec_id < 16),
-         |d AS (SELECT v.vec_id, v.sub, c.code,
-         |        list_sum(list_transform(generate_series(1, 8),
-         |          i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i]))) AS sse
-         |      FROM sv v JOIN cb c USING (sub)),
-         |r AS (SELECT vec_id, sub, code, sse,
-         |        row_number() OVER (PARTITION BY vec_id, sub ORDER BY sse, code) AS rn
-         |      FROM d),
-         |b AS (SELECT vec_id, sub, code, sse FROM r WHERE rn = 1)
-         |SELECT vec_id, string_agg(CAST(code AS VARCHAR), '-' ORDER BY sub) AS codes,
-         |       ${MEAN6(s"sum(${US6("sse")})", "64")} AS recon_mse
-         |FROM b GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    // mirrors Vectors.annPq: seed codebook from the 16 lowest-id CORPUS
-    // vectors, codes by the direct SSE argmin, per-query µ-unit distance
-    // tables, ADC = exact long sum of m lookups, top-32 → exact-cosine
-    // top-10 re-rank — every stage a deterministic total order
-    "emb_ann_pq" -> {
-      val sseQ = "list_sum(list_transform(generate_series(1, 8), " +
-        "i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i])))"
-      s"""WITH sv AS (SELECT vec_id, j.s AS sub,
-         |              list_transform(generate_series(1, 8),
-         |                i -> CAST(embedding[CAST(j.s AS INT) * 8 + i] AS DOUBLE)) AS svec
-         |            FROM embeddings, (SELECT unnest(generate_series(0, 7)) AS s) j),
-         |cb AS (SELECT sub, CAST(vec_id - 5 AS INT) AS code, svec AS cvec
-         |       FROM sv WHERE vec_id >= 5 AND vec_id < 21),
-         |d AS (SELECT v.vec_id, v.sub, c.code,
-         |        list_sum(list_transform(generate_series(1, 8),
-         |          i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i]))) AS sse
-         |      FROM sv v JOIN cb c USING (sub) WHERE v.vec_id >= 5),
-         |r AS (SELECT vec_id, sub, code,
-         |        row_number() OVER (PARTITION BY vec_id, sub ORDER BY sse, code) AS rn
-         |      FROM d),
-         |codes AS (SELECT vec_id AS n_id, sub, code FROM r WHERE rn = 1),
-         |qd AS (SELECT v.vec_id AS q_id, v.sub, c.code,
-         |         ${US6(sseQ)} AS dist_us
-         |       FROM sv v JOIN cb c USING (sub) WHERE v.vec_id < 5),
-         |adc AS (SELECT q_id, n_id, sum(dist_us) AS adc_us
-         |        FROM codes JOIN qd USING (sub, code) GROUP BY 1, 2),
-         |cand AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                     ORDER BY adc_us, n_id) AS rn
-         |         FROM adc),
-         |e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |x AS (SELECT c.q_id, c.n_id, c.adc_us,
-         |        ${DOT_SQL("q.embedding", "n.embedding")} / (q.nrm * n.nrm) AS cos
-         |      FROM cand c JOIN e q ON q.vec_id = c.q_id
-         |                  JOIN e n ON n.vec_id = c.n_id
-         |      WHERE c.rn <= 32),
-         |f AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                  ORDER BY cos DESC, n_id) AS rank
-         |      FROM x)
-         |SELECT q_id, n_id, CAST(rank AS BIGINT) AS rank,
-         |       CAST(adc_us AS DOUBLE) / 1000000.0 + 0 AS adc_dist,
-         |       ${Q6("cos")} AS cos_sim
-         |FROM f WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin
-    },
-
-    // Mirrors Vectors.annIvfPq: the emb_ann_ivf_served cell CTEs (cells,
-    // assignment ties cell DESC, probe ranking ties cell ASC) composed
-    // with the emb_ann_pq code chain — the ADC sum restricted to
-    // candidates whose cell is probed by the query.
-    "emb_ann_ivfpq" -> {
-      val sseQ = "list_sum(list_transform(generate_series(1, 8), " +
-        "i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i])))"
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |cc AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding AS cvec,
-         |             list_sum(list_transform(embedding,
-         |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS cn2
-         |      FROM e WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |aa AS (SELECT e.vec_id, c.cell
-         |      FROM e, cc c WHERE e.vec_id >= 5
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell DESC) = 1),
-         |iq AS (SELECT e.vec_id AS q_id, c.cell
-         |       FROM e, cc c WHERE e.vec_id < 5
-         |       QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |         ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell ASC) <= 4),
-         |sv AS (SELECT vec_id, j.s AS sub,
-         |              list_transform(generate_series(1, 8),
-         |                i -> CAST(embedding[CAST(j.s AS INT) * 8 + i] AS DOUBLE)) AS svec
-         |            FROM embeddings, (SELECT unnest(generate_series(0, 7)) AS s) j),
-         |cb AS (SELECT sub, CAST(vec_id - 5 AS INT) AS code, svec AS cvec
-         |       FROM sv WHERE vec_id >= 5 AND vec_id < 21),
-         |d AS (SELECT v.vec_id, v.sub, c.code,
-         |        list_sum(list_transform(generate_series(1, 8),
-         |          i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i]))) AS sse
-         |      FROM sv v JOIN cb c USING (sub) WHERE v.vec_id >= 5),
-         |r AS (SELECT vec_id, sub, code,
-         |        row_number() OVER (PARTITION BY vec_id, sub ORDER BY sse, code) AS rn
-         |      FROM d),
-         |codes AS (SELECT vec_id AS n_id, sub, code FROM r WHERE rn = 1),
-         |nc AS (SELECT codes.n_id, codes.sub, codes.code, aa.cell
-         |       FROM codes JOIN aa ON aa.vec_id = codes.n_id),
-         |qd AS (SELECT v.vec_id AS q_id, v.sub, c.code,
-         |         ${US6(sseQ)} AS dist_us
-         |       FROM sv v JOIN cb c USING (sub) WHERE v.vec_id < 5),
-         |adc AS (SELECT qd.q_id, nc.n_id, sum(qd.dist_us) AS adc_us
-         |        FROM nc JOIN qd USING (sub, code)
-         |             JOIN iq ON iq.q_id = qd.q_id AND iq.cell = nc.cell
-         |        GROUP BY 1, 2),
-         |cand AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                     ORDER BY adc_us, n_id) AS rn
-         |         FROM adc),
-         |x AS (SELECT c.q_id, c.n_id, c.adc_us,
-         |        ${DOT_SQL("q.embedding", "n.embedding")} / (q.nrm * n.nrm) AS cos
-         |      FROM cand c JOIN e q ON q.vec_id = c.q_id
-         |                  JOIN e n ON n.vec_id = c.n_id
-         |      WHERE c.rn <= 32),
-         |f AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                  ORDER BY cos DESC, n_id) AS rank
-         |      FROM x)
-         |SELECT q_id, n_id, CAST(rank AS BIGINT) AS rank,
-         |       CAST(adc_us AS DOUBLE) / 1000000.0 + 0 AS adc_dist,
-         |       ${Q6("cos")} AS cos_sim
-         |FROM f WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin
-    },
-
-    // Mirrors Vectors.annRecallIvfPq: the emb_ann_ivfpq CTE chain
-    // verbatim through the fused ranking `f`, the exact-top-k pair CTE
-    // (xp/exr), and the shared hit sums.
-    "emb_ann_ivfpq_recall" -> {
-      val sseQ = "list_sum(list_transform(generate_series(1, 8), " +
-        "i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i])))"
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |cc AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding AS cvec,
-         |             list_sum(list_transform(embedding,
-         |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS cn2
-         |      FROM e WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |aa AS (SELECT e.vec_id, c.cell
-         |      FROM e, cc c WHERE e.vec_id >= 5
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell DESC) = 1),
-         |iq AS (SELECT e.vec_id AS q_id, c.cell
-         |       FROM e, cc c WHERE e.vec_id < 5
-         |       QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |         ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell ASC) <= 4),
-         |sv AS (SELECT vec_id, j.s AS sub,
-         |              list_transform(generate_series(1, 8),
-         |                i -> CAST(embedding[CAST(j.s AS INT) * 8 + i] AS DOUBLE)) AS svec
-         |            FROM embeddings, (SELECT unnest(generate_series(0, 7)) AS s) j),
-         |cb AS (SELECT sub, CAST(vec_id - 5 AS INT) AS code, svec AS cvec
-         |       FROM sv WHERE vec_id >= 5 AND vec_id < 21),
-         |d AS (SELECT v.vec_id, v.sub, c.code,
-         |        list_sum(list_transform(generate_series(1, 8),
-         |          i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i]))) AS sse
-         |      FROM sv v JOIN cb c USING (sub) WHERE v.vec_id >= 5),
-         |r AS (SELECT vec_id, sub, code,
-         |        row_number() OVER (PARTITION BY vec_id, sub ORDER BY sse, code) AS rn
-         |      FROM d),
-         |codes AS (SELECT vec_id AS n_id, sub, code FROM r WHERE rn = 1),
-         |nc AS (SELECT codes.n_id, codes.sub, codes.code, aa.cell
-         |       FROM codes JOIN aa ON aa.vec_id = codes.n_id),
-         |qd AS (SELECT v.vec_id AS q_id, v.sub, c.code,
-         |         ${US6(sseQ)} AS dist_us
-         |       FROM sv v JOIN cb c USING (sub) WHERE v.vec_id < 5),
-         |adc AS (SELECT qd.q_id, nc.n_id, sum(qd.dist_us) AS adc_us
-         |        FROM nc JOIN qd USING (sub, code)
-         |             JOIN iq ON iq.q_id = qd.q_id AND iq.cell = nc.cell
-         |        GROUP BY 1, 2),
-         |cand AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                     ORDER BY adc_us, n_id) AS rn
-         |         FROM adc),
-         |x AS (SELECT c.q_id, c.n_id,
-         |        ${DOT_SQL("q.embedding", "n.embedding")} / (q.nrm * n.nrm) AS cos
-         |      FROM cand c JOIN e q ON q.vec_id = c.q_id
-         |                  JOIN e n ON n.vec_id = c.n_id
-         |      WHERE c.rn <= 32),
-         |f AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                  ORDER BY cos DESC, n_id) AS rank
-         |      FROM x),
-         |xp AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |             ${DOT_SQL("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |       FROM e q JOIN e c ON q.vec_id < 5 AND c.vec_id >= 5),
-         |exr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |        FROM xp),
-         |jx AS (SELECT x2.q_id, x2.rank AS rank_exact, l.rank AS rank_approx
-         |       FROM (SELECT * FROM exr WHERE rank <= 10) x2
-         |       LEFT JOIN (SELECT q_id, n_id, rank FROM f WHERE rank <= 10) l
-         |         ON x2.q_id = l.q_id AND x2.n_id = l.n_id),
-         |h AS (SELECT sum(CASE WHEN rank_exact <= 1 AND rank_approx <= 1 THEN 1 ELSE 0 END) AS hits_1,
-         |             sum(CASE WHEN rank_exact <= 5 AND rank_approx <= 5 THEN 1 ELSE 0 END) AS hits_5,
-         |             sum(CASE WHEN rank_exact <= 10 AND rank_approx <= 10 THEN 1 ELSE 0 END) AS hits_10,
-         |             count(DISTINCT q_id) AS n_q
-         |      FROM jx)
-         |SELECT CAST(n_q AS BIGINT) AS n_q,
-         |       CAST(hits_1 AS BIGINT) AS hits_1,
-         |       ${Q6("CAST(hits_1 AS DOUBLE) / (n_q * 1)")} AS recall_1,
-         |       CAST(hits_5 AS BIGINT) AS hits_5,
-         |       ${Q6("CAST(hits_5 AS DOUBLE) / (n_q * 5)")} AS recall_5,
-         |       CAST(hits_10 AS BIGINT) AS hits_10,
-         |       ${Q6("CAST(hits_10 AS DOUBLE) / (n_q * 10)")} AS recall_10
-         |FROM h""".stripMargin
-    },
-
-    // Mirrors Vectors.annRecallPq: the emb_ann_pq CTE chain verbatim,
-    // the exact-top-k pair CTE (fresh names xp/exr beside the PQ chain's
-    // e), and the shared hit sums.
-    "emb_ann_pq_recall" -> {
-      val sseQ = "list_sum(list_transform(generate_series(1, 8), " +
-        "i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i])))"
-      s"""WITH sv AS (SELECT vec_id, j.s AS sub,
-         |              list_transform(generate_series(1, 8),
-         |                i -> CAST(embedding[CAST(j.s AS INT) * 8 + i] AS DOUBLE)) AS svec
-         |            FROM embeddings, (SELECT unnest(generate_series(0, 7)) AS s) j),
-         |cb AS (SELECT sub, CAST(vec_id - 5 AS INT) AS code, svec AS cvec
-         |       FROM sv WHERE vec_id >= 5 AND vec_id < 21),
-         |d AS (SELECT v.vec_id, v.sub, c.code,
-         |        list_sum(list_transform(generate_series(1, 8),
-         |          i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i]))) AS sse
-         |      FROM sv v JOIN cb c USING (sub) WHERE v.vec_id >= 5),
-         |r AS (SELECT vec_id, sub, code,
-         |        row_number() OVER (PARTITION BY vec_id, sub ORDER BY sse, code) AS rn
-         |      FROM d),
-         |codes AS (SELECT vec_id AS n_id, sub, code FROM r WHERE rn = 1),
-         |qd AS (SELECT v.vec_id AS q_id, v.sub, c.code,
-         |         ${US6(sseQ)} AS dist_us
-         |       FROM sv v JOIN cb c USING (sub) WHERE v.vec_id < 5),
-         |adc AS (SELECT q_id, n_id, sum(dist_us) AS adc_us
-         |        FROM codes JOIN qd USING (sub, code) GROUP BY 1, 2),
-         |cand AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                     ORDER BY adc_us, n_id) AS rn
-         |         FROM adc),
-         |e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |x AS (SELECT c.q_id, c.n_id,
-         |        ${DOT_SQL("q.embedding", "n.embedding")} / (q.nrm * n.nrm) AS cos
-         |      FROM cand c JOIN e q ON q.vec_id = c.q_id
-         |                  JOIN e n ON n.vec_id = c.n_id
-         |      WHERE c.rn <= 32),
-         |f AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                  ORDER BY cos DESC, n_id) AS rank
-         |      FROM x),
-         |xp AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |             ${DOT_SQL("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |       FROM e q JOIN e c ON q.vec_id < 5 AND c.vec_id >= 5),
-         |exr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |        FROM xp),
-         |jx AS (SELECT x2.q_id, x2.rank AS rank_exact, l.rank AS rank_approx
-         |       FROM (SELECT * FROM exr WHERE rank <= 10) x2
-         |       LEFT JOIN (SELECT q_id, n_id, rank FROM f WHERE rank <= 10) l
-         |         ON x2.q_id = l.q_id AND x2.n_id = l.n_id),
-         |h AS (SELECT sum(CASE WHEN rank_exact <= 1 AND rank_approx <= 1 THEN 1 ELSE 0 END) AS hits_1,
-         |             sum(CASE WHEN rank_exact <= 5 AND rank_approx <= 5 THEN 1 ELSE 0 END) AS hits_5,
-         |             sum(CASE WHEN rank_exact <= 10 AND rank_approx <= 10 THEN 1 ELSE 0 END) AS hits_10,
-         |             count(DISTINCT q_id) AS n_q
-         |      FROM jx)
-         |SELECT CAST(n_q AS BIGINT) AS n_q,
-         |       CAST(hits_1 AS BIGINT) AS hits_1,
-         |       ${Q6("CAST(hits_1 AS DOUBLE) / (n_q * 1)")} AS recall_1,
-         |       CAST(hits_5 AS BIGINT) AS hits_5,
-         |       ${Q6("CAST(hits_5 AS DOUBLE) / (n_q * 5)")} AS recall_5,
-         |       CAST(hits_10 AS BIGINT) AS hits_10,
-         |       ${Q6("CAST(hits_10 AS DOUBLE) / (n_q * 10)")} AS recall_10
-         |FROM h""".stripMargin
-    },
-
-    // Mirrors Vectors.annRecallBitq: the emb_ann_bitq CTE chain verbatim
-    // (sign-word fold, Hamming prescreen row_number ≤ 50, exact re-rank)
-    // beside the exact-top-k pair CTE, and the shared hit sums (named hh
-    // — the bitq chain already uses h for its Hamming pairs).
-    "emb_ann_bitq_recall" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |p AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |             ${DOT_SQL("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |      FROM e q JOIN e c ON q.vec_id < 5 AND c.vec_id >= 5),
-         |exr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |       FROM p),
-         |c AS (SELECT vec_id,
-         |        list_sum(list_transform(generate_series(1, 32), i ->
-         |          CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i)) ELSE 0::BIGINT END)) AS lo,
-         |        list_sum(list_transform(generate_series(1, 32), i ->
-         |          CASE WHEN embedding[i + 32] > 0 THEN (1::BIGINT << (32 - i)) ELSE 0::BIGINT END)) AS hi
-         |      FROM e),
-         |h AS (SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-         |             CAST(bit_count(xor(q.lo, n.lo)) + bit_count(xor(q.hi, n.hi)) AS BIGINT) AS hamming
-         |      FROM c q JOIN c n ON q.vec_id < 5 AND n.vec_id >= 5),
-         |pre AS (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY hamming, n_id) AS hr FROM h),
-         |r AS (SELECT p.q_id, p.n_id,
-         |             ${DOT_SQL("q.embedding", "n.embedding")} / (q.nrm * n.nrm) AS cos
-         |      FROM pre p JOIN e q ON q.vec_id = p.q_id JOIN e n ON n.vec_id = p.n_id
-         |      WHERE p.hr <= 50),
-         |bqr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank FROM r),
-         |jx AS (SELECT x.q_id, x.rank AS rank_exact, l.rank AS rank_approx
-         |       FROM (SELECT * FROM exr WHERE rank <= 10) x
-         |       LEFT JOIN (SELECT * FROM bqr WHERE rank <= 10) l
-         |         ON x.q_id = l.q_id AND x.n_id = l.n_id),
-         |hh AS (SELECT sum(CASE WHEN rank_exact <= 1 AND rank_approx <= 1 THEN 1 ELSE 0 END) AS hits_1,
-         |             sum(CASE WHEN rank_exact <= 5 AND rank_approx <= 5 THEN 1 ELSE 0 END) AS hits_5,
-         |             sum(CASE WHEN rank_exact <= 10 AND rank_approx <= 10 THEN 1 ELSE 0 END) AS hits_10,
-         |             count(DISTINCT q_id) AS n_q
-         |      FROM jx)
-         |SELECT CAST(n_q AS BIGINT) AS n_q,
-         |       CAST(hits_1 AS BIGINT) AS hits_1,
-         |       ${Q6("CAST(hits_1 AS DOUBLE) / (n_q * 1)")} AS recall_1,
-         |       CAST(hits_5 AS BIGINT) AS hits_5,
-         |       ${Q6("CAST(hits_5 AS DOUBLE) / (n_q * 5)")} AS recall_5,
-         |       CAST(hits_10 AS BIGINT) AS hits_10,
-         |       ${Q6("CAST(hits_10 AS DOUBLE) / (n_q * 10)")} AS recall_10
-         |FROM hh""".stripMargin,
-
-    "emb_ann_topk" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |p AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |             ${DOT_SQL("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |      FROM e q JOIN e c ON q.vec_id < 5 AND c.vec_id >= 5),
-         |r AS (SELECT q_id, n_id, cos,
-         |             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |      FROM p)
-         |SELECT q_id, n_id, CAST(rank AS BIGINT) AS rank, ${Q6("cos")} AS cos_sim
-         |FROM r WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-
-    // Mirrors graft.sim.Vectors.annLsh exactly: hyperplane component
-    // (t, b, d) = md5_number_lower('lsh|t|b|d') mapped to [-0.5, 0.5), sign
-    // bits → per-table bucket, query probes its bucket plus all 1-bit flips,
-    // candidates exact-cosine reranked. The driver computes the same md5-
-    // derived planes, so buckets and cosines agree bit-for-bit.
-    "emb_ann_lsh" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |bk AS (SELECT e.vec_id, t.t AS tbl,
-         |         CAST(list_sum(list_transform(generate_series(0, 3), bb ->
-         |           CASE WHEN list_sum(list_transform(generate_series(1, 64), dd ->
-         |                  CAST(e.embedding[dd] AS DOUBLE) * ${PLANE_SQL("t.t", "bb", "dd - 1")})) > 0
-         |                THEN (1 << bb) ELSE 0 END)) AS BIGINT) AS bucket
-         |       FROM e, (SELECT unnest(generate_series(0, 7)) AS t) t),
-         |qp AS (SELECT b.vec_id, b.tbl, xor(b.bucket, f.f) AS bucket
-         |       FROM bk b, (SELECT unnest([0, 1, 2, 4, 8]) AS f) f
-         |       WHERE b.vec_id < 5),
-         |cand AS (SELECT DISTINCT q.vec_id AS id_a, c.vec_id AS id_b
-         |         FROM qp q JOIN bk c ON q.tbl = c.tbl AND q.bucket = c.bucket
-         |         WHERE c.vec_id >= 5),
-         |r AS (SELECT id_a, id_b,
-         |             ${DOT_SQL("qa.embedding", "cb.embedding")} / (qa.nrm * cb.nrm) AS cos
-         |      FROM cand JOIN e qa ON qa.vec_id = id_a JOIN e cb ON cb.vec_id = id_b),
-         |rk AS (SELECT id_a, id_b, cos,
-         |              row_number() OVER (PARTITION BY id_a ORDER BY cos DESC, id_b) AS rank
-         |       FROM r)
-         |SELECT id_a AS q_id, id_b AS n_id, CAST(rank AS BIGINT) AS rank, ${Q6("cos")} AS cos_sim
-         |FROM rk WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-
-    // Mirrors Vectors.annRecall: the exact-top-10 and LSH-top-10 CTEs
-    // (the emb_ann_topk / emb_ann_lsh oracles verbatim), one left join on
-    // (q_id, n_id), conditional hit sums at cutoffs 1/5/10.
-    "emb_ann_recall" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |p AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |             ${DOT_SQL("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |      FROM e q JOIN e c ON q.vec_id < 5 AND c.vec_id >= 5),
-         |exr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |       FROM p),
-         |bk AS (SELECT e.vec_id, t.t AS tbl,
-         |         CAST(list_sum(list_transform(generate_series(0, 3), bb ->
-         |           CASE WHEN list_sum(list_transform(generate_series(1, 64), dd ->
-         |                  CAST(e.embedding[dd] AS DOUBLE) * ${PLANE_SQL("t.t", "bb", "dd - 1")})) > 0
-         |                THEN (1 << bb) ELSE 0 END)) AS BIGINT) AS bucket
-         |       FROM e, (SELECT unnest(generate_series(0, 7)) AS t) t),
-         |qp AS (SELECT b.vec_id, b.tbl, xor(b.bucket, f.f) AS bucket
-         |       FROM bk b, (SELECT unnest([0, 1, 2, 4, 8]) AS f) f
-         |       WHERE b.vec_id < 5),
-         |cand AS (SELECT DISTINCT q.vec_id AS id_a, c.vec_id AS id_b
-         |         FROM qp q JOIN bk c ON q.tbl = c.tbl AND q.bucket = c.bucket
-         |         WHERE c.vec_id >= 5),
-         |r AS (SELECT id_a, id_b,
-         |             ${DOT_SQL("qa.embedding", "cb.embedding")} / (qa.nrm * cb.nrm) AS cos
-         |      FROM cand JOIN e qa ON qa.vec_id = id_a JOIN e cb ON cb.vec_id = id_b),
-         |lshr AS (SELECT id_a AS q_id, id_b AS n_id,
-         |              row_number() OVER (PARTITION BY id_a ORDER BY cos DESC, id_b) AS rank
-         |       FROM r),
-         |jx AS (SELECT x.q_id, x.rank AS rank_exact, l.rank AS rank_lsh
-         |       FROM (SELECT * FROM exr WHERE rank <= 10) x
-         |       LEFT JOIN (SELECT * FROM lshr WHERE rank <= 10) l
-         |         ON x.q_id = l.q_id AND x.n_id = l.n_id),
-         |h AS (SELECT sum(CASE WHEN rank_exact <= 1 AND rank_lsh <= 1 THEN 1 ELSE 0 END) AS hits_1,
-         |             sum(CASE WHEN rank_exact <= 5 AND rank_lsh <= 5 THEN 1 ELSE 0 END) AS hits_5,
-         |             sum(CASE WHEN rank_exact <= 10 AND rank_lsh <= 10 THEN 1 ELSE 0 END) AS hits_10,
-         |             count(DISTINCT q_id) AS n_q
-         |      FROM jx)
-         |SELECT CAST(n_q AS BIGINT) AS n_q,
-         |       CAST(hits_1 AS BIGINT) AS hits_1,
-         |       ${Q6("CAST(hits_1 AS DOUBLE) / (n_q * 1)")} AS recall_1,
-         |       CAST(hits_5 AS BIGINT) AS hits_5,
-         |       ${Q6("CAST(hits_5 AS DOUBLE) / (n_q * 5)")} AS recall_5,
-         |       CAST(hits_10 AS BIGINT) AS hits_10,
-         |       ${Q6("CAST(hits_10 AS DOUBLE) / (n_q * 10)")} AS recall_10
-         |FROM h""".stripMargin,
-
-    // Mirrors Vectors.annRecallIvf: the exact-top-k CTE from the LSH
-    // recall oracle joined against the emb_ann_ivf_served CTEs (probe
-    // CTE renamed iq to avoid the exact-pair alias), same hit sums.
-    "emb_ann_ivf_recall" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |p AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |             ${DOT_SQL("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |      FROM e q JOIN e c ON q.vec_id < 5 AND c.vec_id >= 5),
-         |exr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |       FROM p),
-         |c AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding AS cvec,
-         |             list_sum(list_transform(embedding,
-         |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS cn2
-         |      FROM e WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |a AS (SELECT e.vec_id, e.embedding, e.nrm, c.cell
-         |      FROM e, c WHERE e.vec_id >= 5
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell DESC) = 1),
-         |iq AS (SELECT e.vec_id, e.embedding, e.nrm, c.cell
-         |       FROM e, c WHERE e.vec_id < 5
-         |       QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |         ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell ASC) <= 4),
-         |r AS (SELECT iq.vec_id AS q_id, a.vec_id AS n_id,
-         |             ${DOT_SQL("iq.embedding", "a.embedding")} / (iq.nrm * a.nrm) AS cos
-         |      FROM iq JOIN a ON iq.cell = a.cell),
-         |ivfr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |       FROM r),
-         |jx AS (SELECT x.q_id, x.rank AS rank_exact, l.rank AS rank_approx
-         |       FROM (SELECT * FROM exr WHERE rank <= 10) x
-         |       LEFT JOIN (SELECT * FROM ivfr WHERE rank <= 10) l
-         |         ON x.q_id = l.q_id AND x.n_id = l.n_id),
-         |h AS (SELECT sum(CASE WHEN rank_exact <= 1 AND rank_approx <= 1 THEN 1 ELSE 0 END) AS hits_1,
-         |             sum(CASE WHEN rank_exact <= 5 AND rank_approx <= 5 THEN 1 ELSE 0 END) AS hits_5,
-         |             sum(CASE WHEN rank_exact <= 10 AND rank_approx <= 10 THEN 1 ELSE 0 END) AS hits_10,
-         |             count(DISTINCT q_id) AS n_q
-         |      FROM jx)
-         |SELECT CAST(n_q AS BIGINT) AS n_q,
-         |       CAST(hits_1 AS BIGINT) AS hits_1,
-         |       ${Q6("CAST(hits_1 AS DOUBLE) / (n_q * 1)")} AS recall_1,
-         |       CAST(hits_5 AS BIGINT) AS hits_5,
-         |       ${Q6("CAST(hits_5 AS DOUBLE) / (n_q * 5)")} AS recall_5,
-         |       CAST(hits_10 AS BIGINT) AS hits_10,
-         |       ${Q6("CAST(hits_10 AS DOUBLE) / (n_q * 10)")} AS recall_10
-         |FROM h""".stripMargin,
-
-    // Mirrors Vectors.ivfProbeCurve: the ivf_recall CTEs with the probe
-    // rank kept per candidate (pr), a probe-depth values table, per-depth
-    // approx ranks as filters over the ONE candidate set, and the recall
-    // sums grouped by depth. Assignment ties → cell DESC (engine argmax
-    // via max(struct)), probe ranking ties → cell ASC (engine window).
-    "emb_ivf_probe_curve" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |p0 AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |             ${DOT_SQL("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |      FROM e q JOIN e c ON q.vec_id < 5 AND c.vec_id >= 5),
-         |exr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |       FROM p0),
-         |c AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding AS cvec,
-         |             list_sum(list_transform(embedding,
-         |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS cn2
-         |      FROM e WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |a AS (SELECT e.vec_id, e.embedding, e.nrm, c.cell
-         |      FROM e, c WHERE e.vec_id >= 5
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell DESC) = 1),
-         |iq AS (SELECT * FROM (
-         |         SELECT e.vec_id, e.embedding, e.nrm, c.cell,
-         |                row_number() OVER (PARTITION BY e.vec_id
-         |                  ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell ASC) AS pr
-         |         FROM e, c WHERE e.vec_id < 5) WHERE pr <= 16),
-         |cand AS (SELECT iq.vec_id AS q_id, a.vec_id AS n_id, iq.pr,
-         |              ${DOT_SQL("iq.embedding", "a.embedding")} / (iq.nrm * a.nrm) AS cos
-         |         FROM iq JOIN a ON iq.cell = a.cell),
-         |pv AS (SELECT unnest([1, 2, 4, 8, 16]) AS p),
-         |ar AS (SELECT pv.p, cand.q_id, cand.n_id,
-         |              row_number() OVER (PARTITION BY pv.p, cand.q_id
-         |                ORDER BY cand.cos DESC, cand.n_id) AS rank
-         |       FROM cand JOIN pv ON cand.pr <= pv.p),
-         |jx AS (SELECT pv.p, x.q_id, x.rank AS rank_exact, l.rank AS rank_approx
-         |       FROM pv CROSS JOIN (SELECT * FROM exr WHERE rank <= 10) x
-         |       LEFT JOIN (SELECT * FROM ar WHERE rank <= 10) l
-         |         ON l.p = pv.p AND x.q_id = l.q_id AND x.n_id = l.n_id),
-         |h AS (SELECT p,
-         |             sum(CASE WHEN rank_exact <= 1 AND rank_approx <= 1 THEN 1 ELSE 0 END) AS hits_1,
-         |             sum(CASE WHEN rank_exact <= 5 AND rank_approx <= 5 THEN 1 ELSE 0 END) AS hits_5,
-         |             sum(CASE WHEN rank_exact <= 10 AND rank_approx <= 10 THEN 1 ELSE 0 END) AS hits_10,
-         |             count(DISTINCT q_id) AS n_q
-         |      FROM jx GROUP BY p)
-         |SELECT CAST(p AS BIGINT) AS n_probe, CAST(n_q AS BIGINT) AS n_q,
-         |       CAST(hits_1 AS BIGINT) AS hits_1,
-         |       ${Q6("CAST(hits_1 AS DOUBLE) / (n_q * 1)")} AS recall_1,
-         |       CAST(hits_5 AS BIGINT) AS hits_5,
-         |       ${Q6("CAST(hits_5 AS DOUBLE) / (n_q * 5)")} AS recall_5,
-         |       CAST(hits_10 AS BIGINT) AS hits_10,
-         |       ${Q6("CAST(hits_10 AS DOUBLE) / (n_q * 10)")} AS recall_10
-         |FROM h ORDER BY n_probe""".stripMargin,
-
-    // Mirrors Vectors.pqRerankCurve: the emb_ann_pq CTE chain down to
-    // the ADC sums, one ADC rank at the deepest depth (64), cosine on
-    // those survivors only, then a rerank values table — every shallower
-    // depth re-ranks the same candidate frame, recall sums per depth.
-    "emb_pq_rerank_curve" -> {
-      val sseQ = "list_sum(list_transform(generate_series(1, 8), " +
-        "i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i])))"
-      s"""WITH sv AS (SELECT vec_id, j.s AS sub,
-         |              list_transform(generate_series(1, 8),
-         |                i -> CAST(embedding[CAST(j.s AS INT) * 8 + i] AS DOUBLE)) AS svec
-         |            FROM embeddings, (SELECT unnest(generate_series(0, 7)) AS s) j),
-         |cb AS (SELECT sub, CAST(vec_id - 5 AS INT) AS code, svec AS cvec
-         |       FROM sv WHERE vec_id >= 5 AND vec_id < 21),
-         |d AS (SELECT v.vec_id, v.sub, c.code,
-         |        list_sum(list_transform(generate_series(1, 8),
-         |          i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i]))) AS sse
-         |      FROM sv v JOIN cb c USING (sub) WHERE v.vec_id >= 5),
-         |r AS (SELECT vec_id, sub, code,
-         |        row_number() OVER (PARTITION BY vec_id, sub ORDER BY sse, code) AS rn
-         |      FROM d),
-         |codes AS (SELECT vec_id AS n_id, sub, code FROM r WHERE rn = 1),
-         |qd AS (SELECT v.vec_id AS q_id, v.sub, c.code,
-         |         ${US6(sseQ)} AS dist_us
-         |       FROM sv v JOIN cb c USING (sub) WHERE v.vec_id < 5),
-         |adc AS (SELECT q_id, n_id, sum(dist_us) AS adc_us
-         |        FROM codes JOIN qd USING (sub, code) GROUP BY 1, 2),
-         |cand AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                     ORDER BY adc_us, n_id) AS ar
-         |         FROM adc),
-         |e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |x AS (SELECT c.q_id, c.n_id, c.ar,
-         |        ${DOT_SQL("q.embedding", "n.embedding")} / (q.nrm * n.nrm) AS cos
-         |      FROM cand c JOIN e q ON q.vec_id = c.q_id
-         |                  JOIN e n ON n.vec_id = c.n_id
-         |      WHERE c.ar <= 64),
-         |p0 AS (SELECT q.vec_id AS q_id, c2.vec_id AS n_id,
-         |             ${DOT_SQL("q.embedding", "c2.embedding")} / (q.nrm * c2.nrm) AS cos
-         |      FROM e q JOIN e c2 ON q.vec_id < 5 AND c2.vec_id >= 5),
-         |exr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |       FROM p0),
-         |rv AS (SELECT unnest([8, 16, 32, 64]) AS rr),
-         |apr AS (SELECT rv.rr, x.q_id, x.n_id,
-         |              row_number() OVER (PARTITION BY rv.rr, x.q_id
-         |                ORDER BY x.cos DESC, x.n_id) AS rank
-         |       FROM x JOIN rv ON x.ar <= rv.rr),
-         |jx AS (SELECT rv.rr, ex.q_id, ex.rank AS rank_exact, l.rank AS rank_approx
-         |       FROM rv CROSS JOIN (SELECT * FROM exr WHERE rank <= 10) ex
-         |       LEFT JOIN (SELECT * FROM apr WHERE rank <= 10) l
-         |         ON l.rr = rv.rr AND ex.q_id = l.q_id AND ex.n_id = l.n_id),
-         |hh AS (SELECT rr,
-         |             sum(CASE WHEN rank_exact <= 1 AND rank_approx <= 1 THEN 1 ELSE 0 END) AS hits_1,
-         |             sum(CASE WHEN rank_exact <= 5 AND rank_approx <= 5 THEN 1 ELSE 0 END) AS hits_5,
-         |             sum(CASE WHEN rank_exact <= 10 AND rank_approx <= 10 THEN 1 ELSE 0 END) AS hits_10,
-         |             count(DISTINCT q_id) AS n_q
-         |      FROM jx GROUP BY rr)
-         |SELECT CAST(rr AS BIGINT) AS rerank, CAST(n_q AS BIGINT) AS n_q,
-         |       CAST(hits_1 AS BIGINT) AS hits_1,
-         |       ${Q6("CAST(hits_1 AS DOUBLE) / (n_q * 1)")} AS recall_1,
-         |       CAST(hits_5 AS BIGINT) AS hits_5,
-         |       ${Q6("CAST(hits_5 AS DOUBLE) / (n_q * 5)")} AS recall_5,
-         |       CAST(hits_10 AS BIGINT) AS hits_10,
-         |       ${Q6("CAST(hits_10 AS DOUBLE) / (n_q * 10)")} AS recall_10
-         |FROM hh ORDER BY rerank""".stripMargin
-    },
-
-    // Mirrors Vectors.pqBalance(nQueries = 5): CORPUS-side seed codebook
-    // (16 lowest corpus vec_ids ≥ 5, densely coded in id order — the
-    // exact codebook emb_ann_pq_recall serves from), corpus-only argmin
-    // assignment, per-cell counts grid-joined against the codebook's own
-    // cells so zero-usage cells surface, 1-row corpus total.
-    "emb_pq_balance" ->
-      s"""WITH sv AS (SELECT vec_id, j.s AS sub,
-         |              list_transform(generate_series(1, 8),
-         |                i -> CAST(embedding[CAST(j.s AS INT) * 8 + i] AS DOUBLE)) AS svec
-         |            FROM (SELECT * FROM embeddings WHERE vec_id >= 5) emb5,
-         |                 (SELECT unnest(generate_series(0, 7)) AS s) j),
-         |seeds AS (SELECT vec_id, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code
-         |          FROM (SELECT vec_id FROM embeddings WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16)),
-         |cb AS (SELECT v.sub, s.code, v.svec AS cvec
-         |       FROM sv v JOIN seeds s USING (vec_id)),
-         |d AS (SELECT v.vec_id, v.sub, c.code,
-         |        list_sum(list_transform(generate_series(1, 8),
-         |          i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i]))) AS sse
-         |      FROM sv v JOIN cb c USING (sub)),
-         |r AS (SELECT vec_id, sub, code,
-         |        row_number() OVER (PARTITION BY vec_id, sub ORDER BY sse, code) AS rn
-         |      FROM d),
-         |cnt AS (SELECT sub, code, count(*) AS n FROM r WHERE rn = 1 GROUP BY 1, 2),
-         |tot AS (SELECT count(*) AS total FROM embeddings WHERE vec_id >= 5)
-         |SELECT CAST(g.sub AS BIGINT) AS sub, CAST(g.code AS BIGINT) AS code,
-         |       CAST(coalesce(cnt.n, 0) AS BIGINT) AS n_vecs,
-         |       ${Q6("CAST(coalesce(cnt.n, 0) AS DOUBLE) / total")} AS share
-         |FROM (SELECT DISTINCT sub, code FROM cb) g
-         |LEFT JOIN cnt USING (sub, code) CROSS JOIN tot
-         |ORDER BY sub, code""".stripMargin,
-
-    // Mirrors Vectors.annBitq: sign-bit codes as two 32-bit words folded
-    // MSB-first (Σ b_i·2^(32−i) — the sum form of the engine's acc*2+b
-    // fold, never overflowing signed 64-bit), integer Hamming prescreen
-    // keeps the top 50 per query (ties → lowest n_id), exact cosine in
-    // DOT_SQL's index order re-ranks the survivors.
-    "emb_ann_bitq" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |c AS (SELECT vec_id,
-         |        list_sum(list_transform(generate_series(1, 32), i ->
-         |          CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (32 - i)) ELSE 0::BIGINT END)) AS lo,
-         |        list_sum(list_transform(generate_series(1, 32), i ->
-         |          CASE WHEN embedding[i + 32] > 0 THEN (1::BIGINT << (32 - i)) ELSE 0::BIGINT END)) AS hi
-         |      FROM e),
-         |h AS (SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-         |             CAST(bit_count(xor(q.lo, n.lo)) + bit_count(xor(q.hi, n.hi)) AS BIGINT) AS hamming
-         |      FROM c q JOIN c n ON q.vec_id < 5 AND n.vec_id >= 5),
-         |pre AS (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY hamming, n_id) AS hr FROM h),
-         |r AS (SELECT p.q_id, p.n_id, p.hamming,
-         |             ${DOT_SQL("q.embedding", "n.embedding")} / (q.nrm * n.nrm) AS cos
-         |      FROM pre p JOIN e q ON q.vec_id = p.q_id JOIN e n ON n.vec_id = p.n_id
-         |      WHERE p.hr <= 50),
-         |rk AS (SELECT q_id, n_id, hamming, cos,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank FROM r)
-         |SELECT q_id, n_id, CAST(rank AS BIGINT) AS rank, hamming, ${Q6("cos")} AS cos_sim
-         |FROM rk WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-
-    // Mirrors Vectors.mrlAudit: prefix-energy fraction per truncation dim,
-    // index-ordered prefix sums of squares, micro-unit mean per the Quant
-    // contract (sum(BIGINT) → HUGEINT → DOUBLE rounds nearest like the
-    // engine's DECIMAL(38,0) → DOUBLE cast).
-    "emb_mrl" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |x AS (SELECT CAST(d.d AS BIGINT) AS dim,
-         |             sqrt(list_sum(list_transform(generate_series(1, d.d), i ->
-         |               CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))) / e.nrm AS frac
-         |      FROM e, (SELECT unnest([8, 16, 32, 48]) AS d) d)
-         |SELECT dim, count(*) AS n_vecs,
-         |       round(CAST(sum(CAST(round(frac * 1000000.0, 0) AS BIGINT)) AS DOUBLE) / count(*), 0) / 1000000.0 + 0 AS mean_frac,
-         |       min(round(frac * 1000000.0, 0) / 1000000.0 + 0) AS min_frac,
-         |       CAST(sum(CASE WHEN round(frac * 1000000.0, 0) / 1000000.0 < 0.95 THEN 1 ELSE 0 END) AS BIGINT) AS n_lossy
-         |FROM x GROUP BY dim ORDER BY dim""".stripMargin,
-
-    // Mirrors Vectors.ivfBalance: the zero-Lloyd deterministic quantizer
-    // (seeds = 16 lowest-id vectors over the WHOLE corpus — no query
-    // split here), assignment argmax(2·v·c − |c|²) with ties → max cell,
-    // per-cell counts + corpus share.
-    "emb_ivf_balance" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |c AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding AS cvec,
-         |             list_sum(list_transform(embedding,
-         |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS cn2
-         |      FROM e ORDER BY vec_id LIMIT 16),
-         |a AS (SELECT e.vec_id, c.cell
-         |      FROM e, c
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell DESC) = 1),
-         |g AS (SELECT cell, count(*) AS n_vecs FROM a GROUP BY cell),
-         |t AS (SELECT count(*) AS total FROM e)
-         |SELECT CAST(cell AS BIGINT) AS cell, CAST(n_vecs AS BIGINT) AS n_vecs,
-         |       ${Q6("CAST(n_vecs AS DOUBLE) / total")} AS share
-         |FROM g, t ORDER BY cell""".stripMargin,
-
-    // Mirrors Vectors.annIvf(lloydIters = 0) — the serving path with the
-    // deterministic seed quantizer: centroids = the 16 lowest-id corpus
-    // vectors (cell = vec_id rank), corpus assigned by argmax(2·v·c − |c|²)
-    // with ties → max cell, queries probe the 4 best cells (ties → min
-    // cell), candidates exact-cosine reranked. Every dot replays DOT_SQL's
-    // index order, so the hash matches bit-for-bit.
-    "emb_ann_ivf_served" ->
-      s"""WITH e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-         |c AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding AS cvec,
-         |             list_sum(list_transform(embedding,
-         |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS cn2
-         |      FROM e WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |a AS (SELECT e.vec_id, e.embedding, e.nrm, c.cell
-         |      FROM e, c WHERE e.vec_id >= 5
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell DESC) = 1),
-         |p AS (SELECT e.vec_id, e.embedding, e.nrm, c.cell
-         |      FROM e, c WHERE e.vec_id < 5
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell ASC) <= 4),
-         |r AS (SELECT p.vec_id AS q_id, a.vec_id AS n_id,
-         |             ${DOT_SQL("p.embedding", "a.embedding")} / (p.nrm * a.nrm) AS cos
-         |      FROM p JOIN a ON p.cell = a.cell),
-         |rk AS (SELECT q_id, n_id, cos,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |       FROM r)
-         |SELECT q_id, n_id, CAST(rank AS BIGINT) AS rank, ${Q6("cos")} AS cos_sim
-         |FROM rk WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-
-    // Mirrors Vectors.annIvfFiltered: the emb_ann_ivf_served CTEs with
-    // label carried through assignment and probes, the candidate join
-    // keyed on (cell, label) — the pre-filter — and the ADAPTIVE probe
-    // count (Vectors.adaptiveProbe): least(nCells, nProbe · |labels|),
-    // replayed as integer arithmetic over one count-distinct (nl).
-    "emb_ann_filtered" ->
-      s"""WITH e AS (SELECT vec_id, embedding, label, $NORM_SQL AS nrm FROM embeddings),
-         |nl AS (SELECT least(16, 4 * count(DISTINCT label)) AS np
-         |       FROM e WHERE vec_id >= 5),
-         |c AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding AS cvec,
-         |             list_sum(list_transform(embedding,
-         |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS cn2
-         |      FROM e WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |a AS (SELECT e.vec_id, e.embedding, e.nrm, e.label, c.cell
-         |      FROM e, c WHERE e.vec_id >= 5
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell DESC) = 1),
-         |p AS (SELECT e.vec_id, e.embedding, e.nrm, e.label, c.cell
-         |      FROM e, c, nl WHERE e.vec_id < 5
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell ASC) <= nl.np),
-         |r AS (SELECT p.vec_id AS q_id, a.vec_id AS n_id, p.label,
-         |             ${DOT_SQL("p.embedding", "a.embedding")} / (p.nrm * a.nrm) AS cos
-         |      FROM p JOIN a ON p.cell = a.cell AND p.label = a.label),
-         |rk AS (SELECT q_id, n_id, label, cos,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |       FROM r)
-         |SELECT q_id, n_id, CAST(label AS BIGINT) AS label,
-         |       CAST(rank AS BIGINT) AS rank, ${Q6("cos")} AS cos_sim
-         |FROM rk WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-
-    // Mirrors Vectors.annRecallIvfFiltered: the emb_ann_ivf_recall CTEs
-    // with the label equality on BOTH sides — exact pairs restricted to
-    // q.label = c.label, served candidates keyed on (cell, label) at the
-    // ADAPTIVE probe count (nl, as in emb_ann_filtered) — and the
-    // FILTERED denominator: Σ_q min(c, admissible_q) from the exact
-    // side's per-query row counts (recallFromFiltered), not n_q·c, so a
-    // query with < c admissible vectors can still read 1.0 when the
-    // served path returns its complete admissible set.
-    "emb_ann_filtered_recall" ->
-      s"""WITH e AS (SELECT vec_id, embedding, label, $NORM_SQL AS nrm FROM embeddings),
-         |nl AS (SELECT least(16, 4 * count(DISTINCT label)) AS np
-         |       FROM e WHERE vec_id >= 5),
-         |p AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |             ${DOT_SQL("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |      FROM e q JOIN e c
-         |        ON q.vec_id < 5 AND c.vec_id >= 5 AND q.label = c.label),
-         |exr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |       FROM p),
-         |c AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding AS cvec,
-         |             list_sum(list_transform(embedding,
-         |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS cn2
-         |      FROM e WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |a AS (SELECT e.vec_id, e.embedding, e.nrm, e.label, c.cell
-         |      FROM e, c WHERE e.vec_id >= 5
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell DESC) = 1),
-         |iq AS (SELECT e.vec_id, e.embedding, e.nrm, e.label, c.cell
-         |       FROM e, c, nl WHERE e.vec_id < 5
-         |       QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |         ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell ASC) <= nl.np),
-         |r AS (SELECT iq.vec_id AS q_id, a.vec_id AS n_id,
-         |             ${DOT_SQL("iq.embedding", "a.embedding")} / (iq.nrm * a.nrm) AS cos
-         |      FROM iq JOIN a ON iq.cell = a.cell AND iq.label = a.label),
-         |ivfr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |       FROM r),
-         |jx AS (SELECT x.q_id, x.rank AS rank_exact, l.rank AS rank_approx
-         |       FROM (SELECT * FROM exr WHERE rank <= 10) x
-         |       LEFT JOIN (SELECT * FROM ivfr WHERE rank <= 10) l
-         |         ON x.q_id = l.q_id AND x.n_id = l.n_id),
-         |den AS (SELECT count(*) AS n_q,
-         |               sum(least(1, nex)) AS den_1,
-         |               sum(least(5, nex)) AS den_5,
-         |               sum(least(10, nex)) AS den_10
-         |        FROM (SELECT q_id, count(*) AS nex
-         |              FROM exr WHERE rank <= 10 GROUP BY q_id)),
-         |h AS (SELECT sum(CASE WHEN rank_exact <= 1 AND rank_approx <= 1 THEN 1 ELSE 0 END) AS hits_1,
-         |             sum(CASE WHEN rank_exact <= 5 AND rank_approx <= 5 THEN 1 ELSE 0 END) AS hits_5,
-         |             sum(CASE WHEN rank_exact <= 10 AND rank_approx <= 10 THEN 1 ELSE 0 END) AS hits_10
-         |      FROM jx)
-         |SELECT CAST(den.n_q AS BIGINT) AS n_q,
-         |       CAST(hits_1 AS BIGINT) AS hits_1,
-         |       ${Q6("CAST(hits_1 AS DOUBLE) / den_1")} AS recall_1,
-         |       CAST(hits_5 AS BIGINT) AS hits_5,
-         |       ${Q6("CAST(hits_5 AS DOUBLE) / den_5")} AS recall_5,
-         |       CAST(hits_10 AS BIGINT) AS hits_10,
-         |       ${Q6("CAST(hits_10 AS DOUBLE) / den_10")} AS recall_10
-         |FROM h, den""".stripMargin,
-
-    // Mirrors Vectors.annIvfPqFiltered: the emb_ann_ivfpq CTE chain with
-    // the label carried through assignment (aa) and probes (iq) at the
-    // ADAPTIVE probe count (nl), the code rows keyed (cell, label) in
-    // the ADC join — an inadmissible candidate never enters the sum —
-    // and the label surfaced through the rerank cut and exact re-rank.
-    "emb_ann_filtered_pq" -> {
-      val sseQ = "list_sum(list_transform(generate_series(1, 8), " +
-        "i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i])))"
-      s"""WITH e AS (SELECT vec_id, embedding, label, $NORM_SQL AS nrm FROM embeddings),
-         |nl AS (SELECT least(16, 4 * count(DISTINCT label)) AS np
-         |       FROM e WHERE vec_id >= 5),
-         |cc AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding AS cvec,
-         |             list_sum(list_transform(embedding,
-         |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS cn2
-         |      FROM e WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |aa AS (SELECT e.vec_id, e.label, c.cell
-         |      FROM e, cc c WHERE e.vec_id >= 5
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell DESC) = 1),
-         |iq AS (SELECT e.vec_id AS q_id, e.label, c.cell
-         |       FROM e, cc c, nl WHERE e.vec_id < 5
-         |       QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |         ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell ASC) <= nl.np),
-         |sv AS (SELECT vec_id, j.s AS sub,
-         |              list_transform(generate_series(1, 8),
-         |                i -> CAST(embedding[CAST(j.s AS INT) * 8 + i] AS DOUBLE)) AS svec
-         |            FROM embeddings, (SELECT unnest(generate_series(0, 7)) AS s) j),
-         |cb AS (SELECT sub, CAST(vec_id - 5 AS INT) AS code, svec AS cvec
-         |       FROM sv WHERE vec_id >= 5 AND vec_id < 21),
-         |d AS (SELECT v.vec_id, v.sub, c.code,
-         |        list_sum(list_transform(generate_series(1, 8),
-         |          i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i]))) AS sse
-         |      FROM sv v JOIN cb c USING (sub) WHERE v.vec_id >= 5),
-         |r AS (SELECT vec_id, sub, code,
-         |        row_number() OVER (PARTITION BY vec_id, sub ORDER BY sse, code) AS rn
-         |      FROM d),
-         |codes AS (SELECT vec_id AS n_id, sub, code FROM r WHERE rn = 1),
-         |nc AS (SELECT codes.n_id, codes.sub, codes.code, aa.cell, aa.label
-         |       FROM codes JOIN aa ON aa.vec_id = codes.n_id),
-         |qd AS (SELECT v.vec_id AS q_id, v.sub, c.code,
-         |         ${US6(sseQ)} AS dist_us
-         |       FROM sv v JOIN cb c USING (sub) WHERE v.vec_id < 5),
-         |adc AS (SELECT qd.q_id, nc.n_id, nc.label, sum(qd.dist_us) AS adc_us
-         |        FROM nc JOIN qd USING (sub, code)
-         |             JOIN iq ON iq.q_id = qd.q_id AND iq.cell = nc.cell
-         |                    AND iq.label = nc.label
-         |        GROUP BY 1, 2, 3),
-         |cand AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                     ORDER BY adc_us, n_id) AS rn
-         |         FROM adc),
-         |x AS (SELECT c.q_id, c.n_id, c.label, c.adc_us,
-         |        ${DOT_SQL("q.embedding", "n.embedding")} / (q.nrm * n.nrm) AS cos
-         |      FROM cand c JOIN e q ON q.vec_id = c.q_id
-         |                  JOIN e n ON n.vec_id = c.n_id
-         |      WHERE c.rn <= 32),
-         |f AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                  ORDER BY cos DESC, n_id) AS rank
-         |      FROM x)
-         |SELECT q_id, n_id, CAST(label AS BIGINT) AS label,
-         |       CAST(rank AS BIGINT) AS rank,
-         |       CAST(adc_us AS DOUBLE) / 1000000.0 + 0 AS adc_dist,
-         |       ${Q6("cos")} AS cos_sim
-         |FROM f WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin
-    },
-
-    // Mirrors Vectors.annRecallIvfPqFiltered: the emb_ann_filtered_pq
-    // CTE chain verbatim through the fused ranking `f`, the exact
-    // SAME-LABEL top-k side (xp/exr — label as a join condition), the
-    // filtered denominator Σ_q min(c, admissible_q), and the shared hit
-    // sums.
-    "emb_ann_filtered_pq_recall" -> {
-      val sseQ = "list_sum(list_transform(generate_series(1, 8), " +
-        "i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i])))"
-      s"""WITH e AS (SELECT vec_id, embedding, label, $NORM_SQL AS nrm FROM embeddings),
-         |nl AS (SELECT least(16, 4 * count(DISTINCT label)) AS np
-         |       FROM e WHERE vec_id >= 5),
-         |cc AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding AS cvec,
-         |             list_sum(list_transform(embedding,
-         |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS cn2
-         |      FROM e WHERE vec_id >= 5 ORDER BY vec_id LIMIT 16),
-         |aa AS (SELECT e.vec_id, e.label, c.cell
-         |      FROM e, cc c WHERE e.vec_id >= 5
-         |      QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell DESC) = 1),
-         |iq AS (SELECT e.vec_id AS q_id, e.label, c.cell
-         |       FROM e, cc c, nl WHERE e.vec_id < 5
-         |       QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |         ORDER BY (${DOT_SQL("e.embedding", "c.cvec")} * 2 - c.cn2) DESC, c.cell ASC) <= nl.np),
-         |sv AS (SELECT vec_id, j.s AS sub,
-         |              list_transform(generate_series(1, 8),
-         |                i -> CAST(embedding[CAST(j.s AS INT) * 8 + i] AS DOUBLE)) AS svec
-         |            FROM embeddings, (SELECT unnest(generate_series(0, 7)) AS s) j),
-         |cb AS (SELECT sub, CAST(vec_id - 5 AS INT) AS code, svec AS cvec
-         |       FROM sv WHERE vec_id >= 5 AND vec_id < 21),
-         |d AS (SELECT v.vec_id, v.sub, c.code,
-         |        list_sum(list_transform(generate_series(1, 8),
-         |          i -> (v.svec[i] - c.cvec[i]) * (v.svec[i] - c.cvec[i]))) AS sse
-         |      FROM sv v JOIN cb c USING (sub) WHERE v.vec_id >= 5),
-         |r AS (SELECT vec_id, sub, code,
-         |        row_number() OVER (PARTITION BY vec_id, sub ORDER BY sse, code) AS rn
-         |      FROM d),
-         |codes AS (SELECT vec_id AS n_id, sub, code FROM r WHERE rn = 1),
-         |nc AS (SELECT codes.n_id, codes.sub, codes.code, aa.cell, aa.label
-         |       FROM codes JOIN aa ON aa.vec_id = codes.n_id),
-         |qd AS (SELECT v.vec_id AS q_id, v.sub, c.code,
-         |         ${US6(sseQ)} AS dist_us
-         |       FROM sv v JOIN cb c USING (sub) WHERE v.vec_id < 5),
-         |adc AS (SELECT qd.q_id, nc.n_id, nc.label, sum(qd.dist_us) AS adc_us
-         |        FROM nc JOIN qd USING (sub, code)
-         |             JOIN iq ON iq.q_id = qd.q_id AND iq.cell = nc.cell
-         |                    AND iq.label = nc.label
-         |        GROUP BY 1, 2, 3),
-         |cand AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                     ORDER BY adc_us, n_id) AS rn
-         |         FROM adc),
-         |x AS (SELECT c.q_id, c.n_id,
-         |        ${DOT_SQL("q.embedding", "n.embedding")} / (q.nrm * n.nrm) AS cos
-         |      FROM cand c JOIN e q ON q.vec_id = c.q_id
-         |                  JOIN e n ON n.vec_id = c.n_id
-         |      WHERE c.rn <= 32),
-         |f AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                  ORDER BY cos DESC, n_id) AS rank
-         |      FROM x),
-         |xp AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |             ${DOT_SQL("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |       FROM e q JOIN e c
-         |         ON q.vec_id < 5 AND c.vec_id >= 5 AND q.label = c.label),
-         |exr AS (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-         |        FROM xp),
-         |jx AS (SELECT x2.q_id, x2.rank AS rank_exact, l.rank AS rank_approx
-         |       FROM (SELECT * FROM exr WHERE rank <= 10) x2
-         |       LEFT JOIN (SELECT q_id, n_id, rank FROM f WHERE rank <= 10) l
-         |         ON x2.q_id = l.q_id AND x2.n_id = l.n_id),
-         |den AS (SELECT count(*) AS n_q,
-         |               sum(least(1, nex)) AS den_1,
-         |               sum(least(5, nex)) AS den_5,
-         |               sum(least(10, nex)) AS den_10
-         |        FROM (SELECT q_id, count(*) AS nex
-         |              FROM exr WHERE rank <= 10 GROUP BY q_id)),
-         |h AS (SELECT sum(CASE WHEN rank_exact <= 1 AND rank_approx <= 1 THEN 1 ELSE 0 END) AS hits_1,
-         |             sum(CASE WHEN rank_exact <= 5 AND rank_approx <= 5 THEN 1 ELSE 0 END) AS hits_5,
-         |             sum(CASE WHEN rank_exact <= 10 AND rank_approx <= 10 THEN 1 ELSE 0 END) AS hits_10
-         |      FROM jx)
-         |SELECT CAST(den.n_q AS BIGINT) AS n_q,
-         |       CAST(hits_1 AS BIGINT) AS hits_1,
-         |       ${Q6("CAST(hits_1 AS DOUBLE) / den_1")} AS recall_1,
-         |       CAST(hits_5 AS BIGINT) AS hits_5,
-         |       ${Q6("CAST(hits_5 AS DOUBLE) / den_5")} AS recall_5,
-         |       CAST(hits_10 AS BIGINT) AS hits_10,
-         |       ${Q6("CAST(hits_10 AS DOUBLE) / den_10")} AS recall_10
-         |FROM h, den""".stripMargin
-    },
-
-    "text_tokens" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents)
-         |SELECT doc_id,
-         |       CAST(len(string_split(norm, ' ')) AS BIGINT) AS n_ws_tokens,
-         |       CAST(len(regexp_extract_all(norm, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_bpe_tokens,
-         |       CAST(length(norm) AS BIGINT) AS n_chars_norm
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    // Mirrors TextFunctions.lmScore: top-1024 vocab (count desc, word asc
-    // — the same total order TakeOrdered applies), OOV = chr(4)||'oov',
-    // bigram/bigram-start counts over the whole corpus, and per doc the
-    // exact-quantized mean inverse bigram probability. Every term is one
-    // IEEE division of two exact integer counts — no libm — so the score
-    // hashes identically (log-based perplexity could not; see
-    // text_entropy).
-    "text_lm_score" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |wl AS (SELECT doc_id, string_split(norm, ' ') AS w FROM d),
-         |wd AS (SELECT doc_id, unnest(w) AS word,
-         |              unnest(generate_series(1, len(w))) AS pos FROM wl),
-         |vc AS (SELECT word, count(*) AS c FROM wd GROUP BY 1),
-         |top AS (SELECT word FROM vc
-         |        QUALIFY row_number() OVER (ORDER BY c DESC, word) <= 1024),
-         |m AS (SELECT wd.doc_id, wd.pos,
-         |             CASE WHEN t.word IS NOT NULL THEN wd.word
-         |                  ELSE chr(4) || 'oov' END AS mw
-         |      FROM wd LEFT JOIN top t ON wd.word = t.word),
-         |big AS (SELECT doc_id, mw,
-         |               lead(mw) OVER (PARTITION BY doc_id ORDER BY pos) AS nw
-         |        FROM m QUALIFY nw IS NOT NULL),
-         |b12 AS (SELECT mw, nw, count(*) AS c12 FROM big GROUP BY 1, 2),
-         |u1 AS (SELECT mw, count(*) AS c1 FROM big GROUP BY 1),
-         |ov AS (SELECT doc_id,
-         |              count(CASE WHEN mw = chr(4) || 'oov' THEN 1 END) AS n_oov
-         |       FROM m GROUP BY 1),
-         |t AS (SELECT big.doc_id, ${US6("CAST(u1.c1 AS DOUBLE) / b12.c12")} AS tt
-         |      FROM big JOIN b12 ON big.mw = b12.mw AND big.nw = b12.nw
-         |                JOIN u1 ON big.mw = u1.mw)
-         |SELECT t.doc_id AS doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |       CAST(ov.n_oov AS BIGINT) AS n_oov,
-         |       ${MEAN6("sum(tt)", "count(*)")} AS mean_inv_p
-         |FROM t JOIN ov ON t.doc_id = ov.doc_id
-         |GROUP BY t.doc_id, ov.n_oov ORDER BY doc_id""".stripMargin,
-
-    "text_quality" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, norm, string_split(norm, ' ') AS w FROM d),
-         |c AS (SELECT doc_id,
-         |             CAST(len(w) AS BIGINT) AS n_words,
-         |             CAST(length(norm) AS BIGINT) AS n_chars,
-         |             len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and', 'of', 'to', 'in'))) AS n_stop,
-         |             len(regexp_extract_all(norm, '[^a-z0-9 ]')) AS n_punct,
-         |             len(regexp_extract_all(norm, '[0-9]')) AS n_digit,
-         |             length(replace(norm, ' ', '')) AS n_alpha
-         |      FROM b)
-         |SELECT doc_id, n_words, n_chars,
-         |       ${Q6("CAST(n_stop AS DOUBLE) / n_words")} AS stop_ratio,
-         |       ${Q6("CAST(n_punct AS DOUBLE) / n_chars")} AS punct_ratio,
-         |       ${Q6("CAST(n_digit AS DOUBLE) / n_chars")} AS digit_ratio,
-         |       ${Q6("CAST(n_alpha AS DOUBLE) / n_words")} AS avg_word_len,
-         |       ${Q6(QSCORE_SQL)} AS quality_score
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    // mirrors TextFunctions.langIdConfusion: the langid CTE + declared
-    // lang, metadata-scale matrix, per-declared-total window fraction
-    "text_langid_confusion" ->
-      s"""WITH d AS (SELECT doc_id, lang, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, lang, string_split(norm, ' ') AS w FROM d),
-         |c AS (SELECT doc_id, lang,
-         |             len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and'))) AS n_en,
-         |             len(list_filter(w, x -> x IN ('el', 'la', 'los', 'que'))) AS n_es,
-         |             len(list_filter(w, x -> x IN ('der', 'die', 'und', 'das'))) AS n_de,
-         |             len(list_filter(w, x -> x IN ('le', 'les', 'et', 'une'))) AS n_fr
-         |      FROM b),
-         |p AS (SELECT lang AS lang_decl,
-         |        CASE WHEN n_en >= n_es AND n_en >= n_de AND n_en >= n_fr AND n_en > 0 THEN 'en'
-         |             WHEN n_es >= n_de AND n_es >= n_fr AND n_es > 0 THEN 'es'
-         |             WHEN n_de >= n_fr AND n_de > 0 THEN 'de'
-         |             WHEN n_fr > 0 THEN 'fr'
-         |             ELSE 'unknown' END AS lang_pred
-         |      FROM c),
-         |g AS (SELECT lang_decl, lang_pred, count(*) AS n FROM p GROUP BY 1, 2)
-         |SELECT lang_decl, lang_pred, CAST(n AS BIGINT) AS n_docs,
-         |       ${Q6("CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY lang_decl) AS DOUBLE)")} AS frac
-         |FROM g ORDER BY lang_decl, lang_pred""".stripMargin,
-
-    "text_langid" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, string_split(norm, ' ') AS w FROM d),
-         |c AS (SELECT doc_id,
-         |             CAST(len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and'))) AS BIGINT) AS n_en,
-         |             CAST(len(list_filter(w, x -> x IN ('el', 'la', 'los', 'que'))) AS BIGINT) AS n_es,
-         |             CAST(len(list_filter(w, x -> x IN ('der', 'die', 'und', 'das'))) AS BIGINT) AS n_de,
-         |             CAST(len(list_filter(w, x -> x IN ('le', 'les', 'et', 'une'))) AS BIGINT) AS n_fr
-         |      FROM b)
-         |SELECT doc_id,
-         |       CASE WHEN n_en >= n_es AND n_en >= n_de AND n_en >= n_fr AND n_en > 0 THEN 'en'
-         |            WHEN n_es >= n_de AND n_es >= n_fr AND n_es > 0 THEN 'es'
-         |            WHEN n_de >= n_fr AND n_de > 0 THEN 'de'
-         |            WHEN n_fr > 0 THEN 'fr'
-         |            ELSE 'unknown' END AS lang_pred,
-         |       n_en, n_es, n_de, n_fr
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    "text_pii" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |c AS (SELECT doc_id,
-         |        CAST(len(regexp_extract_all(norm, '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}')) AS BIGINT) AS n_email,
-         |        CAST(len(regexp_extract_all(norm, '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b')) AS BIGINT) AS n_ipv4,
-         |        CAST(len(regexp_extract_all(norm, '\\d{3}[- ]\\d{3,4}[- ]\\d{4}')) AS BIGINT) AS n_phone,
-         |        CAST(len(regexp_extract_all(norm, '\\d{6,}')) AS BIGINT) AS n_digit_runs
-         |      FROM d)
-         |SELECT doc_id, n_email, n_ipv4, n_phone, n_digit_runs,
-         |       (n_email + n_ipv4 + n_phone > 0) AS has_pii
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    "text_repetition" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, string_split(norm, ' ') AS w FROM d),
-         |g AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 1),
-         |               i -> concat(w[i], ' ', w[i + 1]))) AS g
-         |      FROM b WHERE len(w) >= 2),
-         |c AS (SELECT doc_id, g, CAST(count(*) AS BIGINT) AS c FROM g GROUP BY 1, 2)
-         |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_2grams,
-         |       CAST(max(c) AS BIGINT) AS top_count,
-         |       ${Q6("CAST(max(c) AS DOUBLE) / sum(c)")} AS rep_ratio
-         |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // Mirrors TextFunctions.blocklist with the registered lexicon.
-    "text_blocklist" ->
-      s"""WITH b AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |f AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_words,
-         |        CAST(len(list_filter(w, x -> x IN ('slow', 'stale', 'dup', 'skew'))) AS BIGINT) AS n_flagged
-         |      FROM b)
-         |SELECT doc_id, n_words, n_flagged,
-         |       ${Q6("CAST(n_flagged AS DOUBLE) / n_words")} AS flagged_frac,
-         |       n_flagged > 0 AS flagged
-         |FROM f ORDER BY doc_id""".stripMargin,
-
-    // Mirrors TextFunctions.chunk at (32, 8): stride 24, per-doc chunk
-    // grid exploded, inclusive-slice windows, unpadded tail.
-    "text_chunk" ->
-      s"""WITH b AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |n AS (SELECT doc_id, w,
-         |        CASE WHEN len(w) <= 32 THEN 1
-         |             ELSE 1 + (len(w) - 32 + 23) // 24 END AS nc
-         |      FROM b),
-         |c AS (SELECT doc_id, w,
-         |        unnest(generate_series(0, nc - 1)) AS chunk_idx
-         |      FROM n)
-         |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-         |       CAST(chunk_idx * 24 + 1 AS BIGINT) AS start_word,
-         |       CAST(least(32, len(w) - (chunk_idx * 24 + 1) + 1) AS BIGINT) AS n_words,
-         |       array_to_string(w[(chunk_idx * 24 + 1):(chunk_idx * 24 + 32)], ' ') AS chunk_text
-         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // Mirrors TextFunctions.repProfile: the three gram widths from one
-    // values-table cross join, per-(doc, n, gram) counts, per-(doc, n)
-    // totals/top/dup sums, pivoted wide; fracs Q6-quantized at the
-    // (doc, n) level exactly like the engine.
-    "text_rep_profile" ->
-      s"""WITH d AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |g AS (SELECT d.doc_id, n.n AS n,
-         |             unnest(list_transform(generate_series(1, len(w) - n.n + 1),
-         |               i -> array_to_string(w[i:i+n.n-1], ' '))) AS g
-         |      FROM d, (SELECT unnest([2, 3, 4]) AS n) n
-         |      WHERE len(w) >= n.n),
-         |pg AS (SELECT doc_id, n, g, count(*) AS c FROM g GROUP BY 1, 2, 3),
-         |pn AS (SELECT doc_id, n, sum(c) AS total, max(c) AS topc,
-         |              sum(CASE WHEN c >= 2 THEN c ELSE 0 END) AS dupc
-         |       FROM pg GROUP BY 1, 2),
-         |pq AS (SELECT doc_id, n, total,
-         |              ${Q6("CAST(topc AS DOUBLE) / total")} AS top_frac,
-         |              ${Q6("CAST(dupc AS DOUBLE) / total")} AS dup_frac
-         |       FROM pn)
-         |SELECT doc_id,
-         |       CAST(max(CASE WHEN n = 2 THEN total END) AS BIGINT) AS n2_grams,
-         |       max(CASE WHEN n = 2 THEN top_frac END) AS top2_frac,
-         |       max(CASE WHEN n = 2 THEN dup_frac END) AS dup2_frac,
-         |       CAST(max(CASE WHEN n = 3 THEN total END) AS BIGINT) AS n3_grams,
-         |       max(CASE WHEN n = 3 THEN top_frac END) AS top3_frac,
-         |       max(CASE WHEN n = 3 THEN dup_frac END) AS dup3_frac,
-         |       CAST(max(CASE WHEN n = 4 THEN total END) AS BIGINT) AS n4_grams,
-         |       max(CASE WHEN n = 4 THEN top_frac END) AS top4_frac,
-         |       max(CASE WHEN n = 4 THEN dup_frac END) AS dup4_frac
-         |FROM pq GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "sample_stratified" ->
-      """SELECT doc_id, source AS stratum FROM documents
-        |WHERE substring(md5(concat(source, '|', CAST(doc_id AS VARCHAR))), 1, 2) < '4d'
-        |ORDER BY doc_id""".stripMargin,
-
-    "sample_fixed" ->
-      """SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS rank_key
-        |FROM documents ORDER BY rank_key, doc_id LIMIT 100""".stripMargin,
-
-    // mirrors TextFunctions.sampleSplit at (0.01, 0.01): cuts 655 = 0x028f
-    // and 1310 = 0x051e on the domain-tagged 16-bit md5 fraction
-    "sample_split" ->
-      """SELECT doc_id,
-        |       CASE WHEN substring(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 4) < '028f' THEN 'val'
-        |            WHEN substring(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 4) < '051e' THEN 'test'
-        |            ELSE 'train' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Mirrors TextFunctions.splitLeakage: the frozen md5 split at
-    // (0.2, 0.1) — cuts floor(0.2·65536) = 0x3333, floor(0.3·65536) =
-    // 0x4ccc — the exact trigram-Jaccard pair set, symmetrized, and the
-    // per-eval-split leaked rollup.
-    "split_leakage" ->
-      s"""WITH docs AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 0)),
-         |               i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2]))) AS s
-         |       FROM docs WHERE len(w) >= 3),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             len(list_intersect(a.s, b.s)) AS inter, len(a.s) AS la, len(b.s) AS lb
-         |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-         |pr AS (SELECT id_a, id_b FROM p
-         |       WHERE inter > 0 AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.8),
-         |sp AS (SELECT doc_id,
-         |         CASE WHEN substring(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 4) < '3333' THEN 'val'
-         |              WHEN substring(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 4) < '4ccc' THEN 'test'
-         |              ELSE 'train' END AS split
-         |       FROM documents),
-         |sym AS (SELECT id_a, id_b FROM pr UNION ALL SELECT id_b, id_a FROM pr),
-         |lk AS (SELECT DISTINCT s.id_a AS doc_id FROM sym s
-         |       JOIN sp a ON a.doc_id = s.id_a JOIN sp b ON b.doc_id = s.id_b
-         |       WHERE a.split <> 'train' AND b.split = 'train')
-         |SELECT sp.split AS split, CAST(count(*) AS BIGINT) AS n_docs,
-         |       CAST(sum(CASE WHEN lk.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_leaked,
-         |       ${Q6("CAST(sum(CASE WHEN lk.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*)")} AS leak_frac
-         |FROM sp LEFT JOIN lk USING (doc_id) WHERE sp.split <> 'train'
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Mirrors TextFunctions.sampleSplitClustered at (0.2, 0.1): the
-    // shared exact-Jaccard reachability CTEs label every doc with its
-    // near-dup cluster (singletons = own id), then the sample_split hex
-    // cuts (floor(0.2·65536) = 0x3333, floor(0.3·65536) = 0x4ccc) apply
-    // to the CLUSTER id — the whole duplicate group co-splits.
-    "sample_split_clustered" ->
-      s"""$DEDUP_CLUSTER_CTES,
-         |cl AS (SELECT d.doc_id AS doc_id,
-         |              coalesce(l.cluster_id, d.doc_id) AS cluster_id
-         |       FROM documents d LEFT JOIN lbl l ON d.doc_id = l.doc_id)
-         |SELECT doc_id, cluster_id,
-         |       CASE WHEN substring(md5('split|' || CAST(cluster_id AS VARCHAR)), 1, 4) < '3333' THEN 'val'
-         |            WHEN substring(md5('split|' || CAST(cluster_id AS VARCHAR)), 1, 4) < '4ccc' THEN 'test'
-         |            ELSE 'train' END AS split
-         |FROM cl ORDER BY doc_id""".stripMargin,
-
-    // Mirrors TextFunctions.splitLeakageClustered at (0.2, 0.1): the
-    // cluster CTEs label every doc, the hex cuts apply to cluster_id,
-    // and the split_leakage audit chain re-runs over the SAME exact-
-    // Jaccard pair set `e` the clusters were built from — n_leaked is
-    // structurally zero, n_docs per eval split is the real signal.
-    "split_leakage_clustered" ->
-      s"""$DEDUP_CLUSTER_CTES,
-         |cl AS (SELECT d.doc_id AS doc_id,
-         |              coalesce(l.cluster_id, d.doc_id) AS cluster_id
-         |       FROM documents d LEFT JOIN lbl l ON d.doc_id = l.doc_id),
-         |sp AS (SELECT doc_id,
-         |         CASE WHEN substring(md5('split|' || CAST(cluster_id AS VARCHAR)), 1, 4) < '3333' THEN 'val'
-         |              WHEN substring(md5('split|' || CAST(cluster_id AS VARCHAR)), 1, 4) < '4ccc' THEN 'test'
-         |              ELSE 'train' END AS split
-         |       FROM cl),
-         |lsym AS (SELECT id_a, id_b FROM e UNION ALL SELECT id_b, id_a FROM e),
-         |lk AS (SELECT DISTINCT s.id_a AS doc_id FROM lsym s
-         |       JOIN sp a ON a.doc_id = s.id_a JOIN sp b ON b.doc_id = s.id_b
-         |       WHERE a.split <> 'train' AND b.split = 'train')
-         |SELECT sp.split AS split, CAST(count(*) AS BIGINT) AS n_docs,
-         |       CAST(sum(CASE WHEN lk.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_leaked,
-         |       ${Q6("CAST(sum(CASE WHEN lk.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*)")} AS leak_frac
-         |FROM sp LEFT JOIN lk USING (doc_id) WHERE sp.split <> 'train'
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Mirrors TextFunctions.qualitySweep: the quality CTE, one wide
-    // aggregate; cuts compare against the 6-dp-quantized score so both
-    // engines make the identical keep/drop decision at each threshold.
-    "corpus_quality_sweep" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, norm, string_split(norm, ' ') AS w FROM d),
-         |c AS (SELECT doc_id,
-         |        CAST(len(w) AS BIGINT) AS n_words,
-         |        CAST(length(norm) AS BIGINT) AS n_chars,
-         |        len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and', 'of', 'to', 'in'))) AS n_stop,
-         |        len(regexp_extract_all(norm, '[^a-z0-9 ]')) AS n_punct
-         |      FROM b),
-         |q AS (SELECT doc_id, n_words, ${Q6(QSCORE_SQL)} AS quality_score FROM c)
-         |SELECT CAST(sum(CASE WHEN quality_score >= 0.2 THEN 1 ELSE 0 END) AS BIGINT) AS docs_0,
-         |       CAST(sum(CASE WHEN quality_score >= 0.2 THEN n_words ELSE 0 END) AS BIGINT) AS words_0,
-         |       CAST(sum(CASE WHEN quality_score >= 0.4 THEN 1 ELSE 0 END) AS BIGINT) AS docs_1,
-         |       CAST(sum(CASE WHEN quality_score >= 0.4 THEN n_words ELSE 0 END) AS BIGINT) AS words_1,
-         |       CAST(sum(CASE WHEN quality_score >= 0.6 THEN 1 ELSE 0 END) AS BIGINT) AS docs_2,
-         |       CAST(sum(CASE WHEN quality_score >= 0.6 THEN n_words ELSE 0 END) AS BIGINT) AS words_2,
-         |       CAST(sum(CASE WHEN quality_score >= 0.8 THEN 1 ELSE 0 END) AS BIGINT) AS docs_3,
-         |       CAST(sum(CASE WHEN quality_score >= 0.8 THEN n_words ELSE 0 END) AS BIGINT) AS words_3
-         |FROM q""".stripMargin,
-
-    "sample_weighted" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, norm, string_split(norm, ' ') AS w FROM d),
-         |c AS (SELECT doc_id,
-         |        CAST(len(w) AS BIGINT) AS n_words,
-         |        CAST(length(norm) AS BIGINT) AS n_chars,
-         |        len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and', 'of', 'to', 'in'))) AS n_stop,
-         |        len(regexp_extract_all(norm, '[^a-z0-9 ]')) AS n_punct
-         |      FROM b),
-         |q AS (SELECT doc_id, ${Q6(QSCORE_SQL)} AS quality_score FROM c)
-         |SELECT doc_id, quality_score
-         |FROM q
-         |WHERE floor(0.5 * quality_score * 65536) >= 65536
-         |   OR substring(md5('w|' || CAST(doc_id AS VARCHAR)), 1, 4)
-         |      < printf('%04x', CAST(least(floor(0.5 * quality_score * 65536), 65535.0) AS INT))
-         |ORDER BY doc_id""".stripMargin,
-
-    // balanced sample: the single-window rank reference the two-phase
-    // bounded rank must equal
-    "sample_balanced" ->
-      s"""WITH d AS (SELECT doc_id, source AS stratum,
-         |                  md5(CAST(doc_id AS VARCHAR)) AS rank_key
-         |           FROM documents),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY stratum
-         |                                   ORDER BY rank_key, doc_id) AS rnk
-         |      FROM d)
-         |SELECT doc_id, stratum, rank_key, CAST(rnk AS BIGINT) AS rnk
-         |FROM r WHERE rnk <= 10 ORDER BY doc_id""".stripMargin,
-
-    "corpus_budget" ->
-      s"""WITH d AS (SELECT doc_id, source AS stratum,
-         |                  len(string_split($NORM_TEXT_SQL, ' ')) AS n_tokens,
-         |                  md5(CAST(doc_id AS VARCHAR)) AS rank_key
-         |           FROM documents),
-         |c AS (SELECT doc_id, stratum, CAST(n_tokens AS BIGINT) AS n_tokens,
-         |             CAST(sum(n_tokens) OVER (PARTITION BY stratum
-         |                                      ORDER BY rank_key, doc_id
-         |                                      ROWS UNBOUNDED PRECEDING) AS BIGINT)
-         |               AS cum_tokens
-         |      FROM d)
-         |SELECT doc_id, stratum, n_tokens, cum_tokens
-         |FROM c WHERE cum_tokens <= 3000 ORDER BY doc_id""".stripMargin,
-
-    // pack arithmetic over the same per-stratum running sum: start = cum−n
-    "corpus_pack" ->
-      s"""WITH d AS (SELECT doc_id, source AS stratum,
-         |                  len(string_split($NORM_TEXT_SQL, ' ')) AS n_tokens,
-         |                  md5(CAST(doc_id AS VARCHAR)) AS rank_key
-         |           FROM documents),
-         |c AS (SELECT doc_id, stratum, CAST(n_tokens AS BIGINT) AS n_tokens,
-         |             CAST(sum(n_tokens) OVER (PARTITION BY stratum
-         |                                      ORDER BY rank_key, doc_id
-         |                                      ROWS UNBOUNDED PRECEDING) AS BIGINT)
-         |               - CAST(n_tokens AS BIGINT) AS start_tok
-         |      FROM d)
-         |SELECT doc_id, stratum, n_tokens,
-         |       start_tok // 512 AS pack_id, start_tok % 512 AS pack_offset
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    // temperature mixture: sqrt-smoothed shares folded in stratum order
-    // (ONE association order for the float denominator on both engines),
-    // then the same per-stratum running-sum fill as corpus_budget
-    "corpus_mix" ->
-      s"""WITH d AS (SELECT doc_id, source AS stratum,
-         |                  len(string_split($NORM_TEXT_SQL, ' ')) AS n_tokens,
-         |                  md5(CAST(doc_id AS VARCHAR)) AS rank_key
-         |           FROM documents),
-         |m AS (SELECT stratum, sum(n_tokens) AS st FROM d GROUP BY 1),
-         |w AS (SELECT stratum, sqrt(CAST(st AS DOUBLE)) AS wgt,
-         |             sum(sqrt(CAST(st AS DOUBLE))) OVER (ORDER BY stratum
-         |               ROWS UNBOUNDED PRECEDING) AS cum_w
-         |      FROM m),
-         |den AS (SELECT max(cum_w) AS denom FROM w),
-         |b AS (SELECT stratum, CAST(floor(10000 * wgt / denom) AS BIGINT) AS stratum_budget
-         |      FROM w CROSS JOIN den),
-         |c AS (SELECT doc_id, stratum, CAST(n_tokens AS BIGINT) AS n_tokens,
-         |             CAST(sum(n_tokens) OVER (PARTITION BY stratum
-         |                                      ORDER BY rank_key, doc_id
-         |                                      ROWS UNBOUNDED PRECEDING) AS BIGINT)
-         |               AS cum_tokens
-         |      FROM d)
-         |SELECT c.doc_id AS doc_id, c.stratum AS stratum, c.n_tokens AS n_tokens,
-         |       c.cum_tokens AS cum_tokens, b.stratum_budget AS stratum_budget
-         |FROM c JOIN b ON c.stratum = b.stratum
-         |WHERE c.cum_tokens <= b.stratum_budget ORDER BY doc_id""".stripMargin,
-
-    // Mirrors TextFunctions.tokenEpochs: the corpus_mix mass + sqrt-share
-    // CTEs rolled up at stratum cardinality, epochs = one IEEE division
-    // of the floored target by the integer mass.
-    "corpus_epochs" ->
-      s"""WITH d AS (SELECT source AS stratum,
-         |                  len(string_split($NORM_TEXT_SQL, ' ')) AS n_tokens
-         |           FROM documents),
-         |m AS (SELECT stratum, count(*) AS n_docs, sum(n_tokens) AS st FROM d GROUP BY 1),
-         |w AS (SELECT stratum, n_docs, st, sqrt(CAST(st AS DOUBLE)) AS wgt,
-         |             sum(sqrt(CAST(st AS DOUBLE))) OVER (ORDER BY stratum
-         |               ROWS UNBOUNDED PRECEDING) AS cum_w
-         |      FROM m),
-         |den AS (SELECT max(cum_w) AS denom FROM w)
-         |SELECT stratum AS source, CAST(n_docs AS BIGINT) AS n_docs,
-         |       CAST(st AS BIGINT) AS n_tokens,
-         |       ${Q6("wgt / denom")} AS budget_share,
-         |       CAST(floor(10000 * wgt / denom) AS BIGINT) AS target_tokens,
-         |       ${Q6("CAST(floor(10000 * wgt / denom) AS DOUBLE) / st")} AS epochs
-         |FROM w CROSS JOIN den ORDER BY source""".stripMargin,
-
-    // Mirrors TextFunctions.temperatureMixture: quarter-power weights as
-    // sqrt products (bit-portable, no libm pow), per-τ denominators via
-    // the stratum-ordered cumulative sum (order-fixed double addition),
-    // the corpus_epochs arithmetic per (source, τ).
-    "corpus_temperature" ->
-      s"""WITH d AS (SELECT source AS stratum,
-         |                  len(string_split($NORM_TEXT_SQL, ' ')) AS n_tokens
-         |           FROM documents),
-         |m AS (SELECT stratum, count(*) AS n_docs, sum(n_tokens) AS st FROM d GROUP BY 1),
-         |tv AS (SELECT unnest([0.25, 0.5, 0.75, 1.0]) AS tau),
-         |w AS (SELECT stratum, n_docs, st, tau,
-         |             CASE WHEN tau = 0.25 THEN sqrt(sqrt(CAST(st AS DOUBLE)))
-         |                  WHEN tau = 0.5  THEN sqrt(CAST(st AS DOUBLE))
-         |                  WHEN tau = 0.75 THEN sqrt(CAST(st AS DOUBLE)) * sqrt(sqrt(CAST(st AS DOUBLE)))
-         |                  ELSE CAST(st AS DOUBLE) END AS wgt
-         |      FROM m CROSS JOIN tv),
-         |c AS (SELECT *, sum(wgt) OVER (PARTITION BY tau ORDER BY stratum
-         |                               ROWS UNBOUNDED PRECEDING) AS cum_w
-         |      FROM w),
-         |den AS (SELECT tau, max(cum_w) AS denom FROM c GROUP BY tau)
-         |SELECT stratum AS source, c.tau AS tau, CAST(n_docs AS BIGINT) AS n_docs,
-         |       CAST(st AS BIGINT) AS n_tokens,
-         |       ${Q6("wgt / denom")} AS budget_share,
-         |       CAST(floor(10000 * wgt / denom) AS BIGINT) AS target_tokens,
-         |       ${Q6("CAST(floor(10000 * wgt / denom) AS DOUBLE) / st")} AS epochs
-         |FROM c JOIN den USING (tau) ORDER BY source, tau""".stripMargin,
-
-    "corpus_shard" ->
-      s"""WITH d AS (SELECT doc_id, source, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, source, norm, string_split(norm, ' ') AS w FROM d),
-         |c AS (SELECT doc_id,
-         |        CAST(len(w) AS BIGINT) AS n_words,
-         |        CAST(length(norm) AS BIGINT) AS n_chars,
-         |        len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and', 'of', 'to', 'in'))) AS n_stop,
-         |        len(regexp_extract_all(norm, '[^a-z0-9 ]')) AS n_punct
-         |      FROM b),
-         |q AS (SELECT doc_id, ${Q6(QSCORE_SQL)} AS quality_score FROM c),
-         |m AS (SELECT doc_id,
-         |             CAST(len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and'))) AS BIGINT) AS n_en,
-         |             CAST(len(list_filter(w, x -> x IN ('el', 'la', 'los', 'que'))) AS BIGINT) AS n_es,
-         |             CAST(len(list_filter(w, x -> x IN ('der', 'die', 'und', 'das'))) AS BIGINT) AS n_de,
-         |             CAST(len(list_filter(w, x -> x IN ('le', 'les', 'et', 'une'))) AS BIGINT) AS n_fr
-         |      FROM b),
-         |lang AS (SELECT doc_id,
-         |       CASE WHEN n_en >= n_es AND n_en >= n_de AND n_en >= n_fr AND n_en > 0 THEN 'en'
-         |            WHEN n_es >= n_de AND n_es >= n_fr AND n_es > 0 THEN 'es'
-         |            WHEN n_de >= n_fr AND n_de > 0 THEN 'de'
-         |            WHEN n_fr > 0 THEN 'fr'
-         |            ELSE 'unknown' END AS lang_pred
-         |      FROM m),
-         |pii AS (SELECT doc_id,
-         |          (len(regexp_extract_all(norm, '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}'))
-         |           + len(regexp_extract_all(norm, '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b'))
-         |           + len(regexp_extract_all(norm, '\\d{3}[- ]\\d{3,4}[- ]\\d{4}'))) > 0 AS has_pii
-         |        FROM d),
-         |k AS (SELECT doc_id, doc_id <> min(doc_id) OVER (PARTITION BY md5(norm)) AS is_dup
-         |      FROM d),
-         |kept AS (SELECT b.doc_id, b.source,
-         |                CAST(len(b.w) AS BIGINT) AS n_tokens,
-         |                md5(CAST(b.doc_id AS VARCHAR)) AS rank_key
-         |         FROM b JOIN q ON b.doc_id = q.doc_id
-         |                JOIN lang ON b.doc_id = lang.doc_id
-         |                JOIN pii ON b.doc_id = pii.doc_id
-         |                JOIN k ON b.doc_id = k.doc_id
-         |         WHERE lang.lang_pred = 'en' AND q.quality_score >= 0.5
-         |               AND NOT pii.has_pii AND NOT k.is_dup),
-         |cum AS (SELECT doc_id, source AS stratum, n_tokens,
-         |               CAST(sum(n_tokens) OVER (PARTITION BY source
-         |                                        ORDER BY rank_key, doc_id
-         |                                        ROWS UNBOUNDED PRECEDING) AS BIGINT)
-         |                 AS cum_tokens
-         |        FROM kept)
-         |SELECT doc_id, stratum, n_tokens, cum_tokens
-         |FROM cum WHERE cum_tokens <= 3000 ORDER BY doc_id""".stripMargin,
-
-    // corpus_shard with the exact-dup gate replaced by near-dup cluster
-    // representatives: the recursive-CTE connected components from
-    // dedup_clusters (exact Jaccard >= 0.8 on 3-shingles — what the
-    // LSH+verify pair generator equals) composed with the same gates
-    "corpus_shard_near" ->
-      s"""WITH RECURSIVE
-         |d AS (SELECT doc_id, source, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, source, norm, string_split(norm, ' ') AS w FROM d),
-         |c AS (SELECT doc_id,
-         |        CAST(len(w) AS BIGINT) AS n_words,
-         |        CAST(length(norm) AS BIGINT) AS n_chars,
-         |        len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and', 'of', 'to', 'in'))) AS n_stop,
-         |        len(regexp_extract_all(norm, '[^a-z0-9 ]')) AS n_punct
-         |      FROM b),
-         |q AS (SELECT doc_id, ${Q6(QSCORE_SQL)} AS quality_score FROM c),
-         |m AS (SELECT doc_id,
-         |             CAST(len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and'))) AS BIGINT) AS n_en,
-         |             CAST(len(list_filter(w, x -> x IN ('el', 'la', 'los', 'que'))) AS BIGINT) AS n_es,
-         |             CAST(len(list_filter(w, x -> x IN ('der', 'die', 'und', 'das'))) AS BIGINT) AS n_de,
-         |             CAST(len(list_filter(w, x -> x IN ('le', 'les', 'et', 'une'))) AS BIGINT) AS n_fr
-         |      FROM b),
-         |lang AS (SELECT doc_id,
-         |       CASE WHEN n_en >= n_es AND n_en >= n_de AND n_en >= n_fr AND n_en > 0 THEN 'en'
-         |            WHEN n_es >= n_de AND n_es >= n_fr AND n_es > 0 THEN 'es'
-         |            WHEN n_de >= n_fr AND n_de > 0 THEN 'de'
-         |            WHEN n_fr > 0 THEN 'fr'
-         |            ELSE 'unknown' END AS lang_pred
-         |      FROM m),
-         |pii AS (SELECT doc_id,
-         |          (len(regexp_extract_all(norm, '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}'))
-         |           + len(regexp_extract_all(norm, '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b'))
-         |           + len(regexp_extract_all(norm, '\\d{3}[- ]\\d{3,4}[- ]\\d{4}'))) > 0 AS has_pii
-         |        FROM d),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 0)),
-         |               i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2]))) AS s
-         |       FROM b WHERE len(w) >= 3),
-         |p AS (SELECT a.doc_id AS id_a, b2.doc_id AS id_b,
-         |             len(list_intersect(a.s, b2.s)) AS inter, len(a.s) AS la, len(b2.s) AS lb
-         |      FROM sh a JOIN sh b2 ON a.doc_id < b2.doc_id),
-         |e AS (SELECT id_a, id_b FROM p
-         |      WHERE inter > 0 AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.8),
-         |sym AS (SELECT id_a AS src, id_b AS dst FROM e
-         |        UNION ALL SELECT id_b, id_a FROM e),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-         |lbl AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-         |        FROM reach GROUP BY src),
-         |kept AS (SELECT b.doc_id, b.source,
-         |                CAST(len(b.w) AS BIGINT) AS n_tokens,
-         |                md5(CAST(b.doc_id AS VARCHAR)) AS rank_key
-         |         FROM b JOIN q ON b.doc_id = q.doc_id
-         |                JOIN lang ON b.doc_id = lang.doc_id
-         |                JOIN pii ON b.doc_id = pii.doc_id
-         |                LEFT JOIN lbl ON b.doc_id = lbl.doc_id
-         |         WHERE lang.lang_pred = 'en' AND q.quality_score >= 0.5
-         |               AND NOT pii.has_pii
-         |               AND coalesce(lbl.cluster_id, b.doc_id) = b.doc_id),
-         |cum AS (SELECT doc_id, source AS stratum, n_tokens,
-         |               CAST(sum(n_tokens) OVER (PARTITION BY source
-         |                                        ORDER BY rank_key, doc_id
-         |                                        ROWS UNBOUNDED PRECEDING) AS BIGINT)
-         |                 AS cum_tokens
-         |        FROM kept)
-         |SELECT doc_id, stratum, n_tokens, cum_tokens
-         |FROM cum WHERE cum_tokens <= 3000 ORDER BY doc_id""".stripMargin,
-
-    // mirrors the registered near-dup rate: the dedup_clusters recursive
-    // reachability, every doc labeled, per-source non-representative rate
-    "corpus_dup_stats_near" ->
-      s"""WITH RECURSIVE
-         |docs AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 0)),
-         |               i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2]))) AS s
-         |       FROM docs WHERE len(w) >= 3),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             len(list_intersect(a.s, b.s)) AS inter, len(a.s) AS la, len(b.s) AS lb
-         |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-         |e AS (SELECT id_a, id_b FROM p
-         |      WHERE inter > 0 AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.8),
-         |sym AS (SELECT id_a AS src, id_b AS dst FROM e
-         |        UNION ALL SELECT id_b, id_a FROM e),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-         |lbl AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-         |        FROM reach GROUP BY src),
-         |cl AS (SELECT d2.doc_id, d2.source,
-         |              coalesce(lbl.cluster_id, d2.doc_id) AS cluster_id
-         |       FROM documents d2 LEFT JOIN lbl ON d2.doc_id = lbl.doc_id)
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |       CAST(sum(CASE WHEN cluster_id <> doc_id THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_near_dups,
-         |       ${Q6("CAST(sum(CASE WHEN cluster_id <> doc_id THEN 1 ELSE 0 END) AS DOUBLE) / count(*)")}
-         |         AS near_dup_rate
-         |FROM cl GROUP BY source ORDER BY source""".stripMargin,
-
-    "corpus_dup_stats" ->
-      s"""WITH d AS (SELECT source, md5($NORM_TEXT_SQL) AS fp FROM documents)
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |       CAST(count(DISTINCT fp) AS BIGINT) AS n_unique,
-         |       ${Q6("1.0 - CAST(count(DISTINCT fp) AS DOUBLE) / count(*)")} AS dup_rate
-         |FROM d GROUP BY source ORDER BY source""".stripMargin,
-
-    "corpus_stats" ->
-      s"""WITH d AS (SELECT doc_id, lang, source, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, lang, source, norm, string_split(norm, ' ') AS w FROM d),
-         |c AS (SELECT doc_id, lang, source,
-         |        CAST(len(w) AS BIGINT) AS n_words,
-         |        CAST(length(norm) AS BIGINT) AS n_chars,
-         |        len(list_filter(w, x -> x IN ('the', 'a', 'is', 'and', 'of', 'to', 'in'))) AS n_stop,
-         |        len(regexp_extract_all(norm, '[^a-z0-9 ]')) AS n_punct
-         |      FROM b),
-         |q AS (SELECT doc_id, lang, source, n_words,
-         |        ${Q6(QSCORE_SQL)} AS quality_score
-         |      FROM c)
-         |SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-         |       CAST(sum(n_words) AS BIGINT) AS sum_words,
-         |       ${MEAN6("sum(n_words * 1000000)", "count(*)")} AS avg_words,
-         |       ${MEAN6(s"sum(${US6("quality_score")})", "count(*)")} AS avg_quality
-         |FROM q GROUP BY 1, 2 ORDER BY lang, source""".stripMargin,
-
-    // mirrors TextFunctions.fertility: tokenStats' exact token defs,
-    // quantized integer-ratio means (HUGEINT ≡ the engine's DECIMAL)
-    "corpus_fertility" ->
-      s"""WITH d AS (SELECT doc_id, lang, source, $NORM_TEXT_SQL AS norm FROM documents),
-         |c AS (SELECT lang, source,
-         |        CAST(len(string_split(norm, ' ')) AS BIGINT) AS ws,
-         |        CAST(len(regexp_extract_all(norm, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS bpe,
-         |        CAST(length(norm) AS BIGINT) AS chars
-         |      FROM d)
-         |SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-         |       CAST(sum(bpe) AS BIGINT) AS n_tokens,
-         |       ${MEAN6("sum(bpe) * CAST(1000000 AS HUGEINT)", "sum(ws)")} AS tokens_per_word,
-         |       ${MEAN6("sum(chars) * CAST(1000000 AS HUGEINT)", "sum(bpe)")} AS chars_per_token
-         |FROM c GROUP BY 1, 2 ORDER BY lang, source""".stripMargin,
-
-    // mirrors TextFunctions.lengthHistogram: whitespace tokens DIV 64
-    "corpus_len_hist" ->
-      s"""WITH d AS (SELECT source, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT source, CAST(len(string_split(norm, ' ')) // 64 AS BIGINT) AS bucket FROM d)
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |       CAST(bucket * 64 AS BIGINT) AS bucket_lo
-         |FROM b GROUP BY source, bucket
-         |ORDER BY source, bucket_lo""".stripMargin,
-
-    "corpus_vocab" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |w AS (SELECT unnest(list_distinct(string_split(norm, ' '))) AS word FROM d)
-         |SELECT word, CAST(count(*) AS BIGINT) AS doc_freq
-         |FROM w GROUP BY word ORDER BY doc_freq DESC, word LIMIT 100""".stripMargin,
-
-    // Mirrors TextFunctions.zipfCurve: token frequencies, rank by
-    // (tf DESC, word), keep power-of-two ranks ≤ 1024.
-    "text_zipf_curve" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |w AS (SELECT unnest(string_split(norm, ' ')) AS word FROM d),
-         |tf AS (SELECT word, count(*) AS tf FROM w GROUP BY word
-         |       ORDER BY tf DESC, word LIMIT 1024),
-         |r AS (SELECT word, tf,
-         |             row_number() OVER (ORDER BY tf DESC, word) AS rank
-         |      FROM tf)
-         |SELECT CAST(rank AS BIGINT) AS rank, word, CAST(tf AS BIGINT) AS tf
-         |FROM r WHERE (rank & (rank - 1)) = 0 ORDER BY rank""".stripMargin,
-
-    // mirrors TextFunctions.vocabGrowth at (0.1, 0.5, 1.0): per-word min
-    // 4-hex doc hash, cuts 6553→'1999' and 32768→'8000'
-    "corpus_vocab_growth" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |h AS (SELECT doc_id, substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS h,
-         |             string_split(norm, ' ') AS w FROM d),
-         |wm AS (SELECT word, min(h) AS h_min
-         |       FROM (SELECT h, unnest(list_distinct(w)) AS word FROM h)
-         |       GROUP BY word),
-         |v AS (SELECT sum(CASE WHEN h_min < '1999' THEN 1 ELSE 0 END) AS v10,
-         |             sum(CASE WHEN h_min < '8000' THEN 1 ELSE 0 END) AS v50,
-         |             count(*) AS v100 FROM wm),
-         |dc AS (SELECT sum(CASE WHEN h < '1999' THEN 1 ELSE 0 END) AS d10,
-         |              sum(CASE WHEN h < '8000' THEN 1 ELSE 0 END) AS d50,
-         |              count(*) AS d100 FROM h)
-         |SELECT 0.1 AS frac, CAST(d10 AS BIGINT) AS n_docs, CAST(v10 AS BIGINT) AS n_types FROM v, dc
-         |UNION ALL SELECT 0.5, CAST(d50 AS BIGINT), CAST(v50 AS BIGINT) FROM v, dc
-         |UNION ALL SELECT 1.0, CAST(d100 AS BIGINT), CAST(v100 AS BIGINT) FROM v, dc
-         |ORDER BY frac""".stripMargin,
-
-    "text_ttr" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, string_split(norm, ' ') AS w FROM d),
-         |c AS (SELECT doc_id, w, list_distinct(w) AS types FROM b),
-         |h AS (SELECT doc_id, w, types,
-         |        len(list_filter(types, x -> len(list_filter(w, y -> y = x)) = 1)) AS n_hapax
-         |      FROM c)
-         |SELECT doc_id, CAST(len(w) AS BIGINT) AS n_words,
-         |       CAST(len(types) AS BIGINT) AS n_types,
-         |       CAST(n_hapax AS BIGINT) AS n_hapax,
-         |       ${Q6("CAST(len(types) AS DOUBLE) / len(w)")} AS ttr,
-         |       ${Q6("CAST(n_hapax AS DOUBLE) / len(types)")} AS hapax_ratio
-         |FROM h ORDER BY doc_id""".stripMargin,
-
-    // Σ len(word) = len(norm) − (n_words − 1): norm is single-space-joined
-    "text_readability" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |b AS (SELECT doc_id, norm, string_split(norm, ' ') AS w FROM d),
-         |c AS (SELECT doc_id,
-         |        CAST(len(w) AS BIGINT) AS n_words,
-         |        CAST(len(regexp_extract_all(norm, '[.!?]+')) AS BIGINT) AS n_sentences,
-         |        length(replace(norm, ' ', '')) AS n_nospace
-         |      FROM b)
-         |SELECT doc_id, n_words, n_sentences,
-         |       ${Q6("CAST(n_words AS DOUBLE) / CAST(greatest(n_sentences, 1) AS DOUBLE)")}
-         |         AS words_per_sentence,
-         |       ${Q6("CAST(n_nospace AS DOUBLE) / n_words")} AS chars_per_word
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    // Mirrors TextFunctions.charFreqProfile: per-char exact counts over
-    // the normalized text, serialized sorted by char (binary UTF-8 order
-    // in both engines; DuckDB's string_split('','') = [''] matches
-    // Spark's split semantics on empty docs). All-integer — the pre-log
-    // face of text_entropy, hash-gated where entropy_bits cannot be.
-    "text_entropy_freq" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |ch AS (SELECT doc_id, length(norm) AS n,
-         |              unnest(string_split(norm, '')) AS ch FROM d),
-         |cc AS (SELECT doc_id, n, ch, count(*) AS c
-         |       FROM ch GROUP BY doc_id, n, ch)
-         |SELECT doc_id, CAST(n AS BIGINT) AS n_chars,
-         |       CAST(count(*) AS BIGINT) AS n_distinct_chars,
-         |       string_agg(ch || ':' || c, '|' ORDER BY ch) AS freq_profile
-         |FROM cc GROUP BY doc_id, n ORDER BY doc_id""".stripMargin,
-
-    "text_wordlen" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm,
-         |                  string_split($NORM_TEXT_SQL, ' ') AS w FROM documents)
-         |SELECT doc_id, CAST(len(w) AS BIGINT) AS n_words,
-         |       CAST(list_max(list_transform(w, x -> length(x))) AS BIGINT) AS max_word_len,
-         |       ${MEAN6("(length(norm) - len(w) + 1) * 1000000", "len(w)")} AS mean_word_len
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    "dedup_prefix" ->
-      s"""WITH d AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |p AS (SELECT doc_id, md5(array_to_string(list_slice(w, 1, 10), ' ')) AS pfp
-         |      FROM d WHERE len(w) >= 10),
-         |g AS (SELECT doc_id, pfp,
-         |        min(doc_id) OVER (PARTITION BY pfp) AS group_id,
-         |        count(*) OVER (PARTITION BY pfp) AS n_shared
-         |      FROM p)
-         |SELECT doc_id, pfp, group_id, CAST(n_shared AS BIGINT) AS n_shared
-         |FROM g WHERE n_shared > 1 ORDER BY doc_id""".stripMargin,
-
-    // mirrors TextFunctions.phrases: occurrence counts (not distinct docs),
-    // the δ=5-discounted lift assembled from exact longs, ONE double division
-    "text_phrases" ->
-      s"""WITH d AS (SELECT string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |t AS (SELECT unnest(w) AS tok FROM d),
-         |u AS (SELECT tok, count(*) AS n FROM t GROUP BY tok),
-         |tot AS (SELECT count(*) AS n_total FROM t),
-         |bi AS (SELECT unnest(list_transform(generate_series(1, greatest(len(w) - 1, 0)),
-         |               i -> concat(w[i], ' ', w[i + 1]))) AS pair
-         |       FROM d WHERE len(w) >= 2),
-         |bc AS (SELECT pair, count(*) AS n_ab FROM bi GROUP BY pair HAVING count(*) >= 10),
-         |s AS (SELECT string_split(pair, ' ')[1] AS w1, string_split(pair, ' ')[2] AS w2, n_ab FROM bc),
-         |j AS (SELECT s.w1, s.w2, s.n_ab, ua.n AS n_a, ub.n AS n_b
-         |      FROM s JOIN u ua ON s.w1 = ua.tok JOIN u ub ON s.w2 = ub.tok)
-         |SELECT w1, w2, CAST(n_ab AS BIGINT) AS n_ab,
-         |       CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-         |       ${Q6("CAST((n_ab - 5) * n_total AS DOUBLE) / (n_a * n_b)")} AS score
-         |FROM j, tot
-         |ORDER BY score DESC, w1, w2 LIMIT 50""".stripMargin,
-
-    "corpus_dup_ngrams" ->
-      s"""WITH d AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-         |g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-         |               generate_series(1, greatest(len(w) - 7, 0)),
-         |               i -> array_to_string(w[i:i+7], ' ')))) AS gram
-         |      FROM d WHERE len(w) >= 8)
-         |SELECT gram, CAST(count(*) AS BIGINT) AS doc_freq
-         |FROM g GROUP BY gram HAVING count(*) >= 2
-         |ORDER BY doc_freq DESC, gram LIMIT 50""".stripMargin,
-
-    "corpus_overlap" ->
-      s"""WITH d AS (SELECT doc_id, source, md5($NORM_TEXT_SQL) AS fp FROM documents)
-         |SELECT a.source AS src_a, b.source AS src_b,
-         |       CAST(count(*) AS BIGINT) AS n_pairs,
-         |       CAST(count(DISTINCT a.fp) AS BIGINT) AS n_texts
-         |FROM d a JOIN d b ON a.fp = b.fp AND a.source < b.source
-         |GROUP BY 1, 2 ORDER BY src_a, src_b""".stripMargin,
-
-    // mirrors the registered near-overlap matrix: the exact-Jaccard
-    // pair set (the dedup_minhash oracle), sources joined, quantized
-    // integer mean per unordered source pair
-    "corpus_overlap_near" ->
-      s"""WITH docs AS (SELECT doc_id, source, string_split($NORM_TEXT_SQL, ' ') AS w
-         |              FROM documents),
-         |sh AS (SELECT doc_id, source, list_distinct(list_transform(
-         |               generate_series(1, greatest(len(w) - 2, 0)),
-         |               i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2]))) AS s
-         |       FROM docs WHERE len(w) >= 3),
-         |p AS (SELECT a.source AS sa, b.source AS sb,
-         |             len(list_intersect(a.s, b.s)) AS inter, len(a.s) AS la, len(b.s) AS lb
-         |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-         |v AS (SELECT least(sa, sb) AS src_a, greatest(sa, sb) AS src_b,
-         |             ${Q6("CAST(inter AS DOUBLE) / (la + lb - inter)")} AS jaccard
-         |      FROM p WHERE inter > 0
-         |        AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.8
-         |        AND sa <> sb)
-         |SELECT src_a, src_b, CAST(count(*) AS BIGINT) AS n_pairs,
-         |       ${MEAN6(s"sum(${US6("jaccard")})", "count(*)")} AS mean_jaccard
-         |FROM v GROUP BY 1, 2 ORDER BY src_a, src_b""".stripMargin,
-
-    // mirrors Multimodal.syntheticAssets + assetStats: payload bytes =
-    // utf-8 of text (octet_length(BLOB) ≡ Spark length(binary))
-    "mm_stats" ->
-      s"""WITH a AS (SELECT concat('img/', CAST(doc_id % 3 AS VARCHAR)) AS kind,
-         |                  n_chars % 640 + 32 AS width, n_chars % 480 + 32 AS height,
-         |                  octet_length(CAST(text AS BLOB)) AS nb
-         |           FROM documents)
-         |SELECT kind, CAST(count(*) AS BIGINT) AS n_assets,
-         |       CAST(sum(nb) AS BIGINT) AS sum_bytes,
-         |       ${MEAN6("sum(width * 1000000)", "count(*)")} AS avg_width,
-         |       ${MEAN6("sum(height * 1000000)", "count(*)")} AS avg_height,
-         |       CAST(max(nb) AS BIGINT) AS max_bytes
-         |FROM a GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // mirrors Multimodal.chunkManifest: hex is byte-exact and ASCII, so
-    // the VARCHAR substring slices bytes; fingerprint = md5(hex slice)
-    "mm_chunks" ->
-      s"""WITH a AS (SELECT doc_id AS asset_id,
-         |                  concat('img/', CAST(doc_id % 3 AS VARCHAR)) AS kind,
-         |                  octet_length(encode(text)) AS n_bytes,
-         |                  hex(encode(text)) AS hexp
-         |           FROM documents),
-         |b AS (SELECT asset_id, kind, n_bytes, hexp,
-         |             unnest(generate_series(0, (n_bytes + 63) // 64 - 1)) AS chunk_idx
-         |      FROM a WHERE n_bytes > 0)
-         |SELECT asset_id, kind, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-         |       CAST(chunk_idx * 64 AS BIGINT) AS chunk_offset,
-         |       CAST(least(64, n_bytes - chunk_idx * 64) AS BIGINT) AS chunk_bytes,
-         |       md5(substring(hexp, chunk_idx * 128 + 1,
-         |                     least(64, n_bytes - chunk_idx * 64) * 2)) AS chunk_md5
-         |FROM b ORDER BY asset_id, chunk_idx""".stripMargin,
-
-    // mirrors Multimodal.chunkDedupStats over the mm_chunks manifest
-    "mm_dedup_ratio" ->
-      s"""WITH a AS (SELECT doc_id AS asset_id,
-         |                  concat('img/', CAST(doc_id % 3 AS VARCHAR)) AS kind,
-         |                  octet_length(encode(text)) AS n_bytes,
-         |                  hex(encode(text)) AS hexp
-         |           FROM documents),
-         |b AS (SELECT asset_id, kind, n_bytes, hexp,
-         |             unnest(generate_series(0, (n_bytes + 63) // 64 - 1)) AS chunk_idx
-         |      FROM a WHERE n_bytes > 0),
-         |m AS (SELECT kind,
-         |             CAST(least(64, n_bytes - chunk_idx * 64) AS BIGINT) AS chunk_bytes,
-         |             md5(substring(hexp, chunk_idx * 128 + 1,
-         |                           least(64, n_bytes - chunk_idx * 64) * 2)) AS chunk_md5
-         |      FROM b),
-         |dc AS (SELECT kind, chunk_md5, min(chunk_bytes) AS c_bytes, count(*) AS copies
-         |       FROM m GROUP BY 1, 2)
-         |SELECT kind,
-         |       CAST(sum(c_bytes * copies) AS BIGINT) AS total_bytes,
-         |       CAST(sum(c_bytes) AS BIGINT) AS unique_bytes,
-         |       CAST(sum(c_bytes * (copies - 1)) AS BIGINT) AS dup_bytes,
-         |       CAST(count(*) AS BIGINT) AS n_unique_chunks,
-         |       CAST(sum(copies) AS BIGINT) AS n_chunks
-         |FROM dc GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // Mirrors Multimodal.byteShard at 4096 B: the corpus_pack running-sum
-    // arithmetic with bytes for tokens and kind for stratum — start =
-    // cum − n in (md5(asset_id), asset_id) order, shard = start div cap.
-    "mm_shard" ->
-      """WITH a AS (SELECT doc_id AS asset_id,
-        |                  concat('img/', CAST(doc_id % 3 AS VARCHAR)) AS kind,
-        |                  octet_length(encode(text)) AS nb,
-        |                  md5(CAST(doc_id AS VARCHAR)) AS rank_key
-        |           FROM documents),
-        |c AS (SELECT asset_id, kind, CAST(nb AS BIGINT) AS n_bytes,
-        |             CAST(sum(nb) OVER (PARTITION BY kind
-        |                                ORDER BY rank_key, asset_id
-        |                                ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |               - CAST(nb AS BIGINT) AS start_byte
-        |      FROM a)
-        |SELECT asset_id, kind, n_bytes,
-        |       start_byte // 4096 AS shard_id, start_byte % 4096 AS shard_offset
-        |FROM c ORDER BY asset_id""".stripMargin,
-
-    // md5 of the payload BYTES == md5 of the utf-8 text both engines hash
-    "mm_dedup" ->
-      s"""WITH a AS (SELECT doc_id AS asset_id,
-         |                  concat('img/', CAST(doc_id % 3 AS VARCHAR)) AS kind,
-         |                  md5(text) AS fp
-         |           FROM documents),
-         |k AS (SELECT *, min(asset_id) OVER (PARTITION BY fp) AS keep_id FROM a)
-         |SELECT asset_id, kind, fp, asset_id <> keep_id AS is_dup, keep_id
-         |FROM k ORDER BY asset_id""".stripMargin,
-
-    // Mirrors Multimodal.phashPairs: the shared 6-gram md5-SimHash
-    // signature CTEs (PHASH_SIG_CTES — bit-identical to the engine's
-    // PhashSig), then near-dup pairs at Hamming <= 3. Pairs are
-    // brute-forced here (the quadratic is oracle-only — the engine uses
-    // the pigeonhole chunk join, which has recall 1.0 at this bound, so
-    // the exact hamming filter decides membership identically).
-    "mm_phash" ->
-      s"""WITH $PHASH_SIG_CTES,
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-         |      FROM psig a JOIN psig b ON a.doc_id < b.doc_id)
-         |SELECT id_a, id_b, hamming FROM p WHERE hamming <= 3
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // Mirrors Multimodal.phashLoad: the shared 6-gram md5-SimHash
-    // signature CTEs, pigeonhole chunk bucket keys rendered from the
-    // same hammingComboSpec fold (identical bit patterns to the
-    // engine's masked arithmetic shifts), per-bucket loads, per-combo
-    // rollup — the dedup_simhash_load shape.
-    "mm_phash_load" ->
-      s"""WITH $PHASH_SIG_CTES,
-         |ck AS (${comboCkSql("psig", 3)}),
-         |l AS (SELECT ci, cv, count(*) AS load FROM ck GROUP BY 1, 2)
-         |SELECT CAST(ci AS BIGINT) AS chunk,
-         |       CAST(sum(load) AS BIGINT) AS n_items,
-         |       CAST(count(*) AS BIGINT) AS n_buckets,
-         |       CAST(max(load) AS BIGINT) AS max_load,
-         |       CAST(sum(load * (load - 1) // 2) AS BIGINT) AS cand_pairs
-         |FROM l GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Mirrors Multimodal.phashAudit: the mm_phash pair CTEs + the exact
-    // md5 fingerprint equality verdict per pair.
-    "mm_phash_audit" ->
-      s"""WITH $PHASH_SIG_CTES,
-         |h AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-         |      FROM psig a JOIN psig b ON a.doc_id < b.doc_id),
-         |f AS (SELECT doc_id, md5(text) AS fp FROM documents)
-         |SELECT h.id_a, h.id_b, h.hamming, fa.fp = fb.fp AS byte_identical
-         |FROM h JOIN f fa ON fa.doc_id = h.id_a JOIN f fb ON fb.doc_id = h.id_b
-         |WHERE h.hamming <= 3 ORDER BY h.id_a, h.id_b""".stripMargin,
-
-    // mirrors the registered clusters: the mm_phash pair CTEs + the
-    // dedup_clusters recursive reachability, singletons labeled by a
-    // left join over the full asset universe
-    "mm_dedup_clusters" ->
-      s"""WITH RECURSIVE
-         |$PHASH_SIG_CTES,
-         |h AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-         |      FROM psig a JOIN psig b ON a.doc_id < b.doc_id),
-         |e AS (SELECT id_a, id_b FROM h WHERE hamming <= 3),
-         |sym AS (SELECT id_a AS src, id_b AS dst FROM e
-         |        UNION ALL SELECT id_b, id_a FROM e),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.src, s2.dst FROM reach r JOIN sym s2 ON r.dst = s2.src),
-         |lbl AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-         |        FROM reach GROUP BY src)
-         |SELECT d.doc_id AS asset_id, coalesce(lbl.cluster_id, d.doc_id) AS cluster_id
-         |FROM documents d LEFT JOIN lbl ON d.doc_id = lbl.doc_id
-         |ORDER BY asset_id""".stripMargin,
-
-    // Mirrors Multimodal.keepBestAssets: the mm_dedup_clusters phash +
-    // reachability CTEs with the keep-best argmax over payload bytes
-    // (ties → lowest asset_id).
-    "mm_keep_best" ->
-      s"""WITH RECURSIVE
-         |$PHASH_SIG_CTES,
-         |h AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |             CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-         |      FROM psig a JOIN psig b ON a.doc_id < b.doc_id),
-         |e AS (SELECT id_a, id_b FROM h WHERE hamming <= 3),
-         |sym AS (SELECT id_a AS src, id_b AS dst FROM e
-         |        UNION ALL SELECT id_b, id_a FROM e),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.src, s2.dst FROM reach r JOIN sym s2 ON r.dst = s2.src),
-         |lbl AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-         |        FROM reach GROUP BY src),
-         |cl AS (SELECT d.doc_id, coalesce(lbl.cluster_id, d.doc_id) AS cluster_id,
-         |              octet_length(CAST(d.text AS BLOB)) AS nb
-         |       FROM documents d LEFT JOIN lbl ON d.doc_id = lbl.doc_id)
-         |SELECT doc_id AS asset_id, cluster_id,
-         |       (row_number() OVER (PARTITION BY cluster_id
-         |          ORDER BY nb DESC, doc_id) = 1) AS kept
-         |FROM cl ORDER BY asset_id""".stripMargin,
-
-    "mm_frames" ->
-      s"""WITH a AS (SELECT doc_id AS asset_id,
-         |                  concat('img/', CAST(doc_id % 3 AS VARCHAR)) AS kind,
-         |                  octet_length(CAST(text AS BLOB)) AS nb
-         |           FROM documents),
-         |f AS (SELECT asset_id, kind, unnest(generate_series(0, 3)) AS frame_idx, nb FROM a)
-         |SELECT asset_id, kind, CAST(frame_idx AS INT) AS frame_idx,
-         |       CAST(floor((frame_idx * greatest(nb, 1)) / 4.0) AS BIGINT) AS frame_offset
-         |FROM f ORDER BY asset_id, frame_idx""".stripMargin,
-
-    "text_fingerprint" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents)
-         |SELECT doc_id, md5(norm) AS fp_md5,
-         |       CASE WHEN length(norm) < 8 THEN md5(norm)
-         |            ELSE list_min(list_transform(generate_series(1, CAST(length(norm) - 7 AS BIGINT)),
-         |                                         i -> md5(substr(norm, CAST(i AS INT), 8)))) END AS fp_winnow,
-         |       CAST(greatest(length(norm) - 7, 1) AS BIGINT) AS n_shingles8
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    // mirrors TextFunctions.keywords: tf over all occurrences, df from
-    // the distinct (doc, word) pairs, score = tf · (N/df) with the same
-    // op order, ties score-desc then word-asc
-    "text_keywords" ->
-      s"""WITH d AS (SELECT doc_id, $NORM_TEXT_SQL AS norm FROM documents),
-         |t AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS word FROM d),
-         |tf AS (SELECT doc_id, word, count(*) AS tf
-         |       FROM t WHERE word <> '' GROUP BY 1, 2),
-         |df AS (SELECT word, count(*) AS df FROM tf GROUP BY 1),
-         |n AS (SELECT count(*) AS n_docs FROM documents),
-         |s AS (SELECT tf.doc_id, tf.word, tf.tf, df.df,
-         |        CAST(tf.tf AS DOUBLE) * (CAST(n.n_docs AS DOUBLE) / CAST(df.df AS DOUBLE)) AS score
-         |      FROM tf JOIN df USING (word) CROSS JOIN n),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-         |                                   ORDER BY score DESC, word) AS rank
-         |      FROM s)
-         |SELECT doc_id, CAST(rank AS BIGINT) AS rank, word, tf, df, score
-         |FROM r WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
-  )
-
-  // ---- DuckDB oracle building blocks ----------------------------------
-
-  // SQL mirrors of graft.Quant — see its doc for why scale-0 rounding over
-  // integer micro-units is the only float contract both engines compute
-  // bit-identically. Any float column added to `queries` MUST use these.
-  private def Q6(x: String) = s"round(($x) * 1000000.0, 0) / 1000000.0 + 0"
-
-  /** The pigeonhole chunk bucket rows (doc_id, ci, cv) over a
-    * (doc_id, sig) CTE — rendered from the SAME Dedup.hammingComboSpec
-    * the engine folds, shift-for-shift, so the grid the load audits
-    * price cannot desync between engines.
+  /** The queries called `names`, or every query when `names` is empty.
+    * An unknown name throws, listing every unknown one.
     */
-  private def comboCkSql(src: String, maxHamming: Int): String =
-    graft.text.Dedup.hammingComboSpec(maxHamming).map { case (ci, spec) =>
-      val key = spec.foldLeft("CAST(0 AS BIGINT)") { case (acc, (lo, w)) =>
-        s"((($acc) << $w) | ((sig >> $lo) & ${(1L << w) - 1}))"
-      }
-      s"SELECT doc_id, $ci AS ci, $key AS cv FROM $src"
-    }.mkString("\nUNION ALL ")
-
-  /** x^k as the LEFT-FOLD of k multiplications from 1.0 — the exact
-    * IEEE sequence Vectors.expectedBandRecall's powN loop runs, so the
-    * replay is bit-identical without trusting either engine's pow().
-    * generate_series(1, 0) is empty, so k = 0 folds to 1.0.
-    */
-  private def powFoldSql(x: String, k: String): String =
-    s"list_reduce(list_prepend(CAST(1.0 AS DOUBLE), " +
-      s"list_transform(generate_series(1, $k), i -> ($x))), (a, b) -> a * b)"
-
-  /** Per-table hit p^b + f·p^(b−1)(1−p) with the one-flip-floor budget
-    * f = min(b, max(1, 16 − b)) — mirrors expectedBandRecall.hit.
-    */
-  private def bandHitSql(p: String, bits: String): String =
-    s"(${powFoldSql(p, bits)} + " +
-      s"CAST(least($bits, greatest(1, 16 - ($bits))) AS DOUBLE) * " +
-      s"${powFoldSql(p, s"($bits) - 1")} * (CAST(1.0 AS DOUBLE) - $p))"
-
-  /** 1 − (1−hit(b0+1))^nup (1−hit(b0))^(16−nup) over bsel's config —
-    * mirrors Vectors.expectedBandRecall (p arrives as the shared
-    * decimal literal from Vectors.bandP, never a libm acos).
-    */
-  private def expRecallSql(pLit: String): String = {
-    val p = s"CAST($pLit AS DOUBLE)"
-    s"(CAST(1.0 AS DOUBLE) - " +
-      s"${powFoldSql(s"(CAST(1.0 AS DOUBLE) - ${bandHitSql(p, "(b0 + 1)")})", "nup")} * " +
-      s"${powFoldSql(s"(CAST(1.0 AS DOUBLE) - ${bandHitSql(p, "b0")})", "(16 - nup)")})"
-  }
-  private def US6(x: String) = s"CAST(round(($x) * 1000000.0, 0) AS BIGINT)"
-  /** The ts_decompose oracle body (period 7, no ORDER BY) — shared with
-    * the ts_seasonal_strength oracle, which consumes it as a CTE.
-    */
-  private lazy val DECOMP7_SQL: String =
-    s"""WITH pts AS ($PTS_SQL),
-       |w AS (SELECT user_id, event_type,
-       |             $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,
-       |             CAST(round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) AS BIGINT) AS m_us
-       |      FROM pts WHERE t_us >= $T0 AND t_us < $T29
-       |      GROUP BY 1, 2, 3),
-       |fr AS (SELECT *, sum(m_us) OVER wfr AS s_f, count(*) OVER wfr AS n_f
-       |       FROM w WINDOW wfr AS (PARTITION BY user_id, event_type ORDER BY w_start
-       |                             ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-       |ff AS (SELECT *, ((w_start - $T0) // $DAY) % 7 AS pos FROM fr WHERE n_f = 7),
-       |se AS (SELECT user_id, event_type, pos,
-       |              CAST(sum(m_us) AS DOUBLE) / count(*)
-       |                - CAST(sum(s_f) AS DOUBLE) / (count(*) * 7) AS seasonal_raw
-       |       FROM ff GROUP BY 1, 2, 3)
-       |SELECT ff.user_id AS user_id, ff.event_type AS event_type, ff.w_start AS w_start,
-       |       ${Q6("CAST(ff.m_us AS DOUBLE) / 1e6")} AS v_mean,
-       |       ${Q6("CAST(ff.s_f AS DOUBLE) / 7 / 1e6")} AS trend,
-       |       ${Q6("se.seasonal_raw / 1e6")} AS seasonal,
-       |       ${Q6("(CAST(ff.m_us AS DOUBLE) - CAST(ff.s_f AS DOUBLE) / 7 - se.seasonal_raw) / 1e6")}
-       |         AS residual
-       |FROM ff JOIN se ON ff.user_id = se.user_id AND ff.event_type = se.event_type
-       |                AND ff.pos = se.pos""".stripMargin
-
-  private def MEAN6(sumUs: String, n: String) =
-    s"round(CAST($sumUs AS DOUBLE) / $n, 0) / 1000000.0 + 0"
-  private val V_MEAN_SQL = s"${MEAN6(s"sum(${US6("value")})", "count(*)")} AS v_mean"
-  // EWMA coefficients — MUST be the same strings the Scala op embeds
-  private val EWMA_A = java.lang.Double.toString(0.3)
-  private val EWMA_B = java.lang.Double.toString(1.0 - 0.3)
-  // Holt coefficients — same contract
-  private val HOLT_A = java.lang.Double.toString(0.5)
-  private val HOLT_IA = java.lang.Double.toString(1.0 - 0.5)
-  private val HOLT_B = java.lang.Double.toString(0.3)
-  private val HOLT_IB = java.lang.Double.toString(1.0 - 0.3)
-  // l_t spelled identically everywhere it appears (engine + oracle)
-  private val HOLT_LNEW = s"$HOLT_A * n.v_mean + $HOLT_IA * (r.l + r.b)"
-  // Holt-Winters coefficients + recurrence terms, same spelling contract;
-  // the seasonal history rides the recursion as a LIST (r.ring), indexed
-  // 1-based: s_{t-p} for the row with rn = t+1 sits at ring[rn - p]
-  private val HW_P = 7
-  private val HW_A = java.lang.Double.toString(0.5)
-  private val HW_IA = java.lang.Double.toString(1.0 - 0.5)
-  private val HW_B = java.lang.Double.toString(0.3)
-  private val HW_IB = java.lang.Double.toString(1.0 - 0.3)
-  private val HW_G = java.lang.Double.toString(0.4)
-  private val HW_IG = java.lang.Double.toString(1.0 - 0.4)
-  private val HW_SPREV =
-    s"CASE WHEN n.rn >= ${HW_P + 1} THEN r.ring[n.rn - $HW_P] ELSE CAST(0.0 AS DOUBLE) END"
-  private val HW_LNEW = s"$HW_A * (n.v_mean - ($HW_SPREV)) + $HW_IA * (r.l + r.b)"
-  private val HW_SNEW = s"$HW_G * (n.v_mean - ($HW_LNEW)) + $HW_IG * ($HW_SPREV)"
-
-  /** Interpolated-percentile aggregate over (rn, n, value) — mirrors
-    * TimeSeriesOps.percentileWindows: idx = p·(n-1), lookup of the two
-    * closest ranks by conditional aggregation, then the identical
-    * lo + (hi-lo)·frac float blend (p serialized via Double.toString).
-    */
-  private def PCT_SQL(p: Double): String = {
-    val ps = java.lang.Double.toString(p)
-    val idx = s"$ps * CAST(n - 1 AS DOUBLE)"
-    val lo = s"max(CASE WHEN rn = CAST(floor($idx) AS BIGINT) + 1 THEN value END)"
-    val hi = s"max(CASE WHEN rn = CAST(ceil($idx) AS BIGINT) + 1 THEN value END)"
-    Q6(s"$lo + ($hi - $lo) * max($idx - floor($idx))")
-  }
-
-  private def CSV_MEAN_SQL(u: Int) =
-    MEAN6(s"sum(CASE WHEN user_id = $u THEN ${US6("value")} END)",
-      s"count(CASE WHEN user_id = $u THEN 1 END)")
-
-  /** The four GenerateCSV stat columns for one stream (csv.go:75-104):
-    * min/mean/max/count under `cond`, count null (not 0) when the stream
-    * is silent in the window — mirrors TimeSeriesOps.csvExportStat.
-    */
-  private def CSV_STAT_SQL(label: String, cond: String): String = {
-    val cnt = s"count(CASE WHEN $cond THEN 1 END)"
-    s"""min(CASE WHEN $cond THEN value END) AS ${label}_min,
-       |       ${MEAN6(s"sum(CASE WHEN $cond THEN ${US6("value")} END)", cnt)} AS ${label}_mean,
-       |       max(CASE WHEN $cond THEN value END) AS ${label}_max,
-       |       CASE WHEN $cnt > 0 THEN CAST($cnt AS BIGINT) END AS ${label}_count""".stripMargin
-  }
-
-  // The raw (pre-quantization) quality score — mirrors TextFunctions.quality
-  // term-for-term so the input double to Q6 is bit-identical.
-  private val QSCORE_SQL =
-    """CAST(n_stop AS DOUBLE) / n_words * 0.4
-      |              + (1.0 - CAST(n_punct AS DOUBLE) / n_chars) * 0.3
-      |              + least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.3""".stripMargin
-
-  private val NORM_TEXT_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-
-  /** Shared by dedup_clusters / dedup_keep_best: exact-Jaccard ≥ 0.8
-    * 3-shingle edges closed into components via recursive reachability;
-    * `lbl` maps every non-singleton doc to min reachable doc_id.
-    */
-  private val DEDUP_CLUSTER_CTES =
-    s"""WITH RECURSIVE
-       |docs AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents),
-       |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 0)),
-       |               i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2]))) AS s
-       |       FROM docs WHERE len(w) >= 3),
-       |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |             len(list_intersect(a.s, b.s)) AS inter, len(a.s) AS la, len(b.s) AS lb
-       |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-       |e AS (SELECT id_a, id_b FROM p
-       |      WHERE inter > 0 AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.8),
-       |sym AS (SELECT id_a AS src, id_b AS dst FROM e
-       |        UNION ALL SELECT id_b, id_a FROM e),
-       |reach(src, dst) AS (
-       |  SELECT src, dst FROM sym
-       |  UNION
-       |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-       |lbl AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-       |        FROM reach GROUP BY src)""".stripMargin
-
-  /** 64-bit SimHash signature as a UBIGINT aggregate over per-word hashes
-    * `h` — one OR-term per bit, set iff the ±1 vote sum is positive.
-    */
-  private val SIMHASH_SIG_SQL = (0 until 64).map { b =>
-    // literal bit masks: DuckDB's << overflows at bit 63 even on UBIGINT
-    val mask = java.lang.Long.toUnsignedString(1L << b)
-    s"(CASE WHEN sum(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) > 0 " +
-      s"THEN $mask::UBIGINT ELSE 0::UBIGINT END)"
-  }.mkString("(", " | ", ")")
-
-  /** Perceptual-hash signature CTEs — mirrors graft.plans.TextHashes.phash
-    * bit for bit: one row per 6-code-point gram position of the decoded
-    * payload (= the document text under the stub decode), per-gram hash =
-    * md5_number_lower of the gram (the same value md5Lower64 computes over
-    * the gram's byte slice), then the shared SIMHASH_SIG aggregate (±1
-    * vote per bit per gram OCCURRENCE — multiset semantics). Payloads
-    * under 6 code points carry no gram and drop out, matching the
-    * engine's null-signature filter. Yields `psig(doc_id, sig)`.
-    */
-  private val PHASH_SIG_CTES =
-    s"""pw AS (SELECT doc_id, text,
-       |         unnest(generate_series(1, CAST(length(text) - 5 AS BIGINT))) AS i
-       |       FROM documents WHERE length(text) >= 6),
-       |ph AS (SELECT doc_id, md5_number_lower(substr(text, CAST(i AS INT), 6)) AS h
-       |       FROM pw),
-       |psig AS (SELECT doc_id, $SIMHASH_SIG_SQL AS sig FROM ph GROUP BY doc_id)""".stripMargin
-
-  /** Index-ordered double dot product — mirrors graft.sim.Vectors.dotExpr
-    * term-for-term so cosines are bit-identical across engines.
-    */
-  private def DOT_SQL(a: String, b: String): String =
-    s"list_sum(list_transform(generate_series(1, 64), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-
-  private val NORM_SQL =
-    "sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-
-  /** LSH hyperplane component — mirrors Vectors.planes: md5_number_lower of
-    * "lsh|t|b|d" shifted to 53 bits, scaled to [-0.5, 0.5).
-    */
-  private def PLANE_SQL(t: String, b: String, d: String): String =
-    s"((md5_number_lower(concat('lsh|', $t, '|', $b, '|', $d)) >> 11) / 9007199254740992.0 - 0.5)"
-
-  /** Mirrors graft.sim.Vectors.cosinePairsLshAuto (tau = 0.4, 16 tables,
-    * fractional-bit occupancy budget) — buckets from the same md5-derived
-    * planes, per-table widths from the same (b0, nUp) rule
-    * (Vectors.autoBitsFrac: b0 = clamp(⌊log₂⌈n/4⌉⌋, 8, 28); nUp tables
-    * bucket at b0 + 1 bits so the mean per-table collision rate stays
-    * 1/⌈n/4⌉ instead of riding the power-of-two occupancy sawtooth —
-    * nUp = (64·(u − 2^b0) + u) div (2u), exact integer half-up),
-    * candidates = pairs whose buckets collide exactly or within the
-    * per-table-width FLIP BUDGET (min(bits, max(1, 16 − bits)) 1-bit
-    * probes — all bits at the b=8 floor, ONE from b ≥ 16) from either
-    * endpoint — least/greatest symmetrizes the probe direction — then
-    * exact cosine ≥ 0.4 verify in DOT_SQL's index order. Shared by
-    * emb_cosine_pairs / emb_knn / emb_clusters / emb_lsh_load; yields
-    * `pr` (id_a < id_b, raw cos) and `bk` (per-table buckets).
-    */
-  private val LSH_PAIR_CTES =
-    s"""e AS (SELECT vec_id, embedding, $NORM_SQL AS nrm FROM embeddings),
-       |bsel AS (SELECT b0, CASE WHEN b0 >= 28 OR u <= (CAST(1 AS BIGINT) << b0) THEN 0
-       |                ELSE least(16, (64 * (u - (CAST(1 AS BIGINT) << b0)) + u) // (2 * u))
-       |                END AS nup
-       |         FROM (SELECT u, coalesce(
-       |                 (SELECT max(k)
-       |                  FROM (SELECT unnest(generate_series(8, 28)) AS k) ks
-       |                  WHERE (CAST(1 AS BIGINT) << k) <= u), 8) AS b0
-       |               FROM (SELECT (n + 3) // 4 AS u
-       |                     FROM (SELECT count(*) AS n FROM embeddings) nn) uu) bb),
-       |tsel AS (SELECT t.t AS tbl,
-       |                bsel.b0 + (CASE WHEN t.t < bsel.nup THEN 1 ELSE 0 END) AS bits
-       |         FROM (SELECT unnest(generate_series(0, 15)) AS t) t, bsel),
-       |bk AS (SELECT e.vec_id, tsel.tbl,
-       |         CAST(list_sum(list_transform(generate_series(0, tsel.bits - 1), bb ->
-       |           CASE WHEN list_sum(list_transform(generate_series(1, 64), dd ->
-       |                  CAST(e.embedding[dd] AS DOUBLE) * ${PLANE_SQL("tsel.tbl", "bb", "dd - 1")})) > 0
-       |                THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END)) AS BIGINT) AS bucket
-       |       FROM e, tsel),
-       |pp AS (SELECT vec_id, tbl,
-       |              xor(bucket, unnest(list_prepend(CAST(0 AS BIGINT),
-       |                list_transform(
-       |                  generate_series(0, least(bits, greatest(1, 16 - bits)) - 1),
-       |                  j -> CAST(1 AS BIGINT) << j)))) AS bucket
-       |       FROM (SELECT b.vec_id, b.tbl, b.bucket, t.bits
-       |             FROM bk b JOIN tsel t ON t.tbl = b.tbl) wb),
-       |cand AS (SELECT DISTINCT least(p.vec_id, q.vec_id) AS id_a,
-       |                         greatest(p.vec_id, q.vec_id) AS id_b
-       |         FROM pp p JOIN bk q ON p.tbl = q.tbl AND p.bucket = q.bucket
-       |         WHERE p.vec_id <> q.vec_id),
-       |pr AS (SELECT id_a, id_b,
-       |              ${DOT_SQL("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos
-       |       FROM cand JOIN e a ON a.vec_id = id_a JOIN e b ON b.vec_id = id_b
-       |       WHERE ${DOT_SQL("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= 0.4)""".stripMargin
-
-  /** LTTB mirror — graft.ts.Downsample.lttb unrolled: the sequential
-    * bucket-by-bucket selection becomes a chain of nOut-2 CTEs, each
-    * picking its bucket's max-triangle-area point (QUALIFY row_number)
-    * against the previous stage's selection and the precomputed
-    * next-bucket mean (exact integer sums, the same micro-unit rounding).
-    */
-  private def lttbSql(nOut: Int, bucketed: Boolean = false): String = {
-    val middle = nOut - 2
-    def area(cT: String, cV: String) =
-      s"abs((CAST(p.t_us AS DOUBLE) - r.tbar) * ($cV - p.value) - " +
-        s"(CAST(p.t_us AS DOUBLE) - CAST($cT AS DOUBLE)) * (r.vbar - p.value))"
-    // the bucketed variant selects among each bucket's M4 candidate set
-    // (first/last in time, min/max in value — the same deterministic
-    // struct-extreme tie-breaks as the engine) instead of all bucket rows
-    val pool = if (bucketed) "cand" else "mid"
-    val candCte = if (!bucketed) "" else
-      s"""cand AS (
-         |  SELECT DISTINCT user_id, event_type, kb, t_us, value FROM (
-         |    SELECT user_id, event_type, kb, t_us, value,
-         |      row_number() OVER (PARTITION BY user_id, event_type, kb
-         |        ORDER BY t_us, value) AS r1,
-         |      row_number() OVER (PARTITION BY user_id, event_type, kb
-         |        ORDER BY t_us DESC, value DESC) AS r2,
-         |      row_number() OVER (PARTITION BY user_id, event_type, kb
-         |        ORDER BY value, t_us) AS r3,
-         |      row_number() OVER (PARTITION BY user_id, event_type, kb
-         |        ORDER BY value DESC, t_us DESC) AS r4
-         |    FROM mid)
-         |  WHERE r1 = 1 OR r2 = 1 OR r3 = 1 OR r4 = 1),
-         |""".stripMargin
-    val stages = (0 until middle).map { kb =>
-      val prev = if (kb == 0) "firstp" else s"sel${kb - 1}"
-      s"""sel$kb AS (
-         |  SELECT m.user_id AS user_id, m.event_type AS event_type,
-         |         m.t_us AS t_us, m.value AS value
-         |  FROM $pool m
-         |  JOIN $prev p ON m.user_id = p.user_id AND m.event_type = p.event_type
-         |  JOIN nextref r ON r.user_id = m.user_id AND r.event_type = m.event_type
-         |    AND r.kb = $kb
-         |  WHERE m.kb = $kb
-         |  QUALIFY row_number() OVER (PARTITION BY m.user_id, m.event_type
-         |    ORDER BY ${area("m.t_us", "m.value")} DESC, m.t_us DESC, m.value DESC) = 1)"""
-        .stripMargin
-    }.mkString(",\n")
-    val unions = (0 until middle)
-      .map(kb => s"UNION ALL SELECT user_id, event_type, t_us, value FROM sel$kb")
-      .mkString("\n")
-    s"""WITH pts AS ($PTS_SQL),
-       |s AS (SELECT user_id, event_type, t_us, value,
-       |        row_number() OVER (PARTITION BY user_id, event_type
-       |                           ORDER BY t_us, value) AS rn,
-       |        count(*) OVER (PARTITION BY user_id, event_type) AS n
-       |      FROM pts WHERE t_us >= $T0 AND t_us < $T29),
-       |small AS (SELECT user_id, event_type, t_us, value FROM s WHERE n <= $nOut),
-       |big AS (SELECT * FROM s WHERE n > $nOut),
-       |firstp AS (SELECT user_id, event_type, t_us, value FROM big WHERE rn = 1),
-       |lastp AS (SELECT user_id, event_type, t_us, value FROM big WHERE rn = n),
-       |mid AS (SELECT user_id, event_type, t_us, value,
-       |          ((rn - 2) * $middle) // (n - 2) AS kb
-       |        FROM big WHERE rn >= 2 AND rn <= n - 1),
-       |bm AS (SELECT user_id, event_type, kb,
-       |         CAST(sum(t_us) AS DOUBLE) / count(*) AS tbar,
-       |         round(CAST(sum(${US6("value")}) AS DOUBLE) / count(*), 0) / 1000000.0 AS vbar
-       |       FROM mid GROUP BY 1, 2, 3),
-       |nextref AS (SELECT user_id, event_type, kb - 1 AS kb, tbar, vbar
-       |            FROM bm WHERE kb >= 1
-       |            UNION ALL
-       |            SELECT user_id, event_type, ${middle - 1} AS kb,
-       |                   CAST(t_us AS DOUBLE) AS tbar, value AS vbar FROM lastp),
-       |$candCte$stages
-       |SELECT user_id, event_type, t_us, value FROM small
-       |UNION ALL SELECT user_id, event_type, t_us, value FROM firstp
-       |$unions
-       |UNION ALL SELECT user_id, event_type, t_us, value FROM lastp
-       |ORDER BY user_id, event_type, t_us, value""".stripMargin
-  }
-
-  /** Exact word-3-gram Jaccard pairs ≥ tau — the oracle for both the scoped
-    * exact query and the (exact-verified) MinHash-LSH query.
-    */
-  private def jaccardSql(tau: Double, idLimit: Option[Long]): String = {
-    val scope = idLimit.fold("")(l => s"WHERE doc_id < $l")
-    s"""WITH docs AS (SELECT doc_id, string_split($NORM_TEXT_SQL, ' ') AS w FROM documents $scope),
-       |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(w) - 2, 0)),
-       |               i -> concat(w[i], ' ', w[i + 1], ' ', w[i + 2]))) AS s
-       |       FROM docs WHERE len(w) >= 3),
-       |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |             len(list_intersect(a.s, b.s)) AS inter, len(a.s) AS la, len(b.s) AS lb
-       |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, ${Q6("CAST(inter AS DOUBLE) / (la + lb - inter)")} AS jaccard
-       |FROM p WHERE inter > 0 AND CAST(inter AS DOUBLE) / (la + lb - inter) >= $tau
-       |ORDER BY id_a, id_b""".stripMargin
+  def named(names: Seq[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val unknown = names.filterNot(queries.contains).distinct
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    if (names.isEmpty) queries else queries.filter { case (n, _) => names.contains(n) }
   }
 }

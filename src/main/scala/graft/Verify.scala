@@ -10,8 +10,9 @@ object Verify {
     }
     val Array(sfDir, outDir) = args.take(2)
     // extra args select a subset — local iteration only (the driver
-    // always passes exactly two, dumping the full suite)
-    val only = args.drop(2).toSet
+    // always passes exactly two, dumping the full suite); an unknown
+    // name throws before anything is written
+    val queries = SparkEntry.named(args.drop(2).toSeq)
     // same session contract as Bench (GraftConf.local), so the
     // correctness dump exercises the exact partitioning regime the bench
     // measures — including the default regime, which sets NO
@@ -23,9 +24,7 @@ object Verify {
       f.delete()
     }
     var failures = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       // drop any previous run's output FIRST: a query that throws must
       // leave nothing for the comparator to (wrongly) pass against
       rm(new java.io.File(s"$outDir/$name"))
@@ -52,7 +51,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
+      .filter { case (k, _) => queries.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

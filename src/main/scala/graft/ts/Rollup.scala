@@ -262,45 +262,56 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     */
   def windows(raw: => DataFrame, streamCols: Seq[String],
               start: Long, end: Long, width: Long): DataFrame = {
-    val usable = pointwidths.filter(l =>
-      width % (1L << l) == 0 && (start & ((1L << l) - 1)) == 0L)
+    val usable = usableLevels(start, width)
     if (usable.isEmpty) TimeSeriesOps.windows(raw, streamCols, start, end, width)
-    else {
-      val l = usable.max
-      val completeEnd = start + ((end - start) / width) * width
-      val d = col("w_start") - start
-      level(l)
-        .filter(col("w_start") >= start && col("w_start") < completeEnd)
-        .groupBy(streamCols.map(col)
-          :+ (lit(start) + d - pmod(d, lit(width))).as("w_win"): _*)
-        .agg(
-          min(col("v_min")).as("v_min"),
-          graft.Quant.mean6(sum(col("v_sum_us")), sum(col("v_count"))).as("v_mean"),
-          max(col("v_max")).as("v_max"),
-          sum(col("v_count")).as("v_count"))
-        .withColumnRenamed("w_win", "w_start")
+    else
+      reaggregate(level(usable.max), streamCols, start, end, width)(statAggs: _*)
         .select(streamCols.map(col) :+ col("w_start") :+ col("v_min")
           :+ col("v_mean") :+ col("v_max") :+ col("v_count"): _*)
-    }
   }
+
+  /** The levels whose buckets tile `width`-wide windows from `start`:
+    * width divisible by 2^l and `start` 2^l-aligned, so every bucket lies
+    * wholly inside one window — the usability rule of every method here
+    * that serves arbitrary windows.
+    */
+  private def usableLevels(start: Long, width: Long): Seq[Int] =
+    pointwidths.filter(l => width % (1L << l) == 0 && (start & ((1L << l) - 1)) == 0L)
+
+  /** Re-aggregate level buckets into the complete `width`-wide windows
+    * from `start` (the raw path's cutoff), keyed by stream and w_start:
+    * keep the buckets inside [start, completeEnd), optionally merge them
+    * up to 2^mergeTo first, then group each into the window holding its
+    * start and apply `aggs`.
+    */
+  private def reaggregate(buckets: DataFrame, streamCols: Seq[String], start: Long,
+                          end: Long, width: Long, mergeTo: Option[Int] = None)(
+                          aggs: Column*): DataFrame = {
+    val completeEnd = start + ((end - start) / width) * width
+    val complete = buckets.filter(col("w_start") >= start && col("w_start") < completeEnd)
+    val d = col("w_start") - start
+    mergeTo.fold(complete)(merge(complete, streamCols, _))
+      .groupBy(streamCols.map(col)
+        :+ (lit(start) + d - pmod(d, lit(width))).as("w_win"): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .withColumnRenamed("w_win", "w_start")
+  }
+
+  /** Window (min, mean, max, count) over level buckets. */
+  private def statAggs: Seq[Column] = Seq(
+    min(col("v_min")).as("v_min"),
+    graft.Quant.mean6(sum(col("v_sum_us")), sum(col("v_count"))).as("v_mean"),
+    max(col("v_max")).as("v_max"),
+    sum(col("v_count")).as("v_count"))
 
   /** Per-window exact (sum_us, n) summaries re-aggregated from the
     * coarsest usable level — the shared feed for the rollup-served
-    * detector paths below. Same usability rule as windows(): the window
-    * width must be a multiple of the level bucket and `start` must be
-    * bucket-aligned, else the caller falls back to raw.
+    * detector paths below, which fall back to raw when no level is usable.
     */
   private def windowSums(pw: Int, streamCols: Seq[String],
-                         start: Long, end: Long, width: Long): DataFrame = {
-    val completeEnd = start + ((end - start) / width) * width
-    val d = col("w_start") - start
-    level(pw)
-      .filter(col("w_start") >= start && col("w_start") < completeEnd)
-      .groupBy(streamCols.map(col)
-        :+ (lit(start) + d - pmod(d, lit(width))).as("w_win"): _*)
-      .agg(sum(col("v_sum_us")).as("sum_us"), sum(col("v_count")).as("n"))
-      .withColumnRenamed("w_win", "w_start")
-  }
+                         start: Long, end: Long, width: Long): DataFrame =
+    reaggregate(level(pw), streamCols, start, end, width)(
+      sum(col("v_sum_us")).as("sum_us"), sum(col("v_count")).as("n"))
 
   /** Peak extraction served from the rollup hierarchy — the qtree
     * promise applied to the detector: the window means come from the
@@ -311,8 +322,7 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     */
   def peaks(raw: => DataFrame, streamCols: Seq[String], start: Long, end: Long,
             width: Long, k: Int, minPromUs: Long): DataFrame = {
-    val usable = pointwidths.filter(l =>
-      width % (1L << l) == 0 && (start & ((1L << l) - 1)) == 0L)
+    val usable = usableLevels(start, width)
     if (usable.isEmpty)
       TimeSeriesOps.peaks(raw, streamCols, start, end, width, k, minPromUs)
     else TimeSeriesOps.peaksOfWindowSums(
@@ -326,8 +336,7 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     */
   def savgol(raw: => DataFrame, streamCols: Seq[String], start: Long, end: Long,
              width: Long): DataFrame = {
-    val usable = pointwidths.filter(l =>
-      width % (1L << l) == 0 && (start & ((1L << l) - 1)) == 0L)
+    val usable = usableLevels(start, width)
     if (usable.isEmpty)
       TimeSeriesOps.savgol(raw, streamCols, start, end, width)
     else TimeSeriesOps.savgolOfWindowSums(
@@ -339,8 +348,7 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     */
   def changePoints(raw: => DataFrame, streamCols: Seq[String], start: Long,
                    end: Long, width: Long, k: Int, minShiftUs: Long): DataFrame = {
-    val usable = pointwidths.filter(l =>
-      width % (1L << l) == 0 && (start & ((1L << l) - 1)) == 0L)
+    val usable = usableLevels(start, width)
     if (usable.isEmpty)
       TimeSeriesOps.changePoints(raw, streamCols, start, end, width, k, minShiftUs)
     else TimeSeriesOps.changePointsOfWindowSums(
@@ -358,8 +366,7 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     */
   def band(raw: => DataFrame, streamCols: Seq[String], start: Long, end: Long,
            width: Long, k: Int, nSigma: Double): DataFrame = {
-    val usable = pointwidths.filter(l =>
-      width % (1L << l) == 0 && (start & ((1L << l) - 1)) == 0L)
+    val usable = usableLevels(start, width)
     // v_sum2_us postdates the first persisted bases: a stale level can't
     // serve the second moment, so fall back to raw (always correct)
     // instead of dying AnalysisException mid-plan; the warning names the
@@ -374,16 +381,10 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     if (usable.isEmpty)
       TimeSeriesOps.bollingerBands(raw, streamCols, start, end, width, k, nSigma)
     else {
-      val completeEnd = start + ((end - start) / width) * width
-      val d = col("w_start") - start
-      val moments = level(usable.max)
-        .filter(col("w_start") >= start && col("w_start") < completeEnd)
-        .groupBy(streamCols.map(col)
-          :+ (lit(start) + d - pmod(d, lit(width))).as("w_win"): _*)
-        .agg(sum(col("v_sum_us")).as("s1"),
-          sum(col("v_sum2_us")).cast("decimal(38,0)").as("s2"),
-          sum(col("v_count")).as("n"))
-        .withColumnRenamed("w_win", "w_start")
+      val moments = reaggregate(level(usable.max), streamCols, start, end, width)(
+        sum(col("v_sum_us")).as("s1"),
+        sum(col("v_sum2_us")).cast("decimal(38,0)").as("s2"),
+        sum(col("v_count")).as("n"))
       TimeSeriesOps.bandOfWindowMoments(moments, streamCols, k, nSigma)
     }
   }
@@ -415,11 +416,9 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
                slo: Double): DataFrame = {
     require(widths.nonEmpty && widths.forall(_ > 0), s"widths must be positive: $widths")
     require(slo > 0 && slo < 1, s"slo must be in (0,1), got $slo")
-    def usableFor(w: Long) = pointwidths.filter(l =>
-      w % (1L << l) == 0 && (start & ((1L << l) - 1)) == 0L)
     val servable = storedBadPred.contains(
       org.apache.spark.sql.graft.GraftSqlShim.canonicalSql(badPred)) &&
-      widths.forall(w => usableFor(w).nonEmpty) &&
+      widths.forall(w => usableLevels(start, w).nonEmpty) &&
       pointwidths.forall(l => level(l).columns.contains("v_bad_count"))
     if (!servable)
       TimeSeriesOps.burnRate(raw, streamCols, start, end, widths, badPred, slo)
@@ -427,16 +426,10 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
       // per width: its own coarsest usable level, complete windows only
       // (the raw path's cutoff), counts re-merged to the width grid
       widths.map { w =>
-        val completeEnd = start + ((end - start) / w) * w
-        val d = col("w_start") - start
-        level(usableFor(w).max)
-          .filter(col("w_start") >= start && col("w_start") < completeEnd)
-          .groupBy(streamCols.map(col)
-            :+ (lit(start) + d - pmod(d, lit(w))).as("w_win"): _*)
-          .agg(sum(col("v_count")).as("n_events"),
-            sum(col("v_bad_count")).as("n_bad"))
+        reaggregate(level(usableLevels(start, w).max), streamCols, start, end, w)(
+            sum(col("v_count")).as("n_events"), sum(col("v_bad_count")).as("n_bad"))
           .select(streamCols.map(col) ++ Seq(lit(w).as("width_us"),
-            col("w_win").as("w_start"), col("n_events"), col("n_bad"),
+            col("w_start"), col("n_events"), col("n_bad"),
             graft.Quant.q6(col("n_bad").cast("double") / col("n_events").cast("double"))
               .as("bad_frac"),
             graft.Quant.q6(col("n_bad").cast("double") / col("n_events").cast("double") /
@@ -489,20 +482,7 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     // produces) or drop a straddling bucket's in-range points
     require((start & ((1L << depth) - 1)) == 0L,
       s"windowsApprox start must be 2^$depth-aligned, got $start")
-    val completeEnd = start + ((end - start) / width) * width
-    val buckets = merge(
-      level(usable.max).filter(col("w_start") >= start && col("w_start") < completeEnd),
-      streamCols, depth)
-    val d = col("w_start") - start
-    buckets
-      .groupBy(streamCols.map(col)
-        :+ (lit(start) + d - pmod(d, lit(width))).as("w_win"): _*)
-      .agg(
-        min(col("v_min")).as("v_min"),
-        graft.Quant.mean6(sum(col("v_sum_us")), sum(col("v_count"))).as("v_mean"),
-        max(col("v_max")).as("v_max"),
-        sum(col("v_count")).as("v_count"))
-      .withColumnRenamed("w_win", "w_start")
+    reaggregate(level(usable.max), streamCols, start, end, width, Some(depth))(statAggs: _*)
   }
 
   /** Serve AlignedWindows(pointWidth=pw) from the coarsest usable level.

@@ -41,14 +41,6 @@ class CorpusSpec extends SparkSuite {
       == ((2L, 5L, 0L, 0L)))
   }
 
-  test("every oracle entry names a real query (driver-contract guard)") {
-    val qs = SparkEntry.queries.keySet
-    val orphans = SparkEntry.oracleSql.keySet -- qs
-    assert(orphans.isEmpty, s"oracleSql keys with no query: $orphans")
-    // and the flagship must be one of the declared queries' plans
-    assert(SparkEntry.entry(spark).columns.nonEmpty)
-  }
-
   test("fused corpus_shard equals the composed gate pipeline") {
     val docs = Tables.load(spark, sfDir, "documents")
     // the composition corpusShard fuses: per-gate operators chained by

@@ -8,7 +8,11 @@ Usage: check.py <sfdir> <verify_out_dir> [--shard I/N] [queryName...]
 
 --shard I/N checks only shard I (0-based) of N of the selected queries,
 sorted by name, so the sf0.1 gate (dominated by independent DuckDB
-replays) can run as N processes whose union is the unsharded result."""
+replays) can run as N processes whose union is the unsharded result.
+
+The summary also lists the dumped queries that have no oracle entry
+(rows-only at the driver), under the same name and shard selection.
+They do not affect the exit code."""
 import argparse, json, sys, glob, os
 import duckdb, pandas as pd, numpy as np
 
@@ -31,7 +35,11 @@ for t in "region nation customer supplier part orders lineitem events documents 
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-names = [k for k in sorted(oracle) if not only or k in only][shard::nshards]
+def select(keys):
+    return [k for k in sorted(keys) if not only or k in only][shard::nshards]
+names = select(oracle)
+dumped = {os.path.basename(os.path.dirname(d)) for d in glob.glob(f"{outdir}/*/")}
+unchecked = select(dumped - set(oracle))
 fails = []
 for name in names:
     sql = oracle[name]
@@ -78,4 +86,6 @@ for name in names:
         fails.append(name)
 label = f"shard {shard}/{nshards}: " if nshards > 1 else ""
 print(f"\n{label}{len(names)-len(fails)}/{len(names)} passed" + (f"; FAILED: {fails}" if fails else ""))
+if unchecked:
+    print(f"unchecked (no oracle): [{', '.join(unchecked)}]")
 sys.exit(1 if fails else 0)
