@@ -215,10 +215,11 @@ class GraftDB(val spark: SparkSession, val base: String) {
       * Without the insert side, a rollup older than the latest insert
       * would serve stale windows next to fresh dirty ones — a mixed-
       * version answer. Changed ranges are metadata-scale (coalesced at
-      * the window resolution), so invalidation broadcasts; stat reads
-      * stay O(rollup rows) everywhere untouched. Rollups maintained
-      * incrementally by Ingest need only the tombstone side — pass
-      * `store.tombstones` through Rollup.tombstoneRanges directly.
+      * the window resolution), so Rollup.alignedWindows collects them
+      * once on the driver and keeps only those overlapping the query;
+      * stat reads stay O(rollup rows) everywhere untouched. Rollups
+      * maintained incrementally by Ingest need only the tombstone side —
+      * pass `store.tombstones` through Rollup.tombstoneRanges directly.
       */
     def alignedWindows(rollup: graft.ts.Rollup, start: Long, end: Long,
                        pointWidth: Int, rollupBuiltAt: Long): DataFrame = {

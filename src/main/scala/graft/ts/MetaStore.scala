@@ -1,7 +1,8 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Stream-descriptor write path — Create / SetStreamAnnotations with the
   * reference's compare-and-swap semantics (btrdb.proto:82-96:
@@ -23,10 +24,12 @@ class MetaStore(val spark: SparkSession, val base: String) {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Every descriptor revision, read with the declared MetaStore.Schema
+    * (the columns every write below appends) instead of footer inference.
+    */
   private def all: DataFrame =
-    if (hasData) spark.read.parquet(dir)
-    else spark.emptyDataset[(String, String, Map[String, String], Map[String, String], Long)]
-      .toDF("uuid", "collection", "tags", "annotations", "annotationVersion")
+    if (hasData) spark.read.schema(MetaStore.Schema).parquet(dir)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), MetaStore.Schema)
 
   /** Live descriptors: latest revision per uuid, tombstoned rows dropped.
     * Deduped deterministically (should duplicate max-revision rows ever
@@ -119,5 +122,9 @@ class MetaStore(val spark: SparkSession, val base: String) {
 }
 
 object MetaStore {
+  /** The stored descriptor-revision columns. */
+  val Schema: StructType = StructType.fromDDL("uuid STRING, collection STRING, " +
+    "tags MAP<STRING, STRING>, annotations MAP<STRING, STRING>, annotationVersion BIGINT")
+
   def apply(spark: SparkSession, base: String): MetaStore = new MetaStore(spark, base)
 }

@@ -496,9 +496,15 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     * the store's tombstones with ver > the rollup's build watermark
     * (Rollup.tombstoneRanges) and every window overlapping one is
     * recomputed from `raw` (the visible view) instead; all other windows
-    * stay rollup-served. Tombstones are metadata-scale, so both the
-    * bucket filter and the dirty-point semi-join broadcast. A periodic
-    * build() over the post-delete visible view re-absorbs the ranges.
+    * stay rollup-served. Tombstones are metadata-scale, so `invalid` is
+    * collected to the driver exactly once per call and only the ranges
+    * overlapping the level-served span [loAligned, hiAligned) are kept:
+    * when none are, the answer plans neither the anti-join nor the
+    * dirty-bucket recompute (`raw` is then evaluated only for the
+    * unaligned edge windows); otherwise the bucket filter and the
+    * dirty-point semi-join broadcast the kept rows as a local relation.
+    * A periodic build() over the post-delete visible view re-absorbs the
+    * ranges.
     */
   def alignedWindows(raw: => DataFrame, streamCols: Seq[String],
                      start: Long, end: Long, pw: Int,
@@ -521,9 +527,15 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
       if (loAligned >= hiAligned)
         TimeSeriesOps.alignedWindows(raw, streamCols, start, end, pw)
       else {
-        def invRanges = invalid.map(_.select(
-          streamCols.map(c => col(c).as(s"__inv_$c"))
-            :+ col("r_start") :+ col("r_end"): _*))
+        // the ranges that can touch a level-served bucket, resolved once
+        val invRanges = invalid.flatMap { df =>
+          val inv = df.select(streamCols.map(c => col(c).as(s"__inv_$c"))
+            :+ col("r_start") :+ col("r_end"): _*)
+          val kept = inv.filter(col("r_start") < hiAligned && col("r_end") > loAligned)
+            .collect()
+          if (kept.isEmpty) None
+          else Some(spark.createDataFrame(java.util.Arrays.asList(kept: _*), inv.schema))
+        }
         def keyEq = streamCols.map(c => col(c) === col(s"__inv_$c")).reduce(_ && _)
         def overlaps(bucket: Column) =
           bucket < col("r_end") && bucket + width > col("r_start")

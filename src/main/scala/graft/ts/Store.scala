@@ -1,7 +1,8 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** MVCC versioned point store — the Spark-native re-expression of BTrDB's
   * copy-on-write tree versioning (internal/bstore blocktypes.go: every
@@ -34,6 +35,12 @@ import org.apache.spark.sql.functions._
   * tiny (one row per delete call) and broadcasts. compact() physically
   * drops dead rows and rewrites partitions — BTrDB's tree GC, done as a
   * deterministic batch job instead of reference counting.
+  *
+  * Declared schemas: the store writes exactly the columns of
+  * Store.PointsSchema and Store.TombstonesSchema and reads them back
+  * with those constants, never by parquet footer inference (which would
+  * cost a Spark job on every read). A new stored column therefore means
+  * changing the constant; an empty store reads with the same schema.
   */
 /** `maxBatchStreams` bounds the ONLY driver-resident state the store
   * keeps: the per-batch uuid→version map (nextVersions / versionsFor).
@@ -101,25 +108,32 @@ class Store(val spark: SparkSession, val base: String,
     */
   def rawPoints: DataFrame = {
     if (!hasData(pointsDir)) recoverCrashedSwap()
-    if (hasData(pointsDir)) spark.read.parquet(pointsDir)
-    else spark.emptyDataset[(String, Long, Double, Long, Long, Long)]
-      .toDF("uuid", "time", "value", "ver", "ub", "tb")
+    read(pointsDir, Store.PointsSchema)
   }
 
   def tombstones: DataFrame = {
     if (!hasData(tombsDir) && hasData(s"$base/tombstones_old"))
       recoverCrashedSwap()
-    if (hasData(tombsDir)) spark.read.parquet(tombsDir)
-    else spark.emptyDataset[(String, Long, Long, Long)]
-      .toDF("uuid", "t_start", "t_end", "ver")
+    read(tombsDir, Store.TombstonesSchema)
   }
 
+  /** A store table read with its declared schema (see the class doc);
+    * an empty local frame of the same schema when the dir is absent.
+    */
+  private def read(dir: String, schema: StructType): DataFrame =
+    if (hasData(dir)) spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** The one version rule: a stream's version is max(ver) over its points
+    * ∪ its tombstones — one aggregate over the two (uuid, ver)
+    * projections, one row per stream that has either.
+    */
+  private def maxVersions(pts: DataFrame, tombs: DataFrame): DataFrame =
+    pts.select($"uuid", $"ver").unionByName(tombs.select($"uuid", $"ver"))
+      .groupBy("uuid").agg(max($"ver").as("ver"))
+
   /** Latest committed version per stream (max over inserts and deletes). */
-  def version(uuid: String): Long = {
-    val p = streamPoints(uuid).agg(max($"ver")).as[Option[Long]].first().getOrElse(0L)
-    val t = tombstones.filter($"uuid" === uuid).agg(max($"ver")).as[Option[Long]].first().getOrElse(0L)
-    math.max(p, t)
-  }
+  def version(uuid: String): Long = versionsFor(Seq(uuid)).getOrElse(uuid, 0L)
 
   /** Insert a batch of (time, value) rows; returns the new stream version.
     * Mirrors InsertParams→InsertResponse(versionMajor) semantics.
@@ -160,12 +174,9 @@ class Store(val spark: SparkSession, val base: String,
         !hasData(tombsDir) && !hasData(s"$base/tombstones_old"))
       return bounded(batch.select("uuid").distinct()
         .limit(maxBatchStreams + 1).as[String].collect().toSeq).map(_ -> 1L)
-    val pv = rawPoints.groupBy("uuid").agg(max($"ver").as("pv"))
-    val tv = tombstones.groupBy("uuid").agg(max($"ver").as("tv"))
     bounded(batch.select("uuid").distinct()
-      .join(pv, Seq("uuid"), "left").join(tv, Seq("uuid"), "left")
-      .select($"uuid",
-        (greatest(coalesce($"pv", lit(0L)), coalesce($"tv", lit(0L))) + 1).as("ver"))
+      .join(maxVersions(rawPoints, tombstones), Seq("uuid"), "left")
+      .select($"uuid", (coalesce($"ver", lit(0L)) + 1).as("ver"))
       .limit(maxBatchStreams + 1).as[(String, Long)].collect().toSeq)
   }
 
@@ -198,17 +209,10 @@ class Store(val spark: SparkSession, val base: String,
     // heavy caller list must not trip the guard early
     val distinctIds = bounded(uuids.distinct)
     val ubs = distinctIds.map(ubOf).distinct
-    val uset = distinctIds.toSet
-    val pv = rawPoints
-      .filter($"ub".isin(ubs: _*)).filter($"uuid".isin(distinctIds: _*))
-      .groupBy("uuid").agg(max($"ver").as("v"))
-      .as[(String, Long)].collect()
-    val tv = tombstones
-      .filter($"uuid".isin(distinctIds: _*))
-      .groupBy("uuid").agg(max($"ver").as("v"))
-      .as[(String, Long)].collect()
-    (pv ++ tv).filter(kv => uset(kv._1))
-      .groupMapReduce(_._1)(_._2)(math.max)
+    maxVersions(
+        rawPoints.filter($"ub".isin(ubs: _*)).filter($"uuid".isin(distinctIds: _*)),
+        tombstones.filter($"uuid".isin(distinctIds: _*)))
+      .as[(String, Long)].collect().toMap
   }
 
   /** Write a batch at pre-assigned per-uuid versions (from nextVersions)
@@ -544,6 +548,13 @@ object Store {
     * the maxBatchStreams doc on the class.
     */
   val DefaultMaxBatchStreams: Int = 1 << 20
+
+  /** The stored point columns; `ub`/`tb` are the partition columns. */
+  val PointsSchema: StructType = StructType.fromDDL(
+    "uuid STRING, time BIGINT, value DOUBLE, ver BIGINT, ub INT, tb INT")
+  /** The stored range-tombstone columns. */
+  val TombstonesSchema: StructType = StructType.fromDDL(
+    "uuid STRING, t_start BIGINT, t_end BIGINT, ver BIGINT")
 
   def apply(spark: SparkSession, base: String): Store = new Store(spark, base)
 

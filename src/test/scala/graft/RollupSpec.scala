@@ -134,6 +134,36 @@ class RollupSpec extends SparkSuite {
         .agg(coalesce(sum("v_count"), lit(0L))).first().getLong(0)
       assert(stale > trueCnt, s"delete must actually hide points at pw=$pw")
     }
+    // a window-aligned query [lo, hi): invalidation is clipped to it
+    val pw = 30
+    val (lo, hi) = (((T0 >> pw) + 1) << pw, (T31 >> pw) << pw)
+    def deleted(ranges: Seq[(Long, Long)]) = {
+      val hidden = ranges.map { case (s, e) => col("t_us") >= s && col("t_us") < e }
+        .reduce(_ || _)
+      (pts.filter(!(col("user_id") === 1 && col("event_type") === "click" && hidden)),
+        ranges.map { case (s, e) => (1L, "click", s, e) }
+          .toDF("user_id", "event_type", "r_start", "r_end"))
+    }
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("user_id", "event_type", "w_start").collect().toSeq
+    // ranges wholly outside the window (one ends exactly at lo, one starts
+    // exactly at hi): the rollup answers alone and `raw` is never evaluated
+    val (outside, outsideInv) = deleted(Seq((T0 - day, lo), (hi, T31 + day)))
+    def boom: org.apache.spark.sql.DataFrame =
+      throw new AssertionError("raw evaluated for an out-of-window invalidation")
+    assert(sorted(ru.alignedWindows(boom, STREAM, lo, hi, pw, invalid = Some(outsideInv))) ==
+      sorted(TimeSeriesOps.alignedWindows(outside, STREAM, lo, hi, pw)))
+    // ranges straddling lo and hi: still recomputed, bit-identical
+    val straddling = Seq((lo - day, lo + 12 * day), (hi - 12 * day, hi + day))
+    straddling.foreach { case (s, e) =>
+      assert(pts.filter(col("user_id") === 1 && col("event_type") === "click" &&
+        col("t_us") >= math.max(s, lo) && col("t_us") < math.min(e, hi)).count() > 0,
+        s"the straddling delete [$s, $e) must hide points inside the window")
+    }
+    val (straddle, straddleInv) = deleted(straddling)
+    assert(sorted(ru.alignedWindows(straddle, STREAM, lo, hi, pw,
+      invalid = Some(straddleInv))) ==
+      sorted(TimeSeriesOps.alignedWindows(straddle, STREAM, lo, hi, pw)))
   }
 
   test("windowsApprox at depth 0 equals exact windows; rollup serves the same answer") {

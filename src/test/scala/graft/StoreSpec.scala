@@ -1,7 +1,9 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import graft.ts.Store
+import graft.ts.{MetaStore, Store}
 
 /** MVCC semantics of the versioned point store — mirrors the reference's
   * Insert/Delete/version behavior (quasar_test.go patterns: insert, query
@@ -11,6 +13,37 @@ class StoreSpec extends SparkSuite {
   import spark.implicits._
 
   private def mkStore = Store(spark, tmpDir("store"))
+
+  /** Spark jobs started by `body` on this thread. Every job it starts
+    * carries a thread-local tag (Spark propagates local properties to the
+    * jobs a query starts on other threads), and a tagged marker job after
+    * it flushes the listener bus in order, so the count is exact without
+    * any internal bus-drain API.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID.toString
+    val starts = new LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("jobsDuring") == tag)
+          .foreach(p => starts.put(Option(p.getProperty("marker")).getOrElse("")))
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("jobsDuring", tag)
+    try {
+      body
+      sc.setLocalProperty("marker", "end")
+      sc.parallelize(Seq(1), 1).count()
+      Iterator.continually(starts.poll(30, TimeUnit.SECONDS))
+        .takeWhile { m => assert(m != null, "marker job never reached the listener"); m != "end" }
+        .size
+    } finally {
+      sc.setLocalProperty("marker", null)
+      sc.setLocalProperty("jobsDuring", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("insert bumps version; reads at old version are stable") {
     val st = mkStore
@@ -207,6 +240,50 @@ class StoreSpec extends SparkSuite {
     assert(st.rawValues("a", 0, 100, Some(1L)).count() == 1) // time travel intact
     assert(st.rawValues("a", 0, 100).count() == 2)
     assert(st.rawValues("b", 0, 100).count() == 2)
+    // the three version readers agree whether a stream's newest operation
+    // is an insert (a at v3) or a delete (b at v2); c has neither
+    st.insert("a", Seq((3L, 3.0)).toDF("time", "value"))
+    st.deleteRange("b", 0L, 2L)
+    assert(Seq("a", "b", "c").map(st.version) == Seq(3L, 2L, 0L))
+    assert(st.versionsFor(Seq("a", "b", "c")) == Map("a" -> 3L, "b" -> 2L))
+    val probe = Seq("a", "b", "c").map(u => (u, 0L, 0.0)).toDF("uuid", "time", "value")
+    assert(st.nextVersions(probe).toMap == Map("a" -> 4L, "b" -> 3L, "c" -> 1L))
+  }
+
+  test("rawPoints and tombstones read one declared schema before and after the first write") {
+    val base = tmpDir("store_schema")
+    val st = Store(spark, base)
+    val (p0, t0) = (st.rawPoints.schema, st.tombstones.schema)
+    assert(p0 == Store.PointsSchema && t0 == Store.TombstonesSchema)
+    st.insertBatch(Seq(("a", 1L, 1.0)).toDF("uuid", "time", "value"))
+    st.deleteRange("a", 0L, 1L)
+    assert(st.rawPoints.schema == p0, st.rawPoints.schema.simpleString)
+    assert(st.tombstones.schema == t0, st.tombstones.schema.simpleString)
+    // the declared constants ARE what the store writes: footer inference
+    // over the written files finds exactly those columns and types
+    assert(spark.read.parquet(s"$base/points").schema == Store.PointsSchema)
+    assert(spark.read.parquet(s"$base/tombstones").schema == Store.TombstonesSchema)
+  }
+
+  test("store and descriptor reads plan without starting a Spark job") {
+    val base = tmpDir("store_plan")
+    val st = Store(spark, base)
+    st.insertBatch(Seq(("a", 1L, 1.0), ("b", 2L, 2.0)).toDF("uuid", "time", "value"))
+    st.deleteRange("a", 0L, 2L)
+    val meta = MetaStore(spark, base)
+    meta.create("a", "fleet/x", Map("unit" -> "V"))
+    val storeJobs = jobsDuring {
+      st.rawValues("b", 0L, 10L).queryExecution.executedPlan
+      st.pointsAt(None).queryExecution.executedPlan
+    }
+    assert(storeJobs == 0, s"planning store reads started $storeJobs jobs")
+    val metaJobs =
+      jobsDuring(meta.lookup("fleet", Map("unit" -> "V")).queryExecution.executedPlan)
+    assert(metaJobs == 0, s"planning a descriptor lookup started $metaJobs jobs")
+    // the bracket does count: one collect is at least one job
+    assert(jobsDuring(st.rawValues("b", 0L, 10L).collect()) >= 1)
+    assert(st.rawValues("a", 0L, 10L).count() == 0 && st.rawValues("b", 0L, 10L).count() == 1)
+    assert(meta.lookup("fleet", Map("unit" -> "V")).count() == 1)
   }
 
   test("incremental export applied to a snapshot reproduces the target version") {
