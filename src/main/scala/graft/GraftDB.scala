@@ -153,7 +153,9 @@ class GraftDB(val spark: SparkSession, val base: String) {
   }
 
   /** Per-stream query/write surface. All reads take an optional
-    * `version` (None = latest) like the RPCs' versionMajor.
+    * `version` (None = latest) like the RPCs' versionMajor: it pins the
+    * stream's visible points (Store.streamAt) before the version-agnostic
+    * TimeSeriesOps transform runs.
     */
   class StreamHandle(val uuid: String) {
     private val K = Seq("uuid")
@@ -334,12 +336,12 @@ class GraftDB(val spark: SparkSession, val base: String) {
 
     def gaps(start: Long, end: Long, width: Long,
              version: Option[Long] = None): DataFrame =
-      TS.gaps(points(version), K, start, end, width, version = None,
+      TS.gaps(points(version), K, start, end, width,
         streams = Some(roster)).drop("uuid")
 
     def outages(start: Long, end: Long, width: Long,
                 version: Option[Long] = None): DataFrame =
-      TS.outages(points(version), K, start, end, width, version = None,
+      TS.outages(points(version), K, start, end, width,
         streams = Some(roster)).drop("uuid")
 
     def cusum(version: Option[Long] = None): DataFrame =
@@ -357,7 +359,7 @@ class GraftDB(val spark: SparkSession, val base: String) {
 
     def coverage(start: Long, end: Long, width: Long,
                  version: Option[Long] = None): DataFrame =
-      TS.coverage(points(version), K, start, end, width, version = None,
+      TS.coverage(points(version), K, start, end, width,
         streams = Some(roster)).drop("uuid")
 
     def rolling(start: Long, end: Long, width: Long, k: Int,
@@ -388,7 +390,7 @@ class GraftDB(val spark: SparkSession, val base: String) {
     /** SRE availability report for this stream (TimeSeriesOps.reliability). */
     def reliability(start: Long, end: Long, width: Long,
                     version: Option[Long] = None): DataFrame =
-      TS.reliability(points(version), K, start, end, width, version = None,
+      TS.reliability(points(version), K, start, end, width,
         streams = Some(roster)).drop("uuid")
 
     /** Robust per-window dispersion: median + MAD (outlier-proof bands). */

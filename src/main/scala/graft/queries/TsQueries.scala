@@ -107,7 +107,7 @@ private[graft] object TsQueries {
          |GROUP BY 1, 2, 3 ORDER BY user_id, event_type, w_start""".stripMargin)),
 
     QuerySpec("ts_windows_at_version", (s, dir) =>
-      TS.windows(Tables.points(s, dir), STREAM, T0, T29, DAY, version = Some(500))
+      TS.windows(Tables.points(s, dir).filter(col("ver") <= 500), STREAM, T0, T29, DAY)
         .orderBy(col("user_id"), col("event_type"), col("w_start")),
       Some(s"""WITH pts AS ($PTS_SQL)
          |SELECT user_id, event_type,
@@ -212,7 +212,7 @@ private[graft] object TsQueries {
          |ORDER BY user_id, event_type, w_start""".stripMargin)),
 
     QuerySpec("ts_version_at", (s, dir) =>
-      TS.rawValues(Tables.points(s, dir), STREAM, T0, T31, version = Some(500))
+      TS.rawValues(Tables.points(s, dir).filter(col("ver") <= 500), STREAM, T0, T31)
         .orderBy(col("user_id"), col("event_type"), col("t_us")),
       Some(s"""WITH pts AS ($PTS_SQL)
          |SELECT user_id, event_type, t_us, value FROM pts

@@ -14,8 +14,9 @@ import graft.ts.Store
   * Structured Streaming primitives:
   *   journal/WAL        → the stream source + checkpoint directory
   *   pqm merge buffer   → the micro-batch
-  *   tree commit        → Store.insert inside foreachBatch (one version
-  *                        bump per micro-batch, atomic parquet append)
+  *   tree commit        → Store.insertBatchAt inside foreachBatch (one
+  *                        version bump per distinct uuid in the
+  *                        micro-batch, one atomic parquet append)
   *
   * The statistical tree maintenance (qtree updating min/mean/max/count on
   * the insert path) maps to a watermarked windowed aggregation emitting
@@ -39,10 +40,11 @@ object Ingest {
     *   4. create the commit marker, drop the intent.
     * On replay: marker present → done, skip. Intent present without
     * marker → the job either committed fully or not at all, so comparing
-    * current stream versions against the intended ones tells which; a
-    * landed batch skips the re-insert (closing the crash window between
-    * job commit and marker creation that a marker-only protocol leaves
-    * open) but still re-runs the idempotent rollup append + marker.
+    * current stream versions (one Store.versionsFor over the intent's
+    * uuids) against the intended ones tells which; a landed batch skips
+    * the re-insert (closing the crash window between job commit and
+    * marker creation that a marker-only protocol leaves open) but still
+    * re-runs the idempotent rollup append + marker.
     * The rollup writeId embeds the checkpoint id, so multiple ingest
     * streams maintaining one ROLLUP can never clobber each other's
     * deltas (batchIds restart at 0 per checkpoint).
@@ -67,15 +69,6 @@ object Ingest {
     // marker and double-insert a committed batch
     val commitDir = new org.apache.hadoop.fs.Path(s"${store.base}/_ingest_commits/$ckptId")
     val fs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Per-query version cache (sound under the single-writer contract
-    // below, which this extends to "no concurrent version-bumping op of
-    // ANY kind during an active ingest query"): the first batch pays one
-    // full version-discovery scan; every later batch assigns versions
-    // from the cache and probes ONLY never-seen uuids via the pruned
-    // Store.versionsFor — a per-micro-batch full-store groupBy does not
-    // survive a 100 TB store. A restarted query simply re-bootstraps.
-    val verCache = scala.collection.mutable.Map.empty[String, Long]
-    var bootstrapped = false
     spark.readStream.schema(schema).options(readerOptions).parquet(sourceDir)
       .writeStream
       .option("checkpointLocation", checkpoint)
@@ -96,24 +89,13 @@ object Ingest {
                 val i = line.lastIndexOf('\t')
                 line.substring(i + 1).trim.toLongOption.map((line.substring(0, i), _))
               }
-            intents.nonEmpty && intents.forall { case (u, v) => store.version(u) >= v }
+            intents.nonEmpty && {
+              val current = store.versionsFor(intents.map(_._1))
+              intents.forall { case (u, v) => current.getOrElse(u, 0L) >= v }
+            }
           }
           if (!landed) {
-            val vers: Seq[(String, Long)] =
-              if (!bootstrapped) {
-                val v = store.nextVersions(batch)
-                bootstrapped = true
-                v
-              } else {
-                val batchUuids = batch.select("uuid").distinct()
-                  .collect().map(_.getString(0)).toSeq
-                val unseen = batchUuids.filterNot(verCache.contains)
-                if (unseen.nonEmpty) {
-                  val probed = store.versionsFor(unseen)
-                  unseen.foreach(u => verCache(u) = probed.getOrElse(u, 0L))
-                }
-                batchUuids.map(u => u -> (verCache(u) + 1))
-              }
+            val vers = store.nextVersions(batch)
             fs.mkdirs(commitDir)
             // write-then-rename so a crash can never leave a half-written
             // intent at the final path (replay parses it, see above)
@@ -124,7 +106,6 @@ object Ingest {
             if (fs.exists(intent)) fs.delete(intent, false)
             if (!fs.rename(tmp, intent)) sys.error(s"ingest: could not publish intent $intent")
             store.insertBatchAt(batch, vers)
-            vers.foreach { case (u, v) => verCache(u) = v }
           }
           rollup.foreach(_.appendBatch(
             batch.select(col("uuid"), col("time").as("t_us"), col("value")),

@@ -47,13 +47,12 @@ object Downsample {
     * string stream identities) and must not contain the \u0001 separator.
     */
   def lttb(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-           nOut: Int, version: Option[Long] = None): DataFrame = {
+           nOut: Int): DataFrame = {
     require(nOut >= 3, s"nOut must be at least 3, got $nOut")
     val spark = points.sparkSession
     import spark.implicits._
     val key = streamCols.map(col)
-    val versioned = version.fold(points)(v => points.filter(col("ver") <= v))
-    val inRange = versioned.filter(col("t_us") >= start && col("t_us") < end)
+    val inRange = points.filter(col("t_us") >= start && col("t_us") < end)
     val keyTypes = inRange.select(key: _*).schema
     val keyed = inRange
       .select(concat_ws(SEP,
@@ -147,14 +146,13 @@ object Downsample {
     * over nOut-scale candidate summaries per stream.
     */
   def lttbBucketed(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                   nOut: Int, version: Option[Long] = None): DataFrame = {
+                   nOut: Int): DataFrame = {
     require(nOut >= 3, s"nOut must be at least 3, got $nOut")
     val spark = points.sparkSession
     import spark.implicits._
     val key = streamCols.map(col)
     val middle = nOut - 2
-    val versioned = version.fold(points)(v => points.filter(col("ver") <= v))
-    val inRange = versioned.filter(col("t_us") >= start && col("t_us") < end)
+    val inRange = points.filter(col("t_us") >= start && col("t_us") < end)
       .select(key :+ col("t_us") :+ col("value"): _*)
     val keyTypes = inRange.select(key: _*).schema
 
@@ -286,17 +284,15 @@ object Downsample {
     * query itself.
     */
   def lttbAuto(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-               nOut: Int, version: Option[Long] = None,
-               maxExactPoints: Long = 1000000L): DataFrame = {
-    val versioned = version.fold(points)(v => points.filter(col("ver") <= v))
-    val maxPerStream = versioned
+               nOut: Int, maxExactPoints: Long = 1000000L): DataFrame = {
+    val maxPerStream = points
       .filter(col("t_us") >= start && col("t_us") < end)
       .groupBy(streamCols.map(col): _*).agg(count(lit(1)).as("n"))
       .agg(max(col("n")).as("mx"))
       .collect().headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
     if (maxPerStream.forall(_ <= maxExactPoints))
-      lttb(points, streamCols, start, end, nOut, version)
-    else lttbBucketed(points, streamCols, start, end, nOut, version)
+      lttb(points, streamCols, start, end, nOut)
+    else lttbBucketed(points, streamCols, start, end, nOut)
   }
 
   /** N(0,1) upper-quartile breakpoint for the 4-letter SAX alphabet —
@@ -330,14 +326,13 @@ object Downsample {
     * points.
     */
   def sax(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-          width: Long, version: Option[Long] = None): DataFrame = {
+          width: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(width > 0, s"width must be positive, got $width")
     val key = streamCols.map(col)
     val completeEnd = start + ((end - start) / width) * width
-    val versioned = version.fold(points)(v => points.filter(col("ver") <= v))
     val d = col("t_us") - start
-    val buckets = versioned
+    val buckets = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
       .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
@@ -389,8 +384,7 @@ object Downsample {
     * 4^w distinct keys and the top-k is a TakeOrdered.
     */
   def motifs(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-             width: Long, w: Int, k: Int,
-             version: Option[Long] = None): DataFrame = {
+             width: Long, w: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(w > 1, s"subword length must be at least 2, got $w")
     require(k > 0, s"k must be positive, got $k")
@@ -400,9 +394,8 @@ object Downsample {
     // words), so the bucket/sym construction is shared by contract with
     // the sax oracle — any change there must change both
     val completeEnd = start + ((end - start) / width) * width
-    val versioned = version.fold(points)(v => points.filter(col("ver") <= v))
     val d = col("t_us") - start
-    val buckets = versioned
+    val buckets = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
       .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
@@ -465,16 +458,14 @@ object Downsample {
     * bounded by max|cost|·(n+m) ≪ 2⁶³ for any real window count.
     */
   def dtwSimilar(points: DataFrame, streamCols: Seq[String], queryPred: Column,
-                 start: Long, end: Long, width: Long, k: Int,
-                 version: Option[Long] = None): DataFrame = {
+                 start: Long, end: Long, width: Long, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(width > 0, s"width must be positive, got $width")
     require(k > 0, s"k must be positive, got $k")
     val key = streamCols.map(col)
     val completeEnd = start + ((end - start) / width) * width
-    val versioned = version.fold(points)(v => points.filter(col("ver") <= v))
     val d = col("t_us") - start
-    val profiles = versioned
+    val profiles = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
       .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)

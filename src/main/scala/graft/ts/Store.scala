@@ -37,10 +37,11 @@ import org.apache.spark.sql.types.StructType
   * deterministic batch job instead of reference counting.
   *
   * Declared schemas: the store writes exactly the columns of
-  * Store.PointsSchema and Store.TombstonesSchema and reads them back
-  * with those constants, never by parquet footer inference (which would
-  * cost a Spark job on every read). A new stored column therefore means
-  * changing the constant; an empty store reads with the same schema.
+  * Store.PointsSchema, Store.TombstonesSchema and Store.BufferSchema and
+  * reads them back with those constants, never by parquet footer
+  * inference (which would cost a Spark job on every read). A new stored
+  * column therefore means changing the constant; an empty store reads
+  * with the same schema.
   */
 /** `maxBatchStreams` bounds the ONLY driver-resident state the store
   * keeps: the per-batch uuid→version map (nextVersions / versionsFor).
@@ -124,14 +125,6 @@ class Store(val spark: SparkSession, val base: String,
     if (hasData(dir)) spark.read.schema(schema).parquet(dir)
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
-  /** The one version rule: a stream's version is max(ver) over its points
-    * ∪ its tombstones — one aggregate over the two (uuid, ver)
-    * projections, one row per stream that has either.
-    */
-  private def maxVersions(pts: DataFrame, tombs: DataFrame): DataFrame =
-    pts.select($"uuid", $"ver").unionByName(tombs.select($"uuid", $"ver"))
-      .groupBy("uuid").agg(max($"ver").as("ver"))
-
   /** Latest committed version per stream (max over inserts and deletes). */
   def version(uuid: String): Long = versionsFor(Seq(uuid)).getOrElse(uuid, 0L)
 
@@ -157,30 +150,22 @@ class Store(val spark: SparkSession, val base: String,
   def insertBatch(batch: DataFrame): Unit =
     insertBatchAt(batch, nextVersions(batch))
 
-  /** The per-uuid versions the next batch write will assign — driver-
-    * collected (metadata-scale: one row per distinct uuid in the batch).
-    * Exposed so an idempotent writer can persist the intent BEFORE the
-    * write and later decide whether a crashed attempt committed (the write
-    * is one all-or-nothing job: either every uuid reached its intended
-    * version or none did).
+  /** The per-uuid versions the next batch write will assign: the batch's
+    * distinct uuids (driver-collected, metadata-scale, bounded by
+    * maxBatchStreams), each at its versionsFor version + 1. Exposed so an
+    * idempotent writer can persist the intent BEFORE the write and later
+    * decide whether a crashed attempt committed (the write is one
+    * all-or-nothing job: either every uuid reached its intended version
+    * or none did).
     */
   def nextVersions(batch: DataFrame): Seq[(String, Long)] = {
-    // Bootstrap fast path: with no committed points and no tombstones
-    // every uuid starts at version 1 — one distinct over the batch
-    // instead of two full-store aggregations plus two joins. (An empty
-    // store still pays the crashed-swap probe via hasData; a dir that
-    // exists takes the general path even if all its rows are dead.)
-    if (!hasData(pointsDir) && !hasData(s"$base/points_old") &&
-        !hasData(tombsDir) && !hasData(s"$base/tombstones_old"))
-      return bounded(batch.select("uuid").distinct()
-        .limit(maxBatchStreams + 1).as[String].collect().toSeq).map(_ -> 1L)
-    bounded(batch.select("uuid").distinct()
-      .join(maxVersions(rawPoints, tombstones), Seq("uuid"), "left")
-      .select($"uuid", (coalesce($"ver", lit(0L)) + 1).as("ver"))
-      .limit(maxBatchStreams + 1).as[(String, Long)].collect().toSeq)
+    val uuids = bounded(batch.select("uuid").distinct()
+      .limit(maxBatchStreams + 1).as[String].collect().toSeq)
+    val current = versionsFor(uuids)
+    uuids.map(u => u -> (current.getOrElse(u, 0L) + 1))
   }
 
-  /** The maxBatchStreams guard: the limit(max+1) on the collects above
+  /** The maxBatchStreams guard: the limit(max+1) on the collect above
     * bounds driver memory unconditionally; one extra row proves overflow
     * without ever materializing the full fleet.
     */
@@ -192,16 +177,15 @@ class Store(val spark: SparkSession, val base: String,
     rows
   }
 
-  /** Current committed version per uuid for a BOUNDED uuid set, with
-    * partition pruning: the scan is restricted to the uuids' ub buckets
-    * (driver-computed, literal partition filter) and the row-group
-    * (uuid, time)-sorted layout min/max-prunes inside them. This is the
-    * incremental complement of nextVersions' full-store discovery: an
-    * ingest stream bootstraps once, then probes only uuids it has not
-    * seen (graft.streaming.Ingest's version cache) — at 100 TB a
-    * per-micro-batch full groupBy over the store is the difference
-    * between an ingest that keeps up and one that falls behind its
-    * own history.
+  /** Current committed version per uuid for a BOUNDED uuid set — the one
+    * version rule: a stream's version is max(ver) over its points ∪ its
+    * tombstones, one aggregate over the two (uuid, ver) projections. A
+    * uuid with neither is absent from the map (version 0). The point scan
+    * is restricted to the uuids' ub buckets (driver-computed, literal
+    * partition filter) and the (uuid, time)-sorted row groups min/max-
+    * prune inside them, so the cost follows the streams asked about, not
+    * the store; on an empty store both sides are empty local relations
+    * and no Spark job starts.
     */
   def versionsFor(uuids: Seq[String]): Map[String, Long] = {
     if (uuids.isEmpty) return Map.empty
@@ -209,9 +193,10 @@ class Store(val spark: SparkSession, val base: String,
     // heavy caller list must not trip the guard early
     val distinctIds = bounded(uuids.distinct)
     val ubs = distinctIds.map(ubOf).distinct
-    maxVersions(
-        rawPoints.filter($"ub".isin(ubs: _*)).filter($"uuid".isin(distinctIds: _*)),
-        tombstones.filter($"uuid".isin(distinctIds: _*)))
+    rawPoints.filter($"ub".isin(ubs: _*)).filter($"uuid".isin(distinctIds: _*))
+      .select($"uuid", $"ver")
+      .unionByName(tombstones.filter($"uuid".isin(distinctIds: _*)).select($"uuid", $"ver"))
+      .groupBy("uuid").agg(max($"ver").as("ver"))
       .as[(String, Long)].collect().toMap
   }
 
@@ -267,16 +252,13 @@ class Store(val spark: SparkSession, val base: String,
       .repartition(1)
       .write.mode(SaveMode.Append).partitionBy("uuid").parquet(bufferDir)
 
-  /** Unflushed rows across all streams (empty frame when none; the
-    * explicit schema keeps a drained buffer dir — every partition
-    * flushed or obliterated — readable as empty instead of failing
-    * parquet inference).
+  /** Unflushed rows across all streams, read with Store.BufferSchema
+    * (empty frame when none; the declared schema also keeps a drained
+    * buffer dir — every partition flushed or obliterated — readable as
+    * empty instead of failing parquet inference).
     */
   def bufferedPoints: DataFrame =
-    if (hasData(bufferDir))
-      spark.read.schema("time BIGINT, value DOUBLE, uuid STRING").parquet(bufferDir)
-        .select($"uuid", $"time", $"value")
-    else spark.emptyDataset[(String, Long, Double)].toDF("uuid", "time", "value")
+    read(bufferDir, Store.BufferSchema).select($"uuid", $"time", $"value")
 
   /** (versionMajor, versionMinor) — the reference's two-part version:
     * committed version plus an unflushed component. The reference's
@@ -401,24 +383,31 @@ class Store(val spark: SparkSession, val base: String,
     * points and deleted ranges with fromVer < ver <= toVer, aligned to the
     * 2^res grid and gap-merged per stream.
     */
-  def changes(uuid: String, fromVer: Long, toVer: Long, res: Int): DataFrame = {
-    val ins = streamPoints(uuid)
-      .filter($"ver" > fromVer && $"ver" <= toVer)
-      .select(shiftleft(shiftright($"time", res), res).as("r_start"))
+  def changes(uuid: String, fromVer: Long, toVer: Long, res: Int): DataFrame =
+    changedRanges(streamPoints(uuid), tombstones.filter($"uuid" === uuid),
+      fromVer, toVer, res).drop("uuid")
+
+  /** The (uuid, c_start, c_end) ranges touched by the points and
+    * tombstones with fromVer < ver <= toVer: inserted times aligned down
+    * to the 2^res grid, deleted [t_start, t_end) aligned out to it, then
+    * gap-merged per uuid — the one builder behind changes and
+    * exportChanges.
+    */
+  private def changedRanges(pts: DataFrame, tombs: DataFrame,
+                            fromVer: Long, toVer: Long, res: Int): DataFrame = {
+    val ins = pts.filter($"ver" > fromVer && $"ver" <= toVer)
+      .select($"uuid", shiftleft(shiftright($"time", res), res).as("r_start"))
       .withColumn("r_end", $"r_start" + (1L << res))
     // align-up saturates: a full-range tombstone (obliterate, t_end =
     // Long.MaxValue) must not wrap to MinValue and vanish as a degenerate
     // range — it invalidates everything
     val endCap = Long.MaxValue - (1L << res)
-    val del = tombstones
-      .filter($"uuid" === uuid && $"ver" > fromVer && $"ver" <= toVer)
-      .select(shiftleft(shiftright($"t_start", res), res).as("r_start"),
+    val del = tombs.filter($"ver" > fromVer && $"ver" <= toVer)
+      .select($"uuid", shiftleft(shiftright($"t_start", res), res).as("r_start"),
         when($"t_end" > endCap, lit(Long.MaxValue))
           .otherwise(shiftleft(shiftright($"t_end" - 1, res), res) + (1L << res))
           .as("r_end"))
-    val aligned = ins.unionByName(del).distinct()
-      .withColumn("uuid", lit(uuid))
-    TimeSeriesOps.mergeRanges(aligned, Seq("uuid")).drop("uuid")
+    TimeSeriesOps.mergeRanges(ins.unionByName(del).distinct(), Seq("uuid"))
   }
 
   /** Incremental export between two versions — the O(changed data)
@@ -435,17 +424,7 @@ class Store(val spark: SparkSession, val base: String,
     * touch.
     */
   def exportChanges(outDir: String, vFrom: Long, vTo: Long, res: Int): Unit = {
-    val ins = rawPoints.filter($"ver" > vFrom && $"ver" <= vTo)
-      .select($"uuid", shiftleft(shiftright($"time", res), res).as("r_start"))
-      .withColumn("r_end", $"r_start" + (1L << res))
-    val endCap = Long.MaxValue - (1L << res)
-    val del = tombstones.filter($"ver" > vFrom && $"ver" <= vTo)
-      .select($"uuid", shiftleft(shiftright($"t_start", res), res).as("r_start"),
-        when($"t_end" > endCap, lit(Long.MaxValue))
-          .otherwise(shiftleft(shiftright($"t_end" - 1, res), res) + (1L << res))
-          .as("r_end"))
-    val ranges = TimeSeriesOps
-      .mergeRanges(ins.unionByName(del).distinct(), Seq("uuid"))
+    val ranges = changedRanges(rawPoints, tombstones, vFrom, vTo, res)
       .localCheckpoint() // consumed twice (manifest write + semi join)
     ranges.write.mode(SaveMode.Overwrite).parquet(s"$outDir/ranges")
     val pts = pointsAt(Some(vTo))
@@ -555,6 +534,9 @@ object Store {
   /** The stored range-tombstone columns. */
   val TombstonesSchema: StructType = StructType.fromDDL(
     "uuid STRING, t_start BIGINT, t_end BIGINT, ver BIGINT")
+  /** The unflushed-write buffer columns; `uuid` is the partition column. */
+  val BufferSchema: StructType = StructType.fromDDL(
+    "time BIGINT, value DOUBLE, uuid STRING")
 
   def apply(spark: SparkSession, base: String): Store = new Store(spark, base)
 

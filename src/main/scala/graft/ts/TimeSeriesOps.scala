@@ -24,21 +24,19 @@ import org.apache.spark.sql.functions._
   * map-side-partial. `streamCols` generalizes BTrDB's single uuid to any
   * composite stream key, which is what lets the same plan fan out over
   * every stream at once instead of one RPC per uuid.
+  *
+  * Operators are version-agnostic: each transforms exactly the frame it
+  * is given. As-of reads pin the data before it gets here — through
+  * Store.pointsAt(asOf), which also applies tombstones, or the GraftDB
+  * handle's `version` argument.
   */
 object TimeSeriesOps {
 
   private def streamKey(streamCols: Seq[String]): Seq[Column] = streamCols.map(col)
 
-  /** Filter to rows visible at `version` (None = latest) — every stat RPC
-    * in the reference takes versionMajor; the same composes here.
-    */
-  private def atVersion(points: DataFrame, version: Option[Long]): DataFrame =
-    version.fold(points)(v => points.filter(col("ver") <= v))
-
-  /** RawValues: time-ordered scan of [start, end) at a version. */
-  def rawValues(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                version: Option[Long] = None): DataFrame =
-    atVersion(points, version)
+  /** RawValues: time-ordered scan of [start, end). */
+  def rawValues(points: DataFrame, streamCols: Seq[String], start: Long, end: Long): DataFrame =
+    points
       .filter(col("t_us") >= start && col("t_us") < end)
       .select(streamKey(streamCols) :+ col("t_us") :+ col("value"): _*)
 
@@ -49,9 +47,9 @@ object TimeSeriesOps {
     * codegen'd integer op here.
     */
   def alignedWindows(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                     pointWidth: Int, version: Option[Long] = None): DataFrame = {
+                     pointWidth: Int): DataFrame = {
     val bucket = shiftleft(shiftright(col("t_us"), pointWidth), pointWidth).as("w_start")
-    statAgg(atVersion(points, version).filter(col("t_us") >= start && col("t_us") < end),
+    statAgg(points.filter(col("t_us") >= start && col("t_us") < end),
       streamCols, bucket)
   }
 
@@ -60,9 +58,9 @@ object TimeSeriesOps {
     * (qtree.go QueryWindow emits only complete windows).
     */
   def windows(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-              width: Long, version: Option[Long] = None): DataFrame = {
+              width: Long): DataFrame = {
     val completeEnd = start + ((end - start) / width) * width
-    statAgg(atVersion(points, version)
+    statAgg(points
         .filter(col("t_us") >= start && col("t_us") < completeEnd),
       streamCols, widthBucket(start, width))
   }
@@ -75,10 +73,10 @@ object TimeSeriesOps {
     * in the oracle.
     */
   def argMinMax(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                width: Long, version: Option[Long] = None): DataFrame = {
+                width: Long): DataFrame = {
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    atVersion(points, version)
+    points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(
@@ -101,10 +99,10 @@ object TimeSeriesOps {
     * (Rollup.windowsApprox).
     */
   def windowsApprox(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                    width: Long, depth: Int, version: Option[Long] = None): DataFrame = {
+                    width: Long, depth: Int): DataFrame = {
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    val buckets = atVersion(points, version)
+    val buckets = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ shiftleft(shiftright(col("t_us"), depth), depth).as("b"): _*)
       .agg(
@@ -155,9 +153,8 @@ object TimeSeriesOps {
     * crosses it). The final decimal→double cast rounds to nearest exactly
     * like DuckDB's HUGEINT→DOUBLE, so the gate stays bit-exact.
     */
-  def statsGlobal(points: DataFrame, streamCols: Seq[String],
-                  version: Option[Long] = None): DataFrame =
-    atVersion(points, version).groupBy(streamKey(streamCols): _*)
+  def statsGlobal(points: DataFrame, streamCols: Seq[String]): DataFrame =
+    points.groupBy(streamKey(streamCols): _*)
       .agg(
         min(col("value")).as("v_min"),
         graft.Quant.mean6(graft.Quant.sumUs6Unbounded(col("value")),
@@ -178,11 +175,10 @@ object TimeSeriesOps {
     * could legitimately pick the other row.
     */
   def nearest(points: DataFrame, streamCols: Seq[String], time: Long,
-              backward: Boolean, version: Option[Long] = None): DataFrame = {
-    val versioned = atVersion(points, version)
+              backward: Boolean): DataFrame = {
     val eligible =
-      if (backward) versioned.filter(col("t_us") < time)
-      else versioned.filter(col("t_us") >= time)
+      if (backward) points.filter(col("t_us") < time)
+      else points.filter(col("t_us") >= time)
     val (tAgg, vAgg) =
       if (backward) (max(col("t_us")), max_by(col("value"), struct(col("t_us"), col("value"))))
       else (min(col("t_us")), min_by(col("value"), struct(col("t_us"), col("value"))))
@@ -274,12 +270,11 @@ object TimeSeriesOps {
     * a local lag inside each timeline slice plus one exchanged boundary
     * row per slice — no task ever sorts a whole stream's history.
     */
-  def delta(points: DataFrame, streamCols: Seq[String],
-            version: Option[Long] = None): DataFrame = {
+  def delta(points: DataFrame, streamCols: Seq[String]): DataFrame = {
     val key = streamKey(streamCols)
     slicedPrev(
         timeSliced(
-          atVersion(points, version).select(key :+ col("t_us") :+ col("value"): _*),
+          points.select(key :+ col("t_us") :+ col("value"): _*),
           streamCols),
         streamCols)
       .filter(col("prev_t").isNotNull)
@@ -304,12 +299,11 @@ object TimeSeriesOps {
     * two-phase sliced lag pass as delta(); the histogram itself is a
     * map-side-partial (stream, bucket) aggregate at metadata scale.
     */
-  def gapHistogram(points: DataFrame, streamCols: Seq[String],
-                   version: Option[Long] = None): DataFrame = {
+  def gapHistogram(points: DataFrame, streamCols: Seq[String]): DataFrame = {
     val key = streamKey(streamCols)
     slicedPrev(
         timeSliced(
-          atVersion(points, version).select(key :+ col("t_us") :+ col("value"): _*),
+          points.select(key :+ col("t_us") :+ col("value"): _*),
           streamCols),
         streamCols)
       .filter(col("prev_t").isNotNull)
@@ -335,9 +329,8 @@ object TimeSeriesOps {
     * pivot is conditional aggregation, not N scans or N joins.
     */
   def csvExport(points: DataFrame, streams: Seq[(String, Column)],
-                start: Long, end: Long, width: Long,
-                version: Option[Long] = None): DataFrame =
-    csvExportStat(points, streams.map { case (l, p) => (l, p, version) },
+                start: Long, end: Long, width: Long): DataFrame =
+    csvExportStat(points, streams.map { case (l, p) => (l, p, None) },
       start, end, width)
 
   /** The full GenerateCSV stat contract (grpcinterface/csv.go:50-107):
@@ -457,17 +450,15 @@ object TimeSeriesOps {
     * grid), which is exactly why the metadata path exists.
     */
   def gaps(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-           width: Long, version: Option[Long] = None,
-           streams: Option[DataFrame] = None): DataFrame = {
+           width: Long, streams: Option[DataFrame] = None): DataFrame = {
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    val pts = atVersion(points, version)
-    val occupied = pts
+    val occupied = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .select(key :+ widthBucket(start, width): _*)
       .distinct()
     val universe = streams.map(_.select(key: _*))
-      .getOrElse(pts.select(key: _*).distinct())
+      .getOrElse(points.select(key: _*).distinct())
     val grid = universe
       .withColumn("w_start", explode(sequence(lit(start), lit(completeEnd - 1), lit(width))))
     grid.join(occupied, streamCols :+ "w_start", "left_anti")
@@ -480,10 +471,9 @@ object TimeSeriesOps {
     * one per missing window.
     */
   def outages(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-              width: Long, version: Option[Long] = None,
-              streams: Option[DataFrame] = None): DataFrame =
+              width: Long, streams: Option[DataFrame] = None): DataFrame =
     mergeRanges(
-      gaps(points, streamCols, start, end, width, version, streams)
+      gaps(points, streamCols, start, end, width, streams)
         .select(streamKey(streamCols) :+ col("w_start").as("r_start")
           :+ (col("w_start") + width).as("r_end"): _*),
       streamCols)
@@ -497,16 +487,15 @@ object TimeSeriesOps {
     * silent windows — the outages() contract.
     */
   def reliability(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                  width: Long, version: Option[Long] = None,
-                  streams: Option[DataFrame] = None): DataFrame = {
+                  width: Long, streams: Option[DataFrame] = None): DataFrame = {
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
     val spanUs = (completeEnd - start).toDouble
-    val agg = outages(points, streamCols, start, end, width, version, streams)
+    val agg = outages(points, streamCols, start, end, width, streams)
       .groupBy(key: _*)
       .agg(count(lit(1)).as("n_o"), sum(col("c_end") - col("c_start")).as("d_us"))
     streams.map(_.select(key: _*))
-      .getOrElse(atVersion(points, version).select(key: _*).distinct())
+      .getOrElse(points.select(key: _*).distinct())
       .join(agg, streamCols, "left")
       .select(key ++ Seq(
         coalesce(col("n_o"), lit(0L)).as("n_outages"),
@@ -750,13 +739,12 @@ object TimeSeriesOps {
     * exact integer carries commute, so slice offsets + local sums
     * reproduce the stream-wide window bit-for-bit.
     */
-  def cusum(points: DataFrame, streamCols: Seq[String],
-            version: Option[Long] = None): DataFrame = {
+  def cusum(points: DataFrame, streamCols: Seq[String]): DataFrame = {
     val key = streamKey(streamCols)
-    val stats = streamStats(points, streamCols, version)
+    val stats = streamStats(points, streamCols)
       .select(key :+ round(col("mean_us"), 0).cast("long").as("mean_i"): _*)
     val sliced = timeSliced(
-        atVersion(points, version).select(key :+ col("t_us") :+ col("value"): _*),
+        points.select(key :+ col("t_us") :+ col("value"): _*),
         streamCols)
       .join(broadcast(stats), streamCols)
     val dev = (graft.Quant.us6(col("value")) - col("mean_i")).cast("decimal(38,0)")
@@ -848,12 +836,12 @@ object TimeSeriesOps {
     * same float ops (no pow(), whose last-ulp behavior differs per libm).
     */
   def ewma(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-           width: Long, alpha: Double, version: Option[Long] = None): DataFrame = {
+           width: Long, alpha: Double): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     val key = streamKey(streamCols)
     val a = java.lang.Double.toString(alpha)
     val b = java.lang.Double.toString(1.0 - alpha)
-    windows(points, streamCols, start, end, width, version)
+    windows(points, streamCols, start, end, width)
       .groupBy(key: _*)
       .agg(sort_array(collect_list(struct(col("w_start"), col("v_mean")))).as("ser"))
       .withColumn("ew", expr(
@@ -877,8 +865,7 @@ object TimeSeriesOps {
     * — the identical expression yields the identical double).
     */
   def holt(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-           width: Long, alpha: Double, beta: Double,
-           version: Option[Long] = None): DataFrame = {
+           width: Long, alpha: Double, beta: Double): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     require(beta >= 0 && beta <= 1, s"beta must be in [0, 1], got $beta")
     val key = streamKey(streamCols)
@@ -887,7 +874,7 @@ object TimeSeriesOps {
     val b = java.lang.Double.toString(beta)
     val ib = java.lang.Double.toString(1.0 - beta)
     val lNew = s"$a * x.v_mean + $ia * (element_at(acc, -1).l + element_at(acc, -1).b)"
-    windows(points, streamCols, start, end, width, version)
+    windows(points, streamCols, start, end, width)
       .groupBy(key: _*)
       .agg(sort_array(collect_list(struct(col("w_start"), col("v_mean")))).as("ser"))
       .withColumn("hw", expr(
@@ -922,8 +909,7 @@ object TimeSeriesOps {
     */
   private def hwFold(points: DataFrame, streamCols: Seq[String], start: Long,
                      end: Long, width: Long, period: Int, alpha: Double,
-                     beta: Double, gamma: Double,
-                     version: Option[Long]): DataFrame = {
+                     beta: Double, gamma: Double): DataFrame = {
     require(period >= 2, s"period must be at least 2 windows, got $period")
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     require(beta >= 0 && beta <= 1, s"beta must be in [0, 1], got $beta")
@@ -939,7 +925,7 @@ object TimeSeriesOps {
       "ELSE CAST(0.0 AS DOUBLE) END"
     val lNew = s"$a * (x.v_mean - ($sPrev)) + " +
       s"$ia * (element_at(acc, -1).l + element_at(acc, -1).b)"
-    windows(points, streamCols, start, end, width, version)
+    windows(points, streamCols, start, end, width)
       .groupBy(key: _*)
       .agg(sort_array(collect_list(struct(col("w_start"), col("v_mean")))).as("ser"))
       .withColumn("hw", expr(
@@ -957,9 +943,9 @@ object TimeSeriesOps {
 
   def holtWinters(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                   width: Long, period: Int, alpha: Double, beta: Double,
-                  gamma: Double, version: Option[Long] = None): DataFrame = {
+                  gamma: Double): DataFrame = {
     val key = streamKey(streamCols)
-    hwFold(points, streamCols, start, end, width, period, alpha, beta, gamma, version)
+    hwFold(points, streamCols, start, end, width, period, alpha, beta, gamma)
       .select(key :+ posexplode(arrays_zip(col("ser"), col("hw"))): _*)
       .select(key ++ Seq(col("col.ser.w_start").as("w_start"),
         col("col.ser.v_mean").as("v_mean"),
@@ -978,11 +964,10 @@ object TimeSeriesOps {
     */
   def holtWintersForecast(points: DataFrame, streamCols: Seq[String], start: Long,
                           end: Long, width: Long, period: Int, alpha: Double,
-                          beta: Double, gamma: Double, horizon: Int,
-                          version: Option[Long] = None): DataFrame = {
+                          beta: Double, gamma: Double, horizon: Int): DataFrame = {
     require(horizon >= 1, s"horizon must be at least 1, got $horizon")
     val key = streamKey(streamCols)
-    hwFold(points, streamCols, start, end, width, period, alpha, beta, gamma, version)
+    hwFold(points, streamCols, start, end, width, period, alpha, beta, gamma)
       .select(key ++ Seq(
         element_at(col("ser"), -1).getField("w_start").as("last_w"),
         element_at(col("hw"), -1).getField("l").as("l"),
@@ -1008,14 +993,14 @@ object TimeSeriesOps {
     * the max value (the deterministic last-write-wins used throughout).
     */
   def interpolate(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                  width: Long, version: Option[Long] = None): DataFrame = {
+                  width: Long): DataFrame = {
     val key = streamKey(streamCols)
-    val pts = atVersion(points, version)
+    val pts = points
       // one value per (stream, t): ties resolve to max BEFORE the window
       // walk so prev/next agree with the oracle under duplicate timestamps
       .groupBy(key :+ col("t_us"): _*).agg(max(col("value")).as("value"))
       .select(key ++ Seq(col("t_us").as("t"), col("value"), lit(0).as("is_grid")): _*)
-    val grid = atVersion(points, version).select(key: _*).distinct()
+    val grid = points.select(key: _*).distinct()
       .withColumn("t", explode(sequence(lit(start), lit(end - 1), lit(width))))
       .withColumn("value", lit(null).cast("double"))
       .withColumn("is_grid", lit(1))
@@ -1046,10 +1031,10 @@ object TimeSeriesOps {
     * to round, scales like any windowed aggregation.
     */
   def histogram(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                width: Long, binWidth: Double, version: Option[Long] = None): DataFrame = {
+                width: Long, binWidth: Double): DataFrame = {
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    atVersion(points, version)
+    points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width)
         :+ floor(col("value") / binWidth).cast("long").as("bin"): _*)
@@ -1071,14 +1056,13 @@ object TimeSeriesOps {
     * them is the binning error, which is the operator's point.
     */
   def histogramQuantile(points: DataFrame, streamCols: Seq[String], start: Long,
-                        end: Long, width: Long, binWidth: Double, ps: Seq[Double],
-                        version: Option[Long] = None): DataFrame = {
+                        end: Long, width: Long, binWidth: Double, ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p > 0 && p <= 1), s"quantiles must be in (0,1]: $ps")
     val key = streamKey(streamCols)
     val grp = key :+ col("w_start")
     val ord = Window.partitionBy(grp: _*).orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    val h = histogram(points, streamCols, start, end, width, binWidth, version)
+    val h = histogram(points, streamCols, start, end, width, binWidth)
       .withColumn("cum", sum(col("n")).over(ord))
       .withColumn("total", sum(col("n")).over(Window.partitionBy(grp: _*)))
     def label(p: Double) =
@@ -1115,14 +1099,14 @@ object TimeSeriesOps {
     * far below 2^53 for any real time range.
     */
   def calendarProfile(points: DataFrame, streamCols: Seq[String], start: Long,
-                      end: Long, version: Option[Long] = None): DataFrame = {
+                      end: Long): DataFrame = {
     val key = streamKey(streamCols)
     val day = 86400000000L
     val hour = 3600000000L
     val d = col("t_us") - start
     val dow = pmod(((d - pmod(d, lit(day))) / day).cast("long"), lit(7L)).as("dow")
     val hr = ((pmod(d, lit(day)) - pmod(d, lit(hour))) / hour).cast("long").as("hour")
-    atVersion(points, version)
+    points
       .filter(col("t_us") >= start && col("t_us") < end)
       .groupBy(key :+ dow :+ hr: _*)
       .agg(count(lit(1)).as("n"),
@@ -1142,11 +1126,11 @@ object TimeSeriesOps {
     * the window sum divided by the window span in seconds.
     */
   def counterRate(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                  width: Long, version: Option[Long] = None): DataFrame = {
+                  width: Long): DataFrame = {
     val key = streamKey(streamCols)
     val w = Window.partitionBy(key: _*).orderBy(col("t_us"), col("value"))
     val completeEnd = start + ((end - start) / width) * width
-    val inc = atVersion(points, version)
+    val inc = points
       .select(key :+ col("t_us") :+ col("value"): _*)
       .withColumn("prev_v", lag(col("value"), 1).over(w))
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
@@ -1173,10 +1157,10 @@ object TimeSeriesOps {
     * nearest().
     */
   def m4(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-         width: Long, version: Option[Long] = None): DataFrame = {
+         width: Long): DataFrame = {
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    atVersion(points, version)
+    points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(
@@ -1198,13 +1182,12 @@ object TimeSeriesOps {
     * cannot appear (the aggregate only sees streams with points).
     */
   def coverage(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-               width: Long, version: Option[Long] = None,
-               streams: Option[DataFrame] = None): DataFrame = {
+               width: Long, streams: Option[DataFrame] = None): DataFrame = {
     val key = streamKey(streamCols)
     val nTotal = (end - start) / width
     require(nTotal > 0, s"empty grid: [$start, $end) at width $width")
     val completeEnd = start + nTotal * width
-    val occ = atVersion(points, version)
+    val occ = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key: _*)
       .agg(countDistinct(widthBucket(start, width)).as("n_occ"))
@@ -1230,13 +1213,12 @@ object TimeSeriesOps {
     * crossing a slice boundary are stitched by the exchanged boundary row
     * and the broadcast island-count carry — no stream-wide sort.
     */
-  def sessionize(points: DataFrame, streamCols: Seq[String], gapUs: Long,
-                 version: Option[Long] = None): DataFrame = {
+  def sessionize(points: DataFrame, streamCols: Seq[String], gapUs: Long): DataFrame = {
     require(gapUs > 0, s"gapUs must be positive, got $gapUs")
     val key = streamKey(streamCols)
     slicedIslands(
         timeSliced(
-          atVersion(points, version).select(key :+ col("t_us") :+ col("value"): _*),
+          points.select(key :+ col("t_us") :+ col("value"): _*),
           streamCols),
         streamCols,
         (ct, _, pt, _) => ct - pt > gapUs,
@@ -1270,11 +1252,11 @@ object TimeSeriesOps {
     * per-stream window series — rollup-scale data, never raw points.
     */
   def rolling(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-              width: Long, k: Int, version: Option[Long] = None): DataFrame = {
+              width: Long, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    val base = atVersion(points, version)
+    val base = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(
@@ -1303,14 +1285,13 @@ object TimeSeriesOps {
     * (the oracle replays the identical float ops).
     */
   def percentileWindows(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                        width: Long, ps: Seq[Double],
-                        version: Option[Long] = None): DataFrame = {
+                        width: Long, ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1), s"quantiles must be in [0,1]: $ps")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
     val grp = key :+ col("w_start")
     val ord = Window.partitionBy(grp: _*).orderBy(col("value"), col("t_us"))
-    val ranked = atVersion(points, version)
+    val ranked = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .select(key :+ widthBucket(start, width) :+ col("t_us") :+ col("value"): _*)
       .withColumn("rn", row_number().over(ord))
@@ -1349,7 +1330,7 @@ object TimeSeriesOps {
     * median stays raw double so the oracle replays the exact float chain.
     */
   def madWindows(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                 width: Long, version: Option[Long] = None): DataFrame = {
+                 width: Long): DataFrame = {
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
     val grp = key :+ col("w_start")
@@ -1366,7 +1347,7 @@ object TimeSeriesOps {
         .agg(count(lit(1)).as("n_points"),
           (lo + (hi - lo) * max(col("idx") - floor(col("idx")))).as(out))
     }
-    val base = atVersion(points, version)
+    val base = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .select(key :+ widthBucket(start, width) :+ col("t_us") :+ col("value"): _*)
     val med = median(base, col("value"), col("t_us"), "med")
@@ -1393,15 +1374,14 @@ object TimeSeriesOps {
     */
   def percentileWindowsApprox(points: DataFrame, streamCols: Seq[String],
                               start: Long, end: Long, width: Long, ps: Seq[Double],
-                              accuracy: Int = 10000,
-                              version: Option[Long] = None): DataFrame = {
+                              accuracy: Int = 10000): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1), s"quantiles must be in [0,1]: $ps")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
     def label(p: Double) =
       "p" + (if (p * 100 == (p * 100).floor) (p * 100).toInt.toString
              else java.lang.Double.toString(p).replace('.', '_').replace("0_", ""))
-    atVersion(points, version)
+    points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(count(lit(1)).as("n_points"),
@@ -1426,12 +1406,11 @@ object TimeSeriesOps {
     * moment sums. This is the "trained profile" — anomalies() consumes it
     * batch-side, graft.streaming.AnomalyScore joins it onto a live stream.
     */
-  def streamStats(points: DataFrame, streamCols: Seq[String],
-                  version: Option[Long] = None): DataFrame = {
+  def streamStats(points: DataFrame, streamCols: Seq[String]): DataFrame = {
     val key = streamKey(streamCols)
     val us = graft.Quant.us6(col("value")).cast("decimal(38,0)")
     val mean = col("s1").cast("double") / col("n")
-    atVersion(points, version).groupBy(key: _*)
+    points.groupBy(key: _*)
       .agg(sum(us).as("s1"), sum(us * us).as("s2"), count(lit(1)).as("n"))
       .select(key ++ Seq(
         mean.as("mean_us"),
@@ -1443,12 +1422,11 @@ object TimeSeriesOps {
   def zScore: Column =
     (graft.Quant.us6(col("value")).cast("double") - col("mean_us")) / col("std_us")
 
-  def anomalies(points: DataFrame, streamCols: Seq[String], zThresh: Double,
-                version: Option[Long] = None): DataFrame = {
+  def anomalies(points: DataFrame, streamCols: Seq[String], zThresh: Double): DataFrame = {
     require(zThresh > 0, s"zThresh must be positive, got $zThresh")
     val key = streamKey(streamCols)
-    atVersion(points, version)
-      .join(broadcast(streamStats(points, streamCols, version)), streamCols)
+    points
+      .join(broadcast(streamStats(points, streamCols)), streamCols)
       .withColumn("z", zScore)
       .filter(col("std_us") > 0 && abs(col("z")) >= zThresh)
       .select(key ++ Seq(col("t_us"), col("value"),
@@ -1464,12 +1442,11 @@ object TimeSeriesOps {
     * map-side-partial stats pass broadcast back onto the scan — the
     * anomalies() shape.
     */
-  def normalize(points: DataFrame, streamCols: Seq[String],
-                version: Option[Long] = None): DataFrame = {
+  def normalize(points: DataFrame, streamCols: Seq[String]): DataFrame = {
     val key = streamKey(streamCols)
-    val stats = atVersion(points, version).groupBy(key: _*)
+    val stats = points.groupBy(key: _*)
       .agg(min(col("value")).as("v_min"), max(col("value")).as("v_max"))
-    atVersion(points, version)
+    points
       .join(broadcast(stats), streamCols)
       .select(key ++ Seq(col("t_us"), col("value"),
         when(col("v_max") > col("v_min"),
@@ -1495,13 +1472,12 @@ object TimeSeriesOps {
     */
   def profileDrift(points: DataFrame, streamCols: Seq[String],
                    aStart: Long, aEnd: Long, bStart: Long, bEnd: Long,
-                   bucketUs: Long, periodBuckets: Int,
-                   version: Option[Long] = None): DataFrame = {
+                   bucketUs: Long, periodBuckets: Int): DataFrame = {
     require(bucketUs > 0 && periodBuckets > 0, "bucketUs/periodBuckets must be positive")
     val key = streamKey(streamCols)
     val phase = pmod(expr(s"t_us div $bucketUs"), lit(periodBuckets.toLong)).as("phase")
     def profile(s: Long, e: Long, out: String): DataFrame =
-      atVersion(points, version)
+      points
         .filter(col("t_us") >= s && col("t_us") < e)
         .groupBy(key :+ phase: _*)
         .agg(round(sum(graft.Quant.us6(col("value")).cast("decimal(38,0)")).cast("double") /
@@ -1536,21 +1512,21 @@ object TimeSeriesOps {
     */
   def anomaliesSeasonal(points: DataFrame, streamCols: Seq[String], zThresh: Double,
                         bucketUs: Long = 3600000000L, periodBuckets: Int = 24,
-                        minN: Long = 2, version: Option[Long] = None): DataFrame = {
+                        minN: Long = 2): DataFrame = {
     require(zThresh > 0, s"zThresh must be positive, got $zThresh")
     require(bucketUs > 0 && periodBuckets > 0, "bucketUs/periodBuckets must be positive")
     val key = streamKey(streamCols)
     val phase = pmod(expr(s"t_us div $bucketUs"), lit(periodBuckets.toLong)).as("phase")
     val us = graft.Quant.us6(col("value")).cast("decimal(38,0)")
     val mean = col("s1").cast("double") / col("n")
-    val profile = atVersion(points, version)
+    val profile = points
       .groupBy(key :+ phase: _*)
       .agg(sum(us).as("s1"), sum(us * us).as("s2"), count(lit(1)).as("n"))
       .select(key ++ Seq(col("phase"),
         mean.as("mean_us"),
         sqrt(col("s2").cast("double") / col("n") - mean * mean).as("std_us"),
         col("n")): _*)
-    atVersion(points, version)
+    points
       .withColumn("phase", phase)
       .join(broadcast(profile), streamCols :+ "phase")
       .withColumn("z", zScore)
@@ -1614,15 +1590,14 @@ object TimeSeriesOps {
     * first.
     */
   def decompose(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                width: Long, period: Int,
-                version: Option[Long] = None): DataFrame = {
+                width: Long, period: Int): DataFrame = {
     require(period >= 2, s"period must be >= 2, got $period")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
     val h = period / 2
     val f = 2 * h + 1 // frame length: period for odd, period+1 for even (2×MA)
     val d = col("t_us") - start
-    val means = atVersion(points, version)
+    val means = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
       .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
@@ -1789,15 +1764,14 @@ object TimeSeriesOps {
     */
   def holtWintersBacktest(points: DataFrame, streamCols: Seq[String], start: Long,
                           end: Long, width: Long, period: Int, alpha: Double,
-                          beta: Double, gamma: Double,
-                          version: Option[Long] = None): DataFrame = {
+                          beta: Double, gamma: Double): DataFrame = {
     val key = streamKey(streamCols)
     val w = Window.partitionBy(key: _*).orderBy(col("w_start"))
     val sNext = coalesce(lag(col("seasonal"), period - 1).over(w), lit(0d))
     val f = col("level") + col("trend") + sNext
     val errUs = graft.Quant.us6(lead(col("v_mean"), 1).over(w) - f)
     holtWinters(points, streamCols, start, end, width, period, alpha, beta,
-        gamma, version)
+        gamma)
       .withColumn("err_us", errUs)
       .filter(col("err_us").isNotNull)
       .groupBy(key: _*)
@@ -1825,14 +1799,13 @@ object TimeSeriesOps {
     * no in-range points emit nothing.
     */
   def burstiness(points: DataFrame, streamCols: Seq[String], start: Long,
-                 end: Long, width: Long,
-                 version: Option[Long] = None): DataFrame = {
+                 end: Long, width: Long): DataFrame = {
     require(width > 0, s"width must be positive, got $width")
     val key = streamKey(streamCols)
     val w = (end - start) / width // complete windows only
     require(w > 0, s"range [$start,$end) holds no complete window of $width")
     val completeEnd = start + w * width
-    val counts = atVersion(points, version)
+    val counts = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(count(lit(1)).as("n"))
@@ -1869,11 +1842,10 @@ object TimeSeriesOps {
     * the (stream, pattern) summary after it.
     */
   def ordinalPatterns(points: DataFrame, streamCols: Seq[String], start: Long,
-                      end: Long, width: Long,
-                      version: Option[Long] = None): DataFrame = {
+                      end: Long, width: Long): DataFrame = {
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    val means = atVersion(points, version)
+    val means = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
@@ -1944,11 +1916,10 @@ object TimeSeriesOps {
     * bit-for-bit.
     */
   def similarStreams(points: DataFrame, streamCols: Seq[String], queryPred: Column,
-                     start: Long, end: Long, width: Long, k: Int,
-                     version: Option[Long] = None): DataFrame = {
+                     start: Long, end: Long, width: Long, k: Int): DataFrame = {
     val key = streamKey(streamCols)
     val d = col("t_us") - start
-    val means = atVersion(points, version)
+    val means = points
       .filter(col("t_us") >= start && col("t_us") < end)
       .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
       .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
@@ -1984,10 +1955,10 @@ object TimeSeriesOps {
     * the micro-unit sums accumulate as DECIMAL per the graft.Quant rule.
     */
   def seasonalProfile(points: DataFrame, keyCols: Seq[String], bucketUs: Long,
-                      periodBuckets: Int, version: Option[Long] = None): DataFrame = {
+                      periodBuckets: Int): DataFrame = {
     val key = keyCols.map(col)
     val bucket = pmod(expr(s"t_us div $bucketUs"), lit(periodBuckets.toLong)).as("pos")
-    atVersion(points, version)
+    points
       .groupBy(key :+ bucket: _*)
       .agg(
         min(col("value")).as("v_min"),
@@ -2012,14 +1983,13 @@ object TimeSeriesOps {
     * aggregation over the grid-bounded decompose frame.
     */
   def seasonalStrength(points: DataFrame, streamCols: Seq[String], start: Long,
-                       end: Long, width: Long, period: Int,
-                       version: Option[Long] = None): DataFrame = {
+                       end: Long, width: Long, period: Int): DataFrame = {
     val key = streamKey(streamCols)
     def us(c: Column) = graft.Quant.us6(c).cast("decimal(38,0)")
     val r = us(col("residual"))
     val ds = us(col("residual") + col("seasonal"))
     val dt = us(col("residual") + col("trend"))
-    val mom = decompose(points, streamCols, start, end, width, period, version)
+    val mom = decompose(points, streamCols, start, end, width, period)
       .groupBy(key: _*)
       .agg(count(lit(1)).as("n"),
         sum(r).as("sr"), sum(r * r).as("srr"),
@@ -2050,10 +2020,10 @@ object TimeSeriesOps {
     * per the graft.Quant overflow rule. One keyed window sort over the
     * deduplicated points — the same shape/cost class as delta().
     */
-  def timeWeighted(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                   version: Option[Long] = None): DataFrame = {
+  def timeWeighted(points: DataFrame, streamCols: Seq[String], start: Long,
+                   end: Long): DataFrame = {
     val key = streamKey(streamCols)
-    val dedup = atVersion(points, version)
+    val dedup = points
       .filter(col("t_us") >= start && col("t_us") < end)
       .groupBy(key :+ col("t_us"): _*).agg(max(col("value")).as("value"))
     val w = Window.partitionBy(key: _*).orderBy(col("t_us"))
@@ -2085,12 +2055,12 @@ object TimeSeriesOps {
     * nothing instead).
     */
   def multiResolution(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                      widths: Seq[Long], version: Option[Long] = None): DataFrame = {
+                      widths: Seq[Long]): DataFrame = {
     require(widths.nonEmpty && widths.zip(widths.tail).forall { case (a, b) => b % a == 0 },
       s"each width must divide the next: $widths")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / widths.max) * widths.max
-    val fine = atVersion(points, version)
+    val fine = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, widths.head): _*)
       .agg(
@@ -2123,12 +2093,11 @@ object TimeSeriesOps {
     * approx_count_distinct(HLL) — same plan shape, bounded state.
     */
   def cardinality(points: DataFrame, keyCols: Seq[String], distinctCols: Seq[String],
-                  start: Long, end: Long, width: Long,
-                  version: Option[Long] = None): DataFrame = {
+                  start: Long, end: Long, width: Long): DataFrame = {
     require(distinctCols.nonEmpty, "cardinality needs at least one distinct column")
     val key = keyCols.map(col)
     val completeEnd = start + ((end - start) / width) * width
-    atVersion(points, version)
+    points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(countDistinct(distinctCols.head, distinctCols.tail: _*).as("n_streams"),
@@ -2145,12 +2114,12 @@ object TimeSeriesOps {
     * rather than oracle-hashed.
     */
   def cardinalityApprox(points: DataFrame, keyCols: Seq[String], distinctCols: Seq[String],
-                        start: Long, end: Long, width: Long, relativeSD: Double = 0.01,
-                        version: Option[Long] = None): DataFrame = {
+                        start: Long, end: Long, width: Long,
+                        relativeSD: Double = 0.01): DataFrame = {
     require(distinctCols.nonEmpty, "cardinality needs at least one distinct column")
     val key = keyCols.map(col)
     val completeEnd = start + ((end - start) / width) * width
-    atVersion(points, version)
+    points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(approx_count_distinct(struct(distinctCols.map(col): _*), relativeSD)
@@ -2171,11 +2140,11 @@ object TimeSeriesOps {
     * break on the stream key in both phases, so it is deterministic.
     */
   def topKPerWindow(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                    width: Long, k: Int, version: Option[Long] = None): DataFrame = {
+                    width: Long, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    val counts = atVersion(points, version)
+    val counts = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(count(lit(1)).as("n_points"))
@@ -2202,10 +2171,9 @@ object TimeSeriesOps {
     * broadcast run-count carry — same cost class as delta(), never a
     * stream-wide sort.
     */
-  def valueRuns(points: DataFrame, streamCols: Seq[String],
-                version: Option[Long] = None): DataFrame = {
+  def valueRuns(points: DataFrame, streamCols: Seq[String]): DataFrame = {
     val key = streamKey(streamCols)
-    val dedup = atVersion(points, version)
+    val dedup = points
       .groupBy(key :+ col("t_us"): _*).agg(max(col("value")).as("value"))
     slicedIslands(timeSliced(dedup, streamCols), streamCols,
         (_, cv, _, pv) => pv.isNull || cv =!= pv,
@@ -2246,10 +2214,9 @@ object TimeSeriesOps {
     * aggregates over the ranked table. Every product stays exact
     * DECIMAL with one float division per emitted ratio.
     */
-  def loadGini(points: DataFrame, streamCols: Seq[String],
-               version: Option[Long] = None): DataFrame = {
+  def loadGini(points: DataFrame, streamCols: Seq[String]): DataFrame = {
     val key = streamKey(streamCols)
-    val counts = atVersion(points, version)
+    val counts = points
       .groupBy(key: _*).agg(count(lit(1)).as("x"))
     val parts = points.sparkSession.sessionState.conf.numShufflePartitions
     val ranged = counts
@@ -2295,10 +2262,9 @@ object TimeSeriesOps {
     * One aggregation over valueRuns' grid-free run table (which itself
     * never stream-wide-sorts — the sliced-islands shape).
     */
-  def compressibility(points: DataFrame, streamCols: Seq[String],
-                      version: Option[Long] = None): DataFrame = {
+  def compressibility(points: DataFrame, streamCols: Seq[String]): DataFrame = {
     val key = streamKey(streamCols)
-    valueRuns(points, streamCols, version)
+    valueRuns(points, streamCols)
       .groupBy(key: _*)
       .agg(sum(col("n_points")).as("n_points"),
         count(lit(1)).as("n_runs"),
@@ -2348,12 +2314,12 @@ object TimeSeriesOps {
     * groupBy, nothing else.
     */
   def stddevWindows(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                    width: Long, version: Option[Long] = None): DataFrame = {
+                    width: Long): DataFrame = {
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
     val us = graft.Quant.us6(col("value")).cast("decimal(38,0)")
     val bigD = col("n") * col("s2") - col("s1") * col("s1")
-    atVersion(points, version)
+    points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(sum(us).as("s1"), sum(us * us).as("s2"), count(lit(1)).as("n"))
@@ -2390,12 +2356,11 @@ object TimeSeriesOps {
     * raw-point sort at any fleet size.
     */
   def bollingerBands(points: DataFrame, streamCols: Seq[String], start: Long,
-                     end: Long, width: Long, k: Int, nSigma: Double,
-                     version: Option[Long] = None): DataFrame = {
+                     end: Long, width: Long, k: Int, nSigma: Double): DataFrame = {
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
     val us = graft.Quant.us6(col("value")).cast("decimal(38,0)")
-    val base = atVersion(points, version)
+    val base = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(sum(us).as("s1"), sum(us * us).as("s2"), count(lit(1)).as("n"))
@@ -2451,11 +2416,11 @@ object TimeSeriesOps {
     * groupBy.
     */
   def deriv(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-            width: Long, version: Option[Long] = None): DataFrame = {
+            width: Long): DataFrame = {
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
     val d = col("t_us") - start
-    val mom = atVersion(points, version)
+    val mom = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .select(key ++ Seq(
         (lit(start) + d - pmod(d, lit(width))).as("w_start"),
@@ -2489,12 +2454,11 @@ object TimeSeriesOps {
     * raw points.
     */
   def capacityForecast(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                       threshold: Double, horizonUs: Long,
-                       version: Option[Long] = None): DataFrame = {
+                       threshold: Double, horizonUs: Long): DataFrame = {
     require(horizonUs > 0, s"horizonUs must be positive, got $horizonUs")
     val key = streamKey(streamCols)
     val d = col("t_us") - start
-    val mom = atVersion(points, version)
+    val mom = points
       .filter(col("t_us") >= start && col("t_us") < end)
       .select(key ++ Seq(
         d.cast("decimal(38,0)").as("tr"),
@@ -2528,12 +2492,11 @@ object TimeSeriesOps {
     * divisions both engines replay bit-for-bit.
     */
   def burnRate(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-               widths: Seq[Long], badPred: Column, slo: Double,
-               version: Option[Long] = None): DataFrame = {
+               widths: Seq[Long], badPred: Column, slo: Double): DataFrame = {
     require(widths.nonEmpty && widths.forall(_ > 0), s"widths must be positive: $widths")
     require(slo > 0 && slo < 1, s"slo must be in (0,1), got $slo")
     val key = streamKey(streamCols)
-    val exploded = atVersion(points, version)
+    val exploded = points
       .filter(col("t_us") >= start && col("t_us") < end)
       .select(key ++ Seq(col("t_us"), col("value"),
         explode(array(widths.map(lit): _*)).as("width_us")): _*)
@@ -2594,13 +2557,12 @@ object TimeSeriesOps {
     * window (one scan, no self-join), rows without a comparator dropped.
     */
   private def offsetFrame(points: DataFrame, streamCols: Seq[String], start: Long,
-                          end: Long, width: Long, offsetUs: Long,
-                          version: Option[Long]): DataFrame = {
+                          end: Long, width: Long, offsetUs: Long): DataFrame = {
     require(offsetUs > 0 && offsetUs % width == 0,
       s"offset must be a positive multiple of the window width, got $offsetUs / $width")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    val means = atVersion(points, version)
+    val means = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
@@ -2613,9 +2575,9 @@ object TimeSeriesOps {
   }
 
   def offsetCompare(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                    width: Long, offsetUs: Long, version: Option[Long] = None): DataFrame = {
+                    width: Long, offsetUs: Long): DataFrame = {
     val key = streamKey(streamCols)
-    offsetFrame(points, streamCols, start, end, width, offsetUs, version)
+    offsetFrame(points, streamCols, start, end, width, offsetUs)
       .select(key ++ Seq(col("w_start"),
         (col("m_us").cast("double") / 1e6 + lit(0d)).as("v_mean"),
         (col("prev_us").cast("double") / 1e6 + lit(0d)).as("prev_mean"),
@@ -2634,13 +2596,12 @@ object TimeSeriesOps {
     * never globally sorted; the rank window runs over k survivors.
     */
   def topMovers(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                width: Long, offsetUs: Long, k: Int,
-                version: Option[Long] = None): DataFrame = {
+                width: Long, offsetUs: Long, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val key = streamKey(streamCols)
     val ord = abs(col("m_us") - col("prev_us")).desc +:
       (key :+ col("w_start")).map(_.asc)
-    offsetFrame(points, streamCols, start, end, width, offsetUs, version)
+    offsetFrame(points, streamCols, start, end, width, offsetUs)
       .orderBy(ord: _*)
       .limit(k)
       .withColumn("rank", row_number().over(graft.Bounded.window(ord: _*)).cast("long"))
@@ -2692,13 +2653,12 @@ object TimeSeriesOps {
     * |types|² — metadata scale — so the row-total window is free).
     */
   def transitions(points: DataFrame, userCols: Seq[String], typeCol: String,
-                  start: Long, end: Long, width: Long,
-                  version: Option[Long] = None): DataFrame = {
+                  start: Long, end: Long, width: Long): DataFrame = {
     val key = userCols.map(col)
     val completeEnd = start + ((end - start) / width) * width
     val ord = Window.partitionBy(key :+ col("w_start"): _*)
       .orderBy(col("t_us"), col(typeCol))
-    val counts = atVersion(points, version)
+    val counts = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .select(key ++ Seq(widthBucket(start, width), col("t_us"), col(typeCol)): _*)
       .withColumn("from_type", lag(col(typeCol), 1).over(ord))
@@ -2722,13 +2682,12 @@ object TimeSeriesOps {
     * one map-side-partial aggregation over the |types|² matrix.
     */
   def transitionDwell(points: DataFrame, userCols: Seq[String], typeCol: String,
-                      start: Long, end: Long, width: Long,
-                      version: Option[Long] = None): DataFrame = {
+                      start: Long, end: Long, width: Long): DataFrame = {
     val key = userCols.map(col)
     val completeEnd = start + ((end - start) / width) * width
     val ord = Window.partitionBy(key :+ col("w_start"): _*)
       .orderBy(col("t_us"), col(typeCol))
-    atVersion(points, version)
+    points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .select(key ++ Seq(widthBucket(start, width), col("t_us"), col(typeCol)): _*)
       .withColumn("from_type", lag(col(typeCol), 1).over(ord))
@@ -2761,12 +2720,11 @@ object TimeSeriesOps {
     * quadratic.
     */
   def retention(points: DataFrame, streamCols: Seq[String], start: Long,
-                end: Long, width: Long,
-                version: Option[Long] = None): DataFrame = {
+                end: Long, width: Long): DataFrame = {
     require(width > 0, s"width must be positive, got $width")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    val acts = atVersion(points, version)
+    val acts = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .select(key :+ widthBucket(start, width): _*)
       .distinct()
@@ -2794,12 +2752,11 @@ object TimeSeriesOps {
     * swap-in is the approximate alternative at extreme scale).
     */
   def activeUsers(points: DataFrame, streamCols: Seq[String], start: Long,
-                  end: Long, width: Long, k: Int,
-                  version: Option[Long] = None): DataFrame = {
+                  end: Long, width: Long, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    val acts = atVersion(points, version)
+    val acts = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .select(key :+ widthBucket(start, width): _*)
       .distinct()
@@ -2834,14 +2791,14 @@ object TimeSeriesOps {
     * quantized integer ratio (graft.Quant MEAN6 form).
     */
   def funnel(base: DataFrame, conv: DataFrame, keyCols: Seq[String], start: Long, end: Long,
-             width: Long, horizonUs: Long, version: Option[Long] = None): DataFrame = {
+             width: Long, horizonUs: Long): DataFrame = {
     require(horizonUs > 0, s"horizon must be positive, got $horizonUs")
     val key = keyCols.map(col)
     val completeEnd = start + ((end - start) / width) * width
-    val l = atVersion(base, version)
+    val l = base
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .select(key ++ Seq((-col("t_us")).as("t_neg"), col("value")): _*)
-    val r = atVersion(conv, version)
+    val r = conv
       .groupBy(key :+ col("t_us"): _*).agg(max(col("value")).as("value"))
       .select(key ++ Seq((-col("t_us")).as("t_neg"), col("value")): _*)
     val joined = asofJoin(l, r, keyCols, asOfCol = "t_neg", toleranceUs = Some(horizonUs))
@@ -2871,13 +2828,12 @@ object TimeSeriesOps {
     * map-side-partial groupBy + TakeOrdered top-k.
     */
   def topPaths(events: DataFrame, keyCols: Seq[String], typeCol: String,
-               start: Long, end: Long, width: Long, maxLen: Int, k: Int,
-               version: Option[Long] = None): DataFrame = {
+               start: Long, end: Long, width: Long, maxLen: Int, k: Int): DataFrame = {
     require(maxLen > 0 && k > 0, s"maxLen/k must be positive, got $maxLen/$k")
     val key = keyCols.map(col)
     val completeEnd = start + ((end - start) / width) * width
     val d = col("t_us") - start
-    val paths = atVersion(events, version)
+    val paths = events
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
       .agg(concat_ws(">", slice(
@@ -2908,12 +2864,11 @@ object TimeSeriesOps {
     * step converted nobody.
     */
   def funnelSteps(events: DataFrame, keyCols: Seq[String], typeCol: String,
-                  stepTypes: Seq[String], start: Long, end: Long, horizonUs: Long,
-                  version: Option[Long] = None): DataFrame = {
+                  stepTypes: Seq[String], start: Long, end: Long, horizonUs: Long): DataFrame = {
     require(stepTypes.size >= 2, s"need at least 2 steps, got $stepTypes")
     require(horizonUs > 0, s"horizon must be positive, got $horizonUs")
     val key = keyCols.map(col)
-    val pts = atVersion(events, version)
+    val pts = events
       .filter(col("t_us") >= start && col("t_us") < end)
     val seed = pts.filter(col(typeCol) === stepTypes.head)
       .groupBy(key: _*).agg(min(col("t_us")).as("t_step"))
@@ -2973,10 +2928,9 @@ object TimeSeriesOps {
     * exchange.
     */
   def peaks(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-            width: Long, k: Int, minPromUs: Long,
-            version: Option[Long] = None): DataFrame = {
+            width: Long, k: Int, minPromUs: Long): DataFrame = {
     val completeEnd = start + ((end - start) / width) * width
-    val sums = atVersion(points, version)
+    val sums = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(streamKey(streamCols) :+ widthBucket(start, width): _*)
       .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
@@ -3037,10 +2991,9 @@ object TimeSeriesOps {
     * sort.
     */
   def changePoints(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                   width: Long, k: Int, minShiftUs: Long,
-                   version: Option[Long] = None): DataFrame = {
+                   width: Long, k: Int, minShiftUs: Long): DataFrame = {
     val completeEnd = start + ((end - start) / width) * width
-    val sums = atVersion(points, version)
+    val sums = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(streamKey(streamCols) :+ widthBucket(start, width): _*)
       .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
@@ -3104,9 +3057,9 @@ object TimeSeriesOps {
     * see only the partial-agg exchange, never a stream-wide sort.
     */
   def savgol(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-             width: Long, version: Option[Long] = None): DataFrame = {
+             width: Long): DataFrame = {
     val completeEnd = start + ((end - start) / width) * width
-    val sums = atVersion(points, version)
+    val sums = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(streamKey(streamCols) :+ widthBucket(start, width): _*)
       .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
@@ -3149,14 +3102,13 @@ object TimeSeriesOps {
     * no second shuffle key.
     */
   def boxplotWindows(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                     width: Long, whisker: Double = 1.5,
-                     version: Option[Long] = None): DataFrame = {
+                     width: Long, whisker: Double = 1.5): DataFrame = {
     require(whisker > 0, s"whisker must be positive, got $whisker")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
     val grp = key :+ col("w_start")
     val joinCols = streamCols :+ "w_start"
-    val base = atVersion(points, version)
+    val base = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .select(key :+ widthBucket(start, width) :+ col("t_us") :+ col("value"): _*)
     val ord = Window.partitionBy(grp: _*).orderBy(col("value"), col("t_us"))
@@ -3203,11 +3155,11 @@ object TimeSeriesOps {
     * order), diagonal excluded.
     */
   def xcorrMatrix(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                  width: Long, topN: Int, version: Option[Long] = None): DataFrame = {
+                  width: Long, topN: Int): DataFrame = {
     require(topN >= 2, s"topN must be >= 2, got $topN")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
-    val means = atVersion(points, version)
+    val means = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
@@ -3218,7 +3170,7 @@ object TimeSeriesOps {
     // ts) with the value column pruned instead of re-deriving the mean
     // arithmetic (Catalyst reuses the means exchange across the two
     // join sides but not across the differently-shaped roster branch)
-    val roster = atVersion(points, version)
+    val roster = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key: _*).agg(count(lit(1)).as("n_points"))
       .orderBy(col("n_points").desc +: key: _*)

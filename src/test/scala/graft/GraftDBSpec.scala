@@ -36,6 +36,13 @@ class GraftDBSpec extends SparkSuite {
     assert(s.rawValues(0, 64).count() == 32)
     assert(s.rawValues(0, 64, version = Some(v1)).count() == 64)
     assert(s.statsGlobal().head().getLong(3) == 32L)
+    // as-of stat reads go through the same pinned handle read: the
+    // later delete hides nothing at v1
+    def counted(df: org.apache.spark.sql.DataFrame) =
+      df.agg(sum("v_count")).head().getLong(0)
+    assert(counted(s.windows(0, 64, 16, version = Some(v1))) == 64L)
+    assert(counted(s.windows(0, 64, 16)) == 32L)
+    assert(s.statsGlobal(Some(v1)).head().getLong(3) == 64L)
     val ch = s.changes(v1, v2, 2).collect()
     assert(ch.length == 1 && ch.head.getLong(0) <= 16 && ch.head.getLong(1) >= 48)
 

@@ -22,12 +22,12 @@ class IngestSpec extends SparkSuite {
     assert(st.version("a") == 1)
   }
 
-  test("version cache assigns correct versions across batches in one query") {
+  test("each micro-batch assigns correct versions across batches in one query") {
     val src = tmpDir("vc_src")
     val st = Store(spark, tmpDir("vc_store"))
     // three files → three micro-batches (maxFilesPerTrigger=1): 'a' in all
     // three (versions 1..3), 'b' only in the first, 'c' first seen in the
-    // second (probed through Store.versionsFor, not a full rescan)
+    // second (every batch reads its uuids' versions through Store.versionsFor)
     Seq(("a", 10L, 1.0), ("b", 10L, 2.0)).toDF("uuid", "time", "value")
       .coalesce(1).write.mode("append").parquet(src)
     Seq(("a", 20L, 3.0), ("c", 10L, 4.0)).toDF("uuid", "time", "value")

@@ -255,6 +255,13 @@ class StoreSpec extends SparkSuite {
     val st = Store(spark, base)
     val (p0, t0) = (st.rawPoints.schema, st.tombstones.schema)
     assert(p0 == Store.PointsSchema && t0 == Store.TombstonesSchema)
+    // the write buffer too: absent, written and drained read one schema
+    val b0 = st.bufferedPoints.schema
+    assert(b0.fieldNames.toSeq == Seq("uuid", "time", "value"))
+    st.insertBuffered("c", Seq((5L, 2.0)).toDF("time", "value"))
+    assert(st.bufferedPoints.schema == b0, st.bufferedPoints.schema.simpleString)
+    st.flush("c")
+    assert(st.bufferedPoints.schema == b0, st.bufferedPoints.schema.simpleString)
     st.insertBatch(Seq(("a", 1L, 1.0)).toDF("uuid", "time", "value"))
     st.deleteRange("a", 0L, 1L)
     assert(st.rawPoints.schema == p0, st.rawPoints.schema.simpleString)
@@ -290,9 +297,11 @@ class StoreSpec extends SparkSuite {
     val st = mkStore
     st.insert("a", (0L until 10L).map(t => (t, t.toDouble)).toDF("time", "value")) // v1
     st.insert("b", Seq((0L, 7.0)).toDF("time", "value")) // b@v1
+    st.insert("c", Seq((4L, 4.0)).toDF("time", "value")) // c@v1
     val snapDir = tmpDir("inc_base")
     st.snapshot(snapDir, Some(1L))
     st.deleteRange("a", 0L, 3L)                                   // a@v2: pure delete
+    st.obliterate("c")                                            // c@v2: full range
     st.insert("a", Seq((20L, 20.0), (21L, 21.0)).toDF("time", "value")) // a@v3
     st.insert("b", Seq((5L, 5.0)).toDF("time", "value"))          // b@v2
     val expDir = tmpDir("inc_delta")
@@ -313,6 +322,13 @@ class StoreSpec extends SparkSuite {
     // the pure delete arrived as a manifest range with no rows under it
     assert(ranges.filter(col("uuid") === "a" && col("c_start") === 0L).count() > 0)
     assert(delta.filter(col("uuid") === "a" && col("time") < 3L).count() == 0)
+    // the manifest and the per-stream version diff are one answer,
+    // including the obliterate's saturated full-range tombstone
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("c_start", "c_end").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    for (u <- Seq("a", "b", "c"))
+      assert(pairs(ranges.filter(col("uuid") === u)) == pairs(st.changes(u, 1L, 3L, 1)), u)
+    assert(pairs(st.changes("c", 1L, 3L, 1)) == Seq((Long.MinValue, Long.MaxValue)))
   }
 
   test("snapshot exports the pinned visible view; later deletes don't reach it") {

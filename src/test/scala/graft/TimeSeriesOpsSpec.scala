@@ -330,7 +330,7 @@ class TimeSeriesOpsSpec extends SparkSuite {
     // toVer restricted to non-empty windows
     val full = TimeSeriesOps.windowsDelta(p, Seq("uuid"), 0L, 5L, 0L, 30L, 10L)
       .orderBy("w_start").collect().toSeq
-    val ref = TimeSeriesOps.windows(p, Seq("uuid"), 0L, 30L, 10L, version = Some(5L))
+    val ref = TimeSeriesOps.windows(p.filter(col("ver") <= 5L), Seq("uuid"), 0L, 30L, 10L)
       .orderBy("w_start").collect().toSeq
     assert(full == ref, s"$full vs $ref")
   }

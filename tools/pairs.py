@@ -15,8 +15,12 @@ and quartiles, the parent's IQR (q3 - q1), the change's wins / ties /
 losses over the pairs, and whether a gain claim holds: at least nine
 tenths of the pairs won, ties counting for neither, and the medians
 differing by more than the parent's IQR in the better direction. It also
-prints the median relative change against the metric's bound, and each
-side's failed-op share and incorrect runs.
+prints the median relative change against the metric's bound, a
+no-regression verdict, and each side's failed-op share and incorrect runs.
+The verdict is `worse` when the change's median is worse than the
+parent's by more than the bound; otherwise `unresolved` when the parent's
+IQR is wider than bound x parent median and not every change run beats
+every parent run; otherwise `ok`.
 
 Every run lasts BENCHMARK.json's run_seconds. Nothing is written into the
 repository apart from the benchmark's own gitignored build directory.
@@ -78,9 +82,9 @@ def report(metrics, runs):
             side, len(done), bad, fail, att, fail / att if att else 0.0))
     if not pairs:
         return
-    print("%-16s %22s %22s %9s %9s %8s %7s %s" % (
+    print("%-16s %22s %22s %9s %9s %8s %7s %-5s %s" % (
         "metric", "parent med [q1, q3]", "change med [q1, q3]", "par IQR",
-        "W/T/L", "change", "bound", "claim"))
+        "W/T/L", "change", "bound", "claim", "verdict"))
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         par = [p["metrics"][name]["value"] for p, _ in pairs]
@@ -93,10 +97,18 @@ def report(metrics, runs):
         # a pair with a failed side counts as run but not won
         claim = wins >= 0.9 * len(runs) and gain > p3 - p1
         rel = (cm - pm) / pm if pm else 0.0
-        print("%-16s %22s %22s %9.4g %9s %+7.1f%% %7.2f %s" % (
+        bound = m.get("bound", 0.0)
+        beats_all = max(chg) < min(par) if lower else min(chg) > max(par)
+        if (rel if lower else -rel) > bound:
+            verdict = "worse"
+        elif p3 - p1 > bound * abs(pm) and not beats_all:
+            verdict = "unresolved"
+        else:
+            verdict = "ok"
+        print("%-16s %22s %22s %9.4g %9s %+7.1f%% %7.2f %-5s %s" % (
             name, "%.4g [%.4g, %.4g]" % (pm, p1, p3), "%.4g [%.4g, %.4g]" % (cm, c1, c3),
             p3 - p1, "%d/%d/%d" % (wins, ties, len(pairs) - wins - ties), 100 * rel,
-            m.get("bound", 0.0), "holds" if claim else "no"))
+            bound, "holds" if claim else "no", verdict))
 
 
 def main():
