@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Installs the optimizer rule and registers graft's custom expressions as
   * SQL functions, so `spark.sql` users get the same codegen'd primitives
   * as the Column API:
-  *   fvec_dot(a, b), minhash_sig(norm, n, k), simhash_sig(norm),
-  *   hashed_shingles(norm, n), sorted_intersect_count(a, b)
+  *   fvec_dot(a, b), dtw_distance(qa, ca), minhash_sig(norm, n, k),
+  *   simhash_sig(norm), hashed_shingles(norm, n), sorted_intersect_count(a, b)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -90,6 +90,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(fn("fvec_dot",
       "fvec_dot(a, b) - double dot product of two float/double arrays") {
       case Seq(a, b) => FloatVectorDot(a, b)
+    })
+    ext.injectFunction(fn("dtw_distance",
+      "dtw_distance(qa, ca) - exact DTW distance of two bigint arrays (null if either is empty)") {
+      case Seq(q, c) => DtwDistance(q, c)
     })
     ext.injectFunction(fn("minhash_sig",
       "minhash_sig(norm, n, k) - k-function MinHash over word n-gram shingles") {

@@ -358,9 +358,8 @@ object Downsample {
           .otherwise(lit("d")))
     scored.groupBy(key: _*)
       .agg(count(lit(1)).as("n_buckets"),
-        concat_ws("", transform(
-          array_sort(collect_list(struct(col("w_start"), col("sym")))),
-          x => x.getField("sym"))).as("word"))
+        concat_ws("", sort_array(collect_list(struct(col("w_start"), col("sym"))))
+          .getField("sym")).as("word"))
   }
 
   /** Subsequence motif discovery over the SAX symbol stream (Lin, Keogh
@@ -438,15 +437,16 @@ object Downsample {
     * time-ordered PAA profile (the sax() bucket means — rounded integer
     * micro-units), so the DP runs over GRID-BOUNDED arrays (≤
     * (end−start)/width entries), never raw points: per candidate the
-    * cost is O(len² ) on metadata-scale rows, and candidates never join
-    * each other — the one query profile broadcasts onto the fleet (the
+    * codegen'd `plans.DtwDistance` kernel costs O(n·m) time and O(m)
+    * memory on metadata-scale rows, and candidates never join each
+    * other — the one query profile broadcasts onto the fleet (the
     * similarStreams shape) and the top-k is a TakeOrdered.
     *
     * Determinism contract: profile entries are exact integers, the cell
     * cost |qᵢ−cⱼ| and every min/plus along the warping path stay in
     * exact long arithmetic, so the distance — and the top-k cut under
     * the (dtw, stream-key) total order — is bit-identical across
-    * engines. The DuckDB oracle cannot express the row-sequential fold,
+    * engines. The DuckDB oracle cannot express the row-sequential DP,
     * so it replays the SAME recurrence in its min-plus-scan form
     * (dp[i][j] = S[j] + min_{k≤j}(min(prev[k], prev[k−1]) − S[k−1]),
     * S = the row's cost prefix sum — an exact algebraic identity, proved
@@ -454,8 +454,9 @@ object Downsample {
     * recursive CTE that carries each row as a LIST.
     *
     * Streams with no in-range points have no profile and do not rank; an
-    * absent query stream yields an empty result. The DP accumulator is
-    * bounded by max|cost|·(n+m) ≪ 2⁶³ for any real window count.
+    * absent query stream yields an empty result. A cost or path sum
+    * past 2⁶³ − 1 µ-units is not clamped or wrapped: it raises
+    * `ARITHMETIC_OVERFLOW` (two streams at values ±9e12 already do).
     */
   def dtwSimilar(points: DataFrame, streamCols: Seq[String], queryPred: Column,
                  start: Long, end: Long, width: Long, k: Int): DataFrame = {
@@ -471,31 +472,13 @@ object Downsample {
       .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
         .cast("long").as("m_us"))
       .groupBy(key: _*)
-      .agg(transform(array_sort(collect_list(struct(col("w_start"), col("m_us")))),
-        x => x.getField("m_us")).as("pa"))
+      .agg(sort_array(collect_list(struct(col("w_start"), col("m_us"))))
+        .getField("m_us").as("pa"))
     val qProfile = broadcast(profiles.filter(queryPred).select(col("pa").as("qa")))
-    // the classic O(n·m) fold: outer over q[2..], inner over the
-    // candidate, row boundary dp[i][1] = cost + prev[1], interior
-    // dp[i][j] = cost + least(prev[j], prev[j−1], new[j−1]); row 1 is
-    // the cost prefix sum (all ∞ boundaries eliminated by case analysis)
-    val dtwUs = expr(
-      """aggregate(
-        |  slice(qa, 2, size(qa) - 1),
-        |  aggregate(ca, cast(array() as array<bigint>),
-        |    (acc, cj) -> acc || array(CASE WHEN size(acc) = 0
-        |        THEN abs(element_at(qa, 1) - cj)
-        |        ELSE element_at(acc, size(acc)) + abs(element_at(qa, 1) - cj) END)),
-        |  (prev, qi) -> aggregate(ca, cast(array() as array<bigint>),
-        |    (acc, cj) -> acc || array(abs(qi - cj) +
-        |      CASE WHEN size(acc) = 0 THEN element_at(prev, 1)
-        |           ELSE least(element_at(prev, size(acc) + 1),
-        |                      element_at(prev, size(acc)),
-        |                      element_at(acc, size(acc))) END)),
-        |  dpr -> element_at(dpr, size(ca)))""".stripMargin)
     val scored = profiles.filter(!queryPred)
       .withColumnRenamed("pa", "ca")
       .crossJoin(qProfile)
-      .withColumn("dtw_us", dtwUs)
+      .withColumn("dtw_us", graft.plans.DtwDistance.dtw(col("qa"), col("ca")))
       .select(key ++ Seq(size(col("ca")).cast("long").as("n_buckets"),
         (col("dtw_us").cast("double") / 1e6 + lit(0d)).as("dtw")): _*)
     val ord = col("dtw").asc +: key.map(_.asc)

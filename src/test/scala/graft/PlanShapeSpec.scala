@@ -495,6 +495,10 @@ class PlanShapeSpec extends SparkSuite {
     assert(!dtwPlan.contains("CartesianProduct"), s"ts_dtw:\n${dtwPlan.take(3000)}")
     assert(dtwPlan.contains("TakeOrdered"),
       s"ts_dtw top-k not TakeOrdered:\n${dtwPlan.take(3000)}")
+    // the DP is the codegen'd kernel and the profiles are assembled
+    // without lambdas: no interpreted higher-order function is left
+    assert(dtwPlan.contains("dtw_distance") && !dtwPlan.contains("lambdafunction"),
+      s"ts_dtw not on the dtw_distance kernel:\n${dtwPlan.take(3000)}")
   }
 
   test("continuation-wave ts ops: pushed bounds, no cartesians") {

@@ -257,8 +257,8 @@ class RewriteEquivalenceSpec extends SparkSuite {
 
   test("dtw fold equals a brute-force DP on random profiles of mixed length") {
     // one point per bucket and ≤2dp values keep the PAA means exact, so
-    // the nested aggregate-HOF fold must reproduce a plain O(n·m) Scala
-    // DP in exact integers — including length-1 profiles (no outer fold
+    // the dtw_distance kernel must reproduce a plain O(n·m) Scala DP in
+    // exact integers — including length-1 profiles (no outer fold
     // iterations) and candidate arrays longer and shorter than the query
     def dtwRef(a: Seq[Long], b: Seq[Long]): Long = {
       val inf = Long.MaxValue / 4
@@ -289,6 +289,104 @@ class RewriteEquivalenceSpec extends SparkSuite {
         u -> dtwRef(qa, vs.map(v => math.round(v * 1e6))) / 1e6
       }.toMap
       assert(got == ref, s"seed $seed: $got vs $ref")
+    }
+  }
+
+  /** The interpreted fold dtwSimilar ran before the dtw_distance kernel,
+    * kept verbatim as the kernel's reference: outer over q[2..], inner
+    * over the candidate, copying its accumulator at every cell. */
+  private val DtwFold =
+    """aggregate(
+      |  slice(qa, 2, size(qa) - 1),
+      |  aggregate(ca, cast(array() as array<bigint>),
+      |    (acc, cj) -> acc || array(CASE WHEN size(acc) = 0
+      |        THEN abs(element_at(qa, 1) - cj)
+      |        ELSE element_at(acc, size(acc)) + abs(element_at(qa, 1) - cj) END)),
+      |  (prev, qi) -> aggregate(ca, cast(array() as array<bigint>),
+      |    (acc, cj) -> acc || array(abs(qi - cj) +
+      |      CASE WHEN size(acc) = 0 THEN element_at(prev, 1)
+      |           ELSE least(element_at(prev, size(acc) + 1),
+      |                      element_at(prev, size(acc)),
+      |                      element_at(acc, size(acc))) END)),
+      |  dpr -> element_at(dpr, size(ca)))""".stripMargin
+
+  /** body once with every projection code-generated (whole-stage on) and
+    * once with every expression interpreted (whole-stage off). */
+  private def inCodegenModes(body: String => Unit): Unit =
+    for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try body(mode)
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+
+  // an RDD-backed frame: a local relation would have its projections
+  // folded (interpreted) by the optimizer before either mode applies
+  private def profilePairs(rows: Seq[(Int, Seq[Option[Long]], Seq[Option[Long]])]) =
+    spark.sparkContext.parallelize(rows, 4).toDF("id", "qa", "ca")
+
+  private def overflows(t: Throwable): Boolean =
+    t != null && (t match {
+      case a: ArithmeticException with org.apache.spark.SparkThrowable
+        if a.getCondition == "ARITHMETIC_OVERFLOW" => true
+      case _ => overflows(t.getCause)
+    })
+
+  test("dtw_distance equals the interpreted fold on random profiles with nulls") {
+    val rnd = new scala.util.Random(2026L)
+    def profile() = Seq.fill(rnd.nextInt(14) + 1)(
+      if (rnd.nextInt(100) < 8) None else Some((rnd.nextInt(2000) - 1000) * 1000003L))
+    val pairs = profilePairs((0 until 300).map(i => (i, profile(), profile())))
+    inCodegenModes { mode =>
+      val rows = pairs.select(col("id"), expr(DtwFold).as("fold"),
+        graft.plans.DtwDistance.dtw(col("qa"), col("ca")).as("kernel")).collect()
+      assert(rows.length == 300)
+      val diff = rows.filter(r => Option(r.get(1)) != Option(r.get(2)))
+      assert(diff.isEmpty, s"$mode: ${diff.take(5).mkString(", ")}")
+      // the null rules are exercised, not just the arithmetic
+      val nulls = rows.count(_.isNullAt(1))
+      assert(nulls > 0 && nulls < 300, s"$mode: $nulls null results")
+    }
+  }
+
+  test("dtw_distance raises and skips overflow exactly where the fold does") {
+    val big = Long.MaxValue / 2 + 1
+    // each pair on its own: a raise fails the whole query
+    val raising = Seq(
+      Seq(Some(big)) -> Seq(Some(-big)),                // |q − c| overflows
+      Seq(Some(Long.MinValue)) -> Seq(Some(0L)),        // abs(MinValue)
+      Seq(Some(big - 1)) -> Seq(Some(0L), Some(-big + 1)), // row-1 sum
+      Seq(Some(0L), Some(-big + 1)) -> Seq(Some(big - 1))) // interior sum
+    val quiet = Seq(
+      // row 1 is null from c₁ on, so |0 − MinValue| is never computed
+      Seq(Some(0L)) -> Seq(None, Some(Long.MinValue)),
+      Seq(Some(1L), None) -> Seq(None, Some(Long.MinValue)))
+    inCodegenModes { mode =>
+      for ((q, c) <- raising; e <- Seq(expr(DtwFold),
+          graft.plans.DtwDistance.dtw(col("qa"), col("ca")))) {
+        val ex = intercept[Exception](profilePairs(Seq((0, q, c))).select(e).collect())
+        assert(overflows(ex), s"$mode $q $c: $ex")
+      }
+      for ((q, c) <- quiet) {
+        val r = profilePairs(Seq((0, q, c))).select(expr(DtwFold),
+          graft.plans.DtwDistance.dtw(col("qa"), col("ca"))).head()
+        assert(Option(r.get(0)) == Option(r.get(1)), s"$mode $q $c: $r")
+      }
+    }
+  }
+
+  test("dtwSimilar raises ARITHMETIC_OVERFLOW past the exact long range") {
+    // the µ-unit profiles of two streams at ±9e12 are ±9e18: their cost
+    // |q − c| is past 2⁶³ − 1, and the distance must not wrap
+    val pts = Seq(("q", 1L, 9e12), ("q", 11L, 9e12), ("c", 1L, -9e12), ("c", 11L, -9e12))
+      .toDF("uuid", "t_us", "value")
+    inCodegenModes { mode =>
+      val ex = intercept[Exception](graft.ts.Downsample
+        .dtwSimilar(pts, Seq("uuid"), col("uuid") === "q", 0L, 20L, 10L, 5).collect())
+      assert(overflows(ex), s"$mode: $ex")
     }
   }
 

@@ -12,6 +12,29 @@ class SqlFunctionsSpec extends SparkSuite {
     assert(r == 1.5 * 3 + 2 * 4)
   }
 
+  test("dtw_distance in SQL equals the Column-API value; null or empty gives null") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val profiles = Seq(
+      (Seq(1L, 5L, 2L, 8L), Seq(0L, 6L, 6L, 1L, 9L)),
+      (Seq(3L), Seq(-4L, 2L)),
+      (Seq(7L, 7L, 7L), Seq(7L)))
+    val df = profiles.toDF("qa", "ca")
+    df.createOrReplaceTempView("dtw_profiles")
+    val viaSql = spark.sql("SELECT dtw_distance(qa, ca) FROM dtw_profiles")
+      .collect().map(_.getLong(0)).toSeq
+    val viaCol = df.select(graft.plans.DtwDistance.dtw(col("qa"), col("ca")))
+      .collect().map(_.getLong(0)).toSeq
+    assert(viaSql == viaCol)
+    assert(viaSql == Seq(5L, 8L, 0L)) // |1−0|+|5−6|+|5−6|+|2−1|+|8−9|; 7+1; 0
+    val nulls = spark.sql(
+      """SELECT dtw_distance(CAST(NULL AS array<bigint>), array(1L)) IS NULL,
+        |       dtw_distance(array(1L), CAST(array() AS array<bigint>)) IS NULL,
+        |       dtw_distance(CAST(array() AS array<bigint>), array(1L)) IS NULL
+        |""".stripMargin).head()
+    assert((0 until 3).forall(nulls.getBoolean), nulls)
+  }
+
   test("minhash_sig / hashed_shingles / sorted_intersect_count compose in SQL") {
     val row = spark.sql(
       """SELECT size(minhash_sig('a b c d e', 3, 16)) AS k,
