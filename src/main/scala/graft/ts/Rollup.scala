@@ -22,6 +22,17 @@ import org.apache.spark.sql.functions._
   * Incremental maintenance: level 0 is a groupBy over the new batch only
   * (merged by bucket on read or by periodic compaction) — see
   * graft.streaming.Ingest for the streaming path.
+  *
+  * The quantile family (TimeSeriesOps.boxplotWindows, percentileWindows)
+  * never serves from a level, at any width or alignment: order
+  * statistics do not re-aggregate from (min, sum, max, count) — two
+  * buckets with identical statpoints can hold different medians — so
+  * those operators always read raw points rather than a silently-wrong
+  * moment-based approximation. Serving them would take a mergeable
+  * sketch column (t-digest/KLL) added at build time, a different storage
+  * contract than the reference's statpoint node (qtree.go's
+  * min/mean/max/count), kept out so the rollup stays bit-exact for
+  * everything it serves.
   */
 class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int]) {
   require(pointwidths == pointwidths.sorted, "pointwidths must ascend")
@@ -390,7 +401,8 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
   }
 
   /** Multi-window SLO burn rate served from the hierarchy — with a
-    * boundary argument unlike the quantile family's impossibility:
+    * boundary argument unlike the quantile family's impossibility (see
+    * the class doc):
     * n_bad is a PREDICATE aggregate, and no fixed set of per-bucket
     * moments can answer an ARBITRARY query-time predicate (min/max can
     * only prove a bucket wholly good or wholly bad, not count a mixed
@@ -437,33 +449,6 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
       }.reduce(_.unionByName(_))
     }
   }
-
-  /** The quantile family — boxplot quartiles, percentileWindows' type-7
-    * quantiles — is where the qtree promise STOPS, and this pair of
-    * methods makes that boundary executable instead of a survey
-    * footnote. A rollup level stores (min, sum, max, count) per bucket;
-    * order statistics do NOT re-aggregate from those moments — two
-    * buckets with identical statpoints can hold different medians — so
-    * there is no "usable level" for this family at ANY width/alignment:
-    * these always read raw points, exactly and deliberately, rather
-    * than serve a silently-wrong moment-based approximation. What the
-    * hierarchy CAN serve is windows()/alignedWindows (min/mean/max/
-    * count), the window-MEAN detector family (peaks/savgol/
-    * changePoints — means re-aggregate exactly), and windowsApprox's
-    * whole-bucket depth forms. Serving quantiles from a hierarchy would
-    * require a mergeable sketch column (t-digest/KLL) added at build
-    * time — a different storage contract than the reference's statpoint
-    * node (qtree.go's min/mean/max/count), kept out so the rollup stays
-    * bit-exact for everything it claims.
-    */
-  def boxplot(raw: => DataFrame, streamCols: Seq[String], start: Long,
-              end: Long, width: Long, whisker: Double = 1.5): DataFrame =
-    TimeSeriesOps.boxplotWindows(raw, streamCols, start, end, width, whisker)
-
-  /** See boxplot: quantiles never rollup-serve; always the raw path. */
-  def percentile(raw: => DataFrame, streamCols: Seq[String], start: Long,
-                 end: Long, width: Long, ps: Seq[Double]): DataFrame =
-    TimeSeriesOps.percentileWindows(raw, streamCols, start, end, width, ps)
 
   /** Serve depth-approximate Windows (TimeSeriesOps.windowsApprox — the
     * WindowsParams.depth semantics) from the coarsest level ≤ depth: merge

@@ -27,8 +27,11 @@ import org.apache.spark.sql.functions._
   *
   * Operators are version-agnostic: each transforms exactly the frame it
   * is given. As-of reads pin the data before it gets here — through
-  * Store.pointsAt(asOf), which also applies tombstones, or the GraftDB
-  * handle's `version` argument.
+  * Store.pointsAt(asOf), which also applies tombstones, or GraftDB's
+  * canonical frames: `db.points(asOf)` for the fleet, a handle's
+  * `points(version)` for one stream. GraftDB has no per-operator
+  * methods; `TimeSeriesOps.ewma(h.points(v), Seq("uuid"), ...)` is the
+  * one-stream call.
   */
 object TimeSeriesOps {
 

@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.text.{TextFunctions => TF}
+import graft.sim.Vectors
+import graft.text.{Dedup, TextFunctions => TF}
 
-/** The Corpus/Embeddings facades and the fused-shard drift guard. */
+/** The training-data operator stacks over the real tables, and the
+  * fused-shard drift guard.
+  */
 class CorpusSpec extends SparkSuite {
 
   test("phrases scores the word2vec discounted lift from exact counts") {
@@ -53,7 +56,7 @@ class CorpusSpec extends SparkSuite {
           .filter(col("lang_pred") === "en" && col("keep")),
         "source", 3000L)
       .orderBy("doc_id").collect()
-    val fused = Corpus(docs).shard(0.5, 3000L).orderBy("doc_id").collect()
+    val fused = TF.corpusShard(docs, 0.5, 3000L).orderBy("doc_id").collect()
     assert(composed.length == fused.length && composed.nonEmpty)
     composed.zip(fused).foreach { case (c, f) => assert(c == f) }
   }
@@ -195,33 +198,41 @@ class CorpusSpec extends SparkSuite {
     assert(r.toSeq == Seq(("val", 2L, 1L, 0.5)))
   }
 
-  test("facades expose the stacks over the real tables") {
-    val c = Corpus(Tables.load(spark, sfDir, "documents"))
-    assert(c.quality().count() == c.docs.count())
-    assert(c.dedupExact().count() == c.docs.count())
-    val pairs = c.minhashPairs()
-    assert(c.clusters(pairs).count() == c.docs.count())
-    assert(c.shard().count() > 0)
-    assert(c.shardNear().count() > 0)
-    assert(c.tokenPack("source", 512L).count() == c.docs.count())
-    assert(c.tokenMixture("source", 10000L).count() > 0)
-    assert(c.split(0.2, 0.1).count() == c.docs.count())
-    assert(c.splitClustered(0.2, 0.1).count() == c.docs.count())
-    assert(c.verdict().count() == c.docs.count())
-    assert(c.funnel().count() > 0)
-    assert(c.temperature("source", 10000L).count() > 0)
-    assert(c.repProfile().count() == c.docs.count())
-    val e = Embeddings(Tables.load(spark, sfDir, "embeddings"))
-    assert(e.norms().count() == e.emb.count())
-    assert(e.centroidSim().count() == e.emb.count())
-    assert(e.outliers().count() < e.emb.count())
-    assert(e.clusters(0.4).count() == e.emb.count())
-    assert(e.annTopK(5, 10).count() == 50)
-    assert(e.recallIvfPq(5, 10).count() == 1)
-    assert(e.probeCurve(5, 10).count() == 5)
-    assert(e.rerankCurve(5, 10).count() == 4)
-    assert(e.pqBalance().count() == 128)
-    assert(e.knnPurity(0.4, 3).count() > 0)
+  test("operators expose the stacks over the real tables") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val nDocs = docs.count()
+    assert(TF.quality(docs).count() == nDocs)
+    assert(Dedup.exact(docs).count() == nDocs)
+    val pairs = Dedup.minhashPairs(docs)
+    assert(Dedup.clusters(docs, pairs).count() == nDocs)
+    assert(TF.corpusShard(docs).count() > 0)
+    assert(TF.corpusShardNear(docs, Dedup.minhashPairs(docs, 3, tau = 0.8)).count() > 0)
+    assert(TF.tokenPack(docs, "source", 512L).count() == nDocs)
+    assert(TF.tokenMixture(docs, "source", 10000L).count() > 0)
+    assert(TF.sampleSplit(docs, 0.2, 0.1).count() == nDocs)
+    assert(TF.sampleSplitClustered(docs, 0.2, 0.1).count() == nDocs)
+    assert(TF.corpusVerdict(docs).count() == nDocs)
+    assert(TF.corpusFunnel(docs).count() > 0)
+    assert(TF.temperatureMixture(docs, "source", 10000L).count() > 0)
+    assert(TF.repProfile(docs).count() == nDocs)
+    val emb = Tables.load(spark, sfDir, "embeddings")
+    val nVecs = emb.count()
+    assert(Vectors.norms(emb).count() == nVecs)
+    assert(Vectors.centroidSim(emb).count() == nVecs)
+    assert(Vectors.outliers(emb, 2.0).count() < nVecs)
+    // semantic-dedup clusters: Dedup.clusters over the cosine pair graph,
+    // vec_id renamed to doc_id and back (emb_clusters' composition)
+    val embClusters = Dedup.clusters(
+        emb.select(col("vec_id").as("doc_id")),
+        Vectors.cosinePairs(emb, 0.4).select(col("id_a"), col("id_b")))
+      .select(col("doc_id").as("vec_id"), col("cluster_id"))
+    assert(embClusters.count() == nVecs)
+    assert(Vectors.annTopK(emb, 5, 10).count() == 50)
+    assert(Vectors.annRecallIvfPq(emb, 5, 10).count() == 1)
+    assert(Vectors.ivfProbeCurve(emb, 5, 10).count() == 5)
+    assert(Vectors.pqRerankCurve(emb, 5, 10).count() == 4)
+    assert(Vectors.pqBalance(emb).count() == 128)
+    assert(Vectors.knnPurity(emb, 0.4, 3).count() > 0)
   }
 
   test("split assignment is stable under corpus growth and partitions everything") {

@@ -370,31 +370,6 @@ class RollupSpec extends SparkSuite {
     assert(ru.windows(pts, STREAM, start, end, w).count() == winRaw.length)
   }
 
-  test("quantile family always serves from raw — the rollup boundary is explicit") {
-    // a width/alignment that windows() WOULD happily level-serve: the
-    // quantile methods must still read raw points, because order
-    // statistics don't re-aggregate from (min, sum, max, count)
-    val pts = Tables.points(spark, sfDir).cache()
-    val depth = 24
-    val start = (T0 >> depth) << depth
-    val w = 5120L << depth
-    val end = start + 28 * w
-    val ru = Rollup(spark, tmpDir("rollup_q"), Seq(24, 30))
-    ru.build(pts, STREAM)
-    val bxRaw = TimeSeriesOps.boxplotWindows(pts, STREAM, start, end, w)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    val bxServed = ru.boxplot(pts, STREAM, start, end, w)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    assert(bxRaw.length == bxServed.length && bxRaw.nonEmpty)
-    bxRaw.zip(bxServed).foreach { case (d, r) => assert(d == r) }
-    val pcRaw = TimeSeriesOps.percentileWindows(pts, STREAM, start, end, w, Seq(0.5, 0.9))
-      .orderBy("user_id", "event_type", "w_start").collect()
-    val pcServed = ru.percentile(pts, STREAM, start, end, w, Seq(0.5, 0.9))
-      .orderBy("user_id", "event_type", "w_start").collect()
-    assert(pcRaw.length == pcServed.length && pcRaw.nonEmpty)
-    pcRaw.zip(pcServed).foreach { case (d, r) => assert(d == r) }
-  }
-
   test("queries below the finest level fall back to raw") {
     val pts = Tables.points(spark, sfDir)
     val ru = Rollup(spark, tmpDir("rollup"), Seq(30))

@@ -20,7 +20,8 @@ no-regression verdict, and each side's failed-op share and incorrect runs.
 The verdict is `worse` when the change's median is worse than the
 parent's by more than the bound; otherwise `unresolved` when the parent's
 IQR is wider than bound x parent median and not every change run beats
-every parent run; otherwise `ok`.
+every parent run; otherwise `ok`. After the table it prints each side's
+value of every metric run by run, in pair order.
 
 Every run lasts BENCHMARK.json's run_seconds. Nothing is written into the
 repository apart from the benchmark's own gitignored build directory.
@@ -109,6 +110,14 @@ def report(metrics, runs):
             name, "%.4g [%.4g, %.4g]" % (pm, p1, p3), "%.4g [%.4g, %.4g]" % (cm, c1, c3),
             p3 - p1, "%d/%d/%d" % (wins, ties, len(pairs) - wins - ties), 100 * rel,
             bound, "holds" if claim else "no", verdict))
+    # the runs behind each median, so one slow run that leaves a verdict
+    # `unresolved` shows without re-running; "-" marks a failed run
+    print("per-run values, pair order:")
+    for m in metrics:
+        for side, i in (("parent", 0), ("change", 1)):
+            print("%-16s %-6s %s" % (m["name"], side, " ".join(
+                "%.4g" % r[i]["metrics"][m["name"]]["value"] if r[i] is not None else "-"
+                for r in runs)))
 
 
 def main():
