@@ -287,7 +287,7 @@ private[graft] object TsQueries {
     QuerySpec("ts_csv_export_raw", (s, dir) =>
       TS.csvExportRaw(
           Tables.points(s, dir).filter(col("event_type") === "click"),
-          Seq(1, 2, 3).map(u => (s"u$u", col("user_id") === u, None: Option[Long])),
+          Seq(1, 2, 3).map(u => (s"u$u", col("user_id") === u)),
           T0, T29)
         .orderBy(col("t_us")),
       Some(s"""WITH pts AS ($PTS_SQL)
@@ -305,7 +305,7 @@ private[graft] object TsQueries {
     QuerySpec("ts_csv_export_raw_exact", (s, dir) =>
       TS.csvExportRawExact(
           Tables.points(s, dir).filter(col("event_type") === "click"),
-          Seq(1, 2, 3).map(u => (s"u$u", col("user_id") === u, None: Option[Long])),
+          Seq(1, 2, 3).map(u => (s"u$u", col("user_id") === u)),
           T0, T29)
         .orderBy(col("t_us"), col("seq")),
       // mirrors TimeSeriesOps.csvExportRawExact: per-(stream, t_us)
@@ -326,11 +326,11 @@ private[graft] object TsQueries {
 
     // GenerateCSV with per-stream version pinning (csv.go:30-43 `ver`)
     QuerySpec("ts_csv_export_ver", (s, dir) =>
-      TS.csvExportStat(
+      TS.csvExport(
           Tables.points(s, dir).filter(col("event_type") === "click"),
-          Seq(("u1", col("user_id") === 1, None: Option[Long]),
-              ("u2", col("user_id") === 2, Some(500L): Option[Long]),
-              ("u3", col("user_id") === 3, Some(800L): Option[Long])),
+          Seq(("u1", col("user_id") === 1),
+              ("u2", col("user_id") === 2 && col("ver") <= 500L),
+              ("u3", col("user_id") === 3 && col("ver") <= 800L)),
           T0, T29, DAY)
         .orderBy(col("w_start")),
       Some(s"""WITH pts AS ($PTS_SQL)
@@ -2544,7 +2544,7 @@ private[graft] object TsQueries {
 
   /** The four GenerateCSV stat columns for one stream (csv.go:75-104):
     * min/mean/max/count under `cond`, count null (not 0) when the stream
-    * is silent in the window — mirrors TimeSeriesOps.csvExportStat.
+    * is silent in the window — mirrors TimeSeriesOps.csvExport.
     */
   private def CSV_STAT_SQL(label: String, cond: String): String = {
     val cnt = s"count(CASE WHEN $cond THEN 1 END)"

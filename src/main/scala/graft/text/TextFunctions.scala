@@ -80,8 +80,9 @@ object TextFunctions {
         sum(length(col("norm")).cast("long")).as("chars"))
       .select(col("lang"), col("source"), col("n_docs"),
         col("bpe").as("n_tokens"),
-        // ×10⁶ in DECIMAL: a long product wraps at ~9.2e12 group tokens
-        // (the Quant unbounded-group rule; DuckDB's sum is HUGEINT)
+        // ×10⁶ in DECIMAL: a long product overflows past ~9.2e12 group
+        // tokens and, under ANSI mode, throws ARITHMETIC_OVERFLOW (the
+        // Quant unbounded-group rule; DuckDB's sum is HUGEINT)
         graft.Quant.mean6(col("bpe").cast("decimal(38,0)") * 1000000,
           col("ws")).as("tokens_per_word"),
         graft.Quant.mean6(col("chars").cast("decimal(38,0)") * 1000000,

@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * a query at pointWidth p reads tree nodes, never raw points.
   *
   * Here the same precomputation is N materialized aggregate tables at
-  * increasing pointwidths. Each level stores SUM (not mean) so it is
-  * exactly re-aggregable from the previous level: min/max/count/sum all
-  * merge associatively. A query at pointWidth p is served from the
+  * increasing pointwidths. Every level stores exactly the statpoint
+  * `(keys…, w_start, v_min, v_max, v_sum_us, v_count)` — SUM (not mean) so
+  * it is exactly re-aggregable from the previous level: min/max/count/sum
+  * all merge associatively. A query at pointWidth p is served from the
   * coarsest level ≤ p, re-aggregating 2^(p−l) buckets per window — at
   * 100 TB a year of ns data at level 32 is ~7 k rows per stream, so stat
   * queries never touch the raw fact table.
@@ -23,130 +24,75 @@ import org.apache.spark.sql.functions._
   * (merged by bucket on read or by periodic compaction) — see
   * graft.streaming.Ingest for the streaming path.
   *
-  * The quantile family (TimeSeriesOps.boxplotWindows, percentileWindows)
-  * never serves from a level, at any width or alignment: order
-  * statistics do not re-aggregate from (min, sum, max, count) — two
-  * buckets with identical statpoints can hold different medians — so
-  * those operators always read raw points rather than a silently-wrong
-  * moment-based approximation. Serving them would take a mergeable
-  * sketch column (t-digest/KLL) added at build time, a different storage
-  * contract than the reference's statpoint node (qtree.go's
-  * min/mean/max/count), kept out so the rollup stays bit-exact for
-  * everything it serves.
+  * A level serves BTrDB's three stat reads and nothing else:
+  * alignedWindows (with its invalidation ranges), windows and
+  * windowsApprox. Every other operator reads raw points. The quantile
+  * family (TimeSeriesOps.boxplotWindows, percentileWindows) never serves
+  * from a level, at any width or alignment: order statistics do not
+  * re-aggregate from (min, sum, max, count) — two buckets with identical
+  * statpoints can hold different medians — so those operators always
+  * read raw points rather than a silently-wrong moment-based
+  * approximation. Serving them would take a mergeable sketch column
+  * (t-digest/KLL) added at build time, a different storage contract than
+  * the reference's statpoint node (qtree.go's min/mean/max/count), kept
+  * out so the rollup stays bit-exact for everything it serves. The
+  * detectors read raw points too. bollingerBands needs a second moment
+  * and burnRate a per-bucket count of a predicate, and neither is a
+  * statpoint field. peaks, savgol and changePoints could re-sum a level's
+  * (v_sum_us, v_count), but the reference serves no detector from its
+  * tree and no reader here asks for one, so a level path for them would
+  * be a second path with no caller.
   */
 class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int]) {
   require(pointwidths == pointwidths.sorted, "pointwidths must ascend")
 
   private def levelDir(pw: Int) = s"$base/rollup_pw$pw"
 
-  /** Bucket aggregate of raw points at pointwidth pw. The value sum is
-    * kept as exact integer micro-units (graft.Quant.us6), so every level
-    * of the hierarchy re-aggregates without float drift and rollup-served
-    * means are bit-identical to direct aggregation.
-    *
-    * v_sum2_us extends the reference's statpoint (min, mean, max, count —
-    * qtree.go's node payload) with the exact SECOND moment (Σ of squared
-    * µ-units, DECIMAL — squares overflow longs, the ts_stddev rule).
-    * Σx² is associative like the others, so it merges exactly through
-    * every level, and it is what lets the volatility family
-    * (bollingerBands — rolling mean ± K·σ) serve from the hierarchy
-    * bit-identically instead of stopping at the mean-only detectors.
+  /** Bucket aggregate of raw points at pointwidth pw: one statpoint per
+    * bucket. The value sum is kept as exact integer micro-units
+    * (graft.Quant.us6), so every level of the hierarchy re-aggregates
+    * without float drift and rollup-served means are bit-identical to
+    * direct aggregation.
     */
-  private def bucketize(points: DataFrame, streamCols: Seq[String], pw: Int,
-                        badPred: Option[Column]): DataFrame = {
-    val us = graft.Quant.us6(col("value")).cast("decimal(38,0)")
-    val aggs = Seq(
-      min(col("value")).as("v_min"),
-      max(col("value")).as("v_max"),
-      sum(graft.Quant.us6(col("value"))).as("v_sum_us"),
-      sum(us * us).as("v_sum2_us"),
-      count(lit(1)).as("v_count")) ++
-      // the ingest-FIXED predicate count (see burnRate): a plain long
-      // count, associative like the others
-      badPred.map(p => sum(when(p, 1L).otherwise(0L)).as("v_bad_count"))
+  private def bucketize(points: DataFrame, streamCols: Seq[String], pw: Int): DataFrame =
     points.groupBy(streamCols.map(col)
         :+ shiftleft(shiftright(col("t_us"), pw), pw).as("w_start"): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
+      .agg(min(col("value")).as("v_min"), max(col("value")).as("v_max"),
+        sum(graft.Quant.us6(col("value"))).as("v_sum_us"), count(lit(1)).as("v_count"))
 
   /** Merge a finer rollup level up to pointwidth pw — associative and
-    * exact for every aggregate (integer sums, not float). SCHEMA-DRIVEN:
-    * the optional moments (v_sum2_us — added after the first persisted
-    * bases shipped; v_bad_count — only on predicate-carrying builds) are
-    * merged only when the finer level actually has them, so compaction
-    * and coarse-from-fine appends keep working on a stale base instead
-    * of failing AnalysisException; the read paths that NEED a missing
-    * moment fall back to raw with a rebuild-directed warning (band,
-    * burnRate).
+    * exact for every statpoint field (integer sums, not float). It names
+    * only the four statpoint columns, so any extra column a finer level
+    * carries is ignored.
     */
-  private def merge(finer: DataFrame, streamCols: Seq[String], pw: Int): DataFrame = {
-    val aggs = Seq(
-      min(col("v_min")).as("v_min"),
-      max(col("v_max")).as("v_max"),
-      sum(col("v_sum_us")).as("v_sum_us")) ++
-      (if (finer.columns.contains("v_sum2_us"))
-        Seq(sum(col("v_sum2_us")).cast("decimal(38,0)").as("v_sum2_us")) else Nil) ++
-      Seq(sum(col("v_count")).as("v_count")) ++
-      (if (finer.columns.contains("v_bad_count"))
-        Seq(sum(col("v_bad_count")).as("v_bad_count")) else Nil)
+  private def merge(finer: DataFrame, streamCols: Seq[String], pw: Int): DataFrame =
     finer.groupBy(streamCols.map(col)
         :+ shiftleft(shiftright(col("w_start"), pw), pw).as("w_start"): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
+      .agg(min(col("v_min")).as("v_min"), max(col("v_max")).as("v_max"),
+        sum(col("v_sum_us")).as("v_sum_us"), sum(col("v_count")).as("v_count"))
 
   /** Build (or rebuild) all levels, each from the previous — a single raw
     * scan total. Every level lives under a `delta=` subdir (the same
     * layout appendBatch extends), so a full build is just the compacted
     * `delta=base`; building clears any previous deltas (it subsumes them).
-    *
-    * `badPred` FIXES a bad-event predicate at ingest time: every level
-    * then carries v_bad_count (the exact count of points satisfying it
-    * per bucket), which is what lets burnRate() serve from the hierarchy
-    * — see its doc for why the predicate must be an ingest decision. The
-    * predicate's canonical SQL is persisted at `base/_bad_pred` so
-    * appendBatch replays it verbatim and burnRate can verify the query's
-    * predicate IS the ingested one before trusting the counts.
     */
-  def build(points: DataFrame, streamCols: Seq[String],
-            badPred: Option[Column] = None): Unit = {
+  def build(points: DataFrame, streamCols: Seq[String]): Unit = {
     // Hadoop FS, not java.io.File: on HDFS/S3A a local-File delete
     // silently no-ops and stale delta= dirs would double-count every
     // bucket on read (same consistency stance as graft.ts.Store)
-    writeBadPred(badPred)
     var prev: DataFrame = null
     pointwidths.zipWithIndex.foreach { case (pw, i) =>
       val level =
-        if (i == 0) bucketize(points, streamCols, pw, badPred)
+        if (i == 0) bucketize(points, streamCols, pw)
         else merge(prev, streamCols, pw)
-      val dir = new org.apache.hadoop.fs.Path(levelDir(pw))
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(dir)) fs.delete(dir, true)
+      val dir = hpath(levelDir(pw))
+      if (hfs.exists(dir)) hfs.delete(dir, true)
       level.write.mode(SaveMode.Overwrite).parquet(s"${levelDir(pw)}/delta=base")
       prev = spark.read.parquet(levelDir(pw))
     }
   }
 
   def level(pw: Int): DataFrame = { recoverCrashedSwap(pw); spark.read.parquet(levelDir(pw)) }
-
-  /** The ingest-fixed bad predicate's canonical SQL, persisted next to
-    * the levels (one tiny text file — the hierarchy's only non-parquet
-    * state). None ⇔ the base was built without one.
-    */
-  private def badPredPath = new org.apache.hadoop.fs.Path(s"$base/_bad_pred")
-  private def writeBadPred(p: Option[Column]): Unit = p match {
-    case Some(c) =>
-      val out = hfs.create(badPredPath, true)
-      out.write(org.apache.spark.sql.graft.GraftSqlShim.canonicalSql(c)
-        .getBytes("UTF-8")); out.close()
-    case None => hfs.delete(badPredPath, false)
-  }
-  private[ts] def storedBadPred: Option[String] =
-    if (!hfs.exists(badPredPath)) None
-    else {
-      val in = hfs.open(badPredPath)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
 
   private val hfs = new org.apache.hadoop.fs.Path(base)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -223,6 +169,8 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     * partial aggregates: every read path re-merges buckets (min/max/sum/
     * count are associative), so deltas never need compaction for
     * correctness — a periodic build() collapses them for read efficiency.
+    * An append reads no level: every read names only the statpoint
+    * columns, so a delta never has to match its base's other columns.
     *
     * `writeId` makes replays idempotent: a delta lands at
     * `rollup_pw<pw>/delta=<writeId>` with Overwrite, so a replayed batch
@@ -230,29 +178,10 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     */
   def appendBatch(points: DataFrame, streamCols: Seq[String], writeId: String): Unit = {
     val cached = scala.collection.mutable.Buffer.empty[DataFrame]
-    // replay the ingest-fixed predicate from its persisted SQL — the
-    // append must count v_bad_count with EXACTLY the build's predicate
-    // or merged buckets would mix two definitions of "bad"
-    val badPred = storedBadPred.map(expr)
-    // conform to the EXISTING base's optional moments: appending a
-    // new-schema delta (v_sum2_us/v_bad_count) next to stale old-schema
-    // files would make the merged column silently PARTIAL — sum()
-    // ignores the old files' nulls, so band()/burnRate() would serve
-    // wrong numbers while the column looks present. A stale base stays
-    // uniformly stale (raw fallback, correct) until a build() rebuild.
-    val baseCols: Option[Set[String]] = {
-      val finest = hpath(levelDir(pointwidths.head))
-      if (hfs.exists(finest)) Some(level(pointwidths.head).columns.toSet) else None
-    }
-    def conform(df: DataFrame): DataFrame = baseCols match {
-      case Some(cols) => df.drop(df.columns
-        .filter(c => c.startsWith("v_") && !cols.contains(c)): _*)
-      case None => df
-    }
     var prev: DataFrame = null
     pointwidths.zipWithIndex.foreach { case (pw, i) =>
       val delta =
-        if (i == 0) conform(bucketize(points, streamCols, pw, badPred))
+        if (i == 0) bucketize(points, streamCols, pw)
         else merge(prev, streamCols, pw)
       delta.cache()
       cached += delta
@@ -273,181 +202,33 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     */
   def windows(raw: => DataFrame, streamCols: Seq[String],
               start: Long, end: Long, width: Long): DataFrame = {
-    val usable = usableLevels(start, width)
+    val usable =
+      pointwidths.filter(l => width % (1L << l) == 0 && (start & ((1L << l) - 1)) == 0L)
     if (usable.isEmpty) TimeSeriesOps.windows(raw, streamCols, start, end, width)
     else
-      reaggregate(level(usable.max), streamCols, start, end, width)(statAggs: _*)
-        .select(streamCols.map(col) :+ col("w_start") :+ col("v_min")
-          :+ col("v_mean") :+ col("v_max") :+ col("v_count"): _*)
+      reaggregate(level(usable.max), streamCols, start, end, width)
   }
 
-  /** The levels whose buckets tile `width`-wide windows from `start`:
-    * width divisible by 2^l and `start` 2^l-aligned, so every bucket lies
-    * wholly inside one window — the usability rule of every method here
-    * that serves arbitrary windows.
-    */
-  private def usableLevels(start: Long, width: Long): Seq[Int] =
-    pointwidths.filter(l => width % (1L << l) == 0 && (start & ((1L << l) - 1)) == 0L)
-
   /** Re-aggregate level buckets into the complete `width`-wide windows
-    * from `start` (the raw path's cutoff), keyed by stream and w_start:
-    * keep the buckets inside [start, completeEnd), optionally merge them
-    * up to 2^mergeTo first, then group each into the window holding its
-    * start and apply `aggs`.
+    * from `start` (the raw path's cutoff): keep the buckets inside
+    * [start, completeEnd), optionally merge them up to 2^mergeTo first,
+    * then group each into the window holding its start. Output schema
+    * matches TimeSeriesOps.windows: (keys…, w_start, v_min, v_mean, v_max,
+    * v_count).
     */
   private def reaggregate(buckets: DataFrame, streamCols: Seq[String], start: Long,
-                          end: Long, width: Long, mergeTo: Option[Int] = None)(
-                          aggs: Column*): DataFrame = {
+                          end: Long, width: Long, mergeTo: Option[Int] = None): DataFrame = {
     val completeEnd = start + ((end - start) / width) * width
     val complete = buckets.filter(col("w_start") >= start && col("w_start") < completeEnd)
     val d = col("w_start") - start
     mergeTo.fold(complete)(merge(complete, streamCols, _))
       .groupBy(streamCols.map(col)
         :+ (lit(start) + d - pmod(d, lit(width))).as("w_win"): _*)
-      .agg(aggs.head, aggs.tail: _*)
+      .agg(min(col("v_min")).as("v_min"),
+        graft.Quant.mean6(sum(col("v_sum_us")), sum(col("v_count"))).as("v_mean"),
+        max(col("v_max")).as("v_max"),
+        sum(col("v_count")).as("v_count"))
       .withColumnRenamed("w_win", "w_start")
-  }
-
-  /** Window (min, mean, max, count) over level buckets. */
-  private def statAggs: Seq[Column] = Seq(
-    min(col("v_min")).as("v_min"),
-    graft.Quant.mean6(sum(col("v_sum_us")), sum(col("v_count"))).as("v_mean"),
-    max(col("v_max")).as("v_max"),
-    sum(col("v_count")).as("v_count"))
-
-  /** Per-window exact (sum_us, n) summaries re-aggregated from the
-    * coarsest usable level — the shared feed for the rollup-served
-    * detector paths below, which fall back to raw when no level is usable.
-    */
-  private def windowSums(pw: Int, streamCols: Seq[String],
-                         start: Long, end: Long, width: Long): DataFrame =
-    reaggregate(level(pw), streamCols, start, end, width)(
-      sum(col("v_sum_us")).as("sum_us"), sum(col("v_count")).as("n"))
-
-  /** Peak extraction served from the rollup hierarchy — the qtree
-    * promise applied to the detector: the window means come from the
-    * coarsest usable level's EXACT integer sums (identical to the raw
-    * path's, by the re-aggregation invariant), so the flags are
-    * bit-identical to TimeSeriesOps.peaks over raw points while reading
-    * only 2^-pw of the rows. Falls back to raw when no level is usable.
-    */
-  def peaks(raw: => DataFrame, streamCols: Seq[String], start: Long, end: Long,
-            width: Long, k: Int, minPromUs: Long): DataFrame = {
-    val usable = usableLevels(start, width)
-    if (usable.isEmpty)
-      TimeSeriesOps.peaks(raw, streamCols, start, end, width, k, minPromUs)
-    else TimeSeriesOps.peaksOfWindowSums(
-      windowSums(usable.max, streamCols, start, end, width), streamCols, k, minPromUs)
-  }
-
-  /** Savitzky–Golay smoothing served from the rollup hierarchy — same
-    * contract as peaks(): the coarsest usable level's exact integer sums
-    * re-aggregate into the identical window means, so the kernel output
-    * is bit-identical to the raw path at 2^-pw of the rows read.
-    */
-  def savgol(raw: => DataFrame, streamCols: Seq[String], start: Long, end: Long,
-             width: Long): DataFrame = {
-    val usable = usableLevels(start, width)
-    if (usable.isEmpty)
-      TimeSeriesOps.savgol(raw, streamCols, start, end, width)
-    else TimeSeriesOps.savgolOfWindowSums(
-      windowSums(usable.max, streamCols, start, end, width), streamCols)
-  }
-
-  /** Change points served from the rollup hierarchy — same contract as
-    * peaks() above.
-    */
-  def changePoints(raw: => DataFrame, streamCols: Seq[String], start: Long,
-                   end: Long, width: Long, k: Int, minShiftUs: Long): DataFrame = {
-    val usable = usableLevels(start, width)
-    if (usable.isEmpty)
-      TimeSeriesOps.changePoints(raw, streamCols, start, end, width, k, minShiftUs)
-    else TimeSeriesOps.changePointsOfWindowSums(
-      windowSums(usable.max, streamCols, start, end, width), streamCols, k, minShiftUs)
-  }
-
-  /** Bollinger bands served from the rollup hierarchy — the volatility
-    * envelope joins the rollup-served family because the levels carry
-    * the exact second moment (v_sum2_us, see bucketize): per-window
-    * (Σx, Σx², n) re-aggregate associatively from bucket partials into
-    * the raw path's exact integers, so roll_mean/band_lo/band_hi are
-    * bit-identical to TimeSeriesOps.bollingerBands over raw points at
-    * 2^-pw of the rows read. Same usability rule and raw fallback as
-    * peaks().
-    */
-  def band(raw: => DataFrame, streamCols: Seq[String], start: Long, end: Long,
-           width: Long, k: Int, nSigma: Double): DataFrame = {
-    val usable = usableLevels(start, width)
-    // v_sum2_us postdates the first persisted bases: a stale level can't
-    // serve the second moment, so fall back to raw (always correct)
-    // instead of dying AnalysisException mid-plan; the warning names the
-    // fix (a build() rebuild adds the column)
-    if (usable.nonEmpty && !level(usable.max).columns.contains("v_sum2_us")) {
-      org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
-        s"rollup level pw=${usable.max} at $base predates v_sum2_us; " +
-          "band() served from RAW points — rebuild the hierarchy " +
-          "(Rollup.build) to serve it from levels")
-      return TimeSeriesOps.bollingerBands(raw, streamCols, start, end, width, k, nSigma)
-    }
-    if (usable.isEmpty)
-      TimeSeriesOps.bollingerBands(raw, streamCols, start, end, width, k, nSigma)
-    else {
-      val moments = reaggregate(level(usable.max), streamCols, start, end, width)(
-        sum(col("v_sum_us")).as("s1"),
-        sum(col("v_sum2_us")).cast("decimal(38,0)").as("s2"),
-        sum(col("v_count")).as("n"))
-      TimeSeriesOps.bandOfWindowMoments(moments, streamCols, k, nSigma)
-    }
-  }
-
-  /** Multi-window SLO burn rate served from the hierarchy — with a
-    * boundary argument unlike the quantile family's impossibility (see
-    * the class doc):
-    * n_bad is a PREDICATE aggregate, and no fixed set of per-bucket
-    * moments can answer an ARBITRARY query-time predicate (min/max can
-    * only prove a bucket wholly good or wholly bad, not count a mixed
-    * one). A deployment that FIXES the predicate at ingest ("is_error")
-    * turns bad-count into a plain associative count a level carries —
-    * so that is exactly the contract here: build(badPred = Some(...))
-    * stamps v_bad_count into every level and persists the predicate's
-    * canonical SQL, and this serves from the coarsest usable level IFF
-    * (a) the query's predicate IS the ingested one (canonical-SQL
-    * equality against `base/_bad_pred` — a semantically-equal-but-
-    * differently-spelled predicate conservatively falls back) and
-    * (b) every requested width tiles some level. Counts re-aggregate as
-    * exact longs and the fraction/burn divisions are the raw path's
-    * expressions verbatim, so the output is bit-identical to
-    * TimeSeriesOps.burnRate over raw points (spec-pinned) at 2^-pw of
-    * the rows read — the multi-window SLO dashboard query a 100 TB
-    * fleet asks at alert frequency, answered without touching the fact
-    * table. Anything else — stale base, no predicate, different
-    * predicate, non-tiling width — falls back to raw.
-    */
-  def burnRate(raw: => DataFrame, streamCols: Seq[String], start: Long,
-               end: Long, widths: Seq[Long], badPred: Column,
-               slo: Double): DataFrame = {
-    require(widths.nonEmpty && widths.forall(_ > 0), s"widths must be positive: $widths")
-    require(slo > 0 && slo < 1, s"slo must be in (0,1), got $slo")
-    val servable = storedBadPred.contains(
-      org.apache.spark.sql.graft.GraftSqlShim.canonicalSql(badPred)) &&
-      widths.forall(w => usableLevels(start, w).nonEmpty) &&
-      pointwidths.forall(l => level(l).columns.contains("v_bad_count"))
-    if (!servable)
-      TimeSeriesOps.burnRate(raw, streamCols, start, end, widths, badPred, slo)
-    else {
-      // per width: its own coarsest usable level, complete windows only
-      // (the raw path's cutoff), counts re-merged to the width grid
-      widths.map { w =>
-        reaggregate(level(usableLevels(start, w).max), streamCols, start, end, w)(
-            sum(col("v_count")).as("n_events"), sum(col("v_bad_count")).as("n_bad"))
-          .select(streamCols.map(col) ++ Seq(lit(w).as("width_us"),
-            col("w_start"), col("n_events"), col("n_bad"),
-            graft.Quant.q6(col("n_bad").cast("double") / col("n_events").cast("double"))
-              .as("bad_frac"),
-            graft.Quant.q6(col("n_bad").cast("double") / col("n_events").cast("double") /
-              (lit(1.0) - lit(slo))).as("burn")): _*)
-      }.reduce(_.unionByName(_))
-    }
   }
 
   /** Serve depth-approximate Windows (TimeSeriesOps.windowsApprox — the
@@ -467,7 +248,7 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     // produces) or drop a straddling bucket's in-range points
     require((start & ((1L << depth) - 1)) == 0L,
       s"windowsApprox start must be 2^$depth-aligned, got $start")
-    reaggregate(level(usable.max), streamCols, start, end, width, Some(depth))(statAggs: _*)
+    reaggregate(level(usable.max), streamCols, start, end, width, Some(depth))
   }
 
   /** Serve AlignedWindows(pointWidth=pw) from the coarsest usable level.

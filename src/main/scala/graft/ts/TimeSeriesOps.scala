@@ -151,10 +151,12 @@ object TimeSeriesOps {
   /** Whole-stream StatPoint — the qtree root node (qtree.go QueryStatisticalValues
     * at the root resolution). Unlike per-window groups, a whole stream's
     * point count is unbounded, so the micro-unit sum accumulates as
-    * DECIMAL(38,0) — exact to 10^38, where a long would silently wrap
+    * DECIMAL(38,0) — exact to 10^38, where a long sum would overflow
     * past ~9.2e18 µ-units (a year of ns-rate data at |value|≈300 already
-    * crosses it). The final decimal→double cast rounds to nearest exactly
-    * like DuckDB's HUGEINT→DOUBLE, so the gate stays bit-exact.
+    * crosses it) and, under Spark 4's default ANSI mode, fail the query
+    * with ARITHMETIC_OVERFLOW. The final decimal→double cast rounds to
+    * nearest exactly like DuckDB's HUGEINT→DOUBLE, so the gate stays
+    * bit-exact.
     */
   def statsGlobal(points: DataFrame, streamCols: Seq[String]): DataFrame =
     points.groupBy(streamKey(streamCols): _*)
@@ -324,40 +326,26 @@ object TimeSeriesOps {
         col("dt_min"), col("dt_max")): _*)
   }
 
-  /** GenerateCSV: one row per window, one mean column per requested
-    * stream (grpcinterface/csv.go — the reference streams an aligned CSV
-    * of N streams side by side). `streams` is (label, membership
-    * predicate); output columns are `<label>_mean` plus the window's
-    * total point count. A single pass + one groupBy: the per-stream
-    * pivot is conditional aggregation, not N scans or N joins.
-    */
-  def csvExport(points: DataFrame, streams: Seq[(String, Column)],
-                start: Long, end: Long, width: Long): DataFrame =
-    csvExportStat(points, streams.map { case (l, p) => (l, p, None) },
-      start, end, width)
-
-  /** The full GenerateCSV stat contract (grpcinterface/csv.go:50-107):
+  /** GenerateCSV, the full stat contract (grpcinterface/csv.go:50-107):
     * per output window one row, and per stream FOUR columns —
     * `{label}_min, {label}_mean, {label}_max, {label}_count` (csv.go's
     * calculateColumnOffset "2 + i*4" layout, with w_start standing in for
-    * the two time columns). A stream silent in a window exports nulls
-    * (writeEmptyPoint's empty cells), including the count — a 0-count cell
-    * and an absent cell are different answers in the reference. Each
-    * stream carries its OWN pinned version (csv.go:30-43's per-config
-    * `ver`; None = latest), applied as a per-stream visibility predicate.
-    * Still one pass + one groupBy: the per-stream pivot is conditional
-    * aggregation, not N scans or N joins; rows exist only for windows
-    * where at least one stream has a point (the merge loop's earliest-
-    * time driver, serve.go:969-999).
+    * the two time columns). `streams` is (label, membership predicate). A
+    * stream silent in a window exports nulls (writeEmptyPoint's empty
+    * cells), including the count — a 0-count cell and an absent cell are
+    * different answers in the reference. A stream's pinned version
+    * (csv.go:30-43's per-config `ver`) is part of its predicate, e.g.
+    * `col("user_id") === 2 && col("ver") <= 500L`. One pass + one
+    * groupBy: the per-stream pivot is conditional aggregation, not N
+    * scans or N joins; rows exist only for windows where at least one
+    * stream has a point (the merge loop's earliest-time driver,
+    * serve.go:969-999).
     */
-  def csvExportStat(points: DataFrame, streams: Seq[(String, Column, Option[Long])],
-                    start: Long, end: Long, width: Long): DataFrame = {
+  def csvExport(points: DataFrame, streams: Seq[(String, Column)],
+                start: Long, end: Long, width: Long): DataFrame = {
     require(streams.nonEmpty, "csvExport needs at least one stream")
     val d = col("t_us") - start
-    val preds = streams.map { case (_, p, ver) =>
-      ver.fold(p)(v => p && col("ver") <= v)
-    }
-    val aggs = streams.zip(preds).flatMap { case ((label, _, _), pred) =>
+    val aggs = streams.flatMap { case (label, pred) =>
       val cnt = count(when(pred, lit(1)))
       Seq(
         min(when(pred, col("value"))).as(s"${label}_min"),
@@ -367,7 +355,7 @@ object TimeSeriesOps {
         when(cnt > 0, cnt).as(s"${label}_count"))
     }
     points
-      .filter(preds.reduce(_ || _) && col("t_us") >= start && col("t_us") < end)
+      .filter(streams.map(_._2).reduce(_ || _) && col("t_us") >= start && col("t_us") < end)
       .groupBy((lit(start) + d - pmod(d, lit(width))).as("w_start"))
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -382,17 +370,14 @@ object TimeSeriesOps {
     * row-per-point form that preserves them, matching the reference's
     * merge exactly.
     */
-  def csvExportRaw(points: DataFrame, streams: Seq[(String, Column, Option[Long])],
+  def csvExportRaw(points: DataFrame, streams: Seq[(String, Column)],
                    start: Long, end: Long): DataFrame = {
     require(streams.nonEmpty, "csvExport needs at least one stream")
-    val preds = streams.map { case (_, p, ver) =>
-      ver.fold(p)(v => p && col("ver") <= v)
-    }
-    val aggs = streams.zip(preds).map { case ((label, _, _), pred) =>
+    val aggs = streams.map { case (label, pred) =>
       max(when(pred, col("value"))).as(label)
     }
     points
-      .filter(preds.reduce(_ || _) && col("t_us") >= start && col("t_us") < end)
+      .filter(streams.map(_._2).reduce(_ || _) && col("t_us") >= start && col("t_us") < end)
       .groupBy(col("t_us"))
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -414,19 +399,17 @@ object TimeSeriesOps {
     * frames, never corpus scale — and the same conditional-aggregation
     * pivot.
     */
-  def csvExportRawExact(points: DataFrame, streams: Seq[(String, Column, Option[Long])],
+  def csvExportRawExact(points: DataFrame, streams: Seq[(String, Column)],
                         start: Long, end: Long): DataFrame = {
     require(streams.nonEmpty, "csvExport needs at least one stream")
-    val preds = streams.map { case (_, p, ver) =>
-      ver.fold(p)(v => p && col("ver") <= v)
-    }
+    val preds = streams.map(_._2)
     val matched = points
       .filter(preds.reduce(_ || _) && col("t_us") >= start && col("t_us") < end)
       .select(col("t_us"), col("value"),
         posexplode(array(preds.map(p => when(p, lit(1))): _*)).as(Seq("sidx", "hit")))
       .filter(col("hit").isNotNull)
     val wOcc = Window.partitionBy(col("sidx"), col("t_us")).orderBy(col("value"))
-    val aggs = streams.zipWithIndex.map { case ((label, _, _), i) =>
+    val aggs = streams.zipWithIndex.map { case ((label, _), i) =>
       max(when(col("sidx") === i, col("value"))).as(label)
     }
     matched
@@ -2360,6 +2343,8 @@ object TimeSeriesOps {
     */
   def bollingerBands(points: DataFrame, streamCols: Seq[String], start: Long,
                      end: Long, width: Long, k: Int, nSigma: Double): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
+    require(nSigma > 0, s"nSigma must be positive, got $nSigma")
     val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
     val us = graft.Quant.us6(col("value")).cast("decimal(38,0)")
@@ -2367,24 +2352,6 @@ object TimeSeriesOps {
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(sum(us).as("s1"), sum(us * us).as("s2"), count(lit(1)).as("n"))
-    bandOfWindowMoments(base, streamCols, k, nSigma)
-  }
-
-  /** The band logic over a precomputed per-window moment frame
-    * (key..., w_start, s1 = Σµ-units, s2 = Σµ-units², n) — the
-    * peaksOfWindowSums contract extended with the exact second moment,
-    * shared by the raw path above and the rollup-served path
-    * (Rollup.band), whose level buckets re-sum to the SAME exact
-    * integers, so the two serve bit-identical rows. Inputs are
-    * normalized to DECIMAL(38,0) here so a long-typed feed (the rollup
-    * levels' v_sum_us) and the raw path's decimal sums assemble the
-    * variance numerator through the identical exact arithmetic.
-    */
-  private[ts] def bandOfWindowMoments(base: DataFrame, streamCols: Seq[String],
-                                      k: Int, nSigma: Double): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(nSigma > 0, s"nSigma must be positive, got $nSigma")
-    val key = streamKey(streamCols)
     val frame = Window.partitionBy(key: _*).orderBy(col("w_start"))
       .rowsBetween(-(k - 1).toLong, 0)
     val rs1 = sum(col("s1").cast("decimal(38,0)")).over(frame)
@@ -2932,25 +2899,14 @@ object TimeSeriesOps {
     */
   def peaks(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
             width: Long, k: Int, minPromUs: Long): DataFrame = {
-    val completeEnd = start + ((end - start) / width) * width
-    val sums = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
-      .groupBy(streamKey(streamCols) :+ widthBucket(start, width): _*)
-      .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
-    peaksOfWindowSums(sums, streamCols, k, minPromUs)
-  }
-
-  /** The peak logic over a precomputed per-window summary frame
-    * (key..., w_start, sum_us, n) — shared by the raw path above and the
-    * rollup-served path (Rollup.peaks), which re-aggregates its level
-    * buckets into the SAME exact integer sums, so the two serve
-    * bit-identical rows.
-    */
-  private[ts] def peaksOfWindowSums(sums: DataFrame, streamCols: Seq[String],
-                                    k: Int, minPromUs: Long): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(minPromUs >= 0, s"minPromUs must be non-negative, got $minPromUs")
     val key = streamKey(streamCols)
+    val completeEnd = start + ((end - start) / width) * width
+    val sums = points
+      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .groupBy(key :+ widthBucket(start, width): _*)
+      .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
     val means = sums.select(key ++ Seq(col("w_start"),
       round(col("sum_us").cast("double") / col("n"), 0).cast("long").as("m_us"),
       col("n").as("n_points")): _*)
@@ -2995,27 +2951,18 @@ object TimeSeriesOps {
     */
   def changePoints(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                    width: Long, k: Int, minShiftUs: Long): DataFrame = {
-    val completeEnd = start + ((end - start) / width) * width
-    val sums = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
-      .groupBy(streamKey(streamCols) :+ widthBucket(start, width): _*)
-      .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
-    changePointsOfWindowSums(sums, streamCols, k, minShiftUs)
-  }
-
-  /** The change-point logic over a precomputed per-window summary frame
-    * (key..., w_start, sum_us, n) — the peaksOfWindowSums contract, same
-    * rollup-served sharing (Rollup.changePoints).
-    */
-  private[ts] def changePointsOfWindowSums(base: DataFrame, streamCols: Seq[String],
-                                           k: Int, minShiftUs: Long): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(minShiftUs >= 0, s"minShiftUs must be non-negative, got $minShiftUs")
     val key = streamKey(streamCols)
+    val completeEnd = start + ((end - start) / width) * width
+    val sums = points
+      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .groupBy(key :+ widthBucket(start, width): _*)
+      .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
     val ord = Window.partitionBy(key: _*).orderBy(col("w_start"))
     val lFrame = ord.rowsBetween(-k.toLong, -1L)
     val rFrame = ord.rowsBetween(0L, (k - 1).toLong)
-    val scored = base
+    val scored = sums
       .withColumn("l_cnt", count(lit(1)).over(lFrame))
       .withColumn("r_cnt", count(lit(1)).over(rFrame))
       .withColumn("l_mean_us",
@@ -3061,23 +3008,12 @@ object TimeSeriesOps {
     */
   def savgol(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
              width: Long): DataFrame = {
+    val key = streamKey(streamCols)
     val completeEnd = start + ((end - start) / width) * width
     val sums = points
       .filter(col("t_us") >= start && col("t_us") < completeEnd)
-      .groupBy(streamKey(streamCols) :+ widthBucket(start, width): _*)
+      .groupBy(key :+ widthBucket(start, width): _*)
       .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
-    savgolOfWindowSums(sums, streamCols)
-  }
-
-  /** The SG kernel over a precomputed per-window summary frame
-    * (key..., w_start, sum_us, n) — the peaksOfWindowSums contract,
-    * shared by the raw path above and the rollup-served path
-    * (Rollup.savgol), which re-aggregates its level buckets into the
-    * SAME exact integer sums, so the two serve bit-identical rows.
-    */
-  private[ts] def savgolOfWindowSums(sums: DataFrame,
-                                     streamCols: Seq[String]): DataFrame = {
-    val key = streamKey(streamCols)
     val means = sums.select(key ++ Seq(col("w_start"),
       round(col("sum_us").cast("double") / col("n"), 0).cast("long").as("m_us"),
       col("n").as("n_points")): _*)

@@ -14,16 +14,6 @@ object GraftSqlShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Canonical, re-parseable SQL for a Column. ExpressionUtils.expression
-    * wraps lazily in a ColumnNodeExpression whose .sql renders the OPAQUE
-    * placeholder `columnnodeexpression()` — every column collapses to the
-    * same string, so it can neither be replayed through expr() nor used
-    * to discriminate predicates. Converting the node eagerly yields the
-    * real unresolved tree, whose .sql round-trips.
-    */
-  def canonicalSql(c: Column): String =
-    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node).sql
-
   /** DataFrame over a custom (already-resolved) logical plan — the bridge
     * a custom LogicalPlan + SparkStrategy operator needs to surface in the
     * public API (classic.Dataset.ofRows is private[sql]).

@@ -215,159 +215,53 @@ class RollupSpec extends SparkSuite {
     fb.zip(fbDirect).foreach { case (d, r) => assert(d == r) }
   }
 
-  test("peaks and change points served from a level equal the raw path") {
-    // the detector paths inherit the re-aggregation invariant: level
-    // (sum_us, count) partials re-sum to the raw path's exact window
-    // sums, so flags, prominences, and shifts are bit-identical
+  test("every level is exactly the statpoint: keys, w_start, v_min, v_max, v_sum_us, v_count") {
     val pts = Tables.points(spark, sfDir).cache()
-    val depth = 24
-    val start = (T0 >> depth) << depth
-    val w = 5120L << depth // ≈ 23.9 h: day-scale windows tiled by level-24 buckets
-    val end = start + 28 * w
-    val ru = Rollup(spark, tmpDir("rollup_det"), Seq(24, 30))
-    ru.build(pts, STREAM)
-    val pkRaw = TimeSeriesOps.peaks(pts, STREAM, start, end, w, 1, 0L)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    val pkServed = ru.peaks(pts, STREAM, start, end, w, 1, 0L)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    assert(pkRaw.length == pkServed.length && pkRaw.nonEmpty, s"${pkRaw.length}")
-    pkRaw.zip(pkServed).foreach { case (d, r) => assert(d == r) }
-    val cpRaw = TimeSeriesOps.changePoints(pts, STREAM, start, end, w, 1, 1L)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    val cpServed = ru.changePoints(pts, STREAM, start, end, w, 1, 1L)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    assert(cpRaw.length == cpServed.length && cpRaw.nonEmpty, s"${cpRaw.length}")
-    cpRaw.zip(cpServed).foreach { case (d, r) => assert(d == r) }
-    // unaligned start → raw fallback, still correct
-    val fb = ru.peaks(pts, STREAM, start + 7, end, w, 1, 0L).collect()
-    val fbRaw = TimeSeriesOps.peaks(pts, STREAM, start + 7, end, w, 1, 0L).collect()
-    assert(fb.toSet == fbRaw.toSet)
-    // the SG smoother inherits the same invariant (incl. NULL edges)
-    val sgRaw = TimeSeriesOps.savgol(pts, STREAM, start, end, w)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    val sgServed = ru.savgol(pts, STREAM, start, end, w)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    assert(sgRaw.length == sgServed.length && sgRaw.nonEmpty)
-    sgRaw.zip(sgServed).foreach { case (d, r) => assert(d == r) }
-  }
+    val pws = Seq(24, 30)
+    val statpoint = STREAM ++ Seq("w_start", "v_min", "v_max", "v_sum_us", "v_count", "delta")
+    def columnsAt(ru: Rollup, when: String): Unit = pws.foreach { pw =>
+      assert(ru.level(pw).columns.toSeq == statpoint, s"pw$pw $when")
+    }
+    val built = Rollup(spark, tmpDir("rollup_statpoint"), pws)
+    built.build(pts.filter(col("user_id") % 2 === 0), STREAM)
+    columnsAt(built, "after build")
+    built.appendBatch(pts.filter(col("user_id") % 2 === 1), STREAM, "b1")
+    columnsAt(built, "after appendBatch onto a built base")
+    val appended = Rollup(spark, tmpDir("rollup_statpoint_append"), pws)
+    appended.appendBatch(pts, STREAM, "b0")
+    columnsAt(appended, "after appendBatch onto no base")
 
-  test("bollinger band served from a level equals the raw path; burn rate on a predicate-less base falls back") {
-    // the levels' exact second moment (v_sum2_us) re-sums to the raw
-    // path's per-window (Σx, Σx², n), so rolling mean AND stddev bands
-    // are bit-identical; this base was built WITHOUT an ingest-fixed
-    // predicate, so Rollup.burnRate must equal the raw path by fallback
-    // (the served regime is gated in the dedicated test below)
-    val pts = Tables.points(spark, sfDir).cache()
+    // a level hand-written with exactly the statpoint columns serves
+    // windows equal to raw, and survives an append and a compaction
     val depth = 24
     val start = (T0 >> depth) << depth
     val w = 5120L << depth
     val end = start + 28 * w
-    val ru = Rollup(spark, tmpDir("rollup_band"), Seq(24, 30))
-    ru.build(pts, STREAM)
-    val bdRaw = TimeSeriesOps.bollingerBands(pts, STREAM, start, end, w, 7, 2.0)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    val bdServed = ru.band(pts, STREAM, start, end, w, 7, 2.0)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    assert(bdRaw.length == bdServed.length && bdRaw.nonEmpty, s"${bdRaw.length}")
-    bdRaw.zip(bdServed).foreach { case (d, r) => assert(d == r) }
-    // unaligned start → raw fallback, still correct
-    val fb = ru.band(pts, STREAM, start + 7, end, w, 7, 2.0).collect()
-    val fbRaw = TimeSeriesOps.bollingerBands(pts, STREAM, start + 7, end, w, 7, 2.0).collect()
-    assert(fb.toSet == fbRaw.toSet && fb.nonEmpty)
-    val brRaw = TimeSeriesOps.burnRate(pts, STREAM, start, end, Seq(w),
-        col("value") > 50.0, 0.99)
-      .orderBy("user_id", "event_type", "width_us", "w_start").collect()
-    val brServed = ru.burnRate(pts, STREAM, start, end, Seq(w),
-        col("value") > 50.0, 0.99)
-      .orderBy("user_id", "event_type", "width_us", "w_start").collect()
-    assert(brRaw.length == brServed.length && brRaw.nonEmpty)
-    brRaw.zip(brServed).foreach { case (d, r) => assert(d == r) }
-  }
-
-  test("burn rate served from levels with an ingest-fixed predicate is bit-identical to raw") {
-    val pts = Tables.points(spark, sfDir).cache()
-    val depth = 24
-    val start = (T0 >> depth) << depth
-    val w = 5120L << depth
-    val end = start + 28 * w
-    val pred = col("value") > 50.0
-    val ru = Rollup(spark, tmpDir("rollup_burn"), Seq(24, 30))
-    ru.build(pts, STREAM, badPred = Some(pred))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("user_id", "event_type", "width_us", "w_start").collect().toSeq
-    val raw = rows(TimeSeriesOps.burnRate(pts, STREAM, start, end, Seq(w, 4 * w), pred, 0.99))
-    // the raw argument is BY-NAME and poisoned: evaluating it means the
-    // served path read the fact table — the exact thing it must not do
-    val served = rows(ru.burnRate(
-      sys.error("burnRate touched raw points despite a servable base"),
-      STREAM, start, end, Seq(w, 4 * w), pred, 0.99))
-    assert(raw.nonEmpty && raw == served)
-    // a DIFFERENT query predicate must fall back to raw — the persisted
-    // v_bad_count answers only the ingested predicate
-    val otherPred = col("value") > 60.0
-    val fb = rows(ru.burnRate(pts, STREAM, start, end, Seq(w), otherPred, 0.99))
-    assert(fb == rows(TimeSeriesOps.burnRate(pts, STREAM, start, end, Seq(w), otherPred, 0.99)))
-    // a non-tiling width must fall back too
-    val fbw = rows(ru.burnRate(pts, STREAM, start, end, Seq(w + 1), pred, 0.99))
-    assert(fbw == rows(TimeSeriesOps.burnRate(pts, STREAM, start, end, Seq(w + 1), pred, 0.99)))
-  }
-
-  test("appendBatch replays the persisted bad predicate; burn rate stays served and exact") {
-    val pts = Tables.points(spark, sfDir).cache()
-    val depth = 24
-    val start = (T0 >> depth) << depth
-    val w = 5120L << depth
-    val end = start + 28 * w
-    val pred = col("value") > 50.0
-    val ru = Rollup(spark, tmpDir("rollup_burn_append"), Seq(24, 30))
-    // build on a THIRD of the streams, append the rest in two batches —
-    // the appends must count v_bad_count with the stored predicate
-    ru.build(pts.filter(col("user_id") % 3 === 0), STREAM, badPred = Some(pred))
-    Seq(1, 2).foreach(i =>
-      ru.appendBatch(pts.filter(col("user_id") % 3 === i), STREAM, s"b$i"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("user_id", "event_type", "width_us", "w_start").collect().toSeq
-    val raw = rows(TimeSeriesOps.burnRate(pts, STREAM, start, end, Seq(w), pred, 0.99))
-    val served = rows(ru.burnRate(
-      sys.error("burnRate touched raw points despite a servable base"),
-      STREAM, start, end, Seq(w), pred, 0.99))
-    assert(raw.nonEmpty && raw == served)
-  }
-
-  test("stale pre-v_sum2_us base: band and burn rate fall back to raw; compaction survives") {
-    val pts = Tables.points(spark, sfDir).cache()
-    val depth = 24
-    val start = (T0 >> depth) << depth
-    val w = 5120L << depth
-    val end = start + 28 * w
-    val dir = tmpDir("rollup_stale")
-    // hand-write the OLD level schema (pre-v_sum2_us, pre-v_bad_count) —
-    // what a base persisted before those columns shipped looks like
-    Seq(24, 30).foreach { pw =>
-      pts.groupBy(STREAM.map(col)
+    val dir = tmpDir("rollup_handwritten")
+    pws.foreach { pw =>
+      pts.filter(col("user_id") % 2 === 0)
+        .groupBy(STREAM.map(col)
           :+ shiftleft(shiftright(col("t_us"), pw), pw).as("w_start"): _*)
         .agg(min(col("value")).as("v_min"), max(col("value")).as("v_max"),
           sum(graft.Quant.us6(col("value"))).as("v_sum_us"),
           count(lit(1)).as("v_count"))
         .write.parquet(s"$dir/rollup_pw$pw/delta=base")
     }
-    val ru = Rollup(spark, dir, Seq(24, 30))
-    // band: no AnalysisException — raw fallback, still correct
-    val bd = ru.band(pts, STREAM, start, end, w, 7, 2.0)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    val bdRaw = TimeSeriesOps.bollingerBands(pts, STREAM, start, end, w, 7, 2.0)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    assert(bd.nonEmpty && bd.toSeq == bdRaw.toSeq)
-    // the mean-only family still serves from the stale levels
-    val win = ru.windows(pts, STREAM, start, end, w)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    val winRaw = TimeSeriesOps.windows(pts, STREAM, start, end, w)
-      .orderBy("user_id", "event_type", "w_start").collect()
-    assert(win.nonEmpty && win.toSeq == winRaw.toSeq)
-    // schema-driven merge: append + compact must not die on the old schema
-    ru.appendBatch(pts.limit(0), STREAM, "noop")
+    val ru = Rollup(spark, dir, pws)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("user_id", "event_type", "w_start").collect().toSeq
+    // the raw argument is by-name and poisoned: every answer below must
+    // come from the levels
+    def served = sorted(ru.windows(sys.error("windows read raw points"), STREAM, start, end, w))
+    val winRaw = sorted(TimeSeriesOps.windows(
+      pts.filter(col("user_id") % 2 === 0), STREAM, start, end, w))
+    assert(winRaw.nonEmpty && served == winRaw)
+    ru.appendBatch(pts.filter(col("user_id") % 2 === 1), STREAM, "b1")
+    val allRaw = sorted(TimeSeriesOps.windows(pts, STREAM, start, end, w))
+    assert(allRaw.length > winRaw.length && served == allRaw)
     ru.compactDeltas(STREAM)
-    assert(ru.windows(pts, STREAM, start, end, w).count() == winRaw.length)
+    assert(served == allRaw)
+    columnsAt(ru, "after compacting a hand-written base")
   }
 
   test("queries below the finest level fall back to raw") {

@@ -750,9 +750,8 @@ class TimeSeriesOpsSpec extends SparkSuite {
       ("a", 1L, 1.0, 1L), ("a", 3L, 3.0, 2L), ("a", 15L, 5.0, 3L),
       ("b", 2L, 8.0, 1L))
       .toDF("sid", "t_us", "value", "ver")
-    val out = TimeSeriesOps.csvExportStat(p,
-      Seq(("a", col("sid") === "a", None: Option[Long]),
-          ("b", col("sid") === "b", None: Option[Long])),
+    val out = TimeSeriesOps.csvExport(p,
+      Seq(("a", col("sid") === "a"), ("b", col("sid") === "b")),
       0L, 20L, 10L).orderBy("w_start").collect()
     assert(out.length == 2)
     val r0 = out(0)
@@ -769,15 +768,13 @@ class TimeSeriesOpsSpec extends SparkSuite {
       ("a", 1L, 1.0, 1L), ("a", 1L, 9.0, 5L), // ver 5 invisible at pin 2
       ("b", 1L, 4.0, 1L), ("b", 3L, 6.0, 1L))
       .toDF("sid", "t_us", "value", "ver")
-    val stat = TimeSeriesOps.csvExportStat(p,
-      Seq(("a", col("sid") === "a", Some(2L): Option[Long]),
-          ("b", col("sid") === "b", None: Option[Long])),
+    val stat = TimeSeriesOps.csvExport(p,
+      Seq(("a", col("sid") === "a" && col("ver") <= 2L), ("b", col("sid") === "b")),
       0L, 10L, 10L).collect()
     assert(stat.length == 1 && stat(0).getDouble(3) == 1.0, // a_max excludes ver 5
       stat.mkString(","))
     val raw = TimeSeriesOps.csvExportRaw(p,
-      Seq(("a", col("sid") === "a", None: Option[Long]),
-          ("b", col("sid") === "b", None: Option[Long])),
+      Seq(("a", col("sid") === "a"), ("b", col("sid") === "b")),
       0L, 10L).orderBy("t_us").collect()
     assert(raw.length == 2)
     assert(raw(0).getLong(0) == 1L && raw(0).getDouble(1) == 9.0 && // dup ts → max
@@ -794,8 +791,7 @@ class TimeSeriesOpsSpec extends SparkSuite {
       ("b", 1L, 4.0, 1L), ("b", 3L, 6.0, 1L))
       .toDF("sid", "t_us", "value", "ver")
     val out = TimeSeriesOps.csvExportRawExact(p,
-      Seq(("a", col("sid") === "a", None: Option[Long]),
-          ("b", col("sid") === "b", None: Option[Long])),
+      Seq(("a", col("sid") === "a"), ("b", col("sid") === "b")),
       0L, 10L).orderBy("t_us", "seq").collect()
     assert(out.length == 3, out.mkString(","))
     // (t=1, seq=1): both streams' first occurrence, ascending-value order

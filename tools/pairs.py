@@ -5,8 +5,10 @@
 
 The change is this checkout; the parent is REV, checked out into a
 temporary `git worktree` that is removed on exit (on failure and on
-SIGINT/SIGTERM too). Pair i runs `perfbench/run.py --seed SEED+i` once on
-each side, alternating which side goes first. Before the pairs, each side
+SIGINT/SIGTERM too). `--rev HEAD` on a clean checkout is an A/A run: both
+sides hold the same tree, so any gap it reports is the setup's own bias
+(a fresh worktree against this checkout). Pair i runs `perfbench/run.py
+--seed SEED+i` once on each side, alternating which side goes first. Before the pairs, each side
 runs once untimed, so its build and class-data-sharing archive exist
 before any counted run.
 
