@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * SPARK_GRAFT_PLAN_DIR=<dir>: additionally write each query's
   * `.explain("formatted")` output (the pre-execution plan with PushedFilters/
   * ReadSchema/codegen spans — the optimization-round deliverable shape) to
-  * <dir>/<query>.txt.
+  * <dir>/<query>.txt, masked (see `mask`) so that `diff -r` of two dump
+  * dirs is a plan-identity check.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -21,7 +22,8 @@ object PlanDump {
       val df = fn(spark, sfDir)
       planDir match {
         case Some(d) =>
-          val formatted = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+          val formatted =
+            mask(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(d, s"$n.txt"), formatted)
           println(s"===== $n -> $d/$n.txt")
@@ -33,4 +35,17 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** What a formatted plan prints that varies between two JVMs building the
+    * same plan: expression ids (`#123`) and exchange ids (`plan_id=45`),
+    * which count up across the queries a JVM builds; lambda class names and
+    * identity hashes (`$Lambda$6389/0x7f31…@38e3…`, `[J@371c…`); and this
+    * process's pid, which names the temp stores some queries build.
+    */
+  private def mask(plan: String): String =
+    plan.replaceAll("#\\d+", "#N")
+      .replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")
+      .replaceAll("@[0-9a-f]+", "@N")
+      .replaceAll(s"_${ProcessHandle.current().pid()}\\b", "_PID")
 }

@@ -1418,7 +1418,7 @@ private[graft] object TsQueries {
           col("user_id_b"), col("event_type_b")),
       // mirrors TimeSeriesOps.xcorrMatrix: TakeOrdered roster, window
       // equi-join with the strict lexicographic pair order, exact-HUGEINT
-      // moments, the correlation() float assembly
+      // moments, the TimeSeriesOps.pearson float assembly
       Some(s"""WITH pts AS ($PTS_SQL),
          |m AS (SELECT user_id, event_type,
          |        $T0 + (t_us - $T0) - ((t_us - $T0) % $DAY) AS w_start,

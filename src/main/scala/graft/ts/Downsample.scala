@@ -326,15 +326,26 @@ object Downsample {
     * points.
     */
   def sax(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-          width: Long): DataFrame = {
+          width: Long): DataFrame =
+    saxSymbols(points, streamCols, start, end, width)
+      .groupBy(streamCols.map(col): _*)
+      .agg(count(lit(1)).as("n_buckets"),
+        concat_ws("", sort_array(collect_list(struct(col("w_start"), col("sym"))))
+          .getField("sym")).as("word"))
+
+  /** The SAX symbol series sax() and motifs() read: one row per
+    * (stream, complete bucket) with its rounded µ-unit PAA mean `m_us`,
+    * the stream's bucket count `nb`, σ_us `sd_us`, µ_us `mean_us`, `z`
+    * and the symbol `sym` — the arithmetic sax()'s doc pins.
+    */
+  private def saxSymbols(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
+                         width: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(width > 0, s"width must be positive, got $width")
     val key = streamCols.map(col)
-    val completeEnd = start + ((end - start) / width) * width
-    val d = col("t_us") - start
     val buckets = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
-      .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
+      .filter(TimeSeriesOps.inWindows(start, end, width))
+      .groupBy(key :+ TimeSeriesOps.widthBucket(start, width): _*)
       .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
       .select(key ++ Seq(col("w_start"),
         round(col("sum_us").cast("double") / col("n"), 0).cast("long").as("m_us")): _*)
@@ -343,7 +354,7 @@ object Downsample {
     val nb = count(lit(1)).over(w)
     val s1 = sum(col("m_us")).over(w).cast("decimal(38,0)")
     val s2 = sum(mDec * mDec).over(w)
-    val scored = buckets
+    buckets
       .withColumn("nb", nb)
       .withColumn("sd_us",
         sqrt((col("nb").cast("decimal(38,0)") * s2 - s1 * s1).cast("double")) / col("nb"))
@@ -356,10 +367,6 @@ object Downsample {
           .when(col("z") < 0d, lit("b"))
           .when(col("z") < SAX_BREAK, lit("c"))
           .otherwise(lit("d")))
-    scored.groupBy(key: _*)
-      .agg(count(lit(1)).as("n_buckets"),
-        concat_ws("", sort_array(collect_list(struct(col("w_start"), col("sym"))))
-          .getField("sym")).as("word"))
   }
 
   /** Subsequence motif discovery over the SAX symbol stream (Lin, Keogh
@@ -377,8 +384,8 @@ object Downsample {
     * non-empty buckets: a stream with a data gap contributes the
     * subword spanning it, the standard PAA-series treatment.
     *
-    * Scale shape: the symbol series is the same grid-bounded frame as
-    * sax() (two metadata-scale exchanges, raw points never shuffled);
+    * Scale shape: the symbol series is sax()'s own frame (saxSymbols —
+    * two metadata-scale exchanges, raw points never shuffled);
     * the subword aggregation adds one map-side-partial groupBy over ≤
     * 4^w distinct keys and the top-k is a TakeOrdered.
     */
@@ -388,37 +395,9 @@ object Downsample {
     require(w > 1, s"subword length must be at least 2, got $w")
     require(k > 0, s"k must be positive, got $k")
     val key = streamCols.map(col)
-    // the sax() symbol pipeline minus the word assembly: re-run the
-    // scored frame by calling sax() is not possible (it collapses to
-    // words), so the bucket/sym construction is shared by contract with
-    // the sax oracle — any change there must change both
-    val completeEnd = start + ((end - start) / width) * width
-    val d = col("t_us") - start
-    val buckets = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
-      .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
-      .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
-      .select(key ++ Seq(col("w_start"),
-        round(col("sum_us").cast("double") / col("n"), 0).cast("long").as("m_us")): _*)
-    val wAll = Window.partitionBy(key: _*)
     val wOrd = Window.partitionBy(key: _*).orderBy(col("w_start"))
-    val mDec = col("m_us").cast("decimal(38,0)")
-    val s1 = sum(col("m_us")).over(wAll).cast("decimal(38,0)")
-    val s2 = sum(mDec * mDec).over(wAll)
-    val syms = buckets
-      .withColumn("nb", count(lit(1)).over(wAll))
-      .withColumn("sd_us",
-        sqrt((col("nb").cast("decimal(38,0)") * s2 - s1 * s1).cast("double")) / col("nb"))
-      .withColumn("z", when(col("sd_us") === 0d, lit(0d))
-        .otherwise((col("m_us").cast("double") - s1.cast("double") / col("nb")) / col("sd_us")))
-      .withColumn("sym",
-        when(col("sd_us") === 0d, lit("c"))
-          .when(col("z") < -SAX_BREAK, lit("a"))
-          .when(col("z") < 0d, lit("b"))
-          .when(col("z") < SAX_BREAK, lit("c"))
-          .otherwise(lit("d")))
     val parts = col("sym") +: (1 until w).map(i => lead(col("sym"), i).over(wOrd))
-    syms
+    saxSymbols(points, streamCols, start, end, width)
       .withColumn("subword",
         when(parts.map(_.isNotNull).reduce(_ && _), concat(parts: _*)))
       .filter(col("subword").isNotNull)
@@ -434,13 +413,13 @@ object Downsample {
     * the UCR-suite "find streams with this SHAPE" query, tolerant of
     * phase shifts and local speed-ups that defeat ts_similar's aligned
     * Pearson correlation). Each stream first reduces to its
-    * time-ordered PAA profile (the sax() bucket means — rounded integer
-    * micro-units), so the DP runs over GRID-BOUNDED arrays (≤
-    * (end−start)/width entries), never raw points: per candidate the
-    * codegen'd `plans.DtwDistance` kernel costs O(n·m) time and O(m)
-    * memory on metadata-scale rows, and candidates never join each
-    * other — the one query profile broadcasts onto the fleet (the
-    * similarStreams shape) and the top-k is a TakeOrdered.
+    * time-ordered PAA profile (TimeSeriesOps.windowMeans over the
+    * complete buckets — rounded integer micro-units), so the DP runs over
+    * GRID-BOUNDED arrays (≤ (end−start)/width entries), never raw points:
+    * per candidate the codegen'd `plans.DtwDistance` kernel costs O(n·m)
+    * time and O(m) memory on metadata-scale rows, and candidates never
+    * join each other — the one query profile broadcasts onto the fleet
+    * (the similarStreams shape) and the top-k is a TakeOrdered.
     *
     * Determinism contract: profile entries are exact integers, the cell
     * cost |qᵢ−cⱼ| and every min/plus along the warping path stay in
@@ -460,17 +439,11 @@ object Downsample {
     */
   def dtwSimilar(points: DataFrame, streamCols: Seq[String], queryPred: Column,
                  start: Long, end: Long, width: Long, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(width > 0, s"width must be positive, got $width")
     require(k > 0, s"k must be positive, got $k")
     val key = streamCols.map(col)
-    val completeEnd = start + ((end - start) / width) * width
-    val d = col("t_us") - start
-    val profiles = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
-      .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
-      .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
-        .cast("long").as("m_us"))
+    val profiles = TimeSeriesOps.windowMeans(points, streamCols, start,
+        TimeSeriesOps.windowsEnd(start, end, width), width, "m_us")
       .groupBy(key: _*)
       .agg(sort_array(collect_list(struct(col("w_start"), col("m_us"))))
         .getField("m_us").as("pa"))

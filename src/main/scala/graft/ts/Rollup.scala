@@ -218,12 +218,10 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
     */
   private def reaggregate(buckets: DataFrame, streamCols: Seq[String], start: Long,
                           end: Long, width: Long, mergeTo: Option[Int] = None): DataFrame = {
-    val completeEnd = start + ((end - start) / width) * width
-    val complete = buckets.filter(col("w_start") >= start && col("w_start") < completeEnd)
-    val d = col("w_start") - start
+    val complete = buckets.filter(TimeSeriesOps.inWindows(start, end, width, col("w_start")))
     mergeTo.fold(complete)(merge(complete, streamCols, _))
       .groupBy(streamCols.map(col)
-        :+ (lit(start) + d - pmod(d, lit(width))).as("w_win"): _*)
+        :+ TimeSeriesOps.gridBucket(col("w_start"), start, width).as("w_win"): _*)
       .agg(min(col("v_min")).as("v_min"),
         graft.Quant.mean6(sum(col("v_sum_us")), sum(col("v_count"))).as("v_mean"),
         max(col("v_max")).as("v_max"),

@@ -37,6 +37,86 @@ object TimeSeriesOps {
 
   private def streamKey(streamCols: Seq[String]): Seq[Column] = streamCols.map(col)
 
+  // ---------------------------------------------------------------------
+  // The windowed-series layer: each rule every windowed operator shares,
+  // stated once. Windows are `width` wide and anchored at `start`; an
+  // operator reads complete windows only (qtree.go QueryWindow) unless its
+  // doc says it keeps the partial last window.
+  // ---------------------------------------------------------------------
+
+  /** The complete-window cutoff: the end of the last `width` window from
+    * `start` that fits inside [start, end). The span is exact — a range
+    * longer than a long holds is an error, never a wrapped (empty) read.
+    */
+  private[ts] def windowsEnd(start: Long, end: Long, width: Long): Long = {
+    val span =
+      try Math.subtractExact(end, start)
+      catch {
+        case _: ArithmeticException => throw new IllegalArgumentException(
+          s"time range [$start, $end) is longer than a long can hold")
+      }
+    start + Math.multiplyExact(span / width, width)
+  }
+
+  /** `t` in [start, stop). */
+  private[ts] def inRange(start: Long, stop: Long, t: Column = col("t_us")): Column =
+    t >= start && t < stop
+
+  /** `t` in the complete windows of [start, end). */
+  private[ts] def inWindows(start: Long, end: Long, width: Long,
+                            t: Column = col("t_us")): Column =
+    inRange(start, windowsEnd(start, end, width), t)
+
+  /** The grid bucket holding `t`: start + (d − d mod width), d = t − start,
+    * in exact integer arithmetic (a floor(double) at 1.7e15 can be off by
+    * one at bucket boundaries).
+    */
+  private[ts] def gridBucket(t: Column, start: Long, width: Long): Column = {
+    val d = t - start
+    lit(start) + d - pmod(d, lit(width))
+  }
+
+  /** The grid bucket of `t_us`, as `w_start`. */
+  private[ts] def widthBucket(start: Long, width: Long): Column =
+    gridBucket(col("t_us"), start, width).as("w_start")
+
+  /** The exact µ-unit window-mean series: per (key, w_start) over
+    * [start, stop), the window's µ-unit sum over its count rounded to an
+    * integer. Integer means keep every downstream comparison and moment
+    * exact; `stop` is `end` for operators that keep the partial last
+    * window and windowsEnd(...) for the rest.
+    */
+  private[ts] def windowMeans(points: DataFrame, keyCols: Seq[String], start: Long,
+                              stop: Long, width: Long, out: String): DataFrame =
+    points.filter(inRange(start, stop))
+      .groupBy(keyCols.map(col) :+ widthBucket(start, width): _*)
+      .agg(meanUs.as(out))
+
+  private def meanUs: Column =
+    round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0).cast("long")
+
+  /** Pearson r per `by` group over paired µ-unit integers (x, y): exact
+    * DECIMAL moment sums (products of µ-unit means overflow a long), r
+    * assembled in one deterministic float expression and quantized, and a
+    * null r — never NaN or a ÷0 error — when either side has zero variance.
+    * Output: the `by` columns, n_windows, r.
+    */
+  private def pearson(pairs: DataFrame, by: Seq[Column], x: String, y: String): DataFrame = {
+    val xd = col(x).cast("decimal(38,0)")
+    val yd = col(y).cast("decimal(38,0)")
+    val mom = pairs.groupBy(by: _*).agg(
+      count(lit(1)).as("n"),
+      sum(xd).as("sx"), sum(yd).as("sy"),
+      sum(xd * xd).as("sxx"), sum(yd * yd).as("syy"), sum(xd * yd).as("sxy"))
+    val nD = col("n").cast("double")
+    val (sx, sy) = (col("sx").cast("double"), col("sy").cast("double"))
+    val cov = nD * col("sxy").cast("double") - sx * sy
+    val den1 = sqrt(nD * col("sxx").cast("double") - sx * sx)
+    val den2 = sqrt(nD * col("syy").cast("double") - sy * sy)
+    mom.select(mom.columns.take(by.size).map(col) ++ Seq(col("n").as("n_windows"),
+      when(den1 > 0 && den2 > 0, graft.Quant.q6(cov / (den1 * den2))).as("r")): _*)
+  }
+
   /** RawValues: time-ordered scan of [start, end). */
   def rawValues(points: DataFrame, streamCols: Seq[String], start: Long, end: Long): DataFrame =
     points
@@ -61,12 +141,8 @@ object TimeSeriesOps {
     * (qtree.go QueryWindow emits only complete windows).
     */
   def windows(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-              width: Long): DataFrame = {
-    val completeEnd = start + ((end - start) / width) * width
-    statAgg(points
-        .filter(col("t_us") >= start && col("t_us") < completeEnd),
-      streamCols, widthBucket(start, width))
-  }
+              width: Long): DataFrame =
+    statAgg(points.filter(inWindows(start, end, width)), streamCols, widthBucket(start, width))
 
   /** Per-window extrema WITH the times they occurred — the "when did the
     * spike happen" refinement of the StatPoint min/max (BTrDB users chase
@@ -78,9 +154,8 @@ object TimeSeriesOps {
   def argMinMax(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                 width: Long): DataFrame = {
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(
         min(col("value")).as("v_min"),
@@ -104,9 +179,8 @@ object TimeSeriesOps {
   def windowsApprox(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                     width: Long, depth: Int): DataFrame = {
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val buckets = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ shiftleft(shiftright(col("t_us"), depth), depth).as("b"): _*)
       .agg(
         min(col("value")).as("v_min"),
@@ -115,23 +189,13 @@ object TimeSeriesOps {
         count(lit(1)).as("v_count"))
     // a bucket straddling `start` begins before it — clamp so it lands in
     // the first window (the reference folds it into the active window)
-    val d = greatest(col("b"), lit(start)) - start
     buckets
-      .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
+      .groupBy(key :+ gridBucket(greatest(col("b"), lit(start)), start, width).as("w_start"): _*)
       .agg(
         min(col("v_min")).as("v_min"),
         graft.Quant.mean6(sum(col("v_sum_us")), sum(col("v_count"))).as("v_mean"),
         max(col("v_max")).as("v_max"),
         sum(col("v_count")).as("v_count"))
-  }
-
-  /** Exact integer bucketing: start + (d - d % width); avoids double
-    * division on epoch-scale longs (a floor(double) at 1.7e15 can be off
-    * by one at bucket boundaries).
-    */
-  private def widthBucket(start: Long, width: Long): Column = {
-    val d = col("t_us") - start
-    (lit(start) + d - pmod(d, lit(width))).as("w_start")
   }
 
   /** min/max are order-insensitive (bit-exact vs any oracle); the mean is
@@ -231,14 +295,13 @@ object TimeSeriesOps {
                    toVer: Long, start: Long, end: Long, width: Long): DataFrame = {
     require(fromVer <= toVer, s"fromVer $fromVer must be <= toVer $toVer")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
-    val inRange = col("t_us") >= start && col("t_us") < completeEnd
+    val complete = inWindows(start, end, width)
     val changed = points
-      .filter(col("ver") > fromVer && col("ver") <= toVer && inRange)
+      .filter(col("ver") > fromVer && col("ver") <= toVer && complete)
       .select(key :+ widthBucket(start, width): _*)
       .distinct()
     points
-      .filter(col("ver") <= toVer && inRange)
+      .filter(col("ver") <= toVer && complete)
       .select(key :+ widthBucket(start, width) :+ col("value"): _*)
       .join(changed, streamCols :+ "w_start")
       .groupBy(key :+ col("w_start"): _*)
@@ -344,7 +407,6 @@ object TimeSeriesOps {
   def csvExport(points: DataFrame, streams: Seq[(String, Column)],
                 start: Long, end: Long, width: Long): DataFrame = {
     require(streams.nonEmpty, "csvExport needs at least one stream")
-    val d = col("t_us") - start
     val aggs = streams.flatMap { case (label, pred) =>
       val cnt = count(when(pred, lit(1)))
       Seq(
@@ -356,7 +418,7 @@ object TimeSeriesOps {
     }
     points
       .filter(streams.map(_._2).reduce(_ || _) && col("t_us") >= start && col("t_us") < end)
-      .groupBy((lit(start) + d - pmod(d, lit(width))).as("w_start"))
+      .groupBy(widthBucket(start, width))
       .agg(aggs.head, aggs.tail: _*)
   }
 
@@ -438,9 +500,9 @@ object TimeSeriesOps {
   def gaps(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
            width: Long, streams: Option[DataFrame] = None): DataFrame = {
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
+    val completeEnd = windowsEnd(start, end, width)
     val occupied = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inRange(start, completeEnd))
       .select(key :+ widthBucket(start, width): _*)
       .distinct()
     val universe = streams.map(_.select(key: _*))
@@ -475,7 +537,7 @@ object TimeSeriesOps {
   def reliability(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                   width: Long, streams: Option[DataFrame] = None): DataFrame = {
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
+    val completeEnd = windowsEnd(start, end, width)
     val spanUs = (completeEnd - start).toDouble
     val agg = outages(points, streamCols, start, end, width, streams)
       .groupBy(key: _*)
@@ -1019,9 +1081,8 @@ object TimeSeriesOps {
   def histogram(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                 width: Long, binWidth: Double): DataFrame = {
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width)
         :+ floor(col("value") / binWidth).cast("long").as("bin"): _*)
       .agg(count(lit(1)).as("n"))
@@ -1115,11 +1176,10 @@ object TimeSeriesOps {
                   width: Long): DataFrame = {
     val key = streamKey(streamCols)
     val w = Window.partitionBy(key: _*).orderBy(col("t_us"), col("value"))
-    val completeEnd = start + ((end - start) / width) * width
     val inc = points
       .select(key :+ col("t_us") :+ col("value"): _*)
       .withColumn("prev_v", lag(col("value"), 1).over(w))
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .withColumn("inc",
         when(col("prev_v").isNull, lit(null).cast("double"))
           .when(col("value") >= col("prev_v"), col("value") - col("prev_v"))
@@ -1145,9 +1205,8 @@ object TimeSeriesOps {
   def m4(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
          width: Long): DataFrame = {
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(
         min_by(col("value"), struct(col("t_us"), col("value"))).as("v_first"),
@@ -1170,11 +1229,10 @@ object TimeSeriesOps {
   def coverage(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                width: Long, streams: Option[DataFrame] = None): DataFrame = {
     val key = streamKey(streamCols)
-    val nTotal = (end - start) / width
+    val nTotal = (windowsEnd(start, end, width) - start) / width
     require(nTotal > 0, s"empty grid: [$start, $end) at width $width")
-    val completeEnd = start + nTotal * width
     val occ = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key: _*)
       .agg(countDistinct(widthBucket(start, width)).as("n_occ"))
     val withUniverse = streams match {
@@ -1241,9 +1299,8 @@ object TimeSeriesOps {
               width: Long, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val base = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(
         min(col("value")).as("v_min"),
@@ -1274,11 +1331,10 @@ object TimeSeriesOps {
                         width: Long, ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1), s"quantiles must be in [0,1]: $ps")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val grp = key :+ col("w_start")
     val ord = Window.partitionBy(grp: _*).orderBy(col("value"), col("t_us"))
     val ranked = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .select(key :+ widthBucket(start, width) :+ col("t_us") :+ col("value"): _*)
       .withColumn("rn", row_number().over(ord))
       .withColumn("n", count(lit(1)).over(Window.partitionBy(grp: _*)))
@@ -1318,7 +1374,6 @@ object TimeSeriesOps {
   def madWindows(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                  width: Long): DataFrame = {
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val grp = key :+ col("w_start")
     val joinCols = streamCols :+ "w_start"
     // type-7 p50 of `v` (ordered deterministically by (v, tie)) per group
@@ -1334,7 +1389,7 @@ object TimeSeriesOps {
           (lo + (hi - lo) * max(col("idx") - floor(col("idx")))).as(out))
     }
     val base = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .select(key :+ widthBucket(start, width) :+ col("t_us") :+ col("value"): _*)
     val med = median(base, col("value"), col("t_us"), "med")
     val mad = median(
@@ -1363,12 +1418,11 @@ object TimeSeriesOps {
                               accuracy: Int = 10000): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1), s"quantiles must be in [0,1]: $ps")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     def label(p: Double) =
       "p" + (if (p * 100 == (p * 100).floor) (p * 100).toInt.toString
              else java.lang.Double.toString(p).replace('.', '_').replace("0_", ""))
     points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(count(lit(1)).as("n_points"),
         percentile_approx(col("value"),
@@ -1523,37 +1577,17 @@ object TimeSeriesOps {
 
   /** Pearson correlation between two point sets (e.g. two sensor types)
     * per `keyCols`, computed over their aligned window-mean series: both
-    * sides reduce to exact integer micro-unit window means, inner-join on
-    * (key, window), then one aggregation of exact integer moment sums
-    * (DECIMAL — products of µ-unit means overflow a long) with the final
-    * r assembled in one deterministic float expression. Two map-side
-    * partial aggs + one join on (key, window) + one agg on key: every
-    * stage keyed, nothing quadratic, no raw-data window sort.
+    * sides reduce to windowMeans over [start, end) — the partial last
+    * window included — inner-join on (key, window), and pearson() reduces
+    * each key's pairs. Two map-side partial aggs + one join on (key,
+    * window) + one agg on key: every stage keyed, nothing quadratic, no
+    * raw-data window sort.
     */
   def correlation(left: DataFrame, right: DataFrame, keyCols: Seq[String],
                   start: Long, end: Long, width: Long): DataFrame = {
-    val key = keyCols.map(col)
-    def meansOf(df: DataFrame, out: String): DataFrame = {
-      val d = col("t_us") - start
-      df.filter(col("t_us") >= start && col("t_us") < end)
-        .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
-        .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
-          .cast("long").as(out))
-    }
-    val joined = meansOf(left, "x").join(meansOf(right, "y"), keyCols :+ "w_start")
-    val xd = col("x").cast("decimal(38,0)")
-    val yd = col("y").cast("decimal(38,0)")
-    val mom = joined.groupBy(key: _*).agg(
-      count(lit(1)).as("n"),
-      sum(xd).as("sx"), sum(yd).as("sy"),
-      sum(xd * xd).as("sxx"), sum(yd * yd).as("syy"), sum(xd * yd).as("sxy"))
-    val nD = col("n").cast("double")
-    val (sx, sy) = (col("sx").cast("double"), col("sy").cast("double"))
-    val cov = nD * col("sxy").cast("double") - sx * sy
-    val den1 = sqrt(nD * col("sxx").cast("double") - sx * sx)
-    val den2 = sqrt(nD * col("syy").cast("double") - sy * sy)
-    mom.select(key ++ Seq(col("n").as("n_windows"),
-      when(den1 > 0 && den2 > 0, graft.Quant.q6(cov / (den1 * den2))).as("r")): _*)
+    val joined = windowMeans(left, keyCols, start, end, width, "x")
+      .join(windowMeans(right, keyCols, start, end, width, "y"), keyCols :+ "w_start")
+    pearson(joined, keyCols.map(col), "x", "y")
   }
 
   /** Classical seasonal decomposition (STL-lite): per stream, each fine
@@ -1579,15 +1613,10 @@ object TimeSeriesOps {
                 width: Long, period: Int): DataFrame = {
     require(period >= 2, s"period must be >= 2, got $period")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val h = period / 2
     val f = 2 * h + 1 // frame length: period for odd, period+1 for even (2×MA)
-    val d = col("t_us") - start
-    val means = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
-      .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
-      .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
-        .cast("long").as("m_us"))
+    val means = windowMeans(points, streamCols, start, windowsEnd(start, end, width), width,
+      "m_us")
     val wf = Window.partitionBy(key: _*).orderBy(col("w_start"))
       .rowsBetween(-h, h)
     val doubled =
@@ -1619,42 +1648,20 @@ object TimeSeriesOps {
   }
 
   /** Windowed Pearson correlation — correlation() resolved per COARSE
-    * window instead of one global r: both sides reduce to fine
-    * (width-wide) exact integer window means, join on (key, fine window),
-    * then the moment aggregation groups by the containing coarse window —
-    * the rolling-correlation panel ("when did these two decouple?"). Same
-    * exact-DECIMAL moment arithmetic as correlation(); n per coarse
-    * window = fine windows where BOTH sides have data.
+    * window instead of one global r: the same fine (width-wide) window
+    * means joined on (key, fine window), reduced by pearson() per
+    * containing coarse window — the rolling-correlation panel ("when did
+    * these two decouple?"). n per coarse window = fine windows where BOTH
+    * sides have data.
     */
   def windowedCorrelation(left: DataFrame, right: DataFrame, keyCols: Seq[String],
                           start: Long, end: Long, width: Long,
                           coarse: Long): DataFrame = {
     require(coarse % width == 0, s"coarse $coarse must be a multiple of width $width")
-    val key = keyCols.map(col)
-    def meansOf(df: DataFrame, out: String): DataFrame = {
-      val d = col("t_us") - start
-      df.filter(col("t_us") >= start && col("t_us") < end)
-        .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
-        .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
-          .cast("long").as(out))
-    }
-    val joined = meansOf(left, "x").join(meansOf(right, "y"), keyCols :+ "w_start")
-    val dc = col("w_start") - start
-    val xd = col("x").cast("decimal(38,0)")
-    val yd = col("y").cast("decimal(38,0)")
-    val mom = joined
-      .groupBy(key :+ (lit(start) + dc - pmod(dc, lit(coarse))).as("c_start"): _*)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(xd).as("sx"), sum(yd).as("sy"),
-        sum(xd * xd).as("sxx"), sum(yd * yd).as("syy"), sum(xd * yd).as("sxy"))
-    val nD = col("n").cast("double")
-    val (sx, sy) = (col("sx").cast("double"), col("sy").cast("double"))
-    val cov = nD * col("sxy").cast("double") - sx * sy
-    val den1 = sqrt(nD * col("sxx").cast("double") - sx * sx)
-    val den2 = sqrt(nD * col("syy").cast("double") - sy * sy)
-    mom.select(key ++ Seq(col("c_start"), col("n").as("n_windows"),
-      when(den1 > 0 && den2 > 0, graft.Quant.q6(cov / (den1 * den2))).as("r")): _*)
+    val joined = windowMeans(left, keyCols, start, end, width, "x")
+      .join(windowMeans(right, keyCols, start, end, width, "y"), keyCols :+ "w_start")
+    pearson(joined, keyCols.map(col) :+ gridBucket(col("w_start"), start, coarse).as("c_start"),
+      "x", "y")
   }
 
   /** Lag cross-correlation — which time shift aligns two streams best
@@ -1676,13 +1683,6 @@ object TimeSeriesOps {
                      lags: Seq[Long]): DataFrame = {
     require(lags.nonEmpty, "at least one lag required")
     val key = keyCols.map(col)
-    def meansOf(df: DataFrame, out: String): DataFrame = {
-      val d = col("t_us") - start
-      df.filter(col("t_us") >= start && col("t_us") < end)
-        .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
-        .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
-          .cast("long").as(out))
-    }
     val phases = lags.map(l => math.floorMod(l, width)).distinct
     // all-multiples case (single phase 0): y is the SAME aggregation
     // shape as x — no explode, no shifted-grid arithmetic, one narrow
@@ -1692,17 +1692,16 @@ object TimeSeriesOps {
     // start − phase, so y_w = w_start − lag lands on it)
     val y =
       if (phases == Seq(0L))
-        meansOf(right, "y")
+        windowMeans(right, keyCols, start, end, width, "y")
           .withColumn("phase", lit(0L))
           .withColumnRenamed("w_start", "y_w")
       else {
         val dy = col("t_us") - (lit(start) - col("phase"))
-        right.filter(col("t_us") >= start && col("t_us") < end)
+        right.filter(inRange(start, end))
           .withColumn("phase", explode(array(phases.map(lit): _*)))
           .groupBy(key ++ Seq(col("phase"),
             (col("t_us") - pmod(dy, lit(width))).as("y_w")): _*)
-          .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
-            .cast("long").as("y"))
+          .agg(meanUs.as("y"))
       }
     // the explicit not-null (always true: t_us is filtered non-null)
     // mirrors the isnotnull(grouping) conjunct the JOIN pushes into y's
@@ -1710,25 +1709,12 @@ object TimeSeriesOps {
     // w_start − lag, which never pushes through — so the two sides'
     // scan+partial-agg subtrees canonicalize EQUAL and AQE serves y
     // from x's shuffle (ReusedExchange) in the autocorrelation case
-    val xl = meansOf(left, "x")
+    val xl = windowMeans(left, keyCols, start, end, width, "x")
       .filter(col("w_start").isNotNull)
       .withColumn("lag", explode(array(lags.map(lit): _*)))
       .withColumn("phase", pmod(col("lag"), lit(width)))
       .withColumn("y_w", col("w_start") - col("lag"))
-    val joined = xl.join(y, keyCols ++ Seq("phase", "y_w"))
-    val xd = col("x").cast("decimal(38,0)")
-    val yd = col("y").cast("decimal(38,0)")
-    val mom = joined.groupBy(key :+ col("lag"): _*).agg(
-      count(lit(1)).as("n"),
-      sum(xd).as("sx"), sum(yd).as("sy"),
-      sum(xd * xd).as("sxx"), sum(yd * yd).as("syy"), sum(xd * yd).as("sxy"))
-    val nD = col("n").cast("double")
-    val (sx, sy) = (col("sx").cast("double"), col("sy").cast("double"))
-    val cov = nD * col("sxy").cast("double") - sx * sy
-    val den1 = sqrt(nD * col("sxx").cast("double") - sx * sx)
-    val den2 = sqrt(nD * col("syy").cast("double") - sy * sy)
-    mom.select(key ++ Seq(col("lag"), col("n").as("n_windows"),
-      when(den1 > 0 && den2 > 0, graft.Quant.q6(cov / (den1 * den2))).as("r")): _*)
+    pearson(xl.join(y, keyCols ++ Seq("phase", "y_w")), key :+ col("lag"), "x", "y")
   }
 
   /** Rolling-origin backtest of the Holt-Winters one-step forecast — the
@@ -1788,11 +1774,10 @@ object TimeSeriesOps {
                  end: Long, width: Long): DataFrame = {
     require(width > 0, s"width must be positive, got $width")
     val key = streamKey(streamCols)
-    val w = (end - start) / width // complete windows only
+    val w = (windowsEnd(start, end, width) - start) / width
     require(w > 0, s"range [$start,$end) holds no complete window of $width")
-    val completeEnd = start + w * width
     val counts = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(count(lit(1)).as("n"))
     val nDec = col("n").cast("decimal(38,0)")
@@ -1830,12 +1815,7 @@ object TimeSeriesOps {
   def ordinalPatterns(points: DataFrame, streamCols: Seq[String], start: Long,
                       end: Long, width: Long): DataFrame = {
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
-    val means = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
-      .groupBy(key :+ widthBucket(start, width): _*)
-      .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
-        .cast("long").as("a"))
+    val means = windowMeans(points, streamCols, start, windowsEnd(start, end, width), width, "a")
     val ord = Window.partitionBy(key: _*).orderBy(col("w_start"))
     val (a, b, c) = (col("a"), col("b"), col("c"))
     val (p1, p2, p3) = (a <= b, a <= c, b <= c)
@@ -1897,36 +1877,17 @@ object TimeSeriesOps {
     * stream's series (≤ #windows rows, metadata-scale) broadcasts onto
     * it; one keyed moment aggregation per candidate and a TakeOrdered
     * top-k — no pairwise stream join, no raw-data sort, so the search is
-    * one scan + one broadcast join regardless of fleet size. Same exact
-    * DECIMAL moment arithmetic as correlation(), so the oracle replays it
-    * bit-for-bit.
+    * one scan + one broadcast join regardless of fleet size. Means keep the
+    * partial last window (the correlation() range), and pearson()'s exact
+    * moments let the oracle replay r bit-for-bit.
     */
   def similarStreams(points: DataFrame, streamCols: Seq[String], queryPred: Column,
                      start: Long, end: Long, width: Long, k: Int): DataFrame = {
     val key = streamKey(streamCols)
-    val d = col("t_us") - start
-    val means = points
-      .filter(col("t_us") >= start && col("t_us") < end)
-      .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
-      .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
-        .cast("long").as("v"))
+    val means = windowMeans(points, streamCols, start, end, width, "v")
     val qMeans = broadcast(means.filter(queryPred)
       .select(col("w_start"), col("v").as("q")))
-    val xd = col("v").cast("decimal(38,0)")
-    val yd = col("q").cast("decimal(38,0)")
-    val mom = means.filter(!queryPred).join(qMeans, "w_start")
-      .groupBy(key: _*).agg(
-        count(lit(1)).as("n"),
-        sum(xd).as("sx"), sum(yd).as("sy"),
-        sum(xd * xd).as("sxx"), sum(yd * yd).as("syy"), sum(xd * yd).as("sxy"))
-    val nD = col("n").cast("double")
-    val (sx, sy) = (col("sx").cast("double"), col("sy").cast("double"))
-    val cov = nD * col("sxy").cast("double") - sx * sy
-    val den1 = sqrt(nD * col("sxx").cast("double") - sx * sx)
-    val den2 = sqrt(nD * col("syy").cast("double") - sy * sy)
-    val scored = mom
-      .select(key ++ Seq(col("n").as("n_windows"),
-        when(den1 > 0 && den2 > 0, graft.Quant.q6(cov / (den1 * den2))).as("r")): _*)
+    val scored = pearson(means.filter(!queryPred).join(qMeans, "w_start"), key, "v", "q")
       .filter(col("r").isNotNull)
     val ord = col("r").desc +: key.map(_.asc)
     scored.orderBy(ord: _*).limit(k)
@@ -2045,9 +2006,8 @@ object TimeSeriesOps {
     require(widths.nonEmpty && widths.zip(widths.tail).forall { case (a, b) => b % a == 0 },
       s"each width must divide the next: $widths")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / widths.max) * widths.max
     val fine = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, widths.max))
       .groupBy(key :+ widthBucket(start, widths.head): _*)
       .agg(
         min(col("value")).as("v_min"),
@@ -2055,9 +2015,8 @@ object TimeSeriesOps {
         sum(graft.Quant.us6(col("value"))).as("v_sum_us"),
         count(lit(1)).as("v_count"))
     val levels = widths.tail.scanLeft(widths.head -> fine) { case ((_, prev), wid) =>
-      val d = col("w_start") - start
       wid -> prev
-        .groupBy(key :+ (lit(start) + d - pmod(d, lit(wid))).as("w_start"): _*)
+        .groupBy(key :+ gridBucket(col("w_start"), start, wid).as("w_start"): _*)
         .agg(
           min(col("v_min")).as("v_min"),
           max(col("v_max")).as("v_max"),
@@ -2082,9 +2041,8 @@ object TimeSeriesOps {
                   start: Long, end: Long, width: Long): DataFrame = {
     require(distinctCols.nonEmpty, "cardinality needs at least one distinct column")
     val key = keyCols.map(col)
-    val completeEnd = start + ((end - start) / width) * width
     points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(countDistinct(distinctCols.head, distinctCols.tail: _*).as("n_streams"),
         count(lit(1)).as("n_points"))
@@ -2104,9 +2062,8 @@ object TimeSeriesOps {
                         relativeSD: Double = 0.01): DataFrame = {
     require(distinctCols.nonEmpty, "cardinality needs at least one distinct column")
     val key = keyCols.map(col)
-    val completeEnd = start + ((end - start) / width) * width
     points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(approx_count_distinct(struct(distinctCols.map(col): _*), relativeSD)
           .as("n_streams_approx"),
@@ -2129,9 +2086,8 @@ object TimeSeriesOps {
                     width: Long, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val counts = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(count(lit(1)).as("n_points"))
     val ord = col("n_points").desc +: key.map(_.asc)
@@ -2268,10 +2224,9 @@ object TimeSeriesOps {
   def resample(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                width: Long): DataFrame = {
     val key = streamKey(streamCols)
-    val d = col("t_us") - start
     val bucketed = points
-      .filter(col("t_us") >= start && col("t_us") < end)
-      .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("g_t"): _*)
+      .filter(inRange(start, end))
+      .groupBy(key :+ gridBucket(col("t_us"), start, width).as("g_t"): _*)
       // (t_us, value) argmax: deterministic under equal-timestamp ties
       .agg(max_by(col("value"), struct(col("t_us"), col("value"))).as("last_v"))
     val grid = points.select(key: _*).distinct()
@@ -2302,11 +2257,10 @@ object TimeSeriesOps {
   def stddevWindows(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                     width: Long): DataFrame = {
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val us = graft.Quant.us6(col("value")).cast("decimal(38,0)")
     val bigD = col("n") * col("s2") - col("s1") * col("s1")
     points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(sum(us).as("s1"), sum(us * us).as("s2"), count(lit(1)).as("n"))
       .select(key ++ Seq(col("w_start"),
@@ -2346,10 +2300,9 @@ object TimeSeriesOps {
     require(k > 0, s"k must be positive, got $k")
     require(nSigma > 0, s"nSigma must be positive, got $nSigma")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val us = graft.Quant.us6(col("value")).cast("decimal(38,0)")
     val base = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(sum(us).as("s1"), sum(us * us).as("s2"), count(lit(1)).as("n"))
     val frame = Window.partitionBy(key: _*).orderBy(col("w_start"))
@@ -2388,12 +2341,11 @@ object TimeSeriesOps {
   def deriv(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
             width: Long): DataFrame = {
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val d = col("t_us") - start
     val mom = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .select(key ++ Seq(
-        (lit(start) + d - pmod(d, lit(width))).as("w_start"),
+        widthBucket(start, width),
         pmod(d, lit(width)).cast("decimal(38,0)").as("tr"),
         graft.Quant.us6(col("value")).cast("decimal(38,0)").as("vu")): _*)
       .groupBy(key :+ col("w_start"): _*)
@@ -2511,17 +2463,6 @@ object TimeSeriesOps {
       .drop("i_bucket")
   }
 
-  /** Offset comparison (PromQL `offset` / week-over-week): each window's
-    * mean against the same stream's mean `offsetUs` earlier, with absolute
-    * and percent change. Window means are rounded integer micro-units (the
-    * correlation contract), so the difference is exact integer arithmetic
-    * and the percent change is a single scale-0 round of an integer ratio
-    * (the graft.Quant-portable form). The prior window comes from a
-    * range-frame window function ([w_start−offset, w_start−offset]), NOT a
-    * self-join — one scan, one shuffle on the stream key; rows_between
-    * lag(k) would miscount across empty windows. Windows without a
-    * comparator are dropped.
-    */
   /** The integer core shared by offsetCompare and topMovers: rounded
     * µ-unit window means with the offset-prior mean via a range-frame
     * window (one scan, no self-join), rows without a comparator dropped.
@@ -2531,12 +2472,8 @@ object TimeSeriesOps {
     require(offsetUs > 0 && offsetUs % width == 0,
       s"offset must be a positive multiple of the window width, got $offsetUs / $width")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
-    val means = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
-      .groupBy(key :+ widthBucket(start, width): _*)
-      .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
-        .cast("long").as("m_us"))
+    val means = windowMeans(points, streamCols, start, windowsEnd(start, end, width), width,
+      "m_us")
     val w = Window.partitionBy(key: _*).orderBy(col("w_start"))
       .rangeBetween(-offsetUs, -offsetUs)
     means
@@ -2544,6 +2481,17 @@ object TimeSeriesOps {
       .filter(col("prev_us").isNotNull)
   }
 
+  /** Offset comparison (PromQL `offset` / week-over-week): each window's
+    * mean against the same stream's mean `offsetUs` earlier, with absolute
+    * and percent change. Window means are rounded integer micro-units
+    * (windowMeans over the complete windows), so the difference is exact
+    * integer arithmetic and the percent change is a single scale-0 round
+    * of an integer ratio (the graft.Quant-portable form). The prior
+    * window comes from a range-frame window function ([w_start−offset,
+    * w_start−offset]), NOT a self-join — one scan, one shuffle on the
+    * stream key; rows_between lag(k) would miscount across empty windows.
+    * Windows without a comparator are dropped.
+    */
   def offsetCompare(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                     width: Long, offsetUs: Long): DataFrame = {
     val key = streamKey(streamCols)
@@ -2584,23 +2532,22 @@ object TimeSeriesOps {
   /** Aligned-series binary arithmetic (the PromQL vector-division class:
     * error rate = errors / requests, cache hit ratio, ad CTR): per
     * (key, window), the ratio of the two sides' exact µ-unit value SUMS
-    * over the shared grid — sums, not means, so the ratio weighs every
-    * event equally (a mean-of-means ratio would over-weight sparse
-    * windows). Inner join on (key, window): the ratio exists only where
-    * both sides observed data; a zero denominator yields NULL, never a
-    * float Inf. Two map-side-partial aggs + one co-partitioned join —
-    * the correlation() shape without the moment math.
+    * over the shared grid of [start, end), the partial last window
+    * included — sums, not means, so the ratio weighs every event equally
+    * (a mean-of-means ratio would over-weight sparse windows). Inner join
+    * on (key, window): the ratio exists only where both sides observed
+    * data; a zero denominator yields NULL, never a float Inf. Two
+    * map-side-partial aggs + one co-partitioned join — the correlation()
+    * shape without the moment math.
     */
   def ratio(left: DataFrame, right: DataFrame, keyCols: Seq[String],
             start: Long, end: Long, width: Long): DataFrame = {
     val key = keyCols.map(col)
-    def sums(df: DataFrame, tag: String): DataFrame = {
-      val d = col("t_us") - start
-      df.filter(col("t_us") >= start && col("t_us") < end)
-        .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
+    def sums(df: DataFrame, tag: String): DataFrame =
+      df.filter(inRange(start, end))
+        .groupBy(key :+ widthBucket(start, width): _*)
         .agg(sum(graft.Quant.us6(col("value"))).as(s"${tag}_us"),
           count(lit(1)).as(s"n_$tag"))
-    }
     sums(left, "l").join(sums(right, "r"), keyCols :+ "w_start")
       .select(key ++ Seq(col("w_start"), col("n_l"), col("n_r"),
         (col("l_us").cast("double") / 1e6 + lit(0d)).as("l_sum"),
@@ -2625,11 +2572,10 @@ object TimeSeriesOps {
   def transitions(points: DataFrame, userCols: Seq[String], typeCol: String,
                   start: Long, end: Long, width: Long): DataFrame = {
     val key = userCols.map(col)
-    val completeEnd = start + ((end - start) / width) * width
     val ord = Window.partitionBy(key :+ col("w_start"): _*)
       .orderBy(col("t_us"), col(typeCol))
     val counts = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .select(key ++ Seq(widthBucket(start, width), col("t_us"), col(typeCol)): _*)
       .withColumn("from_type", lag(col(typeCol), 1).over(ord))
       .filter(col("from_type").isNotNull)
@@ -2654,11 +2600,10 @@ object TimeSeriesOps {
   def transitionDwell(points: DataFrame, userCols: Seq[String], typeCol: String,
                       start: Long, end: Long, width: Long): DataFrame = {
     val key = userCols.map(col)
-    val completeEnd = start + ((end - start) / width) * width
     val ord = Window.partitionBy(key :+ col("w_start"): _*)
       .orderBy(col("t_us"), col(typeCol))
     points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .select(key ++ Seq(widthBucket(start, width), col("t_us"), col(typeCol)): _*)
       .withColumn("from_type", lag(col(typeCol), 1).over(ord))
       .withColumn("dwell_us", col("t_us") - lag(col("t_us"), 1).over(ord))
@@ -2693,9 +2638,8 @@ object TimeSeriesOps {
                 end: Long, width: Long): DataFrame = {
     require(width > 0, s"width must be positive, got $width")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val acts = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .select(key :+ widthBucket(start, width): _*)
       .distinct()
     val cohorts = acts.groupBy(key: _*).agg(min(col("w_start")).as("cohort_w"))
@@ -2725,9 +2669,9 @@ object TimeSeriesOps {
                   end: Long, width: Long, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
+    val completeEnd = windowsEnd(start, end, width)
     val acts = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inRange(start, completeEnd))
       .select(key :+ widthBucket(start, width): _*)
       .distinct()
     val dau = acts.groupBy(col("w_start")).agg(count(lit(1)).as("active"))
@@ -2764,17 +2708,15 @@ object TimeSeriesOps {
              width: Long, horizonUs: Long): DataFrame = {
     require(horizonUs > 0, s"horizon must be positive, got $horizonUs")
     val key = keyCols.map(col)
-    val completeEnd = start + ((end - start) / width) * width
     val l = base
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .select(key ++ Seq((-col("t_us")).as("t_neg"), col("value")): _*)
     val r = conv
       .groupBy(key :+ col("t_us"): _*).agg(max(col("value")).as("value"))
       .select(key ++ Seq((-col("t_us")).as("t_neg"), col("value")): _*)
     val joined = asofJoin(l, r, keyCols, asOfCol = "t_neg", toleranceUs = Some(horizonUs))
-    val d = -col("t_neg") - start
     joined
-      .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
+      .groupBy(key :+ gridBucket(-col("t_neg"), start, width).as("w_start"): _*)
       .agg(count(lit(1)).as("n_base"),
         count(col("asof_value")).as("n_converted"))
       .withColumn("cvr",
@@ -2801,11 +2743,9 @@ object TimeSeriesOps {
                start: Long, end: Long, width: Long, maxLen: Int, k: Int): DataFrame = {
     require(maxLen > 0 && k > 0, s"maxLen/k must be positive, got $maxLen/$k")
     val key = keyCols.map(col)
-    val completeEnd = start + ((end - start) / width) * width
-    val d = col("t_us") - start
     val paths = events
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
-      .groupBy(key :+ (lit(start) + d - pmod(d, lit(width))).as("w_start"): _*)
+      .filter(inWindows(start, end, width))
+      .groupBy(key :+ widthBucket(start, width): _*)
       .agg(concat_ws(">", slice(
         transform(array_sort(collect_list(struct(col("t_us"), col(typeCol).as("et")))),
           x => x.getField("et")), 1, maxLen)).as("path"))
@@ -2884,11 +2824,11 @@ object TimeSeriesOps {
     * (qtree windows → client loop); here it is one declarative plan.
     *
     * Determinism: window means are rounded integer micro-units (the
-    * offsetCompare / correlation contract), so every comparison —
-    * neighbor max, strict dominance, prominence threshold — is exact
-    * integer arithmetic; requiring a full k-window shoulder on both
-    * sides (count, not just max) keeps boundary windows out without an
-    * engine-dependent null rule. Ties (equal neighbor mean) are NOT
+    * windowMeans values), so every comparison — neighbor max, strict
+    * dominance, prominence threshold — is exact integer arithmetic;
+    * requiring a full k-window shoulder on both sides (count, not just
+    * max) keeps boundary windows out without an engine-dependent null
+    * rule. Ties (equal neighbor mean) are NOT
     * peaks: strictness is the tiebreak, so a plateau never fires.
     *
     * Scale shape: one map-side-partial groupBy to window means, then
@@ -2902,9 +2842,8 @@ object TimeSeriesOps {
     require(k > 0, s"k must be positive, got $k")
     require(minPromUs >= 0, s"minPromUs must be non-negative, got $minPromUs")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val sums = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
     val means = sums.select(key ++ Seq(col("w_start"),
@@ -2954,9 +2893,8 @@ object TimeSeriesOps {
     require(k > 0, s"k must be positive, got $k")
     require(minShiftUs >= 0, s"minShiftUs must be non-negative, got $minShiftUs")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val sums = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
     val ord = Window.partitionBy(key: _*).orderBy(col("w_start"))
@@ -3009,9 +2947,8 @@ object TimeSeriesOps {
   def savgol(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
              width: Long): DataFrame = {
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val sums = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .groupBy(key :+ widthBucket(start, width): _*)
       .agg(sum(graft.Quant.us6(col("value"))).as("sum_us"), count(lit(1)).as("n"))
     val means = sums.select(key ++ Seq(col("w_start"),
@@ -3044,11 +2981,10 @@ object TimeSeriesOps {
                      width: Long, whisker: Double = 1.5): DataFrame = {
     require(whisker > 0, s"whisker must be positive, got $whisker")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
     val grp = key :+ col("w_start")
     val joinCols = streamCols :+ "w_start"
     val base = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inWindows(start, end, width))
       .select(key :+ widthBucket(start, width) :+ col("t_us") :+ col("value"): _*)
     val ord = Window.partitionBy(grp: _*).orderBy(col("value"), col("t_us"))
     val ranked = base
@@ -3088,29 +3024,23 @@ object TimeSeriesOps {
     * The N² blow-up is tamed by construction: the roster is a
     * TakeOrdered top-N (deterministic ties by stream key), broadcast
     * into the mean frame, so the self-join is (N · grid)×(N · grid) on
-    * the window equi-key — metadata scale, never fleet×fleet. Moments
-    * are the correlation() exact-DECIMAL forms over rounded-µ-unit
-    * means; each unordered pair appears once (strict lexicographic key
-    * order), diagonal excluded.
+    * the window equi-key — metadata scale, never fleet×fleet. pearson()
+    * reduces each pair's window means; each unordered pair appears once
+    * (strict lexicographic key order), diagonal excluded.
     */
   def xcorrMatrix(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                   width: Long, topN: Int): DataFrame = {
     require(topN >= 2, s"topN must be >= 2, got $topN")
     val key = streamKey(streamCols)
-    val completeEnd = start + ((end - start) / width) * width
-    val means = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
-      .groupBy(key :+ widthBucket(start, width): _*)
-      .agg(round(sum(graft.Quant.us6(col("value"))).cast("double") / count(lit(1)), 0)
-        .cast("long").as("m_us"),
-        count(lit(1)).as("n"))
+    val completeEnd = windowsEnd(start, end, width)
+    val means = windowMeans(points, streamCols, start, completeEnd, width, "m_us")
     // the roster needs only per-stream POINT counts — a count-only
     // aggregate straight off the scan, so its second pass reads (key,
     // ts) with the value column pruned instead of re-deriving the mean
     // arithmetic (Catalyst reuses the means exchange across the two
     // join sides but not across the differently-shaped roster branch)
     val roster = points
-      .filter(col("t_us") >= start && col("t_us") < completeEnd)
+      .filter(inRange(start, completeEnd))
       .groupBy(key: _*).agg(count(lit(1)).as("n_points"))
       .orderBy(col("n_points").desc +: key: _*)
       .limit(topN)
@@ -3128,20 +3058,7 @@ object TimeSeriesOps {
         .foldLeft(lit(true))(_ && _)
       eqPrefix && col(s"${c}_a") < col(s"${c}_b")
     }.reduce(_ || _)
-    val xd = col("x").cast("decimal(38,0)")
-    val yd = col("y").cast("decimal(38,0)")
     val pairKey = streamCols.map(c => col(s"${c}_a")) ++ streamCols.map(c => col(s"${c}_b"))
-    val mom = a.join(b, col("w_a") === col("w_b") && pairLt)
-      .groupBy(pairKey: _*)
-      .agg(count(lit(1)).as("n"),
-        sum(xd).as("sx"), sum(yd).as("sy"),
-        sum(xd * xd).as("sxx"), sum(yd * yd).as("syy"), sum(xd * yd).as("sxy"))
-    val nD = col("n").cast("double")
-    val (sx, sy) = (col("sx").cast("double"), col("sy").cast("double"))
-    val cov = nD * col("sxy").cast("double") - sx * sy
-    val den1 = sqrt(nD * col("sxx").cast("double") - sx * sx)
-    val den2 = sqrt(nD * col("syy").cast("double") - sy * sy)
-    mom.select(pairKey ++ Seq(col("n").as("n_windows"),
-      when(den1 > 0 && den2 > 0, graft.Quant.q6(cov / (den1 * den2))).as("r")): _*)
+    pearson(a.join(b, col("w_a") === col("w_b") && pairLt), pairKey, "x", "y")
   }
 }

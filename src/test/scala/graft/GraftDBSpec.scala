@@ -30,6 +30,9 @@ class GraftDBSpec extends SparkSuite {
       && aw.head.getLong(4) == 16L)
     val w = s.windows(0, 60, 10).collect()
     assert(w.length == 6) // complete windows only
+    // a span past a long's range is an error, never a wrapped empty read
+    val e = intercept[IllegalArgumentException](s.windows(Long.MinValue, Long.MaxValue, 10))
+    assert(e.getMessage.contains(s"[${Long.MinValue}, ${Long.MaxValue})"), e.getMessage)
     // auto resolution: span 64, target 4 → pw=4 (16-wide buckets, 4 windows)
     val auto = s.autoWindows(0, 64, 4).collect()
     assert(auto.length == 4)

@@ -32,6 +32,13 @@ class TimeSeriesOpsSpec extends SparkSuite {
     assert(w.map(_.getLong(1)).toSeq == Seq(0L, 10L))
   }
 
+  test("a time range longer than a long holds is an error, not an empty read") {
+    val p = pts((0L, 1.0), (10L, 2.0))
+    val e = intercept[IllegalArgumentException](
+      TimeSeriesOps.windows(p, Seq("uuid"), Long.MinValue, Long.MaxValue, 10L))
+    assert(e.getMessage.contains(s"[${Long.MinValue}, ${Long.MaxValue})"), e.getMessage)
+  }
+
   test("aligned windows bucket on power-of-two boundaries") {
     val p = pts((0L, 1.0), (15L, 2.0), (16L, 3.0), (31L, 4.0), (32L, 5.0))
     val w = TimeSeriesOps.alignedWindows(p, Seq("uuid"), 0L, 64L, 4)
@@ -687,13 +694,26 @@ class TimeSeriesOpsSpec extends SparkSuite {
 
   test("correlation is ±1 on exactly linear window-mean series") {
     val left = Seq((1L, 5L, 1.0), (1L, 15L, 2.0), (1L, 25L, 3.0),
-      (2L, 5L, 1.0), (2L, 15L, 2.0), (2L, 25L, 3.0)).toDF("user_id", "t_us", "value")
+      (2L, 5L, 1.0), (2L, 15L, 2.0), (2L, 25L, 3.0),
+      (3L, 5L, 1.0), (3L, 15L, 2.0), (3L, 25L, 3.0)).toDF("user_id", "t_us", "value")
     val right = Seq((1L, 7L, 2.0), (1L, 17L, 4.0), (1L, 27L, 6.0),
-      (2L, 7L, 6.0), (2L, 17L, 4.0), (2L, 27L, 2.0)).toDF("user_id", "t_us", "value")
+      (2L, 7L, 6.0), (2L, 17L, 4.0), (2L, 27L, 2.0),
+      (3L, 7L, 4.0), (3L, 17L, 4.0), (3L, 27L, 4.0)).toDF("user_id", "t_us", "value")
     val r = TimeSeriesOps.correlation(left, right, Seq("user_id"), 0L, 30L, 10L)
       .orderBy("user_id").collect()
-    assert(r.map(_.getLong(1)).toSeq == Seq(3L, 3L))
+    assert(r.map(_.getLong(1)).toSeq == Seq(3L, 3L, 3L))
     assert(r(0).getDouble(2) == 1.0 && r(1).getDouble(2) == -1.0)
+    // user 3's right side is constant: zero variance reads as a null r —
+    // not NaN, not a ÷0 error — from every operator on the shared reducer
+    assert(r(2).isNullAt(2))
+    val wr = TimeSeriesOps.windowedCorrelation(left, right, Seq("user_id"), 0L, 30L, 10L, 30L)
+      .orderBy("user_id").collect()
+    assert(wr.map(_.isNullAt(3)).toSeq == Seq(false, false, true))
+    assert(wr(0).getDouble(3) == 1.0 && wr(1).getDouble(3) == -1.0)
+    val lr = TimeSeriesOps.lagCorrelation(left, right, Seq("user_id"), 0L, 30L, 10L, Seq(0L))
+      .orderBy("user_id").collect()
+    assert(lr.map(_.isNullAt(3)).toSeq == Seq(false, false, true))
+    assert(lr(0).getDouble(3) == 1.0 && lr(1).getDouble(3) == -1.0)
   }
 
   test("seasonal profile folds time onto the repeating period") {
@@ -1175,12 +1195,16 @@ class TimeSeriesOpsSpec extends SparkSuite {
       .union(stream("b", Seq(2, 4, 6, 8, 10).map(_.toDouble)))  // r(a,b)=+1
       .union(stream("c", Seq(5, 4, 3, 2, 1).map(_.toDouble)))   // r(a,c)=-1
       .union(stream("d", Seq(9.0)))                             // low volume
-    val m = TimeSeriesOps.xcorrMatrix(p, Seq("uuid"), 0L, 50L, 10L, topN = 3)
+      .union(stream("e", Seq.fill(5)(7.0)))                     // constant
+    val m = TimeSeriesOps.xcorrMatrix(p, Seq("uuid"), 0L, 50L, 10L, topN = 4)
       .orderBy("uuid_a", "uuid_b").collect()
-    // top-3 roster excludes d; 3 streams → 3 pairs, each once, a<b order
+    // top-4 roster excludes d; 4 streams → 6 pairs, each once, a<b order
     assert(m.map(r => (r.getString(0), r.getString(1))).toSeq ==
-      Seq(("a", "b"), ("a", "c"), ("b", "c")))
-    assert(m.map(_.getDouble(m.head.fieldIndex("r"))).toSeq == Seq(1.0, -1.0, -1.0))
+      Seq(("a", "b"), ("a", "c"), ("a", "e"), ("b", "c"), ("b", "e"), ("c", "e")))
+    // a constant stream has zero variance: a null r, not NaN or an error
+    val ri = m.head.fieldIndex("r")
+    assert(m.map(r => if (r.isNullAt(ri)) None else Some(r.getDouble(ri))).toSeq ==
+      Seq(Some(1.0), Some(-1.0), None, Some(-1.0), None, None))
   }
 
   test("gap histogram buckets by bit length with equal-µs ties in bucket 0") {
