@@ -50,4 +50,15 @@ case class SliceIdExpr(child: Expression, cuts: Array[Long])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+
+  // the cuts compare and hash by content (a case-class Array field would
+  // compare by reference) and print as their count and end points — a
+  // campaign plan holds 2047 of them
+  override def equals(other: Any): Boolean = other match {
+    case o: SliceIdExpr => child == o.child && java.util.Arrays.equals(cuts, o.cuts)
+    case _ => false
+  }
+  override def hashCode(): Int = 31 * child.hashCode() + java.util.Arrays.hashCode(cuts)
+  override protected def stringArgs: Iterator[Any] = Iterator(child,
+    if (cuts.isEmpty) "0 cuts" else s"${cuts.length} cuts ${cuts.head}..${cuts.last}")
 }

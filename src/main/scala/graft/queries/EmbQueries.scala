@@ -1174,9 +1174,9 @@ private[graft] object EmbQueries {
     // 0.30 @10 at a FIXED 4/16, exactly the thinned-inverted-list
     // failure the adaptive rule closes)
     QuerySpec("emb_ann_filtered", (s, dir) =>
-      Vectors.annIvfFiltered(Tables.load(s, dir, "embeddings"), 5, 10, lloydIters = 0)
+      Vectors.annIvf(Tables.load(s, dir, "embeddings"), 5, 10, lloydIters = 0, byLabel = true)
         .orderBy(col("q_id"), col("rank")),
-      // Mirrors Vectors.annIvfFiltered: the emb_ann_ivf_served CTEs with
+      // Mirrors Vectors.annIvf(byLabel = true): the emb_ann_ivf_served CTEs with
       // label carried through assignment and probes, the candidate join
       // keyed on (cell, label) — the pre-filter — and the ADAPTIVE probe
       // count (Vectors.adaptiveProbe): least(nCells, nProbe · |labels|),
@@ -1211,13 +1211,13 @@ private[graft] object EmbQueries {
     // Σ_q min(c, admissible_q) — a selective filter can leave a query
     // fewer than c admissible vectors)
     QuerySpec("emb_ann_filtered_recall", (s, dir) =>
-      Vectors.annRecallIvfFiltered(Tables.load(s, dir, "embeddings"), 5, 10),
-      // Mirrors Vectors.annRecallIvfFiltered: the emb_ann_ivf_recall CTEs
+      Vectors.annRecallIvf(Tables.load(s, dir, "embeddings"), 5, 10, byLabel = true),
+      // Mirrors Vectors.annRecallIvf(byLabel = true): the emb_ann_ivf_recall CTEs
       // with the label equality on BOTH sides — exact pairs restricted to
       // q.label = c.label, served candidates keyed on (cell, label) at the
       // ADAPTIVE probe count (nl, as in emb_ann_filtered) — and the
       // FILTERED denominator: Σ_q min(c, admissible_q) from the exact
-      // side's per-query row counts (recallFromFiltered), not n_q·c, so a
+      // side's per-query row counts (Vectors.recallFrom), not n_q·c, so a
       // query with < c admissible vectors can still read 1.0 when the
       // served path returns its complete admissible set.
       Some(s"""WITH e AS (SELECT vec_id, embedding, label, $NORM_SQL AS nrm FROM embeddings),
@@ -1278,9 +1278,9 @@ private[graft] object EmbQueries {
     // sum, and the probe count rides the same adaptive selectivity rule
     // as emb_ann_filtered
     QuerySpec("emb_ann_filtered_pq", (s, dir) =>
-      Vectors.annIvfPqFiltered(Tables.load(s, dir, "embeddings"), 5, 10, lloydIters = 0)
+      Vectors.annIvfPq(Tables.load(s, dir, "embeddings"), 5, 10, lloydIters = 0, byLabel = true)
         .orderBy(col("q_id"), col("rank")),
-      // Mirrors Vectors.annIvfPqFiltered: the emb_ann_ivfpq CTE chain with
+      // Mirrors Vectors.annIvfPq(byLabel = true): the emb_ann_ivfpq CTE chain with
       // the label carried through assignment (aa) and probes (iq) at the
       // ADAPTIVE probe count (nl), the code rows keyed (cell, label) in
       // the ADC join — an inadmissible candidate never enters the sum —
@@ -1350,8 +1350,8 @@ private[graft] object EmbQueries {
     // and filter misses interact, so the shipped composition carries its
     // own measured recall
     QuerySpec("emb_ann_filtered_pq_recall", (s, dir) =>
-      Vectors.annRecallIvfPqFiltered(Tables.load(s, dir, "embeddings"), 5, 10),
-      // Mirrors Vectors.annRecallIvfPqFiltered: the emb_ann_filtered_pq
+      Vectors.annRecallIvfPq(Tables.load(s, dir, "embeddings"), 5, 10, byLabel = true),
+      // Mirrors Vectors.annRecallIvfPq(byLabel = true): the emb_ann_filtered_pq
       // CTE chain verbatim through the fused ranking `f`, the exact
       // SAME-LABEL top-k side (xp/exr — label as a join condition), the
       // filtered denominator Σ_q min(c, admissible_q), and the shared hit

@@ -18,30 +18,35 @@ import org.apache.spark.sql.functions._
   *
   * Same quantizer contract and query arithmetic as annIvf (shared code:
   * trainCentroids / assignTo / ivfQuery) — the spec pins query() equal to
-  * the fused operator on identical inputs.
+  * the fused operator on identical inputs. An index built with
+  * byLabel = true also partitions `assigned/` by label (or by a label
+  * hash bucket past maxLabelDirs) and serves label-filtered answers.
   */
 class IvfIndex private[sim] (val spark: SparkSession, val dir: String) {
   def centroids: DataFrame = spark.read.parquet(s"$dir/centroids")
   def assigned: DataFrame = spark.read.parquet(s"$dir/assigned")
 
-  /** Top-k neighbors for each query vector (vec_id, embedding). */
-  def query(queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame =
-    Vectors.ivfQuery(broadcast(centroids), assigned,
-      Vectors.withNorm(queries), k, nProbe)
-
-  /** Metadata-FILTERED top-k for (vec_id, embedding, label) queries —
-    * the persisted form of Vectors.annIvfFiltered: candidates join the
-    * inverted lists on (cell, label), and when the index was built with
-    * buildFiltered the assignment files are PARTITIONED by (cell, label),
-    * so the filter is literal parquet partition pruning — a query's scan
-    * opens only its nProbe × 1-label directories. `nProbe` is the
-    * unfiltered probe budget, scaled by the index's label cardinality
-    * (Vectors.adaptiveProbe — the selectivity→nProbe map); the
-    * cardinality is one distinct over the partition column, answered
-    * from directory metadata, never the data files.
+  /** Top-k neighbors for each query vector (vec_id, embedding). The
+    * persisted layout decides the answer, never the query frame's schema
+    * (the embeddings table carries `label` for unfiltered queries too):
+    * an index built unfiltered answers unfiltered, and one built with
+    * byLabel = true — whose `assigned/` carries label — answers
+    * metadata-FILTERED top-k for (vec_id, embedding, label) queries, the
+    * persisted form of Vectors.annIvf(byLabel = true). Candidates join
+    * the inverted lists on (cell, label), and the assignment files are
+    * PARTITIONED by (cell, label), so the filter is literal parquet
+    * partition pruning — a query's scan opens only its nProbe × 1-label
+    * directories. `nProbe` is then the unfiltered probe budget, scaled
+    * by the index's label cardinality (Vectors.adaptiveProbe — the
+    * selectivity→nProbe map); the cardinality is one distinct over the
+    * partition column, answered from directory metadata, never the data
+    * files.
     */
-  def queryFiltered(queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {
+  def query(queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {
     val a = assigned
+    if (!a.columns.contains("label"))
+      return Vectors.ivfQuery(broadcast(centroids), a,
+        Vectors.withNorm(queries), k, nProbe)
     val nCells = centroids.count().toInt
     // a bucketed index (built past maxLabelDirs) carries the lbk
     // partition column and a meta file with the bucket count AND the
@@ -62,7 +67,7 @@ class IvfIndex private[sim] (val spark: SparkSession, val dir: String) {
         throw new IllegalStateException(
           s"bucketed filtered index at $dir was built by an older graft " +
             "version (meta has no layout_version) — rebuild with " +
-            "IvfIndex.buildFiltered")
+            "IvfIndex.build(byLabel = true)")
       val meta = metaDf
         .select(col("n_label_dirs"), col("n_labels"),
           col("layout_version"), col("label_kind")).head
@@ -71,7 +76,7 @@ class IvfIndex private[sim] (val spark: SparkSession, val dir: String) {
           s"bucketed filtered index at $dir has layout_version " +
             s"${meta.getInt(2)}, this build reads " +
             s"${IvfIndex.BucketedLayoutVersion} — rebuild with " +
-            "IvfIndex.buildFiltered")
+            "IvfIndex.build(byLabel = true)")
       val qKind = Vectors.labelKind(queries)
       if (qKind != meta.getString(3))
         throw new IllegalArgumentException(
@@ -79,13 +84,13 @@ class IvfIndex private[sim] (val spark: SparkSession, val dir: String) {
             s"'${meta.getString(3)}' — lbk buckets would not line up; " +
             "cast the query label column to the index's family")
       val probes = Vectors.adaptiveProbe(nCells, nProbe, meta.getLong(1))
-      Vectors.ivfQueryFiltered(broadcast(centroids), a,
-        Vectors.withNorm(queries), k, probes, meta.getInt(0))
+      Vectors.ivfQuery(broadcast(centroids), a,
+        Vectors.withNorm(queries), k, probes, byLabel = true, nLabelDirs = meta.getInt(0))
     } else {
       val nLabels = a.select(col("label")).distinct().count()
       val probes = Vectors.adaptiveProbe(nCells, nProbe, nLabels)
-      Vectors.ivfQueryFiltered(broadcast(centroids), a,
-        Vectors.withNorm(queries), k, probes)
+      Vectors.ivfQuery(broadcast(centroids), a,
+        Vectors.withNorm(queries), k, probes, byLabel = true)
     }
   }
 
@@ -138,31 +143,15 @@ object IvfIndex {
 
   /** Train the quantizer on `corpus` (vec_id, embedding) and persist
     * centroids + cell-partitioned assignments.
-    */
-  def build(corpus: DataFrame, dir: String, nCells: Int = 16,
-            lloydIters: Int = 3, trainLimit: Long = 200000L): IvfIndex = {
-    val spark = corpus.sparkSession
-    val c = Vectors.withNorm(corpus).cache()
-    val cents = Vectors.trainCentroids(c, nCells, lloydIters, trainLimit)
-    Vectors.centDf(spark, cents)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
-    // cluster on the partition column first — same small-file stance as
-    // Store.withLayout (one writer per cell dir)
-    Vectors.assignTo(c, Vectors.centDf(spark, cents))
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$dir/assigned")
-    c.unpersist()
-    new IvfIndex(spark, dir)
-  }
-
-  /** Build for FILTERED serving: `corpus` carries (vec_id, embedding,
-    * label) and the assignment table is partitioned by (cell, label) —
-    * the layout that turns queryFiltered's (cell, label) candidate keys
+    *
+    * `byLabel` builds for FILTERED serving: `corpus` carries (vec_id,
+    * embedding, label) and the assignment table is partitioned by (cell,
+    * label) — the layout that turns query's (cell, label) candidate keys
     * into parquet partition pruning at deployment scale: the label
     * predicate never reads an inadmissible row, the exact promise
-    * annIvfFiltered's doc makes for the fused path. Same quantizer
-    * contract (shared trainCentroids/assignTo), so the spec pins
-    * queryFiltered equal to the fused operator, including after reopen.
+    * Vectors.annIvf(byLabel = true) makes for the fused path. Same
+    * quantizer contract (shared trainCentroids/assignTo), so the spec
+    * pins query equal to the fused operator, including after reopen.
     *
     * Past `maxLabelDirs` distinct labels the layout switches to label
     * HASH BUCKETING — partitioned by (cell, lbk = pmod(xxhash64(label),
@@ -175,55 +164,52 @@ object IvfIndex {
     * share it read; answers are identical (spec-pinned against the
     * fused operator for both layouts).
     */
-  def buildFiltered(corpus: DataFrame, dir: String, nCells: Int = 16,
-                    lloydIters: Int = 0, trainLimit: Long = 200000L,
-                    maxLabelDirs: Int = 256): IvfIndex = {
+  def build(corpus: DataFrame, dir: String, nCells: Int = 16,
+            lloydIters: Int = 3, trainLimit: Long = 200000L,
+            byLabel: Boolean = false, maxLabelDirs: Int = 256): IvfIndex = {
     val spark = corpus.sparkSession
     val c = Vectors.withNorm(corpus).cache()
     val cents = Vectors.trainCentroids(c, nCells, lloydIters, trainLimit)
     Vectors.centDf(spark, cents)
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
     val assigned = Vectors.assignTo(c, Vectors.centDf(spark, cents),
-      carry = Seq("label"))
-    val nLabels = c.agg(countDistinct(col("label"))).head.getLong(0)
-    if (nLabels > maxLabelDirs) {
-      // THE PERSISTED LAYOUT CONTRACT (layout_version 2): lbk hashes
-      // the label's CANONICAL form — integral labels through long,
-      // string labels as-is, every other type rejected at build — via
-      // the ONE shared derivation (Vectors.lbkCol) the query side also
-      // calls, so bucket derivation cannot be type-sensitive within a
-      // label family (xxhash64 hashes int and long differently; the
-      // raw column would silently prune a long-labeled query batch to
-      // the WRONG directories of an int32-built index). The label
-      // family is persisted and checked at query time, so even a
-      // cross-family batch (string vs integral) fails with a named
-      // error instead of silently returning wrong candidates.
-      val kind = Vectors.labelKind(assigned)
-      assigned
-        .withColumn("lbk", Vectors.lbkCol(assigned, maxLabelDirs))
-        .repartition(col("cell"), col("lbk"))
-        .write.mode(SaveMode.Overwrite).partitionBy("cell", "lbk")
-        .parquet(s"$dir/assigned")
-      // the bucket count is a BUILD-time property the query side must
-      // reproduce exactly — persist it rather than infer it from dir
-      // names (sparse buckets would under-count). n_labels rides along:
-      // in the bucketed layout label is a DATA column, so deriving the
-      // cardinality at query time would full-scan every assignment file
-      // per batch — at exactly the high-cardinality scale the bucketing
-      // exists for. layout_version stamps the lbk contract so an index
-      // written by an older build fails with a named rebuild error at
-      // open, never an opaque missing-column exception or (worse) a
-      // silent wrong-directory prune under a changed hash form.
+      carry = if (byLabel) Seq("label") else Nil)
+    val nLabels = if (byLabel) c.agg(countDistinct(col("label"))).head.getLong(0) else 0L
+    val bucketed = nLabels > maxLabelDirs
+    // THE PERSISTED LAYOUT CONTRACT (layout_version 2) of a bucketed
+    // index: lbk hashes the label's CANONICAL form — integral labels
+    // through long, string labels as-is, every other type rejected at
+    // build — via the ONE shared derivation (Vectors.lbkCol) the query
+    // side also calls, so bucket derivation cannot be type-sensitive
+    // within a label family (xxhash64 hashes int and long differently;
+    // the raw column would silently prune a long-labeled query batch to
+    // the WRONG directories of an int32-built index). The label family
+    // is persisted and checked at query time, so even a cross-family
+    // batch (string vs integral) fails with a named error instead of
+    // silently returning wrong candidates.
+    val laid = if (bucketed)
+      assigned.withColumn("lbk", Vectors.lbkCol(assigned, maxLabelDirs)) else assigned
+    val parts = "cell" +: (if (bucketed) Seq("lbk") else if (byLabel) Seq("label") else Nil)
+    // cluster on the partition columns first — same small-file stance as
+    // Store.withLayout (one writer per partition dir)
+    laid.repartition(parts.map(col): _*)
+      .write.mode(SaveMode.Overwrite).partitionBy(parts: _*).parquet(s"$dir/assigned")
+    // the bucket count is a BUILD-time property the query side must
+    // reproduce exactly — persist it rather than infer it from dir
+    // names (sparse buckets would under-count). n_labels rides along:
+    // in the bucketed layout label is a DATA column, so deriving the
+    // cardinality at query time would full-scan every assignment file
+    // per batch — at exactly the high-cardinality scale the bucketing
+    // exists for. layout_version stamps the lbk contract so an index
+    // written by an older build fails with a named rebuild error at
+    // open, never an opaque missing-column exception or (worse) a
+    // silent wrong-directory prune under a changed hash form.
+    if (bucketed)
       spark.range(1).select(lit(maxLabelDirs).as("n_label_dirs"),
           lit(nLabels).as("n_labels"),
           lit(IvfIndex.BucketedLayoutVersion).as("layout_version"),
-          lit(kind).as("label_kind"))
+          lit(Vectors.labelKind(assigned)).as("label_kind"))
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
-    } else
-      assigned
-        .repartition(col("cell"), col("label"))
-        .write.mode(SaveMode.Overwrite).partitionBy("cell", "label")
-        .parquet(s"$dir/assigned")
     c.unpersist()
     new IvfIndex(spark, dir)
   }

@@ -29,10 +29,17 @@ object Vectors {
   private def cosine: Column =
     (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos")
 
-  private def pairBase(emb: DataFrame): (DataFrame, DataFrame) = {
-    val e = withNorm(emb).select(col("vec_id"), col("embedding"), col("nrm"))
-    (e.select(col("vec_id").as("id_a"), col("embedding").as("va"), col("nrm").as("na")),
-      e.select(col("vec_id").as("id_b"), col("embedding").as("vb"), col("nrm").as("nb")))
+  /** (id_a, va, na) and (id_b, vb, nb) sides of `emb`; `carry` names
+    * columns (the filter label) kept unrenamed on both sides.
+    */
+  private def pairBase(emb: DataFrame,
+                       carry: Seq[String] = Nil): (DataFrame, DataFrame) = {
+    val kept = carry.map(col)
+    val e = withNorm(emb).select(Seq(col("vec_id"), col("embedding"), col("nrm")) ++ kept: _*)
+    (e.select(Seq(col("vec_id").as("id_a"), col("embedding").as("va"), col("nrm").as("na")) ++
+        kept: _*),
+      e.select(Seq(col("vec_id").as("id_b"), col("embedding").as("vb"), col("nrm").as("nb")) ++
+        kept: _*))
   }
 
   /** All pairs with cosine ≥ tau (quadratic — scope with idLimit for
@@ -428,19 +435,12 @@ object Vectors {
 
   def pqAudit(emb: DataFrame, m: Int = 8, k: Int = 16,
               vecCol: String = "embedding"): DataFrame = {
-    val dim = 64
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val sub = dim / m
-    val subArrs = array((0 until m).map(j => slice(col(vecCol), j * sub + 1, sub)): _*)
-    def exploded(df: DataFrame) =
-      df.select(col("vec_id"), posexplode(subArrs).as(Seq("sub", "svec")))
-    val cb = exploded(emb.filter(col("vec_id") < k))
+    val cb = pqSubvectors(emb.filter(col("vec_id") < k), m, vecCol)
       .select(col("sub"), col("vec_id").cast("int").as("code"),
         col("svec").as("cvec"))
-    val sse = pqSse
-    exploded(graft.Tables.rebalance(emb))
+    pqSubvectors(graft.Tables.rebalance(emb), m, vecCol)
       .join(broadcast(cb), Seq("sub"))
-      .withColumn("sse", sse)
+      .withColumn("sse", pqSse)
       .groupBy(col("vec_id"), col("sub"))
       .agg(min(struct(col("sse"), col("code"))).as("best"))
       .groupBy(col("vec_id"))
@@ -450,7 +450,7 @@ object Vectors {
           x => x.getField("code").cast("string"))).as("codes"),
         sum(graft.Quant.us6(col("best.sse"))).as("sse_us"))
       .select(col("vec_id"), col("codes"),
-        graft.Quant.mean6(col("sse_us"), lit(dim)).as("recon_mse"))
+        graft.Quant.mean6(col("sse_us"), lit(64)).as("recon_mse"))
   }
 
   /** PQ-ADC ANN serving (Jégou et al. 2011 §IV) — the query path on top
@@ -488,27 +488,18 @@ object Vectors {
     */
   private def pqAdcDistances(emb: DataFrame, nQueries: Int, m: Int,
                              kCodes: Int, vecCol: String): DataFrame = {
-    val dim = 64
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val sub = dim / m
-    val subArrs = array((0 until m).map(j => slice(col(vecCol), j * sub + 1, sub)): _*)
-    def exploded(df: DataFrame) =
-      df.select(col("vec_id"), posexplode(subArrs).as(Seq("sub", "svec")))
     val corpus = emb.filter(col("vec_id") >= nQueries)
-    val cb = exploded(corpus.filter(col("vec_id") < nQueries + kCodes))
+    val cb = pqSubvectors(corpus.filter(col("vec_id") < nQueries + kCodes), m, vecCol)
       .select(col("sub"), (col("vec_id") - nQueries).cast("int").as("code"),
         col("svec").as("cvec"))
-    val sse = pqSse
-    val codes = exploded(graft.Tables.rebalance(corpus))
-      .join(broadcast(cb), Seq("sub"))
-      .withColumn("sse", sse)
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("sse"), col("code"))).as("best"))
-      .select(col("vec_id").as("id_b"), col("sub"), col("best.code").as("code"))
-    val dt = exploded(emb.filter(col("vec_id") < nQueries))
+    val codes = pqAssign(graft.Tables.rebalance(corpus), cb, m, vecCol)
+      .select(col("vec_id").as("id_b"), col("sub"), col("code"))
+    // pqDistTable's table with the rename before the codebook join
+    // (pqDistTable renames after it, which plans one Project fewer)
+    val dt = pqSubvectors(emb.filter(col("vec_id") < nQueries), m, vecCol)
       .select(col("vec_id").as("id_a"), col("sub"), col("svec"))
       .join(broadcast(cb), Seq("sub"))
-      .withColumn("dist_us", graft.Quant.us6(sse))
+      .withColumn("dist_us", graft.Quant.us6(pqSse))
       .select(col("id_a"), col("sub"), col("code"), col("dist_us"))
     codes.join(broadcast(dt), Seq("sub", "code"))
       .groupBy(col("id_a"), col("id_b"))
@@ -562,8 +553,7 @@ object Vectors {
     // interesting left edge of the curve (recall@k caps at depth/k there)
     require(reranks.nonEmpty && reranks == reranks.sorted && reranks.last >= k,
       s"reranks must be ascending with last >= k=$k: $reranks")
-    require(ks.nonEmpty && ks.forall(c => c >= 1 && c <= k),
-      s"every cutoff must be in [1, $k]: $ks")
+    requireCutoffs(ks, k)
     val adc = pqAdcDistances(emb, nQueries, m, kCodes, "embedding")
     val deep = rankPerQuery(adc, Seq(col("adc_us"), col("id_b")), reranks.last)
       .withColumnRenamed("rank", "ar")
@@ -1106,64 +1096,43 @@ object Vectors {
       .drop("slice", "lrnk")
   }
 
+  /** The filter's carried column: `label` under byLabel, none otherwise. */
+  private def labelOf(byLabel: Boolean): Seq[String] = if (byLabel) Seq("label") else Nil
+
+  /** A ranked (id_a, id_b[, label], rank, cos) frame as the serving
+    * output (q_id, n_id[, label as long], rank, cos_sim).
+    */
+  private def servedTopK(df: DataFrame, byLabel: Boolean): DataFrame =
+    df.select(Seq(col("id_a").as("q_id"), col("id_b").as("n_id")) ++
+      labelOf(byLabel).map(c => col(c).cast("long").as(c)) ++
+      Seq(col("rank").cast("long").as("rank"), graft.Quant.q6(col("cos")).as("cos_sim")): _*)
+
   /** Brute-force cosine top-k: for each query vector (vec_id < nQueries),
     * the k nearest corpus vectors (vec_id >= nQueries) with rank. The
     * query side is tiny → broadcast, so the "cross join" is a single
     * pass over the corpus with no shuffle; the rank is the bounded
     * two-phase cut (rankPerQuery) so no task ever sorts the corpus for
     * one query.
+    *
+    * `byLabel` is the metadata-FILTERED form, the exact side of the
+    * filtered serving gate: for each query, the k nearest corpus vectors
+    * sharing the query's `label`, output with the label. The label is a
+    * join KEY (not a post-filter), so the only pairs ever scored are the
+    * admissible ones; the query side still broadcasts and the rank rides
+    * the same bounded cut.
     */
-  def annTopK(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val (a, b) = pairBase(emb)
+  def annTopK(emb: DataFrame, nQueries: Int, k: Int, byLabel: Boolean = false): DataFrame = {
+    val (a, b) = pairBase(emb, labelOf(byLabel))
     val q = broadcast(a.filter(col("id_a") < nQueries))
     val corpus = b.filter(col("id_b") >= nQueries)
-    rankPerQuery(q.join(corpus).withColumn("cos", cosine),
-        Seq(col("cos").desc, col("id_b")), k)
-      .select(col("id_a").as("q_id"), col("id_b").as("n_id"),
-        col("rank").cast("long").as("rank"), graft.Quant.q6(col("cos")).as("cos_sim"))
-  }
-
-  /** Metadata-FILTERED brute-force top-k — the exact side of the filtered
-    * serving gate: for each query, the k nearest corpus vectors sharing
-    * the query's `label`. The label is a join KEY (not a post-filter), so
-    * the only pairs ever scored are the admissible ones; the query side
-    * still broadcasts and the rank rides the bounded two-phase cut.
-    */
-  def annTopKFiltered(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val e = withNorm(emb).select(col("vec_id"), col("embedding"), col("nrm"), col("label"))
-    val q = broadcast(e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("id_a"), col("embedding").as("va"),
-        col("nrm").as("na"), col("label")))
-    val corpus = e.filter(col("vec_id") >= nQueries)
-      .select(col("vec_id").as("id_b"), col("embedding").as("vb"),
-        col("nrm").as("nb"), col("label"))
-    rankPerQuery(q.join(corpus, Seq("label")).withColumn("cos", cosine),
-        Seq(col("cos").desc, col("id_b")), k)
-      .select(col("id_a").as("q_id"), col("id_b").as("n_id"),
-        col("label").cast("long").as("label"),
-        col("rank").cast("long").as("rank"), graft.Quant.q6(col("cos")).as("cos_sim"))
+    val pairs = if (byLabel) q.join(corpus, Seq("label")) else q.join(corpus)
+    servedTopK(rankPerQuery(pairs.withColumn("cos", cosine),
+      Seq(col("cos").desc, col("id_b")), k), byLabel)
   }
 
   // Hyperplane generation + caching live in graft.plans.LshBuckets (md5-
   // derived, reproducible across engines — the basis of the LSH oracle).
 
-  /** IVF (inverted-file) ANN — the other classic scale path besides LSH.
-    *
-    * A coarse quantizer of `nCells` centroids is trained with a few Lloyd
-    * rounds (deterministic init: the nCells lowest-id corpus vectors); the
-    * corpus is assigned to its nearest centroid ONCE; each query probes
-    * only the `nProbe` nearest cells and exact-cosine-reranks the vectors
-    * in them — touching nProbe/nCells of the corpus instead of all of it.
-    *
-    * Scale shape: the centroid table is tiny by construction (it IS the
-    * compression), so it lives on the driver and enters the plan as
-    * literals — assignment is a narrow codegen'd projection over the
-    * corpus, no join, no shuffle; the per-query candidate join shuffles on
-    * the cell id. Lloyd's mean-update is a posexplode + groupBy(cell, pos)
-    * aggregation — distributed, with only nCells×dim averaged values ever
-    * collected. Assignment minimizes Euclidean distance (argmax of
-    * 2·v·c − |c|², |v|² constant per row); re-rank uses exact cosine.
-    */
   /** Centroids enter every plan as a BROADCAST nCells-row DataFrame, not
     * as nCells×dim literal columns — a 1000-literal expression tree costs
     * more in per-query analysis than the broadcast join it replaces.
@@ -1176,6 +1145,23 @@ object Vectors {
       .toDF("cell", "cvec", "cn2"))
   }
 
+  /** Every row of `df` against every centroid, with `score` = 2·v·c − |c|²:
+    * the argmax is the nearest centroid by Euclidean distance (|v|² is
+    * constant per row). The one centroid score of assignment and probing.
+    */
+  private def cellScores(df: DataFrame, cents: DataFrame): DataFrame =
+    df.join(cents).withColumn("score", dot(col("embedding"), col("cvec")) * 2 - col("cn2"))
+
+  /** Each query's `nProbe` best cells (score desc, cell), with the probe
+    * rank `pr` — the probe of both IVF query tails and ivfProbeCurve.
+    */
+  private def probeCells(queries: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
+    val wp = Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))
+    cellScores(queries, cents)
+      .withColumn("pr", row_number().over(wp))
+      .filter(col("pr") <= nProbe)
+  }
+
   /** Nearest centroid by Euclidean distance = argmax(2·v·c − |c|²);
     * max(struct(score, cell)) is a deterministic argmax (ties → max cell).
     * `carry` names metadata columns (e.g. the filter label) preserved
@@ -1183,8 +1169,7 @@ object Vectors {
     */
   private[sim] def assignTo(corpus: DataFrame, cents: DataFrame,
                             carry: Seq[String] = Nil): DataFrame =
-    corpus.join(cents)
-      .withColumn("score", dot(col("embedding"), col("cvec")) * 2 - col("cn2"))
+    cellScores(corpus, cents)
       .groupBy(col("vec_id"))
       .agg(max(struct(col("score"), col("cell"))).getField("cell").as("cell"),
         (first(col("embedding")).as("embedding") +: first(col("nrm")).as("nrm") +:
@@ -1192,29 +1177,52 @@ object Vectors {
 
   /** The nProbe-cells + exact-cosine-rerank query tail shared by annIvf
     * and the persisted IvfIndex. `queries` carries (vec_id, embedding,
-    * nrm); output (q_id, n_id, rank, cos_sim).
+    * nrm, plus label under byLabel); output (q_id, n_id[, label], rank,
+    * cos_sim).
+    *
+    * `byLabel`: probes carry the query's label, the candidate join keys
+    * on (cell, label), and the rank is the same bounded two-phase cut
+    * (exact wrt the probed admissible set).
+    *
+    * `nLabelDirs > 0` (byLabel only) selects the label-HASH-BUCKETED
+    * layout (an index built by IvfIndex.build(byLabel = true) past its
+    * maxLabelDirs threshold — the small-files guard: (cell × label)
+    * directories explode as nCells·|labels| at high label cardinality,
+    * 10⁷ dirs at 10⁴ labels × 2¹⁰ cells). There the assignment files are
+    * partitioned by (cell, lbk = pmod(xxhash64(label), nLabelDirs)) — a
+    * grid bounded at nCells·nLabelDirs at ANY cardinality — the probe
+    * side derives the same lbk from each query's label, and the join
+    * keys on (cell, lbk, label): the two partition columns drive the
+    * directory pruning, the label equality stays exact inside the pruned
+    * bucket (which holds ~|labels|/nLabelDirs labels' rows). Results are
+    * identical to the plain layout — lbk is derived, never decides
+    * membership.
     */
   private[sim] def ivfQuery(cents: DataFrame, assigned: DataFrame,
-                            queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val wp = Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))
-    val probes = broadcast(queries
-      .join(cents)
-      .withColumn("score", dot(col("embedding"), col("cvec")) * 2 - col("cn2"))
-      .withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= nProbe)
-      .select(col("vec_id").as("id_a"), col("embedding").as("va"),
-        col("nrm").as("na"), col("cell")))
+                            queries: DataFrame, k: Int, nProbe: Int,
+                            byLabel: Boolean = false, nLabelDirs: Int = 0): DataFrame = {
+    val lab = labelOf(byLabel)
+    val probes0 = probeCells(queries, cents, nProbe)
+      .select(Seq(col("vec_id").as("id_a"), col("embedding").as("va"),
+        col("nrm").as("na")) ++ (lab :+ "cell").map(col): _*)
+    // lbk derivation MUST match IvfIndex.build bit-for-bit — both sides
+    // call the shared lbkCol (labelKind canonical form), so an
+    // int32-labeled index queried with long labels derives the same
+    // bucket, and an unsupported label type fails loudly here instead
+    // of pruning to the wrong directories
+    val lbk = if (nLabelDirs > 0) Seq("lbk") else Nil
+    val probes = broadcast(if (nLabelDirs > 0)
+      probes0.withColumn("lbk", lbkCol(probes0, nLabelDirs))
+      else probes0)
+    val cand = assigned.select(Seq(col("vec_id").as("id_b"), col("embedding").as("vb"),
+      col("nrm").as("nb")) ++ (lab ++ ("cell" +: lbk)).map(col): _*)
     // the probed-cell candidate frame is nProbe/nCells of the CORPUS per
     // query in a handful of query groups — the few-giant-groups geometry
     // the bounded two-phase cut exists for (at 10^9 vectors a plain
     // per-query window funnels a quarter-billion rows through one task)
-    rankPerQuery(
-      probes.join(assigned.select(col("vec_id").as("id_b"), col("embedding").as("vb"),
-          col("nrm").as("nb"), col("cell")), Seq("cell"))
-        .withColumn("cos", cosine),
-      Seq(col("cos").desc, col("id_b")), k)
-      .select(col("id_a").as("q_id"), col("id_b").as("n_id"),
-        col("rank").cast("long").as("rank"), graft.Quant.q6(col("cos")).as("cos_sim"))
+    servedTopK(rankPerQuery(
+      probes.join(cand, ("cell" +: lbk) ++ lab).withColumn("cos", cosine),
+      Seq(col("cos").desc, col("id_b")), k), byLabel)
   }
 
   /** The IVF-PQ query tail (the faiss-standard composition): probe the
@@ -1226,30 +1234,34 @@ object Vectors {
     * nProbe = nCells this degenerates to exactly annPq's candidate set
     * (spec-pinned bit-identical); with nProbe < nCells the cell pruning
     * multiplies PQ's per-candidate savings.
+    *
+    * `byLabel`: probes carry the query's label and the compressed-code
+    * candidate join keys on (cell, label) — an inadmissible code row
+    * never enters the ADC aggregation; the label rides through both cuts
+    * to the output.
     */
   private[sim] def ivfPqQuery(cents: DataFrame, cb: DataFrame, codes: DataFrame,
                               assigned: DataFrame, queries: DataFrame,
                               k: Int, nProbe: Int, rerank: Int,
-                              m: Int = 8): DataFrame = {
+                              m: Int = 8, byLabel: Boolean = false): DataFrame = {
     require(rerank >= k, s"rerank=$rerank must cover k=$k")
-    val wp = Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))
-    val probes = broadcast(queries
-      .join(cents)
-      .withColumn("score", dot(col("embedding"), col("cvec")) * 2 - col("cn2"))
-      .withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("cell")))
+    val lab = labelOf(byLabel)
+    val probes = broadcast(probeCells(queries, cents, nProbe)
+      .select(col("vec_id").as("q_id") +: (lab :+ "cell").map(col): _*))
     val dt = broadcast(pqDistTable(queries, cb, m))
-    val adc = codes.select(col("vec_id").as("n_id"), col("sub"), col("code"), col("cell"))
-      .join(probes, Seq("cell"))
+    // the probed (and, under byLabel, admissible) code frame is
+    // (nProbe/nCells)·(1/|labels|) of the corpus codes per query — still
+    // corpus-scale in few query groups
+    val adc = codes.select(Seq(col("vec_id").as("n_id"), col("sub"), col("code"),
+        col("cell")) ++ lab.map(col): _*)
+      .join(probes, "cell" +: lab)
       .join(dt, Seq("q_id", "sub", "code"))
-      .groupBy(col("q_id"), col("n_id"))
+      .groupBy((Seq("q_id", "n_id") ++ lab).map(col): _*)
       .agg(sum(col("dist_us")).as("adc_us"))
-    // ADC prescreen cut: the probed compressed-code frame is corpus-scale
-    // per query (nProbe/nCells of all codes) in nQueries groups — the
-    // bounded two-phase cut, same contract as pqAdcDistances' rerank cut
+    // ADC prescreen cut: the bounded two-phase cut, same contract as
+    // pqAdcDistances' rerank cut
     val cand = rankPerQuery(adc, Seq(col("adc_us"), col("n_id")), rerank, key = "q_id")
-      .select(col("q_id"), col("n_id"), col("adc_us"))
+      .select((Seq("q_id", "n_id") ++ lab :+ "adc_us").map(col): _*)
     val qv = queries.select(col("vec_id").as("q_id"),
       col("embedding").as("va"), col("nrm").as("na"))
     val cv = assigned.select(col("vec_id").as("n_id"),
@@ -1259,70 +1271,85 @@ object Vectors {
       .withColumn("cos", cosine)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        (col("adc_us").cast("double") / 1e6 + lit(0d)).as("adc_dist"),
-        graft.Quant.q6(col("cos")).as("cos_sim"))
+      .select(Seq(col("q_id"), col("n_id")) ++
+        lab.map(c => col(c).cast("long").as(c)) ++
+        Seq(col("rank").cast("long").as("rank"),
+          (col("adc_us").cast("double") / 1e6 + lit(0d)).as("adc_dist"),
+          graft.Quant.q6(col("cos")).as("cos_sim")): _*)
   }
 
+  /** The probes a query takes: `nProbe`, or under byLabel
+    * adaptiveProbe(nCells, nProbe, |labels|) over one count-distinct of
+    * the corpus's label column.
+    */
+  private def probeCount(corpus: DataFrame, nCells: Int, nProbe: Int,
+                         byLabel: Boolean): Int =
+    if (!byLabel) nProbe
+    else adaptiveProbe(nCells, nProbe, corpus.agg(countDistinct(col("label"))).head.getLong(0))
+
+  /** IVF (inverted-file) ANN — the other classic scale path besides LSH.
+    *
+    * A coarse quantizer of `nCells` centroids is trained with a few Lloyd
+    * rounds (deterministic init: the nCells lowest-id corpus vectors); the
+    * corpus is assigned to its nearest centroid ONCE; each query probes
+    * only the `nProbe` nearest cells and exact-cosine-reranks the vectors
+    * in them — touching nProbe/nCells of the corpus instead of all of it.
+    *
+    * Scale shape: the centroid table is tiny by construction (it IS the
+    * compression), so it is collected to the driver and re-enters every
+    * plan as a broadcast (centDf) — assignment is a broadcast argmax pass
+    * over the corpus, no shuffle; the per-query candidate join shuffles
+    * on the cell id. Lloyd's mean-update is a posexplode + groupBy(cell,
+    * pos) aggregation — distributed, with only nCells×dim averaged values
+    * ever collected. Assignment minimizes Euclidean distance (argmax of
+    * 2·v·c − |c|², |v|² constant per row); re-rank uses exact cosine.
+    *
+    * `byLabel` is metadata-FILTERED IVF ANN — the production
+    * vector-search shape (faiss's IDSelector / the "filtered search"
+    * problem): each query retrieves top-k only among corpus vectors
+    * sharing its `label`, and the output gains the label. The filter is
+    * applied to the INVERTED LISTS (pre-filter), never to the ranked
+    * output (post-filter): post-filtering a fixed-k unfiltered probe
+    * silently loses recall whenever the filter is selective — fewer than
+    * k admissible survivors remain — while the pre-filter keeps the full
+    * probed-cell admissible set in the rank. Spark-first that is one
+    * extra equi-join key: candidates join on (cell, label), so at
+    * deployment scale a label-partitioned assignment table turns the
+    * filter into partition pruning at the parquet scan and the shuffle
+    * carries only admissible candidates.
+    *
+    * Under byLabel `nProbe` is the UNFILTERED probe budget; the probes
+    * actually taken are adaptiveProbe(nCells, nProbe, |labels|) =
+    * min(nCells, nProbe·|labels|). The filter thins each probed inverted
+    * list by its selectivity (~1/|labels| under a uniform label), so a
+    * fixed nProbe sees ~1/|labels| of the admissible candidates the
+    * unfiltered config was tuned for — the round-12 gate measured exactly
+    * that failure (recall@10 = 0.30 at a fixed 4/16). Scaling the probe
+    * count by the label cardinality restores the expected
+    * admissible-candidate mass; the min() saturation is the honest
+    * small-index limit (16 cells cannot serve a 10%-selective filter
+    * without probing all of them — brute force within the label IS the
+    * right answer there), while a deployment-scale index (nCells ≫
+    * nProbe·|labels|) still probes a fraction. The rule is integer
+    * arithmetic over one count-distinct of the label column (metadata
+    * scale), so the oracle replays it; the adaptive config's recall is
+    * measured by annRecallIvf(byLabel = true).
+    */
   def annIvf(emb: DataFrame, nQueries: Int, k: Int,
              nCells: Int = 16, nProbe: Int = 4, lloydIters: Int = 3,
-             trainLimit: Long = 200000L): DataFrame = {
+             trainLimit: Long = 200000L, byLabel: Boolean = false): DataFrame = {
     val spark = emb.sparkSession
     val all = withNorm(emb)
     val corpus = all.filter(col("vec_id") >= nQueries).cache()
     val cents = trainCentroids(corpus, nCells, lloydIters, trainLimit)
-    val assigned = assignTo(corpus, centDf(spark, cents))
+    val assigned = assignTo(corpus, centDf(spark, cents), carry = labelOf(byLabel))
+    val probes = probeCount(corpus, nCells, nProbe, byLabel)
     // Lloyd's driver-side collects are done — release the cached corpus
     // (the final returned plan rescans it once; holding the cache for a
     // lazily-consumed result would leak executor storage per call)
     corpus.unpersist()
     ivfQuery(centDf(spark, cents), assigned,
-      all.filter(col("vec_id") < nQueries), k, nProbe)
-  }
-
-  /** Metadata-FILTERED IVF ANN — the production vector-search shape
-    * (faiss's IDSelector / the "filtered search" problem): each query
-    * retrieves top-k only among corpus vectors sharing its `label`. The
-    * filter is applied to the INVERTED LISTS (pre-filter), never to the
-    * ranked output (post-filter): post-filtering a fixed-k unfiltered
-    * probe silently loses recall whenever the filter is selective —
-    * fewer than k admissible survivors remain — while the pre-filter
-    * keeps the full probed-cell admissible set in the rank. Spark-first
-    * that is one extra equi-join key: candidates join on (cell, label),
-    * so at deployment scale a label-partitioned assignment table turns
-    * the filter into partition pruning at the parquet scan and the
-    * shuffle carries only admissible candidates. Same deterministic
-    * quantizer contract as annIvf → fully oracle-replayable.
-    *
-    * `nProbe` is the UNFILTERED probe budget; the probes actually taken
-    * are adaptiveProbe(nCells, nProbe, |labels|) = min(nCells,
-    * nProbe·|labels|). The filter thins each probed inverted list by its
-    * selectivity (~1/|labels| under a uniform label), so a fixed nProbe
-    * sees ~1/|labels| of the admissible candidates the unfiltered config
-    * was tuned for — the round-12 gate measured exactly that failure
-    * (recall@10 = 0.30 at a fixed 4/16). Scaling the probe count by the
-    * label cardinality restores the expected admissible-candidate mass;
-    * the min() saturation is the honest small-index limit (16 cells
-    * cannot serve a 10%-selective filter without probing all of them —
-    * brute force within the label IS the right answer there), while a
-    * deployment-scale index (nCells ≫ nProbe·|labels|) still probes a
-    * fraction. The rule is integer arithmetic over one count-distinct of
-    * the label column (metadata scale), so the oracle replays it; the
-    * adaptive config's recall is measured by annRecallIvfFiltered.
-    */
-  def annIvfFiltered(emb: DataFrame, nQueries: Int, k: Int,
-                     nCells: Int = 16, nProbe: Int = 4, lloydIters: Int = 0,
-                     trainLimit: Long = 200000L): DataFrame = {
-    val spark = emb.sparkSession
-    val all = withNorm(emb)
-    val corpus = all.filter(col("vec_id") >= nQueries).cache()
-    val cents = trainCentroids(corpus, nCells, lloydIters, trainLimit)
-    val assigned = assignTo(corpus, centDf(spark, cents), carry = Seq("label"))
-    val nLabels = corpus.agg(countDistinct(col("label"))).head.getLong(0)
-    corpus.unpersist()
-    ivfQueryFiltered(centDf(spark, cents), assigned,
-      all.filter(col("vec_id") < nQueries), k,
-      adaptiveProbe(nCells, nProbe, nLabels))
+      all.filter(col("vec_id") < nQueries), k, probes, byLabel)
   }
 
   /** The selectivity→nProbe map for filtered ANN: probe
@@ -1338,23 +1365,6 @@ object Vectors {
     math.min(nCells.toLong, nProbe.toLong * nLabels).toInt
   }
 
-  /** The filtered ivfQuery tail: probes carry the query's label, the
-    * candidate join keys on (cell, label), and the rank is the bounded
-    * two-phase rankPerQuery cut (exact wrt the probed admissible set).
-    *
-    * `nLabelDirs > 0` selects the label-HASH-BUCKETED layout (an index
-    * built by IvfIndex.buildFiltered past its maxLabelDirs threshold —
-    * the small-files guard: (cell × label) directories explode as
-    * nCells·|labels| at high label cardinality, 10⁷ dirs at 10⁴ labels ×
-    * 2¹⁰ cells). There the assignment files are partitioned by (cell,
-    * lbk = pmod(xxhash64(label), nLabelDirs)) — a grid bounded at
-    * nCells·nLabelDirs at ANY cardinality — the probe side derives the
-    * same lbk from each query's label, and the join keys on (cell, lbk,
-    * label): the two partition columns drive the directory pruning, the
-    * label equality stays exact inside the pruned bucket (which holds
-    * ~|labels|/nLabelDirs labels' rows). Results are identical to the
-    * plain layout — lbk is derived, never decides membership.
-    */
   /** The bucketed layout's label TYPE contract, shared by build and
     * query so the two sides cannot desync: integral labels canonicalize
     * through LONG before hashing (xxhash64 is type-sensitive, and a
@@ -1380,44 +1390,12 @@ object Vectors {
 
   /** lbk = pmod(xxhash64(canonical label), nDirs) over the canonical
     * form labelKind prescribes — the ONE derivation both
-    * IvfIndex.buildFiltered and the query path call.
+    * IvfIndex.build(byLabel = true) and the query path call.
     */
   private[sim] def lbkCol(df: DataFrame, nDirs: Int): Column = {
     val canon =
       if (labelKind(df) == "integral") col("label").cast("long") else col("label")
     pmod(xxhash64(canon), lit(nDirs.toLong)).cast("int")
-  }
-
-  private[sim] def ivfQueryFiltered(cents: DataFrame, assigned: DataFrame,
-                                    queries: DataFrame, k: Int, nProbe: Int,
-                                    nLabelDirs: Int = 0): DataFrame = {
-    val wp = Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))
-    val probes0 = queries
-      .join(cents)
-      .withColumn("score", dot(col("embedding"), col("cvec")) * 2 - col("cn2"))
-      .withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= nProbe)
-      .select(col("vec_id").as("id_a"), col("embedding").as("va"),
-        col("nrm").as("na"), col("label"), col("cell"))
-    // lbk derivation MUST match IvfIndex.buildFiltered bit-for-bit —
-    // both sides call the shared lbkCol (labelKind canonical form), so
-    // an int32-labeled index queried with long labels derives the same
-    // bucket, and an unsupported label type fails loudly here instead
-    // of pruning to the wrong directories
-    val probes = broadcast(if (nLabelDirs > 0)
-      probes0.withColumn("lbk", lbkCol(probes0, nLabelDirs))
-      else probes0)
-    val candCols = Seq(col("vec_id").as("id_b"), col("embedding").as("vb"),
-      col("nrm").as("nb"), col("label"), col("cell")) ++
-      (if (nLabelDirs > 0) Seq(col("lbk")) else Nil)
-    val keys = if (nLabelDirs > 0) Seq("cell", "lbk", "label") else Seq("cell", "label")
-    rankPerQuery(
-      probes.join(assigned.select(candCols: _*), keys)
-        .withColumn("cos", cosine),
-      Seq(col("cos").desc, col("id_b")), k)
-      .select(col("id_a").as("q_id"), col("id_b").as("n_id"),
-        col("label").cast("long").as("label"),
-        col("rank").cast("long").as("rank"), graft.Quant.q6(col("cos")).as("cos_sim"))
   }
 
   /** Fused IVF-PQ ANN — the faiss-standard composition (cell pruning ×
@@ -1430,111 +1408,46 @@ object Vectors {
     * DuckDB-replayable, so the full composition hash-gates: assignment
     * argmax, probe ranking, per-cell ADC sums in exact µ-units, and the
     * bounded re-rank join of nQueries·rerank full vectors.
-    */
-  def annIvfPq(emb: DataFrame, nQueries: Int, k: Int,
-               nCells: Int = 16, nProbe: Int = 4, rerank: Int = 32,
-               m: Int = 8, kCodes: Int = 16, lloydIters: Int = 0,
-               trainLimit: Long = 200000L): DataFrame = {
-    val spark = emb.sparkSession
-    val all = withNorm(emb)
-    val corpus = all.filter(col("vec_id") >= nQueries).cache()
-    val cents = trainCentroids(corpus, nCells, lloydIters, trainLimit)
-    val cd = centDf(spark, cents)
-    val assigned = assignTo(corpus, cd)
-    val cb = pqCodebook(assigned, m, kCodes)
-    val codes = pqAssign(assigned, cb, m)
-      .join(assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
-    // quantizer training's driver-side collects are done — release the
-    // cache (the returned plan rescans once; same stance as annIvf)
-    corpus.unpersist()
-    ivfPqQuery(cd, broadcast(cb), codes, assigned,
-      all.filter(col("vec_id") < nQueries), k, nProbe, rerank, m)
-  }
-
-  /** FILTERED IVF-PQ — the complete production composition: metadata
-    * pre-filter × cell pruning × compressed-code ADC scan × exact
-    * re-rank in ONE oracle-gated plan. This is the shape a deployed
+    *
+    * `byLabel` is FILTERED IVF-PQ — the complete production composition:
+    * metadata pre-filter × cell pruning × compressed-code ADC scan ×
+    * exact re-rank in ONE oracle-gated plan. This is the shape a deployed
     * vector store actually serves (faiss IVFPQ + IDSelector): the index
     * is compressed because the corpus doesn't fit, AND every query
-    * carries a predicate — the two families the engine already gates
-    * separately (annIvfPq, annIvfFiltered), fused because their
-    * approximations interact (the filter thins the ADC candidate pool
-    * exactly as it thins the inverted lists, so a compressed config
-    * tuned unfiltered sags under a selective predicate for the same
-    * reason the r12 filtered-IVF gate read 0.30).
+    * carries a predicate. The approximations interact (the filter thins
+    * the ADC candidate pool exactly as it thins the inverted lists, so a
+    * compressed config tuned unfiltered sags under a selective predicate
+    * for the same reason the r12 filtered-IVF gate read 0.30).
     *
     * Composition order matters and is pre-everything: the label is an
     * equi-join key on the CODE rows (cell, label), so an inadmissible
     * candidate never reaches the ADC sum, the rerank cut, or the exact
     * re-rank — never post-filtered at any stage. The probe count rides
-    * the same adaptiveProbe(nCells, nProbe, |labels|) rule as the
-    * uncompressed filtered path (one count-distinct, oracle-replayable);
-    * recall of the shipped config is measured by
-    * annRecallIvfPqFiltered against the exact same-label top-k.
+    * the same adaptiveProbe(nCells, nProbe, |labels|) rule as annIvf
+    * (one count-distinct, oracle-replayable); recall of the shipped
+    * config is measured by annRecallIvfPq(byLabel = true) against the
+    * exact same-label top-k.
     */
-  def annIvfPqFiltered(emb: DataFrame, nQueries: Int, k: Int,
-                       nCells: Int = 16, nProbe: Int = 4, rerank: Int = 32,
-                       m: Int = 8, kCodes: Int = 16, lloydIters: Int = 0,
-                       trainLimit: Long = 200000L): DataFrame = {
+  def annIvfPq(emb: DataFrame, nQueries: Int, k: Int,
+               nCells: Int = 16, nProbe: Int = 4, rerank: Int = 32,
+               m: Int = 8, kCodes: Int = 16, lloydIters: Int = 0,
+               trainLimit: Long = 200000L, byLabel: Boolean = false): DataFrame = {
     val spark = emb.sparkSession
     val all = withNorm(emb)
     val corpus = all.filter(col("vec_id") >= nQueries).cache()
     val cents = trainCentroids(corpus, nCells, lloydIters, trainLimit)
     val cd = centDf(spark, cents)
-    val assigned = assignTo(corpus, cd, carry = Seq("label"))
+    val lab = labelOf(byLabel)
+    val assigned = assignTo(corpus, cd, carry = lab)
     val cb = pqCodebook(assigned, m, kCodes)
     val codes = pqAssign(assigned, cb, m)
-      .join(assigned.select(col("vec_id"), col("cell"), col("label")), Seq("vec_id"))
-    val nLabels = corpus.agg(countDistinct(col("label"))).head.getLong(0)
+      .join(assigned.select(("vec_id" +: "cell" +: lab).map(col): _*), Seq("vec_id"))
+    val probes = probeCount(corpus, nCells, nProbe, byLabel)
+    // quantizer training's driver-side collects are done — release the
+    // cache (the returned plan rescans once; same stance as annIvf)
     corpus.unpersist()
-    ivfPqQueryFiltered(cd, broadcast(cb), codes, assigned,
-      all.filter(col("vec_id") < nQueries), k,
-      adaptiveProbe(nCells, nProbe, nLabels), rerank, m)
-  }
-
-  /** The filtered ivfPqQuery tail: probes carry the query's label, the
-    * compressed-code candidate join keys on (cell, label) — an
-    * inadmissible code row never enters the ADC aggregation — and both
-    * cuts are bounded (rankPerQuery for the corpus-scale ADC prescreen,
-    * a plain per-query window for the ≤rerank-row exact re-rank).
-    */
-  private[sim] def ivfPqQueryFiltered(cents: DataFrame, cb: DataFrame, codes: DataFrame,
-                                      assigned: DataFrame, queries: DataFrame,
-                                      k: Int, nProbe: Int, rerank: Int,
-                                      m: Int = 8): DataFrame = {
-    require(rerank >= k, s"rerank=$rerank must cover k=$k")
-    val wp = Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))
-    val probes = broadcast(queries
-      .join(cents)
-      .withColumn("score", dot(col("embedding"), col("cvec")) * 2 - col("cn2"))
-      .withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("label"), col("cell")))
-    val dt = broadcast(pqDistTable(queries, cb, m))
-    // (cell, label) is the candidate key: the probed-and-admissible code
-    // frame is (nProbe/nCells)·(1/|labels|) of the corpus codes per query
-    // — still corpus-scale in few query groups, hence the two-phase cut
-    val adc = codes.select(col("vec_id").as("n_id"), col("sub"), col("code"),
-        col("cell"), col("label"))
-      .join(probes, Seq("cell", "label"))
-      .join(dt, Seq("q_id", "sub", "code"))
-      .groupBy(col("q_id"), col("n_id"), col("label"))
-      .agg(sum(col("dist_us")).as("adc_us"))
-    val cand = rankPerQuery(adc, Seq(col("adc_us"), col("n_id")), rerank, key = "q_id")
-      .select(col("q_id"), col("n_id"), col("label"), col("adc_us"))
-    val qv = queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("va"), col("nrm").as("na"))
-    val cv = assigned.select(col("vec_id").as("n_id"),
-      col("embedding").as("vb"), col("nrm").as("nb"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    cand.join(broadcast(qv), Seq("q_id")).join(cv, Seq("n_id"))
-      .withColumn("cos", cosine)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("label").cast("long").as("label"),
-        col("rank").cast("long").as("rank"),
-        (col("adc_us").cast("double") / 1e6 + lit(0d)).as("adc_dist"),
-        graft.Quant.q6(col("cos")).as("cos_sim"))
+    ivfPqQuery(cd, broadcast(cb), codes, assigned,
+      all.filter(col("vec_id") < nQueries), k, probes, rerank, m, byLabel)
   }
 
   /** Train the coarse quantizer over an already-normed (and ideally
@@ -1676,13 +1589,11 @@ object Vectors {
     *
     * One left join of the two already-ranked top-k frames on
     * (q_id, n_id); every cutoff is a conditional sum over that |q|·k-row
-    * frame — metadata scale. NULL recall never occurs (the exact side
-    * always has k rows per query when the corpus has ≥ k vectors).
+    * frame — metadata scale (recallFrom).
     */
   def annRecall(emb: DataFrame, nQueries: Int, k: Int,
                 ks: Seq[Int] = Seq(1, 5, 10)): DataFrame = {
-    require(ks.nonEmpty && ks.forall(c => c >= 1 && c <= k),
-      s"every cutoff must be in [1, $k]: $ks")
+    requireCutoffs(ks, k)
     recallFrom(annTopK(emb, nQueries, k), annLsh(emb, nQueries, k), ks)
   }
 
@@ -1693,42 +1604,24 @@ object Vectors {
     * turned off, exactly as annRecall does for the LSH path. Same
     * audit-on-a-sample price (the exact side is nQueries·corpus through
     * the bounded two-phase rank), same metadata-scale join.
+    *
+    * `byLabel` gates the pre-filtered path (annIvf(byLabel = true), which
+    * self-scales its probe count by the label cardinality — see
+    * adaptiveProbe) against the exact filtered top-k
+    * (annTopK(byLabel = true)). A filter changes the recall geometry:
+    * probing the same nProbe cells yields FEWER admissible candidates
+    * (the filter thins each inverted list by its selectivity), so a
+    * config that gates green unfiltered can sag under a selective
+    * filter — this gate measured exactly that (0.30 @10 at a fixed 4/16)
+    * before the adaptive rule shipped, and now gates the rule itself.
     */
   def annRecallIvf(emb: DataFrame, nQueries: Int, k: Int,
                    ks: Seq[Int] = Seq(1, 5, 10),
-                   nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    require(ks.nonEmpty && ks.forall(c => c >= 1 && c <= k),
-      s"every cutoff must be in [1, $k]: $ks")
-    recallFrom(annTopK(emb, nQueries, k),
-      annIvf(emb, nQueries, k, nCells, nProbe, lloydIters = 0), ks)
-  }
-
-  /** The FILTERED member — recall@k of the pre-filtered IVF path
-    * (annIvfFiltered, which self-scales its probe count by the label
-    * cardinality — see adaptiveProbe) vs the exact filtered top-k
-    * (annTopKFiltered). The filtered gate exists separately from
-    * annRecallIvf because a filter changes the recall geometry: probing
-    * the same nProbe cells yields FEWER admissible candidates (the
-    * filter thins each inverted list by its selectivity), so a config
-    * that gates green unfiltered can sag under a selective filter —
-    * this gate measured exactly that (0.30 @10 at a fixed 4/16) before
-    * the adaptive rule shipped, and now gates the rule itself.
-    *
-    * The denominator is Σ_q min(c, admissible_q), NOT n_q·c: a query
-    * whose label class has fewer than c admissible corpus vectors can
-    * only ever match that many, and charging it c would read red even
-    * when the served path returns the COMPLETE admissible set — the
-    * distorted metric would demand probe growth that cannot help
-    * (recallFromFiltered; the unfiltered gates keep n_q·c, where the
-    * corpus always has ≥ k candidates).
-    */
-  def annRecallIvfFiltered(emb: DataFrame, nQueries: Int, k: Int,
-                           ks: Seq[Int] = Seq(1, 5, 10),
-                           nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    require(ks.nonEmpty && ks.forall(c => c >= 1 && c <= k),
-      s"every cutoff must be in [1, $k]: $ks")
-    recallFromFiltered(annTopKFiltered(emb, nQueries, k),
-      annIvfFiltered(emb, nQueries, k, nCells, nProbe, lloydIters = 0), ks)
+                   nCells: Int = 16, nProbe: Int = 4,
+                   byLabel: Boolean = false): DataFrame = {
+    requireCutoffs(ks, k)
+    recallFrom(annTopK(emb, nQueries, k, byLabel),
+      annIvf(emb, nQueries, k, nCells, nProbe, lloydIters = 0, byLabel = byLabel), ks)
   }
 
   /** The PQ member — recall@k of the ADC-prescreened product-quantization
@@ -1739,8 +1632,7 @@ object Vectors {
     */
   def annRecallPq(emb: DataFrame, nQueries: Int, k: Int,
                   ks: Seq[Int] = Seq(1, 5, 10), rerank: Int = 32): DataFrame = {
-    require(ks.nonEmpty && ks.forall(c => c >= 1 && c <= k),
-      s"every cutoff must be in [1, $k]: $ks")
+    requireCutoffs(ks, k)
     recallFrom(annTopK(emb, nQueries, k),
       annPq(emb, nQueries, k, rerank = rerank), ks)
   }
@@ -1753,34 +1645,20 @@ object Vectors {
     * miss can hit the same neighbor) — so the config that actually
     * ships gets its own measured gate. Shared recallFrom join,
     * audit-on-a-sample exact side on the bounded two-phase rank.
+    *
+    * `byLabel` gates the filtered composition (annIvfPq(byLabel = true)
+    * at its adaptive probe count) against the exact same-label top-k: the
+    * three approximations (cell miss, ADC miss, filter thinning) interact
+    * in the candidate pool, so neither the unfiltered gate nor the
+    * filtered IVF gate stands in for it.
     */
   def annRecallIvfPq(emb: DataFrame, nQueries: Int, k: Int,
                      ks: Seq[Int] = Seq(1, 5, 10),
                      nCells: Int = 16, nProbe: Int = 4,
-                     rerank: Int = 32): DataFrame = {
-    require(ks.nonEmpty && ks.forall(c => c >= 1 && c <= k),
-      s"every cutoff must be in [1, $k]: $ks")
-    recallFrom(annTopK(emb, nQueries, k),
-      annIvfPq(emb, nQueries, k, nCells, nProbe, rerank), ks)
-  }
-
-  /** The FUSED-FILTERED member — recall@k of the filtered IVF-PQ
-    * composition (annIvfPqFiltered at its adaptive probe count) vs the
-    * exact same-label top-k (annTopKFiltered). Separate from both
-    * annRecallIvfPq and annRecallIvfFiltered because the three
-    * approximations (cell miss, ADC miss, filter thinning) interact in
-    * the candidate pool; uses the FILTERED denominator
-    * Σ_q min(c, admissible_q) — a selective label class with fewer than
-    * c admissible vectors must still be able to read 1.0.
-    */
-  def annRecallIvfPqFiltered(emb: DataFrame, nQueries: Int, k: Int,
-                             ks: Seq[Int] = Seq(1, 5, 10),
-                             nCells: Int = 16, nProbe: Int = 4,
-                             rerank: Int = 32): DataFrame = {
-    require(ks.nonEmpty && ks.forall(c => c >= 1 && c <= k),
-      s"every cutoff must be in [1, $k]: $ks")
-    recallFromFiltered(annTopKFiltered(emb, nQueries, k),
-      annIvfPqFiltered(emb, nQueries, k, nCells, nProbe, rerank), ks)
+                     rerank: Int = 32, byLabel: Boolean = false): DataFrame = {
+    requireCutoffs(ks, k)
+    recallFrom(annTopK(emb, nQueries, k, byLabel),
+      annIvfPq(emb, nQueries, k, nCells, nProbe, rerank, byLabel = byLabel), ks)
   }
 
   /** The BITQ member — recall@k of the sign-bit Hamming-prescreened path
@@ -1797,60 +1675,44 @@ object Vectors {
     */
   def annRecallBitq(emb: DataFrame, nQueries: Int, k: Int,
                     ks: Seq[Int] = Seq(1, 5, 10), cand: Int = 50): DataFrame = {
-    require(ks.nonEmpty && ks.forall(c => c >= 1 && c <= k),
-      s"every cutoff must be in [1, $k]: $ks")
+    requireCutoffs(ks, k)
     recallFrom(annTopK(emb, nQueries, k),
       annBitq(emb, nQueries, k, cand = cand), ks)
   }
 
-  /** The recall join shared by the serving-path acceptance gates: one
-    * left join of two already-ranked top-k frames on (q_id, n_id), every
-    * cutoff a conditional sum over that |q|·k-row frame — metadata scale.
+  /** Every recall cutoff must lie in [1, k] — checked before any job. */
+  private def requireCutoffs(ks: Seq[Int], k: Int): Unit =
+    require(ks.nonEmpty && ks.forall(c => c >= 1 && c <= k),
+      s"every cutoff must be in [1, $k]: $ks")
+
+  /** The recall reducer of every serving-path gate and tuning curve: one
+    * left join of two already-ranked top-k frames on (q_id, n_id), grouped
+    * per query into the exact row count `nex` and the hits at each
+    * cutoff, then summed into n_q, hits_c and den_c — metadata scale.
+    *
+    * The denominator is den_c = Σ_q min(c, nex_q), NOT n_q·c. The exact
+    * side ranks rank ≤ k rows per query, so nex_q IS min(k, admissible_q):
+    * a query whose label class (or whole corpus) has fewer than c
+    * admissible vectors can only ever match that many, and charging it c
+    * would read red even when the served path returns the COMPLETE
+    * admissible set — the distorted metric would demand probe growth that
+    * cannot help. Where every query has ≥ c exact rows, den_c = n_q·c.
     */
   private def recallFrom(exact: DataFrame, approx: DataFrame,
                          ks: Seq[Int]): DataFrame = {
     val ex = exact.select(col("q_id"), col("n_id"), col("rank").as("rank_exact"))
     val ap = approx.select(col("q_id"), col("n_id"), col("rank").as("rank_approx"))
-    val j = ex.join(ap, Seq("q_id", "n_id"), "left")
-    val nq = j.agg(countDistinct(col("q_id")).as("n_q"))
-    val hitCols = ks.map { c =>
+    val perQ = count(lit(1)).as("nex") +: ks.map { c =>
       sum(when(col("rank_exact") <= c && col("rank_approx") <= c, 1L)
         .otherwise(0L)).as(s"hits_$c")
     }
-    j.agg(hitCols.head, hitCols.tail: _*)
-      .crossJoin(broadcast(nq))
-      .select(col("n_q") +: ks.flatMap { c =>
-        Seq(col(s"hits_$c"),
-          graft.Quant.q6(col(s"hits_$c").cast("double") / (col("n_q") * c))
-            .as(s"recall_$c"))
-      }: _*)
-  }
-
-  /** recallFrom with the FILTERED denominator: a selective filter can
-    * leave a query fewer than c admissible corpus vectors, and the exact
-    * side then has fewer than c rows for it — charging the full n_q·c
-    * would cap its recall below 1.0 even when the served path returns
-    * every admissible neighbor. Denominator = Σ_q min(c, exact-row
-    * count), computed from the already-ranked exact frame (rank ≤ k rows
-    * per query ⇒ the per-query count IS min(k, admissible)); same
-    * metadata-scale left join for the hits.
-    */
-  private def recallFromFiltered(exact: DataFrame, approx: DataFrame,
-                                 ks: Seq[Int]): DataFrame = {
-    val ex = exact.select(col("q_id"), col("n_id"), col("rank").as("rank_exact"))
-    val ap = approx.select(col("q_id"), col("n_id"), col("rank").as("rank_approx"))
-    val j = ex.join(ap, Seq("q_id", "n_id"), "left")
-    val denomCols = countDistinct(col("q_id")).as("n_q") +: ks.map { c =>
-      sum(least(lit(c.toLong), col("nex"))).as(s"den_$c")
+    val totals = count(lit(1)).as("n_q") +: ks.flatMap { c =>
+      Seq(sum(col(s"hits_$c")).as(s"hits_$c"),
+        sum(least(lit(c.toLong), col("nex"))).as(s"den_$c"))
     }
-    val den = ex.groupBy(col("q_id")).agg(count(lit(1)).as("nex"))
-      .agg(denomCols.head, denomCols.tail: _*)
-    val hitCols = ks.map { c =>
-      sum(when(col("rank_exact") <= c && col("rank_approx") <= c, 1L)
-        .otherwise(0L)).as(s"hits_$c")
-    }
-    j.agg(hitCols.head, hitCols.tail: _*)
-      .crossJoin(broadcast(den))
+    ex.join(ap, Seq("q_id", "n_id"), "left")
+      .groupBy(col("q_id")).agg(perQ.head, perQ.tail: _*)
+      .agg(totals.head, totals.tail: _*)
       .select(col("n_q") +: ks.flatMap { c =>
         Seq(col(s"hits_$c"),
           graft.Quant.q6(col(s"hits_$c").cast("double") / col(s"den_$c"))
@@ -1885,19 +1747,13 @@ object Vectors {
     require(probes.nonEmpty && probes == probes.sorted &&
       probes.head >= 1 && probes.last <= nCells,
       s"probes must be ascending within [1, $nCells]: $probes")
-    require(ks.nonEmpty && ks.forall(c => c >= 1 && c <= k),
-      s"every cutoff must be in [1, $k]: $ks")
+    requireCutoffs(ks, k)
     val spark = emb.sparkSession
     val all = withNorm(emb)
     val corpus = all.filter(col("vec_id") >= nQueries)
     val cents = centDf(spark, trainCentroids(corpus, nCells, 0, nCells.toLong))
     val assigned = assignTo(corpus, cents)
-    val wp = Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))
-    val qcells = broadcast(all.filter(col("vec_id") < nQueries)
-      .join(cents)
-      .withColumn("score", dot(col("embedding"), col("cvec")) * 2 - col("cn2"))
-      .withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= probes.last)
+    val qcells = broadcast(probeCells(all.filter(col("vec_id") < nQueries), cents, probes.last)
       .select(col("vec_id").as("id_a"), col("embedding").as("va"),
         col("nrm").as("na"), col("cell"), col("pr")))
     val cand = qcells

@@ -23,27 +23,17 @@ object StreamAnnProbe {
 
   /** Wire `queries` (streaming) through the index; `sink(result,
     * batchId)` receives each micro-batch's (q_id, n_id, rank, cos_sim).
+    * Against an index built with IvfIndex.build(byLabel = true), arriving
+    * (vec_id, embedding, label) queries get the filtered answer
+    * (q_id, n_id, label, rank, cos_sim) the same way: IvfIndex.query
+    * reads the layout, and per-query answers still depend only on the
+    * index (the spec pins chunked streaming == the fused batch
+    * emb_ann_filtered path).
     * Returns the un-started writer so the caller owns checkpoint/trigger.
     */
   def probe(queries: DataFrame, index: IvfIndex, k: Int, nProbe: Int = 4)
            (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     queries.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       sink(index.query(batch, k, nProbe), batchId)
-    }
-
-  /** The FILTERED probe — arriving (vec_id, embedding, label) queries
-    * against an index built with IvfIndex.buildFiltered: each micro-batch
-    * rides IvfIndex.queryFiltered (candidates keyed on (cell, label) over
-    * the label-partitioned assignment files, probe count scaled by the
-    * index's label cardinality — Vectors.adaptiveProbe). Same
-    * foreachBatch stream-static shape and slicing-invariance argument as
-    * probe(): per-query answers depend only on the index, so any
-    * micro-batch chunking equals one batch call (the spec pins chunked
-    * streaming == the fused batch emb_ann_filtered path).
-    */
-  def probeFiltered(queries: DataFrame, index: IvfIndex, k: Int, nProbe: Int = 4)
-                   (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    queries.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(index.queryFiltered(batch, k, nProbe), batchId)
     }
 }

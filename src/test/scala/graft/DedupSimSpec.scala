@@ -633,6 +633,15 @@ class DedupSimSpec extends SparkSuite {
     // reopening from disk serves the same answers (nothing driver-resident)
     val reopened = graft.sim.IvfIndex(spark, idx.dir)
     assert(rows(reopened.query(emb.filter(col("vec_id") < 5), 10)) == fused)
+    // the layout decides, not the query schema: an index built without
+    // labels serves the unfiltered answer to a query frame carrying label
+    val plain = graft.sim.IvfIndex.build(
+      emb.filter(col("vec_id") >= 5).select("vec_id", "embedding"), tmpDir("ivf_idx_nolabel"))
+    val labeled = emb.filter(col("vec_id") < 5)
+    assert(labeled.columns.contains("label"))
+    val res = plain.query(labeled, 10)
+    assert(res.columns.toSeq == Seq("q_id", "n_id", "rank", "cos_sim"))
+    assert(rows(res) == fused)
   }
 
   test("IVF-PQ: full probe equals annPq bit-for-bit; pruned probe keeps recall") {
@@ -964,6 +973,13 @@ class DedupSimSpec extends SparkSuite {
       .collect()(0)
     assert(r.getLong(0) == 3L)                       // n_q
     assert(r.getDouble(2) == 1.0 && r.getDouble(4) == 1.0)
+    // a corpus of 3 vectors under k = 5: the exact side has only 3 rows
+    // per query, and the complete answer must still read 1.0 (an n_q·c
+    // denominator would read 3/5)
+    val tiny = Vectors.annRecallIvf(e.filter(col("vec_id") < 4), 1, 5, Seq(1, 5),
+      nCells = 2, nProbe = 2).collect()(0)
+    assert(tiny.getLong(0) == 1L && tiny.getLong(3) == 3L, s"$tiny")
+    assert(tiny.getDouble(2) == 1.0 && tiny.getDouble(4) == 1.0, s"$tiny")
   }
 
   test("annIvfFiltered pre-filter finds admissible neighbors a post-filter would lose") {
@@ -981,7 +997,7 @@ class DedupSimSpec extends SparkSuite {
     val unfiltered = Vectors.annIvf(e, 1, 3, nCells = 2, nProbe = 2, lloydIters = 0)
       .collect().map(_.getLong(1)).toSet
     assert(unfiltered.forall(_ <= 20L))                  // post-filter would lose all
-    val filtered = Vectors.annIvfFiltered(e, 1, 3, nCells = 2, nProbe = 2)
+    val filtered = Vectors.annIvf(e, 1, 3, nCells = 2, nProbe = 2, lloydIters = 0, byLabel = true)
       .collect().map(r => (r.getLong(1), r.getLong(2)))
     assert(filtered.map(_._1).toSet == Set(21L, 22L, 23L))
     assert(filtered.forall(_._2 == 1L))
@@ -996,9 +1012,11 @@ class DedupSimSpec extends SparkSuite {
       df.orderBy("q_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getDouble(4))).toSeq
-    assert(rows(Vectors.annIvfFiltered(e, 3, 5, nCells = 4, nProbe = 4)) ==
-      rows(Vectors.annTopKFiltered(e, 3, 5)))
-    val r = Vectors.annRecallIvfFiltered(e, 3, 5, Seq(1, 5), nCells = 4, nProbe = 4)
+    assert(rows(Vectors.annIvf(e, 3, 5, nCells = 4, nProbe = 4, lloydIters = 0,
+      byLabel = true)) ==
+      rows(Vectors.annTopK(e, 3, 5, byLabel = true)))
+    val r = Vectors.annRecallIvf(e, 3, 5, Seq(1, 5), nCells = 4, nProbe = 4,
+      byLabel = true)
       .collect()(0)
     assert(r.getLong(0) == 3L)
     assert(r.getDouble(2) == 1.0 && r.getDouble(4) == 1.0)
@@ -1024,7 +1042,7 @@ class DedupSimSpec extends SparkSuite {
     // the registered config probes every cell and the filtered gate must
     // read exactly 1.0 — the r12 gate read 0.30 at the FIXED 4/16
     val emb = Tables.load(spark, sfDir, "embeddings")
-    val r = Vectors.annRecallIvfFiltered(emb, 5, 10).collect()(0)
+    val r = Vectors.annRecallIvf(emb, 5, 10, byLabel = true).collect()(0)
     assert(r.getLong(0) == 5L) // n_q
     assert(r.getDouble(2) == 1.0 && r.getDouble(4) == 1.0 && r.getDouble(6) == 1.0,
       s"adaptive filtered recall must be 1.0 at this index size, got $r")
@@ -1042,7 +1060,8 @@ class DedupSimSpec extends SparkSuite {
         math.sin(i * 64.0 + d).toFloat), 0)) ++
        Seq((21L, q, 1), (22L, Seq.tabulate(64)(d => if (d == 1) 1f else 0f), 1))))
       .toDF("vec_id", "embedding", "label")
-    val r = Vectors.annRecallIvfFiltered(e, 1, 5, Seq(1, 5), nCells = 4, nProbe = 4)
+    val r = Vectors.annRecallIvf(e, 1, 5, Seq(1, 5), nCells = 4, nProbe = 4,
+      byLabel = true)
       .collect()(0)
     assert(r.getLong(0) == 1L)                                  // n_q
     assert(r.getLong(3) == 2L, s"hits_5: $r")                   // both admissible found
@@ -1054,9 +1073,11 @@ class DedupSimSpec extends SparkSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._4)).toSeq
-    val fused = rows(graft.sim.Vectors.annIvfFiltered(emb, 5, 10, lloydIters = 0))
+    val fused = rows(graft.sim.Vectors.annIvf(emb, 5, 10, lloydIters = 0,
+      byLabel = true))
     val dir = tmpDir("ivf_filtered_idx")
-    val idx = graft.sim.IvfIndex.buildFiltered(emb.filter(col("vec_id") >= 5), dir)
+    val idx = graft.sim.IvfIndex.build(emb.filter(col("vec_id") >= 5), dir,
+      lloydIters = 0, byLabel = true)
     // the layout claim: assignment files are physically partitioned by
     // (cell, label) — the filter IS parquet partition pruning
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -1066,10 +1087,10 @@ class DedupSimSpec extends SparkSuite {
     assert(cellDirs.nonEmpty)
     assert(cellDirs.forall(c => fs.listStatus(c.getPath)
       .exists(_.getPath.getName.startsWith("label="))), "missing label= subdirs")
-    val got = rows(idx.queryFiltered(emb.filter(col("vec_id") < 5), 10))
+    val got = rows(idx.query(emb.filter(col("vec_id") < 5), 10))
     assert(got.nonEmpty && got == fused)
     val reopened = graft.sim.IvfIndex(spark, dir)
-    assert(rows(reopened.queryFiltered(emb.filter(col("vec_id") < 5), 10)) == fused)
+    assert(rows(reopened.query(emb.filter(col("vec_id") < 5), 10)) == fused)
   }
 
   test("filtered IvfIndex past maxLabelDirs: bounded hash-bucket dirs, identical answers") {
@@ -1084,11 +1105,11 @@ class DedupSimSpec extends SparkSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._4)).toSeq
-    val fused = rows(graft.sim.Vectors.annIvfFiltered(e, 5, 10,
-      nCells = 4, lloydIters = 0))
+    val fused = rows(graft.sim.Vectors.annIvf(e, 5, 10,
+      nCells = 4, lloydIters = 0, byLabel = true))
     val dir = tmpDir("ivf_bucketed_idx")
-    val idx = graft.sim.IvfIndex.buildFiltered(e.filter(col("vec_id") >= 5), dir,
-      nCells = 4, maxLabelDirs = 8)
+    val idx = graft.sim.IvfIndex.build(e.filter(col("vec_id") >= 5), dir,
+      nCells = 4, lloydIters = 0, byLabel = true, maxLabelDirs = 8)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cellDirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/assigned"))
@@ -1112,10 +1133,10 @@ class DedupSimSpec extends SparkSuite {
       scans.head.metrics("numFiles").value < sub.length,
       "the bucket predicate must prune directories, not scan the grid")
     // identical answers through the bucketed layout, incl. after reopen
-    val got = rows(idx.queryFiltered(e.filter(col("vec_id") < 5), 10))
+    val got = rows(idx.query(e.filter(col("vec_id") < 5), 10))
     assert(got.nonEmpty && got == fused)
     assert(rows(graft.sim.IvfIndex(spark, dir)
-      .queryFiltered(e.filter(col("vec_id") < 5), 10)) == fused)
+      .query(e.filter(col("vec_id") < 5), 10)) == fused)
     // the lbk contract is TYPE-insensitive within the integral family:
     // a query batch whose label column is a different integral width
     // than the corpus's must derive the same bucket — lbk hashes the
@@ -1124,7 +1145,7 @@ class DedupSimSpec extends SparkSuite {
     // candidates with no error)
     val longLabels = e.filter(col("vec_id") < 5)
       .withColumn("label", col("label").cast("long"))
-    assert(rows(idx.queryFiltered(longLabels, 10)) == fused,
+    assert(rows(idx.query(longLabels, 10)) == fused,
       "bucketed filtered query must tolerate a coercible label type change")
     // n_labels is served from the meta file, not a data scan (the meta
     // row also carries the dir count) — pin the values plus the
@@ -1141,14 +1162,15 @@ class DedupSimSpec extends SparkSuite {
     val strLabels = e.filter(col("vec_id") < 5)
       .withColumn("label", col("label").cast("string"))
     val exFam = intercept[IllegalArgumentException](
-      idx.queryFiltered(strLabels, 10).collect())
+      idx.query(strLabels, 10).collect())
     assert(exFam.getMessage.contains("family"), exFam.getMessage)
     // an unsupported label type (double) is rejected at build, never
     // hashed into a silently wrong bucket grid
     val exTyp = intercept[IllegalArgumentException](
-      graft.sim.IvfIndex.buildFiltered(
+      graft.sim.IvfIndex.build(
         e.withColumn("label", col("label").cast("double")),
-        tmpDir("ivf_bucketed_bad_type"), nCells = 4, maxLabelDirs = 8))
+        tmpDir("ivf_bucketed_bad_type"), nCells = 4, lloydIters = 0, byLabel = true,
+        maxLabelDirs = 8))
     assert(exTyp.getMessage.contains("integral or string"), exTyp.getMessage)
     // an index written by an OLDER build (meta without layout_version)
     // fails at open with the named rebuild error, not an opaque
@@ -1158,7 +1180,7 @@ class DedupSimSpec extends SparkSuite {
       .parquet(s"$dir/meta")
     val exOld = intercept[IllegalStateException](
       graft.sim.IvfIndex(spark, dir)
-        .queryFiltered(e.filter(col("vec_id") < 5), 10))
+        .query(e.filter(col("vec_id") < 5), 10))
     assert(exOld.getMessage.contains("older graft version"), exOld.getMessage)
   }
 
@@ -1291,7 +1313,7 @@ class DedupSimSpec extends SparkSuite {
 
   test("annIvfPqFiltered pre-filters the CODE rows: admissible neighbors survive a dominant inadmissible mass") {
     import spark.implicits._
-    // same geometry as the annIvfFiltered pre-filter spec: the query's
+    // same geometry as the filtered annIvf pre-filter spec: the query's
     // label-1 class has three far vectors while twenty label-0 clones of
     // the query dominate every unfiltered stage (cells, ADC, re-rank).
     // The fused filtered path must return exactly the three admissible
@@ -1302,7 +1324,7 @@ class DedupSimSpec extends SparkSuite {
     val near = (1L to 20L).map(i => (i, q, 0))
     val admissible = (21L to 23L).map(i => (i, far, 1))
     val e = ((0L, q, 1) +: (near ++ admissible)).toDF("vec_id", "embedding", "label")
-    val got = Vectors.annIvfPqFiltered(e, 1, 3, nCells = 2, nProbe = 2)
+    val got = Vectors.annIvfPq(e, 1, 3, nCells = 2, nProbe = 2, byLabel = true)
       .collect().map(r => (r.getLong(1), r.getLong(2)))
     assert(got.map(_._1).toSet == Set(21L, 22L, 23L), got.toSeq.toString)
     assert(got.forall(_._2 == 1L))
@@ -1312,7 +1334,7 @@ class DedupSimSpec extends SparkSuite {
     import spark.implicits._
     // adaptiveProbe(4, 4, 3) saturates at nCells and rerank covers every
     // admissible candidate ⇒ no stage drops anything: the fused filtered
-    // composition must reproduce annTopKFiltered row-for-row, and the
+    // composition must reproduce the filtered annTopK row-for-row, and the
     // fused gate must read exactly 1.0
     val e = Seq.tabulate(40)(i =>
       (i.toLong, Seq.tabulate(64)(d => math.sin(i * 64.0 + d).toFloat), i % 3))
@@ -1322,11 +1344,11 @@ class DedupSimSpec extends SparkSuite {
         .orderBy("q_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getDouble(4))).toSeq
-    assert(rows(Vectors.annIvfPqFiltered(e, 3, 5, nCells = 4, nProbe = 4,
-        rerank = 37)) ==
-      rows(Vectors.annTopKFiltered(e, 3, 5)))
-    val r = Vectors.annRecallIvfPqFiltered(e, 3, 5, Seq(1, 5),
-      nCells = 4, nProbe = 4, rerank = 37).collect()(0)
+    assert(rows(Vectors.annIvfPq(e, 3, 5, nCells = 4, nProbe = 4,
+        rerank = 37, byLabel = true)) ==
+      rows(Vectors.annTopK(e, 3, 5, byLabel = true)))
+    val r = Vectors.annRecallIvfPq(e, 3, 5, Seq(1, 5),
+      nCells = 4, nProbe = 4, rerank = 37, byLabel = true).collect()(0)
     assert(r.getLong(0) == 3L)
     assert(r.getDouble(2) == 1.0 && r.getDouble(4) == 1.0)
   }
@@ -1337,7 +1359,7 @@ class DedupSimSpec extends SparkSuite {
     // over ~1/10 of the corpus per query) — the shipped config's recall,
     // measured the way emb_ann_filtered_pq_recall gates it
     val emb = Tables.load(spark, sfDir, "embeddings")
-    val r = Vectors.annRecallIvfPqFiltered(emb, 5, 10).collect()(0)
+    val r = Vectors.annRecallIvfPq(emb, 5, 10, byLabel = true).collect()(0)
     assert(r.getLong(0) == 5L, s"n_q: $r")
     assert(r.getDouble(6) >= 0.9,
       s"fused filtered recall@10 must be >= 0.9 at the registered config, got $r")

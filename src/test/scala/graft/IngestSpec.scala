@@ -325,15 +325,15 @@ class IngestSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toSet
     // the fused batch operator (adaptive probes, pre-filtered lists) is
     // the truth the chunked stream must reproduce exactly
-    val fused = key(graft.sim.Vectors.annIvfFiltered(emb, 5, 10, lloydIters = 0))
-    val idx = graft.sim.IvfIndex.buildFiltered(
-      emb.filter(col("vec_id") >= 5), tmpDir("sannf_idx"))
+    val fused = key(graft.sim.Vectors.annIvf(emb, 5, 10, lloydIters = 0, byLabel = true))
+    val idx = graft.sim.IvfIndex.build(
+      emb.filter(col("vec_id") >= 5), tmpDir("sannf_idx"), lloydIters = 0, byLabel = true)
     val queries = emb.filter(col("vec_id") < 5).select("vec_id", "embedding", "label")
     val src = tmpDir("sannf_src")
     val outDir = tmpDir("sannf_out")
     queries.filter(col("vec_id") < 2).write.mode("append").parquet(src)
     val stream = spark.readStream.schema(queries.schema).parquet(src)
-    val q = StreamAnnProbe.probeFiltered(stream, idx, 10) { (res, _) =>
+    val q = StreamAnnProbe.probe(stream, idx, 10) { (res, _) =>
         res.write.mode("append").parquet(outDir)
       }
       .option("checkpointLocation", tmpDir("sannf_ckpt")).start()

@@ -566,12 +566,15 @@ class PlanShapeSpec extends SparkSuite {
     // recipe on the similarity axis).
     // emb_ann_pq / emb_pq_rerank_curve joined the riders in round 11
     // (the ADC rerank cut moved onto rankPerQuery); the bitq gate rides
-    // it on both sides (exact via annTopK, prescreen via annBitq)
-    for (q <- Seq("emb_ann_topk", "emb_ann_bitq", "emb_ann_recall",
-        "emb_ann_pq", "emb_pq_rerank_curve", "emb_ann_bitq_recall")) {
+    // it on both sides (exact via annTopK, prescreen via annBitq); the
+    // filtered IVF and IVF-PQ paths rank per id_a and (ADC cut) per q_id
+    for ((q, key) <- Seq("emb_ann_topk" -> "id_a", "emb_ann_bitq" -> "id_a",
+        "emb_ann_recall" -> "id_a", "emb_ann_pq" -> "id_a",
+        "emb_pq_rerank_curve" -> "id_a", "emb_ann_bitq_recall" -> "id_a",
+        "emb_ann_filtered" -> "id_a", "emb_ann_filtered_pq" -> "q_id")) {
       val plan = physical(SparkEntry.queries(q)(spark, sfDir))
-      assert(plan.contains("windowspecdefinition(id_a#") && plan.contains(", slice#"),
-        s"$q rank not two-phase (no (id_a, slice) local window):\n${plan.take(3000)}")
+      assert(plan.contains(s"windowspecdefinition($key#") && plan.contains(", slice#"),
+        s"$q rank not two-phase (no ($key, slice) local window):\n${plan.take(3000)}")
     }
   }
 

@@ -45,4 +45,19 @@ class SliceIdSpec extends SparkSuite {
       .count()
     assert(diff == 0L)
   }
+
+  test("slice_id compares and prints its cuts by value") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.types.LongType
+    val t = AttributeReference("t_us", LongType)()
+    val a = graft.plans.SliceIdExpr(t, Array(-5L, 0L, 7L))
+    val b = graft.plans.SliceIdExpr(t, Array(-5L, 0L, 7L))
+    assert(a.semanticEquals(b) && a.hashCode == b.hashCode && a.semanticHash() == b.semanticHash())
+    assert(!a.semanticEquals(graft.plans.SliceIdExpr(t, Array(-5L, 0L, 8L))))
+    // the plan names the cut count and its end points, not an array identity
+    val plan = spark.range(3).select(col("id").as("t_us"))
+      .select(graft.plans.SliceId.sliceId(col("t_us"), Array(-5L, 0L, 7L)).as("s"))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("3 cuts -5..7") && !plan.contains("[J@"), plan)
+  }
 }
