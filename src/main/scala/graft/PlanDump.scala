@@ -38,12 +38,16 @@ object PlanDump {
 
   /** What a formatted plan prints that varies between two JVMs building the
     * same plan: expression ids (`#123`) and exchange ids (`plan_id=45`),
-    * which count up across the queries a JVM builds; lambda class names and
-    * identity hashes (`$Lambda$6389/0x7f31…@38e3…`, `[J@371c…`); and this
-    * process's pid, which names the temp stores some queries build.
+    * which count up across the queries a JVM builds; the suffix a lambda
+    * variable gets from the same kind of JVM-wide counter (`lambda x_6#…`,
+    * masked only in lambda names, so a column such as `recall_5` keeps its
+    * digits); lambda class names and identity hashes
+    * (`$Lambda$6389/0x7f31…@38e3…`, `[J@371c…`); and this process's pid,
+    * which names the temp stores some queries build.
     */
   private def mask(plan: String): String =
     plan.replaceAll("#\\d+", "#N")
+      .replaceAll("(lambda \\w+)_\\d+#N", "$1_N#N")
       .replaceAll("plan_id=\\d+", "plan_id=N")
       .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")
       .replaceAll("@[0-9a-f]+", "@N")

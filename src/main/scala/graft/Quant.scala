@@ -23,7 +23,11 @@ import org.apache.spark.sql.functions._
   * Means go further: quantize each input to exact integer micro-units
   * (`us6`), sum as longs — exact and associative, so the result is
   * independent of partial-aggregation order AND exactly re-aggregable
-  * across rollup levels (graft.ts.Rollup) — then round once at scale 0.
+  * across rollup levels — then round once at scale 0. The statpoint that
+  * carries these sums (its `v_*` columns, the µ-unit sum and the mean6
+  * rounding) is defined once, in graft.ts.TimeSeriesOps' node algebra
+  * (statAgg, statPartial); the raw reads, graft.ts.Rollup and
+  * graft.streaming.Ingest all fold through it.
   *
   * Overflow bound: a LONG micro-unit sum overflows past 9.2e18 (under
   * Spark 4's ANSI mode the aggregate throws ARITHMETIC_OVERFLOW),
@@ -47,6 +51,18 @@ object Quant {
     * DuckDB mirror: `CAST(round((x) * 1000000.0, 0) AS BIGINT)`.
     */
   def us6(c: Column): Column = round(c * 1e6, 0).cast("long")
+
+  /** The value domain: us6 of a finite |value| <= MaxAbs fits a long,
+    * while NaN, ±Inf or a larger magnitude throws CAST_OVERFLOW in every
+    * statpoint read of its stream. checkDomain(c) is `c`, or for a value
+    * outside the domain (NaN too: Spark orders it above every double) an
+    * error naming the domain; the store applies it to every write.
+    */
+  val MaxAbs = 9.2e12
+  def checkDomain(c: Column): Column =
+    when(!(abs(c) <= MaxAbs), raise_error(concat(lit(
+      s"value outside the domain of graft.Quant.us6 (finite, |value| <= $MaxAbs): "),
+      c.cast("string")))).otherwise(c)
 
   /** Deterministic 6-dp mean from an exact micro-unit sum and a count.
     * DuckDB mirror: `round(CAST(sum_us AS DOUBLE) / n, 0) / 1000000.0 + 0`.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ts.Store
+import graft.ts.{Store, TimeSeriesOps}
 
 /** Streaming ingest — the Spark-native form of BTrDB's write buffer.
   *
@@ -57,6 +57,11 @@ object Ingest {
     * replay wrongly conclude its batch landed. Fan-in belongs upstream
     * (N sources → one stream via unioned/globbed file sources), or in
     * N stores sharing one Rollup — never two streams on one Store.
+    *
+    * Value domain: a row whose value lies outside graft.Quant's domain
+    * (NaN, ±Inf, |value| > Quant.MaxAbs) fails its batch's insert, and so
+    * the stream, loudly; nothing of that batch lands. Bad rows are not
+    * quarantined or counted here.
     */
   def intoStore(spark: SparkSession, sourceDir: String, store: Store,
                 checkpoint: String, rollup: Option[graft.ts.Rollup] = None,
@@ -120,21 +125,15 @@ object Ingest {
   }
 
   /** Watermarked windowed StatPoint stream: the continuously-maintained
-    * level-0 rollup. `timeCol` must be a timestamp column; emits closed
-    * windows only (append mode), so downstream parquet sinks stay
+    * level-0 rollup, the batch statpoint (TimeSeriesOps.statAgg) with
+    * `w_start` in epoch µs. `timeCol` must be a timestamp column; emits
+    * closed windows only (append mode), so downstream parquet sinks stay
     * append-only and idempotent per checkpoint.
     */
   def statStream(points: DataFrame, streamCols: Seq[String], width: String,
                  watermark: String, timeCol: String = "ts"): DataFrame =
-    points
-      .withWatermark(timeCol, watermark)
-      .groupBy(streamCols.map(col) :+ window(col(timeCol), width).as("w"): _*)
-      .agg(
-        min(col("value")).as("v_min"),
-        // same deterministic-mean contract as the batch StatPoint ops
-        graft.Quant.mean6(sum(graft.Quant.us6(col("value"))), count(lit(1))).as("v_mean"),
-        max(col("value")).as("v_max"),
-        count(lit(1)).as("v_count"))
-      .select(streamCols.map(col) :+ col("w.start").as("w_start")
-        :+ col("v_min") :+ col("v_mean") :+ col("v_max") :+ col("v_count"): _*)
+    TimeSeriesOps.statAgg(points.withWatermark(timeCol, watermark), streamCols,
+        window(col(timeCol), width).as("w"))
+      .select((streamCols.map(col) :+ unix_micros(col("w.start")).as("w_start"))
+        ++ Seq("v_min", "v_mean", "v_max", "v_count").map(col): _*)
 }

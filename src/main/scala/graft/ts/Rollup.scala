@@ -12,13 +12,14 @@ import org.apache.spark.sql.functions._
   * a query at pointWidth p reads tree nodes, never raw points.
   *
   * Here the same precomputation is N materialized aggregate tables at
-  * increasing pointwidths. Every level stores exactly the statpoint
-  * `(keys…, w_start, v_min, v_max, v_sum_us, v_count)` — SUM (not mean) so
-  * it is exactly re-aggregable from the previous level: min/max/count/sum
-  * all merge associatively. A query at pointWidth p is served from the
-  * coarsest level ≤ p, re-aggregating 2^(p−l) buckets per window — at
-  * 100 TB a year of ns data at level 32 is ~7 k rows per stream, so stat
-  * queries never touch the raw fact table.
+  * increasing pointwidths. Every level stores exactly the partial
+  * statpoint `(keys…, w_start, v_min, v_max, v_sum_us, v_count)` of
+  * TimeSeriesOps' node algebra — SUM (not mean), so it re-aggregates
+  * exactly from the previous level — and every level read folds it with
+  * the definitions the raw reads use. A query at pointWidth p is served
+  * from the coarsest level ≤ p, re-aggregating 2^(p−l) buckets per window
+  * — at 100 TB a year of ns data at level 32 is ~7 k rows per stream, so
+  * stat queries never touch the raw fact table.
   *
   * Incremental maintenance: level 0 is a groupBy over the new batch only
   * (merged by bucket on read or by periodic compaction) — see
@@ -48,28 +49,18 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
 
   private def levelDir(pw: Int) = s"$base/rollup_pw$pw"
 
-  /** Bucket aggregate of raw points at pointwidth pw: one statpoint per
-    * bucket. The value sum is kept as exact integer micro-units
-    * (graft.Quant.us6), so every level of the hierarchy re-aggregates
-    * without float drift and rollup-served means are bit-identical to
-    * direct aggregation.
-    */
+  /** Raw points as the level at pointwidth pw: one partial statpoint per node. */
   private def bucketize(points: DataFrame, streamCols: Seq[String], pw: Int): DataFrame =
-    points.groupBy(streamCols.map(col)
-        :+ shiftleft(shiftright(col("t_us"), pw), pw).as("w_start"): _*)
-      .agg(min(col("value")).as("v_min"), max(col("value")).as("v_max"),
-        sum(graft.Quant.us6(col("value"))).as("v_sum_us"), count(lit(1)).as("v_count"))
+    TimeSeriesOps.statPartial(points, streamCols,
+      TimeSeriesOps.nodeStart(col("t_us"), pw).as("w_start"))
 
-  /** Merge a finer rollup level up to pointwidth pw — associative and
-    * exact for every statpoint field (integer sums, not float). It names
-    * only the four statpoint columns, so any extra column a finer level
-    * carries is ignored.
+  /** A finer level merged up to pointwidth pw. It names only the four
+    * statpoint columns, so any extra column a finer level carries is
+    * ignored.
     */
   private def merge(finer: DataFrame, streamCols: Seq[String], pw: Int): DataFrame =
-    finer.groupBy(streamCols.map(col)
-        :+ shiftleft(shiftright(col("w_start"), pw), pw).as("w_start"): _*)
-      .agg(min(col("v_min")).as("v_min"), max(col("v_max")).as("v_max"),
-        sum(col("v_sum_us")).as("v_sum_us"), sum(col("v_count")).as("v_count"))
+    TimeSeriesOps.statPartial(finer, streamCols,
+      TimeSeriesOps.nodeStart(col("w_start"), pw).as("w_start"), ofPartials = true)
 
   /** Build (or rebuild) all levels, each from the previous — a single raw
     * scan total. Every level lives under a `delta=` subdir (the same
@@ -219,13 +210,8 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
   private def reaggregate(buckets: DataFrame, streamCols: Seq[String], start: Long,
                           end: Long, width: Long, mergeTo: Option[Int] = None): DataFrame = {
     val complete = buckets.filter(TimeSeriesOps.inWindows(start, end, width, col("w_start")))
-    mergeTo.fold(complete)(merge(complete, streamCols, _))
-      .groupBy(streamCols.map(col)
-        :+ TimeSeriesOps.gridBucket(col("w_start"), start, width).as("w_win"): _*)
-      .agg(min(col("v_min")).as("v_min"),
-        graft.Quant.mean6(sum(col("v_sum_us")), sum(col("v_count"))).as("v_mean"),
-        max(col("v_max")).as("v_max"),
-        sum(col("v_count")).as("v_count"))
+    TimeSeriesOps.statAgg(mergeTo.fold(complete)(merge(complete, streamCols, _)), streamCols,
+        TimeSeriesOps.gridBucket(col("w_start"), start, width).as("w_win"), ofPartials = true)
       .withColumnRenamed("w_win", "w_start")
   }
 
@@ -309,14 +295,12 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
             streamCols, pw)
         val trusted = invRanges.fold(fromLevel)(inv =>
             fromLevel.join(broadcast(inv), keyEq && overlaps(col("w_start")), "left_anti"))
-          .select(streamCols.map(col) :+ col("w_start") :+ col("v_min")
-            :+ graft.Quant.mean6(col("v_sum_us"), col("v_count")).as("v_mean")
-            :+ col("v_max") :+ col("v_count"): _*)
+          .select((streamCols :+ "w_start").map(col) ++ TimeSeriesOps.statRow: _*)
         // dirty interior buckets: recomputed over ALL their visible raw
         // points (a bucket is stale as a whole, not just inside the range)
         val dirty = invRanges.toSeq.map { inv =>
           val pts = raw.filter(col("t_us") >= loAligned && col("t_us") < hiAligned)
-            .withColumn("__b", shiftleft(shiftright(col("t_us"), pw), pw))
+            .withColumn("__b", TimeSeriesOps.nodeStart(col("t_us"), pw))
           TimeSeriesOps.alignedWindows(
             pts.join(broadcast(inv), keyEq && overlaps(col("__b")), "left_semi").drop("__b"),
             streamCols, loAligned, hiAligned, pw)

@@ -88,6 +88,11 @@ class Store(val spark: SparkSession, val base: String,
       .repartition($"ub", $"tb")
       .sortWithinPartitions($"ub", $"tb", $"uuid", $"time")
 
+  /** The written value, checked against graft.Quant's domain inside the
+    * write projection: a value outside it fails the one all-or-nothing job.
+    */
+  private def checkedValue = graft.Quant.checkDomain(col("value").cast("double")).as("value")
+
   /** Driver-side uuid bucket — same value as the Spark xxhash64 column
     * expression (XXH64 over the UTF-8 bytes, seed 42), so literal-uuid
     * reads can prune the ub partition without touching data.
@@ -134,7 +139,7 @@ class Store(val spark: SparkSession, val base: String,
   def insert(uuid: String, points: DataFrame): Long = {
     val v = version(uuid) + 1
     withLayout(points.select(lit(uuid).as("uuid"), col("time").cast("long").as("time"),
-        col("value").cast("double").as("value"), lit(v).as("ver")))
+        checkedValue, lit(v).as("ver")))
       .write.mode(SaveMode.Append).partitionBy("ub", "tb").parquet(pointsDir)
     v
   }
@@ -205,8 +210,7 @@ class Store(val spark: SparkSession, val base: String,
     */
   def insertBatchAt(batch: DataFrame, vers: Seq[(String, Long)]): Unit = {
     val versDf = vers.toDF("uuid", "ver")
-    withLayout(batch.select($"uuid", col("time").cast("long").as("time"),
-        col("value").cast("double").as("value"))
+    withLayout(batch.select($"uuid", col("time").cast("long").as("time"), checkedValue)
       .join(broadcast(versDf), Seq("uuid"))
       .select($"uuid", $"time", $"value", $"ver"))
       .write.mode(SaveMode.Append).partitionBy("ub", "tb").parquet(pointsDir)
@@ -247,8 +251,7 @@ class Store(val spark: SparkSession, val base: String,
     * read's union arm stays small by construction.
     */
   def insertBuffered(uuid: String, points: DataFrame): Unit =
-    points.select(lit(uuid).as("uuid"), col("time").cast("long").as("time"),
-        col("value").cast("double").as("value"))
+    points.select(lit(uuid).as("uuid"), col("time").cast("long").as("time"), checkedValue)
       .repartition(1)
       .write.mode(SaveMode.Append).partitionBy("uuid").parquet(bufferDir)
 
@@ -384,31 +387,8 @@ class Store(val spark: SparkSession, val base: String,
     * 2^res grid and gap-merged per stream.
     */
   def changes(uuid: String, fromVer: Long, toVer: Long, res: Int): DataFrame =
-    changedRanges(streamPoints(uuid), tombstones.filter($"uuid" === uuid),
-      fromVer, toVer, res).drop("uuid")
-
-  /** The (uuid, c_start, c_end) ranges touched by the points and
-    * tombstones with fromVer < ver <= toVer: inserted times aligned down
-    * to the 2^res grid, deleted [t_start, t_end) aligned out to it, then
-    * gap-merged per uuid — the one builder behind changes and
-    * exportChanges.
-    */
-  private def changedRanges(pts: DataFrame, tombs: DataFrame,
-                            fromVer: Long, toVer: Long, res: Int): DataFrame = {
-    val ins = pts.filter($"ver" > fromVer && $"ver" <= toVer)
-      .select($"uuid", shiftleft(shiftright($"time", res), res).as("r_start"))
-      .withColumn("r_end", $"r_start" + (1L << res))
-    // align-up saturates: a full-range tombstone (obliterate, t_end =
-    // Long.MaxValue) must not wrap to MinValue and vanish as a degenerate
-    // range — it invalidates everything
-    val endCap = Long.MaxValue - (1L << res)
-    val del = tombs.filter($"ver" > fromVer && $"ver" <= toVer)
-      .select($"uuid", shiftleft(shiftright($"t_start", res), res).as("r_start"),
-        when($"t_end" > endCap, lit(Long.MaxValue))
-          .otherwise(shiftleft(shiftright($"t_end" - 1, res), res) + (1L << res))
-          .as("r_end"))
-    TimeSeriesOps.mergeRanges(ins.unionByName(del).distinct(), Seq("uuid"))
-  }
+    TimeSeriesOps.changedRanges(streamPoints(uuid), "time",
+      Some(tombstones.filter($"uuid" === uuid)), Seq("uuid"), fromVer, toVer, res).drop("uuid")
 
   /** Incremental export between two versions — the O(changed data)
     * complement of snapshot(): writes the per-stream time ranges touched
@@ -424,7 +404,8 @@ class Store(val spark: SparkSession, val base: String,
     * touch.
     */
   def exportChanges(outDir: String, vFrom: Long, vTo: Long, res: Int): Unit = {
-    val ranges = changedRanges(rawPoints, tombstones, vFrom, vTo, res)
+    val ranges = TimeSeriesOps.changedRanges(rawPoints, "time", Some(tombstones), Seq("uuid"),
+        vFrom, vTo, res)
       .localCheckpoint() // consumed twice (manifest write + semi join)
     ranges.write.mode(SaveMode.Overwrite).parquet(s"$outDir/ranges")
     val pts = pointsAt(Some(vTo))

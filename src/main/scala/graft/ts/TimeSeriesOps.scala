@@ -130,11 +130,9 @@ object TimeSeriesOps {
     * codegen'd integer op here.
     */
   def alignedWindows(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
-                     pointWidth: Int): DataFrame = {
-    val bucket = shiftleft(shiftright(col("t_us"), pointWidth), pointWidth).as("w_start")
+                     pointWidth: Int): DataFrame =
     statAgg(points.filter(col("t_us") >= start && col("t_us") < end),
-      streamCols, bucket)
-  }
+      streamCols, nodeStart(col("t_us"), pointWidth).as("w_start"))
 
   /** Windows: arbitrary fixed-width buckets anchored at `start`. Windows
     * that would extend past `end` are dropped, matching the reference
@@ -178,39 +176,85 @@ object TimeSeriesOps {
     */
   def windowsApprox(points: DataFrame, streamCols: Seq[String], start: Long, end: Long,
                     width: Long, depth: Int): DataFrame = {
-    val key = streamKey(streamCols)
-    val buckets = points
-      .filter(inWindows(start, end, width))
-      .groupBy(key :+ shiftleft(shiftright(col("t_us"), depth), depth).as("b"): _*)
-      .agg(
-        min(col("value")).as("v_min"),
-        max(col("value")).as("v_max"),
-        sum(graft.Quant.us6(col("value"))).as("v_sum_us"),
-        count(lit(1)).as("v_count"))
+    val buckets = statPartial(points.filter(inWindows(start, end, width)), streamCols,
+      nodeStart(col("t_us"), depth).as("b"))
     // a bucket straddling `start` begins before it — clamp so it lands in
     // the first window (the reference folds it into the active window)
-    buckets
-      .groupBy(key :+ gridBucket(greatest(col("b"), lit(start)), start, width).as("w_start"): _*)
-      .agg(
-        min(col("v_min")).as("v_min"),
-        graft.Quant.mean6(sum(col("v_sum_us")), sum(col("v_count"))).as("v_mean"),
-        max(col("v_max")).as("v_max"),
-        sum(col("v_count")).as("v_count"))
+    statAgg(buckets, streamCols,
+      gridBucket(greatest(col("b"), lit(start)), start, width).as("w_start"), ofPartials = true)
   }
 
-  /** min/max are order-insensitive (bit-exact vs any oracle); the mean is
-    * computed from an exact integer micro-unit sum (graft.Quant), so it is
-    * deterministic regardless of partial-aggregation order and identical
-    * to the rollup-served read path (which re-aggregates the same sums).
+  // ---------------------------------------------------------------------
+  // BTrDB's node algebra, stated once for the raw reads, every Rollup level
+  // and delta, and Ingest.statStream — which keeps a rollup-served read
+  // bit-identical to the raw one: the node address (qtree_utils.go
+  // ChildStartTime), the statpoint fold (qtree/operators.go OpReduce) and
+  // the changed-range diff (qtree.go FindChangedSince). A statpoint is
+  // (v_min, v_mean, v_max, v_count); its partial form (v_min, v_max,
+  // v_sum_us, v_count) keeps the exact µ-unit sum, so it re-aggregates.
+  // ---------------------------------------------------------------------
+
+  /** The start of the 2^pw-wide node holding `t`: (t >> pw) << pw. */
+  private[ts] def nodeStart(t: Column, pw: Int): Column = shiftleft(shiftright(t, pw), pw)
+
+  /** The (min, max, µ-unit sum, count) a fold takes of raw points or partials. */
+  private def measures(ofPartials: Boolean): (Column, Column, Column, Column) =
+    if (ofPartials)
+      (min(col("v_min")), max(col("v_max")), sum(col("v_sum_us")), sum(col("v_count")))
+    else
+      (min(col("value")), max(col("value")), sum(graft.Quant.us6(col("value"))), count(lit(1)))
+
+  /** The partial statpoint per (stream, `bucket`), of raw points or (`ofPartials`) partials. */
+  private[ts] def statPartial(df: DataFrame, streamCols: Seq[String], bucket: Column,
+                              ofPartials: Boolean = false): DataFrame = {
+    val (lo, hi, sumUs, n) = measures(ofPartials)
+    df.groupBy(streamKey(streamCols) :+ bucket: _*)
+      .agg(lo.as("v_min"), hi.as("v_max"), sumUs.as("v_sum_us"), n.as("v_count"))
+  }
+
+  /** The statpoint per (stream, `bucket`): of raw points, or (`ofPartials`)
+    * of partial statpoints. The mean is mean6 of the exact µ-unit sum, so
+    * it is the same whatever the aggregation order or level it came from.
     */
-  private def statAgg(points: DataFrame, streamCols: Seq[String], bucket: Column): DataFrame =
-    points
-      .groupBy(streamKey(streamCols) :+ bucket: _*)
-      .agg(
-        min(col("value")).as("v_min"),
-        graft.Quant.mean6(sum(graft.Quant.us6(col("value"))), count(lit(1))).as("v_mean"),
-        max(col("value")).as("v_max"),
-        count(lit(1)).as("v_count"))
+  private[graft] def statAgg(df: DataFrame, streamCols: Seq[String], bucket: Column,
+                             ofPartials: Boolean = false): DataFrame = {
+    val (lo, hi, sumUs, n) = measures(ofPartials)
+    df.groupBy(streamKey(streamCols) :+ bucket: _*)
+      .agg(lo.as("v_min"), graft.Quant.mean6(sumUs, n).as("v_mean"), hi.as("v_max"),
+        n.as("v_count"))
+  }
+
+  /** A partial statpoint row's mean, and its statpoint columns. */
+  private[ts] def statMean: Column = graft.Quant.mean6(col("v_sum_us"), col("v_count")).as("v_mean")
+  private[ts] def statRow: Seq[Column] = Seq(col("v_min"), statMean, col("v_max"), col("v_count"))
+
+  /** The changed-range diff: per key, the time ranges touched by the
+    * `points` (time column `timeCol`) and, when given, the `tombstones`
+    * (t_start, t_end) with fromVer < ver <= toVer — inserted times aligned
+    * down to the 2^res grid, deleted [t_start, t_end) aligned out to it —
+    * gap-merged into (keys…, c_start, c_end). The one builder behind
+    * changes, Store.changes and Store.exportChanges.
+    */
+  private[ts] def changedRanges(points: DataFrame, timeCol: String,
+                                tombstones: Option[DataFrame], keyCols: Seq[String],
+                                fromVer: Long, toVer: Long, res: Int): DataFrame = {
+    val width = 1L << res
+    def inDiff(df: DataFrame) = df.filter(col("ver") > fromVer && col("ver") <= toVer)
+    def withEnd(df: DataFrame) = df.withColumn("r_end", col("r_start") + width)
+    val key = streamKey(keyCols)
+    val ins = inDiff(points).select(key :+ nodeStart(col(timeCol), res).as("r_start"): _*)
+    val ranges = tombstones.fold(withEnd(ins.distinct())) { tombs =>
+      // align-up saturates: a full-range tombstone (obliterate, t_end =
+      // Long.MaxValue) must not wrap to MinValue and vanish as a degenerate
+      // range — it invalidates everything
+      val endCap = Long.MaxValue - width
+      val del = inDiff(tombs).select(key :+ nodeStart(col("t_start"), res).as("r_start")
+        :+ when(col("t_end") > endCap, lit(Long.MaxValue))
+          .otherwise(nodeStart(col("t_end") - 1, res) + width).as("r_end"): _*)
+      withEnd(ins).unionByName(del).distinct()
+    }
+    mergeRanges(ranges, keyCols)
+  }
 
   /** Whole-stream StatPoint — the qtree root node (qtree.go QueryStatisticalValues
     * at the root resolution). Unlike per-window groups, a whole stream's
@@ -258,22 +302,12 @@ object TimeSeriesOps {
   /** Changes: time ranges containing points whose version lies in
     * (fromVer, toVer], coalesced to resolution 2^res — the Spark
     * re-expression of qtree.go FindChangedSince, which walks the COW tree
-    * diff and merges adjacent changed ranges below the resolution cutoff.
-    * Here: align each changed time down/up to the 2^res grid, then classic
-    * gaps-and-islands (lag + running sum) to merge overlapping/adjacent
-    * ranges per stream.
+    * diff and merges adjacent changed ranges below the resolution cutoff:
+    * changedRanges over the points alone.
     */
   def changes(points: DataFrame, streamCols: Seq[String], fromVer: Long, toVer: Long,
-              res: Int): DataFrame = {
-    val key = streamKey(streamCols)
-    val aligned = points
-      .filter(col("ver") > fromVer && col("ver") <= toVer)
-      .select(key
-        :+ shiftleft(shiftright(col("t_us"), res), res).as("r_start"): _*)
-      .distinct()
-      .withColumn("r_end", col("r_start") + (1L << res))
-    mergeRanges(aligned, streamCols)
-  }
+              res: Int): DataFrame =
+    changedRanges(points, "t_us", None, streamCols, fromVer, toVer, res)
 
   /** Version-diff-driven incremental recompute — the changed-ranges
     * workflow BTrDB's GenerateCSV/changes API exists for (qtree version
@@ -300,16 +334,10 @@ object TimeSeriesOps {
       .filter(col("ver") > fromVer && col("ver") <= toVer && complete)
       .select(key :+ widthBucket(start, width): _*)
       .distinct()
-    points
+    statAgg(points
       .filter(col("ver") <= toVer && complete)
       .select(key :+ widthBucket(start, width) :+ col("value"): _*)
-      .join(changed, streamCols :+ "w_start")
-      .groupBy(key :+ col("w_start"): _*)
-      .agg(
-        min(col("value")).as("v_min"),
-        graft.Quant.mean6(sum(graft.Quant.us6(col("value"))), count(lit(1))).as("v_mean"),
-        max(col("value")).as("v_max"),
-        count(lit(1)).as("v_count"))
+      .join(changed, streamCols :+ "w_start"), streamCols, col("w_start"))
   }
 
   /** Coalesce overlapping/adjacent [r_start, r_end) ranges per key —
@@ -1299,18 +1327,11 @@ object TimeSeriesOps {
               width: Long, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val key = streamKey(streamCols)
-    val base = points
-      .filter(inWindows(start, end, width))
-      .groupBy(key :+ widthBucket(start, width): _*)
-      .agg(
-        min(col("value")).as("v_min"),
-        max(col("value")).as("v_max"),
-        sum(graft.Quant.us6(col("value"))).as("v_sum_us"),
-        count(lit(1)).as("v_count"))
+    val base = statPartial(points.filter(inWindows(start, end, width)), streamCols,
+      widthBucket(start, width))
     val frame = Window.partitionBy(key: _*).orderBy(col("w_start"))
       .rowsBetween(-(k - 1).toLong, 0)
-    base.select(key ++ Seq(col("w_start"),
-      graft.Quant.mean6(col("v_sum_us"), col("v_count")).as("v_mean"),
+    base.select(key ++ Seq(col("w_start"), statMean,
       graft.Quant.mean6(sum(col("v_sum_us")).over(frame), sum(col("v_count")).over(frame))
         .as("roll_mean"),
       min(col("v_min")).over(frame).as("roll_min"),
@@ -2006,28 +2027,14 @@ object TimeSeriesOps {
     require(widths.nonEmpty && widths.zip(widths.tail).forall { case (a, b) => b % a == 0 },
       s"each width must divide the next: $widths")
     val key = streamKey(streamCols)
-    val fine = points
-      .filter(inWindows(start, end, widths.max))
-      .groupBy(key :+ widthBucket(start, widths.head): _*)
-      .agg(
-        min(col("value")).as("v_min"),
-        max(col("value")).as("v_max"),
-        sum(graft.Quant.us6(col("value"))).as("v_sum_us"),
-        count(lit(1)).as("v_count"))
+    val fine = statPartial(points.filter(inWindows(start, end, widths.max)), streamCols,
+      widthBucket(start, widths.head))
     val levels = widths.tail.scanLeft(widths.head -> fine) { case ((_, prev), wid) =>
-      wid -> prev
-        .groupBy(key :+ gridBucket(col("w_start"), start, wid).as("w_start"): _*)
-        .agg(
-          min(col("v_min")).as("v_min"),
-          max(col("v_max")).as("v_max"),
-          sum(col("v_sum_us")).as("v_sum_us"),
-          sum(col("v_count")).as("v_count"))
+      wid -> statPartial(prev, streamCols, gridBucket(col("w_start"), start, wid).as("w_start"),
+        ofPartials = true)
     }
     levels.map { case (wid, df) =>
-      df.select(key ++ Seq(lit(wid).as("w_width"), col("w_start"),
-        col("v_min"),
-        graft.Quant.mean6(col("v_sum_us"), col("v_count")).as("v_mean"),
-        col("v_max"), col("v_count")): _*)
+      df.select(key ++ Seq(lit(wid).as("w_width"), col("w_start")) ++ statRow: _*)
     }.reduce(_ unionByName _)
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.streaming.Ingest
-import graft.ts.Store
+import graft.ts.{Store, TimeSeriesOps}
 
 /** Streaming write path: file source → micro-batch → Store version bump;
   * watermarked StatPoint stream against the equivalent batch aggregation.
@@ -68,25 +68,31 @@ class IngestSpec extends SparkSuite {
     // generation-dependent → normalize via Tables.tsUs, then back to a
     // timestamp for the window op)
     val batchRaw = Tables.load(spark, sfDir, "events")
-    val batchDf = batchRaw
-      .select(col("user_id"), col("event_type"),
-        timestamp_micros(Tables.tsUs(batchRaw)).as("ts"), col("value"))
+    val keys = Seq("user_id", "event_type")
+    val events = batchRaw.select(col("user_id"), col("event_type"),
+      Tables.tsUs(batchRaw).as("t_us"), col("value"))
+    val batchDf = events.select(col("user_id"), col("event_type"),
+      timestamp_micros(col("t_us")).as("ts"), col("value"))
     val streamDf = spark.readStream
       .schema(batchDf.schema)
       .parquet(stageAsDir(batchDf))
-    val agg = Ingest.statStream(streamDf, Seq("user_id", "event_type"), "1 day", "0 seconds")
+    val agg = Ingest.statStream(streamDf, keys, "1 day", "0 seconds")
     val q = agg.writeStream.outputMode("append")
       .format("memory").queryName("stat_out")
       .option("checkpointLocation", tmpDir("stat_ckpt"))
       .start()
     q.processAllAvailable()
     q.stop()
-    val got = spark.sql("SELECT sum(v_count) FROM stat_out").first().getLong(0)
-    // append mode emits only watermark-closed windows; with watermark 0s
-    // every window before the max event time closes — all but the last
-    // window per stream are emitted.
-    val total = batchDf.count()
-    assert(got > total / 2, s"emitted $got of $total points in closed windows")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(keys.map(col) :+ col("w_start"): _*).collect().toSeq
+    // append mode emits only watermark-closed windows: with watermark 0s a
+    // window closes once its end is at or before the max event time, which
+    // is exactly the complete-window cutoff of windows() ending there
+    val T0 = 1704067200000000L // 2024-01-01, a day boundary at or before every event
+    val maxT = events.agg(max(col("t_us"))).first().getLong(0)
+    val want = rows(TimeSeriesOps.windows(events, keys, T0, maxT, 86400000000L))
+    val got = rows(spark.table("stat_out"))
+    assert(want.nonEmpty && got == want, s"emitted ${got.size} windows, batch ${want.size}")
   }
 
   test("a batch that committed before the crash is not re-inserted on replay") {

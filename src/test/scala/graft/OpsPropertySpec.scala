@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ts.TimeSeriesOps
+import graft.ts.{Rollup, TimeSeriesOps}
 
 /** Randomized-but-seeded property checks of the round-5 numeric
   * operators against independent in-memory reference implementations —
@@ -18,6 +18,52 @@ class OpsPropertySpec extends SparkSuite {
     // distributed and sequential implementations drift apart
     val ts = Seq.fill(n)(rnd.nextInt(40).toLong).sorted
     ts.map(t => (t, (rnd.nextInt(21) - 10).toDouble / 2))
+  }
+
+  test("every statpoint read path equals windows() row for row on random data") {
+    // node widths 2^2..2^6 over a range that starts below zero; points fall
+    // outside it too, values are negative and sit on half-µ-unit boundaries
+    // (the us6 rounding edge)
+    val (start, end, depth) = (-128L, 192L, 2)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("uuid", "w_start").collect().toSeq
+    for (_ <- 1 to 2) {
+      val pts = Seq.fill(300) {
+        val half = (rnd.nextInt(41) - 20 + 0.5) * 1e-6
+        val v = rnd.nextInt(3) match {
+          case 0 => half
+          case 1 => rnd.nextInt(2001) - 1000 + half
+          case _ => (rnd.nextInt(2001) - 1000) / 8.0
+        }
+        (Seq("a", "b")(rnd.nextInt(2)), start - 20 + rnd.nextInt(360).toLong, v)
+      }.toDF("uuid", "t_us", "value").cache()
+      val built = Rollup(spark, tmpDir("prop_built"), Seq(2, 4))
+      built.build(pts, Seq("uuid"))
+      val appended = Rollup(spark, tmpDir("prop_appended"), Seq(2, 4))
+      appended.appendBatch(pts.filter(col("t_us") % 2 === 0), Seq("uuid"), "d0")
+      appended.appendBatch(pts.filter(col("t_us") % 2 =!= 0), Seq("uuid"), "d1")
+      val multi = TimeSeriesOps.multiResolution(pts, Seq("uuid"), start, end, Seq(16L, 32L, 64L))
+      for (pw <- Seq(4, 5, 6)) {
+        val width = 1L << pw
+        val want = sorted(TimeSeriesOps.windows(pts, Seq("uuid"), start, end, width))
+        val paths = Seq(
+          "alignedWindows" -> TimeSeriesOps.alignedWindows(pts, Seq("uuid"), start, end, pw),
+          "windowsApprox" -> TimeSeriesOps.windowsApprox(pts, Seq("uuid"), start, end, width, depth),
+          "multiResolution" -> multi.filter(col("w_width") === width).drop("w_width")) ++
+          Seq("built" -> built, "appended" -> appended).flatMap { case (name, ru) =>
+            // raw is poisoned: each answer must come from the levels
+            Seq(s"Rollup.windows $name" ->
+                ru.windows(sys.error("read raw"), Seq("uuid"), start, end, width),
+              s"Rollup.alignedWindows $name" ->
+                ru.alignedWindows(sys.error("read raw"), Seq("uuid"), start, end, pw),
+              s"Rollup.windowsApprox $name" ->
+                ru.windowsApprox(Seq("uuid"), start, end, width, 4))
+          }
+        assert(want.nonEmpty)
+        paths.foreach { case (name, df) => assert(sorted(df) == want, s"$name at pw=$pw") }
+      }
+      pts.unpersist()
+    }
   }
 
   test("percentile matches the sorted-array type-7 reference on random data") {

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import graft.ts.{MetaStore, Store}
+import graft.ts.{MetaStore, Store, TimeSeriesOps}
 
 /** MVCC semantics of the versioned point store — mirrors the reference's
   * Insert/Delete/version behavior (quasar_test.go patterns: insert, query
@@ -53,6 +53,32 @@ class StoreSpec extends SparkSuite {
     assert(st.rawValues("s1", 0, 100, Some(v1)).count() == 2)
     assert(st.rawValues("s1", 0, 100, Some(v2)).count() == 3)
     assert(st.rawValues("s1", 0, 100).count() == 3)
+  }
+
+  test("a value outside the us6 domain fails every write path and leaves no trace") {
+    val st = mkStore
+    st.insert("s", Seq((10L, 1.0)).toDF("time", "value"))
+    def failsNamingDomain(write: => Unit): Unit = {
+      val e = intercept[Exception](write)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+      assert(msgs.contains("outside the domain of graft.Quant.us6"), msgs)
+    }
+    for (v <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 9.3e12, -9.3e12)) {
+      val rows = Seq((20L, 2.0), (30L, v)).toDF("time", "value")
+      failsNamingDomain(st.insert("s", rows))
+      failsNamingDomain(st.insertBatchAt(rows.withColumn("uuid", lit("s")), Seq("s" -> 2L)))
+      failsNamingDomain(st.insertBuffered("s", rows))
+      assert(st.version("s") == 1 && st.rawPoints.count() == 1 &&
+        st.bufferedPoints.count() == 0, s"value $v left a trace")
+    }
+    // the domain's edge stores, and a statpoint read of it sums exactly
+    assert(st.insert("s", Seq((40L, 9.2e12), (50L, -9.2e12)).toDF("time", "value")) == 2)
+    val w = TimeSeriesOps.windows(
+      st.streamAt("s").select(col("uuid"), col("time").as("t_us"), col("value")),
+      Seq("uuid"), 0L, 64L, 64L).collect()
+    assert(w.length == 1 && w(0).getDouble(2) == -9.2e12 && w(0).getDouble(4) == 9.2e12 &&
+      w(0).getLong(5) == 3 && w(0).getDouble(3) == 0.333333)
   }
 
   test("buffered writes are read-your-unflushed; flush promotes and clears") {
