@@ -42,8 +42,11 @@ object PlanDump {
     * variable gets from the same kind of JVM-wide counter (`lambda x_6#…`,
     * masked only in lambda names, so a column such as `recall_5` keeps its
     * digits); lambda class names and identity hashes
-    * (`$Lambda$6389/0x7f31…@38e3…`, `[J@371c…`); and this process's pid,
-    * which names the temp stores some queries build.
+    * (`$Lambda$6389/0x7f31…@38e3…`, `[J@371c…`); this process's pid,
+    * which names the temp stores some queries build; and the source line
+    * of the call that made a scanned RDD (`localCheckpoint at
+    * Dedup.scala:188`), which moves with any edit above that call while
+    * the plan stays the same.
     */
   private def mask(plan: String): String =
     plan.replaceAll("#\\d+", "#N")
@@ -52,4 +55,5 @@ object PlanDump {
       .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")
       .replaceAll("@[0-9a-f]+", "@N")
       .replaceAll(s"_${ProcessHandle.current().pid()}\\b", "_PID")
+      .replaceAll("( at \\w+\\.scala):\\d+", "$1:N")
 }

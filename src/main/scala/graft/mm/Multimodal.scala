@@ -272,12 +272,10 @@ object Multimodal {
     val sized = assets.toDF().select(
       col("asset_id").as("doc_id"), col("kind").as("stratum"),
       length(col("payload")).cast("long").as("n_tokens"),
-      md5(col("asset_id").cast("string")).as("rank_key"))
-    graft.text.TextFunctions.stratumPrefixSum(sized)
-      .withColumn("start_byte", col("cum_tokens") - col("n_tokens"))
+      graft.text.TextFunctions.rankKey(col("asset_id")).as("rank_key"))
+    graft.text.TextFunctions.packed(sized, shardBytes)
       .select(col("doc_id").as("asset_id"), col("stratum").as("kind"),
-        col("n_tokens").as("n_bytes"),
-        expr(s"start_byte div ${shardBytes}L").as("shard_id"),
-        (col("start_byte") % shardBytes).as("shard_offset"))
+        col("n_tokens").as("n_bytes"), col("pack_id").as("shard_id"),
+        col("pack_offset").as("shard_offset"))
   }
 }

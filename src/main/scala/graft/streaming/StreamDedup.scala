@@ -35,7 +35,7 @@ object StreamDedup {
   def keyed(docs: DataFrame): Dataset[DocKey] = {
     implicit val e = Encoders.product[DocKey]
     docs.select(col("doc_id").cast("long").as("doc_id"),
-        md5(graft.plans.TextHashes.normText(col("text"))).as("fp"))
+        graft.text.TextFunctions.exactFp(graft.text.TextFunctions.norm).as("fp"))
       .as[DocKey]
   }
 

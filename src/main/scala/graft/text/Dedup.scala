@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,11 +26,10 @@ object Dedup {
     * a downstream pipeline would join against.
     */
   def exact(docs: DataFrame): DataFrame = {
-    val base = TextFunctions.withBase(docs).withColumn("fp", md5(col("norm")))
-    base
-      .withColumn("keep_id", min(col("doc_id")).over(Window.partitionBy(col("fp"))))
+    TextFunctions.withBase(docs).withColumn("fp", TextFunctions.exactFp())
+      .withColumn("keep_id", TextFunctions.keepId)
       .select(col("doc_id"), col("fp"), col("keep_id"),
-        (col("doc_id") =!= col("keep_id")).as("is_dup"))
+        TextFunctions.isDup(col("keep_id")).as("is_dup"))
   }
 
   /** Shared-prefix groups: documents opening with the same first `k`
@@ -54,12 +53,6 @@ object Dedup {
       .select(col("doc_id"), col("pfp"), col("group_id"), col("n_shared"))
   }
 
-  private def shingled(docs: DataFrame, n: Int): DataFrame =
-    TextFunctions.withBase(docs)
-      .withColumn("s", TextFunctions.wordShingles(n))
-      .filter(size(col("s")) > 0)
-      .select(col("doc_id"), col("s"))
-
   /** (doc_id, hs = sorted distinct hashed shingles) — the codegen'd
     * HashedShingles expression; identical Jaccard arithmetic to string
     * shingles (2^-64 collision caveat documented on the expression).
@@ -68,6 +61,54 @@ object Dedup {
     TextFunctions.withBase(docs)
       .select(col("doc_id"), TextHashes.hashedShingles(col("norm"), n).as("hs"))
       .filter(col("hs").isNotNull)
+
+  /** The shingle postings (inverted index): one (doc_id, sz, g) row per
+    * document and distinct hashed shingle g, sz = the document's
+    * distinct-shingle count. Documents under n words have no shingles and
+    * no rows.
+    */
+  private def postings(docs: DataFrame, n: Int): DataFrame =
+    hashedShingled(docs, n)
+      .select(col("doc_id"), size(col("hs")).as("sz"), explode(col("hs")).as("g"))
+
+  /** Shared shingles per document pair of two postings frames — the
+    * inverted-index equality join on g, never a theta-join: cost is
+    * Σ df_a(g)·df_b(g) over shared shingles. `names` = the two id
+    * columns, then optionally the two size columns, all grouped on;
+    * `self` keeps each unordered pair once (id_a < id_b). Hashes are
+    * distinct per document, so the count equals the string-shingle
+    * intersection size.
+    */
+  private def overlap(a: DataFrame, b: DataFrame, names: Seq[String], self: Boolean,
+                      out: String = "inter"): DataFrame = {
+    def side(inv: DataFrame, id: String, sz: Option[String]): DataFrame =
+      inv.select((col("doc_id").as(id) +: sz.toSeq.map(col("sz").as(_))) :+ col("g"): _*)
+    val szs = names.drop(2).lift
+    val joined = side(a, names(0), szs(0)).join(side(b, names(1), szs(1)), Seq("g"))
+    (if (self) joined.filter(col(names(0)) < col(names(1))) else joined)
+      .groupBy(names.map(col): _*)
+      .agg(count(lit(1)).as(out))
+  }
+
+  /** Jaccard from an intersection and the two set sizes:
+    * inter / (a + b − inter).
+    */
+  private def jaccard(inter: Column, a: Column, b: Column): Column =
+    inter.cast("double") / (a + b - inter)
+
+  /** The oracle-comparison scope: documents with doc_id < idLimit. */
+  private def scoped(docs: DataFrame, idLimit: Option[Long]): DataFrame =
+    idLimit.fold(docs)(l => docs.filter(col("doc_id") < l))
+
+  /** Positional n-gram hashes of a (doc_id, w) frame: one (doc_id, i, g)
+    * row per gram START i (1-based, multiplicity kept), g = xxhash64 of
+    * the gram (the 2⁻⁶⁴ collision caveat of hashedShingles applies).
+    * Documents under n words have no positions.
+    */
+  private def positions(base: DataFrame, n: Int): DataFrame =
+    base.select(col("doc_id"),
+        posexplode(TextFunctions.wordShingleSeq(n)).as(Seq("p", "gram")))
+      .select(col("doc_id"), (col("p") + 1).as("i"), xxhash64(col("gram")).as("g"))
 
   /** Exact word-n-gram Jaccard similarity pairs via an inverted-index
     * equality join (NOT a quadratic theta-join): explode distinct hashed
@@ -84,9 +125,7 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, n: Int, tau: Double,
                         idLimit: Option[Long] = None,
                         maxDf: Option[Long] = None): DataFrame = {
-    val scoped = idLimit.fold(docs)(l => docs.filter(col("doc_id") < l))
-    val invAll = hashedShingled(scoped, n)
-      .select(col("doc_id"), size(col("hs")).as("sz"), explode(col("hs")).as("g"))
+    val invAll = postings(scoped(docs, idLimit), n)
     // The standard lossy knob for corpus scale: drop shingles with
     // document frequency > maxDf before the self-join. Stop-shingles are
     // the skew term (cost is Σ df(g)²; one million-df shingle is 10^12
@@ -99,13 +138,8 @@ object Dedup {
         .filter(col("df") <= cap).select(col("g"))
       invAll.join(df, "g")
     }
-    inv.select(col("doc_id").as("id_a"), col("sz").as("sza"), col("g"))
-      .join(inv.select(col("doc_id").as("id_b"), col("sz").as("szb"), col("g")), Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"), col("sza"), col("szb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
+    overlap(inv, inv, Seq("id_a", "id_b", "sza", "szb"), self = true)
+      .withColumn("jaccard", jaccard(col("inter"), col("sza"), col("szb")))
       .filter(col("jaccard") >= tau)
       .select(col("id_a"), col("id_b"), graft.Quant.q6(col("jaccard")).as("jaccard"))
   }
@@ -121,14 +155,8 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, n: Int, tau: Double,
                        idLimit: Option[Long] = None): DataFrame = {
-    val scoped = idLimit.fold(docs)(l => docs.filter(col("doc_id") < l))
-    val inv = hashedShingled(scoped, n)
-      .select(col("doc_id"), size(col("hs")).as("sz"), explode(col("hs")).as("g"))
-    inv.select(col("doc_id").as("id_a"), col("sz").as("sza"), col("g"))
-      .join(inv.select(col("doc_id").as("id_b"), col("sz").as("szb"), col("g")), Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"), col("sza"), col("szb"))
-      .agg(count(lit(1)).as("inter"))
+    val inv = postings(scoped(docs, idLimit), n)
+    overlap(inv, inv, Seq("id_a", "id_b", "sza", "szb"), self = true)
       .withColumn("c_a", col("inter").cast("double") / col("sza"))
       .withColumn("c_b", col("inter").cast("double") / col("szb"))
       .filter(greatest(col("c_a"), col("c_b")) >= tau)
@@ -144,8 +172,7 @@ object Dedup {
     pairs
       .withColumn("inter", TextHashes.intersectCount(col("ha"), col("hb")))
       .filter(col("inter") > 0)
-      .withColumn("jaccard",
-        col("inter").cast("double") / (size(col("ha")) + size(col("hb")) - col("inter")))
+      .withColumn("jaccard", jaccard(col("inter"), size(col("ha")), size(col("hb"))))
       .filter(col("jaccard") >= tau)
       .select(col("id_a"), col("id_b"), graft.Quant.q6(col("jaccard")).as("jaccard"))
 
@@ -242,17 +269,9 @@ object Dedup {
     */
   def crossJaccardPairs(train: DataFrame, bench: DataFrame, n: Int,
                         tau: Double): DataFrame = {
-    val ti = hashedShingled(train, n)
-      .select(col("doc_id").as("train_id"), size(col("hs")).as("szt"),
-        explode(col("hs")).as("g"))
-    val bi = hashedShingled(bench, n)
-      .select(col("doc_id").as("bench_id"), size(col("hs")).as("szb"),
-        explode(col("hs")).as("g"))
-    ti.join(bi, Seq("g"))
-      .groupBy(col("train_id"), col("bench_id"), col("szt"), col("szb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("szt") + col("szb") - col("inter")))
+    overlap(postings(train, n), postings(bench, n),
+        Seq("train_id", "bench_id", "szt", "szb"), self = false)
+      .withColumn("jaccard", jaccard(col("inter"), col("szt"), col("szb")))
       .filter(col("jaccard") >= tau)
       .select(col("train_id"), col("bench_id"),
         graft.Quant.q6(col("jaccard")).as("jaccard"))
@@ -266,13 +285,8 @@ object Dedup {
     * is sparse and the join tiny; output counts the shared n-grams.
     */
   def sharedNgramPairs(docs: DataFrame, n: Int = 20): DataFrame = {
-    val inv = hashedShingled(docs, n)
-      .select(col("doc_id"), explode(col("hs")).as("g"))
-    inv.select(col("doc_id").as("id_a"), col("g"))
-      .join(inv.select(col("doc_id").as("id_b"), col("g")), Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
+    val inv = postings(docs, n)
+    overlap(inv, inv, Seq("id_a", "id_b"), self = true, out = "n_shared")
   }
 
   /** Per-document duplicated-passage mass — the exact-substring-dedup
@@ -300,12 +314,8 @@ object Dedup {
     * caveat of hashedShingles applies.)
     */
   def dupSpanStats(docs: DataFrame, n: Int = 8): DataFrame = {
-    val pos = TextFunctions.withBase(docs)
-      .select(col("doc_id"),
-        explode(TextFunctions.wordShingleSeq(n)).as("gram"))
-      .select(col("doc_id"), xxhash64(col("gram")).as("g"))
-    val wg = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
-    pos
+    val wg = Window.partitionBy(col("g"))
+    positions(TextFunctions.withBase(docs), n)
       .withColumn("dup",
         min(col("doc_id")).over(wg) =!= max(col("doc_id")).over(wg))
       .groupBy(col("doc_id"))
@@ -347,17 +357,17 @@ object Dedup {
                   tau: Double = 0.5, idLimit: Option[Long] = None): DataFrame = {
     require(rowsList.nonEmpty && rowsList.forall(r => r > 0 && numHashes % r == 0),
       s"every rows-per-band must divide numHashes=$numHashes: $rowsList")
-    val scoped = idLimit.fold(docs)(l => docs.filter(col("doc_id") < l))
+    val scope = scoped(docs, idLimit)
     // sig[k] = min over shingles of hex16(md5("k|gram")) — one compiled
     // byte pass per doc (graft.plans.TextHashes.Md5MinSig) replacing the
     // interpreted transform/array_min/md5/substring tree, value-identical
     // (Md5MinSigSpec pins it against that form; the SQL oracle keeps it)
-    val base = TextFunctions.withBase(scoped)
+    val base = TextFunctions.withBase(scope)
       .select(col("doc_id"),
         graft.plans.TextHashes.md5MinSig(col("norm"), n, numHashes).as("sig"))
       .filter(col("sig").isNotNull)
       .localCheckpoint()
-    val truePairs = ngramJaccardPairs(scoped, n, tau)
+    val truePairs = ngramJaccardPairs(scope, n, tau)
       .select(col("id_a"), col("id_b"), lit(true).as("is_true"))
     val nTrue = truePairs.agg(count(lit(1)).as("n_true_total"))
     rowsList.map { r =>
@@ -404,11 +414,7 @@ object Dedup {
     * xxhash64 collision caveat applies.
     */
   def ngramNovelty(docs: DataFrame, n: Int = 8): DataFrame = {
-    val pos = TextFunctions.withBase(docs)
-      .select(col("doc_id"),
-        explode(TextFunctions.wordShingleSeq(n)).as("gram"))
-      .select(col("doc_id"), xxhash64(col("gram")).as("g"))
-    val perDocGram = pos.groupBy(col("doc_id"), col("g"))
+    val perDocGram = positions(TextFunctions.withBase(docs), n).groupBy(col("doc_id"), col("g"))
       .agg(count(lit(1)).as("cnt"))
     val owner = perDocGram.groupBy(col("g"))
       .agg(min(col("doc_id")).as("owner"))
@@ -443,10 +449,7 @@ object Dedup {
     */
   def spanRemoval(docs: DataFrame, n: Int = 8): DataFrame = {
     val base = TextFunctions.withBase(docs).select(col("doc_id"), col("w"))
-    val pos = base
-      .select(col("doc_id"),
-        posexplode(TextFunctions.wordShingleSeq(n)).as(Seq("p", "gram")))
-      .select(col("doc_id"), (col("p") + 1).as("i"), xxhash64(col("gram")).as("g"))
+    val pos = positions(base, n)
     val owner = pos.select(col("doc_id"), col("g")).distinct()
       .groupBy(col("g")).agg(min(col("doc_id")).as("owner"))
     val cov = pos.join(owner, Seq("g"))
@@ -529,15 +532,23 @@ object Dedup {
     */
   def contamination(train: DataFrame, bench: DataFrame, n: Int = 8,
                     minShared: Long = 1L): DataFrame = {
-    val ti = hashedShingled(train, n)
-      .select(col("doc_id").as("train_id"), explode(col("hs")).as("g"))
-    val bi = hashedShingled(bench, n)
-      .select(col("doc_id").as("bench_id"), explode(col("hs")).as("g"))
-    ti.join(bi, Seq("g"))
-      .groupBy(col("train_id"), col("bench_id"))
-      .agg(count(lit(1)).as("n_shared"))
+    overlap(postings(train, n), postings(bench, n), Seq("train_id", "bench_id"),
+        self = false, out = "n_shared")
       .filter(col("n_shared") >= minShared)
   }
+
+  /** The heap-derived driver-regime bound: edges may spend at most a
+    * quarter of the driver heap at the measured ~96 B/edge object cost
+    * (collected Tuple2 + LongMap slots — see the clusters() doc), capped
+    * at 16M edges (beyond that the broadcast mapping itself gets big) and
+    * floored at 1M so a tiny test heap still takes the fast path on
+    * test-sized graphs. Runtime.maxMemory IS the driver heap here —
+    * clusters() runs on the driver. Override per call with the
+    * driverEdgeLimit parameter.
+    */
+  private[graft] def derivedEdgeLimit: Long =
+    math.min(16000000L,
+      math.max(1000000L, Runtime.getRuntime.maxMemory() / 4 / 96))
 
   /** Connected components over a near-dup pair graph: every document gets
     * `cluster_id` = the minimum doc_id reachable through pair edges (its
@@ -570,28 +581,11 @@ object Dedup {
     *    cluster scale, `setCheckpointDir` + `checkpoint()` persists to
     *    reliable storage instead). Convergence is detected distributed.
     */
-  /** The heap-derived driver-regime bound: edges may spend at most a
-    * quarter of the driver heap at the measured ~96 B/edge object cost
-    * (collected Tuple2 + LongMap slots — see the clusters() doc), capped
-    * at 16M edges (beyond that the broadcast mapping itself gets big) and
-    * floored at 1M so a tiny test heap still takes the fast path on
-    * test-sized graphs. Runtime.maxMemory IS the driver heap here —
-    * clusters() runs on the driver. Override per-session with the
-    * `graft.clusters.driverEdgeLimit` Spark conf, per-call with the
-    * driverEdgeLimit parameter.
-    */
-  private[graft] def derivedEdgeLimit: Long =
-    math.min(16000000L,
-      math.max(1000000L, Runtime.getRuntime.maxMemory() / 4 / 96))
-
   def clusters(docs: DataFrame, pairs: DataFrame, maxIter: Int = 25,
                driverEdgeLimit: Long = -1L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val edgeLimit =
-      if (driverEdgeLimit > 0) driverEdgeLimit
-      else spark.conf.getOption("graft.clusters.driverEdgeLimit")
-        .map(_.toLong).getOrElse(derivedEdgeLimit)
+    val edgeLimit = if (driverEdgeLimit > 0) driverEdgeLimit else derivedEdgeLimit
     // materialize the edge list ONCE — it is re-joined every round, and
     // without this each round would recompute the entire upstream pair
     // pipeline (e.g. the full MinHash-LSH candidate generation)
@@ -706,8 +700,6 @@ object Dedup {
     // endpoints below, and without this the corpus is normalized and
     // shingled twice (once per join side) — same pattern as minhashBase
     val hs = hashedShingled(docs, n).localCheckpoint()
-    val union = when(col("ha").isNull || col("hb").isNull, lit(0L))
-      .otherwise((size(col("ha")) + size(col("hb"))).cast("long") - col("inter"))
     simhashPairs(docs, maxHamming)
       .join(hs.select(col("doc_id").as("id_a"), col("hs").as("ha")), Seq("id_a"), "left")
       .join(hs.select(col("doc_id").as("id_b"), col("hs").as("hb")), Seq("id_b"), "left")
@@ -715,8 +707,10 @@ object Dedup {
         when(col("ha").isNull || col("hb").isNull, lit(0L))
           .otherwise(TextHashes.intersectCount(col("ha"), col("hb")).cast("long")))
       .select(col("id_a"), col("id_b"), col("hamming"),
-        when(union > 0,
-          graft.Quant.q6(col("inter").cast("double") / union.cast("double")))
+        // shingle arrays are never empty, so two present sides always
+        // have a positive union
+        when(col("ha").isNotNull && col("hb").isNotNull,
+          graft.Quant.q6(jaccard(col("inter"), size(col("ha")), size(col("hb")))))
           .as("jaccard"))
   }
 
@@ -746,24 +740,6 @@ object Dedup {
       .select(col("doc_id"), col("cluster_id"), col("kept"))
   }
 
-  /** The pigeonhole Hamming join over any (doc_id, sig: long) frame —
-    * shared by text SimHash and the multimodal perceptual hash. Recall
-    * 1.0 by construction per signature family; precision restored by the
-    * exact bit_count(xor) filter.
-    */
-  /** Pigeonhole bucket-load audit — the saturation EARLY-WARNING read
-    * before a pigeonhole pair join is launched at a new corpus size: per
-    * signature chunk, the item count, distinct-bucket count, hottest
-    * bucket, and Σ C(load, 2) — the exact candidate-pair mass that chunk
-    * will feed the verify stage. The pair list a pigeonhole join emits
-    * is inherently quadratic in bucket load (chunk space is fixed at
-    * 2^(64/(h+1)) buckets, so load — and with it candidate mass — grows
-    * with corpus density); this table prices that BEFORE paying it
-    * (round-11 case study: the stub phash at 500k assets reads 56.6M
-    * verified pairs — this audit's cand_pairs column says so for the
-    * cost of one aggregation). Cost: the signature pass plus two keyed
-    * map-side-partial aggregations; no join anywhere.
-    */
   /** THE PIGEONHOLE GRID (r16 final: h+1 single chunks, minimal-chunk
     * emit). The classic split: (h+1) near-equal blocks of the 64-bit
     * signature; a pair within Hamming h agrees on at least one whole
@@ -816,6 +792,19 @@ object Dedup {
       .drop("ck")
   }
 
+  /** Pigeonhole bucket-load audit — the saturation EARLY-WARNING read
+    * before a pigeonhole pair join is launched at a new corpus size: per
+    * signature chunk, the item count, distinct-bucket count, hottest
+    * bucket, and Σ C(load, 2) — the exact candidate-pair mass that chunk
+    * will feed the verify stage. The pair list a pigeonhole join emits
+    * is inherently quadratic in bucket load (chunk space is fixed at
+    * 2^(64/(h+1)) buckets, so load — and with it candidate mass — grows
+    * with corpus density); this table prices that BEFORE paying it
+    * (round-11 case study: the stub phash at 500k assets reads 56.6M
+    * verified pairs — this audit's cand_pairs column says so for the
+    * cost of one aggregation). Cost: the signature pass plus two keyed
+    * map-side-partial aggregations; no join anywhere.
+    */
   private[graft] def hammingLoad(signed: DataFrame, maxHamming: Int): DataFrame =
     comboBuckets(signed, maxHamming, carrySig = false)
       .groupBy(col("ci").as("chunk"), col("cv"))
@@ -835,6 +824,11 @@ object Dedup {
       .filter(col("sig").isNotNull),
       maxHamming)
 
+  /** The pigeonhole Hamming join over any (doc_id, sig: long) frame —
+    * shared by text SimHash and the multimodal perceptual hash. Recall
+    * 1.0 by construction per signature family; precision restored by the
+    * exact bit_count(xor) filter.
+    */
   private[graft] def hammingPairs(signed: DataFrame, maxHamming: Int): DataFrame = {
     // materialize the signature pass ONCE: the bucket self-join below
     // reads `signed` through two different projections (id_a / id_b), so

@@ -45,28 +45,20 @@ object ShardProbe {
       time("G1 + split w (sum size)")(
         base.agg(sum(size(col("w"))), sum(length(col("norm")))).head())
       time("G2 stopword countIn (filter HOF)")(
-        base.agg(sum(expr(
-          "size(filter(w, x -> x IN ('the','a','is','and','of','to','in')))"))).head())
+        base.agg(sum(TextFunctions.countIn(TextFunctions.stopEn))).head())
+      val markers = TextFunctions.langMarkers.map { case (_, ws) =>
+        sum(TextFunctions.countIn(ws)) }
       time("G3 lang markers (4 countIn)")(
-        base.agg(
-          sum(expr("size(filter(w, x -> x IN ('the','a','is','and')))")),
-          sum(expr("size(filter(w, x -> x IN ('el','la','los','que')))")),
-          sum(expr("size(filter(w, x -> x IN ('der','die','und','das')))")),
-          sum(expr("size(filter(w, x -> x IN ('le','les','et','une')))"))).head())
-      time("G4 punct regex [^a-z0-9 ]")(
-        base.agg(sum(regexp_count(col("norm"), lit("[^a-z0-9 ]")))).head())
-      time("G5 email regex")(
-        base.agg(sum(regexp_count(col("norm"),
-          lit("[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}")))).head())
-      time("G6 ip regex")(
-        base.agg(sum(regexp_count(col("norm"),
-          lit("\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b")))).head())
-      time("G7 phone regex")(
-        base.agg(sum(regexp_count(col("norm"),
-          lit("\\d{3}[- ]\\d{3,4}[- ]\\d{4}")))).head())
+        base.agg(markers.head, markers.tail: _*).head())
+      time("G4 punct byte scan [^a-z0-9 ]")(
+        base.agg(sum(TextFunctions.punctCount)).head())
+      TextFunctions.piiPatterns.zipWithIndex.foreach { case ((name, p), i) =>
+        time(s"G${5 + i} $name regex")(
+          base.agg(sum(regexp_count(col("norm"), lit(p)))).head())
+      }
       time("G8 md5 fp + rank_key")(
-        base.agg(max(md5(col("norm"))),
-          max(md5(col("doc_id").cast("string")))).head())
+        base.agg(max(TextFunctions.exactFp()),
+          max(TextFunctions.rankKey(col("doc_id")))).head())
     }
 
     if (group == "shard" || group == "all") {
@@ -80,9 +72,8 @@ object ShardProbe {
           sum(when(col("is_en"), 1L)), sum(when(col("has_pii"), 1L)),
           max(col("fp")), max(col("rank_key"))).head())
       // stage S2: + the exact-dup window (shuffle on fp) + the gates
-      val wd = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
       val survivors = sig
-        .withColumn("is_dup", col("doc_id") =!= min(col("doc_id")).over(wd))
+        .withColumn("is_dup", TextFunctions.isDup())
         .filter(col("is_en") && col("quality_score") >= 0.5 &&
           !col("has_pii") && !col("is_dup"))
         .select(col("doc_id"), col("stratum"), col("n_tokens"), col("rank_key"))

@@ -1,6 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.TextHashes
@@ -31,24 +32,47 @@ object TextFunctions {
     graft.Tables.rebalance(docs)
       .withColumn("norm", norm).withColumn("w", split(col("norm"), " "))
 
+  /** The n-word gram starting at word `i` of `w`, as a SQL lambda body —
+    * the one gram builder behind every shingle and gram-width column.
+    */
+  private def gram(n: Int): String =
+    (0 until n).map(j => s"element_at(w, i + $j)").mkString("concat_ws(' ', ", ", ", ")")
+
   /** Distinct word n-gram shingles over the `w` column (guarded for short
     * docs: Spark's sequence(1,0) is descending, not empty).
     */
-  def wordShingles(n: Int): Column = {
-    val gram = (0 until n).map(j => s"element_at(w, i + $j)").mkString("concat_ws(' ', ", ", ", ")")
+  def wordShingles(n: Int): Column =
     expr(s"CASE WHEN size(w) < $n THEN array() ELSE " +
-      s"array_distinct(transform(sequence(1, size(w) - ${n - 1}), i -> $gram)) END")
-  }
+      s"array_distinct(transform(sequence(1, size(w) - ${n - 1}), i -> ${gram(n)})) END")
 
   /** Like wordShingles but POSITIONAL — one entry per n-gram start with
     * multiplicity kept, for duplicated-mass metrics where a passage
     * repeated inside one doc must count every occurrence.
     */
-  def wordShingleSeq(n: Int): Column = {
-    val gram = (0 until n).map(j => s"element_at(w, i + $j)").mkString("concat_ws(' ', ", ", ", ")")
+  def wordShingleSeq(n: Int): Column =
     expr(s"CASE WHEN size(w) < $n THEN array() ELSE " +
-      s"transform(sequence(1, size(w) - ${n - 1}), i -> $gram) END")
-  }
+      s"transform(sequence(1, size(w) - ${n - 1}), i -> ${gram(n)}) END")
+
+  /** The deterministic hash order every sampler, fill and shard reads:
+    * md5 of the key's string form, reproducible wherever md5 exists.
+    */
+  private[graft] def rankKey(key: Column): Column = md5(key.cast("string"))
+
+  /** A hash fraction: the first `digits` hex chars of the key's rank key.
+    * Fixed-width lowercase hex, so the string compare IS the numeric one.
+    */
+  private def hexFrac(key: Column, digits: Int = 4): Column =
+    substring(rankKey(key), 1, digits)
+
+  /** The cut h < f on a `digits`-wide hex fraction: h below the hex of
+    * floor(f · 16^digits); f ≥ 1 keeps everything.
+    */
+  private def under(h: Column, f: Double, digits: Int = 4): Column =
+    if (f >= 1.0) lit(true)
+    else h < s"%0${digits}x".format(math.floor(f * math.pow(16, digits)).toLong)
+
+  /** BPE-ish tokens: letter runs, digit runs, single punctuation. */
+  private def bpeCount: Column = regexp_count(col("norm"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]"))
 
   /** Per-document token statistics: whitespace tokens, BPE-ish regex tokens
     * (letter runs / digit runs / single punctuation), character count.
@@ -57,7 +81,7 @@ object TextFunctions {
     withBase(docs).select(
       col("doc_id"),
       size(col("w")).cast("long").as("n_ws_tokens"),
-      regexp_count(col("norm"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]")).cast("long").as("n_bpe_tokens"),
+      bpeCount.cast("long").as("n_bpe_tokens"),
       length(col("norm")).cast("long").as("n_chars_norm"))
 
   /** Tokenizer fertility by (lang, source): BPE-ish tokens per
@@ -75,8 +99,7 @@ object TextFunctions {
       .agg(
         count(lit(1)).as("n_docs"),
         sum(size(col("w")).cast("long")).as("ws"),
-        sum(regexp_count(col("norm"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]")).cast("long"))
-          .as("bpe"),
+        sum(bpeCount.cast("long")).as("bpe"),
         sum(length(col("norm")).cast("long")).as("chars"))
       .select(col("lang"), col("source"), col("n_docs"),
         col("bpe").as("n_tokens"),
@@ -105,26 +128,74 @@ object TextFunctions {
       .drop("bucket")
   }
 
-  private val stopEn = Seq("the", "a", "is", "and", "of", "to", "in")
+  private[graft] val stopEn = Seq("the", "a", "is", "and", "of", "to", "in")
 
   /** The two single-code-point-class counts every quality/gate signal
     * shares, as compiled byte scans (TextHashes.CharClassCount) — value-
     * identical to regexp_count("[^a-z0-9 ]") / ("[0-9]"), which the SQL
     * oracle keeps (RE2 is linear; Java's Matcher was not the cheap path).
     */
-  private def punctCount: Column = TextHashes.charClassCount(
+  private[graft] def punctCount: Column = TextHashes.charClassCount(
     col("norm"), "abcdefghijklmnopqrstuvwxyz0123456789 ", negate = true)
   private def digitCount: Column = TextHashes.charClassCount(
     col("norm"), "0123456789", negate = false)
-  private def countIn(words: Seq[String]): Column = {
+  private[graft] def countIn(words: Seq[String]): Column = {
     val set = words.map(w => s"'$w'").mkString("(", ", ", ")")
     expr(s"size(filter(w, x -> x IN $set))")
   }
 
+  // ---- the gate signals: one definition each, as Columns over the
+  // withBase frame. quality/langId/piiScan pass their projected counts;
+  // the fused gate projection (gateSignalCols) takes the defaults.
+
+  /** The composite quality score, 6-dp quantized: 0.4 · stopword ratio
+    * + 0.3 · (1 − punctuation ratio) + 0.3 · min(words / 100, 1). The
+    * SQL oracle writes the same double arithmetic, so results are
+    * bit-comparable.
+    */
+  private def qualityScore(nWords: Column = size(col("w")),
+                           nChars: Column = length(col("norm")),
+                           nStop: Column = countIn(stopEn),
+                           nPunct: Column = punctCount): Column =
+    graft.Quant.q6(nStop.cast("double") / nWords * 0.4
+      + (lit(1.0) - nPunct.cast("double") / nChars) * 0.3
+      + least(nWords.cast("double") / 100.0, lit(1.0)) * 0.3)
+
+  /** The en decision, langId's first argmax branch: en's marker count
+    * (en, es, de, fr order) ties or beats every other and is positive.
+    */
+  private def isEn(counts: Seq[Column] = langMarkers.map { case (_, ws) => countIn(ws) }): Column = {
+    val Seq(en, es, de, fr) = counts
+    en >= es && en >= de && en >= fr && en > 0
+  }
+
+  /** The PII span patterns (email-, IPv4- and phone-shaped) by output
+    * column, each chosen to evaluate identically under Java regex and
+    * RE2 (DuckDB).
+    */
+  private[graft] val piiPatterns: Seq[(String, String)] = Seq(
+    "n_email" -> "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}",
+    "n_ipv4" -> "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b",
+    "n_phone" -> "\\d{3}[- ]\\d{3,4}[- ]\\d{4}")
+
+  /** Any PII span: the pattern counts (piiPatterns order) sum above 0. */
+  private def hasPii(counts: Seq[Column] = piiPatterns.map { case (_, p) =>
+      regexp_count(col("norm"), lit(p)) }): Column =
+    counts.reduce(_ + _) > 0
+
+  /** The exact-dup fingerprint: md5 of the normalized text. */
+  private[graft] def exactFp(norm: Column = col("norm")): Column = md5(norm)
+
+  /** The exact-dup survivor: the first (minimum) doc_id of each `fp`
+    * group — a keyed window, dup-cluster-sized partitions.
+    */
+  private[graft] def keepId: Column = min(col("doc_id")).over(Window.partitionBy(col("fp")))
+
+  /** The exact-dup verdict: doc_id ≠ its group's keep id. */
+  private[graft] def isDup(keep: Column = keepId): Column = col("doc_id") =!= keep
+
   /** Quality scoring: stopword ratio, punctuation ratio, digit ratio, word
-    * stats, and a composite score. All double arithmetic is written
-    * identically in the SQL oracle so results are bit-comparable after
-    * 6 dp rounding.
+    * stats, and the composite qualityScore.
     */
   def quality(docs: DataFrame): DataFrame =
     withBase(docs)
@@ -148,9 +219,8 @@ object TextFunctions {
         graft.Quant.q6((col("n_chars").cast("long")
             - TextHashes.charClassCount(col("norm"), " ", negate = false))
           .cast("double") / col("n_words")).as("avg_word_len"),
-        graft.Quant.q6(col("n_stop").cast("double") / col("n_words") * 0.4
-          + (lit(1.0) - col("n_punct").cast("double") / col("n_chars")) * 0.3
-          + least(col("n_words").cast("double") / 100.0, lit(1.0)) * 0.3).as("quality_score"))
+        qualityScore(col("n_words"), col("n_chars"), col("n_stop"), col("n_punct"))
+          .as("quality_score"))
 
   /** Quality-threshold tuning curve: surviving doc count and surviving
     * word mass at each candidate cut, from ONE pass over the scored
@@ -174,7 +244,7 @@ object TextFunctions {
     scored.agg(aggs.head, aggs.tail: _*)
   }
 
-  private val langMarkers = Seq(
+  private[graft] val langMarkers = Seq(
     "en" -> Seq("the", "a", "is", "and"),
     "es" -> Seq("el", "la", "los", "que"),
     "de" -> Seq("der", "die", "und", "das"),
@@ -193,7 +263,7 @@ object TextFunctions {
     val Seq(en, es, de, fr) = langMarkers.map { case (l, _) => col(s"n_$l") }
     scored.select(
       col("doc_id"),
-      when(en >= es && en >= de && en >= fr && en > 0, "en")
+      when(isEn(Seq(en, es, de, fr)), "en")
         .when(es >= de && es >= fr && es > 0, "es")
         .when(de >= fr && de > 0, "de")
         .when(fr > 0, "fr")
@@ -213,7 +283,6 @@ object TextFunctions {
     * declared label.
     */
   def langIdConfusion(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     docs.select(col("doc_id"), col("lang").as("lang_decl"))
       .join(langId(docs).select(col("doc_id"), col("lang_pred")), "doc_id")
       .groupBy(col("lang_decl"), col("lang_pred"))
@@ -226,27 +295,19 @@ object TextFunctions {
   }
 
   /** PII surface detection: per-document counts of email-shaped, IPv4-
-    * shaped, and phone-shaped spans plus digit runs, and a has_pii flag —
-    * the filter signal a training-data pipeline applies before anything
-    * else. Pure regexp_count (codegen'd, one pass each) with patterns
-    * chosen to evaluate identically under Java regex and RE2 (DuckDB).
+    * shaped, and phone-shaped spans (piiPatterns) plus digit runs, and a
+    * has_pii flag — the filter signal a training-data pipeline applies
+    * before anything else. Pure regexp_count (codegen'd, one pass each).
     */
-  def piiScan(docs: DataFrame): DataFrame =
-    withBase(docs)
-      .withColumn("n_email", regexp_count(col("norm"),
-        lit("[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}")))
-      .withColumn("n_ipv4", regexp_count(col("norm"),
-        lit("\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b")))
-      .withColumn("n_phone", regexp_count(col("norm"),
-        lit("\\d{3}[- ]\\d{3,4}[- ]\\d{4}")))
+  def piiScan(docs: DataFrame): DataFrame = {
+    val names = piiPatterns.map(_._1)
+    piiPatterns.foldLeft(withBase(docs)) { case (df, (name, p)) =>
+        df.withColumn(name, regexp_count(col("norm"), lit(p)))
+      }
       .withColumn("n_digit_runs", regexp_count(col("norm"), lit("\\d{6,}")))
-      .select(
-        col("doc_id"),
-        col("n_email").cast("long").as("n_email"),
-        col("n_ipv4").cast("long").as("n_ipv4"),
-        col("n_phone").cast("long").as("n_phone"),
-        col("n_digit_runs").cast("long").as("n_digit_runs"),
-        (col("n_email") + col("n_ipv4") + col("n_phone") > 0).as("has_pii"))
+      .select(col("doc_id") +: (names :+ "n_digit_runs").map(c => col(c).cast("long").as(c)) :+
+        hasPii(names.map(col)).as("has_pii"): _*)
+  }
 
   /** Deterministic stratified sampling: keep a ~rate fraction of each
     * stratum by comparing a hex prefix of md5(stratum|doc_id) against a
@@ -262,11 +323,11 @@ object TextFunctions {
     else {
       // clamp to 2 hex digits: "100" (3 chars) would compare lexicographically
       // against 2-char buckets and keep ~6.6% instead of ~100%
-      val threshold = f"${math.min(255L, math.round(rate * 256)).toInt}%02x"
+      val q = math.min(255L, math.round(rate * 256)) / 256.0
       docs
         .withColumn("bucket",
-          substring(md5(concat(col(stratumCol), lit("|"), col("doc_id").cast("string"))), 1, 2))
-        .filter(col("bucket") < lit(threshold))
+          hexFrac(concat(col(stratumCol), lit("|"), col("doc_id").cast("string")), 2))
+        .filter(under(col("bucket"), q, 2))
         .select(col("doc_id"), col(stratumCol).as("stratum"))
     }
   }
@@ -283,8 +344,7 @@ object TextFunctions {
   def sampleWeighted(docs: DataFrame, rate: Double): DataFrame = {
     require(rate >= 0.0 && rate <= 1.0, s"rate must be in [0,1]: $rate")
     quality(docs).select(col("doc_id"), col("quality_score"))
-      .withColumn("h",
-        substring(md5(concat(lit("w|"), col("doc_id").cast("string"))), 1, 4))
+      .withColumn("h", hexFrac(concat(lit("w|"), col("doc_id").cast("string"))))
       .withColumn("scaled", floor(lit(rate) * col("quality_score") * 65536))
       // rate × quality = 1.0 means keep ALWAYS: 65536 isn't representable
       // in 4 hex chars, so without the short-circuit a max-quality doc at
@@ -303,18 +363,21 @@ object TextFunctions {
     * NEVER moves an existing one between splits — the property a
     * random split refreshed per run cannot give.
     */
-  def sampleSplit(docs: DataFrame, valFrac: Double, testFrac: Double): DataFrame = {
+  def sampleSplit(docs: DataFrame, valFrac: Double, testFrac: Double): DataFrame =
+    docs.transform(splitBy("doc_id", valFrac, testFrac))
+      .select(col("doc_id"), col("split"))
+
+  /** The split assignment on `key`'s split-tagged 16-bit hash fraction:
+    * [0, val) → "val", [val, val+test) → "test", else "train".
+    */
+  private def splitBy(key: String, valFrac: Double,
+                      testFrac: Double): DataFrame => DataFrame = {
     require(valFrac >= 0 && testFrac >= 0 && valFrac + testFrac < 1,
       s"need valFrac + testFrac < 1, got $valFrac + $testFrac")
-    val vCut = math.floor(valFrac * 65536).toInt
-    val tCut = math.floor((valFrac + testFrac) * 65536).toInt
-    docs
-      .withColumn("h",
-        substring(md5(concat(lit("split|"), col("doc_id").cast("string"))), 1, 4))
-      .select(col("doc_id"),
-        when(col("h") < format_string("%04x", lit(vCut)), "val")
-          .when(col("h") < format_string("%04x", lit(tCut)), "test")
-          .otherwise("train").as("split"))
+    _.withColumn("h", hexFrac(concat(lit("split|"), col(key).cast("string"))))
+      .withColumn("split", when(under(col("h"), valFrac), "val")
+        .when(under(col("h"), valFrac + testFrac), "test")
+        .otherwise("train"))
   }
 
   /** Split-leakage audit — the eval-integrity check run after any
@@ -396,19 +459,11 @@ object TextFunctions {
     */
   def sampleSplitClustered(docs: DataFrame, valFrac: Double, testFrac: Double,
                            tau: Double = 0.8): DataFrame = {
-    require(valFrac >= 0 && testFrac >= 0 && valFrac + testFrac < 1,
-      s"need valFrac + testFrac < 1, got $valFrac + $testFrac")
-    val vCut = math.floor(valFrac * 65536).toInt
-    val tCut = math.floor((valFrac + testFrac) * 65536).toInt
+    val assign = splitBy("cluster_id", valFrac, testFrac)
     val pairs = Dedup.minhashPairs(docs, 3, 64, 2, tau)
       .select(col("id_a"), col("id_b"))
-    Dedup.clusters(docs, pairs)
-      .withColumn("h",
-        substring(md5(concat(lit("split|"), col("cluster_id").cast("string"))), 1, 4))
-      .select(col("doc_id"), col("cluster_id"),
-        when(col("h") < format_string("%04x", lit(vCut)), "val")
-          .when(col("h") < format_string("%04x", lit(tCut)), "test")
-          .otherwise("train").as("split"))
+    Dedup.clusters(docs, pairs).transform(assign)
+      .select(col("doc_id"), col("cluster_id"), col("split"))
   }
 
   /** Deterministic fixed-SIZE sample: exactly n documents, selected by
@@ -421,7 +476,7 @@ object TextFunctions {
     */
   def sampleFixed(docs: DataFrame, n: Int): DataFrame =
     docs
-      .withColumn("rank_key", md5(col("doc_id").cast("string")))
+      .withColumn("rank_key", rankKey(col("doc_id")))
       .orderBy(col("rank_key"), col("doc_id"))
       .limit(n)
       .select(col("doc_id"), col("rank_key"))
@@ -440,9 +495,8 @@ object TextFunctions {
     */
   def sampleBalanced(docs: DataFrame, stratumCol: String, nPerStratum: Int): DataFrame = {
     require(nPerStratum > 0, s"nPerStratum must be positive, got $nPerStratum")
-    import org.apache.spark.sql.expressions.Window
     val keyed = docs.select(col("doc_id"), col(stratumCol).as("stratum"))
-      .withColumn("rank_key", md5(col("doc_id").cast("string")))
+      .withColumn("rank_key", rankKey(col("doc_id")))
     val ord = Seq(col("rank_key").asc, col("doc_id").asc)
     val local = row_number().over(
       Window.partitionBy(col("stratum"), col("slice")).orderBy(ord: _*))
@@ -463,12 +517,14 @@ object TextFunctions {
     * so the fill is stable across runs, engines, and cluster layouts.
     */
   def tokenBudget(docs: DataFrame, stratumCol: String, budgetPerStratum: Long): DataFrame =
-    budgetFill(
-      withBase(docs)
-        .select(col("doc_id"), col(stratumCol).as("stratum"),
-          size(col("w")).cast("long").as("n_tokens"),
-          md5(col("doc_id").cast("string")).as("rank_key")),
-      budgetPerStratum)
+    budgetFill(sized(docs, stratumCol), budgetPerStratum)
+
+  /** The token-mass frame every fill and pack reads: (doc_id, stratum,
+    * n_tokens = whitespace tokens, rank_key).
+    */
+  private def sized(docs: DataFrame, stratumCol: String): DataFrame =
+    withBase(docs).select(col("doc_id"), col(stratumCol).as("stratum"),
+      size(col("w")).cast("long").as("n_tokens"), rankKey(col("doc_id")).as("rank_key"))
 
   /** Distributed per-stratum prefix sum + budget cut over (doc_id, stratum,
     * n_tokens, rank_key). A window `PARTITION BY stratum` would funnel every
@@ -533,7 +589,6 @@ object TextFunctions {
     * slice-local running sum — global prefix = offset + local.
     */
   private[graft] def cumFromRanged(ranged: DataFrame, sliceAgg: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val offsets = sliceAgg
       .withColumn("offset", coalesce(
         sum(col("slice_tokens")).over(Window.partitionBy(col("stratum"))
@@ -560,43 +615,40 @@ object TextFunctions {
     */
   def tokenPack(docs: DataFrame, stratumCol: String, seqTokens: Long): DataFrame = {
     require(seqTokens > 0, s"seqTokens must be positive, got $seqTokens")
-    val sized = withBase(docs)
-      .select(col("doc_id"), col(stratumCol).as("stratum"),
-        size(col("w")).cast("long").as("n_tokens"),
-        md5(col("doc_id").cast("string")).as("rank_key"))
+    packed(sized(docs, stratumCol), seqTokens)
+      .select(col("doc_id"), col("stratum"), col("n_tokens"), col("pack_id"),
+        col("pack_offset"))
+  }
+
+  /** The contiguous-packing cut over the per-stratum prefix sum of a
+    * sized frame: start = cum − n, pack_id = start div L, pack_offset =
+    * start mod L (L = `capacity`).
+    */
+  private[graft] def packed(sized: DataFrame, capacity: Long): DataFrame =
     stratumPrefixSum(sized)
       .withColumn("start_tok", col("cum_tokens") - col("n_tokens"))
-      .select(col("doc_id"), col("stratum"), col("n_tokens"),
-        expr(s"start_tok div ${seqTokens}L").as("pack_id"),
-        (col("start_tok") % seqTokens).as("pack_offset"))
-  }
+      .withColumn("pack_id", expr(s"start_tok div ${capacity}L"))
+      .withColumn("pack_offset", col("start_tok") % capacity)
 
   /** Temperature-smoothed source mixture — the multilingual data-mixing
     * allocator (the mT5/XLM-R sampling rule p_i ∝ n_i^α, at α = 1/2):
     * each stratum's token mass smooths with sqrt (correctly-rounded
     * IEEE on both engines, where an arbitrary-α pow() is libm-dependent
     * — the text_entropy stance), normalizes into a share of
-    * `totalBudget`, and fills deterministically in md5 order through
-    * the same two-phase prefix sum as tokenBudget. This upweights the
-    * tail: a source holding 1% of the corpus draws ~10% of the budget,
-    * the standard fix for low-resource starvation under proportional
-    * sampling.
+    * `totalBudget` (allocate at τ = 0.5, tokenEpochs' targets), and
+    * fills deterministically in md5 order through the same two-phase
+    * prefix sum as tokenBudget. This upweights the tail: a source
+    * holding 1% of the corpus draws ~10% of the budget, the standard fix
+    * for low-resource starvation under proportional sampling.
     *
     * Scale shape: the mass table is one map-side-partial aggregate at
-    * stratum cardinality (metadata-scale); its sqrt-share denominator
-    * is a running-sum fold in stratum order over that tiny table — a
-    * deliberately single-partition window of #sources rows, so the
-    * float sum has exactly ONE association order both engines replay —
-    * and the budgets broadcast back onto the distributed fill. No
-    * stage anywhere touches more than (docs-per-partition) rows.
+    * stratum cardinality (metadata-scale); allocate's order-fixed
+    * denominator is a window of #sources rows, and the budgets
+    * broadcast back onto the distributed fill. No stage anywhere touches
+    * more than (docs-per-partition) rows.
     */
   def tokenMixture(docs: DataFrame, stratumCol: String, totalBudget: Long): DataFrame = {
     require(totalBudget > 0, s"totalBudget must be positive, got $totalBudget")
-    import org.apache.spark.sql.expressions.Window
-    val sized = withBase(docs)
-      .select(col("doc_id"), col(stratumCol).as("stratum"),
-        size(col("w")).cast("long").as("n_tokens"),
-        md5(col("doc_id").cast("string")).as("rank_key"))
     // the mass table folds OVER the prefix sum's own per-slice partials:
     // all three consumers (the fill, the offsets, the mass) read the ONE
     // range exchange, which Catalyst de-duplicates (ReusedExchange), so
@@ -605,22 +657,13 @@ object TextFunctions {
     // consumer — measured 1.3× slower; mass from the un-exchanged
     // `sized` re-runs the whole scan+split a second time.) Summing slice
     // partials is exact: longs, no float re-association.
-    val ranged = rangedBySlice(sized)
+    val ranged = rangedBySlice(sized(docs, stratumCol))
     val sliceAgg = sliceTokenAgg(ranged)
     val cum = cumFromRanged(ranged, sliceAgg)
     val mass = sliceAgg.groupBy(col("stratum"))
       .agg(sum(col("slice_tokens")).as("stratum_tokens"))
-    val wCum = graft.Bounded.window(col("stratum")).rowsBetween(Window.unboundedPreceding, 0)
-    val weighted = mass
-      .withColumn("wgt", sqrt(col("stratum_tokens").cast("double")))
-      .withColumn("cum_w", sum(col("wgt")).over(wCum))
-    // wgt ≥ 0 ⇒ the running fold is monotone: max(cum_w) IS the full
-    // left-fold denominator, with no order-free float re-aggregation
-    val denom = weighted.agg(max(col("cum_w")).as("denom"))
-    val budgets = weighted.crossJoin(broadcast(denom))
-      .select(col("stratum"),
-        floor(lit(totalBudget).cast("double") * col("wgt") / col("denom"))
-          .cast("long").as("stratum_budget"))
+    val budgets = allocate(mass, totalBudget, Seq(0.5))
+      .select(col("stratum"), col("target_tokens").as("stratum_budget"))
     cum.join(broadcast(budgets), Seq("stratum"))
       .filter(col("cum_tokens") <= col("stratum_budget"))
       .select(col("doc_id"), col("stratum"), col("n_tokens"),
@@ -635,33 +678,10 @@ object TextFunctions {
     * allocated target tokens, and `epochs` = target / mass — >1 means
     * the source must repeat to meet its allocation (the multi-epoch
     * regime where marginal value decays), <1 means the budget subsamples
-    * it. Pure metadata scale: one map-side-partial mass aggregate at
-    * stratum cardinality, the single-association-order sqrt-share fold
-    * over that tiny table (the tokenMixture denominator, exactly), and
-    * per-stratum integer/IEEE arithmetic the oracle replays bit-for-bit.
+    * it. It is temperatureMixture's τ = 0.5 row: pure metadata scale.
     */
-  def tokenEpochs(docs: DataFrame, stratumCol: String, totalBudget: Long): DataFrame = {
-    require(totalBudget > 0, s"totalBudget must be positive, got $totalBudget")
-    import org.apache.spark.sql.expressions.Window
-    val mass = withBase(docs)
-      .select(col(stratumCol).as("stratum"), size(col("w")).cast("long").as("n_tokens"))
-      .groupBy(col("stratum"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("stratum_tokens"))
-    val wCum = graft.Bounded.window(col("stratum"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val weighted = mass
-      .withColumn("wgt", sqrt(col("stratum_tokens").cast("double")))
-      .withColumn("cum_w", sum(col("wgt")).over(wCum))
-    val denom = weighted.agg(max(col("cum_w")).as("denom"))
-    weighted.crossJoin(broadcast(denom))
-      .withColumn("target_tokens",
-        floor(lit(totalBudget).cast("double") * col("wgt") / col("denom")).cast("long"))
-      .select(col("stratum").as("source"), col("n_docs"), col("stratum_tokens").as("n_tokens"),
-        graft.Quant.q6(col("wgt") / col("denom")).as("budget_share"),
-        col("target_tokens"),
-        graft.Quant.q6(col("target_tokens").cast("double") / col("stratum_tokens"))
-          .as("epochs"))
-  }
+  def tokenEpochs(docs: DataFrame, stratumCol: String, totalBudget: Long): DataFrame =
+    temperatureMixture(docs, stratumCol, totalBudget, Seq(0.5)).drop("tau")
 
   /** Temperature-sweep mixture allocator — tokenEpochs' sqrt weighting
     * generalized to the sampling-temperature axis a multilingual /
@@ -671,15 +691,6 @@ object TextFunctions {
     * τ = 0.5 is tokenEpochs' sqrt smoothing, lower τ flattens further
     * toward uniform — the table that shows WHAT each temperature does
     * to every source's repeat factor before a mixture is committed.
-    *
-    * The τ grid is restricted to quarter powers {0.25, 0.5, 0.75, 1.0}:
-    * each weight is then a product of IEEE-correctly-rounded sqrt calls
-    * (x^¼ = √√x, x^¾ = √x·√√x), so both engines compute bit-identical
-    * weights — a free-form τ would need libm pow, which is NOT
-    * correctly rounded and would break the hash gate (the text_entropy
-    * stance). Per-τ share denominators accumulate in stratum order
-    * (cum-sum then max, the tokenEpochs recipe) so the double sum is
-    * order-fixed on both engines.
     *
     * Scale shape: ONE corpus tokenization pass into the |strata|-row
     * mass table; the τ grid explodes that metadata-scale frame
@@ -696,25 +707,42 @@ object TextFunctions {
     require(taus.nonEmpty && taus == taus.sorted &&
       taus.distinct.size == taus.size && taus.forall(grid),
       s"taus must be strictly ascending quarter powers from $grid: $taus")
+    val mass = sized(docs, stratumCol)
+      .groupBy(col("stratum"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("stratum_tokens"))
+    allocate(mass, totalBudget, taus)
+      .select(col("stratum").as("source"), col("tau"), col("n_docs"),
+        col("stratum_tokens").as("n_tokens"),
+        graft.Quant.q6(col("wgt") / col("denom")).as("budget_share"),
+        col("target_tokens"),
+        graft.Quant.q6(col("target_tokens").cast("double") / col("stratum_tokens"))
+          .as("epochs"))
+  }
+
+  /** The token-share allocator over a (stratum, stratum_tokens, …) mass
+    * table: per τ in `taus` (quarter powers), each stratum's weight
+    * mass^τ, the share denominator and target_tokens =
+    * floor(totalBudget · wgt / denom); adds tau, wgt, denom and
+    * target_tokens. Each weight is a product of IEEE-correctly-rounded
+    * sqrt calls (x^¼ = √√x, x^¾ = √x·√√x), so both engines compute
+    * bit-identical weights — a free-form τ would need libm pow, which is
+    * NOT correctly rounded and would break the hash gate. The
+    * denominator accumulates in stratum order (running sum, then the
+    * partition max; wgt ≥ 0 makes the max the full left fold), so the
+    * double sum has ONE association order, which the oracle replays.
+    */
+  private def allocate(mass: DataFrame, totalBudget: Long, taus: Seq[Double]): DataFrame = {
     def wgt(t: Double, x: Column): Column = t match {
       case 0.25 => sqrt(sqrt(x))
       case 0.5  => sqrt(x)
       case 0.75 => sqrt(x) * sqrt(sqrt(x))
       case _    => x
     }
-    val mass = withBase(docs)
-      .select(col(stratumCol).as("stratum"), size(col("w")).cast("long").as("n_tokens"))
-      .groupBy(col("stratum"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("stratum_tokens"))
     val st = col("stratum_tokens").cast("double")
-    val tagged = mass.select(col("stratum"), col("n_docs"), col("stratum_tokens"),
-      explode(array(taus.map(t =>
-        struct(lit(t).as("tau"), wgt(t, st).as("wgt"))): _*)).as("x"))
-      .select(col("stratum"), col("n_docs"), col("stratum_tokens"),
-        col("x.tau").as("tau"), col("x.wgt").as("wgt"))
-    // order-fixed denominator: cumulative in stratum order, then the
-    // partition max — identical addition order in the oracle
-    import org.apache.spark.sql.expressions.Window
+    val keep = mass.columns.toSeq.map(col)
+    val tagged = mass.select(keep :+ explode(array(taus.map(t =>
+        struct(lit(t).as("tau"), wgt(t, st).as("wgt"))): _*)).as("x"): _*)
+      .select(keep ++ Seq(col("x.tau").as("tau"), col("x.wgt").as("wgt")): _*)
     val wCum = Window.partitionBy(col("tau")).orderBy(col("stratum"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy(col("tau"))
@@ -724,12 +752,6 @@ object TextFunctions {
       .withColumn("denom", max(col("cum_w")).over(wAll))
       .withColumn("target_tokens",
         floor(lit(totalBudget).cast("double") * col("wgt") / col("denom")).cast("long"))
-      .select(col("stratum").as("source"), col("tau"), col("n_docs"),
-        col("stratum_tokens").as("n_tokens"),
-        graft.Quant.q6(col("wgt") / col("denom")).as("budget_share"),
-        col("target_tokens"),
-        graft.Quant.q6(col("target_tokens").cast("double") / col("stratum_tokens"))
-          .as("epochs"))
   }
 
   /** Bigram language-model quality scoring — the CCNet-style "how
@@ -836,10 +858,7 @@ object TextFunctions {
     */
   def repetition(docs: DataFrame): DataFrame = {
     val bigrams = withBase(docs)
-      .filter(size(col("w")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"))
-        .as("g"))
+      .select(col("doc_id"), explode(wordShingleSeq(2)).as("g"))
     bigrams.groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_2grams"), max(col("c")).as("top_count"))
@@ -932,11 +951,9 @@ object TextFunctions {
     require(ns.nonEmpty && ns == ns.sorted && ns.forall(_ >= 2),
       s"ns must be ascending n-gram widths >= 2: $ns")
     val tagged = ns.map { n =>
-      val gram = (0 until n).map(j => s"element_at(w, i + $j)")
-        .mkString("concat_ws(' ', ", ", ", ")")
       s"CASE WHEN size(w) < $n THEN cast(array() AS array<struct<n:int,g:string>>) " +
         s"ELSE transform(sequence(1, size(w) - ${n - 1}), " +
-        s"i -> named_struct('n', $n, 'g', $gram)) END"
+        s"i -> named_struct('n', $n, 'g', ${gram(n)})) END"
     }.mkString("concat(", ", ", ")")
     val perGram = withBase(docs)
       .select(col("doc_id"), explode(expr(tagged)).as("x"))
@@ -990,9 +1007,9 @@ object TextFunctions {
 
   /** corpusVerdict plus each doc's token count — FUSED (r16): quality /
     * PII / exact-dup verdicts AND the token count all read from ONE
-    * shardSignals projection (arithmetic written identically to the
-    * per-gate operators, so the oracle's per-operator replay still
-    * gates every value). The previous composition normalized and
+    * gateSignals projection (the same signal definitions the per-gate
+    * operators use, so the oracle's per-operator replay still gates
+    * every value). The previous composition normalized and
     * rescanned the corpus once per gate plus once more for the funnel's
     * token join — 4 scans the 100× ShardProbe priced at ~2/3 of the
     * whole funnel. The near-dup stage keeps its own machinery (the
@@ -1000,9 +1017,7 @@ object TextFunctions {
     */
   private[graft] def verdictWithTokens(docs: DataFrame,
                                        minQuality: Double): DataFrame = {
-    val wd = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-    val sig = gateSignals(docs)
-      .withColumn("is_dup", col("doc_id") =!= min(col("doc_id")).over(wd))
+    val sig = gateSignals(docs).withColumn("is_dup", isDup())
     val near = Dedup.keepBest(docs, Dedup.minhashPairs(docs, 3, 64, 2, 0.8))
       .select(col("doc_id"), col("kept"))
     val verdict = when(col("is_dup"), "exact_dup")
@@ -1039,7 +1054,6 @@ object TextFunctions {
     // RECOMPUTE the whole verdict chain (pair graph included), doubling
     // the funnel's cost (caught at 100×: 43.6 s vs verdict's 10.4 s);
     // exact long sums make the totals identical either way
-    import org.apache.spark.sql.expressions.Window
     val wAll = Window.partitionBy(lit(0))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     v.groupBy(col("verdict"))
@@ -1051,6 +1065,33 @@ object TextFunctions {
         graft.Quant.q6(col("n_tokens").cast("double") / col("t_tokens")).as("token_frac"))
   }
 
+  /** The gate-signal columns (fingerprint, token count, quality score,
+    * language flag, PII flag) as one projection list over a withBase
+    * frame, each signal from its one definition above — shared by
+    * shardSignals (which adds the stratum and the sampling rank key) and
+    * verdictWithTokens (which needs no stratum, so corpusVerdict keeps
+    * working on bare (doc_id, text) frames).
+    */
+  private def gateSignalCols: Seq[Column] = Seq(
+    exactFp().as("fp"),
+    size(col("w")).cast("long").as("n_tokens"),
+    qualityScore().as("quality_score"),
+    isEn().as("is_en"),
+    hasPii().as("has_pii"))
+
+  /** All shard-gate signals in ONE projection over one normalized scan:
+    * fingerprint, token count, deterministic sampling key, quality score,
+    * language flag, PII flag — the fused gate corpusShard,
+    * corpusShardNear and graft.streaming.StreamShard build on. Stateless
+    * per row, so it streams unchanged.
+    */
+  private[graft] def shardSignals(docs: DataFrame): DataFrame =
+    withBase(docs).select(col("doc_id") +: col("source").as("stratum") +:
+      rankKey(col("doc_id")).as("rank_key") +: gateSignalCols: _*)
+
+  private[graft] def gateSignals(docs: DataFrame): DataFrame =
+    withBase(docs).select(col("doc_id") +: gateSignalCols: _*)
+
   /** The end-to-end training-shard builder — the composition a pipeline
     * actually ships: language gate (en), quality gate, PII gate, exact
     * dedup (first occurrence survives), then per-source token-budget fill
@@ -1061,59 +1102,19 @@ object TextFunctions {
     * window partitioned by stratum) so the whole shard build is a linear
     * chain of scans, hash joins, and one windowed sort per stratum.
     */
-  /** All shard-gate signals in ONE projection over one normalized scan:
-    * fingerprint, token count, deterministic sampling key, quality score,
-    * language flag, PII flag — the single place the fused gate arithmetic
-    * lives (corpusShard batch path and graft.streaming.StreamShard both
-    * build on it). Stateless per row, so it streams unchanged.
-    */
-  /** The gate-signal columns (fingerprint, token count, quality score,
-    * language flag, PII flag) as one projection list over a withBase
-    * frame — shared by shardSignals (which adds the stratum and the
-    * sampling rank key) and verdictWithTokens (which needs no stratum,
-    * so corpusVerdict keeps working on bare (doc_id, text) frames).
-    */
-  private def gateSignalCols: Seq[Column] = {
-    val Seq(en, es, de, fr) = langMarkers.map { case (_, ws) => countIn(ws) }
-    Seq(
-      md5(col("norm")).as("fp"),
-      size(col("w")).cast("long").as("n_tokens"),
-      graft.Quant.q6(countIn(stopEn).cast("double") / size(col("w")) * 0.4
-        + (lit(1.0) - punctCount.cast("double")
-            / length(col("norm"))) * 0.3
-        + least(size(col("w")).cast("double") / 100.0, lit(1.0)) * 0.3)
-        .as("quality_score"),
-      (en >= es && en >= de && en >= fr && en > 0).as("is_en"),
-      (regexp_count(col("norm"), lit("[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"))
-        + regexp_count(col("norm"), lit("\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"))
-        + regexp_count(col("norm"), lit("\\d{3}[- ]\\d{3,4}[- ]\\d{4}")) > 0)
-        .as("has_pii"))
-  }
-
-  private[graft] def shardSignals(docs: DataFrame): DataFrame =
-    withBase(docs).select(col("doc_id") +: col("source").as("stratum") +:
-      md5(col("doc_id").cast("string")).as("rank_key") +: gateSignalCols: _*)
-
-  private[graft] def gateSignals(docs: DataFrame): DataFrame =
-    withBase(docs).select(col("doc_id") +: gateSignalCols: _*)
-
   def corpusShard(docs: DataFrame, minQuality: Double = 0.5,
                   budgetPerStratum: Long = 3000L): DataFrame = {
     // FUSED, not composed from quality()/langId()/piiScan()/exact(): the
     // naive composition normalizes and rescans the corpus once per gate
     // (measured 2× this plan's cost at sf0.1); here every signal is one
-    // projection over a single normalized scan (shardSignals — shared
-    // with the streaming gate), then the dedup-fingerprint window (keyed
-    // by fp, dup-cluster-sized groups) and the distributed budget fill
-    // (budgetFill — range-partitioned prefix sum, no stratum-wide task).
-    // The arithmetic is written identically to the per-gate operators —
-    // the oracle replays the same chain, so drift can't pass the gate.
-    val sig = shardSignals(docs)
-    val wd = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-    val survivors = sig
+    // projection over a single normalized scan (shardSignals), then the
+    // dedup-fingerprint window (keyed by fp, dup-cluster-sized groups)
+    // and the distributed budget fill (budgetFill — range-partitioned
+    // prefix sum, no stratum-wide task).
+    val survivors = shardSignals(docs)
       // dedup over the FULL corpus (a later copy of a low-quality doc is
       // still a dup), so the fingerprint window runs before any gate
-      .withColumn("is_dup", col("doc_id") =!= min(col("doc_id")).over(wd))
+      .withColumn("is_dup", isDup())
       .filter(col("is_en") && col("quality_score") >= minQuality &&
         !col("has_pii") && !col("is_dup"))
       .select(col("doc_id"), col("stratum"), col("n_tokens"), col("rank_key"))
@@ -1126,7 +1127,12 @@ object TextFunctions {
     * pick one representative per cluster — the minimum doc_id — and every
     * other member is dropped BEFORE the budget fill, so a heavily
     * templated source can't spend its token budget on paraphrases. Exact
-    * copies have Jaccard 1.0, so near-dedup subsumes the exact gate.
+    * copies of n or more words (n = the pair graph's shingle width, 3 for
+    * minhashPairs' default) have Jaccard 1.0, so near-dedup subsumes the
+    * exact gate there. Below n words a document has no shingles
+    * (MinHashSig/HashedShingles are null), so identical short copies
+    * never pair and ALL of them survive here, where corpusShard keeps
+    * only the first.
     *
     * Scale shape: the drop set (non-representatives) is bounded by the
     * duplicate GRAPH, not the corpus — it reaches the survivors as a
@@ -1147,18 +1153,6 @@ object TextFunctions {
     budgetFill(survivors, budgetPerStratum)
   }
 
-  /** Document fingerprints: md5 of the normalized text (exact-dedup key)
-    * plus a winnowing-style rolling fingerprint — the minimum hash over all
-    * 8-char shingles (min-of-rolling-window, the degenerate single-window
-    * form of the winnowing scheme).
-    */
-  /** Corpus vocabulary by document frequency: the top `k` words by the
-    * number of distinct documents containing them (ties broken
-    * alphabetically). Distinct-words-per-doc via array_distinct (map-side,
-    * per row) then explode + count: one partial-aggregated shuffle on the
-    * word key; the global top-k is a TakeOrdered, never a full sort. The
-    * dataset-card / tokenizer-coverage query.
-    */
   /** Vocabulary growth curve (the Heaps-law audit: "will a bigger
     * corpus keep minting new types, or is the vocabulary saturating") —
     * distinct-type counts at deterministic md5-order corpus prefixes.
@@ -1174,15 +1168,7 @@ object TextFunctions {
   def vocabGrowth(docs: DataFrame, fracs: Seq[Double]): DataFrame = {
     require(fracs.nonEmpty && fracs.forall(f => f > 0 && f <= 1),
       s"fractions must be in (0,1]: $fracs")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // 16-bit prefix cut on the first 4 md5 hex chars (fixed-width hex:
-    // lexicographic == numeric); f = 1.0 is the whole corpus
-    def under(h: Column, f: Double): Column =
-      if (f >= 1.0) lit(true)
-      else h < f"${math.floor(f * 65536).toLong}%04x"
-    val hashed = withBase(docs)
-      .withColumn("h", substring(md5(col("doc_id").cast("string")), 1, 4))
+    val hashed = withBase(docs).withColumn("h", hexFrac(col("doc_id")))
     val wordMin = hashed
       .select(col("h"), explode(array_distinct(col("w"))).as("word"))
       .groupBy(col("word")).agg(min(col("h")).as("h_min"))
@@ -1190,17 +1176,12 @@ object TextFunctions {
     // percent: two fractions that floor to the same percent (0.125 vs
     // 0.12, or anything below 1%) must not collide into one ambiguous
     // alias
-    val vocabCounts = wordMin.agg(
-      fracs.zipWithIndex.map { case (f, i) =>
-        sum(when(under(col("h_min"), f), 1L).otherwise(0L)).as(s"v_$i") }.head,
-      fracs.zipWithIndex.map { case (f, i) =>
-        sum(when(under(col("h_min"), f), 1L).otherwise(0L)).as(s"v_$i") }.tail: _*)
-    val docCounts = hashed.agg(
-      fracs.zipWithIndex.map { case (f, i) =>
-        sum(when(under(col("h"), f), 1L).otherwise(0L)).as(s"d_$i") }.head,
-      fracs.zipWithIndex.map { case (f, i) =>
-        sum(when(under(col("h"), f), 1L).otherwise(0L)).as(s"d_$i") }.tail: _*)
-    val wide = vocabCounts.crossJoin(broadcast(docCounts))
+    def counts(df: DataFrame, h: String, tag: String): DataFrame = {
+      val aggs = fracs.zipWithIndex.map { case (f, i) =>
+        sum(when(under(col(h), f), 1L).otherwise(0L)).as(s"${tag}_$i") }
+      df.agg(aggs.head, aggs.tail: _*)
+    }
+    val wide = counts(wordMin, "h_min", "v").crossJoin(broadcast(counts(hashed, "h", "d")))
     fracs.zipWithIndex.map { case (f, i) =>
       wide.select(lit(f).as("frac"), col(s"d_$i").as("n_docs"),
         col(s"v_$i").as("n_types"))
@@ -1235,6 +1216,13 @@ object TextFunctions {
       .select(col("rank"), col("word"), col("tf"))
   }
 
+  /** Corpus vocabulary by document frequency: the top `k` words by the
+    * number of distinct documents containing them (ties broken
+    * alphabetically). Distinct-words-per-doc via array_distinct (map-side,
+    * per row) then explode + count: one partial-aggregated shuffle on the
+    * word key; the global top-k is a TakeOrdered, never a full sort. The
+    * dataset-card / tokenizer-coverage query.
+    */
   def vocab(docs: DataFrame, k: Int): DataFrame =
     withBase(docs)
       .select(explode(array_distinct(col("w"))).as("word"))
@@ -1262,7 +1250,6 @@ object TextFunctions {
     * materialize the full posting list of every stopword in one task).
     */
   def keywords(docs: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k > 0, s"k must be positive, got $k")
     val tf = withBase(docs)
       .select(col("doc_id"), explode(col("w")).as("word"))
@@ -1321,17 +1308,6 @@ object TextFunctions {
         (length(col("norm")) - size(col("w")) + 1).cast("long") * 1000000L,
         size(col("w"))).as("mean_word_len"))
 
-  /** Character-level Shannon entropy per document — the
-    * compressibility/gibberish signal (binary junk and key-mash score
-    * high, template fill scores low; complements quality() and
-    * repetition()). Char counts via explode → one keyed groupBy; the
-    * entropy fold runs over the SORTED per-doc count list (distinct chars
-    * per doc are bounded, and a sorted sequential fold makes the float
-    * sum independent of partition order — a plain double sum aggregate
-    * would be run-to-run nondeterministic). log2 is libm-dependent across
-    * engines, so this operator is spec-gated (rows-only at the driver),
-    * not oracle-hashed.
-    */
   /** The shared per-doc sorted (char, count) profile: explode → keyed
     * counts (map-side partial), then a per-doc collect of at most
     * alphabet-size structs — bounded regardless of document length.
@@ -1344,6 +1320,17 @@ object TextFunctions {
       .groupBy(col("doc_id"), col("n"))
       .agg(sort_array(collect_list(struct(col("ch"), col("c")))).as("cs"))
 
+  /** Character-level Shannon entropy per document — the
+    * compressibility/gibberish signal (binary junk and key-mash score
+    * high, template fill scores low; complements quality() and
+    * repetition()). Char counts via explode → one keyed groupBy; the
+    * entropy fold runs over the SORTED per-doc count list (distinct chars
+    * per doc are bounded, and a sorted sequential fold makes the float
+    * sum independent of partition order — a plain double sum aggregate
+    * would be run-to-run nondeterministic). log2 is libm-dependent across
+    * engines, so this operator is spec-gated (rows-only at the driver),
+    * not oracle-hashed.
+    */
   def charEntropy(docs: DataFrame): DataFrame =
     charCounts(docs)
       .select(col("doc_id"), col("n").cast("long").as("n_chars"),
@@ -1376,7 +1363,7 @@ object TextFunctions {
     */
   def dupStats(docs: DataFrame): DataFrame =
     withBase(docs)
-      .select(col("source"), md5(col("norm")).as("fp"))
+      .select(col("source"), exactFp().as("fp"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("fp")).as("n_unique"))
@@ -1468,7 +1455,7 @@ object TextFunctions {
     * rare boilerplate hot key), never corpus-scale.
     */
   def crossSourceOverlap(docs: DataFrame): DataFrame = {
-    val fps = withBase(docs).select(col("doc_id"), col("source"), md5(col("norm")).as("fp"))
+    val fps = withBase(docs).select(col("doc_id"), col("source"), exactFp().as("fp"))
     val a = fps.select(col("fp"), col("source").as("src_a"), col("doc_id").as("id_a"))
     val b = fps.select(col("fp"), col("source").as("src_b"), col("doc_id").as("id_b"))
     a.join(b, Seq("fp")).filter(col("src_a") < col("src_b"))
@@ -1476,10 +1463,15 @@ object TextFunctions {
       .agg(count(lit(1)).as("n_pairs"), countDistinct(col("fp")).as("n_texts"))
   }
 
+  /** Document fingerprints: md5 of the normalized text (exact-dedup key)
+    * plus a winnowing-style rolling fingerprint — the minimum hash over all
+    * 8-char shingles (min-of-rolling-window, the degenerate single-window
+    * form of the winnowing scheme).
+    */
   def fingerprint(docs: DataFrame): DataFrame =
     withBase(docs).select(
       col("doc_id"),
-      md5(col("norm")).as("fp_md5"),
+      exactFp().as("fp_md5"),
       expr("CASE WHEN length(norm) < 8 THEN md5(norm) ELSE " +
         "array_min(transform(sequence(1, length(norm) - 7), i -> md5(substring(norm, i, 8)))) END")
         .as("fp_winnow"),

@@ -94,6 +94,25 @@ class CorpusSpec extends SparkSuite {
     assert(exact == Set(1L, 2L, 3L), s"$exact")
   }
 
+  test("identical docs under n words survive the near-dup shard, not the exact one") {
+    import spark.implicits._
+    // two identical 2-word docs have no 3-shingles, so no minhash pair
+    // links them: corpusShardNear keeps both, corpusShard only the first
+    val docs = Seq(
+      (1L, "the cat"),
+      (2L, "the cat"),
+      (3L, "the weather and the sea and the sky look calm before the storm")
+    ).toDF("doc_id", "text").withColumn("source", lit("s"))
+    val pairs = graft.text.Dedup.minhashPairs(docs, 3, 64, 2, 0.8)
+    assert(pairs.isEmpty)
+    val near = TF.corpusShardNear(docs, pairs, 0.0, 100000L)
+      .select("doc_id").as[Long].collect().toSet
+    assert(near == Set(1L, 2L, 3L), s"$near")
+    val exact = TF.corpusShard(docs, 0.0, 100000L)
+      .select("doc_id").as[Long].collect().toSet
+    assert(exact == Set(1L, 3L), s"$exact")
+  }
+
   test("sequence packing is the contiguous token stream cut at capacity") {
     import spark.implicits._
     // three docs of 3/4/2 tokens in one stratum; hash order is by

@@ -138,22 +138,68 @@ class DedupSimSpec extends SparkSuite {
     assert(viaDriver == viaSpark, "the two clustering regimes must agree")
   }
 
-  test("derivedEdgeLimit stays within [1M, 16M] and honors the session conf override") {
+  test("derivedEdgeLimit stays within [1M, 16M] and honors the per-call override") {
     val l = Dedup.derivedEdgeLimit
     assert(l >= 1000000L && l <= 16000000L, s"derived $l")
     // on this test JVM (multi-GB heap) the quarter-heap budget at
     // 96 B/edge should admit well over the floor
     assert(l > 1000000L, s"expected heap-scaled limit above the floor, got $l")
-    // conf override routes a 2-edge graph into the distributed regime
+    // the per-call limit routes a 2-edge graph into the distributed regime
     import spark.implicits._
     val docs2 = Seq((1L, "x"), (2L, "x"), (3L, "x")).toDF("doc_id", "text")
     val pairs2 = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    spark.conf.set("graft.clusters.driverEdgeLimit", "1")
-    try {
-      val cl = Dedup.clusters(docs2, pairs2).orderBy("doc_id")
-        .as[(Long, Long)].collect().toSeq
-      assert(cl == Seq((1L, 1L), (2L, 1L), (3L, 1L)))
-    } finally spark.conf.unset("graft.clusters.driverEdgeLimit")
+    val cl = Dedup.clusters(docs2, pairs2, driverEdgeLimit = 1L).orderBy("doc_id")
+      .as[(Long, Long)].collect().toSeq
+    assert(cl == Seq((1L, 1L), (2L, 1L), (3L, 1L)))
+  }
+
+  test("shingle-posting operators agree with each other and with set truth") {
+    import spark.implicits._
+    // doc 3 repeats its shingles (9 positions, 3 distinct 3-grams), doc 4
+    // is shorter than n = 3 and has none, doc 6 shares nothing
+    val texts = Seq(
+      1L -> "a b c d e f g h",
+      2L -> "a b c d e f x y",
+      3L -> "a b c a b c a b c",
+      4L -> "a b",
+      5L -> "c d e f g h z",
+      6L -> "q r s t")
+    val d = texts.toDF("doc_id", "text")
+    val grams = texts.map { case (id, t) =>
+      id -> t.split(" ").sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet }.toMap
+    val truth = (for {
+      (a, ga) <- grams; (b, gb) <- grams
+      if a < b && (ga & gb).nonEmpty
+    } yield (a, b) -> (ga & gb).size.toLong).toMap
+    val shared = Dedup.sharedNgramPairs(d, 3).as[(Long, Long, Long)].collect()
+      .map { case (a, b, c) => (a, b) -> c }.toMap
+    val inter = Dedup.containmentPairs(d, 3, 0.0).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(shared.size == 5 && shared((1L, 2L)) == 4L && shared((1L, 3L)) == 1L, s"$shared")
+    assert(shared == truth && inter == shared, s"shared $shared inter $inter")
+    // ngramJaccardPairs at tau 0: every sharing pair, Jaccard over the
+    // distinct-shingle counts
+    val jac = Dedup.ngramJaccardPairs(d, 3, 0.0).as[(Long, Long, Double)].collect()
+      .map { case (a, b, j) => (a, b) -> j }.toMap
+    assert(jac.keySet == shared.keySet)
+    shared.foreach { case ((a, b), c) =>
+      val want = c.toDouble / (grams(a).size + grams(b).size - c)
+      assert(math.abs(jac((a, b)) - want) < 1e-6, s"($a, $b): ${jac((a, b))} vs $want")
+    }
+    // across a train/bench split, the cross operators equal the self
+    // operators' cross pairs, oriented (train_id, bench_id)
+    val benchIds = Set(1L, 4L, 6L)
+    val train = d.filter(!col("doc_id").isin(benchIds.toSeq: _*))
+    val bench = d.filter(col("doc_id").isin(benchIds.toSeq: _*))
+    def cross[V](m: Map[(Long, Long), V]): Map[(Long, Long), V] = m.collect {
+      case ((a, b), v) if benchIds(a) != benchIds(b) =>
+        (if (benchIds(a)) (b, a) else (a, b)) -> v }
+    val contam = Dedup.contamination(train, bench, 3).as[(Long, Long, Long)].collect()
+      .map { case (t, b, c) => (t, b) -> c }.toMap
+    assert(contam.nonEmpty && contam == cross(shared), s"$contam")
+    val crossJac = Dedup.crossJaccardPairs(train, bench, 3, 0.0)
+      .as[(Long, Long, Double)].collect().map { case (t, b, j) => (t, b) -> j }.toMap
+    assert(crossJac == cross(jac), s"$crossJac")
   }
 
   test("clusters: labels are component minima, closed under the pair edges") {
