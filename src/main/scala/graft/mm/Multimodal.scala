@@ -3,6 +3,8 @@ package graft.mm
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.text.TextFunctions
+
 /** Multimodal column plumbing: image/audio/video payloads travel as opaque
   * `binary` columns with typed metadata, and per-batch decode/feature
   * stages run as partition-local transforms.
@@ -96,17 +98,16 @@ object Multimodal {
     * survives. Catches verbatim re-uploads — the common lakehouse-ingest
     * case; a recompressed image hashes differently (that is the
     * perceptual-hash extension point, which would slot in as another
-    * fingerprint column from the decode stage). Same keyed window shape
-    * as text Dedup.exact: one shuffle on the fingerprint, dup-cluster-
-    * sized groups, no decode.
+    * fingerprint column from the decode stage). The survivor and verdict
+    * are text Dedup.exact's (TextFunctions.keepId/isDup) on asset_id: one
+    * shuffle on the fingerprint, dup-cluster-sized groups, no decode.
     */
   def dedupAssets(assets: Dataset[MediaRow]): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
     assets.toDF()
       .select(col("asset_id"), col("kind"), md5(col("payload")).as("fp"))
-      .withColumn("keep_id", min(col("asset_id")).over(w))
+      .withColumn("keep_id", TextFunctions.keepId(col("asset_id")))
       .select(col("asset_id"), col("kind"), col("fp"),
-        (col("asset_id") =!= col("keep_id")).as("is_dup"), col("keep_id"))
+        TextFunctions.isDup(col("keep_id"), col("asset_id")).as("is_dup"), col("keep_id"))
   }
 
   /** Perceptual near-dup pairs for binary assets — the extension point

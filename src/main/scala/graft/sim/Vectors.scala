@@ -354,28 +354,6 @@ object Vectors {
         graft.Quant.q6(array_max(col("errs"))).as("max_abs_err"))
   }
 
-  /** Product-quantization audit — the "can we serve these embeddings from
-    * PQ codes" report that completes the compression triad next to SQ8
-    * (sq8Audit) and the coarse IVF quantizer: the D-dim vector splits
-    * into `m` subspaces, each coded against a per-subspace codebook of
-    * `k` entries, and every vector reports its code word plus the
-    * µ-unit-exact mean squared reconstruction error (Jégou et al. 2011).
-    *
-    * The codebook is the DETERMINISTIC seed quantizer — the subvectors of
-    * the k lowest-id corpus vectors — the same zero-training trick that
-    * makes emb_ann_ivf_served exactly oracle-replayable (Lloyd-refined
-    * codebooks belong to the rows-only training path). Assignment is
-    * argmin of the DIRECT index-ordered Σ(x−c)² fold (no |s|²−2s·c+|c|²
-    * cancellation — both engines replay the same adds), ties to the
-    * smallest code via struct-min; per-subspace SSEs quantize to integer
-    * µ-units before the cross-subspace sum, so the per-vector MSE is
-    * order-free.
-    *
-    * Scale shape: subvector explode (m narrow rows/vector) → broadcast
-    * join against the m·k-row codebook → map-side-partial struct-min →
-    * per-vector word assembly over m-bounded groups. One corpus pass, no
-    * shuffle wider than (vec_id, sub) summaries.
-    */
   /** The per-subspace squared reconstruction error Σ(x−c)² as the
     * DIRECT index-ordered fold over (svec, cvec) columns — shared by
     * every PQ stage so codes, MSEs, and ADC tables all add the same
@@ -433,6 +411,28 @@ object Vectors {
       .withColumn("dist_us", graft.Quant.us6(pqSse))
       .select(col("vec_id").as("q_id"), col("sub"), col("code"), col("dist_us"))
 
+  /** Product-quantization audit — the "can we serve these embeddings from
+    * PQ codes" report that completes the compression triad next to SQ8
+    * (sq8Audit) and the coarse IVF quantizer: the D-dim vector splits
+    * into `m` subspaces, each coded against a per-subspace codebook of
+    * `k` entries, and every vector reports its code word plus the
+    * µ-unit-exact mean squared reconstruction error (Jégou et al. 2011).
+    *
+    * The codebook is the DETERMINISTIC seed quantizer — the subvectors of
+    * the k lowest-id corpus vectors — the same zero-training trick that
+    * makes emb_ann_ivf_served exactly oracle-replayable (Lloyd-refined
+    * codebooks belong to the rows-only training path). Assignment is
+    * argmin of the DIRECT index-ordered Σ(x−c)² fold (no |s|²−2s·c+|c|²
+    * cancellation — both engines replay the same adds), ties to the
+    * smallest code via struct-min; per-subspace SSEs quantize to integer
+    * µ-units before the cross-subspace sum, so the per-vector MSE is
+    * order-free.
+    *
+    * Scale shape: subvector explode (m narrow rows/vector) → broadcast
+    * join against the m·k-row codebook → map-side-partial struct-min →
+    * per-vector word assembly over m-bounded groups. One corpus pass, no
+    * shuffle wider than (vec_id, sub) summaries.
+    */
   def pqAudit(emb: DataFrame, m: Int = 8, k: Int = 16,
               vecCol: String = "embedding"): DataFrame = {
     val cb = pqSubvectors(emb.filter(col("vec_id") < k), m, vecCol)
@@ -453,33 +453,6 @@ object Vectors {
         graft.Quant.mean6(col("sse_us"), lit(64)).as("recon_mse"))
   }
 
-  /** PQ-ADC ANN serving (Jégou et al. 2011 §IV) — the query path on top
-    * of pqAudit's codes, completing the serving triad next to annLsh
-    * (bucket pruning) and annIvf (cell pruning): each query builds an
-    * m×k DISTANCE TABLE against the codebook once, every corpus vector's
-    * approximate distance is then m table lookups summed (never a 64-dim
-    * dot per candidate), and the top-`rerank` ADC survivors are
-    * exact-cosine re-ranked to the final top-k.
-    *
-    * Determinism: the codebook is the seed quantizer over the `kCodes`
-    * lowest-id CORPUS vectors (the pqAudit / emb_ann_ivf_served
-    * zero-training rule); distance-table entries quantize to integer
-    * µ-units (one per (query, sub, code) — exact), so the ADC sum is an
-    * order-free long and both the ADC rank (adc_us asc, vec_id) and the
-    * re-rank (cos desc, vec_id) are total orders the oracle replays
-    * bit-for-bit.
-    *
-    * Scale shape: codebook and distance tables are metadata
-    * (m·kCodes / nQueries·m·kCodes rows) and BROADCAST; corpus codes are
-    * computed in one pass (the pqAudit shape) and the ADC lookup join
-    * fans m rows per (query, vector) that a map-side partial sum
-    * collapses before the (q, vec) shuffle; the exact re-rank touches
-    * only nQueries·rerank full vectors through a keyed equi-join. In a
-    * full deployment the corpus codes persist next to the IVF cells
-    * (IvfIndex) so ADC scans only probed cells — the kernel here is the
-    * same. (The serving entry point is annPq below; the ADC frame is
-    * shared with pqRerankCurve through pqAdcDistances.)
-    */
   /** The PQ-ADC distance table shared by annPq and pqRerankCurve:
     * codebook assignment (one corpus pass, broadcast codebook, map-side-
     * partial argmin), per-query broadcast distance tables, ADC = m table
@@ -506,6 +479,33 @@ object Vectors {
       .agg(sum(col("dist_us")).as("adc_us"))
   }
 
+  /** PQ-ADC ANN serving (Jégou et al. 2011 §IV) — the query path on top
+    * of pqAudit's codes, completing the serving triad next to annLsh
+    * (bucket pruning) and annIvf (cell pruning): each query builds an
+    * m×k DISTANCE TABLE against the codebook once, every corpus vector's
+    * approximate distance is then m table lookups summed (never a 64-dim
+    * dot per candidate), and the top-`rerank` ADC survivors are
+    * exact-cosine re-ranked to the final top-k.
+    *
+    * Determinism: the codebook is the seed quantizer over the `kCodes`
+    * lowest-id CORPUS vectors (the pqAudit / emb_ann_ivf_served
+    * zero-training rule); distance-table entries quantize to integer
+    * µ-units (one per (query, sub, code) — exact), so the ADC sum is an
+    * order-free long and both the ADC rank (adc_us asc, vec_id) and the
+    * re-rank (cos desc, vec_id) are total orders the oracle replays
+    * bit-for-bit.
+    *
+    * Scale shape: codebook and distance tables are metadata
+    * (m·kCodes / nQueries·m·kCodes rows) and BROADCAST; corpus codes are
+    * computed in one pass (the pqAudit shape) and the ADC lookup join
+    * fans m rows per (query, vector) that a map-side partial sum
+    * collapses before the (q, vec) shuffle; the exact re-rank touches
+    * only nQueries·rerank full vectors through a keyed equi-join. In a
+    * full deployment the corpus codes persist next to the IVF cells
+    * (IvfIndex) so ADC scans only probed cells — the kernel here is the
+    * same. (The ADC frame is shared with pqRerankCurve through
+    * pqAdcDistances.)
+    */
   def annPq(emb: DataFrame, nQueries: Int, k: Int, m: Int = 8, kCodes: Int = 16,
             rerank: Int = 32, vecCol: String = "embedding"): DataFrame = {
     require(rerank >= k, s"rerank=$rerank must cover k=$k")
@@ -859,6 +859,41 @@ object Vectors {
     (b0, nUp)
   }
 
+  /** 1 − acos(c)/π for the four sweep band floors, as FIXED decimal
+    * literals shared verbatim with the SQL oracle — neither engine
+    * evaluates a libm acos, so the replay is bit-identical by
+    * construction (the text_entropy lesson: transcendental libm calls
+    * are the one place two engines legitimately disagree).
+    */
+  private[graft] val bandP: Seq[(Int, Double)] = Seq(
+    80 -> 0.7951672353008665,
+    90 -> 0.8564337068712937,
+    95 -> 0.8989173758957401,
+    99 -> 0.9549465863555878)
+
+  /** Closed-form expected recall of cosinePairsLshAuto for a pair at
+    * exact cosine c (passed as p = 1 − acos(c)/π, one of bandP), at the
+    * config autoBitsFrac picks for corpus size n: per-table hit
+    * p^b + f·p^(b−1)(1−p) with the per-width flip budget, union over
+    * the fractional-bit table mix. Arithmetic is a LEFT-FOLD of
+    * multiplications over the shared literals — the SQL oracle replays
+    * the identical fold (list_reduce), so the emitted columns are
+    * hash-gated like any other value, not merely documented. UNQUANTIZED
+    * (callers q6 at the edge).
+    */
+  def expectedBandRecall(n: Long, p: Double, nTables: Int = 16,
+                         targetOccupancy: Long = 4L): Double = {
+    val (b0, nUp) = autoBitsFrac(n, targetOccupancy, nTables)
+    def powN(x: Double, k: Int): Double = {
+      var a = 1.0; var i = 0; while (i < k) { a *= x; i += 1 }; a
+    }
+    def hit(bits: Int): Double = {
+      val f = math.min(bits, math.max(1, 16 - bits))
+      powN(p, bits) + f.toDouble * powN(p, bits - 1) * (1.0 - p)
+    }
+    1.0 - powN(1.0 - hit(b0 + 1), nUp) * powN(1.0 - hit(b0), nTables - nUp)
+  }
+
   /** Corpus-size-adaptive cosinePairsLsh — the lttbAuto pattern on the
     * dedup axis: ONE map-side count probe picks bitsPerTable via
     * autoBitsFrac, so the fixed-b quadratic candidate term n²/2^b (§7d's
@@ -898,41 +933,6 @@ object Vectors {
     *     background candidates, and the retained single flip already
     *     doubles the probe fan for the ~0.07 it buys).
     */
-  /** 1 − acos(c)/π for the four sweep band floors, as FIXED decimal
-    * literals shared verbatim with the SQL oracle — neither engine
-    * evaluates a libm acos, so the replay is bit-identical by
-    * construction (the text_entropy lesson: transcendental libm calls
-    * are the one place two engines legitimately disagree).
-    */
-  private[graft] val bandP: Seq[(Int, Double)] = Seq(
-    80 -> 0.7951672353008665,
-    90 -> 0.8564337068712937,
-    95 -> 0.8989173758957401,
-    99 -> 0.9549465863555878)
-
-  /** Closed-form expected recall of cosinePairsLshAuto for a pair at
-    * exact cosine c (passed as p = 1 − acos(c)/π, one of bandP), at the
-    * config autoBitsFrac picks for corpus size n: per-table hit
-    * p^b + f·p^(b−1)(1−p) with the per-width flip budget, union over
-    * the fractional-bit table mix. Arithmetic is a LEFT-FOLD of
-    * multiplications over the shared literals — the SQL oracle replays
-    * the identical fold (list_reduce), so the emitted columns are
-    * hash-gated like any other value, not merely documented. UNQUANTIZED
-    * (callers q6 at the edge).
-    */
-  def expectedBandRecall(n: Long, p: Double, nTables: Int = 16,
-                         targetOccupancy: Long = 4L): Double = {
-    val (b0, nUp) = autoBitsFrac(n, targetOccupancy, nTables)
-    def powN(x: Double, k: Int): Double = {
-      var a = 1.0; var i = 0; while (i < k) { a *= x; i += 1 }; a
-    }
-    def hit(bits: Int): Double = {
-      val f = math.min(bits, math.max(1, 16 - bits))
-      powN(p, bits) + f.toDouble * powN(p, bits - 1) * (1.0 - p)
-    }
-    1.0 - powN(1.0 - hit(b0 + 1), nUp) * powN(1.0 - hit(b0), nTables - nUp)
-  }
-
   def cosinePairsLshAuto(emb: DataFrame, tau: Double, nTables: Int = 16,
                          targetOccupancy: Long = 4L, dim: Int = 64): DataFrame = {
     val n = emb.agg(count(lit(1))).head.getLong(0)

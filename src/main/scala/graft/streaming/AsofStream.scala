@@ -1,15 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One event of the merged as-of input: a left probe row or a right
   * reference sample, distinguished so the state fold can route them.
   */
 case class AsofEvent(uuid: String, time: Long, value: Double, isLeft: Boolean)
-
-/** Per-key continuation state: the latest reference sample seen. */
-case class AsofRef(lastTime: Long, lastValue: Double)
 
 /** A left row enriched with the as-of match (None = no reference yet, or
   * the match is older than the staleness tolerance).
@@ -27,12 +23,9 @@ case class AsofMatch(uuid: String, time: Long, l_value: Double,
   * right-at-t is visible to left-at-t (<= inclusive), duplicate right
   * timestamps resolve last-write-wins to the max value, and a
   * `toleranceUs` staleness bound nulls matches older than the window.
-  * Within a batch the group iterator is unordered → sort by
-  * (time, isLeft, value): rights sort before lefts at equal timestamps,
-  * and ascending value makes the max-value right the one that sticks.
-  * Across batches correctness needs in-order delivery per key, the same
-  * contract as Deadband/CounterRate (the ingest path's per-batch file
-  * atomicity provides it).
+  * A keyed scan per uuid in (time, isLeft, value) order: rights sort
+  * before lefts at equal timestamps, and ascending value makes the
+  * max-value right the one that sticks.
   */
 object AsofStream {
 
@@ -40,33 +33,24 @@ object AsofStream {
              toleranceUs: Option[Long] = None): Dataset[AsofMatch] = {
     implicit val ee = Encoders.product[AsofEvent]
     implicit val ke = Encoders.STRING
+    implicit val se = Encoders.product[LastPoint]
+    implicit val me = Encoders.product[AsofMatch]
     val events =
       left.map(p => AsofEvent(p.uuid, p.time, p.value, isLeft = true))
         .union(right.map(p => AsofEvent(p.uuid, p.time, p.value, isLeft = false)))
-    events
-      .groupByKey(_.uuid)
-      .flatMapGroupsWithState[AsofRef, AsofMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[AsofEvent], state: GroupState[AsofRef]) =>
-          val sorted = it.toIndexedSeq.sortBy(e => (e.time, e.isLeft, e.value))
-          var st = state.getOption
-          val out = Vector.newBuilder[AsofMatch]
-          sorted.foreach { e =>
-            if (!e.isLeft) st = Some(AsofRef(e.time, e.value))
-            else {
-              // never match a FUTURE reference: under out-of-order
-              // delivery the state may already hold a later sample than
-              // this probe — emitting it would be anti-causal (the batch
-              // operator, which sees all data, would have matched the
-              // older reference this state has already discarded)
-              val m = st.filter(s => s.lastTime <= e.time &&
-                toleranceUs.forall(e.time - s.lastTime <= _))
-              out += AsofMatch(e.uuid, e.time, e.value,
-                m.map(_.lastTime), m.map(_.lastValue))
-            }
-          }
-          st.foreach(state.update)
-          out.result().iterator
-      }(Encoders.product[AsofRef], Encoders.product[AsofMatch])
+    keyedScan(events, (e: AsofEvent) => e.uuid, (e: AsofEvent) => (e.time, e.isLeft, e.value)) {
+      (_: String, st: Option[LastPoint], e: AsofEvent) =>
+        if (!e.isLeft) (Some(LastPoint(e.time, e.value)), None)
+        else {
+          // never match a FUTURE reference: under out-of-order delivery
+          // the state may already hold a later sample than this probe —
+          // emitting it would be anti-causal (the batch operator, which
+          // sees all data, would have matched the older reference this
+          // state has already discarded)
+          val m = st.filter(s => s.lastTime <= e.time &&
+            toleranceUs.forall(e.time - s.lastTime <= _))
+          (st, Some(AsofMatch(e.uuid, e.time, e.value, m.map(_.lastTime), m.map(_.lastValue))))
+        }
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.ts.TimeSeriesOps
+
 /** Continuous SLO burn-rate monitoring — the streaming face of the
   * batch multi-window burn report (TimeSeriesOps.burnRate): per
   * (stream, grid window), the bad-event fraction over the error budget,
@@ -12,10 +14,10 @@ import org.apache.spark.sql.functions._
   * without re-aggregating history per micro-batch — which is exactly a
   * watermarked windowed aggregation (bounded state: open windows only).
   *
-  * Arithmetic contract: identical to the batch operator — exact long
-  * counts, then fraction and burn as two float divisions in the same
-  * order, so a closed streaming window equals the batch row for that
-  * window bit-for-bit (spec-gated). Windows align to the epoch grid
+  * Arithmetic contract: the batch operator's — exact long counts, then
+  * the same two float divisions (TimeSeriesOps.burnCols), so a closed
+  * streaming window equals the batch row for that window bit-for-bit
+  * (spec-gated). Windows align to the epoch grid
   * (timestamp_micros(0) origin) like every batch grid with start=0;
   * callers align `start` accordingly in batch comparisons.
   *
@@ -34,17 +36,11 @@ object BurnRateMonitor {
            watermarkDelayMs: Long = 0L): DataFrame = {
     require(widthUs > 0, s"width must be positive, got $widthUs")
     require(slo > 0 && slo < 1, s"slo must be in (0,1), got $slo")
-    val withTs = points.toDF()
-      .withColumn("ts", timestamp_micros(col("time")))
-      .withWatermark("ts", s"$watermarkDelayMs milliseconds")
-    val frac = col("n_bad").cast("double") / col("n_events").cast("double")
-    withTs
+    eventTime(points, s"$watermarkDelayMs milliseconds")
       .groupBy(col("uuid"), window(col("ts"), s"$widthUs microseconds"))
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("value") > badGt, 1L).otherwise(0L)).as("n_bad"))
-      .select(col("uuid"), unix_micros(col("window.start")).as("w_start"),
-        col("n_events"), col("n_bad"),
-        graft.Quant.q6(frac).as("bad_frac"),
-        graft.Quant.q6(frac / (lit(1.0) - lit(slo))).as("burn"))
+      .select(Seq(col("uuid"), unix_micros(col("window.start")).as("w_start"),
+        col("n_events"), col("n_bad")) ++ TimeSeriesOps.burnCols(slo): _*)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One aligned window's exact micro-unit sum for a stream — the unit the
   * online change-point monitor consumes (the same (Σus6, n) pair the
@@ -15,7 +14,7 @@ private case class CpState(ring: List[(Long, Long, Long)], lastW: Long)
 
 /** Online mean-shift change-point monitor — the continuous counterpart
   * of TimeSeriesOps.changePoints: per stream, the trailing 2k+2 window
-  * summaries ride in mapGroupsWithState and every arriving window
+  * summaries ride a keyed scan's state and every arriving window
   * recomputes the boundary scores with EXACTLY the batch arithmetic
   * (exact µ-unit side sums → rounded-integer side means → integer
   * |shift| and apex comparisons), so the emitted flags are bit-identical
@@ -62,37 +61,32 @@ object ChangePointMonitor {
         val rm = rnd(r.map(_._2).sum.toDouble / r.map(_._3).sum)
         Some((lm, rm))
       }
-    windows.groupByKey(_.uuid)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uuid: String, rows: Iterator[WindowSum], state: GroupState[CpState]) =>
-          var st = state.getOption.getOrElse(CpState(Nil, Long.MinValue))
-          val out = Seq.newBuilder[(String, Long, Double, Double, Double)]
-          rows.toSeq.sortBy(w => (w.w_start, w.sum_us)).foreach { w =>
-            if (w.w_start > st.lastW) {
-              val ring = ((st.ring :+ ((w.w_start, w.sum_us, w.n))).takeRight(cap))
-              val rv = ring.toVector
-              // newest decidable boundary: needs k right windows AND its
-              // successor's score (one more right window) — position
-              // len−1−k relative to the ring
-              val p = rv.length - 1 - k
-              for {
-                (lm, rm) <- if (p >= 0) scoreAt(rv, p) else None
-                score = math.abs(rm - lm)
-                if score >= minShiftUs
-                prevOk = scoreAt(rv, p - 1).forall { case (a, b) =>
-                  score > math.abs(b - a) }
-                if prevOk
-                (na, nb) <- scoreAt(rv, p + 1)
-                if score >= math.abs(nb - na)
-              } out += ((uuid, rv(p)._1,
-                lm.toDouble / 1e6 + 0d, rm.toDouble / 1e6 + 0d,
-                (rm - lm).toDouble / 1e6 + 0d))
-              st = CpState(ring, w.w_start)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    keyedScan(windows, (w: WindowSum) => w.uuid, (w: WindowSum) => (w.w_start, w.sum_us)) {
+      (uuid: String, prev: Option[CpState], w: WindowSum) =>
+        val st = prev.getOrElse(CpState(Nil, Long.MinValue))
+        if (w.w_start <= st.lastW) (Some(st), None)
+        else {
+          val ring = (st.ring :+ ((w.w_start, w.sum_us, w.n))).takeRight(cap)
+          val rv = ring.toVector
+          // newest decidable boundary: needs k right windows AND its
+          // successor's score (one more right window) — position
+          // len−1−k relative to the ring
+          val p = rv.length - 1 - k
+          val flag = for {
+            (lm, rm) <- if (p >= 0) scoreAt(rv, p) else None
+            score = math.abs(rm - lm)
+            if score >= minShiftUs
+            prevOk = scoreAt(rv, p - 1).forall { case (a, b) =>
+              score > math.abs(b - a) }
+            if prevOk
+            (na, nb) <- scoreAt(rv, p + 1)
+            if score >= math.abs(nb - na)
+          } yield (uuid, rv(p)._1,
+            lm.toDouble / 1e6 + 0d, rm.toDouble / 1e6 + 0d,
+            (rm - lm).toDouble / 1e6 + 0d)
+          (Some(CpState(ring, w.w_start)), flag)
+        }
+    }
       .toDF("uuid", "w_start", "mean_before", "mean_after", "shift")
       .select(col("uuid"), col("w_start"), col("mean_before"),
         col("mean_after"), col("shift"))

@@ -1,13 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A counter sample's reset-aware increase since the previous sample. */
 case class Increase(uuid: String, time: Long, value: Double, inc: Double)
-
-/** Per-stream continuation state: the last counter sample seen. */
-case class CounterState(lastTime: Long, lastValue: Double)
 
 /** Streaming counter-increase extraction — the PromQL increase()/rate()
   * front half, continuous: per stream, each arriving sample's positive
@@ -22,35 +18,19 @@ case class CounterState(lastTime: Long, lastValue: Double)
   * order-independent micro-unit sums, which is exactly why the batch
   * operator (TimeSeriesOps.counterRate) sums them per window too.
   *
-  * Same flatMapGroupsWithState shape as Deadband: within a batch the
-  * group iterator is unordered → sort by (time, value); across batches
-  * correctness needs in-order delivery, which the ingest path's per-batch
-  * file atomicity provides.
+  * A keyed scan per uuid in (time, value) order, state = the last sample.
   */
 object CounterRate {
 
   def increases(points: Dataset[RawPoint]): Dataset[Increase] = {
-    implicit val ie = Encoders.product[Increase]
     implicit val ke = Encoders.STRING
-    points
-      .groupByKey(_.uuid)
-      .flatMapGroupsWithState[CounterState, Increase](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[RawPoint], state: GroupState[CounterState]) =>
-          val sorted = it.toIndexedSeq.sortBy(p => (p.time, p.value))
-          var st = state.getOption
-          val out = Vector.newBuilder[Increase]
-          sorted.foreach { p =>
-            st match {
-              case Some(s) =>
-                val inc = if (p.value >= s.lastValue) p.value - s.lastValue else p.value
-                out += Increase(p.uuid, p.time, p.value, inc)
-              case None => () // first sample: no predecessor, nothing emitted
-            }
-            st = Some(CounterState(p.time, p.value))
-          }
-          st.foreach(state.update)
-          out.result().iterator
-      }(Encoders.product[CounterState], Encoders.product[Increase])
+    implicit val se = Encoders.product[LastPoint]
+    implicit val ie = Encoders.product[Increase]
+    keyedScan(points, (p: RawPoint) => p.uuid, (p: RawPoint) => (p.time, p.value)) {
+      (_: String, st: Option[LastPoint], p: RawPoint) =>
+        // first sample: no predecessor, nothing emitted
+        val inc = st.map(s => if (p.value >= s.lastValue) p.value - s.lastValue else p.value)
+        (Some(LastPoint(p.time, p.value)), inc.map(Increase(p.uuid, p.time, p.value, _)))
+    }
   }
 }

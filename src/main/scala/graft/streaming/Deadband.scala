@@ -1,13 +1,15 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A raw ingest point (mirrors Store's point schema, pre-versioning). */
 case class RawPoint(uuid: String, time: Long, value: Double)
 
-/** Per-stream compression state: the last emitted point. */
-case class DeadbandState(lastTime: Long, lastValue: Double)
+/** Per-stream continuation state: the last point a scan kept (Deadband's
+  * last emitted point, CounterRate's last sample, AsofStream's latest
+  * reference). The field names and types are the state-store schema.
+  */
+case class LastPoint(lastTime: Long, lastValue: Double)
 
 /** Deadband compression on the ingest stream — the classic TSDB write-path
   * reducer: a point is emitted only when it moves at least `epsilon` away
@@ -16,40 +18,20 @@ case class DeadbandState(lastTime: Long, lastValue: Double)
   * pre-filters are the standard front-end for high-rate telemetry sources
   * feeding stores like it.
   *
-  * This is the `flatMapGroupsWithState` shape for custom streaming state:
-  * keyed by uuid, state = last emitted point, carried across micro-batches
-  * by the state store (checkpoint-durable, partitioned by key — each
-  * executor owns its key range's state, nothing global). Within a
-  * micro-batch the group iterator is unordered, so points are sorted by
-  * time before the sequential scan — correctness needs in-order delivery
-  * ACROSS batches, which a watermarked/ordered source (or per-batch file
-  * atomicity, as in Ingest) provides.
-  *
-  * The same function runs unchanged on a batch Dataset (one group call per
-  * key, empty initial state) — used by the spec to cross-check streaming
-  * output against the batch result.
+  * A keyed scan per uuid in (time, value) order, state = the last emitted
+  * point; the spec cross-checks streaming output against the batch result.
   */
 object Deadband {
 
   def compress(points: Dataset[RawPoint], epsilon: Double): Dataset[RawPoint] = {
-    implicit val pe = Encoders.product[RawPoint]
     implicit val ke = Encoders.STRING
-    points
-      .groupByKey(_.uuid)
-      .flatMapGroupsWithState[DeadbandState, RawPoint](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[RawPoint], state: GroupState[DeadbandState]) =>
-          val sorted = it.toIndexedSeq.sortBy(p => (p.time, p.value))
-          var st = state.getOption
-          val out = Vector.newBuilder[RawPoint]
-          sorted.foreach { p =>
-            if (st.forall(s => math.abs(p.value - s.lastValue) >= epsilon)) {
-              out += p
-              st = Some(DeadbandState(p.time, p.value))
-            }
-          }
-          st.foreach(state.update)
-          out.result().iterator
-      }(Encoders.product[DeadbandState], Encoders.product[RawPoint])
+    implicit val se = Encoders.product[LastPoint]
+    implicit val pe = Encoders.product[RawPoint]
+    keyedScan(points, (p: RawPoint) => p.uuid, (p: RawPoint) => (p.time, p.value)) {
+      (_: String, st: Option[LastPoint], p: RawPoint) =>
+        if (st.forall(s => math.abs(p.value - s.lastValue) >= epsilon))
+          (Some(LastPoint(p.time, p.value)), Some(p))
+        else (st, None)
+    }
   }
 }

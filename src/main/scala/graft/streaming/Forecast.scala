@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One aligned window's mean for a stream — the unit the online
   * forecaster consumes (produced upstream by windowed ingest aggregation
@@ -15,7 +14,7 @@ private case class HwState(l: Double, b: Double, ring: List[Double],
 
 /** Online Holt-Winters — the continuous counterpart of
   * TimeSeriesOps.holtWinters: per-stream (level, trend, seasonal-ring)
-  * state in mapGroupsWithState, updated with EXACTLY the batch
+  * state in a keyed scan, updated with EXACTLY the batch
   * operator's float recurrence (same Scala doubles the SQL fold
   * evaluates, same association order), so a stream fed the same window
   * means in order reproduces the batch output bit-for-bit — the spec
@@ -62,43 +61,36 @@ object Forecast {
     val ia = 1.0 - alpha
     val ib = 1.0 - beta
     val ig = 1.0 - gamma
-    means.groupByKey(_.uuid)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uuid: String, rows: Iterator[WindowMean], state: GroupState[HwState]) =>
-          var st = state.getOption.getOrElse(
-            HwState(0.0, 0.0, Nil, Long.MinValue, 0L, 0L))
-          val out = Seq.newBuilder[(String, Long, Double, Double, Double, Double, Double, Long)]
-          rows.toSeq.sortBy(m => (m.w_start, m.v_mean)).foreach { m =>
-            if (m.w_start <= st.lastW) {
-              st = st.copy(nDropped = st.nDropped + 1)
-              log.warn(s"dropped out-of-order window for stream $uuid: " +
-                s"w_start=${m.w_start} <= lastW=${st.lastW} " +
-                s"(${st.nDropped} dropped so far — upstream violates the " +
-                "in-order contract; the recurrence is order-sensitive)")
-            } else {
-              val (l, b, s) =
-                if (st.n == 0L) (m.v_mean, 0.0, 0.0)
-                else {
-                  val sPrev =
-                    if (st.ring.length >= period) st.ring(st.ring.length - period)
-                    else 0.0
-                  val lNew = alpha * (m.v_mean - sPrev) + ia * (st.l + st.b)
-                  val bNew = beta * (lNew - st.l) + ib * st.b
-                  val sNew = gamma * (m.v_mean - lNew) + ig * sPrev
-                  (lNew, bNew, sNew)
-                }
-              val ring = (st.ring :+ s).takeRight(period)
-              st = HwState(l, b, ring, m.w_start, st.n + 1, st.nDropped)
-              // one-step-ahead: s_{t+1−p} is the OLDEST retained seasonal
-              // once the ring is full (h = 1 of holtWintersForecast)
-              val sNext = if (ring.length >= period) ring.head else 0.0
-              out += ((uuid, m.w_start, m.v_mean, l, b, s, l + 1.0 * b + sNext,
-                st.nDropped))
+    keyedScan(means, (m: WindowMean) => m.uuid, (m: WindowMean) => (m.w_start, m.v_mean)) {
+      (uuid: String, prev: Option[HwState], m: WindowMean) =>
+        val st = prev.getOrElse(HwState(0.0, 0.0, Nil, Long.MinValue, 0L, 0L))
+        if (m.w_start <= st.lastW) {
+          val dropped = st.copy(nDropped = st.nDropped + 1)
+          log.warn(s"dropped out-of-order window for stream $uuid: " +
+            s"w_start=${m.w_start} <= lastW=${st.lastW} " +
+            s"(${dropped.nDropped} dropped so far — upstream violates the " +
+            "in-order contract; the recurrence is order-sensitive)")
+          (Some(dropped), None)
+        } else {
+          val (l, b, s) =
+            if (st.n == 0L) (m.v_mean, 0.0, 0.0)
+            else {
+              val sPrev =
+                if (st.ring.length >= period) st.ring(st.ring.length - period)
+                else 0.0
+              val lNew = alpha * (m.v_mean - sPrev) + ia * (st.l + st.b)
+              val bNew = beta * (lNew - st.l) + ib * st.b
+              val sNew = gamma * (m.v_mean - lNew) + ig * sPrev
+              (lNew, bNew, sNew)
             }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+          val ring = (st.ring :+ s).takeRight(period)
+          // one-step-ahead: s_{t+1−p} is the OLDEST retained seasonal
+          // once the ring is full (h = 1 of holtWintersForecast)
+          val sNext = if (ring.length >= period) ring.head else 0.0
+          (Some(HwState(l, b, ring, m.w_start, st.n + 1, st.nDropped)),
+            Some((uuid, m.w_start, m.v_mean, l, b, s, l + 1.0 * b + sNext, st.nDropped)))
+        }
+    }
       .toDF("uuid", "w_start", "v_mean", "level", "trend", "seasonal",
         "forecast_next", "n_dropped")
       .select(col("uuid"), col("w_start"), col("v_mean"),

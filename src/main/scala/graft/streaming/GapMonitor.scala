@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A detected telemetry silence for one stream. `resumedAt == -1` marks an
@@ -21,7 +20,7 @@ case class GapState(lastSeen: Long, alerted: Boolean)
   * dropping it fails Spark's unsupported-operation check).
   */
 private[streaming] case class TimedPoint(uuid: String, time: Long, value: Double,
-                                         ets: java.sql.Timestamp)
+                                         ts: java.sql.Timestamp)
 
 /** Continuous dead-sensor detection — the streaming front half of the
   * batch gaps()/outages() queries, with the one thing batch can't give:
@@ -35,9 +34,9 @@ private[streaming] case class TimedPoint(uuid: String, time: Long, value: Double
   * the resume time (emitted even if the open alert never fired, e.g.
   * when the watermark lagged the gap — the batch-equivalent record).
   *
-  * Same in-order contract as Deadband/CounterRate: within a batch the
-  * group iterator is sorted by (time, value); across batches the ingest
-  * path's per-batch atomicity delivers time-ordered micro-batches.
+  * keyedScan's in-order contract, on its own flatMapGroupsWithState for
+  * the timer: within a batch the group iterator is sorted by
+  * (time, value).
   */
 object GapMonitor {
 
@@ -49,11 +48,7 @@ object GapMonitor {
     require(gapUs > 0, s"gapUs must be positive, got $gapUs")
     implicit val ke = Encoders.STRING
     implicit val pe = Encoders.product[TimedPoint]
-    val withWm = points.toDF()
-      .withColumn("ets", timestamp_micros(col("time")))
-      .withWatermark("ets", watermarkDelay)
-      .as[TimedPoint]
-    withWm
+    eventTime(points, watermarkDelay).as[TimedPoint]
       .groupByKey(_.uuid)
       .flatMapGroupsWithState[GapState, GapEvent](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {

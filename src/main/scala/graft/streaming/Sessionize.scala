@@ -24,9 +24,7 @@ object Sessionize {
 
   def sessions(points: Dataset[RawPoint], gapUs: Long,
                watermarkDelay: String = "0 seconds"): DataFrame =
-    points.toDF()
-      .withColumn("ts", timestamp_micros(col("time")))
-      .withWatermark("ts", watermarkDelay)
+    eventTime(points, watermarkDelay)
       .groupBy(col("uuid"), session_window(col("ts"), s"$gapUs microseconds"))
       .agg(
         min(col("time")).as("s_start"),

@@ -2,12 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A document fanned out to one LSH band bucket, carrying its full
   * signature.
   */
-case class BandDoc(band: Int, bv: Int, doc_id: Long, sig: Seq[Long])
+case class BandDoc(band: Int, bv: Long, doc_id: Long, sig: Seq[Long])
 
 /** One first-seen (unmatched-on-arrival) document in a bucket's index. */
 case class IndexedSig(doc_id: Long, sig: Seq[Long])
@@ -23,10 +22,10 @@ case class BandHit(doc_id: Long, band: Int, match_id: Long, agree: Double)
 /** Streaming NEAR deduplication — the continuous form of
   * graft.text.Dedup.minhashPairs: as documents arrive, each is minhashed
   * once and fanned out to its LSH band buckets; every bucket keeps the
-  * signatures of the documents it has indexed (keyed state, hash-
-  * partitioned by (band, bucket) — each executor owns a key range, so the
-  * index scales out with the cluster and an arriving document only ever
-  * compares against its own buckets' residents, never the corpus).
+  * signatures of the documents it has indexed (a keyed scan per
+  * (band, bucket) — each executor owns a key range, so the index scales
+  * out with the cluster and an arriving document only ever compares
+  * against its own buckets' residents, never the corpus).
   *
   * Per-bucket rule (applied in doc_id order within a batch, so the output
   * is deterministic and batch == streaming): an arrival whose full-
@@ -40,23 +39,26 @@ case class BandHit(doc_id: Long, band: Int, match_id: Long, agree: Double)
   *
   * State is O(first-seen docs × bands), each entry one 64-long signature
   * — the standard persistent LSH index, checkpoint-durable. On a
-  * long-running stream that is unbounded, so two retention knobs cap it
-  * (both default off, preserving exact semantics): `maxPerBucket` stops
-  * indexing NEW residents once a bucket holds that many (arrivals beyond
-  * the cap still match against residents, but can no longer catch their
-  * OWN later near-dups — the recall trade), and `stateTtlMs` expires idle
-  * buckets wholesale via a processing-time timeout (dups arriving after
-  * the window re-index as first-seen). The same function runs unchanged
-  * on a batch Dataset (empty initial state, timeouts never fire); the
-  * spec pins streaming-over-chunks == one-shot batch == a sequential
-  * reference fold.
+  * long-running stream that is unbounded, so `maxPerBucket` (default off,
+  * exact semantics) caps it: a bucket holding that many residents stops
+  * indexing NEW ones (arrivals beyond the cap still match against
+  * residents, but can no longer catch their OWN later near-dups — the
+  * recall trade). The spec pins streaming-over-chunks == one-shot batch
+  * == a sequential reference fold.
+  *
+  * STATE-SCHEMA COMPATIBILITY: the bucket key is the batch band value,
+  * xxhash64 (a Long); it was a 32-bit hash before, so the state key
+  * schema changed and a query restarted against a checkpoint written by
+  * the 32-bit operator fails Spark's state-store schema check. Deploying
+  * this version over an existing near-dedup stream requires a NEW
+  * checkpoint directory (re-seed by replaying the corpus through it).
   */
 object StreamNearDedup {
 
   /** Fan a raw documents frame out to its LSH band buckets: one codegen'd
     * MinHashSig pass per document, then one row per band with the bucket
-    * key — the same banding arithmetic (hash over the band's signature
-    * slice) as the batch Dedup.minhashPairs.
+    * key — the batch band keys (Dedup.bandKeys), so the stream buckets
+    * exactly like Dedup.minhashBuckets.
     */
   def keyed(docs: DataFrame, n: Int = 3, numHashes: Int = 64,
             bandRows: Int = 2): Dataset[BandDoc] = {
@@ -65,12 +67,9 @@ object StreamNearDedup {
           graft.plans.TextHashes.normText(col("text")), n, numHashes)
           .as("sig"))
       .filter(col("sig").isNotNull)
-    val bands = (0 until numHashes / bandRows).map { b =>
-      val rows = (0 until bandRows).map(r => col("sig")(b * bandRows + r))
-      struct(lit(b).as("band"), hash(rows: _*).as("bv"))
-    }
     implicit val e = Encoders.product[BandDoc]
-    sigd.select(col("doc_id"), col("sig"), explode(array(bands: _*)).as("bk"))
+    sigd.select(col("doc_id"), col("sig"),
+        explode(graft.text.Dedup.bandKeys(numHashes, bandRows)).as("bk"))
       .select(col("bk.band").as("band"), col("bk.bv").as("bv"),
         col("doc_id"), col("sig"))
       .as[BandDoc]
@@ -87,46 +86,33 @@ object StreamNearDedup {
   def bandHits(bandDocs: Dataset[BandDoc],
                minAgree: Double = 0.5,
                maxPerBucket: Int = Int.MaxValue,
-               stateTtlMs: Option[Long] = None,
                cappedCounter: Option[org.apache.spark.util.LongAccumulator] = None)
       : Dataset[BandHit] = {
     require(maxPerBucket > 0, s"maxPerBucket must be positive, got $maxPerBucket")
-    implicit val ke = Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt)
-    val timeout = if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-                  else GroupStateTimeout.NoTimeout
-    bandDocs
-      .groupByKey(d => (d.band, d.bv))
-      .flatMapGroupsWithState[BucketIndex, BandHit](
-        OutputMode.Append, timeout) {
-        (key: (Int, Int), it: Iterator[BandDoc], state: GroupState[BucketIndex]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrivals = it.toIndexedSeq.sortBy(_.doc_id)
-            var idx = state.getOption.map(_.docs.toVector).getOrElse(Vector.empty)
-            val out = Vector.newBuilder[BandHit]
-            arrivals.foreach { d =>
-              var bestAgree = -1.0
-              var bestId = Long.MaxValue
-              idx.foreach { s =>
-                var m = 0
-                var i = 0
-                val k = d.sig.length
-                while (i < k) { if (d.sig(i) == s.sig(i)) m += 1; i += 1 }
-                val a = m.toDouble / k
-                if (a > bestAgree || (a == bestAgree && s.doc_id < bestId)) {
-                  bestAgree = a; bestId = s.doc_id
-                }
-              }
-              if (bestAgree >= minAgree) out += BandHit(d.doc_id, key._1, bestId, bestAgree)
-              else if (idx.size < maxPerBucket) idx :+= IndexedSig(d.doc_id, d.sig)
-              else cappedCounter.foreach(_.add(1L))
-            }
-            state.update(BucketIndex(idx))
-            stateTtlMs.foreach(state.setTimeoutDuration)
-            out.result().iterator
+    implicit val ke = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)
+    implicit val se = Encoders.product[BucketIndex]
+    implicit val he = Encoders.product[BandHit]
+    keyedScan(bandDocs, (d: BandDoc) => (d.band, d.bv), (d: BandDoc) => d.doc_id) {
+      (key: (Int, Long), st: Option[BucketIndex], d: BandDoc) =>
+        val idx = st.fold(Seq.empty[IndexedSig])(_.docs)
+        var bestAgree = -1.0
+        var bestId = Long.MaxValue
+        idx.foreach { s =>
+          var m = 0
+          var i = 0
+          val k = d.sig.length
+          while (i < k) { if (d.sig(i) == s.sig(i)) m += 1; i += 1 }
+          val a = m.toDouble / k
+          if (a > bestAgree || (a == bestAgree && s.doc_id < bestId)) {
+            bestAgree = a; bestId = s.doc_id
           }
-      }(Encoders.product[BucketIndex], Encoders.product[BandHit])
+        }
+        if (bestAgree >= minAgree) (st, Some(BandHit(d.doc_id, key._1, bestId, bestAgree)))
+        else {
+          val full = idx.size >= maxPerBucket
+          if (full) cappedCounter.foreach(_.add(1L))
+          (Some(BucketIndex(if (full) idx else idx :+ IndexedSig(d.doc_id, d.sig))), None)
+        }
+    }
   }
 }

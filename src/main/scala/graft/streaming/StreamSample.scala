@@ -1,7 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.text.TextFunctions
 
 /** An arriving document reference: stratum (e.g. source) + id. */
 case class DocArrival(stratum: String, docId: Long)
@@ -16,7 +19,8 @@ private[streaming] case class SampleState(keep: Seq[KeptDoc], n: Long)
 
 /** Continuous bounded uniform sampling — the streaming face of the
   * deterministic hash samples (sampleFixed / sampleBalanced): keep the
-  * `n` smallest (md5(doc_id), doc_id) keys per stratum in keyed state.
+  * `n` smallest (rank key, doc_id) keys per stratum in keyed state, the
+  * rank key being the batch samplers' own (TextFunctions.rankKey).
   * Because the batch samples are DEFINED as a hash-order prefix, the
   * streaming sample is not merely statistically equivalent to the batch
   * cut — it is BIT-IDENTICAL to sampleBalanced over whatever arrived,
@@ -32,26 +36,22 @@ private[streaming] case class SampleState(keep: Seq[KeptDoc], n: Long)
   */
 object StreamSample {
 
-  /** Lowercase-hex MD5 — bit-identical to Spark's `md5(cast(id AS
-    * STRING))` and DuckDB's `md5(CAST(id AS VARCHAR))`.
-    */
-  private[streaming] def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   def balancedSample(docs: Dataset[DocArrival], n: Int): Dataset[SampledDoc] = {
     require(n > 0, s"n must be positive, got $n")
     implicit val se = Encoders.product[SampledDoc]
     implicit val ke = Encoders.STRING
-    docs
-      .groupByKey(_.stratum)
+    // (stratum, rank key, docId): the batch samplers' hash order, one
+    // projection before the keyed state
+    implicit val ae = Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong)
+    docs.select(col("stratum"), TextFunctions.rankKey(col("docId")), col("docId"))
+      .as[(String, String, Long)]
+      .groupByKey(_._1)
       .flatMapGroupsWithState[SampleState, SampledDoc](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (g: String, it: Iterator[DocArrival], state: GroupState[SampleState]) =>
+        (g: String, it: Iterator[(String, String, Long)], state: GroupState[SampleState]) =>
           val prev = state.getOption.getOrElse(SampleState(Seq.empty, 0L))
           val arrivals = it.toIndexedSeq
-          val merged = (prev.keep ++ arrivals.map(d =>
-              KeptDoc(md5hex(d.docId.toString), d.docId)))
+          val merged = (prev.keep ++ arrivals.map { case (_, h, id) => KeptDoc(h, id) })
             .distinct
             .sortBy(k => (k.rankKey, k.docId))
             .take(n)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A document with its stateless shard-gate signals attached. */
 case class ShardDoc(doc_id: Long, fp: String, is_en: Boolean,
@@ -16,9 +15,9 @@ case class ShardVerdict(doc_id: Long, is_en: Boolean, quality_ok: Boolean,
   * verdict the moment it lands. The language / quality / PII signals are
   * the SAME fused one-projection pass as the batch shard
   * (TextFunctions.shardSignals — stateless, so it streams unchanged);
-  * only the exact-dedup gate needs state: one (fingerprint → first-seen
-  * doc_id) entry per distinct document, keyed and hash-partitioned like
-  * StreamDedup. keep = en ∧ quality ∧ ¬PII ∧ ¬dup.
+  * only the exact-dedup gate needs state: StreamDedup's first-seen rule,
+  * one (fingerprint → first-seen doc_id) entry per distinct document.
+  * keep = en ∧ quality ∧ ¬PII ∧ ¬dup.
   *
   * The per-stratum token-budget fill stays a BATCH finalization over the
   * accumulated keeps (a global running sum is order-defined and would
@@ -37,25 +36,10 @@ object StreamShard {
       .as[ShardDoc]
   }
 
-  def verdicts(docs: Dataset[ShardDoc]): Dataset[ShardVerdict] = {
-    implicit val ke = Encoders.STRING
-    docs
-      .groupByKey(_.fp)
-      .flatMapGroupsWithState[Long, ShardVerdict](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[ShardDoc], state: GroupState[Long]) =>
-          val arrivals = it.toIndexedSeq.sortBy(_.doc_id)
-          var keep = state.getOption
-          val out = Vector.newBuilder[ShardVerdict]
-          arrivals.foreach { d =>
-            val dup = keep.isDefined
-            if (!dup) keep = Some(d.doc_id)
-            out += ShardVerdict(d.doc_id, d.is_en, d.quality_ok, d.has_pii,
-              is_dup = dup,
-              keep = d.is_en && d.quality_ok && !d.has_pii && !dup)
-          }
-          keep.foreach(state.update)
-          out.result().iterator
-      }(Encoders.scalaLong, Encoders.product[ShardVerdict])
-  }
+  def verdicts(docs: Dataset[ShardDoc]): Dataset[ShardVerdict] =
+    StreamDedup.firstSeen(docs, (d: ShardDoc) => d.fp, (d: ShardDoc) => d.doc_id) {
+      (d, _, dup) =>
+        ShardVerdict(d.doc_id, d.is_en, d.quality_ok, d.has_pii, is_dup = dup,
+          keep = d.is_en && d.quality_ok && !d.has_pii && !dup)
+    }(Encoders.product[ShardVerdict])
 }

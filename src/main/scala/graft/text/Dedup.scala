@@ -27,7 +27,7 @@ object Dedup {
     */
   def exact(docs: DataFrame): DataFrame = {
     TextFunctions.withBase(docs).withColumn("fp", TextFunctions.exactFp())
-      .withColumn("keep_id", TextFunctions.keepId)
+      .withColumn("keep_id", TextFunctions.keepId())
       .select(col("doc_id"), col("fp"), col("keep_id"),
         TextFunctions.isDup(col("keep_id")).as("is_dup"))
   }
@@ -215,27 +215,32 @@ object Dedup {
         TextHashes.hashedShingles(col("norm"), n).as("hs"))
       .localCheckpoint()
 
-  /** (doc_id, band, bv) bucket rows. The band value is xxhash64 over the
-    * band's signature rows — 64-bit ON PURPOSE: bucket collisions
-    * between unrelated documents are pure birthday noise that the exact
-    * verify must then pay to reject, and with a 32-bit band value the
-    * random-candidate mass grows as n²·bands/2³² — ~3.7 B candidate
-    * pairs at 10⁹ documents — while at 64 bits the same corpus yields
-    * ~1. The verified output is IDENTICAL either way (equal band rows
-    * hash equal under any hash; the exact-Jaccard filter removes every
-    * false positive), so the width is free correctness-wise and removes
-    * the only quadratic term the band join has.
-    */
+  /** (doc_id, band, bv) bucket rows: one row per band key (bandKeys). */
   private[graft] def minhashBuckets(base: DataFrame, numHashes: Int,
-                                    bandRows: Int): DataFrame = {
-    val bands = (0 until numHashes / bandRows).map { b =>
+                                    bandRows: Int): DataFrame =
+    base.select(col("doc_id"), col("sig")).filter(col("sig").isNotNull)
+      .select(col("doc_id"), explode(bandKeys(numHashes, bandRows)).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bv").as("bv"))
+
+  /** The band keys of a `sig` column: one struct(band, bv) per band of
+    * `bandRows` signature rows, bv = xxhash64 over the band's rows — the
+    * banding StreamNearDedup's bucket index keys on too. 64-bit ON
+    * PURPOSE: bucket collisions between unrelated documents are pure
+    * birthday noise that the exact verify must then pay to reject, and
+    * with a 32-bit band value the random-candidate mass grows as
+    * n²·bands/2³² — ~3.7 B candidate pairs at 10⁹ documents — while at 64
+    * bits the same corpus yields ~1. The verified output is IDENTICAL
+    * either way (equal band rows hash equal under any hash; the
+    * exact-Jaccard filter removes every false positive), so the width is
+    * free correctness-wise and removes the only quadratic term the band
+    * join has. A persistent streaming index, whose buckets only grow,
+    * needs it more than a one-shot join.
+    */
+  private[graft] def bandKeys(numHashes: Int, bandRows: Int): Column =
+    array((0 until numHashes / bandRows).map { b =>
       val rows = (0 until bandRows).map(r => col("sig")(b * bandRows + r))
       struct(lit(b).as("band"), xxhash64(rows: _*).as("bv"))
-    }
-    base.select(col("doc_id"), col("sig")).filter(col("sig").isNotNull)
-      .select(col("doc_id"), explode(array(bands: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bv").as("bv"))
-  }
+    }: _*)
 
   /** Distinct candidate ID pairs from the band-bucket self-join —
     * key-only (16 B/row through the distinct shuffle; no payload

@@ -186,13 +186,17 @@ object TextFunctions {
   /** The exact-dup fingerprint: md5 of the normalized text. */
   private[graft] def exactFp(norm: Column = col("norm")): Column = md5(norm)
 
-  /** The exact-dup survivor: the first (minimum) doc_id of each `fp`
-    * group — a keyed window, dup-cluster-sized partitions.
+  /** The exact-dup survivor: the first (minimum) id of each `fp` group —
+    * a keyed window, dup-cluster-sized partitions.
     */
-  private[graft] def keepId: Column = min(col("doc_id")).over(Window.partitionBy(col("fp")))
+  private[graft] def keepId(id: Column = col("doc_id")): Column =
+    min(id).over(Window.partitionBy(col("fp")))
 
-  /** The exact-dup verdict: doc_id ≠ its group's keep id. */
-  private[graft] def isDup(keep: Column = keepId): Column = col("doc_id") =!= keep
+  /** The exact-dup verdict: id ≠ its group's keep id (by default the
+    * doc_id survivor; another id column passes its own keep).
+    */
+  private[graft] def isDup(keep: Column = keepId(), id: Column = col("doc_id")): Column =
+    id =!= keep
 
   /** Quality scoring: stopword ratio, punctuation ratio, digit ratio, word
     * stats, and the composite qualityScore.

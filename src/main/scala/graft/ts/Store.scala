@@ -42,8 +42,8 @@ import org.apache.spark.sql.types.StructType
   * inference (which would cost a Spark job on every read). A new stored
   * column therefore means changing the constant; an empty store reads
   * with the same schema.
-  */
-/** `maxBatchStreams` bounds the ONLY driver-resident state the store
+  *
+  * `maxBatchStreams` bounds the ONLY driver-resident state the store
   * keeps: the per-batch uuid→version map (nextVersions / versionsFor).
   * That map is metadata-scale — one entry per distinct stream IN THE
   * BATCH, never per point and never per stream in the store — which is
@@ -422,6 +422,26 @@ class Store(val spark: SparkSession, val base: String,
   private def rm(p: org.apache.hadoop.fs.Path): Unit =
     if (hfs.exists(p)) { hfs.delete(p, true); () }
 
+  /** Restore a crashed swap before doing anything else: if the live dir is
+    * missing, the previous compact died between its two renames — the data
+    * survives in `*_old` (pre-compact, preferred: tombstones unpruned ⇒
+    * consistent) or `*_compacted`. Without this, the leftover cleanup below
+    * would delete the only surviving copy.
+    */
+  private def recoverCrashedSwap(): Unit = {
+    def restore(dst: org.apache.hadoop.fs.Path,
+                candidates: Seq[org.apache.hadoop.fs.Path]): Unit =
+      if (!hfs.exists(dst)) candidates.find(hfs.exists).foreach { c =>
+        if (!hfs.rename(c, dst)) sys.error(s"compact: could not restore $c to $dst")
+      }
+    restore(hpath(pointsDir),
+      Seq(hpath(s"$base/points_old"), hpath(s"$base/points_compacted")))
+    // tombstones may legitimately be absent (all pruned); restoring a stale
+    // *_old set is still correct — those tombstones hide nothing after a
+    // completed points swap, they are merely unpruned
+    restore(hpath(tombsDir), Seq(hpath(s"$base/tombstones_old")))
+  }
+
   /** Physically drop rows invisible at the latest version and rewrite —
     * the GC/defragmentation pass (run per uuid partition, so at scale each
     * stream compacts independently).
@@ -443,26 +463,6 @@ class Store(val spark: SparkSession, val base: String,
     * surviving point ver (hide nothing, preserve version monotonicity) and
     * drops the rest.
     */
-  /** Restore a crashed swap before doing anything else: if the live dir is
-    * missing, the previous compact died between its two renames — the data
-    * survives in `*_old` (pre-compact, preferred: tombstones unpruned ⇒
-    * consistent) or `*_compacted`. Without this, the leftover cleanup below
-    * would delete the only surviving copy.
-    */
-  private def recoverCrashedSwap(): Unit = {
-    def restore(dst: org.apache.hadoop.fs.Path,
-                candidates: Seq[org.apache.hadoop.fs.Path]): Unit =
-      if (!hfs.exists(dst)) candidates.find(hfs.exists).foreach { c =>
-        if (!hfs.rename(c, dst)) sys.error(s"compact: could not restore $c to $dst")
-      }
-    restore(hpath(pointsDir),
-      Seq(hpath(s"$base/points_old"), hpath(s"$base/points_compacted")))
-    // tombstones may legitimately be absent (all pruned); restoring a stale
-    // *_old set is still correct — those tombstones hide nothing after a
-    // completed points swap, they are merely unpruned
-    restore(hpath(tombsDir), Seq(hpath(s"$base/tombstones_old")))
-  }
-
   def compact(): Unit = {
     recoverCrashedSwap()
     val live = pointsAt(None).cache()

@@ -1452,16 +1452,6 @@ object TimeSeriesOps {
         ps.zipWithIndex.map { case (p, i) => col("qs").getItem(i).as(label(p)) }: _*)
   }
 
-  /** Per-stream z-score anomalies: points whose value deviates from the
-    * stream's global mean by ≥ `zThresh` standard deviations. The
-    * per-stream moments come from ONE pass of exact integer micro-unit
-    * sums (DECIMAL(38,0) — unbounded groups, and the squared sums reach
-    * 10^21 at sf0.1 already); the metadata-scale stats table is broadcast
-    * back onto the raw scan, so the whole operator is scan + broadcast-join
-    * + filter: no window sort over raw points, survives any corpus size.
-    * The float pipeline (cast → mean → variance → sqrt → z) is replayed
-    * term-for-term by the oracle; sqrt is IEEE-correctly-rounded on both.
-    */
   /** Per-stream value moments as scoring parameters (mean_us, std_us in
     * exact-then-cast micro-units): one map-side-partial pass of integer
     * moment sums. This is the "trained profile" — anomalies() consumes it
@@ -1483,6 +1473,16 @@ object TimeSeriesOps {
   def zScore: Column =
     (graft.Quant.us6(col("value")).cast("double") - col("mean_us")) / col("std_us")
 
+  /** Per-stream z-score anomalies: points whose value deviates from the
+    * stream's global mean by ≥ `zThresh` standard deviations. The
+    * per-stream moments come from ONE pass of exact integer micro-unit
+    * sums (DECIMAL(38,0) — unbounded groups, and the squared sums reach
+    * 10^21 at sf0.1 already); the metadata-scale stats table is broadcast
+    * back onto the raw scan, so the whole operator is scan + broadcast-join
+    * + filter: no window sort over raw points, survives any corpus size.
+    * The float pipeline (cast → mean → variance → sqrt → z) is replayed
+    * term-for-term by the oracle; sqrt is IEEE-correctly-rounded on both.
+    */
   def anomalies(points: DataFrame, streamCols: Seq[String], zThresh: Double): DataFrame = {
     require(zThresh > 0, s"zThresh must be positive, got $zThresh")
     val key = streamKey(streamCols)
@@ -2439,11 +2439,18 @@ object TimeSeriesOps {
       .agg(count(lit(1)).as("n_events"),
         sum(when(badPred, 1L).otherwise(0L)).as("n_bad"))
       .select(key ++ Seq(col("width_us"), col("w_start"),
-        col("n_events"), col("n_bad"),
-        graft.Quant.q6(col("n_bad").cast("double") / col("n_events").cast("double"))
-          .as("bad_frac"),
-        graft.Quant.q6(col("n_bad").cast("double") / col("n_events").cast("double") /
-          (lit(1.0) - lit(slo))).as("burn")): _*)
+        col("n_events"), col("n_bad")) ++ burnCols(slo): _*)
+  }
+
+  /** bad_frac = n_bad / n_events and burn = bad_frac / (1 − slo) over
+    * exact long counts: two float divisions in this order, q6-rounded —
+    * burnRate and the streaming BurnRateMonitor both emit them, and the
+    * oracle replays them bit-for-bit.
+    */
+  private[graft] def burnCols(slo: Double): Seq[Column] = {
+    val frac = col("n_bad").cast("double") / col("n_events").cast("double")
+    Seq(graft.Quant.q6(frac).as("bad_frac"),
+      graft.Quant.q6(frac / (lit(1.0) - lit(slo))).as("burn"))
   }
 
   /** Interval-containment join (the temporal join): annotate each point

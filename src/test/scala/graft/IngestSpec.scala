@@ -245,7 +245,7 @@ class IngestSpec extends SparkSuite {
     val fanned = StreamNearDedup.keyed(docs).collect()
       .groupBy(_.doc_id).toSeq
       .sortBy { case (id, _) => (id % 2, id) } // evens (batch 1) then odds
-    val index = scala.collection.mutable.Map.empty[(Int, Int), Vector[BandDoc]]
+    val index = scala.collection.mutable.Map.empty[(Int, Long), Vector[BandDoc]]
     val ref = scala.collection.mutable.Set.empty[(Long, Int, Long, Double)]
     fanned.foreach { case (id, bds) =>
       bds.sortBy(_.band).foreach { d =>
@@ -296,6 +296,23 @@ class IngestSpec extends SparkSuite {
       maxPerBucket = 1, cappedCounter = Some(cappedAcc)).collect()
     assert(craftedHits.isEmpty, craftedHits.mkString(","))
     assert(cappedAcc.value == 1L, s"capped=${cappedAcc.value}")
+  }
+
+  test("streaming near-dedup bands exactly like the batch minhash buckets") {
+    import graft.streaming.StreamNearDedup
+    import graft.text.Dedup
+    // the stream's bucket index keys on the batch band value (64-bit
+    // xxhash64 over each band's rows), so a document lands in the same
+    // (band, bv) bucket in both — row for row, not just in count
+    val sf001 = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString
+    val docs = Tables.load(spark, sf001, "documents").select("doc_id", "text")
+    val streamed = StreamNearDedup.keyed(docs)
+      .collect().map(d => (d.doc_id, d.band, d.bv)).toSet
+    val batch = Dedup.minhashBuckets(Dedup.minhashBase(docs, 3, 64), 64, 2)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    assert(streamed.nonEmpty)
+    assert(streamed == batch,
+      s"stream-only ${(streamed -- batch).take(3)}, batch-only ${(batch -- streamed).take(3)}")
   }
 
   test("streaming ANN probe over chunked arrivals equals the fused batch IVF") {
@@ -503,6 +520,29 @@ class IngestSpec extends SparkSuite {
       .collect()
     assert(batch.length == 1 && batch(0).getDouble(2) == 9.0 && batch(0).getLong(4) == 3L)
     assert(got.map(_._2).sum == batch(0).getDouble(2), "streaming incs sum to batch window")
+    // the same stream stopped and restarted between the batches: the
+    // carried sample comes back from the checkpointed state store (parquet
+    // sink — the memory sink cannot recover a checkpoint)
+    val src2 = tmpDir("cr_src2")
+    val ckpt2 = tmpDir("cr_ckpt2")
+    val out2 = tmpDir("cr_out2")
+    Seq(RawPoint("s", 1, 10.0), RawPoint("s", 3, 14.0), RawPoint("s", 5, 2.0))
+      .toDF().write.mode("append").parquet(src2)
+    def run(): org.apache.spark.sql.streaming.StreamingQuery =
+      CounterRate.increases(spark.readStream.schema("uuid STRING, time LONG, value DOUBLE")
+          .parquet(src2).as[RawPoint]).writeStream
+        .outputMode("append").format("parquet").option("path", out2)
+        .option("checkpointLocation", ckpt2).start()
+    val q1 = run()
+    q1.processAllAvailable()
+    q1.stop()
+    Seq(RawPoint("s", 7, 5.0)).toDF().coalesce(1).write.mode("append").parquet(src2)
+    val q2 = run()
+    q2.processAllAvailable()
+    q2.stop()
+    val restarted = spark.read.parquet(out2).select("time", "inc")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
+    assert(restarted == got, s"restarted $restarted")
   }
 
   test("streaming as-of join matches the batch operator across batches") {
