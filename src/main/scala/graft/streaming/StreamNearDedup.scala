@@ -94,7 +94,8 @@ object StreamNearDedup {
     implicit val he = Encoders.product[BandHit]
     keyedScan(bandDocs, (d: BandDoc) => (d.band, d.bv), (d: BandDoc) => d.doc_id) {
       (key: (Int, Long), st: Option[BucketIndex], d: BandDoc) =>
-        val idx = st.fold(Seq.empty[IndexedSig])(_.docs)
+        // a Vector from the batch's first step on, so each append is cheap
+        val idx = st.fold(Vector.empty[IndexedSig])(_.docs.toVector)
         var bestAgree = -1.0
         var bestId = Long.MaxValue
         idx.foreach { s =>
