@@ -190,26 +190,26 @@ class GraftDB(val spark: SparkSession, val base: String) {
 
     /** AlignedWindows served from a rollup hierarchy built over this
       * store at version `rollupBuiltAt`, with write consistency in BOTH
-      * directions: every range touched after the build — tombstones AND
-      * inserted points (Store.changes covers both) — invalidates the
-      * windows it overlaps, which are recomputed from the visible view.
-      * Without the insert side, a rollup older than the latest insert
-      * would serve stale windows next to fresh dirty ones — a mixed-
-      * version answer. Changed ranges are metadata-scale (coalesced at
-      * the window resolution), so Rollup.alignedWindows collects them
-      * once on the driver and keeps only those overlapping the query;
-      * stat reads stay O(rollup rows) everywhere untouched. Rollups
-      * maintained incrementally by Ingest need only the tombstone side —
-      * pass `store.tombstones` through Rollup.tombstoneRanges directly.
+      * directions: the time hull of every write claimed after the build —
+      * deletes AND inserts, from the store's claim log (Store.hullsSince,
+      * read without a Spark job), a claimed write that never committed
+      * included — marks the rollup stale where it overlaps. Without the
+      * insert side, a rollup older than the latest insert would serve
+      * stale windows next to fresh ones — a mixed-version answer. When no
+      * hull overlaps [start, end) the level serves the read; otherwise the
+      * read is served raw: recomputing even one dirty window scans every
+      * raw point of the range (Rollup.alignedWindows' dirty branch), so
+      * for one stream the raw read alone costs less than the level read
+      * plus that scan. Rollups maintained incrementally by Ingest need
+      * only the tombstone side — pass `store.tombstones` through
+      * Rollup.tombstoneRanges to Rollup.alignedWindows directly.
       */
     def alignedWindows(rollup: graft.ts.Rollup, start: Long, end: Long,
-                       pointWidth: Int, rollupBuiltAt: Long): DataFrame = {
-      val inv = store.changes(uuid, rollupBuiltAt, Long.MaxValue, pointWidth)
-        .select(lit(uuid).as("uuid"), col("c_start").as("r_start"),
-          col("c_end").as("r_end"))
-      rollup.alignedWindows(points(), K, start, end, pointWidth, invalid = Some(inv))
+                       pointWidth: Int, rollupBuiltAt: Long): DataFrame =
+      if (store.hullsSince(uuid, rollupBuiltAt).exists { case (lo, hi) => lo < end && hi > start })
+        alignedWindows(start, end, pointWidth)
+      else rollup.alignedWindows(points(), K, start, end, pointWidth)
         .filter(col("uuid") === uuid).drop("uuid")
-    }
 
     def windows(start: Long, end: Long, width: Long,
                 version: Option[Long] = None): DataFrame =

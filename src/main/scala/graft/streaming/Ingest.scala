@@ -40,23 +40,26 @@ object Ingest {
     *   4. create the commit marker, drop the intent.
     * On replay: marker present → done, skip. Intent present without
     * marker → the job either committed fully or not at all, so comparing
-    * current stream versions (one Store.versionsFor over the intent's
-    * uuids) against the intended ones tells which; a landed batch skips
+    * the versions the DATA holds (one Store.landedVersions scan over the
+    * intent's uuids — a version claimed in the store's log is not yet a
+    * landing) against the intended ones tells which; a landed batch skips
     * the re-insert (closing the crash window between job commit and
     * marker creation that a marker-only protocol leaves open) but still
-    * re-runs the idempotent rollup append + marker.
+    * re-runs the idempotent rollup append + marker. A batch that did not
+    * land is planned afresh: a claim its crashed attempt left in the log
+    * stays a version gap.
     * The rollup writeId embeds the checkpoint id, so multiple ingest
     * streams maintaining one ROLLUP can never clobber each other's
     * deltas (batchIds restart at 0 per checkpoint).
     *
-    * Concurrency contract: a Store accepts exactly ONE ingest stream.
-    * Both Store.nextVersions (read-then-assign, no CAS) and the landed
-    * check above (compares current versions against this stream's intent)
-    * assume no other writer bumps versions in between — a second stream
-    * writing the same Store could race duplicate versions or make a
-    * replay wrongly conclude its batch landed. Fan-in belongs upstream
-    * (N sources → one stream via unioned/globbed file sources), or in
-    * N stores sharing one Rollup — never two streams on one Store.
+    * Concurrency contract: Store.insertBatchAt claims every (uuid,
+    * version) of the batch before its job, so a second stream writing the
+    * same Store can no longer duplicate versions: the stream that loses a
+    * claim fails, drops its intent (nothing of the batch landed) and, once
+    * restarted, plans the batch again at fresh versions. Two streams
+    * racing on one stream's versions therefore fail each other's batches;
+    * fan-in still belongs upstream (N sources → one stream via unioned/
+    * globbed file sources), or in N stores sharing one Rollup.
     *
     * Value domain: a row whose value lies outside graft.Quant's domain
     * (NaN, ±Inf, |value| > Quant.MaxAbs) fails its batch's insert, and so
@@ -95,12 +98,13 @@ object Ingest {
                 line.substring(i + 1).trim.toLongOption.map((line.substring(0, i), _))
               }
             intents.nonEmpty && {
-              val current = store.versionsFor(intents.map(_._1))
+              val current = store.landedVersions(intents.map(_._1))
               intents.forall { case (u, v) => current.getOrElse(u, 0L) >= v }
             }
           }
           if (!landed) {
-            val vers = store.nextVersions(batch)
+            val next = store.nextWrites(batch)
+            val vers = next.map(w => w.uuid -> w.ver)
             fs.mkdirs(commitDir)
             // write-then-rename so a crash can never leave a half-written
             // intent at the final path (replay parses it, see above)
@@ -110,7 +114,11 @@ object Ingest {
             finally out.close()
             if (fs.exists(intent)) fs.delete(intent, false)
             if (!fs.rename(tmp, intent)) sys.error(s"ingest: could not publish intent $intent")
-            store.insertBatchAt(batch, vers)
+            // a failed insert landed nothing and released its claims, so
+            // its intent goes too: the replay must not read another
+            // writer's version as this batch's landing
+            try store.insertBatchAt(batch, vers, Store.hulls(next))
+            catch { case e: Throwable => fs.delete(intent, false); throw e }
           }
           rollup.foreach(_.appendBatch(
             batch.select(col("uuid"), col("time").as("t_us"), col("value")),

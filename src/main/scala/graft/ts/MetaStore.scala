@@ -13,6 +13,18 @@ import org.apache.spark.sql.types.StructType
   * uuid is its max-annotationVersion row. At 100 TB the descriptor table is
   * ~10^6 rows against 10^13 points — always the broadcast side of any join
   * with the fact table, and compactable by rewriting latest-revision rows.
+  *
+  * The compare-and-swap: `create`, `setAnnotations` and `delete` each claim
+  * their annotationVersion in a claim log, `base/_meta_log/<uuid>/<rev>`
+  * (graft.ts.ClaimLog), by put-if-absent before they append the revision
+  * row, and the record says whether the stream lives after it. Of racing
+  * writers at one revision exactly one wins; the others see a CAS error
+  * (setAnnotations) or re-check the stream's new state (create, delete).
+  * So create and delete read no descriptor at all. A writer whose append
+  * fails releases its claim; one that dies between claim and append leaves
+  * a revision with no row, and the next revision builds on the newest row
+  * below it. A base written before the log is seeded once from its
+  * latest revision per uuid.
   */
 class MetaStore(val spark: SparkSession, val base: String) {
   import spark.implicits._
@@ -23,6 +35,36 @@ class MetaStore(val spark: SparkSession, val base: String) {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  private val claims = new ClaimLog(s"$base/_meta_log", spark.sparkContext.hadoopConfiguration)
+
+  /** The revision log, seeded once from the latest revision per uuid of a
+    * base written before it.
+    */
+  private def log: ClaimLog = claims.open(hasData,
+    all.select($"uuid", $"collection", $"annotationVersion").as[(String, String, Long)]
+      .collect().groupBy(_._1).values.map(_.maxBy(r => (r._3, r._2)))
+      .map { case (u, coll, rev) => (u, rev, if (coll.isEmpty) MetaStore.Dead else MetaStore.Live) })
+
+  /** The stream's latest claimed revision (0 if none) and whether it lives. */
+  private def head(uuid: String): (Long, Boolean) =
+    log.records(uuid).lastOption.fold((0L, false)) { case (v, b) => (v, b != MetaStore.Dead) }
+
+  /** Claims the stream's next revision for `body` once `check` accepts the
+    * current liveness; a claim lost to a racing writer re-reads and
+    * re-checks.
+    */
+  private def claimNext(uuid: String, body: String)(check: Boolean => Unit): Long =
+    Iterator.continually(head(uuid)).map { case (rev, live) => check(live); rev + 1 }
+      .find(log.claim(uuid, _, body)).get
+
+  /** Appends one revision row under its claim: a failed append releases it. */
+  private def append(uuid: String, rev: Long, collection: String, tags: Map[String, String],
+                     annotations: Map[String, String]): Unit =
+    try ClaimLog.appending(dir)(Seq((uuid, collection, tags, annotations, rev))
+      .toDF("uuid", "collection", "tags", "annotations", "annotationVersion")
+      .write.mode(SaveMode.Append).parquet(dir))
+    catch { case e: Throwable => log.release(uuid, rev); throw e }
 
   /** Every descriptor revision, read with the declared MetaStore.Schema
     * (the columns every write below appends) instead of footer inference.
@@ -45,73 +87,51 @@ class MetaStore(val spark: SparkSession, val base: String) {
       .drop("rn")
   }
 
-  /** One collect answering both liveness and the next revision:
-    * (liveCollection if the max-revision row is not a tombstone, maxRev).
-    */
-  private def state(uuid: String): (Option[String], Long) = {
-    val rows = all.filter($"uuid" === uuid)
-      .select($"collection", $"annotationVersion")
-      .as[(String, Long)].collect()
-    if (rows.isEmpty) (None, 0L)
-    else {
-      val (coll, rev) = rows.maxBy(r => (r._2, r._1))
-      (Some(coll).filter(_.nonEmpty), rev)
-    }
-  }
-
-  private def descriptor(uuid: String): Option[(String, Long)] = {
-    val (live, rev) = state(uuid)
-    live.map((_, rev))
-  }
-
   /** Create(uuid, collection, tags, annotations) — error if it exists.
     * Create-after-delete is allowed (the reference permits re-creating an
     * obliterated uuid): the new revision continues above the tombstone.
     */
   def create(uuid: String, collection: String, tags: Map[String, String],
              annotations: Map[String, String] = Map.empty): Unit = {
-    val (live, maxRev) = state(uuid)
-    require(live.isEmpty, s"stream $uuid already exists")
     require(collection.nonEmpty, "collection must be non-empty")
-    Seq((uuid, collection, tags, annotations, maxRev + 1))
-      .toDF("uuid", "collection", "tags", "annotations", "annotationVersion")
-      .write.mode(SaveMode.Append).parquet(dir)
+    val rev = claimNext(uuid, MetaStore.Live)(live => require(!live, s"stream $uuid already exists"))
+    append(uuid, rev, collection, tags, annotations)
   }
 
   /** SetStreamAnnotations with CAS on expectedAnnotationVersion; `changes`
     * values of None delete the key (KeyOptValue with empty OptValue).
-    * Returns the new annotationVersion.
+    * Returns the new annotationVersion. The new revision builds on the
+    * newest revision row at or below the expected one.
     */
   def setAnnotations(uuid: String, expectedVersion: Long,
                      changes: Map[String, Option[String]]): Long = {
-    val cur = descriptors.filter($"uuid" === uuid)
-      .as[(String, String, Map[String, String], Map[String, String], Long)]
-      .collect().headOption
-      .getOrElse(throw new IllegalArgumentException(s"no such stream $uuid"))
-    val (_, collection, tags, ann, ver) = cur
-    require(ver == expectedVersion,
-      s"annotation version mismatch: expected $expectedVersion, at $ver")
+    val (ver, live) = head(uuid)
+    require(live, s"no such stream $uuid")
+    def mismatch(at: Long) = s"annotation version mismatch: expected $expectedVersion, at $at"
+    require(ver == expectedVersion, mismatch(ver))
+    val rev = ver + 1
+    require(log.claim(uuid, rev, MetaStore.Live), mismatch(rev))
+    val (_, collection, tags, ann, _) =
+      try all.filter($"uuid" === uuid && $"annotationVersion" <= ver)
+        .as[(String, String, Map[String, String], Map[String, String], Long)]
+        .collect().maxByOption(_._5).filter(_._2.nonEmpty)
+        .getOrElse(throw new IllegalArgumentException(s"no such stream $uuid"))
+      catch { case e: Throwable => log.release(uuid, rev); throw e }
     val next = changes.foldLeft(ann) {
       case (m, (k, Some(v))) => m.updated(k, v)
       case (m, (k, None))    => m - k
     }
-    Seq((uuid, collection, tags, next, ver + 1))
-      .toDF("uuid", "collection", "tags", "annotations", "annotationVersion")
-      .write.mode(SaveMode.Append).parquet(dir)
-    ver + 1
+    append(uuid, rev, collection, tags, next)
+    rev
   }
 
   /** Obliterate the descriptor (empty-collection tombstone revision).
     * Errors when the stream does not exist (like the reference's
-    * Obliterate) — basing the tombstone on anything but the true max
-    * revision would fabricate a duplicate annotationVersion.
+    * Obliterate).
     */
   def delete(uuid: String): Unit = {
-    val (live, maxRev) = state(uuid)
-    require(live.isDefined, s"no such stream $uuid")
-    Seq((uuid, "", Map.empty[String, String], Map.empty[String, String], maxRev + 1))
-      .toDF("uuid", "collection", "tags", "annotations", "annotationVersion")
-      .write.mode(SaveMode.Append).parquet(dir)
+    val rev = claimNext(uuid, MetaStore.Dead)(live => require(live, s"no such stream $uuid"))
+    append(uuid, rev, "", Map.empty, Map.empty)
   }
 
   /** LookupStreams(collection prefix + exact tag matches). */
@@ -122,6 +142,10 @@ class MetaStore(val spark: SparkSession, val base: String) {
 }
 
 object MetaStore {
+  /** Revision-log record bodies: the stream lives, or was deleted, after it. */
+  private val Live = "live"
+  private val Dead = "dead"
+
   /** The stored descriptor-revision columns. */
   val Schema: StructType = StructType.fromDDL("uuid STRING, collection STRING, " +
     "tags MAP<STRING, STRING>, annotations MAP<STRING, STRING>, annotationVersion BIGINT")

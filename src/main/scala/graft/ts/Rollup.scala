@@ -25,6 +25,13 @@ import org.apache.spark.sql.functions._
   * (merged by bucket on read or by periodic compaction) — see
   * graft.streaming.Ingest for the streaming path.
   *
+  * Declared level schema: build() — and appendBatch() when it starts the
+  * hierarchy — records the levels' columns (keys…, the four statpoint
+  * columns and the `delta` partition) in `base/_level_schema`, and every
+  * level read uses it, so no read pays a Spark job for parquet footer
+  * inference. A hierarchy written before the record existed is read with
+  * inference until its next build.
+  *
   * A level serves BTrDB's three stat reads and nothing else:
   * alignedWindows (with its invalidation ranges), windows and
   * windowsApprox. Every other operator reads raw points. The quantile
@@ -76,18 +83,45 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
       val level =
         if (i == 0) bucketize(points, streamCols, pw)
         else merge(prev, streamCols, pw)
+      if (i == 0) recordSchema(level)
       val dir = hpath(levelDir(pw))
       if (hfs.exists(dir)) hfs.delete(dir, true)
       level.write.mode(SaveMode.Overwrite).parquet(s"${levelDir(pw)}/delta=base")
-      prev = spark.read.parquet(levelDir(pw))
+      prev = read(levelDir(pw))
     }
   }
 
-  def level(pw: Int): DataFrame = { recoverCrashedSwap(pw); spark.read.parquet(levelDir(pw)) }
+  /** The level at pointwidth `pw` (every delta of it), read with the
+    * recorded level schema, so the read starts no Spark job; a compaction
+    * swap that crashed is restored first.
+    */
+  def level(pw: Int): DataFrame = { recoverCrashedSwap(pw); read(levelDir(pw)) }
 
   private val hfs = new org.apache.hadoop.fs.Path(base)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def hpath(d: String) = new org.apache.hadoop.fs.Path(d)
+
+  private val schemaFile = hpath(s"$base/_level_schema")
+
+  /** Records the level schema of `level` (a level's columns before the
+    * `delta` partition) — see the class doc.
+    */
+  private def recordSchema(level: DataFrame): Unit = {
+    val out = hfs.create(schemaFile, true)
+    val schema = org.apache.spark.sql.types.StructType(level.schema.fields.map(_.copy(nullable = true)))
+    try out.write(schema.add("delta", "string").json.getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** A level dir read with the recorded schema (footer inference without one). */
+  private def read(dir: String): DataFrame =
+    if (!hfs.exists(schemaFile)) spark.read.parquet(dir)
+    else {
+      val in = hfs.open(schemaFile)
+      val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(dir)
+    }
 
   /** A compactDeltas swap that died between moving the live level aside
     * and publishing the compacted one leaves `_old`/`_compacted` but no
@@ -143,7 +177,7 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
         // same-pw merge: re-aggregates duplicate w_start buckets across
         // deltas (associative min/max + exact integer sums — identical to
         // what every read path does on the fly)
-        merge(spark.read.parquet(levelDir(pw)), streamCols, pw)
+        merge(read(levelDir(pw)), streamCols, pw)
           .write.parquet(s"${tmp.toString}/delta=base")
         if (!hfs.rename(dir, old)) sys.error(s"rollup: could not move $dir aside")
         if (!hfs.rename(tmp, dir) && !(hfs.exists(dir) && !hfs.exists(tmp)))
@@ -170,10 +204,12 @@ class Rollup(val spark: SparkSession, val base: String, val pointwidths: Seq[Int
   def appendBatch(points: DataFrame, streamCols: Seq[String], writeId: String): Unit = {
     val cached = scala.collection.mutable.Buffer.empty[DataFrame]
     var prev: DataFrame = null
+    val fresh = !hfs.exists(schemaFile) && pointwidths.forall(pw => !hfs.exists(hpath(levelDir(pw))))
     pointwidths.zipWithIndex.foreach { case (pw, i) =>
       val delta =
         if (i == 0) bucketize(points, streamCols, pw)
         else merge(prev, streamCols, pw)
+      if (i == 0 && fresh) recordSchema(delta)
       delta.cache()
       cached += delta
       delta.write.mode(SaveMode.Overwrite).parquet(s"${levelDir(pw)}/delta=$writeId")

@@ -24,10 +24,31 @@ import org.apache.spark.sql.types.StructType
   * one-day query touches 1/64th of one time bucket.
   *
   * Versioning is per-stream (BTrDB's versionMajor): each insert or delete
-  * batch bumps the stream's version by one. Visibility of point p at
+  * batch takes the stream's next version. Visibility of point p at
   * version V:  p.ver <= V  AND no tombstone t with  p.ver < t.ver <= V
   * covering p.time — i.e. a range delete hides only points inserted before
   * it, so insert-after-delete behaves exactly like the reference.
+  *
+  * The version rule: a stream's version is the highest claim in its claim
+  * log, `base/_log/<uuid>/<ver>` (graft.ts.ClaimLog). Every write claims
+  * its (stream, version) by put-if-absent BEFORE its data job starts, so
+  * two writers never share a version: a losing `insert`/`deleteRange`
+  * retries at the next one, and a batch write at pre-assigned versions
+  * fails. A write whose job fails releases its claim; a write that dies
+  * between its claim and its commit leaves the claim, which `version`
+  * counts and which shows no point — a version gap, never a duplicate.
+  * Each record carries the write's kind and its time hull [lo, hi) (an
+  * insert's from a `Dataset.observe` on its own write job, written after
+  * the commit; a hull not yet written or torn reads as the whole time
+  * range). So `version`, `versionsFor` and `nextVersions`' version half
+  * start no Spark job; `hullsSince` answers "which ranges changed after
+  * version V" for rollup invalidation without scanning points; and a
+  * single-stream read skips the tombstone anti-join when no record at or
+  * below its version is a delete. `changes`, `exportChanges` and every
+  * fleet-wide read still read the data. compact() folds each stream's
+  * records into one. A base written before the log existed is seeded once
+  * from a max(ver) scan of its points ∪ tombstones: one `floor` record per
+  * stream, whole-range and counted as a delete.
   *
   * Scale: appends are blind writes (no read-modify-write); reads prune on
   * the (ub, tb) partition columns and push uuid/time/ver filters to
@@ -60,7 +81,7 @@ class Store(val spark: SparkSession, val base: String,
   private val tombsDir  = s"$base/tombstones"
 
   import spark.implicits._
-  import Store.{TimeBucketShift, UuidBuckets}
+  import Store.{Record, TimeBucketShift, UuidBuckets, record}
 
   // All filesystem control operations (existence probes, the compact swap
   // renames) go through the Hadoop FileSystem API, like MetaStore — on
@@ -72,6 +93,20 @@ class Store(val spark: SparkSession, val base: String,
   private def hpath(dir: String) = new org.apache.hadoop.fs.Path(dir)
 
   private def hasData(dir: String): Boolean = hfs.exists(hpath(dir))
+
+  private val claims = new ClaimLog(s"$base/_log", spark.sparkContext.hadoopConfiguration)
+
+  /** The claim log (see the class doc), seeded once with a floor record
+    * per stream when the base holds data written before the log.
+    */
+  private def log: ClaimLog =
+    claims.open(Seq("points", "tombstones", "points_old", "points_compacted", "tombstones_old")
+        .exists(d => hasData(s"$base/$d")),
+      maxVersions(rawPoints, tombstones).map { case (u, v) => (u, v, "floor") })
+
+  /** A stream's records, oldest first. */
+  private def records(uuid: String): Seq[Record] =
+    log.records(uuid).map { case (v, b) => Record.parse(v, b) }
 
   /** Partition columns for a (uuid, time, value, ver) batch, clustered
     * for the write: without the repartition, a dynamic-partition write
@@ -130,19 +165,49 @@ class Store(val spark: SparkSession, val base: String,
     if (hasData(dir)) spark.read.schema(schema).parquet(dir)
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
-  /** Latest committed version per stream (max over inserts and deletes). */
-  def version(uuid: String): Long = versionsFor(Seq(uuid)).getOrElse(uuid, 0L)
+  /** The stream's version: its highest claim (0 for a stream never written). */
+  def version(uuid: String): Long = log.latest(uuid)
+
+  /** Claims the stream's next version for a write of `body`; a claim lost
+    * to a concurrent writer retries at the version after it.
+    */
+  private def claimNext(uuid: String, body: String): Long = {
+    val l = log
+    Iterator.iterate(l.latest(uuid) + 1)(_ + 1).find(l.claim(uuid, _, body)).get
+  }
+
+  /** Runs a write's data job under its claims: a failed job releases them. */
+  private def committing[T](held: => Seq[(String, Long)])(write: => T): T =
+    try write
+    catch { case e: Throwable => held.foreach { case (u, v) => log.release(u, v) }; throw e }
 
   /** Insert a batch of (time, value) rows; returns the new stream version.
-    * Mirrors InsertParams→InsertResponse(versionMajor) semantics.
+    * Mirrors InsertParams→InsertResponse(versionMajor) semantics. An empty
+    * batch still takes its version.
     */
   def insert(uuid: String, points: DataFrame): Long = {
-    val v = version(uuid) + 1
-    withLayout(points.select(lit(uuid).as("uuid"), col("time").cast("long").as("time"),
-        checkedValue, lit(v).as("ver")))
-      .write.mode(SaveMode.Append).partitionBy("ub", "tb").parquet(pointsDir)
+    val v = claimNext(uuid, "insert")
+    val hull = org.apache.spark.sql.Observation()
+    committing(Seq(uuid -> v))(ClaimLog.appending(pointsDir) {
+      withLayout(points.select(lit(uuid).as("uuid"), col("time").cast("long").as("time"),
+          checkedValue, lit(v).as("ver"))
+          .observe(hull, min($"time").as("lo"), max($"time").as("hi")))
+        .write.mode(SaveMode.Append).partitionBy("ub", "tb").parquet(pointsDir)
+    })
+    observedHull(hull).foreach { case (lo, hi) => log.rewrite(uuid, v, record("insert", lo, hi)) }
     v
   }
+
+  /** The [lo, hi) time hull an insert's write job observed ((0, 0) for an
+    * empty insert); None when the metrics did not arrive, which leaves the
+    * claim's whole-range hull in place.
+    */
+  private def observedHull(hull: org.apache.spark.sql.Observation): Option[(Long, Long)] =
+    try {
+      val r = scala.concurrent.Await.result(hull.future, scala.concurrent.duration.Duration(30, "s"))
+      if (r.isNullAt(0)) Some((0L, 0L))
+      else Some((r.getLong(0), Store.hullEnd(r.getLong(1))))
+    } catch { case _: java.util.concurrent.TimeoutException => None }
 
   /** Insert a multi-stream batch of (uuid, time, value) rows in ONE parquet
     * job: each distinct uuid in the batch gets its own version bump (same
@@ -152,22 +217,32 @@ class Store(val spark: SparkSession, val base: String,
     * The single job also gives all-or-nothing commit semantics (Spark's
     * file-commit protocol), making replays of a failed batch safe.
     */
-  def insertBatch(batch: DataFrame): Unit =
-    insertBatchAt(batch, nextVersions(batch))
+  def insertBatch(batch: DataFrame): Unit = {
+    val next = nextWrites(batch)
+    insertBatchAt(batch, next.map(w => w.uuid -> w.ver), Store.hulls(next))
+  }
 
   /** The per-uuid versions the next batch write will assign: the batch's
     * distinct uuids (driver-collected, metadata-scale, bounded by
-    * maxBatchStreams), each at its versionsFor version + 1. Exposed so an
+    * maxBatchStreams), each at its claim-log version + 1. Exposed so an
     * idempotent writer can persist the intent BEFORE the write and later
     * decide whether a crashed attempt committed (the write is one
     * all-or-nothing job: either every uuid reached its intended version
     * or none did).
     */
-  def nextVersions(batch: DataFrame): Seq[(String, Long)] = {
-    val uuids = bounded(batch.select("uuid").distinct()
-      .limit(maxBatchStreams + 1).as[String].collect().toSeq)
-    val current = versionsFor(uuids)
-    uuids.map(u => u -> (current.getOrElse(u, 0L) + 1))
+  def nextVersions(batch: DataFrame): Seq[(String, Long)] =
+    nextWrites(batch).map(w => w.uuid -> w.ver)
+
+  /** nextVersions with each stream's time hull in the batch, from the same
+    * collect (a per-uuid min/max where a distinct would do).
+    */
+  def nextWrites(batch: DataFrame): Seq[Store.Write] = {
+    val hulls = bounded(batch.groupBy("uuid")
+      .agg(min(col("time").cast("long")), max(col("time").cast("long")))
+      .limit(maxBatchStreams + 1).as[(String, Long, Long)].collect().toSeq)
+    val current = versionsFor(hulls.map(_._1))
+    hulls.map { case (u, lo, hi) =>
+      Store.Write(u, current.getOrElse(u, 0L) + 1, lo, Store.hullEnd(hi)) }
   }
 
   /** The maxBatchStreams guard: the limit(max+1) on the collect above
@@ -182,45 +257,70 @@ class Store(val spark: SparkSession, val base: String,
     rows
   }
 
-  /** Current committed version per uuid for a BOUNDED uuid set — the one
-    * version rule: a stream's version is max(ver) over its points ∪ its
-    * tombstones, one aggregate over the two (uuid, ver) projections. A
-    * uuid with neither is absent from the map (version 0). The point scan
-    * is restricted to the uuids' ub buckets (driver-computed, literal
-    * partition filter) and the (uuid, time)-sorted row groups min/max-
-    * prune inside them, so the cost follows the streams asked about, not
-    * the store; on an empty store both sides are empty local relations
-    * and no Spark job starts.
+  /** Current version per uuid for a BOUNDED uuid set, from the claim log
+    * (no Spark job). A uuid never written is absent from the map
+    * (version 0).
     */
-  def versionsFor(uuids: Seq[String]): Map[String, Long] = {
-    if (uuids.isEmpty) return Map.empty
+  def versionsFor(uuids: Seq[String]): Map[String, Long] =
     // the class contract bounds DISTINCT streams per batch — a duplicate-
     // heavy caller list must not trip the guard early
-    val distinctIds = bounded(uuids.distinct)
-    val ubs = distinctIds.map(ubOf).distinct
-    rawPoints.filter($"ub".isin(ubs: _*)).filter($"uuid".isin(distinctIds: _*))
-      .select($"uuid", $"ver")
-      .unionByName(tombstones.filter($"uuid".isin(distinctIds: _*)).select($"uuid", $"ver"))
-      .groupBy("uuid").agg(max($"ver").as("ver"))
-      .as[(String, Long)].collect().toMap
+    bounded(uuids.distinct).map(u => u -> version(u)).filter(_._2 > 0).toMap
+
+  /** The versions the DATA holds per uuid (bounded set): max(ver) over the
+    * streams' points ∪ tombstones, a scan restricted to their ub buckets.
+    * A claim alone is not a landing, so a replaying writer asks this, not
+    * versionsFor, whether its batch committed (graft.streaming.Ingest).
+    */
+  private[graft] def landedVersions(uuids: Seq[String]): Map[String, Long] = {
+    val ids = bounded(uuids.distinct)
+    if (ids.isEmpty) Map.empty
+    else maxVersions(
+      rawPoints.filter($"ub".isin(ids.map(ubOf).distinct: _*)).filter($"uuid".isin(ids: _*)),
+      tombstones.filter($"uuid".isin(ids: _*)))
   }
 
+  /** max(ver) per uuid over the (uuid, ver) of some points and tombstones. */
+  private def maxVersions(points: DataFrame, tombs: DataFrame): Map[String, Long] =
+    points.select($"uuid", $"ver").unionByName(tombs.select($"uuid", $"ver"))
+      .groupBy("uuid").agg(max($"ver").as("ver"))
+      .as[(String, Long)].collect().toMap
+
   /** Write a batch at pre-assigned per-uuid versions (from nextVersions)
-    * in ONE parquet job — all-or-nothing file commit.
+    * in ONE parquet job — all-or-nothing file commit. Every (uuid, ver) is
+    * claimed first, with its hull from `hulls` (from nextWrites; a stream
+    * missing there records the whole time range). A version already
+    * claimed by another writer fails the call before any data is written,
+    * releasing the claims it took.
     */
-  def insertBatchAt(batch: DataFrame, vers: Seq[(String, Long)]): Unit = {
+  def insertBatchAt(batch: DataFrame, vers: Seq[(String, Long)],
+                    hulls: Map[String, (Long, Long)] = Map.empty): Unit = {
+    val l = log
+    val held = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     val versDf = vers.toDF("uuid", "ver")
-    withLayout(batch.select($"uuid", col("time").cast("long").as("time"), checkedValue)
-      .join(broadcast(versDf), Seq("uuid"))
-      .select($"uuid", $"time", $"value", $"ver"))
-      .write.mode(SaveMode.Append).partitionBy("ub", "tb").parquet(pointsDir)
+    committing(held.toSeq) {
+      vers.foreach { case (u, v) =>
+        val body = hulls.get(u).fold("insert") { case (lo, hi) => record("insert", lo, hi) }
+        if (!l.claim(u, v, body))
+          throw new java.util.ConcurrentModificationException(
+            s"version $v of stream $u is already claimed by another writer")
+        held += u -> v
+      }
+      ClaimLog.appending(pointsDir) {
+        withLayout(batch.select($"uuid", col("time").cast("long").as("time"), checkedValue)
+          .join(broadcast(versDf), Seq("uuid"))
+          .select($"uuid", $"time", $"value", $"ver"))
+          .write.mode(SaveMode.Append).partitionBy("ub", "tb").parquet(pointsDir)
+      }
+    }
   }
 
   /** Range delete [start, end) — a tombstone, not a rewrite. */
   def deleteRange(uuid: String, start: Long, end: Long): Long = {
-    val v = version(uuid) + 1
-    Seq((uuid, start, end, v)).toDF("uuid", "t_start", "t_end", "ver")
-      .write.mode(SaveMode.Append).parquet(tombsDir)
+    val v = claimNext(uuid, record("delete", start, end))
+    committing(Seq(uuid -> v))(ClaimLog.appending(tombsDir) {
+      Seq((uuid, start, end, v)).toDF("uuid", "t_start", "t_end", "ver")
+        .write.mode(SaveMode.Append).parquet(tombsDir)
+    })
     v
   }
 
@@ -335,11 +435,20 @@ class Store(val spark: SparkSession, val base: String,
       .select($"uuid", $"time", $"value", $"ub", $"tb")
       .write.mode(SaveMode.Overwrite).partitionBy("ub", "tb").parquet(outDir)
 
+  /** Visible points at `asOf` for a read of one stream: pointsAt, less
+    * the tombstone anti-join (and its broadcast job) when no record of the
+    * stream at or below `asOf` is a delete — then no tombstone can hide
+    * one of its points.
+    */
+  private def visibleFor(uuid: String, asOf: Option[Long]): DataFrame =
+    if (records(uuid).exists(r => r.deleted && asOf.forall(r.ver <= _))) pointsAt(asOf)
+    else asOf.fold(rawPoints)(v => rawPoints.filter($"ver" <= v))
+
   /** One stream's visible points at `asOf`, with ub partition pruning —
     * the canonical per-stream read the query facade builds on.
     */
   def streamAt(uuid: String, asOf: Option[Long] = None): DataFrame =
-    pointsAt(asOf).filter($"ub" === ubOf(uuid) && $"uuid" === uuid)
+    visibleFor(uuid, asOf).filter($"ub" === ubOf(uuid) && $"uuid" === uuid)
 
   /** RawValues over the store at a version — start inclusive, end
     * exclusive. Derives both partition predicates (ub from the literal
@@ -348,7 +457,7 @@ class Store(val spark: SparkSession, val base: String,
     */
   def rawValues(uuid: String, start: Long, end: Long, asOf: Option[Long] = None): DataFrame = {
     if (end <= start) return pointsAt(asOf).filter(lit(false)).select($"time", $"value")
-    pointsAt(asOf)
+    visibleFor(uuid, asOf)
       .filter($"ub" === ubOf(uuid) &&
         $"tb" >= (start >> TimeBucketShift) && $"tb" <= ((end - 1) >> TimeBucketShift))
       .filter($"uuid" === uuid && $"time" >= start && $"time" < end)
@@ -381,6 +490,14 @@ class Store(val spark: SparkSession, val base: String,
     if (deleteFirst) dst.deleteRange(dstUuid, start, end)
     dst.insert(dstUuid, rawValues(srcUuid, start, end, pinned))
   }
+
+  /** The [lo, hi) time hulls of the stream's writes claimed above
+    * `fromVer`, read from the claim log: every range a reader of version
+    * `fromVer` has not seen. A claim whose hull is unknown (in flight,
+    * crashed or torn) yields the whole time range.
+    */
+  def hullsSince(uuid: String, fromVer: Long): Seq[(Long, Long)] =
+    records(uuid).filter(r => r.ver > fromVer && r.lo < r.hi).map(r => (r.lo, r.hi))
 
   /** Changed time ranges between two versions (FindChangedSince): inserted
     * points and deleted ranges with fromVer < ver <= toVer, aligned to the
@@ -462,6 +579,13 @@ class Store(val spark: SparkSession, val base: String,
     * pruning keeps exactly the tombstones with ver above the stream's max
     * surviving point ver (hide nothing, preserve version monotonicity) and
     * drops the rest.
+    *
+    * Last, each stream's claim records fold into one at its highest
+    * version, with the union of their hulls, counted as a delete when any
+    * of them was one — so a log listing stays bounded by the writes since
+    * the last compaction. Versions are unchanged, and a rollup built at
+    * any earlier version still sees every range changed since (a
+    * superset of it).
     */
   def compact(): Unit = {
     recoverCrashedSwap()
@@ -496,6 +620,18 @@ class Store(val spark: SparkSession, val base: String,
     live.unpersist(); keepTombs.unpersist()
     swapIn(pTmp, hpath(pointsDir), pOld)
     swapIn(tTmp, hpath(tombsDir), tOld) // tTmp absent ⇒ old dropped
+    val l = log
+    l.keys.foreach { u =>
+      val rs = records(u)
+      if (rs.size > 1) {
+        val hulls = rs.filter(r => r.lo < r.hi)
+        val body = record(if (rs.exists(_.deleted)) "delete" else "insert",
+          if (hulls.isEmpty) 0L else hulls.map(_.lo).min,
+          if (hulls.isEmpty) 0L else hulls.map(_.hi).max)
+        l.rewrite(u, rs.last.ver, body)
+        rs.init.foreach(r => l.release(u, r.ver))
+      }
+    }
   }
 }
 
@@ -518,6 +654,38 @@ object Store {
   /** The unflushed-write buffer columns; `uuid` is the partition column. */
   val BufferSchema: StructType = StructType.fromDDL(
     "time BIGINT, value DOUBLE, uuid STRING")
+
+  /** A planned batch write of one stream: its version and time hull [lo, hi). */
+  final case class Write(uuid: String, ver: Long, lo: Long, hi: Long)
+
+  /** The hulls of planned writes, by uuid, as insertBatchAt takes them. */
+  def hulls(writes: Seq[Write]): Map[String, (Long, Long)] =
+    writes.map(w => w.uuid -> (w.lo, w.hi)).toMap
+
+  /** The exclusive end of a hull whose last time is `t`. */
+  private[ts] def hullEnd(t: Long): Long = if (t == Long.MaxValue) t else t + 1
+
+  /** A claim-log record body: `<kind> <lo> <hi>`, kind insert or delete. */
+  private[ts] def record(kind: String, lo: Long, hi: Long): String = s"$kind $lo $hi"
+
+  /** A parsed claim-log record. `deleted`: the write may have written a
+    * tombstone. lo >= hi is an empty hull.
+    */
+  private[ts] final case class Record(ver: Long, deleted: Boolean, lo: Long, hi: Long)
+
+  private[ts] object Record {
+    /** An insert whose hull is not (yet) readable spans the whole time
+      * range; a `floor`, or a body whose kind is unreadable, also counts as
+      * a delete.
+      */
+    def parse(ver: Long, body: String): Record = body.trim.split(' ') match {
+      case Array(kind @ ("insert" | "delete"), lo, hi)
+          if lo.toLongOption.isDefined && hi.toLongOption.isDefined =>
+        Record(ver, kind == "delete", lo.toLong, hi.toLong)
+      case Array("insert", _*) => Record(ver, deleted = false, Long.MinValue, Long.MaxValue)
+      case _ => Record(ver, deleted = true, Long.MinValue, Long.MaxValue)
+    }
+  }
 
   def apply(spark: SparkSession, base: String): Store = new Store(spark, base)
 

@@ -57,6 +57,47 @@ class MetaStoreSpec extends SparkSuite {
     assert(revs.toSeq == Seq(1L, 2L, 3L), s"revisions were ${revs.toSeq}")
   }
 
+  /** Runs `n` copies of `body` at once; each result or its error. */
+  private def race[T](n: Int)(body: Int => T): Seq[Either[Throwable, T]] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val fs = (0 until n).map(i => pool.submit(new java.util.concurrent.Callable[T] {
+        def call(): T = { start.await(); body(i) }
+      }))
+      start.countDown()
+      fs.map(f => try Right(f.get()) catch {
+        case e: java.util.concurrent.ExecutionException => Left(e.getCause)
+      })
+    } finally pool.shutdown()
+  }
+
+  test("racing setAnnotations at one expected version: one wins, the rest get a CAS error") {
+    val ms = mk
+    ms.create("u1", "plant/a", Map("unit" -> "V"))
+    val n = 4
+    val got = race(n)(i => ms.setAnnotations("u1", 1L, Map("writer" -> Some(i.toString))))
+    assert(got.count(_ == Right(2L)) == 1, s"$got")
+    got.collect { case Left(e) => e }.foreach { e =>
+      assert(e.isInstanceOf[IllegalArgumentException] &&
+        e.getMessage.contains("annotation version mismatch"), e.toString)
+    }
+    assert(got.count(_.isLeft) == n - 1)
+    val winner = got.indexWhere(_ == Right(2L)).toString
+    val live = ms.descriptors.filter($"uuid" === "u1")
+      .as[(String, String, Map[String, String], Map[String, String], Long)].collect()
+    assert(live.length == 1 && live.head._5 == 2L && live.head._4 == Map("writer" -> winner))
+  }
+
+  test("racing creates of one stream: one wins") {
+    val ms = mk
+    val got = race(2)(i => ms.create("u1", s"plant/$i", Map.empty))
+    assert(got.count(_.isRight) == 1, s"$got")
+    got.collect { case Left(e) => e }.foreach(e =>
+      assert(e.getMessage.contains("already exists"), e.toString))
+    assert(ms.descriptors.filter($"uuid" === "u1").count() == 1)
+  }
+
   test("double create is rejected while the stream lives") {
     val ms = mk
     ms.create("u1", "c", Map.empty)

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import graft.ts.{MetaStore, Store, TimeSeriesOps}
+import graft.ts.{MetaStore, Rollup, Store, TimeSeriesOps}
 
 /** MVCC semantics of the versioned point store — mirrors the reference's
   * Insert/Delete/version behavior (quasar_test.go patterns: insert, query
@@ -53,6 +53,157 @@ class StoreSpec extends SparkSuite {
     assert(st.rawValues("s1", 0, 100, Some(v1)).count() == 2)
     assert(st.rawValues("s1", 0, 100, Some(v2)).count() == 3)
     assert(st.rawValues("s1", 0, 100).count() == 3)
+  }
+
+  test("an empty insert holds its version: 1, 2, 3 with version agreeing after each") {
+    val st = mkStore
+    val got = Seq(Seq((10L, 1.0)), Seq.empty[(Long, Double)], Seq((20L, 2.0))).map { rows =>
+      val v = st.insert("s", rows.toDF("time", "value"))
+      assert(st.version("s") == v, s"version ${st.version("s")} after insert returned $v")
+      v
+    }
+    assert(got == Seq(1L, 2L, 3L))
+    // the empty insert's hull is empty: it invalidates nothing
+    assert(st.hullsSince("s", 1L) == Seq((20L, 21L)))
+    assert(st.rawValues("s", 0L, 100L).count() == 2)
+  }
+
+  test("stream ids holding path characters keep claim logs of their own inside the store") {
+    val base = tmpDir("store_ids")
+    val st = Store(spark, base)
+    val ids = Seq("a", "a/b", "..", "a.b", "x y%")
+    ids.foreach(u => st.insert(u, Seq((1L, 1.0)).toDF("time", "value")))
+    st.insert("a/b", Seq((2L, 2.0)).toDF("time", "value"))
+    assert(st.versionsFor(ids) == Map("a" -> 1L, "a/b" -> 2L, ".." -> 1L, "a.b" -> 1L, "x y%" -> 1L))
+    assert(new java.io.File(base).list().forall(_.toLongOption.isEmpty), "a claim escaped the log")
+    st.compact()
+    assert(st.versionsFor(ids) == Map("a" -> 1L, "a/b" -> 2L, ".." -> 1L, "a.b" -> 1L, "x y%" -> 1L))
+    assert(st.hullsSince("a/b", 0L) == Seq((1L, 3L)))
+  }
+
+  test("racing inserts into one stream each take a distinct version") {
+    val st = mkStore
+    val n = 4
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val vers = try scala.concurrent.Await.result(scala.concurrent.Future.sequence(
+        (1 to n).map(i => scala.concurrent.Future(st.insert("s", Seq((i.toLong, i.toDouble))
+          .toDF("time", "value"))))), scala.concurrent.duration.Duration(5, "min"))
+      finally pool.shutdown()
+    assert(vers.sorted == (1L to n).toSeq && st.version("s") == n)
+    // no version is shared by two writes: each ver holds exactly one write's point
+    val perVer = st.rawPoints.groupBy($"ver").agg(count(lit(1)).as("n"), min($"time").as("t"))
+      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(perVer.map(_._1) == (1L to n).toSeq && perVer.forall(_._2 == 1), s"$perVer")
+    // a batch write at a version another writer holds fails before writing
+    val e = intercept[java.util.ConcurrentModificationException](
+      st.insertBatchAt(Seq(("s", 99L, 9.0), ("t", 1L, 1.0)).toDF("uuid", "time", "value"),
+        Seq("t" -> 1L, "s" -> 2L)))
+    assert(e.getMessage.contains("already claimed"), e.getMessage)
+    assert(st.version("t") == 0 && st.rawPoints.count() == n, "the lost batch left a trace")
+  }
+
+  test("a claim whose write never ran counts as a version, shows no point, invalidates the rollup") {
+    val base = tmpDir("store_crash")
+    val db = GraftDB(spark, base)
+    val h = db.stream("s")
+    val pts = (0L until 64L).map(t => (t, t.toDouble)).toDF("time", "value")
+    assert(h.insert(pts) == 1L)
+    // a rollup built at v1 whose levels are stale: every value doubled, so
+    // a window served from the level and not recomputed shows it
+    val ru = Rollup(spark, tmpDir("store_crash_rollup"), Seq(2, 4))
+    ru.build(h.points().withColumn("value", col("value") * 2), Seq("uuid"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("w_start").collect().toSeq
+    val raw = rows(h.alignedWindows(0L, 64L, 4))
+    assert(rows(h.alignedWindows(ru, 0L, 64L, 4, rollupBuiltAt = 1L)) != raw,
+      "the stale rollup must serve stale windows while nothing invalidates them")
+    // the writer of v2 died after its claim, before its data job
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$base/_log/s/2"))
+    assert(h.version == 2L && db.store.versionsFor(Seq("s")) == Map("s" -> 2L))
+    assert(h.rawValues(0L, 100L).count() == 64 && db.store.rawPoints.count() == 64)
+    assert(db.store.hullsSince("s", 1L) == Seq((Long.MinValue, Long.MaxValue)))
+    assert(rows(h.alignedWindows(ru, 0L, 64L, 4, rollupBuiltAt = 1L)) == raw)
+    assert(h.insert(Seq((70L, 7.0)).toDF("time", "value")) == 3L)
+  }
+
+  test("single-stream reads join tombstones only when a delete can hide a point") {
+    val st = mkStore
+    st.insert("a", (1L to 10L).map(t => (t, t.toDouble)).toDF("time", "value"))
+    st.insert("b", (1L to 10L).map(t => (t, t.toDouble)).toDF("time", "value"))
+    val vDel = st.deleteRange("b", 3L, 7L)
+    st.insert("b", Seq((5L, 50.0)).toDF("time", "value"))
+    def joins(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
+      .collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.size
+    assert(joins(st.rawValues("a", 0L, 100L)) == 0 && joins(st.streamAt("a")) == 0)
+    assert(joins(st.rawValues("b", 0L, 100L)) == 1 && joins(st.streamAt("b")) == 1)
+    // below the delete's version no tombstone can hide anything either
+    assert(joins(st.rawValues("b", 0L, 100L, Some(vDel - 1))) == 0)
+    assert(st.rawValues("a", 0L, 100L).count() == 10)
+    assert(st.rawValues("b", 0L, 100L).count() == 7)
+    assert(st.rawValues("b", 0L, 100L, Some(vDel - 1)).count() == 10)
+  }
+
+  test("compact folds each stream's claims into one: versions, invalidation and the tombstone skip hold") {
+    val base = tmpDir("store_fold")
+    val st = Store(spark, base)
+    st.insert("a", (1L to 10L).map(t => (t, t.toDouble)).toDF("time", "value"))  // a@1
+    st.insert("a", (20L to 30L).map(t => (t, t.toDouble)).toDF("time", "value")) // a@2
+    st.insert("b", (1L to 10L).map(t => (t, t.toDouble)).toDF("time", "value"))  // b@1
+    st.deleteRange("b", 3L, 7L)                                                  // b@2
+    st.insert("b", Seq((40L, 4.0)).toDF("time", "value"))                        // b@3
+    def logged(u: String) = new java.io.File(s"$base/_log/$u").list().count(_.toLongOption.isDefined)
+    assert(logged("a") == 2 && logged("b") == 3)
+    val before = Seq("a", "b").map(u => st.rawValues(u, 0L, 100L).collect().toSeq.sortBy(_.getLong(0)))
+    st.compact()
+    assert(logged("a") == 1 && logged("b") == 1)
+    assert(st.version("a") == 2 && st.version("b") == 3)
+    assert(Seq("a", "b").map(u => st.rawValues(u, 0L, 100L).collect().toSeq.sortBy(_.getLong(0))) == before)
+    // the folded hull is the union: a rollup built at any earlier version
+    // still sees every range changed since
+    assert(st.hullsSince("a", 0L) == Seq((1L, 31L)) && st.hullsSince("a", 1L) == Seq((1L, 31L)))
+    assert(st.hullsSince("b", 1L) == Seq((1L, 41L)) && st.hullsSince("b", 3L).isEmpty)
+    // the never-deleted stream still reads without the tombstone join
+    def joins(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
+      .collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.size
+    assert(joins(st.rawValues("a", 0L, 100L)) == 0)
+    // and numbering continues above the fold; a delete after it joins again
+    assert(st.insert("a", Seq((50L, 5.0)).toDF("time", "value")) == 3L)
+    assert(st.deleteRange("b", 0L, 2L) == 4L && st.rawValues("b", 0L, 100L).count() == 6)
+    assert(joins(st.rawValues("a", 0L, 100L)) == 0 && joins(st.rawValues("b", 0L, 100L)) == 1)
+  }
+
+  test("a base written before the claim log serves: versions seeded once, next insert follows") {
+    val base = tmpDir("store_legacy")
+    val db = GraftDB(spark, base)
+    db.create("a", "fleet/x")
+    val h = db.stream("a")
+    h.insert((0L until 64L).map(t => (t, t.toDouble)).toDF("time", "value")) // a@1
+    h.deleteRange(8L, 12L)                                                     // a@2
+    h.insert(Seq((100L, 1.0)).toDF("time", "value"))                          // a@3
+    db.store.insertBatch(Seq(("b", 1L, 1.0)).toDF("uuid", "time", "value"))    // b@1
+    val ru = Rollup(spark, s"$base/rollup", Seq(2, 4))
+    ru.build(h.points(), Seq("uuid"))
+    // the layout before the log: no claim logs, no recorded level schema
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+    }
+    Seq("_log", "_meta_log", "rollup/_level_schema").foreach(d => rm(new java.io.File(s"$base/$d")))
+    val old = GraftDB(spark, base)
+    val oh = old.stream("a")
+    assert(oh.version == 3L && old.store.versionsFor(Seq("a", "b", "c")) == Map("a" -> 3L, "b" -> 1L))
+    // seeded floors hide nothing they should not, and invalidate every range
+    assert(oh.rawValues(0L, 200L).count() == 61)
+    assert(old.store.hullsSince("b", 0L) == Seq((Long.MinValue, Long.MaxValue)))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("w_start").collect().toSeq
+    val ru2 = Rollup(spark, s"$base/rollup", Seq(2, 4))
+    assert(rows(oh.alignedWindows(ru2, 0L, 128L, 4, rollupBuiltAt = 3L)) ==
+      rows(oh.alignedWindows(0L, 128L, 4)))
+    assert(oh.insert(Seq((120L, 2.0)).toDF("time", "value")) == 4L)
+    assert(old.store.nextVersions(Seq(("b", 2L, 2.0)).toDF("uuid", "time", "value")) == Seq("b" -> 2L))
+    // and the descriptor revisions continue: create is refused, the CAS holds
+    intercept[IllegalArgumentException](old.create("a", "fleet/y"))
+    assert(oh.setAnnotations(1L, Map("k" -> Some("v"))) == 2L)
   }
 
   test("a value outside the us6 domain fails every write path and leaves no trace") {
@@ -305,9 +456,15 @@ class StoreSpec extends SparkSuite {
     st.deleteRange("a", 0L, 2L)
     val meta = MetaStore(spark, base)
     meta.create("a", "fleet/x", Map("unit" -> "V"))
+    val ru = Rollup(spark, tmpDir("store_plan_rollup"), Seq(2, 4))
+    ru.build(st.pointsAt(None).withColumnRenamed("time", "t_us"), Seq("uuid"))
+    val db = GraftDB(spark, base)
     val storeJobs = jobsDuring {
       st.rawValues("b", 0L, 10L).queryExecution.executedPlan
       st.pointsAt(None).queryExecution.executedPlan
+      assert(st.version("a") == 2L && st.versionsFor(Seq("a", "b")) == Map("a" -> 2L, "b" -> 1L))
+      db.stream("b").alignedWindows(ru, 0L, 64L, 4, rollupBuiltAt = 1L).queryExecution.executedPlan
+      db.stream("a").alignedWindows(ru, 0L, 64L, 4, rollupBuiltAt = 1L).queryExecution.executedPlan
     }
     assert(storeJobs == 0, s"planning store reads started $storeJobs jobs")
     val metaJobs =
