@@ -155,6 +155,10 @@ class GraftDB(val spark: SparkSession, val base: String) {
       canonical(store.streamAt(uuid, version))
 
     def insert(points: DataFrame): Long = store.insert(uuid, points)
+    /** The stream's committed version (Store.version): a read pinned at it,
+      * or a rollup built with it as `rollupBuiltAt`, stays valid while
+      * writers run.
+      */
     def version: Long = store.version(uuid)
     def flush(): Long = store.flush(uuid)
     def deleteRange(start: Long, end: Long): Long = store.deleteRange(uuid, start, end)
@@ -189,11 +193,13 @@ class GraftDB(val spark: SparkSession, val base: String) {
       TS.alignedWindows(points(version), K, start, end, pointWidth).drop("uuid")
 
     /** AlignedWindows served from a rollup hierarchy built over this
-      * store at version `rollupBuiltAt`, with write consistency in BOTH
-      * directions: the time hull of every write claimed after the build —
-      * deletes AND inserts, from the store's claim log (Store.hullsSince,
-      * read without a Spark job), a claimed write that never committed
-      * included — marks the rollup stale where it overlaps. Without the
+      * store at version `rollupBuiltAt` (a `version` read before the build:
+      * committed, so every write at or below it is in the build's input),
+      * with write consistency in BOTH directions: the time hull of every
+      * write claimed after it — deletes AND inserts, from the store's claim
+      * log (Store.hullsSince, read without a Spark job), a write in flight
+      * or one that died included — marks the rollup stale where it
+      * overlaps. Without the
       * insert side, a rollup older than the latest insert would serve
       * stale windows next to fresh ones — a mixed-version answer. When no
       * hull overlaps [start, end) the level serves the read; otherwise the

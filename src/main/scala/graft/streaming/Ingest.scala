@@ -32,7 +32,7 @@ object Ingest {
     * at-least-once — after a crash the checkpoint replays the last batch.
     * The protocol per batch:
     *   1. persist an INTENT file with the per-uuid versions this batch
-    *      will assign (Store.nextVersions),
+    *      will assign (Store.nextWrites),
     *   2. write the batch as ONE all-or-nothing parquet job at exactly
     *      those versions (Store.insertBatchAt),
     *   3. append the rollup deltas (Overwrite to a writeId path — replay
@@ -43,7 +43,8 @@ object Ingest {
     * the versions the DATA holds (one Store.landedVersions scan over the
     * intent's uuids — a version claimed in the store's log is not yet a
     * landing) against the intended ones tells which; a landed batch skips
-    * the re-insert (closing the crash window between job commit and
+    * the re-insert, marks its claims committed (Store.markLanded: the
+    * crash may have come before the marks) (closing the crash window between job commit and
     * marker creation that a marker-only protocol leaves open) but still
     * re-runs the idempotent rollup append + marker. A batch that did not
     * land is planned afresh: a claim its crashed attempt left in the log
@@ -99,7 +100,9 @@ object Ingest {
               }
             intents.nonEmpty && {
               val current = store.landedVersions(intents.map(_._1))
-              intents.forall { case (u, v) => current.getOrElse(u, 0L) >= v }
+              intents.forall { case (u, v) => current.getOrElse(u, 0L) >= v } && {
+                store.markLanded(intents); true
+              }
             }
           }
           if (!landed) {
@@ -117,7 +120,7 @@ object Ingest {
             // a failed insert landed nothing and released its claims, so
             // its intent goes too: the replay must not read another
             // writer's version as this batch's landing
-            try store.insertBatchAt(batch, vers, Store.hulls(next))
+            try store.insertBatchAt(batch, next)
             catch { case e: Throwable => fs.delete(intent, false); throw e }
           }
           rollup.foreach(_.appendBatch(

@@ -87,6 +87,12 @@ private[graft] final class ClaimLog(dir: String, conf: Configuration) {
   /** The highest version claimed for `key`; 0 when it has none. */
   def latest(key: String): Long = versions(key).lastOption.getOrElse(0L)
 
+  /** The highest version of `key` whose body `accept` takes; 0 when none
+    * does. Reads bodies from the top down, so usually one.
+    */
+  def latest(key: String, accept: String => Boolean): Long =
+    versions(key).reverseIterator.find(v => read(key, v).exists(accept)).getOrElse(0L)
+
   /** `key`'s records, ascending by version: (ver, body). A record removed
     * between the listing and its read (a release, a fold) is skipped.
     */
@@ -142,11 +148,13 @@ private[graft] final class ClaimLog(dir: String, conf: Configuration) {
 private[graft] object ClaimLog {
   private val appendLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
 
-  /** Runs an append job to `dir` while no other append to it from this JVM
-    * runs. Spark's file committer stages every append job to a dir under
-    * the same `dir/_temporary` and deletes it when a job commits, so two
-    * appends to one dir at once can fail each other; writers in separate
-    * processes keep to one data writer per dir.
+  /** Runs an append job to `dir`, or to dirs below it, while no other
+    * append under the same `dir` from this JVM runs. Spark's file
+    * committer stages every append job to a dir under the same
+    * `dir/_temporary` and deletes it when a job commits, so two appends to
+    * one dir at once can fail each other; writers in separate processes
+    * keep to one data writer per dir. An owner that claims, writes and
+    * marks a version inside one call also commits its claims in order.
     */
   def appending[T](dir: String)(write: => T): T =
     appendLocks.computeIfAbsent(dir, _ => new AnyRef).synchronized(write)

@@ -19,12 +19,15 @@ import org.apache.spark.sql.types.StructType
   * (graft.ts.ClaimLog), by put-if-absent before they append the revision
   * row, and the record says whether the stream lives after it. Of racing
   * writers at one revision exactly one wins; the others see a CAS error
-  * (setAnnotations) or re-check the stream's new state (create, delete).
-  * So create and delete read no descriptor at all. A writer whose append
-  * fails releases its claim; one that dies between claim and append leaves
-  * a revision with no row, and the next revision builds on the newest row
-  * below it. A base written before the log is seeded once from its
-  * latest revision per uuid.
+  * (setAnnotations) or re-check the stream's new state (create, delete);
+  * within one JVM the three run one at a time. So delete, and create of a
+  * stream whose latest claim says it is dead or absent, read no
+  * descriptor. A writer whose append fails releases its claim; one that
+  * dies between claim and append leaves a revision with no row, and the
+  * next revision builds on the newest row below it: create, when the
+  * latest claim says the stream lives, asks the rows whether it does.
+  * A base written before the log is seeded once from its latest revision
+  * per uuid.
   */
 class MetaStore(val spark: SparkSession, val base: String) {
   import spark.implicits._
@@ -61,10 +64,24 @@ class MetaStore(val spark: SparkSession, val base: String) {
   /** Appends one revision row under its claim: a failed append releases it. */
   private def append(uuid: String, rev: Long, collection: String, tags: Map[String, String],
                      annotations: Map[String, String]): Unit =
-    try ClaimLog.appending(dir)(Seq((uuid, collection, tags, annotations, rev))
+    try Seq((uuid, collection, tags, annotations, rev))
       .toDF("uuid", "collection", "tags", "annotations", "annotationVersion")
-      .write.mode(SaveMode.Append).parquet(dir))
+      .write.mode(SaveMode.Append).parquet(dir)
     catch { case e: Throwable => log.release(uuid, rev); throw e }
+
+  /** Runs one descriptor write — claim, row append — while no other runs
+    * in this JVM, so a writer sees the rows of every revision claimed
+    * before it, save one whose writer died.
+    */
+  private def serially[T](write: => T): T = ClaimLog.appending(dir)(write)
+
+  /** Whether the stream's newest descriptor row is a live one: asked when
+    * its latest claim says it lives, which a create that died before its
+    * append also leaves.
+    */
+  private def liveRow(uuid: String): Boolean =
+    all.filter($"uuid" === uuid).orderBy($"annotationVersion".desc, $"collection".desc)
+      .select($"collection").as[String].take(1).exists(_.nonEmpty)
 
   /** Every descriptor revision, read with the declared MetaStore.Schema
     * (the columns every write below appends) instead of footer inference.
@@ -94,8 +111,11 @@ class MetaStore(val spark: SparkSession, val base: String) {
   def create(uuid: String, collection: String, tags: Map[String, String],
              annotations: Map[String, String] = Map.empty): Unit = {
     require(collection.nonEmpty, "collection must be non-empty")
-    val rev = claimNext(uuid, MetaStore.Live)(live => require(!live, s"stream $uuid already exists"))
-    append(uuid, rev, collection, tags, annotations)
+    serially {
+      val rev = claimNext(uuid, MetaStore.Live)(live =>
+        require(!(live && liveRow(uuid)), s"stream $uuid already exists"))
+      append(uuid, rev, collection, tags, annotations)
+    }
   }
 
   /** SetStreamAnnotations with CAS on expectedAnnotationVersion; `changes`
@@ -104,7 +124,7 @@ class MetaStore(val spark: SparkSession, val base: String) {
     * newest revision row at or below the expected one.
     */
   def setAnnotations(uuid: String, expectedVersion: Long,
-                     changes: Map[String, Option[String]]): Long = {
+                     changes: Map[String, Option[String]]): Long = serially {
     val (ver, live) = head(uuid)
     require(live, s"no such stream $uuid")
     def mismatch(at: Long) = s"annotation version mismatch: expected $expectedVersion, at $at"
@@ -129,7 +149,7 @@ class MetaStore(val spark: SparkSession, val base: String) {
     * Errors when the stream does not exist (like the reference's
     * Obliterate).
     */
-  def delete(uuid: String): Unit = {
+  def delete(uuid: String): Unit = serially {
     val rev = claimNext(uuid, MetaStore.Dead)(live => require(live, s"no such stream $uuid"))
     append(uuid, rev, "", Map.empty, Map.empty)
   }

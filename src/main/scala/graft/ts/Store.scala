@@ -29,26 +29,35 @@ import org.apache.spark.sql.types.StructType
   * covering p.time — i.e. a range delete hides only points inserted before
   * it, so insert-after-delete behaves exactly like the reference.
   *
-  * The version rule: a stream's version is the highest claim in its claim
-  * log, `base/_log/<uuid>/<ver>` (graft.ts.ClaimLog). Every write claims
-  * its (stream, version) by put-if-absent BEFORE its data job starts, so
-  * two writers never share a version: a losing `insert`/`deleteRange`
-  * retries at the next one, and a batch write at pre-assigned versions
-  * fails. A write whose job fails releases its claim; a write that dies
-  * between its claim and its commit leaves the claim, which `version`
-  * counts and which shows no point — a version gap, never a duplicate.
-  * Each record carries the write's kind and its time hull [lo, hi) (an
-  * insert's from a `Dataset.observe` on its own write job, written after
-  * the commit; a hull not yet written or torn reads as the whole time
-  * range). So `version`, `versionsFor` and `nextVersions`' version half
-  * start no Spark job; `hullsSince` answers "which ranges changed after
-  * version V" for rollup invalidation without scanning points; and a
-  * single-stream read skips the tombstone anti-join when no record at or
-  * below its version is a delete. `changes`, `exportChanges` and every
-  * fleet-wide read still read the data. compact() folds each stream's
-  * records into one. A base written before the log existed is seeded once
-  * from a max(ver) scan of its points ∪ tombstones: one `floor` record per
-  * stream, whole-range and counted as a delete.
+  * The version rule: every write claims its (stream, version) in the
+  * stream's claim log, `base/_log/<uuid>/<ver>` (graft.ts.ClaimLog), by
+  * put-if-absent BEFORE its data job starts, so two writers never share a
+  * version: a losing `insert`/`deleteRange` retries at the next one, and a
+  * batch write at pre-assigned versions fails. The claim is marked
+  * pending; once the data job commits, the record is rewritten committed.
+  * A stream's version is its highest COMMITTED claim, so a read pinned at
+  * `version`, or a rollup built with it as its watermark, never misses a
+  * write at or below it: within one JVM a store's writes claim, commit and
+  * mark one at a time (its claims and commits happen in the same order),
+  * and so a pending claim is the write in flight or one that died. A
+  * write whose job fails releases its claim; a write that dies before its
+  * mark leaves a pending claim, which `version` skips, the next write
+  * numbers above, and which shows no point (or, when its job had
+  * committed, shows its points once a later write commits) — a version
+  * gap, never a duplicate. Each record carries the write's kind (insert,
+  * delete or floor) and its time hull [lo, hi) (an insert's from a
+  * `Dataset.observe` on its own write job, written with the commit mark;
+  * a pending or torn hull reads as the whole time range). So `version`,
+  * `versionsFor` and `nextWrites`' version half start no Spark job;
+  * `hullsSince` answers "which ranges may have changed after version V"
+  * for rollup invalidation without scanning points; and a single-stream
+  * read skips the tombstone anti-join when no record can hide a point at
+  * its version. `changes`, `exportChanges` and every fleet-wide read still
+  * read the data. compact() folds each stream's records into one. A base
+  * written before the log existed is seeded once from a max(ver) scan of
+  * its points ∪ tombstones: one whole-range `floor` record per stream,
+  * which stands for every write up to it, so reads at every version keep
+  * the tombstone join until a compaction.
   *
   * Scale: appends are blind writes (no read-modify-write); reads prune on
   * the (ub, tb) partition columns and push uuid/time/ver filters to
@@ -102,7 +111,8 @@ class Store(val spark: SparkSession, val base: String,
   private def log: ClaimLog =
     claims.open(Seq("points", "tombstones", "points_old", "points_compacted", "tombstones_old")
         .exists(d => hasData(s"$base/$d")),
-      maxVersions(rawPoints, tombstones).map { case (u, v) => (u, v, "floor") })
+      maxVersions(rawPoints, tombstones).map { case (u, v) =>
+        (u, v, record("floor", Long.MinValue, Long.MaxValue)) })
 
   /** A stream's records, oldest first. */
   private def records(uuid: String): Seq[Record] =
@@ -165,11 +175,22 @@ class Store(val spark: SparkSession, val base: String,
     if (hasData(dir)) spark.read.schema(schema).parquet(dir)
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
-  /** The stream's version: its highest claim (0 for a stream never written). */
-  def version(uuid: String): Long = log.latest(uuid)
+  /** The stream's version: its highest committed claim (0 for a stream
+    * never written). A claim still pending is a write in flight or one
+    * that died, so a read pinned here stays the same read.
+    */
+  def version(uuid: String): Long = log.latest(uuid, Record.parse(0L, _).committed)
 
-  /** Claims the stream's next version for a write of `body`; a claim lost
-    * to a concurrent writer retries at the version after it.
+  /** Runs one write of the store: its claims, data job and commit marks.
+    * Writes of one store run one at a time in this JVM, so their claims
+    * commit in claim order and a pending claim below a committed one can
+    * only be a write that died.
+    */
+  private def serially[T](write: => T): T = ClaimLog.appending(base)(write)
+
+  /** Claims the stream's next version for a pending write of `body`; a
+    * claim lost to a writer in another process retries at the version
+    * after it.
     */
   private def claimNext(uuid: String, body: String): Long = {
     val l = log
@@ -185,29 +206,28 @@ class Store(val spark: SparkSession, val base: String,
     * Mirrors InsertParams→InsertResponse(versionMajor) semantics. An empty
     * batch still takes its version.
     */
-  def insert(uuid: String, points: DataFrame): Long = {
-    val v = claimNext(uuid, "insert")
+  def insert(uuid: String, points: DataFrame): Long = serially {
+    val v = claimNext(uuid, record("insert", Long.MinValue, Long.MaxValue, committed = false))
     val hull = org.apache.spark.sql.Observation()
-    committing(Seq(uuid -> v))(ClaimLog.appending(pointsDir) {
+    committing(Seq(uuid -> v)) {
       withLayout(points.select(lit(uuid).as("uuid"), col("time").cast("long").as("time"),
           checkedValue, lit(v).as("ver"))
           .observe(hull, min($"time").as("lo"), max($"time").as("hi")))
         .write.mode(SaveMode.Append).partitionBy("ub", "tb").parquet(pointsDir)
-    })
-    observedHull(hull).foreach { case (lo, hi) => log.rewrite(uuid, v, record("insert", lo, hi)) }
+    }
+    val (lo, hi) = observedHull(hull)
+    log.rewrite(uuid, v, record("insert", lo, hi))
     v
   }
 
   /** The [lo, hi) time hull an insert's write job observed ((0, 0) for an
-    * empty insert); None when the metrics did not arrive, which leaves the
-    * claim's whole-range hull in place.
+    * empty insert); the whole time range when the metrics did not arrive.
     */
-  private def observedHull(hull: org.apache.spark.sql.Observation): Option[(Long, Long)] =
+  private def observedHull(hull: org.apache.spark.sql.Observation): (Long, Long) =
     try {
       val r = scala.concurrent.Await.result(hull.future, scala.concurrent.duration.Duration(30, "s"))
-      if (r.isNullAt(0)) Some((0L, 0L))
-      else Some((r.getLong(0), Store.hullEnd(r.getLong(1))))
-    } catch { case _: java.util.concurrent.TimeoutException => None }
+      if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), Store.hullEnd(r.getLong(1)))
+    } catch { case _: java.util.concurrent.TimeoutException => (Long.MinValue, Long.MaxValue) }
 
   /** Insert a multi-stream batch of (uuid, time, value) rows in ONE parquet
     * job: each distinct uuid in the batch gets its own version bump (same
@@ -217,32 +237,22 @@ class Store(val spark: SparkSession, val base: String,
     * The single job also gives all-or-nothing commit semantics (Spark's
     * file-commit protocol), making replays of a failed batch safe.
     */
-  def insertBatch(batch: DataFrame): Unit = {
-    val next = nextWrites(batch)
-    insertBatchAt(batch, next.map(w => w.uuid -> w.ver), Store.hulls(next))
-  }
+  def insertBatch(batch: DataFrame): Unit = insertBatchAt(batch, nextWrites(batch))
 
-  /** The per-uuid versions the next batch write will assign: the batch's
-    * distinct uuids (driver-collected, metadata-scale, bounded by
-    * maxBatchStreams), each at its claim-log version + 1. Exposed so an
-    * idempotent writer can persist the intent BEFORE the write and later
-    * decide whether a crashed attempt committed (the write is one
-    * all-or-nothing job: either every uuid reached its intended version
-    * or none did).
-    */
-  def nextVersions(batch: DataFrame): Seq[(String, Long)] =
-    nextWrites(batch).map(w => w.uuid -> w.ver)
-
-  /** nextVersions with each stream's time hull in the batch, from the same
-    * collect (a per-uuid min/max where a distinct would do).
+  /** The per-uuid writes the next batch write will make: the batch's
+    * distinct uuids (driver-collected with each one's time hull in the
+    * batch, metadata-scale, bounded by maxBatchStreams), each at the
+    * version after its highest claim. Exposed so an idempotent writer can
+    * persist the intent BEFORE the write and later decide whether a
+    * crashed attempt committed (the write is one all-or-nothing job:
+    * either every uuid reached its intended version or none did).
     */
   def nextWrites(batch: DataFrame): Seq[Store.Write] = {
     val hulls = bounded(batch.groupBy("uuid")
       .agg(min(col("time").cast("long")), max(col("time").cast("long")))
       .limit(maxBatchStreams + 1).as[(String, Long, Long)].collect().toSeq)
-    val current = versionsFor(hulls.map(_._1))
-    hulls.map { case (u, lo, hi) =>
-      Store.Write(u, current.getOrElse(u, 0L) + 1, lo, Store.hullEnd(hi)) }
+    val l = log
+    hulls.map { case (u, lo, hi) => Store.Write(u, l.latest(u) + 1, lo, Store.hullEnd(hi)) }
   }
 
   /** The maxBatchStreams guard: the limit(max+1) on the collect above
@@ -257,8 +267,8 @@ class Store(val spark: SparkSession, val base: String,
     rows
   }
 
-  /** Current version per uuid for a BOUNDED uuid set, from the claim log
-    * (no Spark job). A uuid never written is absent from the map
+  /** Current (committed, see `version`) version per uuid for a BOUNDED
+    * uuid set, from the claim log (no Spark job). A uuid never written is absent from the map
     * (version 0).
     */
   def versionsFor(uuids: Seq[String]): Map[String, Long] =
@@ -279,48 +289,56 @@ class Store(val spark: SparkSession, val base: String,
       tombstones.filter($"uuid".isin(ids: _*)))
   }
 
+  /** Marks committed the claims of a batch write whose data landed
+    * (landedVersions): a writer that died between its job's commit and its
+    * marks left them pending, so `version` did not count them yet.
+    */
+  private[graft] def markLanded(vers: Seq[(String, Long)]): Unit = serially {
+    val l = log
+    vers.foreach { case (u, v) =>
+      records(u).find(r => r.ver == v && !r.committed).foreach(r =>
+        l.rewrite(u, v, record(if (r.kind == "?") "insert" else r.kind, r.lo, r.hi)))
+    }
+  }
+
   /** max(ver) per uuid over the (uuid, ver) of some points and tombstones. */
   private def maxVersions(points: DataFrame, tombs: DataFrame): Map[String, Long] =
     points.select($"uuid", $"ver").unionByName(tombs.select($"uuid", $"ver"))
       .groupBy("uuid").agg(max($"ver").as("ver"))
       .as[(String, Long)].collect().toMap
 
-  /** Write a batch at pre-assigned per-uuid versions (from nextVersions)
-    * in ONE parquet job — all-or-nothing file commit. Every (uuid, ver) is
-    * claimed first, with its hull from `hulls` (from nextWrites; a stream
-    * missing there records the whole time range). A version already
-    * claimed by another writer fails the call before any data is written,
-    * releasing the claims it took.
+  /** Write a batch as the planned per-uuid `writes` (from nextWrites) in
+    * ONE parquet job — all-or-nothing file commit. Every (uuid, ver) is
+    * claimed first, with its write's hull. A version already claimed by
+    * another writer fails the call before any data is written, releasing
+    * the claims it took.
     */
-  def insertBatchAt(batch: DataFrame, vers: Seq[(String, Long)],
-                    hulls: Map[String, (Long, Long)] = Map.empty): Unit = {
+  def insertBatchAt(batch: DataFrame, writes: Seq[Store.Write]): Unit = serially {
     val l = log
     val held = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val versDf = vers.toDF("uuid", "ver")
     committing(held.toSeq) {
-      vers.foreach { case (u, v) =>
-        val body = hulls.get(u).fold("insert") { case (lo, hi) => record("insert", lo, hi) }
-        if (!l.claim(u, v, body))
+      writes.foreach { w =>
+        if (!l.claim(w.uuid, w.ver, record("insert", w.lo, w.hi, committed = false)))
           throw new java.util.ConcurrentModificationException(
-            s"version $v of stream $u is already claimed by another writer")
-        held += u -> v
+            s"version ${w.ver} of stream ${w.uuid} is already claimed by another writer")
+        held += w.uuid -> w.ver
       }
-      ClaimLog.appending(pointsDir) {
-        withLayout(batch.select($"uuid", col("time").cast("long").as("time"), checkedValue)
-          .join(broadcast(versDf), Seq("uuid"))
-          .select($"uuid", $"time", $"value", $"ver"))
-          .write.mode(SaveMode.Append).partitionBy("ub", "tb").parquet(pointsDir)
-      }
+      withLayout(batch.select($"uuid", col("time").cast("long").as("time"), checkedValue)
+        .join(broadcast(writes.map(w => w.uuid -> w.ver).toDF("uuid", "ver")), Seq("uuid"))
+        .select($"uuid", $"time", $"value", $"ver"))
+        .write.mode(SaveMode.Append).partitionBy("ub", "tb").parquet(pointsDir)
     }
+    writes.foreach(w => l.rewrite(w.uuid, w.ver, record("insert", w.lo, w.hi)))
   }
 
   /** Range delete [start, end) — a tombstone, not a rewrite. */
-  def deleteRange(uuid: String, start: Long, end: Long): Long = {
-    val v = claimNext(uuid, record("delete", start, end))
-    committing(Seq(uuid -> v))(ClaimLog.appending(tombsDir) {
+  def deleteRange(uuid: String, start: Long, end: Long): Long = serially {
+    val v = claimNext(uuid, record("delete", start, end, committed = false))
+    committing(Seq(uuid -> v)) {
       Seq((uuid, start, end, v)).toDF("uuid", "t_start", "t_end", "ver")
         .write.mode(SaveMode.Append).parquet(tombsDir)
-    })
+    }
+    log.rewrite(uuid, v, record("delete", start, end))
     v
   }
 
@@ -437,11 +455,11 @@ class Store(val spark: SparkSession, val base: String,
 
   /** Visible points at `asOf` for a read of one stream: pointsAt, less
     * the tombstone anti-join (and its broadcast job) when no record of the
-    * stream at or below `asOf` is a delete — then no tombstone can hide
-    * one of its points.
+    * stream can hide a point at `asOf` (Record.mayHide) — then no
+    * tombstone can hide one of its points.
     */
   private def visibleFor(uuid: String, asOf: Option[Long]): DataFrame =
-    if (records(uuid).exists(r => r.deleted && asOf.forall(r.ver <= _))) pointsAt(asOf)
+    if (records(uuid).exists(_.mayHide(asOf))) pointsAt(asOf)
     else asOf.fold(rawPoints)(v => rawPoints.filter($"ver" <= v))
 
   /** One stream's visible points at `asOf`, with ub partition pruning —
@@ -493,8 +511,8 @@ class Store(val spark: SparkSession, val base: String,
 
   /** The [lo, hi) time hulls of the stream's writes claimed above
     * `fromVer`, read from the claim log: every range a reader of version
-    * `fromVer` has not seen. A claim whose hull is unknown (in flight,
-    * crashed or torn) yields the whole time range.
+    * `fromVer` (a committed version, see `version`) has not seen. A claim
+    * whose hull is unknown (pending or torn) yields the whole time range.
     */
   def hullsSince(uuid: String, fromVer: Long): Seq[(Long, Long)] =
     records(uuid).filter(r => r.ver > fromVer && r.lo < r.hi).map(r => (r.lo, r.hi))
@@ -580,14 +598,20 @@ class Store(val spark: SparkSession, val base: String,
     * surviving point ver (hide nothing, preserve version monotonicity) and
     * drops the rest.
     *
-    * Last, each stream's claim records fold into one at its highest
-    * version, with the union of their hulls, counted as a delete when any
-    * of them was one — so a log listing stays bounded by the writes since
-    * the last compaction. Versions are unchanged, and a rollup built at
-    * any earlier version still sees every range changed since (a
-    * superset of it).
+    * Last, each stream's claim records fold into one committed insert
+    * record at its highest version, with the union of their hulls — so a
+    * log listing stays bounded by the writes since the last compaction.
+    * Versions are unchanged (a pending claim that died folds in: its data,
+    * if its job committed, is among the compacted points), and a rollup
+    * built at any earlier version still sees every range changed since (a
+    * superset of it). The fold is an insert even over deletes and floors:
+    * once the dead rows are gone no tombstone hides a surviving point at
+    * any version, so reads skip the tombstone join until the next delete.
+    *
+    * compact() runs as one write of the store: this JVM's writers wait
+    * for it, and writers in other processes must not run during it.
     */
-  def compact(): Unit = {
+  def compact(): Unit = serially {
     recoverCrashedSwap()
     val live = pointsAt(None).cache()
     live.count() // materialize fully before touching the live dir
@@ -623,12 +647,11 @@ class Store(val spark: SparkSession, val base: String,
     val l = log
     l.keys.foreach { u =>
       val rs = records(u)
-      if (rs.size > 1) {
+      if (rs.size > 1 || rs.exists(r => r.kind != "insert" || !r.committed)) {
         val hulls = rs.filter(r => r.lo < r.hi)
-        val body = record(if (rs.exists(_.deleted)) "delete" else "insert",
+        l.rewrite(u, rs.last.ver, record("insert",
           if (hulls.isEmpty) 0L else hulls.map(_.lo).min,
-          if (hulls.isEmpty) 0L else hulls.map(_.hi).max)
-        l.rewrite(u, rs.last.ver, body)
+          if (hulls.isEmpty) 0L else hulls.map(_.hi).max))
         rs.init.foreach(r => l.release(u, r.ver))
       }
     }
@@ -658,32 +681,40 @@ object Store {
   /** A planned batch write of one stream: its version and time hull [lo, hi). */
   final case class Write(uuid: String, ver: Long, lo: Long, hi: Long)
 
-  /** The hulls of planned writes, by uuid, as insertBatchAt takes them. */
-  def hulls(writes: Seq[Write]): Map[String, (Long, Long)] =
-    writes.map(w => w.uuid -> (w.lo, w.hi)).toMap
-
   /** The exclusive end of a hull whose last time is `t`. */
   private[ts] def hullEnd(t: Long): Long = if (t == Long.MaxValue) t else t + 1
 
-  /** A claim-log record body: `<kind> <lo> <hi>`, kind insert or delete. */
-  private[ts] def record(kind: String, lo: Long, hi: Long): String = s"$kind $lo $hi"
-
-  /** A parsed claim-log record. `deleted`: the write may have written a
-    * tombstone. lo >= hi is an empty hull.
+  /** A claim-log record body: `<kind> <lo> <hi>`, kind insert, delete or
+    * floor, followed by ` pending` until the write's data job commits.
     */
-  private[ts] final case class Record(ver: Long, deleted: Boolean, lo: Long, hi: Long)
+  private[ts] def record(kind: String, lo: Long, hi: Long, committed: Boolean = true): String =
+    s"$kind $lo $hi" + (if (committed) "" else " pending")
+
+  /** A parsed claim-log record. lo >= hi is an empty hull. */
+  private[ts] final case class Record(ver: Long, kind: String, lo: Long, hi: Long,
+                                      committed: Boolean) {
+    /** Whether a tombstone may hide a point of the stream in a read at
+      * `asOf`: a floor stands for every write up to its version, so at
+      * every `asOf`; a delete, or a record of unknown kind, at or below it.
+      */
+    def mayHide(asOf: Option[Long]): Boolean =
+      kind == "floor" || (kind != "insert" && asOf.forall(ver <= _))
+  }
 
   private[ts] object Record {
-    /** An insert whose hull is not (yet) readable spans the whole time
-      * range; a `floor`, or a body whose kind is unreadable, also counts as
-      * a delete.
+    /** A body that is not a whole record (torn, or a bare claim) is
+      * pending, with the whole time range as its hull and, unless it
+      * starts with a known kind, an unknown kind.
       */
-    def parse(ver: Long, body: String): Record = body.trim.split(' ') match {
-      case Array(kind @ ("insert" | "delete"), lo, hi)
-          if lo.toLongOption.isDefined && hi.toLongOption.isDefined =>
-        Record(ver, kind == "delete", lo.toLong, hi.toLong)
-      case Array("insert", _*) => Record(ver, deleted = false, Long.MinValue, Long.MaxValue)
-      case _ => Record(ver, deleted = true, Long.MinValue, Long.MaxValue)
+    def parse(ver: Long, body: String): Record = {
+      val f = body.trim.split(' ')
+      val kind = if (Set("insert", "delete", "floor")(f(0))) f(0) else "?"
+      val committed = f.length == 3
+      (f.lift(1).flatMap(_.toLongOption), f.lift(2).flatMap(_.toLongOption)) match {
+        case (Some(lo), Some(hi)) if kind != "?" && (committed || f.length == 4 && f(3) == "pending") =>
+          Record(ver, kind, lo, hi, committed)
+        case _ => Record(ver, kind, Long.MinValue, Long.MaxValue, committed = false)
+      }
     }
   }
 

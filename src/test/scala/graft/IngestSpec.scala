@@ -105,8 +105,9 @@ class IngestSpec extends SparkSuite {
     val data = Seq(("a", 10L, 1.0), ("a", 20L, 2.0), ("b", 5L, 3.0))
       .toDF("uuid", "time", "value")
     data.write.mode("append").parquet(src)
-    val vers = st.nextVersions(data)
-    st.insertBatchAt(data, vers) // the crashed attempt's committed write
+    val writes = st.nextWrites(data)
+    val vers = writes.map(w => w.uuid -> w.ver)
+    st.insertBatchAt(data, writes) // the crashed attempt's committed write
     val ckptId = java.util.UUID.nameUUIDFromBytes(ckpt.getBytes("UTF-8")).toString
     val commitDir = new java.io.File(s"${st.base}/_ingest_commits/$ckptId")
     commitDir.mkdirs()

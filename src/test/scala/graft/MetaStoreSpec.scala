@@ -98,6 +98,23 @@ class MetaStoreSpec extends SparkSuite {
     assert(ms.descriptors.filter($"uuid" === "u1").count() == 1)
   }
 
+  test("a create that died between its claim and its append leaves the stream creatable") {
+    val ms = mk
+    ms.create("u0", "plant/a", Map.empty)
+    // the claim of u1's first revision, with no row behind it
+    val log = new java.io.File(s"${ms.base}/_meta_log/u1")
+    log.mkdirs()
+    java.nio.file.Files.write(new java.io.File(log, "1").toPath, "live".getBytes("UTF-8"))
+    assert(ms.descriptors.filter($"uuid" === "u1").count() == 0)
+    intercept[IllegalArgumentException](ms.setAnnotations("u1", 1L, Map("k" -> Some("v"))))
+    ms.create("u1", "plant/b", Map("unit" -> "V"))
+    val live = ms.descriptors.filter($"uuid" === "u1")
+      .as[(String, String, Map[String, String], Map[String, String], Long)].collect()
+    assert(live.map(r => (r._2, r._5)).toSeq == Seq(("plant/b", 2L)), live.toSeq.toString)
+    intercept[IllegalArgumentException](ms.create("u1", "plant/c", Map.empty))
+    assert(ms.setAnnotations("u1", 2L, Map("k" -> Some("v"))) == 3L)
+  }
+
   test("double create is rejected while the stream lives") {
     val ms = mk
     ms.create("u1", "c", Map.empty)

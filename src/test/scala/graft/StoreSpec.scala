@@ -99,12 +99,12 @@ class StoreSpec extends SparkSuite {
     // a batch write at a version another writer holds fails before writing
     val e = intercept[java.util.ConcurrentModificationException](
       st.insertBatchAt(Seq(("s", 99L, 9.0), ("t", 1L, 1.0)).toDF("uuid", "time", "value"),
-        Seq("t" -> 1L, "s" -> 2L)))
+        Seq(Store.Write("t", 1L, 1L, 2L), Store.Write("s", 2L, 99L, 100L))))
     assert(e.getMessage.contains("already claimed"), e.getMessage)
     assert(st.version("t") == 0 && st.rawPoints.count() == n, "the lost batch left a trace")
   }
 
-  test("a claim whose write never ran counts as a version, shows no point, invalidates the rollup") {
+  test("a claim whose write never ran takes its number, shows no point, invalidates the rollup") {
     val base = tmpDir("store_crash")
     val db = GraftDB(spark, base)
     val h = db.stream("s")
@@ -118,13 +118,40 @@ class StoreSpec extends SparkSuite {
     val raw = rows(h.alignedWindows(0L, 64L, 4))
     assert(rows(h.alignedWindows(ru, 0L, 64L, 4, rollupBuiltAt = 1L)) != raw,
       "the stale rollup must serve stale windows while nothing invalidates them")
-    // the writer of v2 died after its claim, before its data job
+    // the writer of v2 died after its claim, before its data job; a claim
+    // is not a commit, so the version a reader pins stays at 1
     java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$base/_log/s/2"))
-    assert(h.version == 2L && db.store.versionsFor(Seq("s")) == Map("s" -> 2L))
+    assert(h.version == 1L && db.store.versionsFor(Seq("s")) == Map("s" -> 1L))
     assert(h.rawValues(0L, 100L).count() == 64 && db.store.rawPoints.count() == 64)
     assert(db.store.hullsSince("s", 1L) == Seq((Long.MinValue, Long.MaxValue)))
     assert(rows(h.alignedWindows(ru, 0L, 64L, 4, rollupBuiltAt = 1L)) == raw)
-    assert(h.insert(Seq((70L, 7.0)).toDF("time", "value")) == 3L)
+    assert(h.insert(Seq((70L, 7.0)).toDF("time", "value")) == 3L && h.version == 3L)
+  }
+
+  test("a write in flight moves neither the version nor a rollup built meanwhile") {
+    val base = tmpDir("store_inflight")
+    val db = GraftDB(spark, base)
+    val h = db.stream("s")
+    assert(h.insert((0L until 64L).map(t => (t, t.toDouble)).toDF("time", "value")) == 1L)
+    // v2's data job waits inside its write until the test lets it go
+    val hold = udf { (v: Double) => InFlight.started.countDown(); InFlight.go.await(2, TimeUnit.MINUTES); v }
+    val slow = (0L until 64L by 2L).map(t => (t, 100.0)).toDF("time", "value")
+      .withColumn("value", hold(col("value")))
+    val writer = scala.concurrent.Future(h.insert(slow))(scala.concurrent.ExecutionContext.global)
+    try {
+      assert(InFlight.started.await(2, TimeUnit.MINUTES), "the write never started")
+      assert(h.version == 1L && h.points(Some(h.version)).count() == 64)
+      // a rollup built now, at the version read before the build
+      val builtAt = h.version
+      val ru = Rollup(spark, tmpDir("store_inflight_rollup"), Seq(2, 4))
+      ru.build(h.points(), Seq("uuid"))
+      InFlight.go.countDown()
+      assert(scala.concurrent.Await.result(writer, scala.concurrent.duration.Duration(2, "min")) == 2L)
+      assert(h.version == 2L && h.points(Some(builtAt)).count() == 64 && h.points().count() == 96)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("w_start").collect().toSeq
+      assert(rows(h.alignedWindows(ru, 0L, 64L, 4, rollupBuiltAt = builtAt)) ==
+        rows(h.alignedWindows(0L, 64L, 4)), "the rollup missed the write that was in flight")
+    } finally InFlight.go.countDown()
   }
 
   test("single-stream reads join tombstones only when a delete can hide a point") {
@@ -194,13 +221,16 @@ class StoreSpec extends SparkSuite {
     assert(oh.version == 3L && old.store.versionsFor(Seq("a", "b", "c")) == Map("a" -> 3L, "b" -> 1L))
     // seeded floors hide nothing they should not, and invalidate every range
     assert(oh.rawValues(0L, 200L).count() == 61)
+    // a floor stands for every version below it: reads there join tombstones too
+    assert(oh.rawValues(0L, 200L, Some(2L)).count() == 60)
     assert(old.store.hullsSince("b", 0L) == Seq((Long.MinValue, Long.MaxValue)))
     def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("w_start").collect().toSeq
     val ru2 = Rollup(spark, s"$base/rollup", Seq(2, 4))
     assert(rows(oh.alignedWindows(ru2, 0L, 128L, 4, rollupBuiltAt = 3L)) ==
       rows(oh.alignedWindows(0L, 128L, 4)))
     assert(oh.insert(Seq((120L, 2.0)).toDF("time", "value")) == 4L)
-    assert(old.store.nextVersions(Seq(("b", 2L, 2.0)).toDF("uuid", "time", "value")) == Seq("b" -> 2L))
+    assert(old.store.nextWrites(Seq(("b", 2L, 2.0)).toDF("uuid", "time", "value"))
+      .map(w => w.uuid -> w.ver) == Seq("b" -> 2L))
     // and the descriptor revisions continue: create is refused, the CAS holds
     intercept[IllegalArgumentException](old.create("a", "fleet/y"))
     assert(oh.setAnnotations(1L, Map("k" -> Some("v"))) == 2L)
@@ -218,7 +248,7 @@ class StoreSpec extends SparkSuite {
     for (v <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 9.3e12, -9.3e12)) {
       val rows = Seq((20L, 2.0), (30L, v)).toDF("time", "value")
       failsNamingDomain(st.insert("s", rows))
-      failsNamingDomain(st.insertBatchAt(rows.withColumn("uuid", lit("s")), Seq("s" -> 2L)))
+      failsNamingDomain(st.insertBatchAt(rows.withColumn("uuid", lit("s")), Seq(Store.Write("s", 2L, 20L, 31L))))
       failsNamingDomain(st.insertBuffered("s", rows))
       assert(st.version("s") == 1 && st.rawPoints.count() == 1 &&
         st.bufferedPoints.count() == 0, s"value $v left a trace")
@@ -424,7 +454,7 @@ class StoreSpec extends SparkSuite {
     assert(Seq("a", "b", "c").map(st.version) == Seq(3L, 2L, 0L))
     assert(st.versionsFor(Seq("a", "b", "c")) == Map("a" -> 3L, "b" -> 2L))
     val probe = Seq("a", "b", "c").map(u => (u, 0L, 0.0)).toDF("uuid", "time", "value")
-    assert(st.nextVersions(probe).toMap == Map("a" -> 4L, "b" -> 3L, "c" -> 1L))
+    assert(st.nextWrites(probe).map(w => w.uuid -> w.ver).toMap == Map("a" -> 4L, "b" -> 3L, "c" -> 1L))
   }
 
   test("rawPoints and tombstones read one declared schema before and after the first write") {
@@ -528,4 +558,12 @@ class StoreSpec extends SparkSuite {
     // and the live store DID move on
     assert(st.rawValues("a", 0, 100).count() == 2)
   }
+}
+
+/** The latches a write held in flight waits on (task code reaches them
+  * statically, so nothing of the suite is serialized with it).
+  */
+object InFlight {
+  val started = new java.util.concurrent.CountDownLatch(1)
+  val go = new java.util.concurrent.CountDownLatch(1)
 }
