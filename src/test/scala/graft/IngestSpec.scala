@@ -108,6 +108,13 @@ class IngestSpec extends SparkSuite {
     val writes = st.nextWrites(data)
     val vers = writes.map(w => w.uuid -> w.ver)
     st.insertBatchAt(data, writes) // the crashed attempt's committed write
+    // ...which died before marking its claims committed
+    writes.foreach { w =>
+      val claim = java.nio.file.Paths.get(s"${st.base}/_log/${w.uuid}/${w.ver}")
+      java.nio.file.Files.write(claim, (new String(java.nio.file.Files.readAllBytes(claim), "UTF-8") +
+        " pending").getBytes("UTF-8"))
+    }
+    assert(st.version("a") == 0 && st.version("b") == 0)
     val ckptId = java.util.UUID.nameUUIDFromBytes(ckpt.getBytes("UTF-8")).toString
     val commitDir = new java.io.File(s"${st.base}/_ingest_commits/$ckptId")
     commitDir.mkdirs()
