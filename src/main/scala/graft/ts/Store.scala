@@ -41,10 +41,10 @@ import org.apache.spark.sql.types.StructType
   * mark one at a time (its claims and commits happen in the same order),
   * and so a pending claim is the write in flight or one that died. A
   * write whose job fails releases its claim; a write that dies before its
-  * mark leaves a pending claim, which `version` skips, the next write
-  * numbers above, and which shows no point (or, when its job had
-  * committed, shows its points once a later write commits) — a version
-  * gap, never a duplicate. Each record carries the write's kind (insert,
+  * mark leaves a pending claim, which `version` skips and the next write
+  * numbers above — a version gap, never a duplicate. It shows no point,
+  * or, when its job had committed, points that a read pinned at `version`
+  * sees once a later write commits. Each record carries the write's kind (insert,
   * delete or floor) and its time hull [lo, hi) (an insert's from a
   * `Dataset.observe` on its own write job, written with the commit mark;
   * a pending or torn hull reads as the whole time range). So `version`,
