@@ -43,10 +43,11 @@ object Ingest {
     * the versions the DATA holds (one Store.landedVersions scan over the
     * intent's uuids — a version claimed in the store's log is not yet a
     * landing) against the intended ones tells which; a landed batch skips
-    * the re-insert, marks its claims committed (Store.markLanded: the
-    * crash may have come before the marks) (closing the crash window between job commit and
-    * marker creation that a marker-only protocol leaves open) but still
-    * re-runs the idempotent rollup append + marker. A batch that did not
+    * the re-insert (closing the crash window between job commit and
+    * marker creation that a marker-only protocol leaves open), marks its
+    * claims committed (Store.markLanded: the crash may have come before
+    * the store's own marks) and still re-runs the idempotent rollup
+    * append + marker. A batch that did not
     * land is planned afresh: a claim its crashed attempt left in the log
     * stays a version gap.
     * The rollup writeId embeds the checkpoint id, so multiple ingest
